@@ -84,7 +84,7 @@ object Scratch {
     if (cleanupRegistered.add(p.toString)) {
       sys.addShutdownHook {
         try p.getFileSystem(conf).delete(p, true)
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(_) => () }
       }
       ()
     }

@@ -191,10 +191,13 @@ object TextOps {
   def bm25(spark: SparkSession, dir: String,
     query: Seq[String] = Seq("spark", "data", "system"),
     k1: Double = 1.2, b: Double = 0.75, topN: Int = 20): DataFrame = {
-    // ONE corpus tokenize: per-doc length AND per-query-term counts
-    // ride a single aggregate (the query is a literal term list, so
-    // the tf counts pivot into one column per term and unpivot back
-    // to (word, tf) rows afterwards). The previous shape tokenized
+    // TWO corpus tokenizes, one per subtree: per-doc length AND
+    // per-query-term counts ride the single `perDoc` aggregate (the
+    // query is a literal term list, so the tf counts pivot into one
+    // column per term and unpivot back to (word, tf) rows
+    // afterwards), and `perDoc` feeds two subtrees — the broadcast
+    // corpus-stats row and the tf rows — each of which plans its own
+    // tokenize of the corpus. The previous shape tokenized
     // the corpus THREE times — the tf pass, the avgdl pass and the
     // dl-join pass each re-ran Generate over documents — and then
     // joined the doc-scale dl table back onto tf (a broadcast only

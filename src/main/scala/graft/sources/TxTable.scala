@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,7 +64,7 @@ object TxTable {
       try out.write(v.toString.getBytes("UTF-8")) finally out.close()
       fs.delete(hintPath(rp), false)
       if (!fs.rename(tmp, hintPath(rp))) fs.delete(tmp, false)
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Highest committed version, or 0 if the table is empty/absent. */
   def latestVersion(spark: SparkSession, root: String): Int = {
@@ -82,7 +82,7 @@ object TxTable {
           val s = readFileUtf8(fs, hp).trim
           if (s.nonEmpty && s.forall(_.isDigit)) Some(s.toInt) else None
         }
-      } catch { case _: Throwable => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
     hinted.filter { h =>
       metaRpcs.incrementAndGet(); h >= 1 && fs.exists(commitPath(rp, h))
     } match {
@@ -1046,93 +1046,134 @@ object TxTable {
     }
   }
 
-  /** Per-column min/max over the just-written dir, for the commit
-    * line. ONE 1-row aggregate covers every requested column — with
-    * parquet aggregate pushdown this is a footer read, not a data
-    * scan. Integral columns record exact long ranges; STRING columns
-    * record hex-encoded UTF-8 byte bounds (see [[strStatBounds]] for
-    * the truncation soundness); any other type yields no stats for
-    * that column, which just disables pruning on it. */
-  private def dirStats(spark: SparkSession, rp: Path, dirName: String,
-    statsCols: Seq[String])
-    : (Map[String, (Long, Long)], Map[String, (String, String)],
-      Map[String, String], Map[String, String]) = {
-    val df = readDirFrame(spark, rp, dirName)
-    def typed(pred: org.apache.spark.sql.types.DataType => Boolean) =
-      statsCols.distinct.filter(c =>
-        df.schema.find(_.name == c).map(_.dataType).exists(pred))
-    val integral = typed {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    val strings = typed(_ == org.apache.spark.sql.types.StringType)
-    // the row count rides the same 1-row aggregate as pseudo-column
-    // `_rows` (metadata-only COUNT(*) reads it back from the commit);
+  /** The per-dir write-statistics aggregate — ONE layout for every
+    * write face, whether it rides the write itself (`observe`),
+    * rescans one dir, or groups a just-written layout by dir: the row
+    * count (pseudo-column `_rows`, which metadata-only COUNT(*) reads
+    * back), then the integral columns' long min/max pairs and their
+    * NULL counts, then the STRING columns' min/max pairs (recorded as
+    * hex-encoded UTF-8 byte bounds, see [[strStatBounds]] for the
+    * truncation soundness) and their NULL counts, then one mergeable
+    * NDV sketch per `hll` column
+    * (per-dir HLL registers merge at read into table-level NDV that
+    * stays fresh across appends without a rescan). `hll` pairs each
+    * sketched column with its sketch input. Min/max/count/sum are
+    * order-free and the HLL registers are a function of the value
+    * SET, so every face records what a rescan of the dir would. */
+  private final case class StatsAgg(integral: Seq[String],
+    strings: Seq[String], hll: Seq[(String, Column)]) {
     // each stats column also records its NULL count under `n,<col>`
-    // (',' can never appear in a real column name) — min/max stats
-    // skip NULLs, so only this extra stat lets a metadata-only GROUP
-    // BY trust that a single-valued dir has no hidden NULL-group rows
-    val aggs = count(lit(1)) +:
+    // (',' can never appear in a real column name) — min/max skip
+    // NULLs, so only this stat lets a metadata-only GROUP BY trust
+    // that a single-valued dir has no hidden NULL-group rows
+    private def nulls(c: String): Column =
+      sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")
+    val aggs: Seq[Column] = count(lit(1)) +:
       (integral.flatMap(c =>
         Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
-        integral.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
+        integral.map(nulls) ++
         strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strings.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        // mergeable NDV registers ride the SAME one-row aggregate —
-        // per-dir HLL sketches merge at read into table-level NDV
-        // that stays fresh across appends without ever rescanning
-        (integral ++ strings).map(c => hll_sketch_agg(col(c), hllLgK)))
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val nBase = 1 + 3 * integral.length
-    val strNullBase = nBase + 2 * strings.length
-    val hllBase = strNullBase + strings.length
-    val hstats = spillHstats(rp.getFileSystem(
-      spark.sessionState.newHadoopConf()), rp, dirName,
-      (integral ++ strings).zipWithIndex.flatMap {
-        case (c, i) =>
-          if (r.isNullAt(hllBase + i)) None
-          else Some(c -> java.util.Base64.getEncoder.encodeToString(
-            r.getAs[Array[Byte]](hllBase + i)))
-      }.toMap, hllInlineMax(spark))
-    // a string dir column whose min == max holds EXACTLY ONE distinct
-    // non-null value: record it verbatim (under the length cap) as the
-    // `sx:` exact marker — what lets the partition-clustering proofs
-    // accept string/date keys the way integral `lo == hi` already does
-    val xvals = strings.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(nBase + 2 * i)) None
-      else {
-        val mn = r.getString(nBase + 2 * i)
-        val mx = r.getString(nBase + 2 * i + 1)
-        if (mn == mx && mn.getBytes("UTF-8").length <= strStatMaxBytes)
-          Some(c -> hexOf(mn))
-        else None
+        strings.map(nulls) ++
+        hll.map { case (_, e) => hll_sketch_agg(e, hllLgK) })
+
+    /** Dir `dir`'s entry from one result of [[aggs]], slot `i` read as
+      * `at(i)`. A NULL slot is "no stat" (an empty dir, an all-NULL
+      * column): no bounds, a zero NULL count, no sketch. The `hstats`
+      * blobs are raw until [[finishEntries]] spills the oversized. */
+    def decode(dir: String, at: Int => Any): Entry = {
+      def long(i: Int): Option[Long] = at(i) match {
+        case l: java.lang.Long => Some(l.longValue())
+        case _ => None
       }
-    }.toMap
-    (Map(rowsKey -> (r.getLong(0), r.getLong(0))) ++
-      integral.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(2 * i + 1)) None
-        else Some(c -> (r.getLong(2 * i + 1), r.getLong(2 * i + 2)))
-      } ++
-      integral.zipWithIndex.map { case (c, i) =>
-        val j = 1 + 2 * integral.length + i
-        val n = if (r.isNullAt(j)) 0L else r.getLong(j) // empty dir
+      def str(i: Int): Option[String] = at(i) match {
+        case s: String => Some(s)
+        case _ => None
+      }
+      def nullCount(c: String, i: Int) = {
+        val n = long(i).getOrElse(0L)
         s"$nullsPrefix$c" -> (n, n)
-      } ++
-      strings.zipWithIndex.map { case (c, i) =>
-        val j = strNullBase + i
-        val n = if (r.isNullAt(j)) 0L else r.getLong(j) // empty dir
-        s"$nullsPrefix$c" -> (n, n)
-      },
-      strings.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(nBase + 2 * i)) None
-        else strStatBounds(r.getString(nBase + 2 * i),
-          r.getString(nBase + 2 * i + 1)).map(c -> _)
-      }.toMap,
-      xvals, hstats)
+      }
+      val strBase = 1 + 3 * integral.length
+      val hllBase = strBase + 3 * strings.length
+      val strMinMax = strings.zipWithIndex.flatMap { case (c, i) =>
+        str(strBase + 2 * i).zip(str(strBase + 2 * i + 1)).map(c -> _)
+      }
+      val rows = long(0).getOrElse(0L)
+      Entry(isDelta = false, dir,
+        Map(rowsKey -> (rows, rows)) ++
+          integral.zipWithIndex.flatMap { case (c, i) =>
+            long(1 + 2 * i).zip(long(2 + 2 * i)).map(c -> _)
+          } ++
+          integral.zipWithIndex.map { case (c, i) =>
+            nullCount(c, 1 + 2 * integral.length + i)
+          } ++
+          strings.zipWithIndex.map { case (c, i) =>
+            nullCount(c, strBase + 2 * strings.length + i)
+          },
+        strMinMax.flatMap { case (c, (mn, mx)) =>
+          strStatBounds(mn, mx).map(c -> _)
+        }.toMap,
+        // a string column whose min == max holds EXACTLY ONE distinct
+        // non-null value: record it verbatim (under the length cap) as
+        // the `sx:` exact marker — what lets the partition-clustering
+        // proofs accept string/date keys the way integral `lo == hi`
+        // already does
+        strMinMax.collect { case (c, (mn, mx)) if mn == mx &&
+          mn.getBytes("UTF-8").length <= strStatMaxBytes => c -> hexOf(mn)
+        }.toMap,
+        hll.map(_._1).zipWithIndex.flatMap { case (c, i) =>
+          at(hllBase + i) match {
+            case b: Array[Byte] =>
+              Some(c -> java.util.Base64.getEncoder.encodeToString(b))
+            case _ => None
+          }
+        }.toMap)
+    }
+  }
+  private object StatsAgg {
+    /** The integral and STRING `statsCols` of `schema`, named through
+      * `phys`, all sketched after the caller's `keys` sketches; any
+      * other type yields no stats for that column, which just disables
+      * pruning on it. */
+    def of(schema: org.apache.spark.sql.types.StructType,
+      statsCols: Seq[String], phys: String => String = identity,
+      keys: Seq[(String, Column)] = Seq.empty): StatsAgg = {
+      import org.apache.spark.sql.types._
+      def typed(pred: DataType => Boolean) = statsCols.distinct
+        .filter(c => schema.find(_.name == c).map(_.dataType).exists(pred))
+        .map(phys)
+      val integral = typed {
+        case LongType | IntegerType | ShortType => true
+        case _ => false
+      }
+      val strings = typed(_ == StringType)
+      StatsAgg(integral, strings,
+        (keys ++ (integral ++ strings).map(c => c -> col(c))).distinctBy(_._1))
+    }
+  }
+
+  /** Finish freshly decoded entries: ONE pooled pass spills every
+    * oversized sketch to its sidecar, then each dir's on-disk BYTES
+    * ride the stats grammar as pseudo-column `_bytes` (like `_rows`)
+    * so the format face can answer `sizeInBytes` from the commit
+    * alone — that number is what makes Catalyst auto-broadcast a
+    * small graft-tx dimension table; a V1 relation without it reports
+    * defaultSizeInBytes (huge) and a broadcastable join silently
+    * becomes a shuffle. `_bytes` records DATA bytes: the sidecars
+    * just spilled into the dir are subtracted from its content
+    * summary — the CBO must price the scan, not the metadata riding
+    * in the same dir. */
+  private def finishEntries(spark: SparkSession, rp: Path,
+    raw: Seq[Entry]): Seq[Entry] = {
+    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
+    val spilled = spillHstatsAll(fs, rp, raw.map(e => e.dir -> e.hstats),
+      hllInlineMax(spark))
+    raw.map { e =>
+      val h = spilled(e.dir)
+      val bytes = fs.getContentSummary(new Path(rp, e.dir)).getLength -
+        sidecarBytes(fs, rp, e.dir, h)
+      e.copy(stats = e.stats + (bytesKey -> (bytes, bytes)), hstats = h)
+    }
   }
   private val nullsPrefix = "n,"
   /** lgK of the per-dir NDV sketches: 2^12 registers ≈ 1.6% relative
@@ -1157,15 +1198,12 @@ object TxTable {
   /** Hex-named so ANY legal column name is path-safe. */
   private def hllSidecarPath(rp: Path, dirName: String, c: String): Path =
     new Path(new Path(rp, dirName), s"_hll-${hexOf(c)}")
-  private def spillHstats(fs: FileSystem, rp: Path, dirName: String,
-    hstats: Map[String, String], cap: Int): Map[String, String] =
-    spillHstatsAll(fs, rp, Seq(dirName -> hstats), cap)(dirName)
 
-  /** Batched [[spillHstats]]: ALL oversized blobs across a commit's
-    * new dirs write through one bounded pool — a serial
-    * create-per-sidecar loop would put 10^4 small-file RPC latencies
-    * on the commit path at scale (the same job-count discipline as
-    * dirSchemas/entrySizes). */
+  /** Spills the `hll:` blobs over `cap` to their sidecars: ALL
+    * oversized blobs across a commit's new dirs write through one
+    * bounded pool — a serial create-per-sidecar loop would put 10^4
+    * small-file RPC latencies on the commit path at scale (the same
+    * job-count discipline as dirSchemas/entrySizes). */
   private def spillHstatsAll(fs: FileSystem, rp: Path,
     perDir: Seq[(String, Map[String, String])], cap: Int)
     : Map[String, Map[String, String]] = {
@@ -1194,13 +1232,9 @@ object TxTable {
     }.toMap
   }
 
-  /** `Entry` for a freshly-written dir with its stats computed. The
-    * dir's on-disk BYTES ride the stats grammar as pseudo-column
-    * `_bytes` (like `_rows`) so the format face can answer
-    * `sizeInBytes` from the commit alone — that number is what makes
-    * Catalyst auto-broadcast a small graft-tx dimension table; a V1
-    * relation without it reports defaultSizeInBytes (huge) and a
-    * broadcastable join silently becomes a shuffle. */
+  /** `Entry` for a freshly-written dir, its stats computed by ONE
+    * 1-row [[StatsAgg]] over the dir — with parquet aggregate pushdown
+    * a footer read for the min/max/count part, not a data scan. */
   private def statsEntry(spark: SparkSession, rp: Path, dirName: String,
     statsCols: Seq[String], isDelta: Boolean = false): Entry = {
     // The stats-line grammar is only unambiguous when no user column
@@ -1213,208 +1247,63 @@ object TxTable {
     // chokepoint every OTHER write path's stats/key columns funnel
     // through, so enforce it here too.
     statsCols.foreach(requireStatsGrammarSafe)
-    val (n, s, x, h) = dirStats(spark, rp, dirName, statsCols)
-    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
-    // `_bytes` records DATA bytes: dirStats has already spilled any
-    // oversized hll sidecars into the dir, so subtract their lengths
-    // from the content summary — the CBO's sizeInBytes must price the
-    // scan, not the metadata riding in the same dir
-    val bytes = fs.getContentSummary(new Path(rp, dirName)).getLength -
-      sidecarBytes(fs, rp, dirName, h)
-    Entry(isDelta, dirName, n + (bytesKey -> (bytes, bytes)), s, x, h)
+    val df = readDirFrame(spark, rp, dirName)
+    val agg = StatsAgg.of(df.schema, statsCols)
+    val r = df.agg(agg.aggs.head, agg.aggs.tail: _*).collect()(0)
+    finishEntries(spark, rp, Seq(agg.decode(dirName, r.get)))
+      .head.copy(isDelta = isDelta)
   }
   /** In-write stats observer — the [[checkGuard]] discipline applied
-    * to the per-dir stats aggregate: the SAME aggregate layout
-    * [[dirStats]] computes (row count, min/max, null counts, NDV
-    * registers) rides the write action itself via `observe`, so a
-    * freshly-written dir's [[Entry]] is assembled with NO second scan
-    * of the batch. At warehouse scale the post-write stats pass
-    * re-read every byte just written; here the metrics are folded
-    * per-task during the write and merged on the driver. Values are
-    * identical to a rescan (the written rows ARE the observed rows;
-    * min/max/count/sum are order-free, and the HLL estimate is a
-    * function of the register set, not visit order). Returns the
-    * wrapped frame to write and an assembler to call AFTER the write
-    * action (it blocks on the observation). */
+    * to the per-dir stats aggregate: the [[StatsAgg]] rides the write
+    * action itself via `observe`, so a freshly-written dir's [[Entry]]
+    * is assembled with NO second scan of the batch. At warehouse scale
+    * the post-write stats pass re-read every byte just written; here
+    * the metrics are folded per-task during the write and merged on
+    * the driver. Values are identical to a rescan (the written rows
+    * ARE the observed rows). Returns the wrapped frame to write and an
+    * assembler to call AFTER the write action (it blocks on the
+    * observation). */
   private def observeStats(df: DataFrame, statsCols: Seq[String])
     : (DataFrame, (SparkSession, Path, String, Boolean) => Entry) = {
     statsCols.foreach(requireStatsGrammarSafe)
-    def typed(pred: org.apache.spark.sql.types.DataType => Boolean) =
-      statsCols.distinct.filter(c =>
-        df.schema.find(_.name == c).map(_.dataType).exists(pred))
-    val integral = typed {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    val strings = typed(_ == org.apache.spark.sql.types.StringType)
-    val aggs0 = count(lit(1)) +:
-      (integral.flatMap(c =>
-        Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
-        integral.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strings.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        (integral ++ strings).map(c => hll_sketch_agg(col(c), hllLgK)))
-    val aggs = aggs0.zipWithIndex.map { case (a, i) => a.as(s"c$i") }
+    val agg = StatsAgg.of(df.schema, statsCols)
+    val aggs = agg.aggs.zipWithIndex.map { case (a, i) => a.as(s"c$i") }
     val obs = org.apache.spark.sql.Observation(
       "graft_stats_" + java.util.UUID.randomUUID().toString.take(8))
     val wrapped = df.observe(obs, aggs.head, aggs.tail: _*)
-    val nBase = 1 + 3 * integral.length
-    val strNullBase = nBase + 2 * strings.length
-    val hllBase = strNullBase + strings.length
     val mk = (spark: SparkSession, rp: Path, dirName: String,
       isDelta: Boolean) => {
       val m = obs.get
-      def at(i: Int): Any = m.getOrElse(s"c$i", null)
-      def longAt(i: Int): Option[Long] = at(i) match {
-        case l: java.lang.Long => Some(l.longValue())
-        case _ => None
-      }
-      def strAt(i: Int): Option[String] = at(i) match {
-        case s: String => Some(s)
-        case _ => None
-      }
-      val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
-      val hstats = spillHstats(fs, rp, dirName,
-        (integral ++ strings).zipWithIndex.flatMap { case (c, i) =>
-          at(hllBase + i) match {
-            case b: Array[Byte] => Some(c ->
-              java.util.Base64.getEncoder.encodeToString(b))
-            case _ => None
-          }
-        }.toMap, hllInlineMax(spark))
-      val xvals = strings.zipWithIndex.flatMap { case (c, i) =>
-        (strAt(nBase + 2 * i), strAt(nBase + 2 * i + 1)) match {
-          case (Some(mn), Some(mx))
-            if mn == mx && mn.getBytes("UTF-8").length <= strStatMaxBytes =>
-            Some(c -> hexOf(mn))
-          case _ => None
-        }
-      }.toMap
-      val rows = longAt(0).getOrElse(0L)
-      val stats = Map(rowsKey -> (rows, rows)) ++
-        integral.zipWithIndex.flatMap { case (c, i) =>
-          (longAt(2 * i + 1), longAt(2 * i + 2)) match {
-            case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-            case _ => None
-          }
-        } ++
-        integral.zipWithIndex.map { case (c, i) =>
-          val n = longAt(1 + 2 * integral.length + i).getOrElse(0L)
-          s"$nullsPrefix$c" -> (n, n)
-        } ++
-        strings.zipWithIndex.map { case (c, i) =>
-          val n = longAt(strNullBase + i).getOrElse(0L)
-          s"$nullsPrefix$c" -> (n, n)
-        }
-      val sstats = strings.zipWithIndex.flatMap { case (c, i) =>
-        (strAt(nBase + 2 * i), strAt(nBase + 2 * i + 1)) match {
-          case (Some(mn), Some(mx)) => strStatBounds(mn, mx).map(c -> _)
-          case _ => None
-        }
-      }.toMap
-      val bytes = fs.getContentSummary(new Path(rp, dirName)).getLength -
-        sidecarBytes(fs, rp, dirName, hstats)
-      Entry(isDelta, dirName, stats + (bytesKey -> (bytes, bytes)),
-        sstats, xvals, hstats)
+      finishEntries(spark, rp,
+        Seq(agg.decode(dirName, i => m.getOrElse(s"c$i", null))))
+        .head.copy(isDelta = isDelta)
     }
     (wrapped, mk)
   }
 
   /** Batched [[statsEntry]] for the aligned z-prefix buckets one
-    * optimize pass just wrote under `parent`: ONE grouped aggregate
-    * over the parent read computes every bucket's stats (row count,
-    * min/max, null counts, string bounds, NDV registers) instead of
-    * one Spark job per bucket — the single-pass discipline
-    * [[appendBucketedBy]] already uses. Per-bucket numbers are
-    * identical to per-dir [[statsEntry]] calls: the grouped aggregate
-    * sees exactly each `_b=` dir's rows (min/max/count/sum are
-    * order-free, and the HLL register state is a function of the
-    * value SET, not visit order). */
+    * optimize pass just wrote under `parent`: ONE grouped
+    * [[StatsAgg]] over the parent read computes every bucket's stats
+    * instead of one Spark job per bucket — the single-pass discipline
+    * [[appendBucketedBy]] already uses. The grouped aggregate sees
+    * exactly each `_b=` dir's rows, so per-bucket numbers are
+    * identical to per-dir [[statsEntry]] calls. */
   private def bucketStatsEntries(spark: SparkSession, rp: Path,
     parent: String, buckets: Seq[String],
     statsCols: Seq[String]): Seq[Entry] = {
     statsCols.foreach(requireStatsGrammarSafe)
     val df = spark.read.parquet(new Path(rp, parent).toString)
-    def typed(pred: org.apache.spark.sql.types.DataType => Boolean) =
-      statsCols.distinct.filter(c =>
-        df.schema.find(_.name == c).map(_.dataType).exists(pred))
-    val integral = typed {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    val strings = typed(_ == org.apache.spark.sql.types.StringType)
-    val aggs = count(lit(1)) +:
-      (integral.flatMap(c =>
-        Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
-        integral.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strings.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        (integral ++ strings).map(c => hll_sketch_agg(col(c), hllLgK)))
-    val g = 1 // leading _b group column shifts every stat index by one
-    val nBase = g + 1 + 3 * integral.length
-    val strNullBase = nBase + 2 * strings.length
-    val hllBase = strNullBase + strings.length
+    val agg = StatsAgg.of(df.schema, statsCols)
     val byBucket = df.groupBy(col("_b").cast("long").as("_b"))
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(agg.aggs.head, agg.aggs.tail: _*)
       .collect() // bucket-cardinality readback (<= nDirs rows)
       .map(r => s"$parent/_b=${r.getLong(0)}" -> r).toMap
-    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
-    val rawH = buckets.map { d =>
+    finishEntries(spark, rp, buckets.map { d =>
       val r = byBucket.getOrElse(d, throw new IllegalStateException(
         s"txtable: bucket dir $d missing from the grouped stats pass"))
-      d -> (integral ++ strings).zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(hllBase + i)) None
-        else Some(c -> java.util.Base64.getEncoder.encodeToString(
-          r.getAs[Array[Byte]](hllBase + i)))
-      }.toMap
-    }
-    val hAll = spillHstatsAll(fs, rp, rawH, hllInlineMax(spark))
-    buckets.map { d =>
-      val r = byBucket(d)
-      val xvals = strings.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(nBase + 2 * i)) None
-        else {
-          val mn = r.getString(nBase + 2 * i)
-          val mx = r.getString(nBase + 2 * i + 1)
-          if (mn == mx && mn.getBytes("UTF-8").length <= strStatMaxBytes)
-            Some(c -> hexOf(mn))
-          else None
-        }
-      }.toMap
-      val stats = Map(rowsKey -> (r.getLong(g), r.getLong(g))) ++
-        integral.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(g + 2 * i + 1)) None
-          else Some(c -> (r.getLong(g + 2 * i + 1), r.getLong(g + 2 * i + 2)))
-        } ++
-        integral.zipWithIndex.map { case (c, i) =>
-          val j = g + 1 + 2 * integral.length + i
-          val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-          s"$nullsPrefix$c" -> (n, n)
-        } ++
-        strings.zipWithIndex.map { case (c, i) =>
-          val j = strNullBase + i
-          val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-          s"$nullsPrefix$c" -> (n, n)
-        }
-      val sstats = strings.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(nBase + 2 * i)) None
-        else strStatBounds(r.getString(nBase + 2 * i),
-          r.getString(nBase + 2 * i + 1)).map(c -> _)
-      }.toMap
-      val h = hAll(d)
-      val bytes = fs.getContentSummary(new Path(rp, d)).getLength -
-        sidecarBytes(fs, rp, d, h)
-      Entry(isDelta = false, d,
-        stats + (bytesKey -> (bytes, bytes)), sstats, xvals, h)
-    }
+      // the leading _b group column shifts every stat slot by one
+      agg.decode(d, i => r.get(1 + i))
+    })
   }
 
   /** On-disk bytes of dir `d`'s SPILLED hll sidecars (entries whose
@@ -1790,7 +1679,7 @@ object TxTable {
               av.nonEmpty && av.forall(_.isDigit) &&
                 (try newEntries ==
                   snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-                catch { case _: Throwable => false }))
+                catch { case scala.util.control.NonFatal(_) => false }))
           }
         }
       }
@@ -1870,7 +1759,7 @@ object TxTable {
       case e: Throwable =>
         stagedManifests.foreach { m =>
           try fs.delete(new Path(rp, m), false)
-          catch { case _: Throwable => () }
+          catch { case scala.util.control.NonFatal(_) => () }
         }
         throw e
     }
@@ -3162,6 +3051,17 @@ object TxTable {
             applyPdels(spark, rp, e, readDirFrame(spark, rp, e.dir))
               .count()
           }
+          // more matches than the entry's live rows means the entry's
+          // `_rows` (or a prior sidecar) is wrong: dropping the dir on
+          // `n == nAll` could then lose rows still live in it
+          if (n > nAll) {
+            staged.foreach(d => fs.delete(new Path(rp, d), true))
+            staged = Seq.empty
+            throw new IllegalStateException(
+              s"txtable: positional delete matched $n rows in ${e.dir}, " +
+                s"whose entry records only $nAll live rows - refusing " +
+                "to commit over inconsistent dir metadata")
+          }
           if (n == 0L) {
             fs.delete(sidecar, true)
             staged = staged.filterNot(_ == s"${e.dir}/$name")
@@ -3388,84 +3288,26 @@ object TxTable {
     // bucket column is excluded from the NDV sketch (sketch input
     // must be int/long/string); statsCols sketches mirror the
     // partitioned write path
-    def typed(pred: DataType => Boolean) =
-      statsCols.distinct.filter(c =>
-        df.schema.find(_.name == c).map(_.dataType).exists(pred))
-        .map(physName(effMap, _))
-    val integral = typed {
-      case LongType | IntegerType | ShortType => true
-      case _ => false
-    }
-    val strings = typed(_ == StringType)
-    val hllCols =
-      ((if (dtB == DateType) Seq.empty else Seq(physB)) ++
-        integral ++ strings).distinct
-    val aggs = count(lit(1)) +:
-      (integral.flatMap(c =>
-        Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
-        integral.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strings.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        hllCols.map(c => hll_sketch_agg(col(c), hllLgK)))
-    val g = 1
-    val nBase = g + 1 + 3 * integral.length
-    val strNullBase = nBase + 2 * strings.length
-    val hllBase = strNullBase + strings.length
+    val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
+      keys = if (dtB == DateType) Seq.empty else Seq(physB -> col(physB)))
     val statRows = spark.read.parquet(basePath)
       .groupBy(col(helper).cast("long").as(helper))
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(agg.aggs.head, agg.aggs.tail: _*)
       .collect() // bucket-cardinality readback (<= numBuckets rows)
-      .map { r =>
-        val sNulls = strings.zipWithIndex.map { case (c, i) =>
-          val j = strNullBase + i
-          val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-          s"$nullsPrefix$c" -> (n, n)
-        }
-        val sBounds = strings.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(nBase + 2 * i)) None
-          else strStatBounds(r.getString(nBase + 2 * i),
-            r.getString(nBase + 2 * i + 1)).map(c -> _)
-        }.toMap
-        val hBlobs = hllCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(hllBase + i)) None
-          else Some(c -> java.util.Base64.getEncoder.encodeToString(
-            r.getAs[Array[Byte]](hllBase + i)))
-        }.toMap
-        r.getLong(0) -> ((Map(rowsKey -> (r.getLong(g), r.getLong(g))) ++
-          integral.zipWithIndex.flatMap { case (c, i) =>
-            if (r.isNullAt(g + 1 + 2 * i)) None
-            else Some(c -> (r.getLong(g + 1 + 2 * i),
-              r.getLong(g + 2 + 2 * i)))
-          } ++
-          integral.zipWithIndex.map { case (c, i) =>
-            val j = g + 1 + 2 * integral.length + i
-            val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-            s"$nullsPrefix$c" -> (n, n)
-          } ++ sNulls,
-          sBounds, hBlobs))
-      }.toMap
+      .map(r => r.getLong(0) -> r).toMap
     if (statRows.isEmpty) {
       fs.delete(new Path(rp, baseDir), true)
       throw new IllegalArgumentException(
         "txtable: bucketed append of empty frame")
     }
-    val ids = statRows.keys.toSeq.sorted
-    def dirNameOf(id: Long) = s"$baseDir/$helper=$id"
-    val spilled = spillHstatsAll(fs, rp,
-      ids.map(id => dirNameOf(id) -> statRows(id)._3),
-      hllInlineMax(spark))
-    val entries = ids.map { id =>
-      val dirName = dirNameOf(id)
-      val (nStats, sBounds, _) = statRows(id)
-      val bytes = fs.getContentSummary(new Path(rp, dirName)).getLength -
-        sidecarBytes(fs, rp, dirName, spilled(dirName))
-      Entry(isDelta = false, dirName,
-        nStats + (bucketStatKey -> (id, id)) +
-          (bytesKey -> (bytes, bytes)),
-        sBounds, Map.empty, spilled(dirName))
-    }
+    val entries = finishEntries(spark, rp,
+      statRows.keys.toSeq.sorted.map { id =>
+        val e = agg.decode(s"$baseDir/$helper=$id",
+          i => statRows(id).get(1 + i))
+        // bucket dirs record no `sx:` exact markers
+        e.copy(stats = e.stats + (bucketStatKey -> (id, id)),
+          xvals = Map.empty)
+      })
     try commitRetry(spark, root) { prevV =>
       requireCompat(prevV)
       val prev0 =
@@ -3479,7 +3321,7 @@ object TxTable {
         if (replace) snapshotColMap(fs, rp, prevV)
           .map(_ => "colmap:").toSeq
         else extMap.map(colMapLine).toSeq
-      val physStats = (integral ++ strings).distinct
+      val physStats = agg.integral ++ agg.strings
       val statsHdr =
         if (prev.exists(_.startsWith("statscol:")) || physStats.isEmpty)
           None
@@ -3643,46 +3485,19 @@ object TxTable {
     // columns. The read-back scans the PHYSICAL files, and read-side
     // prune lookups key entry stats by physical names — so the
     // aggregate and the stats map must both speak physical, not the
-    // caller's logical
-    def typed(pred: org.apache.spark.sql.types.DataType => Boolean) =
-      statsCols.distinct.filter(c =>
-        df.schema.find(_.name == c).map(_.dataType).exists(pred))
-        .map(physName(effMap, _))
-    val integral = typed {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    val strings = typed(_ == org.apache.spark.sql.types.StringType)
-    // partition columns carry per-dir NDV sketches too (the real
-    // columns are still data columns here — helpers are the copies),
-    // so a partitioned table's merged NDV covers its keys as well;
-    // DATE keys sketch their days-since-epoch encoding (the sketch
-    // input type must be int/long/string — and distinct days ARE
-    // distinct dates, so the estimate is the right one)
-    val hllCols = (physParts ++ integral ++ strings).distinct
-    val kindOf = physParts.zip(partKind).toMap
-    val aggs = count(lit(1)) +:
-      (integral.flatMap(c =>
-        Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
-        integral.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        strings.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")) ++
-        hllCols.map { c =>
-          val e =
-            if (kindOf.get(c).contains('d'))
-              datediff(col(c), lit(java.sql.Date.valueOf("1970-01-01")))
-                .cast("long")
-            else col(c)
-          hll_sketch_agg(e, hllLgK)
-        })
+    // caller's logical. Partition columns carry per-dir NDV sketches
+    // too (the real columns are still data columns here — helpers are
+    // the copies), so a partitioned table's merged NDV covers its keys
+    // as well; DATE keys sketch their days-since-epoch encoding (the
+    // sketch input type must be int/long/string — and distinct days
+    // ARE distinct dates, so the estimate is the right one)
+    val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
+      keys = physParts.zip(partKind).map { case (p, kind) =>
+        p -> (if (kind == 'd') helperExpr(p, kind) else col(p))
+      })
+    def dirNameOf(vs: Seq[String]): String = baseDir + physParts.zip(vs)
+      .map { case (p, v) => s"/$p=$v" }.mkString
     val g = helpers.length
-    val nBase = g + 1 + 3 * integral.length
-    val strNullBase = nBase + 2 * strings.length
-    val hllBase = strNullBase + strings.length
     val statRows = spark.read.parquet(basePath)
       // pin helper types: partition-value inference may type small
       // integral tokens INT; 'x'-prefixed hex tokens always infer
@@ -3690,49 +3505,13 @@ object TxTable {
       .groupBy(helpers.zip(partIsStr).map { case (h, isStr) =>
         (if (isStr) col(h).cast("string") else col(h).cast("long")).as(h)
       }: _*)
-      .agg(aggs.head, aggs.tail: _*)
+      .agg(agg.aggs.head, agg.aggs.tail: _*)
       .collect() // partition-cardinality readback (dates/buckets)
       .map { r =>
         val vs: Seq[String] = partIsStr.zipWithIndex.map { case (isStr, i) =>
           if (isStr) r.getString(i) else r.getLong(i).toString
         }
-        val sNulls = strings.zipWithIndex.map { case (c, i) =>
-          val j = strNullBase + i
-          val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-          s"$nullsPrefix$c" -> (n, n)
-        }
-        val sBounds = strings.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(nBase + 2 * i)) None
-          else strStatBounds(r.getString(nBase + 2 * i),
-            r.getString(nBase + 2 * i + 1)).map(c -> _)
-        }.toMap
-        val sExact = strings.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(nBase + 2 * i)) None
-          else {
-            val mn = r.getString(nBase + 2 * i)
-            val mx = r.getString(nBase + 2 * i + 1)
-            if (mn == mx && mn.getBytes("UTF-8").length <= strStatMaxBytes)
-              Some(c -> hexOf(mn))
-            else None
-          }
-        }.toMap
-        val hBlobs = hllCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(hllBase + i)) None
-          else Some(c -> java.util.Base64.getEncoder.encodeToString(
-            r.getAs[Array[Byte]](hllBase + i)))
-        }.toMap
-        vs -> ((Map(rowsKey -> (r.getLong(g), r.getLong(g))) ++
-          integral.zipWithIndex.flatMap { case (c, i) =>
-            if (r.isNullAt(g + 1 + 2 * i)) None
-            else Some(c -> (r.getLong(g + 1 + 2 * i),
-              r.getLong(g + 2 + 2 * i)))
-          } ++
-          integral.zipWithIndex.map { case (c, i) =>
-            val j = g + 1 + 2 * integral.length + i
-            val n = if (r.isNullAt(j)) 0L else r.getLong(j)
-            s"$nullsPrefix$c" -> (n, n)
-          } ++ sNulls,
-          sBounds, sExact, hBlobs))
+        vs -> agg.decode(dirNameOf(vs), i => r.get(g + i))
       }.toMap
     // helper dirs → `$physPart=v` entry dirs: one metadata rename per
     // path level per distinct prefix, leaves become the entry dirs
@@ -3747,20 +3526,8 @@ object TxTable {
         }
     }
     renameLevel(new Path(rp, baseDir), 0)
-    // ONE pooled pass writes every oversized sketch sidecar (a
-    // per-dir serial create would put O(dirs) RPC latencies here)
-    def dirNameOf(vs: Seq[String]): String = baseDir + physParts.zip(vs)
-      .map { case (p, v) => s"/$p=$v" }.mkString
-    val spilled = spillHstatsAll(fs, rp,
-      tuples.map(vs => dirNameOf(vs) -> statRows(vs)._4),
-      hllInlineMax(spark))
-    val entries = tuples.map { vs =>
-      val dirName = dirNameOf(vs)
-      val (nStats, sBounds, sExact, _) = statRows(vs)
-      // data bytes only — the pooled spill above just added sidecars
-      // to the dir (same discipline as statsEntry)
-      val bytes = fs.getContentSummary(new Path(rp, dirName)).getLength -
-        sidecarBytes(fs, rp, dirName, spilled(dirName))
+    val entries = finishEntries(spark, rp, tuples.map { vs =>
+      val e = statRows(vs)
       // the NULL-rejection above proved the partition columns null-
       // free — record that as their `n,<col>` stats so metadata-only
       // GROUP BY on a partition column can trust the per-dir counts.
@@ -3774,12 +3541,12 @@ object TxTable {
       val strHex = physParts.zip(partIsStr).zip(vs).collect {
         case ((p, true), v) => p -> v.drop(1) // strip the 'x' prefix
       }
-      Entry(isDelta = false, dirName,
-        nStats ++ intParts + (bytesKey -> (bytes, bytes)) ++
+      e.copy(
+        stats = e.stats ++ intParts ++
           physParts.map(p => s"$nullsPrefix$p" -> (0L, 0L)),
-        sBounds ++ strHex.map { case (p, h) => p -> (h, h) },
-        sExact ++ strHex, spilled(dirName))
-    }
+        sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
+        xvals = e.xvals ++ strHex)
+    })
     commitRetry(spark, root) { prevV =>
       if (skipIf(prevV)) {
         fs.delete(new Path(rp, baseDir), true)
@@ -6090,7 +5857,7 @@ object TxTable {
       av.nonEmpty && av.forall(_.isDigit) &&
         (try snapshotEntries(fs, rp, v).map(_.line).sorted ==
           snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-        catch { case _: Throwable => false }))
+        catch { case scala.util.control.NonFatal(_) => false }))
     val out = lines.flatMap { line =>
       val segs = line.drop(5).split(";")
       if (segs.length < 4) None
@@ -6285,7 +6052,7 @@ object TxTable {
     av.nonEmpty && av.forall(_.isDigit) &&
       (try snapshotEntries(fs, rp, v).map(_.line).sorted ==
         snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-      catch { case _: Throwable => false })
+      catch { case scala.util.control.NonFatal(_) => false })
   }
 
   /** Raw sketch bytes for every (live entry, col) pair: inline base64
@@ -7293,15 +7060,25 @@ object TxTable {
       .select(col("o_orderkey"), col("o_custkey"), col("c_nationkey"))
   }
 
+  /** (shuffle, broadcast) Exchange counts of `df`'s physical plan —
+    * the join gates' evidence, counted by node type so a broadcast
+    * can never pass for a shuffle or the other way round. */
+  private def planExchanges(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.exchange._
+    val p = df.queryExecution.executedPlan
+    (p.collect { case e: ShuffleExchangeLike => e }.size,
+      p.collect { case e: BroadcastExchangeLike => e }.size)
+  }
+
   /** HASH-BUCKETED storage-partitioned join gate (q_txtable_bucket_
     * spj): orders and customer bucketed 16 ways on the customer key —
     * a HIGH-cardinality join key no identity partitioning could
     * co-locate — joined through the catalog face's `bucket(16, c)`
     * KeyGroupedPartitioning. The gate REQUIRES the planned join to
-    * carry zero Exchange (a regression to shuffling fails the gate,
-    * not just slows it); the DuckDB oracle replays the plain join, so
-    * hash equality proves the bucket routing loses and invents no
-    * rows. */
+    * carry zero shuffle and zero broadcast Exchange (a regression to
+    * either fails the gate, not just slows it); the DuckDB oracle
+    * replays the plain join, so hash equality proves the bucket
+    * routing loses and invents no rows. */
   def bucketSpjGateQuery(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
     graft.functions.GraftFunctions.register(s)
@@ -7334,11 +7111,11 @@ object TxTable {
         .join(s.table("graft_bktspj_c").as("r"),
           col("l.o_custkey") === col("r.c_custkey"))
         .select(col("o_orderkey"), col("o_custkey"), col("c_nationkey"))
-      val exchanges = j.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange"))
-      require(exchanges == 0,
-        s"txtable: bucketed SPJ gate planned $exchanges Exchange(s) — " +
-          "the co-bucketed join must be shuffle-free")
+      val (shuffles, broadcasts) = planExchanges(j)
+      require(shuffles == 0 && broadcasts == 0,
+        s"txtable: bucketed SPJ gate planned $shuffles shuffle and " +
+          s"$broadcasts broadcast Exchange(s) — the co-bucketed join " +
+          "must be shuffle-free and not a broadcast")
       j
     } finally {
       s.sql("DROP TABLE IF EXISTS graft_bktspj_o")
@@ -7356,12 +7133,13 @@ object TxTable {
     * shuffles ONLY the plain side into graft's bucket-function layout
     * and the bucketed (big) side never moves — at 100 TB that is the
     * difference between shuffling a dimension and shuffling the fact.
-    * The gate REQUIRES exactly ONE Exchange in the planned join (zero
-    * would mean a broadcast crept in; two would mean the fact
-    * shuffled). The DuckDB oracle replays the plain equi-join — hash
-    * equality proves the V2 bucket function routed the shuffled side
-    * to the right buckets (a mis-hash silently LOSES matches, which
-    * the row hash catches). */
+    * The gate REQUIRES exactly ONE shuffle Exchange and no broadcast
+    * in the planned join (a broadcast join plans no shuffle at all, so
+    * it is refused by its BroadcastExchange; two shuffles would mean
+    * the fact shuffled). The DuckDB oracle replays the plain
+    * equi-join — hash equality proves the V2 bucket function routed
+    * the shuffled side to the right buckets (a mis-hash silently
+    * LOSES matches, which the row hash catches). */
   def bucketSpjShuffleGateQuery(spark: SparkSession,
     dir: String): DataFrame = {
     val s = spark.newSession()
@@ -7384,11 +7162,11 @@ object TxTable {
       val j = s.table("graft_bktshuf_o").as("l")
         .join(c.as("r"), col("l.o_custkey") === col("r.c_custkey"))
         .select(col("o_orderkey"), col("o_custkey"), col("c_nationkey"))
-      val exchanges = j.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange"))
-      require(exchanges == 1,
-        s"txtable: one-sided-shuffle SPJ gate planned $exchanges " +
-          "Exchange(s) — only the un-bucketed side may shuffle")
+      val (shuffles, broadcasts) = planExchanges(j)
+      require(shuffles == 1 && broadcasts == 0,
+        s"txtable: one-sided-shuffle SPJ gate planned $shuffles shuffle " +
+          s"and $broadcasts broadcast Exchange(s) — only the un-bucketed " +
+          "side may shuffle")
       j
     } finally {
       s.sql("DROP TABLE IF EXISTS graft_bktshuf_o")

@@ -108,6 +108,28 @@ class Round14Spec extends SparkSpec {
       .isEmpty)
   }
 
+  test("a positional delete matching more rows than the entry " +
+    "records fails loudly and stages nothing") {
+    val root = tmpDir() + "/pd-overcount"
+    TxTable.append((1L to 100L).map(k => (k, s"p$k")).toDF("k", "s"),
+      root, statsCols = Seq("k"))
+    // an entry whose `_rows` under-counts its dir: 100 rows, 10 recorded
+    val commit = java.nio.file.Paths.get(root, "_commits", "v00000001")
+    val text = new String(java.nio.file.Files.readAllBytes(commit), "UTF-8")
+    assert(text.contains("|_rows=100:100|"))
+    java.nio.file.Files.write(commit,
+      text.replace("|_rows=100:100|", "|_rows=10:10|").getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(root, "_commits", ".v00000001.crc"))
+    val e = intercept[IllegalStateException] {
+      TxTable.deleteWhere(spark, root, "k <= 50", positional = true)
+    }
+    assert(e.getMessage.contains("matched 50 rows"), e.getMessage)
+    assert(TxTable.latestVersion(spark, root) === 1)
+    assert(walkBytes(root, _.contains("_pdel-")) === 0L)
+    assert(TxTable.read(spark, root).count() === 100L)
+  }
+
   test("the change feed emits D rows for a positional-delete commit") {
     val root = tmpDir() + "/pd-cdc"
     TxTable.mergeDelta(spark, root, (1L to 50L).map(k =>
