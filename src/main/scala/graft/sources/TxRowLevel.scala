@@ -140,9 +140,7 @@ class TxCowScanBuilder(root: String, fullSchema: StructType,
 
   override def build(): Scan = {
     val spark = SparkSession.active
-    val plan = TxTable.cowPlan(spark, root,
-      TxTableSource.rangesFromFilters(pushed),
-      TxTableSource.strRangesFromFilters(pushed))
+    val plan = TxTable.cowPlan(spark, root, pushed.toSeq)
     op.plan = Some(plan)
     new TxCowScan(spark, plan, required, Some(op))
   }
@@ -868,10 +866,10 @@ private[sources] object TxV2PredicateSql {
     sqlOp: String): Option[String] =
     for (ls <- render(l); rs <- render(r)) yield s"($ls $sqlOp $rs)"
 
-  private def quote(name: String): String =
+  private[sources] def quote(name: String): String =
     "`" + name.replace("`", "``") + "`"
 
-  private def renderLit(v: Any, dt: DataType): Option[String] = {
+  private[sources] def renderLit(v: Any, dt: DataType): Option[String] = {
     if (v == null) return None // comparisons to NULL never translate
     dt match {
       case ByteType | ShortType | IntegerType | LongType =>

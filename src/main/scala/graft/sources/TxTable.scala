@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.Filter
 
 /** Snapshot-versioned transactional table — the warehouse's
   * atomically-loadable table (the role a transactional table format
@@ -527,15 +528,6 @@ object TxTable {
     }
   }
 
-  /** Physical names of snapshot `v`'s live declared columns — what
-    * the COW DML readers null-fill when a pre-ADD dir lacks them. */
-  private[sources] def addedColNames(spark: SparkSession, root: String,
-    version: Int): Set[String] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
-    liveAddedCols(fs, rp, v).map(_.phys).toSet
-  }
-
   /** The live (non-tombstone) logical→physical pairs. */
   private def liveMap(m: Seq[(String, String)]): Seq[(String, String)] =
     m.filter(_._1.nonEmpty)
@@ -552,13 +544,9 @@ object TxTable {
     phys: String): String =
     m.flatMap(liveMap(_).find(_._2 == phys).map(_._1)).getOrElse(phys)
 
-  /** Translate user-facing logical range/prune maps to physical. */
-  private def physRanges(m: Option[Seq[(String, String)]],
-    rs: Map[String, (Long, Long)]): Map[String, (Long, Long)] =
-    if (m.isEmpty) rs else rs.map { case (c, r) => physName(m, c) -> r }
-
-  private def physStrRanges(m: Option[Seq[(String, String)]],
-    rs: Map[String, (String, String)]): Map[String, (String, String)] =
+  /** Translate a user-facing range map's logical keys to physical. */
+  private def physRanges[R](m: Option[Seq[(String, String)]],
+    rs: Map[String, R]): Map[String, R] =
     if (m.isEmpty) rs else rs.map { case (c, r) => physName(m, c) -> r }
 
   /** Present a PHYSICAL frame under the snapshot's logical names:
@@ -670,6 +658,91 @@ object TxTable {
       if (v >= 1) commitLines(fs, rp, v) else Seq.empty)
   }
 
+  /** What a condition proves about a dir from its commit line alone:
+    * no row matches, every row matches, or the rows must be read. */
+  private sealed trait DirFate
+  private case object Refuted extends DirFate
+  private case object Covered extends DirFate
+  private case object Opened extends DirFate
+
+  /** THE dir-box comparison: `e`'s stats box against a query box in
+    * physical names — disjoint on any column refutes, inside on every
+    * column (a column without stats never is) covers. Strings compare
+    * in the stats' hex UTF-8 byte space (Spark's own string order);
+    * truncated stored bounds are widened, so both answers stay sound. */
+  private def boxFate(e: Entry, ints: Map[String, (Long, Long)],
+    strs: Map[String, (String, String)]): DirFate = {
+    def meet[T](b: Option[(T, T)], lo: T, hi: T)(implicit o: Ordering[T]) =
+      b.map { case (elo, ehi) =>
+        (o.lt(ehi, lo) || o.gt(elo, hi), o.gteq(elo, lo) && o.lteq(ehi, hi))
+      }
+    val ms = ints.toSeq.map { case (c, (lo, hi)) =>
+      meet(e.stats.get(c), lo, hi) } ++
+      strs.toSeq.map { case (c, (lo, hi)) =>
+        meet(e.sstats.get(c), hexOf(lo), hexOf(hi)) }
+    if (ms.exists(_.exists(_._1))) Refuted
+    else if (ms.forall(_.exists(_._2))) Covered
+    else Opened
+  }
+
+  /** ONE dir triage for row-level DML and the copy-on-write scan: the
+    * bounding box of a condition's translated conjuncts `filters`
+    * (LOGICAL names) refutes the dirs it is disjoint from; `IN`, `OR`
+    * and functions may refute, never cover. A dir is covered only if
+    * `whole` (every conjunct translated), each conjunct is `TRUE` or an
+    * `=`/`<`/`<=`/`>`/`>=` its box states exactly, the dir's box lies
+    * inside, and the dir records zero NULLs (`n,<col>`) on every
+    * constrained column: a NULL fails every comparison. */
+  private def triage(filters: Seq[Filter], whole: Boolean,
+    entries: Seq[Entry], m: Option[Seq[(String, String)]])
+    : Seq[(Entry, DirFate)] = {
+    import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo, GreaterThan,
+      GreaterThanOrEqual, LessThan, LessThanOrEqual}
+    val ints = TxTableSource.rangesFromFilters(filters.toArray)
+    val strs = TxTableSource.strRangesFromFilters(filters.toArray)
+    // string boxes are closed, so only =, >=, <= state theirs exactly;
+    // integral strict bounds step by one
+    val exact = whole && filters.forall {
+      case AlwaysTrue() => true
+      case f @ (_: EqualTo | _: GreaterThanOrEqual | _: LessThanOrEqual)
+        if f.references.forall(strs.contains) => true
+      case f @ (_: EqualTo | _: GreaterThan | _: GreaterThanOrEqual |
+        _: LessThan | _: LessThanOrEqual) =>
+        TxTableSource.rangesFromFilters(Array(f)).nonEmpty
+      case _ => false
+    }
+    val (pInts, pStrs) = (physRanges(m, ints), physRanges(m, strs))
+    val nullFree = (pInts.keys ++ pStrs.keys).map(c => s"$nullsPrefix$c")
+    entries.map { e =>
+      e -> (boxFate(e, pInts, pStrs) match {
+        case Covered if !exact ||
+          !nullFree.forall(n => e.stats.get(n).exists(_._1 == 0L)) => Opened
+        case fate => fate
+      })
+    }
+  }
+
+  /** [[triage]] of a DML predicate: `predSql` analyzed against the
+    * snapshot's logical schema (footer schemas, no Spark job) and
+    * translated conjunct by conjunct. A conjunct that does not
+    * translate, or a predicate that does not resolve (every dir then
+    * opens, and the per-dir evaluation reports the error), keeps the
+    * filters from being whole. */
+  private def predicateTriage(spark: SparkSession, rp: Path,
+    predSql: String, entries: Seq[Entry],
+    m: Option[Seq[(String, String)]]): Seq[(Entry, DirFate)] = {
+    val schemas = dirSparkSchemas(spark, rp, entries.map(_.dir))
+    val schema = org.apache.spark.sql.types.StructType(
+      entries.flatMap(e => schemas.get(e.dir)).flatMap(_.fields)
+        .distinctBy(_.name).map(f => f.copy(name = logicalName(m, f.name))))
+    val fs =
+      try org.apache.spark.sql.graft.FilterTranslation.conjuncts(
+        spark.createDataFrame(java.util.Collections
+          .emptyList[org.apache.spark.sql.Row](), schema).filter(predSql))
+      catch { case _: org.apache.spark.sql.AnalysisException => Seq(None) }
+    triage(fs.flatten, fs.forall(_.isDefined), entries, m)
+  }
+
   private def planSnapshot(spark: SparkSession, root: String, version: Int,
     keyRange: Option[(Long, Long)],
     colRanges: Map[String, (Long, Long)],
@@ -713,22 +786,11 @@ object TxTable {
     val (preStr, postStr) =
       if (!hasDelta) (strRanges, Map.empty[String, (String, String)])
       else (Map.empty[String, (String, String)], strRanges)
-    // a dir survives when EVERY named range intersects its recorded
-    // stats for that column (no stats for a column ⇒ can't prune on
-    // it). String bounds compare in the hex-encoded UTF-8 byte space
-    // the stats are stored in — the same total order Spark's own
-    // string comparisons use.
+    // a dir survives unless some named range refutes its recorded
+    // stats box (no stats for a column ⇒ can't prune on it)
     val entries =
       if (preRanges.isEmpty && preStr.isEmpty) allEntries
-      else allEntries.filter { e =>
-        preRanges.forall { case (c, (lo, hi)) =>
-          e.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        } && preStr.forall { case (c, (lo, hi)) =>
-          e.sstats.get(c).forall { case (mn, mx) =>
-            mx >= hexOf(lo) && mn <= hexOf(hi)
-          }
-        }
-      }
+      else allEntries.filter(boxFate(_, preRanges, preStr) != Refuted)
     SnapshotPlan(v, keyCols, allEntries, entries, preRanges, postRanges,
       preStr, postStr)
   }
@@ -772,7 +834,7 @@ object TxTable {
     // immutable physical names
     toLogical(
       readResolved(spark, r, keyRange,
-        physRanges(mOpt, colRanges), physStrRanges(mOpt, strRanges)),
+        physRanges(mOpt, colRanges), physRanges(mOpt, strRanges)),
       mOpt)
   }
 
@@ -2557,16 +2619,12 @@ object TxTable {
     addedDefaults: Map[String, Any] = Map.empty)
 
   /** Plan a group-based copy-on-write rewrite: every dir of the
-    * latest snapshot EXCEPT those the condition's bounding box
-    * provably refutes (the `deleteWhere` disjointness triage — a
-    * pruned dir cannot hold a matching row, so keeping it unrewritten
-    * is sound; Spark's ReplaceData reads every surviving dir's rows
-    * in full). Ranges arrive in LOGICAL names from the pushed
-    * filters; stats compare in physical space. */
+    * latest snapshot EXCEPT those the scan's pushed `filters` (LOGICAL
+    * names) refute through [[triage]] — a refuted dir cannot hold a
+    * matching row, so keeping it unrewritten is sound; Spark's
+    * ReplaceData reads every surviving dir's rows in full. */
   private[sources] def cowPlan(spark: SparkSession, root: String,
-    colRanges: Map[String, (Long, Long)],
-    strRanges: Map[String, (String, String)],
-    version: Int = -1): CowPlan = {
+    filters: Seq[Filter], version: Int = -1): CowPlan = {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     require(v > 0, s"txtable: nothing to rewrite at $root")
@@ -2575,15 +2633,9 @@ object TxTable {
       s"txtable: SQL DML needs a delta-free snapshot of $root — " +
         "run compactSnapshot first")
     val m = snapshotColMap(fs, rp, v)
-    val pr = physRanges(m, colRanges)
-    val spr = physStrRanges(m, strRanges)
-    def disjoint(e: Entry): Boolean = pr.exists {
-      case (c, (lo, hi)) => e.stats.get(c).exists {
-        case (elo, ehi) => ehi < lo || elo > hi } } ||
-      spr.exists { case (c, (lo, hi)) =>
-        e.sstats.get(c).exists { case (elo, ehi) =>
-          ehi < hexOf(lo) || elo > hexOf(hi) } }
-    val affected = entries.filterNot(disjoint)
+    // pushed filters are a subset of the condition: they refute only
+    val affected = triage(filters, whole = false, entries, m)
+      .collect { case (e, fate) if fate != Refuted => e }
     val fmap = listDataFiles(spark, rp, affected.map(_.dir),
       recursive = true)
     val files = affected.flatMap { e =>
@@ -2941,20 +2993,19 @@ object TxTable {
   /** Copy-on-write row-level DELETE (the `DELETE FROM t WHERE …` of a
     * modern table format): rows matching `predSql` leave the snapshot;
     * everything else is byte-identical and, crucially, mostly NOT
-    * rewritten. Per-dir triage against the commit's own stats:
+    * rewritten. Per-dir [[triage]] of the predicate itself against
+    * the commit's own stats:
     *
-    *  - dirs whose stats box is DISJOINT from `pruneRanges` (the
-    *    predicate's bounding box on stats columns) carry over
-    *    untouched — never opened. At 100 TB with date/key-clustered
-    *    dirs (append order, z-order, compactDirs) this is almost all
-    *    of the table; a GDPR key-range delete costs the matching dirs.
-    *  - with `rangesExact = true` (caller asserts the predicate IS the
-    *    box), dirs fully CONTAINED in the box drop from the snapshot
-    *    as pure metadata — the whole-partition TRUNCATE fast path,
-    *    zero rows read or written.
-    *  - only straddling dirs are opened; those with no matches carry
-    *    over unrewritten (one count aggregate), the rest rewrite to a
-    *    new dir holding their surviving rows, stats recomputed.
+    *  - dirs the predicate REFUTES carry over untouched — never
+    *    opened. At 100 TB with date/key-clustered dirs (append order,
+    *    z-order, compactDirs) this is almost all of the table; a GDPR
+    *    key-range delete costs the matching dirs.
+    *  - dirs it COVERS drop from the snapshot as pure metadata — the
+    *    whole-partition and TRUNCATE fast path, zero rows read or
+    *    written.
+    *  - only the remaining dirs are opened; those with no matches
+    *    carry over unrewritten (one count aggregate), the rest rewrite
+    *    to a new dir holding their surviving rows, stats recomputed.
     *
     * Old dirs stay referenced by older versions (time travel reads
     * the pre-delete snapshot until `vacuum`). Requires a delta-free
@@ -2964,9 +3015,6 @@ object TxTable {
     * OCC race are re-staged against the new parent and the stale dirs
     * deleted, so retries can't leak data dirs. */
   def deleteWhere(spark: SparkSession, root: String, predSql: String,
-    pruneRanges: Map[String, (Long, Long)] = Map.empty,
-    rangesExact: Boolean = false,
-    strPruneRanges: Map[String, (String, String)] = Map.empty,
     positional: Boolean = false): Int = {
     val (fs, rp) = fsFor(spark, root)
     var staged: Seq[String] = Seq.empty
@@ -2980,33 +3028,14 @@ object TxTable {
           "run compactSnapshot first")
       val keys = snapshotKeys(fs, rp, prevV)
       val statsCols = snapshotStatsCols(fs, rp, prevV)
-      // callers speak logical names: prune ranges translate to the
+      // callers speak logical names: the triage maps them to the
       // physical stats, and the predicate evaluates over logical
       // aliases laid over each physical dir frame
       val m = snapshotColMap(fs, rp, prevV)
-      val pr = physRanges(m, pruneRanges)
-      // string boxes triage through the string stats exactly like the
-      // integral ones — a domain-/date-string-bounded delete carries
-      // disjoint dirs unopened. Truncated bounds stay sound both
-      // ways: disjointness compares against widened bounds (over-
-      // keeps), containment against narrowed ones (under-drops).
-      val spr = physStrRanges(m, strPruneRanges)
-      def disjoint(e: Entry): Boolean = pr.exists {
-        case (c, (lo, hi)) => e.stats.get(c).exists {
-          case (elo, ehi) => ehi < lo || elo > hi } } ||
-        spr.exists { case (c, (lo, hi)) =>
-          e.sstats.get(c).exists { case (elo, ehi) =>
-            ehi < hexOf(lo) || elo > hexOf(hi) } }
-      def contained(e: Entry): Boolean = rangesExact &&
-        (pr.nonEmpty || spr.nonEmpty) && pr.forall {
-          case (c, (lo, hi)) => e.stats.get(c).exists {
-            case (elo, ehi) => elo >= lo && ehi <= hi } } &&
-        spr.forall { case (c, (lo, hi)) =>
-          e.sstats.get(c).exists { case (elo, ehi) =>
-            elo >= hexOf(lo) && ehi <= hexOf(hi) } }
-      val newLines = entries.flatMap { e =>
-        if (disjoint(e)) Some(e.line)
-        else if (contained(e)) None
+      val fates = predicateTriage(spark, rp, predSql, entries, m)
+      val newLines = fates.flatMap { case (e, fate) =>
+        if (fate == Refuted) Some(e.line)
+        else if (fate == Covered) None
         else if (positional) {
           // POSITIONAL MODE (the deletion-vector move): instead of
           // rewriting a straddling dir copy-on-write, commit the
@@ -3172,15 +3201,17 @@ object TxTable {
 
   /** Partition-clustered append: hive-style `partitionBy` layout
     * lifted into the snapshot — ONE commit entry per partition
-    * directory, each with exact single-value stats on the partition
-    * column (plus any extra `statsCols` computed per dir). This is
-    * the layout that makes the DML triage maximal: a partition-
-    * bounded `deleteWhere(rangesExact = true)` drops whole partitions
-    * as pure metadata, and partition-bounded reads prune to exactly
-    * the matching dirs — the classic date-partitioned warehouse
-    * table. The partition column must be integral (stats are integer
-    * ranges); values are read back from the directory names Spark
-    * writes, so the entry stats can never disagree with the data. */
+    * directory, each with exact single-value, zero-NULL stats on the
+    * partition column (plus any extra `statsCols` computed per dir).
+    * This is the layout that makes the DML triage maximal: a delete
+    * whose predicate bounds the partition column (`p = 3`, `p <= 9`)
+    * covers whole partitions and drops them as pure metadata, and
+    * partition-bounded reads prune to exactly the matching dirs — the
+    * classic date-partitioned warehouse table. A DATE key's bounds are
+    * epoch days, which no date literal translates to, so a DATE-keyed
+    * delete opens its candidate dirs. Values are read back from the
+    * directory names Spark writes, so the entry stats can never
+    * disagree with the data. */
   def appendPartitioned(df: DataFrame, root: String, partCol: String,
     statsCols: Seq[String] = Seq.empty): Int =
     appendPartitionedBy(df, root, Seq(partCol), statsCols)
@@ -4082,8 +4113,9 @@ object TxTable {
   }
 
   /** Copy-on-write row-level UPDATE (`UPDATE t SET c = expr WHERE …`):
-    * the same stats triage as `deleteWhere` — disjoint dirs carry over
-    * by name unopened, no-match dirs carry over after one count, and
+    * the same [[triage]] of the predicate as `deleteWhere` — refuted
+    * dirs carry over by name unopened, covered dirs rewrite without
+    * the match probe, no-match dirs carry over after one probe, and
     * only dirs actually holding matches rewrite (matched rows through
     * the SET expressions, the rest verbatim). `sets` maps column name
     * to a SQL expression over the row (self-references fine:
@@ -4091,9 +4123,7 @@ object TxTable {
     * silently widening the schema. Delta-free snapshots only, like
     * deleteWhere and for the same reason. */
   def updateWhere(spark: SparkSession, root: String, predSql: String,
-    sets: Map[String, String],
-    pruneRanges: Map[String, (Long, Long)] = Map.empty,
-    strPruneRanges: Map[String, (String, String)] = Map.empty): Int = {
+    sets: Map[String, String]): Int = {
     require(sets.nonEmpty, "txtable: updateWhere needs at least one SET")
     val (fs, rp) = fsFor(spark, root)
     var staged: Seq[String] = Seq.empty
@@ -4108,26 +4138,19 @@ object TxTable {
       val keys = snapshotKeys(fs, rp, prevV)
       val statsCols = snapshotStatsCols(fs, rp, prevV)
       val m = snapshotColMap(fs, rp, prevV)
-      val pr = physRanges(m, pruneRanges)
-      val spr = physStrRanges(m, strPruneRanges)
       // SETs address the snapshot's LOGICAL columns; rewritten rows
       // keep the dir's physical schema
       val physSets = sets.map { case (c, ex) => physName(m, c) -> ex }
-      def disjoint(e: Entry): Boolean = pr.exists {
-        case (c, (lo, hi)) => e.stats.get(c).exists {
-          case (elo, ehi) => ehi < lo || elo > hi } } ||
-        spr.exists { case (c, (lo, hi)) =>
-          e.sstats.get(c).exists { case (elo, ehi) =>
-            ehi < hexOf(lo) || elo > hexOf(hi) } }
-      val newLines = entries.map { e =>
-        if (disjoint(e)) e.line
+      val fates = predicateTriage(spark, rp, predSql, entries, m)
+      val newLines = fates.map { case (e, fate) =>
+        if (fate == Refuted) e.line
         else {
           val raw = visibleDirFrame(spark, rp, e)
           val (df, extras) = withLogicalAliases(raw, m)
           physSets.keys.foreach { c =>
             require(raw.columns.contains(c),
               s"txtable: SET of unknown column '${logicalName(m, c)}'") }
-          if (df.filter(predSql).isEmpty) e.line
+          if (fate != Covered && df.filter(predSql).isEmpty) e.line
           else {
             // ONE select so every SET expression and the predicate see
             // the OLD row (SQL UPDATE semantics) — chained withColumn
@@ -4160,16 +4183,12 @@ object TxTable {
     }
   }
 
-  /** Oracle-gated end-to-end DELETE exercise (q_txtable_delete):
-    * stage `orders` as four key-range dirs (each with o_orderkey
-    * stats), then run BOTH delete shapes — a whole-quarter range
-    * delete with `rangesExact` (must drop dir 0 as pure metadata) and
-    * a straddling mod-7 predicate bounded to the lower half (quarters
-    * 2/3 prune untouched, quarter 1 rewrites). The DuckDB oracle is
-    * the two NOT(...) filters composed — hash equality proves triage,
-    * rewrite and commit, not just the happy path. */
-  def deleteGateQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchRoot("graft-delgate", dir)
+  /** The DML gates' table: `orders` staged as four o_orderkey-range
+    * dirs, each with o_orderkey stats; `dml(root, maxKey, quarter)`
+    * runs on it and the gate reads the result back. */
+  private def quarterDirsGate(spark: SparkSession, dir: String,
+    prefix: String)(dml: (String, Long, Long) => Unit): DataFrame = {
+    val root = scratchRoot(prefix, dir)
     val o = graft.Tables.orders(spark, dir).select(
       col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").cast("decimal(18,2)").cast("double").as("price"))
@@ -4181,38 +4200,35 @@ object TxTable {
       append(o.filter(col("o_orderkey") >= i * q &&
         col("o_orderkey") < (i + 1) * q), root, statsCols = Seq("o_orderkey"))
     }
-    deleteWhere(spark, root, s"o_orderkey <= ${q - 1}",
-      Map("o_orderkey" -> (0L, q - 1)), rangesExact = true)
-    deleteWhere(spark, root,
-      s"o_orderkey % 7 = 0 AND o_orderkey <= ${maxO / 2}",
-      Map("o_orderkey" -> (0L, maxO / 2)))
+    dml(root, maxO, q)
     read(spark, root)
   }
+
+  /** Oracle-gated end-to-end DELETE exercise (q_txtable_delete) on
+    * the four-dir staging: BOTH delete shapes — a whole-quarter range
+    * delete (covers dir 0, which drops as pure metadata) and a
+    * straddling mod-7 predicate bounded to the lower half (quarters
+    * 2/3 prune untouched, quarter 1 rewrites). The DuckDB oracle is
+    * the two NOT(...) filters composed — hash equality proves triage,
+    * rewrite and commit, not just the happy path. */
+  def deleteGateQuery(spark: SparkSession, dir: String): DataFrame =
+    quarterDirsGate(spark, dir, "graft-delgate") { (root, maxO, q) =>
+      deleteWhere(spark, root, s"o_orderkey <= ${q - 1}")
+      deleteWhere(spark, root,
+        s"o_orderkey % 7 = 0 AND o_orderkey <= ${maxO / 2}")
+    }
 
   /** Oracle-gated end-to-end UPDATE exercise (q_txtable_update): the
     * same four-dir staging, then a bounded SET price = price * 2 (IEEE
     * doubling is exact, so the oracle hashes bitwise) — lower-half
     * dirs rewrite through the old-row semantics, upper-half dirs prune
     * untouched. */
-  def updateGateQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchRoot("graft-updgate", dir)
-    val o = graft.Tables.orders(spark, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      col("o_totalprice").cast("decimal(18,2)").cast("double").as("price"))
-    val b = o.agg(max("o_orderkey")).collect()(0)
-    if (b.isNullAt(0)) return o.filter(lit(false))
-    val maxO = b.getLong(0)
-    val q = maxO / 4 + 1
-    (0L to 3L).foreach { i =>
-      append(o.filter(col("o_orderkey") >= i * q &&
-        col("o_orderkey") < (i + 1) * q), root, statsCols = Seq("o_orderkey"))
+  def updateGateQuery(spark: SparkSession, dir: String): DataFrame =
+    quarterDirsGate(spark, dir, "graft-updgate") { (root, maxO, _) =>
+      updateWhere(spark, root,
+        s"o_orderkey % 5 = 0 AND o_orderkey <= ${maxO / 2}",
+        Map("price" -> "price * 2"))
     }
-    updateWhere(spark, root,
-      s"o_orderkey % 5 = 0 AND o_orderkey <= ${maxO / 2}",
-      Map("price" -> "price * 2"),
-      Map("o_orderkey" -> (0L, maxO / 2)))
-    read(spark, root)
-  }
 
   private def bloomPath(rp: Path, dirName: String, colName: String): Path =
     new Path(rp, s"_bloom/$colName/${dirName.replace('/', '_')}.bf")
@@ -6928,8 +6944,7 @@ object TxTable {
           col("l_orderkey") <= bounds(i + 1)), root,
           statsCols = Seq("l_orderkey"))
       }
-      deleteWhere(spark, root, s"l_orderkey <= ${bounds(1)}",
-        pruneRanges = Map("l_orderkey" -> (1L, bounds(1))))
+      deleteWhere(spark, root, s"l_orderkey <= ${bounds(1)}")
       read(spark, root)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.graft.manifestRollover", v)

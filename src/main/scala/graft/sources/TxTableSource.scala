@@ -477,67 +477,61 @@ object TxTableSource {
       } else None
     }
 
-  /** String bounds implied by pushed filters, for string-stats dir
-    * pruning. Conservative: only equality/IN and complete AND-ed
-    * [lo, hi] boxes contribute (inequalities widen to inclusive
-    * bounds; Spark re-applies every filter above the scan). */
-  private[graft] def strRangesFromFilters(
-    filters: Array[Filter]): Map[String, (String, String)] = {
-    def strOf(v: Any): Option[String] = v match {
-      case x: String => Some(x)
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-      case _ => None
-    }
-    def boundsOf(f: Filter): Seq[(String, (Option[String], Option[String]))] =
+  /** Per-column bounds implied by Catalyst's pushed filters, for dir
+    * pruning, in the order `o`. Conservative by construction: only
+    * comparisons, equality, IN and AND of them contribute; everything
+    * else is ignored (Spark re-applies all filters above the scan
+    * anyway). A strict bound tightens by `above`/`below`, or drops
+    * when that has no answer. */
+  private def boundsFrom[T](filters: Array[Filter], valueOf: Any => Option[T],
+    above: T => Option[T], below: T => Option[T])(implicit o: Ordering[T])
+    : Map[String, (Option[T], Option[T])] = {
+    def boundsOf(f: Filter): Seq[(String, (Option[T], Option[T]))] =
       f match {
-        case EqualTo(a, v) => strOf(v).map(x => a -> (Some(x), Some(x))).toSeq
+        case EqualTo(a, v) => valueOf(v).map(x => a -> (Some(x), Some(x))).toSeq
         case GreaterThan(a, v) =>
-          strOf(v).map(x => a -> (Some(x), None)).toSeq
+          valueOf(v).flatMap(above).map(x => a -> (Some(x), None)).toSeq
         case GreaterThanOrEqual(a, v) =>
-          strOf(v).map(x => a -> (Some(x), None)).toSeq
-        case LessThan(a, v) => strOf(v).map(x => a -> (None, Some(x))).toSeq
+          valueOf(v).map(x => a -> (Some(x), None)).toSeq
+        case LessThan(a, v) =>
+          valueOf(v).flatMap(below).map(x => a -> (None, Some(x))).toSeq
         case LessThanOrEqual(a, v) =>
-          strOf(v).map(x => a -> (None, Some(x))).toSeq
-        case In(a, vs) if vs.nonEmpty =>
-          val ss = vs.toSeq.map(strOf)
-          if (ss.forall(_.isDefined)) {
-            val xs = ss.flatten.sortBy(hexKey)
-            Seq(a -> (Some(xs.head), Some(xs.last)))
-          } else Seq.empty
+          valueOf(v).map(x => a -> (None, Some(x))).toSeq
+        case In(a, vs) if vs.nonEmpty && vs.forall(valueOf(_).isDefined) =>
+          val xs = vs.toSeq.flatMap(valueOf)
+          Seq(a -> (Some(xs.min), Some(xs.max)))
         case And(l, r) => boundsOf(l) ++ boundsOf(r)
         case _ => Seq.empty
       }
-    filters.toSeq.flatMap(boundsOf)
-      .groupMapReduce(_._1)(_._2) { case ((lo1, hi1), (lo2, hi2)) =>
-        (maxByHex(lo1, lo2), minByHex(hi1, hi2))
-      }
-      .collect { case (c, (Some(lo), Some(hi))) => c -> (lo, hi) }
+    filters.toSeq.flatMap(boundsOf).groupMapReduce(_._1)(_._2) {
+      case ((lo1, hi1), (lo2, hi2)) =>
+        ((lo1 ++ lo2).maxOption, (hi1 ++ hi2).minOption)
+    }
   }
+
+  /** String bounds implied by pushed filters, for string-stats dir
+    * pruning: only complete [lo, hi] boxes contribute, and strict
+    * inequalities widen to inclusive bounds. */
+  private[graft] def strRangesFromFilters(
+    filters: Array[Filter]): Map[String, (String, String)] =
+    boundsFrom[String](filters, {
+      case x: String => Some(x)
+      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
+      case _ => None
+    }, Some(_), Some(_))(hexOrdering)
+      .collect { case (c, (Some(lo), Some(hi))) => c -> (lo, hi) }
 
   // string-range algebra in Spark's own ordering (unsigned UTF-8
   // bytes), not Java's UTF-16 compareTo — hex keys preserve it
   private[graft] def hexKey(x: String): String =
     x.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString
-  private def maxByHex(a: Option[String], b: Option[String]) = (a, b) match {
-    case (Some(x), Some(y)) => Some(if (hexKey(x) >= hexKey(y)) x else y)
-    case _ => a.orElse(b)
-  }
-  private def minByHex(a: Option[String], b: Option[String]) = (a, b) match {
-    case (Some(x), Some(y)) => Some(if (hexKey(x) <= hexKey(y)) x else y)
-    case _ => a.orElse(b)
-  }
-  private[graft] def strIntersect(a: (String, String),
-    b: (String, String)): (String, String) =
-    (maxByHex(Some(a._1), Some(b._1)).get,
-      minByHex(Some(a._2), Some(b._2)).get)
+  private[graft] val hexOrdering: Ordering[String] = Ordering.by(hexKey)
 
-  /** Integral bounds implied by Catalyst's pushed filters, for dir
-    * pruning. Conservative by construction: only shapes that imply a
-    * contiguous [lo, hi] on one column contribute; everything else is
-    * ignored (Spark re-applies all filters above the scan anyway). */
+  /** Integral bounds implied by pushed filters, for dir pruning: a
+    * one-sided bound extends to the Long range. */
   private[graft] def rangesFromFilters(
-    filters: Array[Filter]): Map[String, (Long, Long)] = {
-    def longOf(v: Any): Option[Long] = v match {
+    filters: Array[Filter]): Map[String, (Long, Long)] =
+    boundsFrom[Long](filters, {
       case l: Long => Some(l)
       case i: Int => Some(i.toLong)
       case s: Short => Some(s.toLong)
@@ -545,33 +539,13 @@ object TxTableSource {
       case i: java.lang.Integer => Some(i.toLong)
       case l: java.lang.Long => Some(l.longValue)
       case _ => None
+    }, x => Option.when(x < Long.MaxValue)(x + 1),
+      x => Option.when(x > Long.MinValue)(x - 1)).map { case (c, (lo, hi)) =>
+      c -> (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
     }
-    def boundsOf(f: Filter): Seq[(String, (Long, Long))] = f match {
-      case EqualTo(a, v) => longOf(v).map(x => a -> (x, x)).toSeq
-      case GreaterThan(a, v) => longOf(v).filter(_ < Long.MaxValue)
-        .map(x => a -> (x + 1, Long.MaxValue)).toSeq
-      case GreaterThanOrEqual(a, v) =>
-        longOf(v).map(x => a -> (x, Long.MaxValue)).toSeq
-      case LessThan(a, v) => longOf(v).filter(_ > Long.MinValue)
-        .map(x => a -> (Long.MinValue, x - 1)).toSeq
-      case LessThanOrEqual(a, v) =>
-        longOf(v).map(x => a -> (Long.MinValue, x)).toSeq
-      case In(a, vs) if vs.nonEmpty =>
-        val ls = vs.toSeq.map(longOf)
-        if (ls.forall(_.isDefined)) {
-          val xs = ls.flatten
-          Seq(a -> (xs.min, xs.max))
-        } else Seq.empty
-      case And(l, r) => boundsOf(l) ++ boundsOf(r)
-      case _ => Seq.empty
-    }
-    filters.toSeq.flatMap(boundsOf)
-      .groupMapReduce(_._1)(_._2)(intersect)
-  }
 
-  private[graft] def intersect(a: (Long, Long),
-    b: (Long, Long)): (Long, Long) =
-    (math.max(a._1, b._1), math.min(a._2, b._2))
+  private[graft] def intersect[T](a: (T, T), b: (T, T))(
+    implicit o: Ordering[T]): (T, T) = (o.max(a._1, b._1), o.min(a._2, b._2))
 
   /** Catalyst pushed filters → one parquet-mr `FilterPredicate` (the
     * public FilterCompat face), for the DSv2 scans that move rows
@@ -884,19 +858,15 @@ case class TxRelation(spark: SparkSession, root: String,
   // their range (no pruning AND no row filter)
   private def resolveCol(c: String): String =
     unprunedSchema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c)
-  private def colRangesOf(extra: Map[String, (Long, Long)]) = {
-    val base = (optRanges - "__keyRange__").map { case (c, r) =>
-      resolveCol(c) -> r
-    }
+  private def colRangesOf(extra: Map[String, (Long, Long)]) =
+    withOptions(optRanges - "__keyRange__", extra)
+  private def strRangesOf(extra: Map[String, (String, String)]) =
+    withOptions(strOptRanges, extra)(TxTableSource.hexOrdering)
+  private def withOptions[T](opts: Map[String, (T, T)],
+    extra: Map[String, (T, T)])(implicit o: Ordering[T]) = {
+    val base = opts.map { case (c, r) => resolveCol(c) -> r }
     base ++ extra.map { case (c, r) =>
-      c -> base.get(c).map(TxTableSource.intersect(_, r)).getOrElse(r)
-    }
-  }
-  private def strRangesOf(extra: Map[String, (String, String)]) = {
-    val base = strOptRanges.map { case (c, r) => resolveCol(c) -> r }
-    base ++ extra.map { case (c, r) =>
-      c -> base.get(c).map(TxTableSource.strIntersect(_, r)).getOrElse(r)
-    }
+      c -> base.get(c).fold(r)(TxTableSource.intersect(_, r)) }
   }
 
   private def resolvedVersion: Int = tsOpt match {
@@ -1118,7 +1088,7 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
   // stats ONLY — tuples decode from the clustered layout's own dir
   // tokens (TxTable.partitionTuples), zero data I/O at any size; DROP
   // PARTITION routes to deleteWhere's per-dir triage, which drops the
-  // matching single-valued dirs as pure metadata. Partitions are
+  // matching integral/string dirs as pure metadata. Partitions are
   // CONTENT-DEFINED here (a tuple exists iff data for it does), so
   // createPartition/replacePartitionMetadata refuse loudly. ----
 
@@ -1197,23 +1167,18 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
   }
 
   /** `ALTER TABLE t DROP PARTITION (c = v, ...)` → deleteWhere on the
-    * tuple equality: the per-dir triage drops the matching
-    * single-valued dirs as ONE metadata commit (no data rewrite), the
-    * partition-reload idiom's delete half. */
+    * tuple equality, the partition-reload idiom's delete half. The
+    * triage covers the matching single-valued, NULL-free integral or
+    * string partition dirs and drops them in ONE metadata commit,
+    * reading no rows; a DATE tuple's dirs are opened and dropped
+    * after one count each. */
   override def dropPartition(ident: InternalRow): Boolean = {
     val spark = SparkSession.active
     val ps = partitionSchema()
     if (!partitionExists(ident)) return false
     val pred = ps.fields.zipWithIndex.map { case (f, i) =>
-      val v = ident.get(i, f.dataType)
-      val sql = (f.dataType, v) match {
-        case (org.apache.spark.sql.types.StringType, u: UTF8String) =>
-          "'" + u.toString.replace("'", "''") + "'"
-        case (org.apache.spark.sql.types.DateType, d: Integer) =>
-          s"DATE '${java.time.LocalDate.ofEpochDay(d.longValue())}'"
-        case (_, x) => String.valueOf(x)
-      }
-      s"${f.name} = $sql"
+      s"${TxV2PredicateSql.quote(f.name)} = " + TxV2PredicateSql
+        .renderLit(ident.get(i, f.dataType), f.dataType).getOrElse("NULL")
     }.mkString(" AND ")
     TxTable.deleteWhere(spark, root, pred)
     true
@@ -1370,8 +1335,9 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
 
   /** Filter-expressible DELETE fast path (SupportsDeleteV2): Spark's
     * OptimizeMetadataOnlyDeleteFromTable hands the condition here when
-    * every conjunct translates, and [[TxTable.deleteWhere]] runs its
-    * per-dir triage — whole-dir drops and straddler rewrites, no
+    * every conjunct translates, and [[TxTable.deleteWhere]] triages
+    * its dirs from the commit stats — refuted dirs carry over,
+    * covered dirs drop as metadata, only the rest are read — with no
     * full-table ReplaceData job. Anything untranslatable keeps the
     * copy-on-write path above. */
   override def canDeleteWhere(predicates: Array[
@@ -1391,10 +1357,10 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
   }
 
   /** Literal `TRUNCATE TABLE t` (TruncatableTable, inherited via
-    * SupportsDeleteV2): delete-everything through the same per-dir
-    * triage as DELETE FROM — whole-dir drops, ONE metadata commit, no
-    * data rewrite; the pre-truncate snapshot stays time-travelable
-    * until vacuum's own horizon. */
+    * SupportsDeleteV2): `deleteWhere("TRUE")`, whose condition covers
+    * every dir — ONE metadata commit that reads no dir and leaves one
+    * zero-row schema dir; the pre-truncate snapshot stays
+    * time-travelable until vacuum's own horizon. */
   override def truncateTable(): Boolean = {
     dmlRefusal.foreach(r => throw new UnsupportedOperationException(
       s"graft-tx: TRUNCATE on a table declared with $r is not supported"))
@@ -1449,9 +1415,7 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
             .map(t => TxTable.versionAt(spark, root,
               TxTableSource.parseTs(t))))
         .getOrElse(-1)
-      val plan = TxTable.cowPlan(spark, root,
-        TxTableSource.rangesFromFilters(pushed),
-        TxTableSource.strRangesFromFilters(pushed), version)
+      val plan = TxTable.cowPlan(spark, root, pushed.toSeq, version)
       new TxCowScan(spark, plan, required, None)
     } else bucketSpec match {
       // a hash-bucketed table serves a REAL V2 scan that reports its

@@ -61,17 +61,16 @@ class Round12Spec extends SparkSpec {
 
   test("string-partition DELETE drops whole partitions as pure metadata") {
     // `DELETE WHERE day = '2026-08-02'` on a day-string-partitioned
-    // table: the partition dirs are single-valued with exact (h, h)
-    // string bounds, so the equality box CONTAINS them — rangesExact
-    // drops them from the snapshot without reading or writing a row
+    // table: the partition dirs are single-valued and NULL-free with
+    // exact (h, h) string bounds, so the equality covers the matching
+    // dir, which drops from the snapshot without reading or writing
+    // a row
     val root = tmpDir()
     val days = Seq("2026-08-01", "2026-08-02", "2026-08-03")
     val df = Seq.tabulate(90)(i => (i.toLong, days(i % 3)))
       .toDF("k", "day")
     TxTable.appendPartitioned(df, root, "day")
-    TxTable.deleteWhere(spark, root, "day = '2026-08-02'",
-      rangesExact = true,
-      strPruneRanges = Map("day" -> ("2026-08-02", "2026-08-02")))
+    TxTable.deleteWhere(spark, root, "day = '2026-08-02'")
     val left = TxTable.read(spark, root).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(left.length === 60 && left.forall(_._2 != "2026-08-02"))

@@ -25,4 +25,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-test").toString
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events asynchronously but in order, so a one-task marker job run
+    * after `body` drains it: once the marker's start event arrives,
+    * every job `body` started has been counted. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val markerKey = "graft.test.jobsDuringMarker"
+    val marker = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(markerKey) == marker))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(markerKey, marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(markerKey, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

@@ -84,18 +84,25 @@ class SqlDmlSpec extends SparkSpec {
       b.toSet
     }
     val before = dirFiles()
-    // k <= 100 refutes the 501..1000 dir via its k stats — COW must
-    // not rewrite it (force the COW path with an untranslatable tail
-    // conjunct that still yields a pushable k range... a plain
-    // translatable predicate exercises deleteWhere's identical triage)
+    def head(): String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_commits",
+        f"v${TxTable.latestVersion(spark, root)}%08d")), "UTF-8")
+    val secondEntry = "dir:(data/[^|\n]+)[^\n]*\\|k=501:1000".r
+      .findFirstMatchIn(head()).get.group(1)
+    // the predicate renderer has no `%`, so canDeleteWhere refuses
+    // and this DELETE takes the copy-on-write path; its scan's pushed
+    // `k <= 100` refutes the 501..1000 dir through its k stats, so
+    // the rewrite must not touch it
     spark.sql("DELETE FROM dml_prune WHERE k <= 100 AND k % 2 = 0")
     val after = dirFiles()
-    // the second dir's files must all survive byte-identical (same
-    // paths); the first dir was rewritten
+    // replaced data files stay on disk for time travel, so file paths
+    // cannot show which dirs were rewritten; the commit can
     val secondDir = before.filter(_.contains("append-")).toSeq.sorted
     assert(secondDir.nonEmpty)
     val survivors = before.intersect(after)
     assert(survivors.nonEmpty, "disjoint dir must not be rewritten")
+    assert(head().contains(s"dir:$secondEntry|"),
+      "the refuted dir's entry must carry into the new commit by name")
     assert(spark.table("dml_prune").count() === 950L)
     assert(spark.table("dml_prune")
       .filter("k <= 100 AND k % 2 = 0").count() === 0L)

@@ -644,21 +644,13 @@ class TxSourceSpec extends SparkSpec {
     }
     val files = fs.listStatus(staging).map(_.getPath.toString).toSeq
     assert(schema.fieldNames.toSeq === Seq("day", "k"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       TxTable.appendPartitionedStaged(spark, root, files, Seq("day"),
         batchId = 0L, statsCols = Seq("k"))
-      Thread.sleep(1000) // let any stray job-start events drain
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() === 0,
+    }
+    assert(jobs === 0,
       s"the rename-promote must be driver-side metadata only, " +
-        s"ran ${jobs.get()} jobs")
+        s"ran $jobs jobs")
     // and the footer-derived stats are the real write-side grammar:
     // metadata GROUP BY serves per-day counts with zero data I/O
     assert(TxTable.read(spark, root).count() === 3L)

@@ -1173,12 +1173,11 @@ class TxTableSpec extends SparkSpec {
     val dirOf = "dir:(data/[^|\n]+)".r.findAllMatchIn(before)
       .map(_.group(1)).toSeq
     assert(dirOf.length === 4)
-    // metadata-only: predicate IS the box covering dir 0
-    TxTable.deleteWhere(spark, root, "k <= 9",
-      Map("k" -> (0L, 9L)), rangesExact = true)
-    // straddling delete bounded to [10,19]: dir 1 rewrites, 2/3 prune
-    TxTable.deleteWhere(spark, root, "k % 2 = 0 AND k <= 19",
-      Map("k" -> (10L, 19L)))
+    // metadata-only: the predicate covers dir 0 (k in [0,9], no NULLs)
+    TxTable.deleteWhere(spark, root, "k <= 9")
+    // straddling delete bounded to k <= 19 (dir 0 is gone): dir 1
+    // rewrites, 2/3 prune
+    TxTable.deleteWhere(spark, root, "k % 2 = 0 AND k <= 19")
     val after = commitText(root, 6)
     assert(!after.contains(dirOf(0)), "contained dir must drop")
     assert(!after.contains(dirOf(1)), "straddling dir must be rewritten")
@@ -1222,7 +1221,7 @@ class TxTableSpec extends SparkSpec {
     assert(c2.contains("k=5:19"), s"observed k bounds must be exact: $c2")
     // a delete disjoint from the NEW box must carry the dir BY NAME —
     // only possible if the observed stats were recorded exactly
-    TxTable.deleteWhere(spark, root, "k >= 30", Map("k" -> (30L, 99L)))
+    TxTable.deleteWhere(spark, root, "k >= 30")
     assert(commitText(root, 3).contains(newDir))
     // update rewrite: SET moves v out of its old range; the observed
     // stats must describe the NEW values
@@ -1248,8 +1247,8 @@ class TxTableSpec extends SparkSpec {
       .map(_.group(1)).toSeq
     // swap a and b where k is even, bounded to dir 0's box: every SET
     // must read the OLD row or the swap degenerates to a copy
-    TxTable.updateWhere(spark, root, "k % 2 = 0",
-      Map("a" -> "b", "b" -> "a"), Map("k" -> (0L, 9L)))
+    TxTable.updateWhere(spark, root, "k % 2 = 0 AND k <= 9",
+      Map("a" -> "b", "b" -> "a"))
     val after = commitText(root, 3)
     assert(!after.contains(dirs(0)) && after.contains(dirs(1)))
     val rows = TxTable.read(spark, root).collect()
@@ -1279,12 +1278,11 @@ class TxTableSpec extends SparkSpec {
     assert(TxTable.read(spark, root).count() === 40)
     // the partition column survives in the files
     assert(TxTable.read(spark, root).select("p").distinct().count() === 4)
-    // partition-bounded delete with exact ranges: the p=2 dir drops
-    // from the snapshot without any rewrite (no new data dir appears)
+    // partition-bounded delete: `p = 2` covers the p=2 dir, which
+    // drops from the snapshot without any rewrite (no new data dir)
     val dirsBefore = "dir:(data/[^|\n]+)".r.findAllMatchIn(c1)
       .map(_.group(1)).toSet
-    TxTable.deleteWhere(spark, root, "p = 2",
-      Map("p" -> (2L, 2L)), rangesExact = true)
+    TxTable.deleteWhere(spark, root, "p = 2")
     val c2 = commitText(root, 2)
     val dirsAfter = "dir:(data/[^|\n]+)".r.findAllMatchIn(c2)
       .map(_.group(1)).toSet
@@ -1326,19 +1324,9 @@ class TxTableSpec extends SparkSpec {
     import spark.implicits._
     val root = tmpDir() + "/tx-part-onepass"
     val df = (0L until 2000L).map(k => (k % 50, k)).toDF("p", "k")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       TxTable.appendPartitioned(df, root, "p", statsCols = Seq("k"))
-      // the listener bus is async — wait until the count settles
-      var last = -1
-      while (jobs != last) { last = jobs; Thread.sleep(300) }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // one clustered write + one grouped stats pass (+ footer probes);
     // the per-value loop this replaced ran 50+ jobs here
     assert(jobs <= 6, s"appendPartitioned ran $jobs jobs for 50 partitions")
@@ -1584,8 +1572,7 @@ class TxTableSpec extends SparkSpec {
     val dirs = "dir:(data/[^|\n]+)".r.findAllMatchIn(before)
       .map(_.group(1)).toSeq
     assert(dirs.length === 3)
-    TxTable.deleteWhere(spark, root, "s >= 'm' AND s <= 'n'",
-      strPruneRanges = Map("s" -> ("m", "n")), rangesExact = true)
+    TxTable.deleteWhere(spark, root, "s >= 'm' AND s <= 'n'")
     val after = commitText(root, 4)
     assert(after.contains(dirs(0)) && after.contains(dirs(2)),
       "string-disjoint dirs must carry by name, unopened")
@@ -1653,8 +1640,7 @@ class TxTableSpec extends SparkSpec {
       // a bounded delete inside the FIRST manifest's key space: the
       // second manifest's block survives intact and must collapse
       // back to its include line, not re-list its entries
-      TxTable.deleteWhere(spark, root, "k = 15",
-        pruneRanges = Map("k" -> (15L, 15L)))
+      TxTable.deleteWhere(spark, root, "k = 15")
       val t9 = commitText(root, 9)
       assert(t9.contains(incs(1)),
         s"the untouched manifest must re-include:\n$t9")
@@ -1729,24 +1715,14 @@ class TxTableSpec extends SparkSpec {
       TxTable.append((0L until 50L).map(j => (j * 6 + i, s"g$i"))
         .toDF("id", "grp"), root)
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       assert(TxTable.buildBloomIndex(spark, root, "id") === 6)
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(500)
-      // every dir has a `_rows` commit stat, so sizing needs no count
-      // job: the whole build is ONE distributed pass (toLocalIterator
-      // may split it into a handful of partition-batched jobs, never
-      // one per dir — the old loop ran 12 serial jobs here)
-      assert(jobs.get() <= 3, s"bloom build ran ${jobs.get()} jobs for 6 dirs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // every dir has a `_rows` commit stat, so sizing needs no count
+    // job: the whole build is ONE distributed pass (toLocalIterator
+    // may split it into a handful of partition-batched jobs, never
+    // one per dir — the old loop ran 12 serial jobs here)
+    assert(jobs <= 3, s"bloom build ran $jobs jobs for 6 dirs")
     // the single-pass build prunes exactly like the per-dir one
     val (kept, total) = TxTable.bloomSurvivingDirs(spark, root, "id", Seq(13L))
     assert(total === 6 && kept.size <= 2)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The group-swap commit's OCC semantics, driven at the internal
@@ -40,7 +41,8 @@ class CowCommitSpec extends graft.SparkSpec {
     import spark.implicits._
     val root = mk("compose")
     // rewrite plan scoped to the FIRST dir (k <= 50 refutes dir 2)
-    val plan = TxTable.cowPlan(spark, root, Map("k" -> (1L, 10L)), Map.empty)
+    val plan = TxTable.cowPlan(spark, root,
+      Seq(GreaterThanOrEqual("k", 1L), LessThanOrEqual("k", 10L)))
     assert(plan.affectedDirs.size === 1)
     // a concurrent append lands a THIRD dir while the rewrite runs
     TxTable.append((101L to 110L).map(i => (i, s"c$i")).toDF("k", "s"),
@@ -58,7 +60,8 @@ class CowCommitSpec extends graft.SparkSpec {
 
   test("a concurrent change to an affected dir aborts loudly") {
     val root = mk("conflict")
-    val plan = TxTable.cowPlan(spark, root, Map("k" -> (1L, 10L)), Map.empty)
+    val plan = TxTable.cowPlan(spark, root,
+      Seq(GreaterThanOrEqual("k", 1L), LessThanOrEqual("k", 10L)))
     assert(plan.affectedDirs.size === 1)
     // the affected dir's entry line changes under the rewrite (a
     // delete rewrites dir 1)
@@ -82,7 +85,7 @@ class CowCommitSpec extends graft.SparkSpec {
   test("MoR commit aborts when a touched dir changed underneath") {
     import spark.implicits._
     val root = mk("mor-conflict")
-    val plan = TxTable.cowPlan(spark, root, Map.empty, Map.empty)
+    val plan = TxTable.cowPlan(spark, root, Seq.empty)
     // stage one delete coordinate against dir 1
     val d1 = plan.affectedDirs.head
     val f1 = new org.apache.hadoop.fs.Path(
