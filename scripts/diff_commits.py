@@ -1,0 +1,89 @@
+#!/usr/bin/env python3
+"""Compare the commit logs of two graft-tx table trees, line by line.
+
+    python3 scripts/diff_commits.py <rootA> <rootB>
+
+Each root is a table root or any directory holding table roots: every
+`_commits` dir under <rootA> is paired with the same relative path under
+<rootB>, and so is each `_commits/v<N>` file in it. Before comparing,
+`include:<manifest>` lines are expanded into the manifest's entry lines
+(the path is relative to the table root), and UUIDs become `<uuid>`, so
+two runs of the same writes compare equal however their dirs were named
+and their entries packed. An entry's `pd:` sidecar segments are written
+sorted by sidecar name, i.e. by UUID, so they compare as a sorted set.
+Prints a unified diff per differing pair and exits 1 on any difference
+(including a table or version present on one side only), 0 otherwise.
+"""
+import difflib
+import os
+import re
+import sys
+
+UUID = re.compile(
+    r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+VERSION = re.compile(r"v\d+")
+
+
+def commit_dirs(root):
+    """Relative paths of every `_commits` dir under `root`."""
+    out = set()
+    for d, subdirs, _ in os.walk(root):
+        if "_commits" in subdirs:
+            out.add(os.path.relpath(os.path.join(d, "_commits"), root))
+    return out
+
+
+def versions(commits):
+    return {f for f in os.listdir(commits) if VERSION.fullmatch(f)}
+
+
+def normalize(line):
+    line = UUID.sub("<uuid>", line)
+    if not line.startswith(("dir:", "delta:")):
+        return line
+    segs = line.split("|")
+    pds = sorted(s for s in segs if s.startswith("pd:"))
+    return "|".join([s for s in segs if not s.startswith("pd:")] + pds)
+
+
+def lines_of(table_root, commit_file):
+    """A commit's lines, manifests expanded and UUIDs normalized."""
+    out = []
+    with open(commit_file, encoding="utf-8") as f:
+        for line in f.read().split("\n"):
+            if line.startswith("include:"):
+                with open(os.path.join(table_root, line[len("include:"):]),
+                          encoding="utf-8") as m:
+                    out.extend(l for l in m.read().split("\n") if l)
+            else:
+                out.append(line)
+    return [normalize(l) for l in out]
+
+
+def main(root_a, root_b):
+    differ = False
+    dirs_a, dirs_b = commit_dirs(root_a), commit_dirs(root_b)
+    for rel in sorted(dirs_a ^ dirs_b):
+        print(f"only under {root_a if rel in dirs_a else root_b}: {rel}")
+        differ = True
+    for rel in sorted(dirs_a & dirs_b):
+        ca, cb = os.path.join(root_a, rel), os.path.join(root_b, rel)
+        va, vb = versions(ca), versions(cb)
+        for v in sorted(va ^ vb):
+            print(f"only under {ca if v in va else cb}: {v}")
+            differ = True
+        for v in sorted(va & vb):
+            a = lines_of(os.path.dirname(ca), os.path.join(ca, v))
+            b = lines_of(os.path.dirname(cb), os.path.join(cb, v))
+            diff = list(difflib.unified_diff(
+                a, b, os.path.join(ca, v), os.path.join(cb, v), lineterm=""))
+            if diff:
+                print("\n".join(diff))
+                differ = True
+    return 1 if differ else 0
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    sys.exit(main(sys.argv[1], sys.argv[2]))

@@ -46,7 +46,8 @@ import org.apache.spark.util.SerializableConfiguration
   * Plain translatable DELETEs never reach this path: the catalog
   * table also implements SupportsDeleteV2, and Spark's
   * OptimizeMetadataOnlyDeleteFromTable routes them to
-  * [[TxTable.deleteWhere]] (whole-dir drops + per-dir rewrites, no
+  * [[TxTable.deleteWhere]] (whole-dir drops, then per-dir rewrites —
+  * or sidecars under `spark.graft.dml.positional` — with no
   * full-table job).
   *
   * Reference analog: the warehouse rewrote partitions in place via
@@ -90,6 +91,13 @@ class GraftRowLevelOperation(root: String, logicalSchema: StructType,
   }
 
   override def command(): Command = cmd
+
+  /** The commit's op name. */
+  private[sources] def opName: String = cmd match {
+    case Command.DELETE => "sqldelete"
+    case Command.UPDATE => "sqlupdate"
+    case _ => "sqlmerge"
+  }
 
   /** The source-dir metadata column. Declaring a required metadata
     * attribute is what routes execution through Spark's
@@ -335,9 +343,7 @@ class TxCowPartitionReader(file: String, pdelFiles: Seq[String],
   * [[TxTable.cowCommit]]). Rows arrive in the table's LOGICAL schema
   * and stage under the PHYSICAL names, like every other write path. */
 class TxCowBatchWrite(root: String, op: GraftRowLevelOperation,
-  info: LogicalWriteInfo) extends BatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
+  info: LogicalWriteInfo) extends TxStagedBatchWrite(root) {
 
   // the plan the commit swaps = scanned plan minus runtime-pruned dirs
   private def planOf: TxTable.CowPlan = op.effectivePlan
@@ -347,43 +353,51 @@ class TxCowBatchWrite(root: String, op: GraftRowLevelOperation,
     val plan = planOf
     val fileSchema = StructType(info.schema().fields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
-    TxCowWriterFactory(root, writeId, fileSchema,
+    TxCowWriterFactory(stagingDir, fileSchema,
       new SerializableConfiguration(
         SparkSession.active.sessionState.newHadoopConf()))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect {
-      case TxCommitMessage(p, _) if p != null => p
-    }.toSeq
-    val spark = SparkSession.active
-    val opName = op.command() match {
-      case Command.DELETE => "sqldelete"
-      case Command.UPDATE => "sqlupdate"
-      case _ => "sqlmerge"
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitStaged { spark =>
+      TxTable.cowCommit(spark, root, planOf, messages.collect {
+        case TxCommitMessage(p, _) if p != null => p
+      }.toSeq, op.opName)
     }
-    try TxTable.cowCommit(spark, root, planOf, staged, opName)
-    finally cleanupStaging(spark)
+}
+
+/** A batch write whose tasks stage files under [[stagingDir]]: the
+  * driver commit and an abort both delete that dir, whatever the
+  * commit did. */
+abstract class TxStagedBatchWrite(root: String) extends BatchWrite {
+
+  protected val stagingDir: String =
+    s"$root/_staging/sqldml-${java.util.UUID.randomUUID()}"
+
+  protected def commitStaged(commit: SparkSession => Any): Unit = {
+    val spark = SparkSession.active
+    try commit(spark) finally cleanupStaging(spark)
+    ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     cleanupStaging(SparkSession.active)
 
   private def cleanupStaging(spark: SparkSession): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_staging/sqldml-$writeId")
+    val p = new org.apache.hadoop.fs.Path(stagingDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
     ()
   }
 }
 
-case class TxCowWriterFactory(root: String, writeId: String,
-  schema: StructType, conf: SerializableConfiguration)
+case class TxCowWriterFactory(stagingDir: String, schema: StructType,
+  conf: SerializableConfiguration)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int,
     taskId: Long): DataWriter[InternalRow] =
     new TxDataWriter(new org.apache.hadoop.fs.Path(
-      s"$root/_staging/sqldml-$writeId/part-$partitionId-$taskId.parquet"),
+      s"$stagingDir/part-$partitionId-$taskId.parquet"),
       schema, conf)
 }
 
@@ -433,10 +447,8 @@ class GraftDeltaOperation(root: String, logicalSchema: StructType,
   * one insert dir in a single OCC commit
   * ([[TxTable.deltaDmlCommit]]). */
 class TxDeltaBatchWrite(root: String, op: GraftRowLevelOperation,
-  info: LogicalWriteInfo)
-  extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
+  info: LogicalWriteInfo) extends TxStagedBatchWrite(root)
+  with org.apache.spark.sql.connector.write.DeltaBatchWrite {
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
     : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
@@ -444,46 +456,30 @@ class TxDeltaBatchWrite(root: String, op: GraftRowLevelOperation,
     val plan = op.effectivePlan
     val fileSchema = StructType(info.schema().fields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
-    TxDeltaWriterFactory(root, writeId, fileSchema,
+    TxDeltaWriterFactory(stagingDir, fileSchema,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: TxDeltaCommitMessage => m }
-    val spark = SparkSession.active
-    val opName = op.command() match {
-      case Command.DELETE => "sqldelete"
-      case Command.UPDATE => "sqlupdate"
-      case _ => "sqlmerge"
+    commitStaged { spark =>
+      TxTable.deltaDmlCommit(spark, root, op.effectivePlan,
+        msgs.flatMap(_.insertFile).toSeq, msgs.flatMap(_.deleteFile).toSeq,
+        op.opName)
     }
-    try TxTable.deltaDmlCommit(spark, root, op.effectivePlan,
-      msgs.flatMap(_.insertFile).toSeq, msgs.flatMap(_.deleteFile).toSeq,
-      opName)
-    finally cleanupStaging(spark)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(SparkSession.active)
-
-  private def cleanupStaging(spark: SparkSession): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_staging/sqldml-$writeId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    ()
   }
 }
 
 case class TxDeltaCommitMessage(insertFile: Option[String],
   deleteFile: Option[String]) extends WriterCommitMessage
 
-case class TxDeltaWriterFactory(root: String, writeId: String,
-  insertSchema: StructType, conf: SerializableConfiguration)
+case class TxDeltaWriterFactory(stagingDir: String, insertSchema: StructType,
+  conf: SerializableConfiguration)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
     : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new TxDeltaWriter(
-      s"$root/_staging/sqldml-$writeId/part-$partitionId-$taskId",
-      insertSchema, conf)
+      s"$stagingDir/part-$partitionId-$taskId", insertSchema, conf)
 }
 
 /** One task's delta stream: inserts go to `<prefix>-ins.parquet`
@@ -677,9 +673,7 @@ object TxCatalogWriteBuilder {
 class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
   replace: Boolean, bootstrapStats: Seq[String] = Seq.empty,
   bucketSpec: Option[(String, Int)] = None)
-  extends BatchWrite {
-
-  private val writeId = java.util.UUID.randomUUID().toString
+  extends TxStagedBatchWrite(root) {
 
   override def createBatchWriterFactory(
     pinfo: PhysicalWriteInfo): DataWriterFactory = {
@@ -694,29 +688,16 @@ class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
         StructType(info.schema().fields.map(f =>
           f.copy(name = TxTable.physNameOf(m, f.name))))
       }
-    TxCowWriterFactory(root, writeId, fileSchema,
+    TxCowWriterFactory(stagingDir, fileSchema,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect {
-      case TxCommitMessage(p, _) if p != null => p
-    }.toSeq
-    val spark = SparkSession.active
-    try TxTable.appendStaged(spark, root, staged, replace, info.schema(),
-      bootstrapStats, bucketSpec)
-    finally cleanupStaging(spark)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(SparkSession.active)
-
-  private def cleanupStaging(spark: SparkSession): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_staging/sqldml-$writeId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    ()
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitStaged { spark =>
+      TxTable.appendStaged(spark, root, messages.collect {
+        case TxCommitMessage(p, _) if p != null => p
+      }.toSeq, replace, info.schema(), bootstrapStats, bucketSpec)
+    }
 }
 
 /** The PARTITIONED batch write: clustered+sorted input (the Write's
@@ -731,9 +712,8 @@ class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
 class TxCatalogPartBatchWrite(root: String, info: LogicalWriteInfo,
   partCols: Seq[String], mode: String, filterSql: Option[String],
   bootstrapStats: Seq[String] = Seq.empty)
-  extends BatchWrite {
+  extends TxStagedBatchWrite(root) {
 
-  private val writeId = java.util.UUID.randomUUID().toString
   // partition-column types checked ONCE, loudly, before any task runs
   partCols.foreach { c =>
     require(info.schema().fieldNames.contains(c),
@@ -762,51 +742,38 @@ class TxCatalogPartBatchWrite(root: String, info: LogicalWriteInfo,
     pinfo: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
     val (fileSchema, physParts) = physSchemaAndParts(spark)
-    TxBatchPartWriterFactory(root, writeId, fileSchema, physParts,
+    TxBatchPartWriterFactory(stagingDir, fileSchema, physParts,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val staged = messages.collect {
-      case TxPartCommitMessage(fl, n) if n > 0 => fl
-    }.flatten.toSeq
-    staged.foreach { f =>
-      require(f.partVals.forall(_.isDefined),
-        s"graft-tx: partition column(s) (${partCols.mkString(", ")}) " +
-          "contain NULLs — partitioned writes need a total partition " +
-          "assignment; coalesce NULLs to a sentinel value first")
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitStaged { spark =>
+      val staged = messages.collect {
+        case TxPartCommitMessage(fl, n) if n > 0 => fl
+      }.flatten.toSeq
+      staged.foreach { f =>
+        require(f.partVals.forall(_.isDefined),
+          s"graft-tx: partition column(s) (${partCols.mkString(", ")}) " +
+            "contain NULLs — partitioned writes need a total partition " +
+            "assignment; coalesce NULLs to a sentinel value first")
+      }
+      val partSchema = StructType(partCols.map(c => info.schema()(c)))
+      val (fileSchema, _) = physSchemaAndParts(spark)
+      val m = TxTable.colMapOf(spark, root)
+      TxTable.commitPartitionedSql(spark, root,
+        staged.map(f => f.path -> f.partVals.map(_.get)), partCols, mode,
+        filterSql, partSchema, fileSchema,
+        bootstrapStats.map(TxTable.physNameOf(m, _)))
     }
-    val partSchema = StructType(partCols.map(c => info.schema()(c)))
-    val (fileSchema, _) = physSchemaAndParts(spark)
-    val m = TxTable.colMapOf(spark, root)
-    try TxTable.commitPartitionedSql(spark, root,
-      staged.map(f => f.path -> f.partVals.map(_.get)), partCols, mode,
-      filterSql, partSchema, fileSchema,
-      bootstrapStats.map(TxTable.physNameOf(m, _)))
-    finally cleanupStaging(spark)
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    cleanupStaging(SparkSession.active)
-
-  private def cleanupStaging(spark: SparkSession): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_staging/sqldml-$writeId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    ()
-  }
 }
 
-case class TxBatchPartWriterFactory(root: String, writeId: String,
-  schema: StructType, physParts: Seq[String],
+case class TxBatchPartWriterFactory(stagingDir: String, schema: StructType,
+  physParts: Seq[String],
   conf: SerializableConfiguration) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
     taskId: Long): DataWriter[InternalRow] =
     new TxPartitionedDataWriter(
-      s"$root/_staging/sqldml-$writeId/part-$partitionId-$taskId",
-      schema, physParts, conf)
+      s"$stagingDir/part-$partitionId-$taskId", schema, physParts, conf)
 }
 
 /** Conservative V2-Predicate → Spark-SQL-text renderer, the bridge

@@ -2659,78 +2659,149 @@ object TxTable {
         c.phys -> c.internalDefault }.toMap)
   }
 
-  /** Commit a group-based rewrite: swap `plan`'s affected dirs for
-    * the staged files, atomically. The staged files move into ONE new
-    * data dir (stats recomputed over it); unaffected entry lines
-    * carry over from the CURRENT head — a concurrent commit that only
-    * touched other dirs composes fine, but one that changed or
-    * removed an affected dir's line aborts loudly: the scanned rows
-    * no longer describe the table, and retrying would need a re-scan
-    * the write cannot perform. Mirrors `deleteWhere`'s empty-table
-    * guard: a rewrite that leaves no entries keeps one zero-row dir
-    * so the table stays readable. */
+  /** A row-level DML statement's verdict on one dir it read. */
+  private sealed trait DirOutcome
+  private case object Carry extends DirOutcome
+  private case object Drop extends DirOutcome
+  private final case class Replace(line: String) extends DirOutcome
+  /** Attach the dir's new sidecar `name`, holding `n` dead positions. */
+  private final case class Pdel(name: String, n: Long) extends DirOutcome
+
+  /** One claim attempt of a row-level DML statement: the outcome of
+    * each entry line it read, the lines of new dirs (rewrites, inserts)
+    * appended after the head's entries, and the `key:`/`statscol:`
+    * headers it re-declares. */
+  private final case class DirSwap(read: Map[String, DirOutcome],
+    added: Seq[String], keys: Seq[String], statsCols: Seq[String])
+
+  /** THE commit of every row-level DML face (Scala delete in both
+    * modes and update; SQL copy-on-write and merge-on-read), on one
+    * [[commitRetry]] claim. `prepare` runs once, staging through the
+    * function it gets (root-relative paths) what every attempt reuses,
+    * and returns the attempt, which maps the head (version, entries) to
+    * a [[DirSwap]]; what an attempt stages is deleted when it loses the
+    * claim, and everything staged when the commit aborts. An attempt
+    * aborts (ConcurrentModificationException) when a read line is gone
+    * from the head — its rows or positions no longer describe the
+    * table — applies each read dir's outcome in place, appends the new
+    * dirs, and keeps one zero-row dir when no entry remains (an empty
+    * snapshot has no schema to read back). A sidecar's dead rows leave
+    * `_rows`; more of them than `_rows` means the entry is wrong, and
+    * dropping the dir on equality could then lose live rows. */
+  private def swapCommit(spark: SparkSession, root: String, op: String)(
+    prepare: (String => String) => (Int, Seq[Entry]) => DirSwap): Int = {
+    val (fs, rp) = fsFor(spark, root)
+    var prepared, attempt = Vector.empty[String]
+    var claiming = false
+    val stage = (p: String) => {
+      if (claiming) attempt :+= p else prepared :+= p
+      p
+    }
+    def delete(ps: Seq[String]): Unit =
+      ps.foreach(p => fs.delete(new Path(rp, p), true))
+    // sidecars of dirs whose rows all died: unreferenced once committed
+    var emptied = Seq.empty[String]
+    try {
+      val plan = prepare(stage)
+      claiming = true
+      val v = commitRetry(spark, root) { prevV =>
+        delete(attempt)
+        attempt = Vector.empty
+        emptied = Seq.empty
+        val entries = snapshotEntries(fs, rp, prevV)
+        val swap = plan(prevV, entries)
+        val present = entries.map(_.line).toSet
+        val gone = swap.read.keys.filterNot(present).toSeq
+        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
+          s"txtable: $op of $root lost its snapshot — ${gone.size} dir(s) " +
+            "being rewritten or receiving deletes changed under the " +
+            s"statement (e.g. ${gone.head.take(80)}); re-run it")
+        val lines = entries.flatMap { e =>
+          swap.read.getOrElse(e.line, Carry) match {
+            case Carry => Some(e.line)
+            case Drop => None
+            case Replace(l) => Some(l)
+            case Pdel(name, n) =>
+              val nAll = e.stats.get(rowsKey).map(_._1)
+                .getOrElse(visibleDirFrame(spark, rp, e).count())
+              if (n > nAll) throw new IllegalStateException(
+                s"txtable: $op matched $n rows in ${e.dir} for positional " +
+                  s"deletion, whose entry records only $nAll live rows - " +
+                  "refusing to commit over inconsistent dir metadata")
+              if (n == nAll) { emptied :+= s"${e.dir}/$name"; None }
+              else Some(e.copy(
+                stats = e.stats + (rowsKey -> (nAll - n, nAll - n)),
+                pdels = e.pdels + (name -> n)).line)
+          }
+        } ++ swap.added
+        // every entry was read and dropped: the first one's footer
+        // schema keeps the table readable
+        val kept =
+          if (lines.nonEmpty) lines
+          else {
+            val src = entries.head.dir
+            val d = writeEmptyDir(spark, rp,
+              stage(s"data/$op-${java.util.UUID.randomUUID()}"),
+              dirSparkSchemas(spark, rp, Seq(src))(src))
+            Seq(statsEntry(spark, rp, d, swap.keys ++ swap.statsCols).line)
+          }
+        (op,
+          (if (swap.keys.nonEmpty) Seq(s"key:${swap.keys.mkString(",")}")
+           else Seq.empty) ++
+            (if (swap.statsCols.nonEmpty)
+              Seq(s"statscol:${swap.statsCols.mkString(",")}")
+             else Seq.empty) ++ kept)
+      }
+      delete(emptied)
+      v
+    } catch {
+      case e: Throwable =>
+        delete(prepared ++ attempt)
+        throw e
+    }
+  }
+
+  /** Move executor-staged files into a new `data/<op>-<uuid>` dir;
+    * returns its name. */
+  private def promoteStaged(fs: FileSystem, rp: Path, op: String,
+    staged: Seq[String]): String = {
+    val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
+    val dirPath = new Path(rp, dirName)
+    fs.mkdirs(dirPath)
+    staged.foreach { f =>
+      val src = new Path(f)
+      require(fs.rename(src, new Path(dirPath, src.getName)),
+        s"txtable: failed to stage $f into $dirName")
+    }
+    dirName
+  }
+
+  /** Write dir `dirName` as one zero-row parquet file carrying
+    * `schema` — no Spark job; returns `dirName`. */
+  private def writeEmptyDir(spark: SparkSession, rp: Path, dirName: String,
+    schema: org.apache.spark.sql.types.StructType): String = {
+    TxParquetIO.writer(new Path(new Path(rp, dirName), "part-empty.parquet"),
+      schema, spark.sessionState.newHadoopConf()).close()
+    dirName
+  }
+
+  /** Commit a group-based rewrite: swap `plan`'s affected dirs for ONE
+    * new data dir holding the staged files (stats computed over it).
+    * Unaffected entry lines carry over from the CURRENT head — a
+    * concurrent commit that only touched other dirs composes fine, but
+    * one that changed or removed an affected dir's line aborts loudly
+    * ([[swapCommit]]). */
   private[sources] def cowCommit(spark: SparkSession, root: String,
     plan: CowPlan, staged: Seq[String], op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
-    val affectedSet = plan.affectedLines.toSet
-    // move staged parquet into the table's data area ONCE (the entry
-    // is computed over the final dir; commit retries reuse it)
-    var ownedDirs: Seq[String] = Seq.empty
-    val newLine: Option[String] =
-      if (staged.isEmpty) None
-      else {
-        val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
-        val dirPath = new Path(rp, dirName)
-        fs.mkdirs(dirPath)
-        staged.foreach { f =>
-          val src = new Path(f)
-          require(fs.rename(src, new Path(dirPath, src.getName)),
-            s"txtable: failed to stage $f into $dirName")
-        }
-        ownedDirs = ownedDirs :+ dirName
-        Some(statsEntry(spark, rp, dirName,
+    swapCommit(spark, root, op) { stage =>
+      val added =
+        if (staged.isEmpty) Seq.empty
+        else Seq(statsEntry(spark, rp, stage(promoteStaged(fs, rp, op, staged)),
           plan.keys ++ plan.statsCols).line)
-      }
-    val movedDirs = ownedDirs // survive retries; guard dirs don't
-    try commitRetry(spark, root) { prevV =>
-      // a lost race re-runs this closure: drop the prior attempt's
-      // empty-table guard dir (if any) — the new attempt re-decides
-      ownedDirs.filterNot(movedDirs.contains)
-        .foreach(d => fs.delete(new Path(rp, d), true))
-      ownedDirs = movedDirs
-      val entries = snapshotEntries(fs, rp, prevV)
-      val present = entries.map(_.line).toSet
-      val gone = plan.affectedLines.filterNot(present)
-      if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"txtable: $op of $root lost its snapshot — ${gone.size} scanned " +
-          s"dir(s) changed under the rewrite (e.g. ${gone.head.take(80)}); " +
-          "re-run the statement")
-      val kept = entries.filterNot(e => affectedSet(e.line)).map(_.line)
-      val lines =
-        if (kept.nonEmpty || newLine.nonEmpty) kept ++ newLine.toSeq
-        else {
-          // all rows gone: keep a readable zero-row schema dir
-          val schemaSrc = spark.read.parquet(
-            new Path(rp, plan.affectedDirs.head).toString)
-          val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
-          schemaSrc.filter(lit(false)).write.mode("overwrite")
-            .parquet(new Path(rp, dirName).toString)
-          ownedDirs = ownedDirs :+ dirName
-          Seq(statsEntry(spark, rp, dirName,
-            plan.keys ++ plan.statsCols).line)
-        }
-      (op,
-        (if (plan.keys.nonEmpty) Seq(s"key:${plan.keys.mkString(",")}")
-         else Seq.empty) ++
-          (if (plan.statsCols.nonEmpty)
-            Seq(s"statscol:${plan.statsCols.mkString(",")}")
-           else Seq.empty) ++ lines)
-    } catch {
-      case e: Throwable =>
-        // an aborted commit leaves the moved dirs unreferenced — drop
-        // them instead of leaking until vacuum's orphan sweep
-        ownedDirs.foreach(d => fs.delete(new Path(rp, d), true))
-        throw e
+      val swap = DirSwap(plan.affectedLines.map(_ -> Drop).toMap, added,
+        plan.keys, plan.statsCols)
+      (_, _) => swap
     }
   }
 
@@ -2786,20 +2857,11 @@ object TxTable {
           replace = replace)
       case _ => ()
     }
-    val op = if (replace) "overwrite" else "append"
-    val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
+    val dirName = promoteStaged(fs, rp,
+      if (replace) "overwrite" else "append", staged)
     val dirPath = new Path(rp, dirName)
-    fs.mkdirs(dirPath)
-    staged.foreach { f =>
-      val src = new Path(f)
-      require(fs.rename(src, new Path(dirPath, src.getName)),
-        s"txtable: failed to stage $f into $dirName")
-    }
-    if (staged.isEmpty) {
-      // empty INSERT OVERWRITE: a zero-row file carries the schema
-      TxParquetIO.writer(new Path(dirPath, "part-empty.parquet"),
-        writeSchema, spark.sessionState.newHadoopConf()).close()
-    }
+    // empty INSERT OVERWRITE: a zero-row file carries the schema
+    if (staged.isEmpty) writeEmptyDir(spark, rp, dirName, writeSchema)
     try commitRetry(spark, root) { prevV =>
       // a table's FIRST content (bootstrap INSERT, or replace-all)
       // declares its stats columns: write-time per-dir stats are what
@@ -2841,152 +2903,103 @@ object TxTable {
 
   /** Commit a MERGE-ON-READ row-level rewrite: the staged delete
     * coordinates (_dir, _file, _pos) land as one `_pdel` positional
-    * sidecar per touched dir — the exact grammar
-    * `deleteWhere(positional = true)` writes, `_rows` adjusted the
-    * same way — and the staged inserts as one new data dir. O(changed)
-    * bytes, never O(dir). Only dirs that actually RECEIVE deletes are
-    * verified byte-identical against the scanned plan at claim time
-    * (positions are meaningless against a rewritten dir); concurrent
-    * commits elsewhere compose. Scanned rows were already
-    * sidecar-folded, so a coordinate can never double-kill and the
-    * `_rows` subtraction stays exact. */
+    * sidecar per touched dir ([[writePdels]], the sidecars
+    * `deleteWhere(positional = true)` writes) and the staged inserts as
+    * one new data dir. O(changed) bytes, never O(dir). Only dirs that
+    * actually RECEIVE deletes are verified against the scanned plan at
+    * claim time (positions are meaningless against a rewritten dir);
+    * concurrent commits elsewhere compose. Scanned rows were already
+    * sidecar-folded, so a coordinate can never double-kill. */
   private[sources] def deltaDmlCommit(spark: SparkSession, root: String,
     plan: CowPlan, stagedInserts: Seq[String], stagedDeletes: Seq[String],
     op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
-    var ownedDirs: Seq[String] = Seq.empty
-    var ownedSidecars: Seq[Path] = Seq.empty
-    def cleanup(): Unit = {
-      ownedDirs.foreach(d => fs.delete(new Path(rp, d), true))
-      ownedSidecars.foreach(p => fs.delete(p, true))
-    }
-    try {
-      val insertLine: Option[String] =
-        if (stagedInserts.isEmpty) None
-        else {
-          val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
-          val dirPath = new Path(rp, dirName)
-          fs.mkdirs(dirPath)
-          stagedInserts.foreach { f =>
-            val src = new Path(f)
-            require(fs.rename(src, new Path(dirPath, src.getName)),
-              s"txtable: failed to stage $f into $dirName")
-          }
-          ownedDirs = ownedDirs :+ dirName
-          Some(statsEntry(spark, rp, dirName,
-            plan.keys ++ plan.statsCols).line)
-        }
-      // delete coordinates grouped per dir, written ONCE as in-dir
-      // sidecars (tiny by construction — O(changed rows)); dedup
-      // guards the _rows subtraction against any double-fired
-      // coordinate
-      val touched: Map[String, (String, Long)] =
-        if (stagedDeletes.isEmpty) Map.empty
-        else {
-          // ONE job whatever the dir count: coordinates cluster by
-          // dir (hash repartition = all of a dir's rows in one task)
-          // and each task streams its dirs' pairs straight into in-dir
-          // sidecar files through TxParquetIO — a scattered delete
-          // touching 10^4 dirs costs one shuffle of O(changed)
-          // coordinate rows, not 10^4 driver jobs
-          val conf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
-          val rootStr = rp.toString
-          import spark.implicits._
-          val written = spark.read.parquet(stagedDeletes: _*)
-            .dropDuplicates("_dir", "_file", "_pos")
-            .repartition(col("_dir"))
-            .mapPartitions { rows =>
-              val out = scala.collection.mutable.Map[String,
-                (String, org.apache.parquet.hadoop.ParquetWriter[
-                  org.apache.spark.sql.catalyst.InternalRow], Array[Long])]()
-              val pdSchema = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("_file",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("_pos",
-                  org.apache.spark.sql.types.LongType)))
-              rows.foreach { r =>
-                val d = r.getString(0)
-                val (_, w, n) = out.getOrElseUpdate(d, {
-                  val name = s"_pdel-${java.util.UUID.randomUUID()}"
-                  val p = new Path(new Path(new Path(rootStr), d), name)
-                  (name, TxParquetIO.writer(
-                    new Path(p, "part-0.parquet"), pdSchema, conf.value),
-                    Array(0L))
-                })
-                w.write(org.apache.spark.sql.catalyst.InternalRow(
-                  org.apache.spark.unsafe.types.UTF8String
-                    .fromString(r.getString(1)), r.getLong(2)))
-                n(0) += 1
-              }
-              out.iterator.map { case (d, (name, w, n)) =>
-                w.close(); (d, name, n(0))
-              }
-            }.collect().toSeq
-          written.foreach { case (d, name, _) =>
-            ownedSidecars = ownedSidecars :+
-              new Path(new Path(rp, d), name)
-          }
-          written.map { case (d, name, n) => d -> (name, n) }.toMap
-        }
+    swapCommit(spark, root, op) { stage =>
+      val inserted =
+        if (stagedInserts.isEmpty) Seq.empty
+        else Seq(statsEntry(spark, rp,
+          stage(promoteStaged(fs, rp, op, stagedInserts)),
+          plan.keys ++ plan.statsCols).line)
+      val dead =
+        if (stagedDeletes.isEmpty) Map.empty[String, Pdel]
+        else writePdels(spark, rp, spark.read.parquet(stagedDeletes: _*),
+          stage)
       val lineOf = plan.affectedDirs.zip(plan.affectedLines).toMap
-      commitRetry(spark, root) { prevV =>
-        val entries = snapshotEntries(fs, rp, prevV)
-        val present = entries.map(_.line).toSet
-        val gone = touched.keys.filter(d =>
-          !lineOf.get(d).exists(present.contains)).toSeq
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"txtable: $op of $root lost its snapshot — " +
-              s"${gone.size} dir(s) receiving deletes changed under " +
-              s"the rewrite (e.g. ${gone.head}); re-run the statement")
-        val newLines = entries.flatMap { e =>
-          touched.get(e.dir) match {
-            case None => Some(e.line)
-            case Some((name, n)) =>
-              val nAll = e.stats.get(rowsKey).map(_._1).getOrElse {
-                applyPdels(spark, rp, e, readDirFrame(spark, rp, e.dir))
-                  .count()
-              }
-              if (n == nAll) None // every visible row died with this commit
-              else Some(e.copy(
-                stats = e.stats + (rowsKey -> (nAll - n, nAll - n)),
-                pdels = e.pdels + (name -> n)).line)
-          }
-        } ++ insertLine.toSeq
-        val lines =
-          if (newLines.nonEmpty) newLines
-          else {
-            val schemaSrc = spark.read.parquet(
-              new Path(rp, plan.affectedDirs.head).toString)
-            val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
-            schemaSrc.filter(lit(false)).write.mode("overwrite")
-              .parquet(new Path(rp, dirName).toString)
-            ownedDirs = ownedDirs :+ dirName
-            Seq(statsEntry(spark, rp, dirName,
-              plan.keys ++ plan.statsCols).line)
-          }
-        (op,
-          (if (plan.keys.nonEmpty) Seq(s"key:${plan.keys.mkString(",")}")
-           else Seq.empty) ++
-            (if (plan.statsCols.nonEmpty)
-              Seq(s"statscol:${plan.statsCols.mkString(",")}")
-             else Seq.empty) ++ lines)
-      } match {
-        case v =>
-          // a fully-dead dir drops its entry — its freshly-written
-          // sidecar is unreferenced; sweep it rather than leaking
-          val refd = snapshotEntries(fs, rp, v).flatMap(e =>
-            e.pdels.keys.map(n =>
-              new Path(new Path(rp, e.dir), n).toString)).toSet
-          ownedSidecars.filterNot(p => refd(p.toString))
-            .foreach(p => fs.delete(p, true))
-          v
-      }
-    } catch {
-      case e: Throwable =>
-        cleanup()
-        throw e
+      val swap = DirSwap(dead.map { case (d, o) => lineOf(d) -> o },
+        inserted, plan.keys, plan.statsCols)
+      (_, _) => swap
+    }
+  }
+
+  /** Write delete coordinates `(_dir, _file, _pos)` as one in-dir
+    * `_pdel-<uuid>` sidecar per dir, the [[Pdel]] outcome of each dir
+    * that received any (staged through `stage`). ONE job whatever the
+    * dir count: coordinates cluster by dir (hash repartition = all of
+    * a dir's rows in one task) and each task streams its dirs' pairs
+    * straight into sidecar files through TxParquetIO — a scattered
+    * delete touching 10^4 dirs costs one shuffle of O(changed)
+    * coordinate rows, not 10^4 driver jobs. Dedup guards the `_rows`
+    * subtraction against a double-fired coordinate. */
+  private def writePdels(spark: SparkSession, rp: Path, coords: DataFrame,
+    stage: String => String): Map[String, Pdel] = {
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
+    val rootStr = rp.toString
+    import spark.implicits._
+    coords.dropDuplicates("_dir", "_file", "_pos")
+      .repartition(col("_dir"))
+      .mapPartitions { rows =>
+        val out = scala.collection.mutable.Map[String,
+          (String, org.apache.parquet.hadoop.ParquetWriter[
+            org.apache.spark.sql.catalyst.InternalRow], Array[Long])]()
+        val pdSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("_file",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("_pos",
+            org.apache.spark.sql.types.LongType)))
+        rows.foreach { r =>
+          val d = r.getString(0)
+          val (_, w, n) = out.getOrElseUpdate(d, {
+            val name = s"_pdel-${java.util.UUID.randomUUID()}"
+            val p = new Path(new Path(new Path(rootStr), d), name)
+            (name, TxParquetIO.writer(
+              new Path(p, "part-0.parquet"), pdSchema, conf.value),
+              Array(0L))
+          })
+          w.write(org.apache.spark.sql.catalyst.InternalRow(
+            org.apache.spark.unsafe.types.UTF8String
+              .fromString(r.getString(1)), r.getLong(2)))
+          n(0) += 1
+        }
+        out.iterator.map { case (d, (name, w, n)) =>
+          w.close(); (d, name, n(0))
+        }
+      }.collect().map { case (d, name, n) =>
+        stage(s"$d/$name")
+        d -> Pdel(name, n)
+      }.toMap
+  }
+
+  /** One opened dir's copy-on-write rewrite, shared by deleteWhere and
+    * updateWhere: `rewrite` gets the dir's visible rows (the physical
+    * frame, the same frame with the snapshot's logical names laid over
+    * it, and those alias names) and returns the dir's outcome, or the
+    * rows that replace it in physical columns. Those land in a new
+    * `data/<op>-<uuid>` dir whose stats ride the write action
+    * (observeStats) — no post-write rescan. */
+  private def rewriteDir(spark: SparkSession, rp: Path, e: Entry,
+    m: Option[Seq[(String, String)]], op: String, statsCols: Seq[String],
+    stage: String => String)(rewrite: (DataFrame, DataFrame, Seq[String])
+      => Either[DirOutcome, DataFrame]): DirOutcome = {
+    val raw = visibleDirFrame(spark, rp, e)
+    val (df, extras) = withLogicalAliases(raw, m)
+    rewrite(raw, df, extras) match {
+      case Left(o) => o
+      case Right(rows) =>
+        val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
+        val (obsDf, mkEntry) = observeStats(rows, statsCols.distinct)
+        obsDf.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
+        Replace(mkEntry(spark, rp, dirName, false).line)
     }
   }
 
@@ -3007,147 +3020,67 @@ object TxTable {
     *    carry over unrewritten (one count aggregate), the rest rewrite
     *    to a new dir holding their surviving rows, stats recomputed.
     *
+    * POSITIONAL mode (the deletion-vector move) leaves opened dirs
+    * unrewritten: their matched rows' (file name, row index) pairs
+    * become immutable in-dir `_pdel-<uuid>` sidecars — O(matched)
+    * bytes, written by one job for all opened dirs — and each entry's
+    * `_rows` is adjusted exactly. Reads anti-join the pairs away
+    * (applyPdels); compaction folds them. Positions come from the
+    * scan's own `_metadata` columns, with prior sidecars folded in
+    * first, so a re-delete of already-dead rows never double-subtracts.
+    *
     * Old dirs stay referenced by older versions (time travel reads
     * the pre-delete snapshot until `vacuum`). Requires a delta-free
     * snapshot: MoR deltas are keyed CHANGES, and filtering them with a
     * value predicate is the colRanges-on-values unsoundness all over
-    * again — run `compactSnapshot` first. Staged rewrites from a lost
-    * OCC race are re-staged against the new parent and the stale dirs
-    * deleted, so retries can't leak data dirs. */
+    * again — run `compactSnapshot` first. A lost OCC race re-plans
+    * against the new parent and deletes the stale staged files. */
   def deleteWhere(spark: SparkSession, root: String, predSql: String,
     positional: Boolean = false): Int = {
     val (fs, rp) = fsFor(spark, root)
-    var staged: Seq[String] = Seq.empty
-    commitRetry(spark, root) { prevV =>
-      staged.foreach(d => fs.delete(new Path(rp, d), true))
-      staged = Seq.empty
+    swapCommit(spark, root, "delete") { stage => (prevV, entries) =>
       require(prevV > 0, s"txtable: nothing to delete from at $root")
-      val entries = snapshotEntries(fs, rp, prevV)
       require(!entries.exists(_.isDelta),
         s"txtable: deleteWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
-      val keys = snapshotKeys(fs, rp, prevV)
+      val keys = snapshotKeys(fs, rp, prevV).getOrElse(Seq.empty)
       val statsCols = snapshotStatsCols(fs, rp, prevV)
       // callers speak logical names: the triage maps them to the
       // physical stats, and the predicate evaluates over logical
       // aliases laid over each physical dir frame
       val m = snapshotColMap(fs, rp, prevV)
       val fates = predicateTriage(spark, rp, predSql, entries, m)
-      val newLines = fates.flatMap { case (e, fate) =>
-        if (fate == Refuted) Some(e.line)
-        else if (fate == Covered) None
-        else if (positional) {
-          // POSITIONAL MODE (the deletion-vector move): instead of
-          // rewriting a straddling dir copy-on-write, commit the
-          // matched rows' (file name, row index) pairs as an
-          // immutable in-dir `_pdel-<uuid>` sidecar — O(matched)
-          // bytes, not O(dir) — and adjust the entry's `_rows` stat
-          // exactly. Reads anti-join the pairs away (applyPdels);
-          // compaction folds them. Positions come from the scan's own
-          // `_metadata` columns, and prior sidecars are anti-joined
-          // FIRST so a re-delete of already-dead rows never
-          // double-subtracts `_rows`.
-          val raw0 = readDirFrame(spark, rp, e.dir)
-            .withColumn("_graft_pd_f",
-              substring_index(col("_metadata.file_path"), "/", -1))
-            .withColumn("_graft_pd_p", col("_metadata.row_index"))
-          val vis =
-            if (e.pdels.isEmpty) raw0
-            else {
-              val dels = spark.read.parquet(pdelPaths(rp, e): _*)
-              raw0.join(broadcast(dels),
-                raw0("_graft_pd_f") === dels("_file") &&
-                  raw0("_graft_pd_p") === dels("_pos"), "left_anti")
-            }
-          val (df, _) = withLogicalAliases(vis, m)
-          val name = s"_pdel-${java.util.UUID.randomUUID()}"
-          val sidecar = new Path(new Path(rp, e.dir), name)
-          // the matched-row count rides the sidecar write itself
-          // (observe) — re-reading the sidecar just to count it was
-          // one extra Spark job per touched dir
-          val obs = org.apache.spark.sql.Observation(
-            "graft_pdel_" + java.util.UUID.randomUUID().toString.take(8))
-          df.filter(s"($predSql) IS TRUE")
-            .select(col("_graft_pd_f").as("_file"),
-              col("_graft_pd_p").as("_pos"))
-            .observe(obs, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(sidecar.toString)
-          staged = staged :+ s"${e.dir}/$name"
-          val n = obs.get("n").asInstanceOf[Long]
-          val nAll = e.stats.get(rowsKey).map(_._1).getOrElse {
-            // pre-stats dirs: count the rows visible BEFORE this
-            // delete (e.pdels holds only the prior sidecars)
-            applyPdels(spark, rp, e, readDirFrame(spark, rp, e.dir))
-              .count()
-          }
-          // more matches than the entry's live rows means the entry's
-          // `_rows` (or a prior sidecar) is wrong: dropping the dir on
-          // `n == nAll` could then lose rows still live in it
-          if (n > nAll) {
-            staged.foreach(d => fs.delete(new Path(rp, d), true))
-            staged = Seq.empty
-            throw new IllegalStateException(
-              s"txtable: positional delete matched $n rows in ${e.dir}, " +
-                s"whose entry records only $nAll live rows - refusing " +
-                "to commit over inconsistent dir metadata")
-          }
-          if (n == 0L) {
-            fs.delete(sidecar, true)
-            staged = staged.filterNot(_ == s"${e.dir}/$name")
-            Some(e.line)                        // no matches: carry over
-          } else if (n == nAll) None            // fully deleted
-          else Some(e.copy(
-            stats = e.stats + (rowsKey -> (nAll - n, nAll - n)),
-            pdels = e.pdels + (name -> n)).line)
-        }
-        else {
-          val (df, extras) = withLogicalAliases(
-            visibleDirFrame(spark, rp, e), m)
-          // one pass decides: total survivors vs dir row count.
-          // SQL DELETE removes only rows where the predicate is TRUE —
-          // NULL-pred rows survive, so the keep filter is IS NOT TRUE
-          // (plain NOT would silently delete NULLs), matching
-          // updateWhere's when(pred).otherwise(keep) semantics
-          val survivors = df.filter(s"($predSql) IS NOT TRUE")
-            .drop(extras: _*)
-          val nKeep = survivors.count()
-          val nAll = e.stats.get(rowsKey).map(_._1)
-            .getOrElse(df.count())
-          if (nKeep == nAll) Some(e.line)       // no matches: carry over
-          else if (nKeep == 0L) None            // fully deleted
-          else {
-            val dirName = s"data/delete-${java.util.UUID.randomUUID()}"
-            // stats ride the rewrite action (observeStats) — the
-            // post-write statsEntry rescan was a third pass over the
-            // surviving rows
-            val (obsDf, mkEntry) = observeStats(survivors,
-              (keys.getOrElse(Seq.empty) ++ statsCols).distinct)
-            obsDf.write.mode("overwrite")
-              .parquet(new Path(rp, dirName).toString)
-            staged = staged :+ dirName
-            Some(mkEntry(spark, rp, dirName, false).line)
-          }
-        }
+      val coords = if (!positional) Seq.empty else fates.collect {
+        case (e, Opened) =>
+          val (df, _) = withLogicalAliases(
+            positionedRows(spark, rp, e, readDirFrame(spark, rp, e.dir)), m)
+          df.filter(s"($predSql) IS TRUE").select(lit(e.dir).as("_dir"),
+            col("_graft_pd_f").as("_file"), col("_graft_pd_p").as("_pos"))
       }
-      // a delete-all must leave a READABLE empty table, and an empty
-      // snapshot has no schema to reconstruct — keep one zero-row dir
-      // (parquet footers carry the schema) instead of zero entries
-      val lines =
-        if (newLines.nonEmpty) newLines
-        else {
-          val schemaSrc = spark.read
-            .parquet(new Path(rp, entries.head.dir).toString)
-          val dirName = s"data/delete-${java.util.UUID.randomUUID()}"
-          schemaSrc.filter(lit(false)).write.mode("overwrite")
-            .parquet(new Path(rp, dirName).toString)
-          staged = staged :+ dirName
-          Seq(statsEntry(spark, rp, dirName,
-            keys.getOrElse(Seq.empty) ++ statsCols).line)
-        }
-      ("delete",
-        keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-          (if (statsCols.nonEmpty) Seq(s"statscol:${statsCols.mkString(",")}")
-           else Seq.empty) ++ lines)
+      val dead =
+        if (coords.isEmpty) Map.empty[String, Pdel]
+        else writePdels(spark, rp, coords.reduce(_ union _), stage)
+      DirSwap(fates.map { case (e, fate) =>
+        e.line -> (fate match {
+          case Refuted => Carry
+          case Covered => Drop
+          case _ if positional => dead.getOrElse(e.dir, Carry)
+          case _ => rewriteDir(spark, rp, e, m, "delete", keys ++ statsCols,
+            stage) { (_, df, extras) =>
+            // SQL DELETE removes only rows where the predicate is TRUE
+            // — NULL-pred rows survive, so the keep filter is IS NOT
+            // TRUE (plain NOT would silently delete NULLs), matching
+            // updateWhere's when(pred).otherwise(keep) semantics
+            val survivors = df.filter(s"($predSql) IS NOT TRUE")
+              .drop(extras: _*)
+            val nKeep = survivors.count()
+            val nAll = e.stats.get(rowsKey).map(_._1).getOrElse(df.count())
+            if (nKeep == nAll) Left(Carry)
+            else if (nKeep == 0L) Left(Drop)
+            else Right(survivors)
+          }
+        })
+      }.toMap, Seq.empty, keys, statsCols)
     }
   }
 
@@ -4088,9 +4021,8 @@ object TxTable {
         if (lines0.nonEmpty) lines0
         else {
           val dirName = emptyDir.getOrElse {
-            val d = s"data/$opName-${java.util.UUID.randomUUID()}"
-            TxParquetIO.writer(new Path(new Path(rp, d),
-              "part-empty.parquet"), fileSchema, conf).close()
+            val d = writeEmptyDir(spark, rp,
+              s"data/$opName-${java.util.UUID.randomUUID()}", fileSchema)
             emptyDir = Some(d)
             d
           }
@@ -4126,60 +4058,40 @@ object TxTable {
     sets: Map[String, String]): Int = {
     require(sets.nonEmpty, "txtable: updateWhere needs at least one SET")
     val (fs, rp) = fsFor(spark, root)
-    var staged: Seq[String] = Seq.empty
-    commitRetry(spark, root) { prevV =>
-      staged.foreach(d => fs.delete(new Path(rp, d), true))
-      staged = Seq.empty
+    swapCommit(spark, root, "update") { stage => (prevV, entries) =>
       require(prevV > 0, s"txtable: nothing to update at $root")
-      val entries = snapshotEntries(fs, rp, prevV)
       require(!entries.exists(_.isDelta),
         s"txtable: updateWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
-      val keys = snapshotKeys(fs, rp, prevV)
+      val keys = snapshotKeys(fs, rp, prevV).getOrElse(Seq.empty)
       val statsCols = snapshotStatsCols(fs, rp, prevV)
       val m = snapshotColMap(fs, rp, prevV)
       // SETs address the snapshot's LOGICAL columns; rewritten rows
       // keep the dir's physical schema
       val physSets = sets.map { case (c, ex) => physName(m, c) -> ex }
       val fates = predicateTriage(spark, rp, predSql, entries, m)
-      val newLines = fates.map { case (e, fate) =>
-        if (fate == Refuted) e.line
-        else {
-          val raw = visibleDirFrame(spark, rp, e)
-          val (df, extras) = withLogicalAliases(raw, m)
+      DirSwap(fates.map { case (e, fate) =>
+        e.line -> (if (fate == Refuted) Carry
+        else rewriteDir(spark, rp, e, m, "update", keys ++ statsCols,
+          stage) { (raw, df, _) =>
           physSets.keys.foreach { c =>
             require(raw.columns.contains(c),
               s"txtable: SET of unknown column '${logicalName(m, c)}'") }
-          if (fate != Covered && df.filter(predSql).isEmpty) e.line
-          else {
-            // ONE select so every SET expression and the predicate see
-            // the OLD row (SQL UPDATE semantics) — chained withColumn
-            // would feed earlier SETs into later ones; logical aliases
-            // are evaluation-only and dropped by the projection
-            val updated = df.select(raw.columns.map { c =>
-              physSets.get(c) match {
-                case Some(ex) =>
-                  when(expr(predSql), expr(ex).cast(raw.schema(c).dataType))
-                    .otherwise(col(c)).as(c)
-                case None => col(c)
-              }
-            }.toIndexedSeq: _*)
-            val dirName = s"data/update-${java.util.UUID.randomUUID()}"
-            // stats ride the rewrite action (observeStats) — the
-            // post-write statsEntry rescan was a third pass per dir
-            val (obsDf, mkEntry) = observeStats(updated,
-              (keys.getOrElse(Seq.empty) ++ statsCols).distinct)
-            obsDf.write.mode("overwrite")
-              .parquet(new Path(rp, dirName).toString)
-            staged = staged :+ dirName
-            mkEntry(spark, rp, dirName, false).line
-          }
-        }
-      }
-      ("update",
-        keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-          (if (statsCols.nonEmpty) Seq(s"statscol:${statsCols.mkString(",")}")
-           else Seq.empty) ++ newLines)
+          if (fate != Covered && df.filter(predSql).isEmpty) Left(Carry)
+          // ONE select so every SET expression and the predicate see
+          // the OLD row (SQL UPDATE semantics) — chained withColumn
+          // would feed earlier SETs into later ones; logical aliases
+          // are evaluation-only and dropped by the projection
+          else Right(df.select(raw.columns.map { c =>
+            physSets.get(c) match {
+              case Some(ex) =>
+                when(expr(predSql), expr(ex).cast(raw.schema(c).dataType))
+                  .otherwise(col(c)).as(c)
+              case None => col(c)
+            }
+          }.toIndexedSeq: _*))
+        })
+      }.toMap, Seq.empty, keys, statsCols)
     }
   }
 
@@ -4480,29 +4392,37 @@ object TxTable {
       new Path(new Path(rp, e.dir), n).toString)
 
   /** `df` (a RAW scan of entry `e`'s dir) minus the positions its
-    * `pd:` sidecars record: tag each row with its (file name, row
-    * index) from the scan's own `_metadata` columns and anti-join the
-    * sidecar pairs — broadcast, because positional deletes are
+    * `pd:` sidecars record, each row tagged with its (file name, row
+    * index) from the scan's own `_metadata` columns as `_graft_pd_f` /
+    * `_graft_pd_p` — the coordinates a positional delete records. The
+    * sidecar pairs anti-join broadcast, because positional deletes are
     * low-selectivity by design (a scattered delete that matches most
     * of a dir should use the copy-on-write rewrite instead; the stats
     * triage already routes clustered deletes there). File NAMES (not
     * paths) key the join, so clones — whose entries borrow the source
     * dirs by absolute path — resolve identically; names are unique
     * within one dir and the join is per-dir. */
-  private def applyPdels(spark: SparkSession, rp: Path, e: Entry,
-    df: DataFrame): DataFrame =
-    if (e.pdels.isEmpty) df
+  private def positionedRows(spark: SparkSession, rp: Path, e: Entry,
+    df: DataFrame): DataFrame = {
+    val tagged = df
+      .withColumn("_graft_pd_f",
+        substring_index(col("_metadata.file_path"), "/", -1))
+      .withColumn("_graft_pd_p", col("_metadata.row_index"))
+    if (e.pdels.isEmpty) tagged
     else {
       val dels = spark.read.parquet(pdelPaths(rp, e): _*)
-      val tagged = df
-        .withColumn("_graft_pd_f",
-          substring_index(col("_metadata.file_path"), "/", -1))
-        .withColumn("_graft_pd_p", col("_metadata.row_index"))
       tagged.join(broadcast(dels),
         tagged("_graft_pd_f") === dels("_file") &&
           tagged("_graft_pd_p") === dels("_pos"), "left_anti")
-        .drop("_graft_pd_f", "_graft_pd_p")
     }
+  }
+
+  /** `df` (a RAW scan of entry `e`'s dir) minus the positions its
+    * `pd:` sidecars record ([[positionedRows]] without the tags). */
+  private def applyPdels(spark: SparkSession, rp: Path, e: Entry,
+    df: DataFrame): DataFrame =
+    if (e.pdels.isEmpty) df
+    else positionedRows(spark, rp, e, df).drop("_graft_pd_f", "_graft_pd_p")
 
   /** Entry `e`'s dir as the VISIBLE frame — raw files minus any
     * positional deletes. Every path that reads an EXISTING entry's

@@ -1320,18 +1320,20 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
     : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     dmlRefusal.foreach(r => throw new UnsupportedOperationException(
       s"graft-tx: DML on a table declared with $r is not supported"))
-    // `spark.graft.dml.positional` picks the MERGE-ON-READ shape
-    // (SupportsDelta): per-row deltas land as pd sidecars + one
-    // insert dir — O(changed) bytes instead of O(affected dirs).
-    // Default stays copy-on-write: read-side cost is zero and dirs
-    // stay compact, the right default for clustered/bulk DML.
-    val positional = SparkSession.active.conf
-      .getOption("spark.graft.dml.positional").exists(_.toBoolean)
-    if (positional)
+    if (positionalDml)
       () => new GraftDeltaOperation(root, tableSchema, info.command)
     else
       () => new GraftRowLevelOperation(root, tableSchema, info.command)
   }
+
+  /** `spark.graft.dml.positional` picks the MERGE-ON-READ shape for
+    * row-level DML (SupportsDelta) and translatable DELETEs: deleted
+    * rows land as pd sidecars (plus one insert dir) — O(changed) bytes
+    * instead of O(affected dirs). Default stays copy-on-write: read-side
+    * cost is zero and dirs stay compact, the right default for
+    * clustered/bulk DML. */
+  private def positionalDml: Boolean = SparkSession.active.conf
+    .getOption("spark.graft.dml.positional").exists(_.toBoolean)
 
   /** Filter-expressible DELETE fast path (SupportsDeleteV2): Spark's
     * OptimizeMetadataOnlyDeleteFromTable hands the condition here when
@@ -1352,7 +1354,7 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
       "graft-tx: deleteWhere called with untranslatable predicates " +
         "(canDeleteWhere said no)")
     TxTable.deleteWhere(SparkSession.active, root,
-      if (sql.isEmpty) "TRUE" else sql.mkString(" AND "))
+      if (sql.isEmpty) "TRUE" else sql.mkString(" AND "), positionalDml)
     ()
   }
 

@@ -130,6 +130,59 @@ class Round14Spec extends SparkSpec {
     assert(TxTable.read(spark, root).count() === 100L)
   }
 
+  test("a merge-on-read SQL DELETE matching more rows than the entry " +
+    "records fails loudly and stages nothing") {
+    val root = tmpDir() + "/pd-overcount-sql"
+    TxTable.append((1L to 100L).map(k => (k, s"p$k")).toDF("k", "s"),
+      root, statsCols = Seq("k"))
+    val commit = java.nio.file.Paths.get(root, "_commits", "v00000001")
+    val text = new String(java.nio.file.Files.readAllBytes(commit), "UTF-8")
+    assert(text.contains("|_rows=100:100|"))
+    java.nio.file.Files.write(commit,
+      text.replace("|_rows=100:100|", "|_rows=10:10|").getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(root, "_commits", ".v00000001.crc"))
+    spark.sql("DROP TABLE IF EXISTS pd_overcount_sql")
+    spark.sql("CREATE TABLE pd_overcount_sql USING `graft-tx` " +
+      s"OPTIONS (path '$root')")
+    graft.functions.GraftFunctions.register(spark)
+    spark.conf.set("spark.graft.dml.positional", "true")
+    // `k % 2 = 0` does not translate: the SupportsDelta write path
+    val e = try intercept[Exception] {
+      spark.sql("DELETE FROM pd_overcount_sql WHERE k % 2 = 0")
+    } finally spark.conf.unset("spark.graft.dml.positional")
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString(" / ")
+    assert(msgs.contains("matched 50 rows") &&
+      msgs.contains("refusing to commit over inconsistent"), msgs)
+    assert(TxTable.latestVersion(spark, root) === 1)
+    assert(walkBytes(root, _.contains("_pdel-")) === 0L)
+    assert(TxTable.read(spark, root).count() === 100L)
+    spark.sql("DROP TABLE pd_overcount_sql")
+  }
+
+  test("a positional delete costs the same Spark jobs on 4 straddling " +
+    "dirs as on 8") {
+    def jobs(n: Int): Int = {
+      val root = tmpDir() + s"/pd-jobs-$n"
+      (0 until n).foreach { i =>
+        TxTable.append((i * 10L until i * 10L + 10L).map(k => (k, s"s$k"))
+          .toDF("k", "s"), root, statsCols = Seq("k"))
+      }
+      val j = jobsDuring(
+        TxTable.deleteWhere(spark, root, "k % 3 = 0", positional = true))
+      // every dir straddles: all opened, all receive a sidecar
+      assert(TxTable.read(spark, root).count() === n * 10L - (0L until
+        n * 10L).count(_ % 3 == 0))
+      assert(new java.io.File(root, "data").listFiles.map(d =>
+        Option(d.list).toSeq.flatten.count(_.startsWith("_pdel-"))).sum === n)
+      j
+    }
+    jobs(4) // warm-up: first-use planning work is not per dir
+    val (j4, j8) = (jobs(4), jobs(8))
+    assert(j4 === j8, s"$j4 jobs on 4 dirs, $j8 on 8")
+  }
+
   test("the change feed emits D rows for a positional-delete commit") {
     val root = tmpDir() + "/pd-cdc"
     TxTable.mergeDelta(spark, root, (1L to 50L).map(k =>

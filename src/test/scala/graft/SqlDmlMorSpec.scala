@@ -110,6 +110,25 @@ class SqlDmlMorSpec extends SparkSpec {
     assert(fromStats === 56L)
   }
 
+  test("a translatable DELETE honours the positional conf: sidecars, " +
+    "no dir rewrite") {
+    val root = mkTable("mor_translatable", 100L)
+    val before = TxTable.read(spark, root).inputFiles.toSet
+    // `k <= 30` translates (the SupportsDeleteV2 → deleteWhere path)
+    // and straddles the 1..50 dir
+    positional {
+      spark.sql("DELETE FROM mor_translatable WHERE k <= 30")
+    }
+    val after = TxTable.read(spark, root).inputFiles.toSet
+    assert(before.subsetOf(after),
+      "every pre-existing data file must stay in the snapshot")
+    val added = after.diff(before)
+    assert(added.nonEmpty && added.forall(_.contains("/_pdel-")),
+      s"only sidecars may be added, got ${added.mkString(", ")}")
+    assert(spark.table("mor_translatable").count() === 70L)
+    assert(TxTable.rowCount(spark, root) === Some(70L))
+  }
+
   test("MoR and COW statements interleave on one table") {
     val root = mkTable("mor_mixed", 100L)
     positional {
