@@ -11,6 +11,10 @@ Each root is a table root or any directory holding table roots: every
 two runs of the same writes compare equal however their dirs were named
 and their entries packed. An entry's `pd:` sidecar segments are written
 sorted by sidecar name, i.e. by UUID, so they compare as a sorted set.
+A commit's other lines (`op:` and the table headers) compare as a sorted
+list: every reader looks a header up by its prefix, so their order carries
+no meaning. Entry lines (`dir:`/`delta:`, after expansion) keep their
+order, which is merge-on-read resolution order.
 Prints a unified diff per differing pair and exits 1 on any difference
 (including a table or version present on one side only), 0 otherwise.
 """
@@ -39,15 +43,20 @@ def versions(commits):
 
 def normalize(line):
     line = UUID.sub("<uuid>", line)
-    if not line.startswith(("dir:", "delta:")):
+    if not is_entry(line):
         return line
     segs = line.split("|")
     pds = sorted(s for s in segs if s.startswith("pd:"))
     return "|".join([s for s in segs if not s.startswith("pd:")] + pds)
 
 
+def is_entry(line):
+    return line.startswith(("dir:", "delta:"))
+
+
 def lines_of(table_root, commit_file):
-    """A commit's lines, manifests expanded and UUIDs normalized."""
+    """A commit's lines, manifests expanded and UUIDs normalized: its
+    other lines sorted, then its entry lines in order."""
     out = []
     with open(commit_file, encoding="utf-8") as f:
         for line in f.read().split("\n"):
@@ -57,7 +66,9 @@ def lines_of(table_root, commit_file):
                     out.extend(l for l in m.read().split("\n") if l)
             else:
                 out.append(line)
-    return [normalize(l) for l in out]
+    out = [normalize(l) for l in out]
+    return sorted(l for l in out if not is_entry(l)) + [
+        l for l in out if is_entry(l)]
 
 
 def main(root_a, root_b):

@@ -145,24 +145,32 @@ object TxTable {
     * a vacuumed version fail at getFileStatus with the same
     * FileNotFound the uncached path would raise. */
   private final case class CachedLines(mtime: Long, len: Long,
-    lines: Seq[String])
+    lines: Seq[String]) {
+    // a commit file's two halves, parsed once per cached file
+    lazy val meta: TableMeta = TableMeta.parse(lines)
+    lazy val rawEntryLines: Seq[String] =
+      lines.filter(l => l.startsWith("include:") || parseEntry(l).isDefined)
+  }
   private val commitCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedLines]()
-  private def commitLines(fs: FileSystem, rp: Path, v: Int): Seq[String] = {
+  private def commitFile(fs: FileSystem, rp: Path, v: Int): CachedLines = {
     val p = commitPath(rp, v)
     val key = p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
     metaRpcs.incrementAndGet() // cache-validation getFileStatus
     val st = fs.getFileStatus(p)
     val c = commitCache.get(key)
     if (c != null && c.mtime == st.getModificationTime &&
-      c.len == st.getLen) c.lines
+      c.len == st.getLen) c
     else {
-      val ls = readFileUtf8(fs, p).split("\n").toSeq
+      val f = CachedLines(st.getModificationTime, st.getLen,
+        readFileUtf8(fs, p).split("\n").toSeq)
       if (commitCache.size >= 8192) commitCache.clear()
-      commitCache.put(key, CachedLines(st.getModificationTime, st.getLen, ls))
-      ls
+      commitCache.put(key, f)
+      f
     }
   }
+  private def commitLines(fs: FileSystem, rp: Path, v: Int): Seq[String] =
+    commitFile(fs, rp, v).lines
 
   /** One data-dir entry of a snapshot. `dir` entries hold full rows;
     * `delta` entries hold keyed (key..., op, value...) changes to
@@ -355,95 +363,183 @@ object TxTable {
 
   /** Entries of snapshot `v` in commit order (manifests expanded). */
   private def snapshotEntries(fs: FileSystem, root: Path,
-    v: Int): Seq[Entry] = {
+    v: Int): Seq[Entry] =
     if (v == 0) Seq.empty
-    else expandEntryLines(fs, root, commitLines(fs, root, v))
+    else expandEntryLines(fs, root, commitFile(fs, root, v).rawEntryLines)
       .flatMap(parseEntry)
-  }
-
-  /** The entry-bearing lines of commit `v` AS WRITTEN — include lines
-    * verbatim, inline entries inline. Carrying these (instead of the
-    * expansion) is what keeps append commits metadata-O(1). */
-  private def rawEntryLines(fs: FileSystem, rp: Path, v: Int): Seq[String] =
-    if (v == 0) Seq.empty
-    else commitLines(fs, rp, v)
-      .filter(l => l.startsWith("include:") || parseEntry(l).isDefined)
-
-  /** The table's declared key columns (recorded by the first keyed
-    * commit as a `key:` header line and carried forward by every
-    * later commit). Absent for plain append/overwrite tables; the
-    * legacy default for delta snapshots without one is Seq("k"). */
-  private def snapshotKeys(fs: FileSystem, root: Path,
-    v: Int): Option[Seq[String]] =
-    if (v == 0) None else parseKeys(commitLines(fs, root, v))
-
-  private def parseKeys(lines: Seq[String]): Option[Seq[String]] =
-    lines.find(_.startsWith("key:")).map(_.drop(4).split(",").toSeq)
-
-  /** The columns per-dir stats refer to (comma list; the FIRST is the
-    * default range column `read(keyRange)` addresses), for plain
-    * (un-keyed) tables that opted into stats via
-    * `append(statsCols = ...)`. Keyed tables stat their key columns
-    * and don't need this header. */
-  private def snapshotStatsCols(fs: FileSystem, root: Path,
-    v: Int): Seq[String] =
-    if (v == 0) Seq.empty else parseStatsCols(commitLines(fs, root, v))
-
-  private def parseStatsCols(lines: Seq[String]): Seq[String] =
-    lines.find(_.startsWith("statscol:")).map(_.drop(9).split(",").toSeq)
-      .getOrElse(Seq.empty)
 
   private def snapshotDirs(fs: FileSystem, root: Path, v: Int): Seq[String] =
     snapshotEntries(fs, root, v).map(_.dir)
 
-  /** Column-mapping header (Delta/Iceberg-style name mapping): one
-    * `colmap:<logical>=<physical>,...` line declaring, IN ORDER, the
-    * snapshot's visible columns and the physical file-column each
-    * reads from. Physical names are immutable once written —
-    * `renameColumn` only rebinds the logical side, so a rename is one
-    * metadata commit and time travel serves every version under ITS
-    * OWN names. An entry with an EMPTY logical (`=physical`) is a
-    * DROP tombstone: the physical column stays in old files but no
-    * snapshot column binds to it, and the tombstone keeps the
-    * physical name reserved so a later added column of the same name
-    * cannot resurrect the dropped data. No header = identity mapping;
-    * a bare `colmap:` line explicitly RESETS to identity (written by
-    * rewrite ops — compactSnapshot/merge — whose new files are born
-    * under the logical names, materializing renames). */
-  private def snapshotColMap(fs: FileSystem, rp: Path,
-    v: Int): Option[Seq[(String, String)]] =
-    if (v == 0) None else parseColMap(commitLines(fs, rp, v))
+  /** The table-level metadata of one commit: the nine header kinds of
+    * the commit grammar, parsed once per commit file ([[metaAt]]) and
+    * written by one renderer. A writer starts from its parent's record
+    * ([[Head]]) and states only what it changes, so each field's
+    * carry rule is the record's default:
+    *
+    *  - `key:<c>,...` — the declared key columns (the legacy default
+    *    for delta snapshots without one is `k`). Carried by appends and
+    *    metadata commits; re-declared or dropped by rewrites.
+    *  - `statscol:<c>,...` — the columns per-dir stats describe; the
+    *    FIRST is `read(keyRange)`'s default range column. An append
+    *    keeps the carried value when one exists ([[withStats]]), so one
+    *    table never mixes stats declarations.
+    *  - `bucketby:<physCol>,<n>` — the hash-bucket layout
+    *    ([[appendBucketedBy]] re-asserts it). Carried like `key:`;
+    *    content writes that break the clustering drop it.
+    *  - `colmap:<logical>=<physical>,...` — Delta/Iceberg-style name
+    *    mapping: IN ORDER, the snapshot's visible columns and the
+    *    physical file column each reads from. Physical names are
+    *    immutable, so a rename is one metadata commit and time travel
+    *    serves every version under ITS OWN names. An EMPTY logical
+    *    (`=physical`) is a DROP tombstone that keeps the physical name
+    *    reserved, so a re-added column cannot resurrect dropped data.
+    *    No header = identity. Carried until a commit declares its own;
+    *    a commit that clears its parent's map writes a bare `colmap:`
+    *    (rewrites whose files are born under the logical names).
+    *  - `schema:<phys>=<typeDDL>[=<default>];...` — ADD COLUMNS types
+    *    no data file may carry yet. Carried only while the effective
+    *    map binds the physical name, so a mapping reset retires it and
+    *    a stale entry can never invent a column.
+    *  - `ndv:<analyzedVersion>;<phys>=<ndv>~<nulls>,...` — ANALYZE's
+    *    estimates. Carried until the next analyze re-declares them
+    *    (reads clamp stale ones to the live row count).
+    *  - `hist:<analyzedVersion>;<phys>;<height>;<lo>,<hi>,<ndv>;...` —
+    *    equi-height histograms. Carried only while provably fresh
+    *    against the commit's entries ([[analyzedOver]]).
+    *  - `check:<name>=<sql>` — CHECK constraints. Carried until a
+    *    commit declares its own set; clearing writes a bare `check:`.
+    *  - `batch:<stream>:<id>` — streaming replay tags, carried per
+    *    stream by every commit ([[tagged]]), so an interleaved append
+    *    or compaction never reopens a sink's exactly-once window. */
+  private final case class TableMeta(
+    keys: Option[Seq[String]] = None,
+    statsCols: Seq[String] = Seq.empty,
+    bucketBy: Option[(String, Int)] = None,
+    colMap: Option[Seq[(String, String)]] = None,
+    declared: Seq[DeclaredCol] = Seq.empty,
+    ndv: Option[String] = None,
+    hists: Seq[String] = Seq.empty,
+    checks: Seq[(String, String)] = Seq.empty,
+    batches: Seq[String] = Seq.empty) {
 
-  private def parseColMap(
-    lines: Seq[String]): Option[Seq[(String, String)]] =
-    lines.find(_.startsWith("colmap:"))
-      .map(_.drop(7)).filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map { p =>
-        val i = p.indexOf('=')
-        (p.substring(0, i), p.substring(i + 1))
-      })
+    /** The declared columns whose physical name the map binds. */
+    def liveAdded: Seq[DeclaredCol] = {
+      val bound = colMap.map(liveMap(_).map(_._2).toSet)
+        .getOrElse(Set.empty[String])
+      declared.filter(c => bound(c.phys))
+    }
 
-  private def colMapLine(m: Seq[(String, String)]): String =
-    "colmap:" + m.map { case (l, p) => s"$l=$p" }.mkString(",")
+    /** Declare `cols` as the stats columns unless some are carried. */
+    def withStats(cols: Seq[String]): TableMeta =
+      if (statsCols.nonEmpty) this else copy(statsCols = cols)
 
-  /** DECLARED-COLUMN header (`schema:<phys>=<typeDDL>;...`): the types
-    * of columns added by `ALTER TABLE ... ADD COLUMNS` that may not
-    * yet exist in any data file — the one schema fact parquet footers
-    * cannot carry. Reads null-fill a declared column until data
-    * arrives (the Delta/Iceberg add-column move). An entry is LIVE
-    * only while its physical name is bound by the snapshot's column
-    * mapping (addColumn always materializes the mapping), so a
-    * rewrite that resets the mapping — whose files were born carrying
-    * every visible column — retires the header automatically, and a
-    * stale entry can never invent a column. Atomic types only (the
-    * DDL round-trips unambiguously; nested columns are unsupported
-    * across the format). */
+    /** Record stream batch `tag` (`<stream>:<id>`) in place of that
+      * stream's carried tags. */
+    def tagged(tag: String): TableMeta = copy(batches =
+      tag +: batches.filterNot(t => tagStream(t) == tagStream(tag)))
+
+    /** A rewrite's record: the new files carry `keys` and `statsCols`,
+      * are born under the logical names when `resetMap` (the mapping
+      * clears) and no longer prove the bucket layout. */
+    def rewritten(keys: Option[Seq[String]], statsCols: Seq[String],
+      resetMap: Boolean = true): TableMeta =
+      copy(keys = keys, statsCols = statsCols, bucketBy = None,
+        colMap = if (resetMap) None else colMap)
+
+    /** The header lines, in kind order. A field `parent` declared and
+      * this record clears renders as its bare reset line. */
+    def render(parent: TableMeta): Seq[String] =
+      keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
+        (if (statsCols.isEmpty) Seq.empty
+         else Seq(s"statscol:${statsCols.mkString(",")}")) ++
+        bucketBy.map { case (c, n) => s"bucketby:$c,$n" } ++
+        colMap.map(m => "colmap:" + m.map { case (l, p) => s"$l=$p" }
+          .mkString(",")).orElse(parent.colMap.map(_ => "colmap:")) ++
+        (if (declared.isEmpty) Seq.empty
+         else Seq("schema:" + declared.map { c =>
+           s"${c.phys}=${c.dt.sql}" + c.default.map("=" + _).getOrElse("")
+         }.mkString(";"))) ++
+        ndv.map("ndv:" + _) ++
+        hists.map("hist:" + _) ++
+        (if (checks.nonEmpty) checks.map { case (n, p) => s"check:$n=$p" }
+         else if (parent.checks.nonEmpty) Seq("check:")
+         else Seq.empty) ++
+        batches.map("batch:" + _)
+  }
+
+  private object TableMeta {
+    def parse(lines: Seq[String]): TableMeta = {
+      def first(kind: String) =
+        lines.find(_.startsWith(kind)).map(_.drop(kind.length))
+      def all(kind: String) =
+        lines.filter(_.startsWith(kind)).map(_.drop(kind.length))
+      TableMeta(
+        keys = first("key:").map(_.split(",").toSeq),
+        statsCols = first("statscol:").map(_.split(",").toSeq)
+          .getOrElse(Seq.empty),
+        bucketBy = first("bucketby:").filter(_.nonEmpty).map { b =>
+          val i = b.lastIndexOf(',')
+          (b.substring(0, i), b.substring(i + 1).toInt)
+        },
+        colMap = first("colmap:").filter(_.nonEmpty)
+          .map(_.split(",").toSeq.map { p =>
+            val i = p.indexOf('=')
+            (p.substring(0, i), p.substring(i + 1))
+          }),
+        declared = first("schema:").filter(_.nonEmpty)
+          .map(_.split(";").toSeq.map { p =>
+            val parts = p.split("=", 3)
+            DeclaredCol(parts(0),
+              org.apache.spark.sql.types.DataType.fromDDL(parts(1)),
+              if (parts.length > 2) Some(parts(2)) else None)
+          }).getOrElse(Seq.empty),
+        ndv = first("ndv:"),
+        hists = all("hist:"),
+        checks = all("check:").filter(_.nonEmpty).map { b =>
+          val i = b.indexOf('=')
+          (b.substring(0, i), b.substring(i + 1))
+        },
+        batches = all("batch:"))
+    }
+  }
+
+  /** The table metadata of commit `v` (empty before the first). */
+  private def metaAt(fs: FileSystem, rp: Path, v: Int): TableMeta =
+    if (v <= 0) TableMeta() else commitFile(fs, rp, v).meta
+
+  /** The parent a commit attempt builds on: its version, its table
+    * metadata, and its entry-bearing lines AS WRITTEN (include lines
+    * verbatim — carrying these instead of the expansion is what keeps
+    * append commits metadata-O(1)). */
+  private final case class Head(version: Int, meta: TableMeta,
+    rawEntryLines: Seq[String])
+
+  private def headAt(fs: FileSystem, rp: Path, v: Int): Head =
+    if (v <= 0) Head(0, TableMeta(), Seq.empty)
+    else {
+      val f = commitFile(fs, rp, v)
+      Head(v, f.meta, f.rawEntryLines)
+    }
+
+  /** The head's entries in commit order (manifests expanded). */
+  private def headEntries(fs: FileSystem, rp: Path, h: Head): Seq[Entry] =
+    expandEntryLines(fs, rp, h.rawEntryLines).flatMap(parseEntry)
+
+  /** What one writer commits on top of a [[Head]]: the operation, the
+    * table metadata, and the entry lines (`dir:`/`delta:`/`include:`)
+    * in merge-on-read resolution order. */
+  private final case class Commit(op: String, meta: TableMeta,
+    entryLines: Seq[String])
+
   /** A declared (ADD COLUMNS) column: physical name, type, and the
     * optional DEFAULT — the SQL literal pre-ADD rows read instead of
-    * NULL (Iceberg's initial-default move). The header entry is
+    * NULL (Iceberg's initial-default move). Reads null-fill a declared
+    * column without a default until data arrives. The header entry is
     * `phys=typeDDL[=defaultSql]`; the default is the LAST field, so
     * its text may itself contain `=` (a string literal), but never
-    * `;` or a newline (validated at addColumns). */
+    * `;` or a newline (validated at addColumns). Atomic types only
+    * (the DDL round-trips unambiguously). */
   private[sources] case class DeclaredCol(phys: String,
     dt: org.apache.spark.sql.types.DataType,
     default: Option[String]) {
@@ -456,31 +552,6 @@ object TxTable {
     }.orNull
   }
 
-  private def snapshotAddedCols(fs: FileSystem, rp: Path,
-    v: Int): Seq[DeclaredCol] =
-    if (v == 0) Seq.empty else parseAddedCols(commitLines(fs, rp, v))
-
-  private def parseAddedCols(lines: Seq[String]): Seq[DeclaredCol] =
-    lines
-      .find(_.startsWith("schema:")).map(_.drop(7)).filter(_.nonEmpty)
-      .map(_.split(";").toSeq.map { p =>
-        val parts = p.split("=", 3)
-        DeclaredCol(parts(0),
-          org.apache.spark.sql.types.DataType.fromDDL(parts(1)),
-          if (parts.length > 2) Some(parts(2)) else None)
-      }).getOrElse(Seq.empty)
-
-  private def schemaLine(cols: Seq[DeclaredCol]): String =
-    "schema:" + cols.map { c =>
-      s"${c.phys}=${c.dt.sql}" + c.default.map("=" + _).getOrElse("")
-    }.mkString(";")
-
-  /** The LIVE declared columns of snapshot `v` — `schema:` entries
-    * whose physical name the snapshot's mapping still binds. */
-  private def liveAddedCols(fs: FileSystem, rp: Path,
-    v: Int): Seq[DeclaredCol] =
-    if (v == 0) Seq.empty else liveAddedOf(commitLines(fs, rp, v))
-
   /** Live ALTER-added DEFAULTs in LOGICAL column names — what the
     * catalog face re-attaches as CURRENT_DEFAULT/EXISTS_DEFAULT
     * StructField metadata so INSERT-side default resolution works. */
@@ -488,11 +559,9 @@ object TxTable {
     root: String, version: Int): Map[String, String] = {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(fs, rp)
-    if (v < 1) return Map.empty
-    val lines = commitLines(fs, rp, v)
-    val m = parseColMap(lines)
-    liveAddedOf(lines).collect { case c if c.default.isDefined =>
-      logicalName(m, c.phys) -> c.default.get
+    val meta = metaAt(fs, rp, v)
+    meta.liveAdded.collect { case c if c.default.isDefined =>
+      logicalName(meta.colMap, c.phys) -> c.default.get
     }.toMap
   }
 
@@ -517,16 +586,6 @@ object TxTable {
         d.withColumn(c.phys,
           when(lit(false), lit(null).cast(c.dt))
             .otherwise(expr(c.default.get).cast(c.dt))))
-
-  private def liveAddedOf(lines: Seq[String]): Seq[DeclaredCol] = {
-    val declared = parseAddedCols(lines)
-    if (declared.isEmpty) Seq.empty
-    else {
-      val bound = parseColMap(lines)
-        .map(liveMap(_).map(_._2).toSet).getOrElse(Set.empty)
-      declared.filter(c => bound(c.phys))
-    }
-  }
 
   /** The live (non-tombstone) logical→physical pairs. */
   private def liveMap(m: Seq[(String, String)]): Seq[(String, String)] =
@@ -637,15 +696,11 @@ object TxTable {
     * the null-fill column set, the column map, and the planned
     * entries now all come from the SAME commit file, so a concurrent
     * addColumn landing mid-read can no longer split them across two
-    * versions. Facets parse lazily from the held lines (no further
-    * RPCs); only manifest expansion (`include:` lines) may read more
-    * files, exactly as the uncached path would. */
+    * versions. The table metadata is the commit file's cached record
+    * (no further RPCs); only manifest expansion (`include:` lines) may
+    * read more files, exactly as the uncached path would. */
   private final case class Resolved(fs: FileSystem, rp: Path, v: Int,
-    lines: Seq[String]) {
-    lazy val colMap: Option[Seq[(String, String)]] = parseColMap(lines)
-    lazy val keys: Option[Seq[String]] = parseKeys(lines)
-    lazy val statsCols: Seq[String] = parseStatsCols(lines)
-    lazy val liveAdded: Seq[DeclaredCol] = liveAddedOf(lines)
+    lines: Seq[String], meta: TableMeta) {
     lazy val entries: Seq[Entry] =
       expandEntryLines(fs, rp, lines).flatMap(parseEntry)
   }
@@ -654,8 +709,11 @@ object TxTable {
     version: Int): Resolved = {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(fs, rp)
-    Resolved(fs, rp, v,
-      if (v >= 1) commitLines(fs, rp, v) else Seq.empty)
+    if (v < 1) Resolved(fs, rp, v, Seq.empty, TableMeta())
+    else {
+      val f = commitFile(fs, rp, v)
+      Resolved(fs, rp, v, f.lines, f.meta)
+    }
   }
 
   /** What a condition proves about a dir from its commit line alone:
@@ -759,12 +817,12 @@ object TxTable {
     val allEntries = r.entries
     require(allEntries.nonEmpty,
       s"txtable: snapshot v$v of ${r.rp} is empty")
-    val keyCols = r.keys
+    val keyCols = r.meta.keys
       .getOrElse(if (allEntries.exists(_.isDelta)) Seq("k") else Seq.empty)
     // the un-named keyRange addresses the table's default range column:
     // first key col, else the first declared stats col
     val rangeCol = keyCols.headOption
-      .orElse(r.statsCols.headOption)
+      .orElse(r.meta.statsCols.headOption)
     val ranges: Map[String, (Long, Long)] = colRanges ++
       keyRange.flatMap(r => rangeCol.map(_ -> r))
     // Merge-on-read safety: a range on a VALUE column must wait for
@@ -828,7 +886,7 @@ object TxTable {
     colRanges: Map[String, (Long, Long)] = Map.empty,
     strRanges: Map[String, (String, String)] = Map.empty): DataFrame = {
     val r = resolve(spark, root, version)
-    val mOpt = r.colMap
+    val mOpt = r.meta.colMap
     // callers address columns by the snapshot's LOGICAL names; the
     // physical plumbing below (stats, files, resolution) speaks the
     // immutable physical names
@@ -857,7 +915,7 @@ object TxTable {
     val df = readResolved0(spark, r, keyRange, colRanges, strRanges)
     // the null-fill column set comes from the SAME resolved snapshot
     // the plan was built from — never a second head resolution
-    val declared = r.liveAdded
+    val declared = r.meta.liveAdded
     if (declared.isEmpty) df
     else {
       val missing = declared.filterNot(c => df.columns.contains(c.phys))
@@ -911,7 +969,7 @@ object TxTable {
     // defaults fill PER DIR: a pre-ADD dir unioned with a post-ADD dir
     // must read the default while the post-ADD dir reads stored values
     // (an end-of-read fill could not tell the two apart)
-    val declaredDefaults = r.liveAdded.filter(_.default.isDefined)
+    val declaredDefaults = r.meta.liveAdded.filter(_.default.isDefined)
     def readDir(dir: String): DataFrame = {
       val p = new Path(rp, dir).toString
       val raw = schemaOf.get(dir) match {
@@ -1383,29 +1441,15 @@ object TxTable {
   // (requireStatsGrammarSafe) so no user column can forge it.
   private val bucketStatKey = "_bucket"
 
-  /** The snapshot's declared hash-bucket layout, `(physicalCol,
-    * numBuckets)` — present iff the head commit carries a `bucketby:`
-    * header (every [[appendBucketedBy]] re-asserts it; content writes
-    * that break the clustering strip it). */
-  private def bucketSpecAt(fs: FileSystem, rp: Path, v: Int)
-    : Option[(String, Int)] =
-    if (v <= 0) None
-    else commitLines(fs, rp, v).collectFirst {
-      case l if l.startsWith("bucketby:") && l.length > 9 =>
-        val body = l.drop(9)
-        val i = body.lastIndexOf(',')
-        (body.substring(0, i), body.substring(i + 1).toInt)
-    }
-
   /** Bucket layout of `root` in LOGICAL column terms (None when the
     * snapshot is not bucket-declared). */
   def bucketSpecOf(spark: SparkSession, root: String,
     version: Int = -1): Option[(String, Int)] = {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(fs, rp)
-    bucketSpecAt(fs, rp, v).map { case (phys, n) =>
-      val m = snapshotColMap(fs, rp, v)
-      (m.flatMap(_.collectFirst { case (l, p) if p == phys => l })
+    val meta = metaAt(fs, rp, v)
+    meta.bucketBy.map { case (phys, n) =>
+      (meta.colMap.flatMap(_.collectFirst { case (l, p) if p == phys => l })
         .getOrElse(phys), n)
     }
   }
@@ -1443,24 +1487,23 @@ object TxTable {
     // that cannot evaluate a constraint (a schema-replacing overwrite
     // against a constraint on a dropped column) fails analysis loudly
     // — DROP CONSTRAINT first, never silently skip.
-    val v0 = latestVersion(spark, root)
+    val meta0 = metaAt(fs, rp, latestVersion(fs, rp))
     // a plain append onto a hash-bucketed layout would silently break
     // the clustering contract every bucketed SPJ trusts — refuse
     // loudly (an overwrite REPLACES content, so it may reset the
-    // layout; its commit carries no prior headers anyway)
-    if (keepPrev) bucketSpecAt(fs, rp, v0).foreach { case (c, n) =>
+    // layout; its commit drops the declaration)
+    if (keepPrev) meta0.bucketBy.foreach { case (c, n) =>
       throw new IllegalStateException(
         s"txtable: $root is bucket-clustered (bucketby:$c,$n); a " +
           "plain append would break the layout - appendBucketedBy " +
           "maintains it, overwrite replaces it")
     }
-    val (guarded, verifyChecks) =
-      checkGuard(df, checkConstraints(spark, root, v0))
+    val (guarded, verifyChecks) = checkGuard(df, meta0.checks)
     // appends translate logical→physical under a column mapping
     // (widening extends the map); an overwrite replaces all content
     // with the caller's logical frame, so its files are born logical
     // and the mapping resets
-    val m0 = snapshotColMap(fs, rp, v0)
+    val m0 = meta0.colMap
     val (physDf, extMap) =
       if (keepPrev) toPhysicalFrame(guarded, m0) else (guarded, None)
     val physStats =
@@ -1476,72 +1519,40 @@ object TxTable {
         throw t
     }
     val entry = mkEntry(spark, rp, dirName, false)
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
       // a concurrent writer may have landed this same micro-batch
       // between the caller's pre-check and the claim (appendBatch);
       // drop the staged dir rather than leaking it until vacuum
-      if (skipIf(prevV)) {
+      if (skipIf(head.version)) {
         fs.delete(new Path(rp, dirName), true)
-        return prevV
+        return head.version
       }
       // constraint probes (appendChecked) re-validate against the
       // claim's parent, so a concurrent commit that landed between
       // validation and the claim can't smuggle in a violating snapshot
-      preCommitCheck(prevV)
-      val prev0 = if (keepPrev) snapshotLines(fs, rp, prevV) else Seq.empty
-      // re-check at the claim parent: a concurrent writer may have
-      // bucket-clustered the table between validation and the claim
-      if (prev0.exists(_.startsWith("bucketby:"))) {
-        fs.delete(new Path(rp, dirName), true)
-        throw new IllegalStateException(
-          s"txtable: $root became bucket-clustered concurrently; " +
-            "plain appends would break the layout")
+      preCommitCheck(head.version)
+      val meta = batchTag.fold(head.meta)(head.meta.tagged)
+      if (!keepPrev) Commit(op, meta.rewritten(None, statsCols), Seq(entry.line))
+      else {
+        // re-check at the claim parent: a concurrent writer may have
+        // bucket-clustered the table between validation and the claim
+        if (meta.bucketBy.isDefined) {
+          fs.delete(new Path(rp, dirName), true)
+          throw new IllegalStateException(
+            s"txtable: $root became bucket-clustered concurrently; " +
+              "plain appends would break the layout")
+        }
+        Commit(op, meta.copy(colMap = extMap.orElse(meta.colMap))
+          .withStats(physStats), head.rawEntryLines :+ entry.line)
       }
-      val prev =
-        if (extMap.isDefined) prev0.filterNot(_.startsWith("colmap:"))
-        else prev0
-      val mapHdr =
-        if (!keepPrev) m0.map(_ => "colmap:").toSeq
-        else extMap.map(colMapLine).toSeq
-      // record which columns the stats describe (carry-forward wins so
-      // one table never mixes stats declarations)
-      val statsHdr =
-        if (prev.exists(_.startsWith("statscol:")) || physStats.isEmpty) None
-        else Some(s"statscol:${physStats.mkString(",")}")
-      (op,
-        batchTag.map(t => s"batch:$t").toSeq ++
-          statsHdr.toSeq ++ mapHdr ++ prev :+ entry.line)
     }
   }
 
-  /** Raw entry + header lines of a snapshot (key declaration first,
-    * then dir/delta entries with their stats), carried forward by
-    * appending commits. */
-  private def snapshotLines(fs: FileSystem, rp: Path, v: Int): Seq[String] =
-    snapshotKeys(fs, rp, v).map(ks => s"key:${ks.mkString(",")}").toSeq ++
-      (snapshotStatsCols(fs, rp, v) match {
-        case Seq() => Seq.empty
-        case cs => Seq(s"statscol:${cs.mkString(",")}")
-      }) ++
-      // the bucket-layout declaration rides metadata-only commits
-      // (checks, tags, analyze) untouched; the content writers that
-      // BREAK the clustering strip it from their own commit instead
-      bucketSpecAt(fs, rp, v)
-        .map { case (c, n) => s"bucketby:$c,$n" }.toSeq ++
-      snapshotColMap(fs, rp, v).map(colMapLine).toSeq ++
-      rawEntryLines(fs, rp, v)
-
-  /** `batch:<stream>:<id>` replay-protection tag lines of commit `v`
-    * (legacy bare `batch:<id>` lines parse as stream ""). */
-  private def batchTagLines(fs: FileSystem, rp: Path, v: Int): Seq[String] =
-    if (v <= 0) Seq.empty
-    else commitLines(fs, rp, v)
-      .filter(_.startsWith("batch:"))
-
-  private def tagStream(line: String): String = {
-    val rest = line.stripPrefix("batch:")
-    val i = rest.lastIndexOf(':')
-    if (i < 0) "" else rest.substring(0, i)
+  /** The stream of a `batch:` tag body (`<stream>:<id>`; a legacy bare
+    * `<id>` belongs to stream ""). */
+  private def tagStream(tag: String): String = {
+    val i = tag.lastIndexOf(':')
+    if (i < 0) "" else tag.substring(0, i)
   }
 
   /** Whether stream `streamId`'s replay-protection lineage has ever
@@ -1552,25 +1563,22 @@ object TxTable {
   private[sources] def hasStreamTag(spark: SparkSession, root: String,
     streamId: String): Boolean = {
     val (fs, rp) = fsFor(spark, root)
-    val v = latestVersion(spark, root)
-    v > 0 && batchTagLines(fs, rp, v).exists(t => tagStream(t) == streamId)
+    metaAt(fs, rp, latestVersion(fs, rp)).batches
+      .exists(t => tagStream(t) == streamId)
   }
 
-  /** The optimistic-concurrency loop: build the commit content against
-    * the current snapshot, claim version+1 atomically, retry from the
-    * NEW snapshot if another writer claimed it first. */
-  /** Metadata packing, applied to every commit body: (1) RE-INCLUDE —
-    * any parent manifest whose entry block survives intact and in
-    * order in the emitted lines collapses back to its include line,
-    * so a bounded DML that rewrites 3 of a million dirs re-lists only
-    * the broken manifest's entries, not the table; (2) ROLLOVER — the
-    * trailing run of inline entries past the last include line rolls
-    * into a fresh manifest once it reaches the threshold, so appends
-    * are amortized O(1) metadata. Best-effort by construction: a
-    * failed match just leaves lines inline — never incorrect, only
-    * larger. Returns the packed lines and any manifest files staged
-    * for this attempt (deleted by the caller if the claim loses). */
-  private def packEntryLines(fs: FileSystem, rp: Path, prevV: Int,
+  /** Metadata packing of a commit's entry lines: (1) RE-INCLUDE — any
+    * parent manifest whose entry block survives intact and in order
+    * collapses back to its include line, so a bounded DML that
+    * rewrites 3 of a million dirs re-lists only the broken manifest's
+    * entries, not the table; (2) ROLLOVER — the trailing run of inline
+    * entries past the last include line rolls into a fresh manifest
+    * once it reaches the threshold, so appends are amortized O(1)
+    * metadata. Best-effort by construction: a failed match just leaves
+    * lines inline — never incorrect, only larger. Returns the packed
+    * lines and any manifest files staged for this attempt (deleted by
+    * the caller if the claim loses). */
+  private def packEntryLines(fs: FileSystem, rp: Path, head: Head,
     lines0: Seq[String], rollover: Int): (Seq[String], Seq[String]) = {
     def isEntry(l: String) = parseEntry(l).isDefined
     val v0 = lines0.toVector
@@ -1578,10 +1586,7 @@ object TxTable {
     // against the ORIGINAL line positions (stable indices, one pass)
     // via a first-line index, so a million-line DML commit packs in
     // O(lines), not O(lines × manifests)
-    val parentIncludes =
-      if (prevV == 0) Seq.empty[String]
-      else commitLines(fs, rp, prevV)
-        .filter(_.startsWith("include:"))
+    val parentIncludes = head.rawEntryLines.filter(_.startsWith("include:"))
     val firstPos = new java.util.HashMap[String, Int]()
     v0.zipWithIndex.foreach { case (l, i) =>
       if (!firstPos.containsKey(l)) firstPos.put(l, i)
@@ -1643,9 +1648,19 @@ object TxTable {
     }
   }
 
+  /** The optimistic-concurrency loop every write commits through:
+    * build the commit against the current head, claim version+1
+    * atomically, and retry from the NEW head if another writer claimed
+    * it first. Each attempt reads the parent commit file once
+    * ([[headAt]]) and hands the writer that [[Head]]; the writer's
+    * [[Commit]] record already carries the parent's headers by
+    * default. The two carry rules that depend on the commit's own
+    * content run here: `schema:` entries stay only while the commit's
+    * map binds them, and `hist:` lines only while they are fresh
+    * against its entries. [[verifyCommit]] then refuses, before any
+    * claim, a commit that would record what no writer can mean. */
   private def commitRetry(spark: SparkSession, root: String,
-    maxRetries: Int = 10)(
-    content: Int => (String, Seq[String])): Int = {
+    maxRetries: Int = 10)(content: Head => Commit): Int = {
     val (fs, rp) = fsFor(spark, root)
     fs.mkdirs(commitDir(rp))
     val rollover = spark.conf
@@ -1653,110 +1668,28 @@ object TxTable {
     var stagedManifests: Seq[String] = Seq.empty
     var attempt = 0
     // Any abnormal exit (non-retryable claim failure, exhausted
-    // retries, a content-builder throw) leaves the last attempt's
-    // staged manifests unreferenced — delete them on the way out
-    // instead of leaking until vacuum's orphan sweep. A SUCCESSFUL
-    // claim returns from inside the try and skips the catch: its
-    // staged manifests are referenced by the committed version.
+    // retries, a content-builder throw, a refused commit) leaves the
+    // last attempt's staged manifests unreferenced — delete them on the
+    // way out instead of leaking until vacuum's orphan sweep. A
+    // SUCCESSFUL claim returns from inside the try and skips the catch:
+    // its staged manifests are referenced by the committed version.
     try {
     while (attempt <= maxRetries) {
       // a lost race re-packs against the NEW parent; this attempt's
       // staged manifests are unreferenced — drop, don't leak
       stagedManifests.foreach(m => fs.delete(new Path(rp, m), false))
       stagedManifests = Seq.empty
-      val prevV = latestVersion(spark, root)
-      val (op, lines) = content(prevV)
-      // replay tags survive EVERY commit: carry the parent's newest
-      // per-stream batch tags forward (minus streams this commit
-      // re-tags), so an interleaved append/compaction/optimize can
-      // never reopen a streaming sink's exactly-once replay window
-      val ownStreams = lines.filter(_.startsWith("batch:"))
-        .map(tagStream).toSet
-      val carried = batchTagLines(fs, rp, prevV)
-        .filterNot(t => ownStreams.contains(tagStream(t)))
-      // the column mapping is table-level metadata like the replay
-      // tags: carried by EVERY commit unless the commit declares its
-      // own (rename/drop set a new map; rewrite ops reset with a bare
-      // `colmap:` line; restore re-instates the target version's)
-      val mapCarried =
-        if (lines.exists(_.startsWith("colmap:"))) Seq.empty
-        else snapshotColMap(fs, rp, prevV).map(colMapLine).toSeq
-      // declared-column types carry like the mapping — but an entry
-      // stays only while THIS commit's effective mapping still binds
-      // its physical name (a colmap reset/tombstone retires it), so a
-      // stale header can never invent a column
-      val schemaCarried =
-        if (lines.exists(_.startsWith("schema:"))) Seq.empty
-        else {
-          val hdr =
-            if (prevV == 0) None
-            else commitLines(fs, rp, prevV).find(_.startsWith("schema:"))
-          hdr.map(_.drop(7)).filter(_.nonEmpty).map { body =>
-            val effMap: Option[Seq[(String, String)]] =
-              lines.find(_.startsWith("colmap:")) match {
-                case Some(l) =>
-                  Some(l.drop(7)).filter(_.nonEmpty)
-                    .map(_.split(",").toSeq.map { p =>
-                      val i = p.indexOf('=')
-                      (p.substring(0, i), p.substring(i + 1))
-                    })
-                case None => snapshotColMap(fs, rp, prevV)
-              }
-            val bound = effMap.map(liveMap(_).map(_._2).toSet)
-              .getOrElse(Set.empty[String])
-            val kept = body.split(";").toSeq
-              .filter(p => bound(p.takeWhile(_ != '=')))
-            if (kept.isEmpty) Seq.empty
-            else Seq("schema:" + kept.mkString(";"))
-          }.getOrElse(Seq.empty)
-        }
-      // analyze-time NDV estimates are table-level metadata too:
-      // carried until the next analyze re-declares them (read side
-      // clamps stale estimates to the live row count)
-      val ndvCarried =
-        if (lines.exists(_.startsWith("ndv:"))) Seq.empty
-        else ndvLineOf(fs, rp, prevV).toSeq
-      // equi-height histograms carry like the ndv header — but ONLY
-      // while still provably fresh against the entry multiset THIS
-      // commit declares: once a data commit changes the multiset the
-      // lines are permanently unservable (freshAt can never pass
-      // again until the next ANALYZE), so carrying them further would
-      // put O(cols x bins) dead bytes on every later commit's
-      // planning path. The check runs only when there are lines to
-      // carry, and compares the new commit's own entry lines (the
-      // same proof the read side runs).
-      val histCarried = {
-        val c0 =
-          if (lines.exists(_.startsWith("hist:"))) Seq.empty
-          else histLinesOf(fs, rp, prevV)
-        if (c0.isEmpty) c0
-        else {
-          val newEntries = expandEntryLines(fs, rp, lines.filter(l =>
-            l.startsWith("include:") || parseEntry(l).isDefined))
-            .flatMap(parseEntry).map(_.line).sorted
-          val freshAv = scala.collection.mutable.HashMap[String, Boolean]()
-          c0.filter { hl =>
-            val av = hl.drop(5).takeWhile(_ != ';')
-            freshAv.getOrElseUpdate(av,
-              av.nonEmpty && av.forall(_.isDigit) &&
-                (try newEntries ==
-                  snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-                catch { case scala.util.control.NonFatal(_) => false }))
-          }
-        }
-      }
-      // persistent CHECK constraints carry like the column mapping:
-      // every commit keeps them unless it declares its own set (a
-      // bare `check:` line is the explicit drop-to-zero)
-      val checksCarried =
-        if (lines.exists(_.startsWith("check:"))) Seq.empty
-        else checkLines(fs, rp, prevV)
-      val (packedLines, staged) = packEntryLines(fs, rp, prevV,
-        mapCarried ++ schemaCarried ++ ndvCarried ++ histCarried ++
-          checksCarried ++ lines ++ carried,
-        rollover)
+      val head = headAt(fs, rp, latestVersion(fs, rp))
+      val prevV = head.version
+      val c0 = content(head)
+      val c = c0.copy(meta = c0.meta.copy(declared = c0.meta.liveAdded,
+        hists = freshHists(fs, rp, c0.meta.hists, c0.entryLines)))
+      verifyCommit(root, head.meta, c)
+      val (packedLines, staged) =
+        packEntryLines(fs, rp, head, c.entryLines, rollover)
       stagedManifests = staged
-      val body = (s"op:$op" +: packedLines).mkString("\n")
+      val body = (s"op:${c.op}" +: (c.meta.render(head.meta) ++ packedLines))
+        .mkString("\n")
       val claim = commitPath(rp, prevV + 1)
       try {
         if (fs.getScheme == "file") {
@@ -1827,6 +1760,53 @@ object TxTable {
     }
   }
 
+  /** The `hist:` lines still provably fresh against `entryLines` — a
+    * histogram whose entry multiset changed can never be served again
+    * until the next ANALYZE, so carrying it further would put dead
+    * bytes on every later commit's planning path. */
+  private def freshHists(fs: FileSystem, rp: Path, hists: Seq[String],
+    entryLines: Seq[String]): Seq[String] =
+    if (hists.isEmpty) hists
+    else {
+      val sorted = expandEntryLines(fs, rp, entryLines)
+        .flatMap(parseEntry).map(_.line).sorted
+      val fresh = scala.collection.mutable.HashMap[String, Boolean]()
+      hists.filter { h =>
+        val av = h.takeWhile(_ != ';')
+        fresh.getOrElseUpdate(av, analyzedOver(fs, rp, av, sorted))
+      }
+    }
+
+  /** Whether the snapshot an ANALYZE version token `av` names held
+    * exactly the entry multiset `sorted` (entry lines, sorted) — the
+    * freshness proof histograms are served and carried by. */
+  private def analyzedOver(fs: FileSystem, rp: Path, av: String,
+    sorted: Seq[String]): Boolean =
+    av.nonEmpty && av.forall(_.isDigit) &&
+      (try sorted == snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
+      catch { case scala.util.control.NonFatal(_) => false })
+
+  /** The pre-claim invariant check, on the lines already in hand (no
+    * metadata RPC): no inline entry repeats a dir (readers would serve
+    * its rows twice), none records a negative `_rows` (row counts and
+    * the positional over-count check trust it), and the headers parse
+    * back to the record they were rendered from. */
+  private def verifyCommit(root: String, parent: TableMeta,
+    c: Commit): Unit = {
+    def refuse(why: String) = throw new IllegalStateException(
+      s"txtable: refusing to commit ${c.op} to $root - $why")
+    val inline = c.entryLines.flatMap(parseEntry)
+    val seen = scala.collection.mutable.HashSet[String]()
+    inline.foreach { e =>
+      if (!seen.add(e.dir)) refuse(s"dir ${e.dir} appears twice")
+      e.stats.get(rowsKey).filter(r => r._1 < 0 || r._2 < 0).foreach { r =>
+        refuse(s"dir ${e.dir} records _rows=${r._1}:${r._2}")
+      }
+    }
+    if (TableMeta.parse(c.meta.render(parent)) != c.meta)
+      refuse("its headers do not parse back to the table metadata")
+  }
+
   /** Append `df` as a new snapshot (previous data retained).
     * `statsCols` opts integral columns into per-dir min/max stats so
     * later `read(keyRange/colRanges = ...)` lookups can prune the
@@ -1861,7 +1841,7 @@ object TxTable {
     * authoritative). */
   private def appliedBatchId(fs: FileSystem, rp: Path, v: Int,
     streamId: String): Option[Long] =
-    batchTagLines(fs, rp, v)
+    metaAt(fs, rp, v).batches
       .filter(t => tagStream(t) == streamId)
       .flatMap(t => t.substring(t.lastIndexOf(':') + 1).toLongOption)
       .maxOption
@@ -1885,7 +1865,7 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = latestVersion(spark, root)
     if (v == 0) None
-    else snapshotKeys(fs, rp, v)
+    else metaAt(fs, rp, v).keys
       .orElse(if (snapshotEntries(fs, rp, v).exists(_.isDelta)) Some(Seq("k"))
       else None)
   }
@@ -1913,10 +1893,10 @@ object TxTable {
   def merge(spark: SparkSession, root: String, changes: DataFrame,
     keyCols: Seq[String] = Seq("k")): Int = {
     val (latest, valueCols) = resolveLatest(changes, keyCols)
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
+    val rp = fsFor(spark, root)._2
+    commitRetry(spark, root) { head =>
       val base =
-        if (prevV > 0) read(spark, root, prevV)
+        if (head.version > 0) read(spark, root, head.version)
           .select((keyCols.map(col) ++
             valueCols.map(c => col(c).as(s"_base_$c"))): _*)
         else latest
@@ -1933,10 +1913,8 @@ object TxTable {
         .parquet(new Path(rp, dirName).toString)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
-      ("merge",
-        Seq(s"key:${keyCols.mkString(",")}") ++
-          snapshotColMap(fs, rp, prevV).map(_ => "colmap:").toSeq :+
-          mkEntry(spark, rp, dirName, false).line)
+      Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
+        Seq(mkEntry(spark, rp, dirName, false).line))
     }
   }
 
@@ -1970,7 +1948,7 @@ object TxTable {
     matchedDeleteCond: Option[String] = None,
     insertNotMatched: Boolean = true,
     notMatchedCond: Option[String] = None): Int = {
-    val (fs, rp) = fsFor(spark, root)
+    val rp = fsFor(spark, root)._2
     val valueCols = source.columns.filterNot(keyCols.contains).toSeq
     // cardinality check: one aggregate over the source (source-scale,
     // cheap next to the merge join itself), 0-or-1-row readback
@@ -1979,9 +1957,9 @@ object TxTable {
     require(dup.isEmpty,
       s"txtable: mergeInto source has duplicate keys (${keyCols.mkString(",")})")
     def isTrue(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
       val base =
-        if (prevV > 0) read(spark, root, prevV)
+        if (head.version > 0) read(spark, root, head.version)
         else source.filter(lit(false))
       require(base.columns.sorted.sameElements(source.columns.sorted),
         s"txtable: mergeInto source schema ${source.columns.mkString(",")} " +
@@ -2010,10 +1988,8 @@ object TxTable {
       obsOut.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
-      ("merge",
-        Seq(s"key:${keyCols.mkString(",")}") ++
-          snapshotColMap(fs, rp, prevV).map(_ => "colmap:").toSeq :+
-          mkEntry(spark, rp, dirName, false).line)
+      Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
+        Seq(mkEntry(spark, rp, dirName, false).line))
     }
   }
 
@@ -2063,7 +2039,7 @@ object TxTable {
     // callers speak the snapshot's LOGICAL names; delta FILES join
     // the table's immutable physical columns (op/seq are bookkeeping,
     // never mapped). Widening batches extend the mapping.
-    val m0 = snapshotColMap(fs, rp, latestVersion(spark, root))
+    val m0 = metaAt(fs, rp, latestVersion(fs, rp)).colMap
     val physKeys = keyCols.map(physName(m0, _))
     val (latestPhys, extMap) =
       toPhysicalFrame(latest, m0, exclude = Set("op", "seq"))
@@ -2072,24 +2048,23 @@ object TxTable {
     obsLatest.write.mode("overwrite")
       .parquet(new Path(rp, dirName).toString)
     val entry = mkEntry(spark, rp, dirName, true)
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
       // a concurrent writer may have landed the same batch between the
       // pre-check and the claim: re-check against the claim's parent
       // (and drop the staged delta dir rather than leak it)
-      if (alreadyApplied(prevV)) {
+      if (alreadyApplied(head.version)) {
         fs.delete(new Path(rp, dirName), true)
-        return prevV
+        return head.version
       }
-      preCommit(prevV)
-      val recorded = snapshotKeys(fs, rp, prevV)
+      preCommit(head.version)
+      val recorded = head.meta.keys
       require(recorded.forall(_ == physKeys),
         s"txtable: $root is keyed on ${recorded.get.mkString(",")}, " +
           s"got ${physKeys.mkString(",")}")
-      val prev = rawEntryLines(fs, rp, prevV)
-      ("delta",
-        (batchId.map(id => s"batch:$sid:$id").toSeq ++
-          extMap.map(colMapLine).toSeq ++
-          (s"key:${physKeys.mkString(",")}" +: prev)) :+ entry.line)
+      val meta = batchId.fold(head.meta)(id => head.meta.tagged(s"$sid:$id"))
+      Commit("delta", meta.rewritten(Some(physKeys), Seq.empty,
+        resetMap = false).copy(colMap = extMap.orElse(meta.colMap)),
+        head.rawEntryLines :+ entry.line)
     }
   }
 
@@ -2285,10 +2260,10 @@ object TxTable {
         .drop("_z")
         .write.partitionBy("_b").mode("overwrite")
         .parquet(new Path(rp, parent).toString)
-      val m = snapshotColMap(fs, rp, base)
+      val meta = metaAt(fs, rp, base)
       // dirs rewritten from read()'s logical output: keys move to
       // logical names and any mapping resets (see compactSnapshot)
-      val keys = snapshotKeys(fs, rp, base).map(_.map(logicalName(m, _)))
+      val keys = meta.keys.map(_.map(logicalName(meta.colMap, _)))
       val statsCols = zCols
       val buckets = fs.listStatus(new Path(rp, parent)).toSeq
         .map(_.getPath.getName).filter(_.startsWith("_b="))
@@ -2299,13 +2274,10 @@ object TxTable {
         buckets.map(b => s"$parent/$b"),
         keys.getOrElse(Seq.empty) ++ statsCols)
       try {
-        return commitRetry(spark, root) { prevV =>
-          if (prevV != base) throw new StaleOptimize
-          ("compact",
-            keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-              Seq(s"statscol:${statsCols.mkString(",")}") ++
-              m.map(_ => "colmap:").toSeq ++
-              entries.map(_.line))
+        return commitRetry(spark, root) { head =>
+          if (head.version != base) throw new StaleOptimize
+          Commit("compact", head.meta.rewritten(keys, statsCols),
+            entries.map(_.line))
         }
       } catch {
         case _: StaleOptimize =>
@@ -2350,20 +2322,20 @@ object TxTable {
       require(!entries.exists(_.isDelta),
         s"txtable: optimizeZOrderIncremental needs a delta-free " +
           s"snapshot of $root — run compactSnapshot first")
-      val m = snapshotColMap(fs, rp, base)
-      if (m.exists(_.exists { case (l, p) => l != p }))
+      val meta = metaAt(fs, rp, base)
+      if (meta.colMap.exists(_.exists { case (l, p) => l != p }))
         return optimizeZOrderN(spark, root, zCols, nDirs)
       val (clustered, tail) =
         entries.partition(_.dir.startsWith("data/zopt-"))
       if (clustered.isEmpty)
         return optimizeZOrderN(spark, root, zCols, nDirs)
       if (tail.isEmpty) return base
-      val keys = snapshotKeys(fs, rp, base)
-      val statsCols = snapshotStatsCols(fs, rp, base)
+      val keys = meta.keys
+      val statsCols = meta.statsCols
       val parent = s"data/zopt-${java.util.UUID.randomUUID()}"
       // per-dir default fill BEFORE the union — the re-clustered
       // files must carry the default, not a materialized NULL
-      val addedNow = liveAddedCols(fs, rp, base)
+      val addedNow = meta.liveAdded
       val tailDf = tail
         .map(e => fillDeclaredDefaults(visibleDirFrame(spark, rp, e),
           addedNow))
@@ -2397,13 +2369,11 @@ object TxTable {
         buckets.map(b => s"$parent/$b"),
         (keys.getOrElse(Seq.empty) ++ statsCols ++ zCols).distinct)
       try {
-        return commitRetry(spark, root) { prevV =>
-          if (prevV != base) throw new StaleOptimize
-          ("compact",
-            keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-              Seq(s"statscol:${
-                (statsCols ++ zCols).distinct.mkString(",")}") ++
-              clustered.map(_.line) ++ newEntries.map(_.line))
+        return commitRetry(spark, root) { head =>
+          if (head.version != base) throw new StaleOptimize
+          Commit("compact", head.meta.rewritten(keys,
+            (statsCols ++ zCols).distinct, resetMap = false),
+            clustered.map(_.line) ++ newEntries.map(_.line))
         }
       } catch {
         case _: StaleOptimize =>
@@ -2430,36 +2400,31 @@ object TxTable {
     // by the resolved read, column mapping reset like the plain path.
     bucketSpecOf(spark, root) match {
       case Some((bcol, n)) =>
-        val v = latestVersion(spark, root)
-        val m = snapshotColMap(fs, rp, v)
+        val meta = metaAt(fs, rp, latestVersion(fs, rp))
         return appendBucketedBy(read(spark, root), root, bcol, n,
-          statsCols =
-            snapshotStatsCols(fs, rp, v).map(logicalName(m, _)),
+          statsCols = meta.statsCols.map(logicalName(meta.colMap, _)),
           replace = true)
       case None => ()
     }
-    commitRetry(spark, root) { prevV =>
-      require(prevV > 0, s"txtable: nothing to compact at $root")
-      val m = snapshotColMap(fs, rp, prevV)
-      val resolved = read(spark, root, prevV)
+    commitRetry(spark, root) { head =>
+      require(head.version > 0, s"txtable: nothing to compact at $root")
+      val m = head.meta.colMap
+      val resolved = read(spark, root, head.version)
       val dirName = s"data/compact-${java.util.UUID.randomUUID()}"
       // the new dir is born under the LOGICAL names (read's output),
       // materializing any renames and shedding drop tombstones — so
       // the key/stats headers move to logical and the mapping RESETS
       // (bare colmap: line); time travel still serves old versions
       // under their own maps
-      val keys = snapshotKeys(fs, rp, prevV).map(_.map(logicalName(m, _)))
-      val statsCols =
-        snapshotStatsCols(fs, rp, prevV).map(logicalName(m, _))
+      val keys = head.meta.keys.map(_.map(logicalName(m, _)))
+      val statsCols = head.meta.statsCols.map(logicalName(m, _))
       val (obsResolved, mkEntry) = observeStats(resolved,
         keys.getOrElse(Seq.empty) ++ statsCols)
       obsResolved.write.mode("overwrite")
         .parquet(new Path(rp, dirName).toString)
       val entry = mkEntry(spark, rp, dirName, false)
-      ("compact",
-        keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-          (if (statsCols.nonEmpty) Seq(s"statscol:${statsCols.mkString(",")}")
-           else Seq.empty) ++ m.map(_ => "colmap:").toSeq :+ entry.line)
+      Commit("compact", head.meta.rewritten(keys, statsCols),
+        Seq(entry.line))
     }
   }
 
@@ -2494,19 +2459,20 @@ object TxTable {
     targetBytes: Long = 128L * 1024 * 1024): Int = {
     val (fs, rp) = fsFor(spark, root)
     var staged: Seq[String] = Seq.empty
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
+      val prevV = head.version
       staged.foreach(d => fs.delete(new Path(rp, d), true))
       staged = Seq.empty
       require(prevV > 0, s"txtable: nothing to optimize at $root")
-      val entries = snapshotEntries(fs, rp, prevV)
+      val entries = headEntries(fs, rp, head)
       require(!entries.exists(_.isDelta),
         s"txtable: optimizeCompact needs a delta-free snapshot of $root " +
           "— run compactSnapshot first")
       val sized = entrySizes(spark, rp, entries)
       if (sized.count(_._2 < targetBytes) < 2)
         return prevV // nothing worth packing; no empty commit
-      val keys = snapshotKeys(fs, rp, prevV)
-      val statsCols = snapshotStatsCols(fs, rp, prevV)
+      val keys = head.meta.keys
+      val statsCols = head.meta.statsCols
       // PARTITION-AWARE packing: a provably partition-clustered table
       // (the streamed-ingest shape — many small per-epoch dirs, each
       // single-valued and null-free on its partition columns) must
@@ -2529,7 +2495,7 @@ object TxTable {
       // the group key (when every live dir carries it — a broken
       // layout packs like a plain table, the header rides harmlessly
       // and the face's own slices proof decides)
-      val bspec = bucketSpecAt(fs, rp, prevV).filter(_ =>
+      val bspec = head.meta.bucketBy.filter(_ =>
         nonEmpty.nonEmpty && nonEmpty.forall(e =>
           e.stats.get(bucketStatKey).exists(s => s._1 == s._2)))
       def groupOf(e: Entry): Seq[Long] =
@@ -2564,7 +2530,7 @@ object TxTable {
           val dirName = s"data/opt-${java.util.UUID.randomUUID()}"
           // the fill is PER DIR: unioning first would null-fill the
           // pre-ADD dirs' rows for a column another bin member carries
-          val addedNow = liveAddedCols(fs, rp, prevV)
+          val addedNow = head.meta.liveAdded
           val merged = bin
             .map(e => fillDeclaredDefaults(
               visibleDirFrame(spark, rp, e), addedNow))
@@ -2583,16 +2549,9 @@ object TxTable {
               stats = entry.stats + (bucketStatKey -> id))).line
         }
       }
-      // the entry list replaces wholesale, so re-emit the declared
-      // bucketby/key/statscol headers; the colmap carries
-      // automatically via commitRetry (renames stay metadata)
-      ("compact",
-        bucketSpecAt(fs, rp, prevV)
-          .map { case (c, n) => s"bucketby:$c,$n" }.toSeq ++
-          keys.map(ks => s"key:${ks.mkString(",")}").toSeq ++
-          (if (statsCols.nonEmpty)
-            Seq(s"statscol:${statsCols.mkString(",")}")
-           else Seq.empty) ++ newLines)
+      // content-preserving: every header carries (renames stay
+      // metadata, the bucket layout survives the within-bucket pack)
+      Commit("compact", head.meta, newLines)
     }
   }
 
@@ -2632,7 +2591,8 @@ object TxTable {
     require(!entries.exists(_.isDelta),
       s"txtable: SQL DML needs a delta-free snapshot of $root — " +
         "run compactSnapshot first")
-    val m = snapshotColMap(fs, rp, v)
+    val meta = metaAt(fs, rp, v)
+    val m = meta.colMap
     // pushed filters are a subset of the condition: they refute only
     val affected = triage(filters, whole = false, entries, m)
       .collect { case (e, fate) if fate != Refuted => e }
@@ -2650,10 +2610,9 @@ object TxTable {
         }
       fmap.getOrElse(e.dir, Seq.empty).map(f => CowFile(f, e.dir, pdFiles))
     }
-    val added = liveAddedCols(fs, rp, v)
+    val added = meta.liveAdded
     CowPlan(v, m, affected.map(_.dir), affected.map(_.line), files,
-      snapshotKeys(fs, rp, v).getOrElse(Seq.empty),
-      snapshotStatsCols(fs, rp, v),
+      meta.keys.getOrElse(Seq.empty), meta.statsCols,
       added.map(_.phys).toSet,
       added.collect { case c if c.default.isDefined =>
         c.phys -> c.internalDefault }.toMap)
@@ -2689,7 +2648,7 @@ object TxTable {
     * `_rows`; more of them than `_rows` means the entry is wrong, and
     * dropping the dir on equality could then lose live rows. */
   private def swapCommit(spark: SparkSession, root: String, op: String)(
-    prepare: (String => String) => (Int, Seq[Entry]) => DirSwap): Int = {
+    prepare: (String => String) => (Head, Seq[Entry]) => DirSwap): Int = {
     val (fs, rp) = fsFor(spark, root)
     var prepared, attempt = Vector.empty[String]
     var claiming = false
@@ -2704,12 +2663,12 @@ object TxTable {
     try {
       val plan = prepare(stage)
       claiming = true
-      val v = commitRetry(spark, root) { prevV =>
+      val v = commitRetry(spark, root) { head =>
         delete(attempt)
         attempt = Vector.empty
         emptied = Seq.empty
-        val entries = snapshotEntries(fs, rp, prevV)
-        val swap = plan(prevV, entries)
+        val entries = headEntries(fs, rp, head)
+        val swap = plan(head, entries)
         val present = entries.map(_.line).toSet
         val gone = swap.read.keys.filterNot(present).toSeq
         if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
@@ -2742,15 +2701,11 @@ object TxTable {
             val src = entries.head.dir
             val d = writeEmptyDir(spark, rp,
               stage(s"data/$op-${java.util.UUID.randomUUID()}"),
-              dirSparkSchemas(spark, rp, Seq(src))(src))
+              dirSchemas(spark, rp, Seq(src))(src))
             Seq(statsEntry(spark, rp, d, swap.keys ++ swap.statsCols).line)
           }
-        (op,
-          (if (swap.keys.nonEmpty) Seq(s"key:${swap.keys.mkString(",")}")
-           else Seq.empty) ++
-            (if (swap.statsCols.nonEmpty)
-              Seq(s"statscol:${swap.statsCols.mkString(",")}")
-             else Seq.empty) ++ kept)
+        Commit(op, head.meta.rewritten(Some(swap.keys).filter(_.nonEmpty),
+          swap.statsCols, resetMap = false), kept)
       }
       delete(emptied)
       v
@@ -2776,14 +2731,31 @@ object TxTable {
     dirName
   }
 
-  /** Write dir `dirName` as one zero-row parquet file carrying
-    * `schema` — no Spark job; returns `dirName`. */
+  /** Write dir `dirName` as one zero-row parquet file carrying the
+    * parquet `schema` as given (nested columns included) — no Spark
+    * job; returns `dirName`. */
   private def writeEmptyDir(spark: SparkSession, rp: Path, dirName: String,
-    schema: org.apache.spark.sql.types.StructType): String = {
-    TxParquetIO.writer(new Path(new Path(rp, dirName), "part-empty.parquet"),
-      schema, spark.sessionState.newHadoopConf()).close()
+    schema: org.apache.parquet.schema.MessageType): String = {
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    val w = new ParquetFileWriter(
+      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new Path(new Path(rp, dirName), "part-empty.parquet"),
+        spark.sessionState.newHadoopConf()),
+      schema, ParquetFileWriter.Mode.CREATE,
+      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null,
+      org.apache.parquet.column.ParquetProperties.builder().build())
+    w.start()
+    w.end(java.util.Collections.emptyMap[String, String]())
     dirName
   }
+
+  /** The parquet schema Spark writes for `schema`. */
+  private def parquetSchemaOf(
+    schema: org.apache.spark.sql.types.StructType)
+    : org.apache.parquet.schema.MessageType =
+    new org.apache.spark.sql.execution.datasources.parquet
+      .SparkToParquetSchemaConverter(
+        org.apache.spark.sql.internal.SQLConf.get).convert(schema)
 
   /** Commit a group-based rewrite: swap `plan`'s affected dirs for ONE
     * new data dir holding the staged files (stats computed over it).
@@ -2811,8 +2783,7 @@ object TxTable {
   private[sources] def colMapOf(spark: SparkSession,
     root: String): Option[Seq[(String, String)]] = {
     val (fs, rp) = fsFor(spark, root)
-    val v = latestVersion(spark, root)
-    if (v == 0) None else snapshotColMap(fs, rp, v)
+    metaAt(fs, rp, latestVersion(fs, rp)).colMap
   }
 
   /** Commit executor-staged parquet files as one new data dir —
@@ -2861,38 +2832,34 @@ object TxTable {
       if (replace) "overwrite" else "append", staged)
     val dirPath = new Path(rp, dirName)
     // empty INSERT OVERWRITE: a zero-row file carries the schema
-    if (staged.isEmpty) writeEmptyDir(spark, rp, dirName, writeSchema)
-    try commitRetry(spark, root) { prevV =>
+    if (staged.isEmpty)
+      writeEmptyDir(spark, rp, dirName, parquetSchemaOf(writeSchema))
+    try commitRetry(spark, root) { head =>
       // a table's FIRST content (bootstrap INSERT, or replace-all)
       // declares its stats columns: write-time per-dir stats are what
       // feed dir pruning, metadata aggregates and the CBO, and a
       // SQL-first table should get them without the Scala API
-      def bootstrapHdr(cols: Seq[String]): Seq[String] =
-        if (cols.isEmpty) Seq.empty
-        else Seq(s"statscol:${cols.mkString(",")}")
       if (replace) {
-        val hadMap = prevV > 0 && snapshotColMap(fs, rp, prevV).isDefined
         val entry = statsEntry(spark, rp, dirName, bootstrapStatsCols)
-        ("overwrite",
-          (if (hadMap) Seq("colmap:") else Seq.empty) ++
-            bootstrapHdr(bootstrapStatsCols) :+ entry.line)
+        Commit("overwrite", head.meta.rewritten(None, bootstrapStatsCols),
+          Seq(entry.line))
       } else {
-        val statsCols =
-          if (prevV == 0) bootstrapStatsCols
-          else snapshotKeys(fs, rp, prevV).getOrElse(Seq.empty) ++
-            snapshotStatsCols(fs, rp, prevV)
-        if (bucketSpecAt(fs, rp, prevV).isDefined) {
+        if (head.meta.bucketBy.isDefined) {
           fs.delete(dirPath, true)
           throw new IllegalStateException(
             s"txtable: $root is bucket-clustered; INSERT INTO would " +
               "break the layout - appendBucketedBy maintains it, " +
               "INSERT OVERWRITE replaces it")
         }
-        val entry = statsEntry(spark, rp, dirName, statsCols.distinct)
-        ("append",
-          (if (prevV == 0) bootstrapHdr(statsCols.distinct)
-           else Seq.empty) ++
-            snapshotLines(fs, rp, prevV) :+ entry.line)
+        val statsCols =
+          if (head.version == 0) bootstrapStatsCols.distinct
+          else (head.meta.keys.getOrElse(Seq.empty) ++
+            head.meta.statsCols).distinct
+        val entry = statsEntry(spark, rp, dirName, statsCols)
+        Commit("append",
+          if (head.version == 0) head.meta.copy(statsCols = statsCols)
+          else head.meta,
+          head.rawEntryLines :+ entry.line)
       }
     } catch {
       case e: Throwable =>
@@ -3038,17 +3005,17 @@ object TxTable {
   def deleteWhere(spark: SparkSession, root: String, predSql: String,
     positional: Boolean = false): Int = {
     val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, "delete") { stage => (prevV, entries) =>
-      require(prevV > 0, s"txtable: nothing to delete from at $root")
+    swapCommit(spark, root, "delete") { stage => (head, entries) =>
+      require(head.version > 0, s"txtable: nothing to delete from at $root")
       require(!entries.exists(_.isDelta),
         s"txtable: deleteWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
-      val keys = snapshotKeys(fs, rp, prevV).getOrElse(Seq.empty)
-      val statsCols = snapshotStatsCols(fs, rp, prevV)
+      val keys = head.meta.keys.getOrElse(Seq.empty)
+      val statsCols = head.meta.statsCols
       // callers speak logical names: the triage maps them to the
       // physical stats, and the predicate evaluates over logical
       // aliases laid over each physical dir frame
-      val m = snapshotColMap(fs, rp, prevV)
+      val m = head.meta.colMap
       val fates = predicateTriage(spark, rp, predSql, entries, m)
       val coords = if (!positional) Seq.empty else fates.collect {
         case (e, Opened) =>
@@ -3200,10 +3167,10 @@ object TxTable {
       StringType).contains(dtB),
       s"txtable: bucket column must be integral, date or string, " +
         s"got $dtB")
-    val v0 = latestVersion(spark, root)
-    val (guarded, verifyChecks) =
-      checkGuard(df, checkConstraints(spark, root, v0))
-    val m0 = snapshotColMap(fs, rp, v0)
+    val head0 = headAt(fs, rp, latestVersion(fs, rp))
+    val meta0 = head0.meta
+    val (guarded, verifyChecks) = checkGuard(df, meta0.checks)
+    val m0 = meta0.colMap
     // replace-all content is born LOGICAL and resets the column
     // mapping, exactly like [[overwrite]]; appends translate under
     // the snapshot's mapping
@@ -3215,20 +3182,20 @@ object TxTable {
     // table's first content — a bucketed append onto unbucketed live
     // content would leave a mixed layout no proof can serve. A
     // replace REPLACES content, so any prior layout is legitimate.
-    def requireCompat(v: Int): Unit =
-      if (!replace) bucketSpecAt(fs, rp, v) match {
+    def requireCompat(h: Head): Unit =
+      if (!replace) h.meta.bucketBy match {
         case Some((c, n)) => require(c == physB && n == numBuckets,
           s"txtable: $root is bucketed as bucketby:$c,$n - an append " +
             s"bucketed by $physB,$numBuckets does not match")
         case None =>
-          val live = v > 0 && snapshotEntries(fs, rp, v)
+          val live = headEntries(fs, rp, h)
             .exists(e => e.stats.get(rowsKey).forall(_._1 > 0))
           require(!live,
             s"txtable: $root has unbucketed content; a bucketed " +
               "append would leave a mixed layout - overwrite first, " +
               "then appendBucketedBy")
       }
-    requireCompat(v0)
+    requireCompat(head0)
     val helper = "_graft_bkt"
     val baseDir = s"data/append-${java.util.UUID.randomUUID()}"
     val basePath = new Path(rp, baseDir).toString
@@ -3272,28 +3239,17 @@ object TxTable {
         e.copy(stats = e.stats + (bucketStatKey -> (id, id)),
           xvals = Map.empty)
       })
-    try commitRetry(spark, root) { prevV =>
-      requireCompat(prevV)
-      val prev0 =
-        if (replace) Seq.empty
-        else snapshotLines(fs, rp, prevV)
-          .filterNot(_.startsWith("bucketby:"))
-      val prev =
-        if (extMap.isDefined) prev0.filterNot(_.startsWith("colmap:"))
-        else prev0
-      val mapHdr =
-        if (replace) snapshotColMap(fs, rp, prevV)
-          .map(_ => "colmap:").toSeq
-        else extMap.map(colMapLine).toSeq
+    try commitRetry(spark, root) { head =>
+      requireCompat(head)
       val physStats = agg.integral ++ agg.strings
-      val statsHdr =
-        if (prev.exists(_.startsWith("statscol:")) || physStats.isEmpty)
-          None
-        else Some(s"statscol:${physStats.mkString(",")}")
-      (if (replace) "overwrite" else "append",
-        Seq(s"bucketby:$physB,$numBuckets") ++
-          statsHdr.toSeq ++ mapHdr ++
-          prev ++ entries.map(_.line))
+      val bucketed = Some(physB -> numBuckets)
+      if (replace)
+        Commit("overwrite", head.meta.rewritten(None, physStats)
+          .copy(bucketBy = bucketed), entries.map(_.line))
+      else
+        Commit("append", head.meta.copy(bucketBy = bucketed,
+          colMap = extMap.orElse(head.meta.colMap)).withStats(physStats),
+          head.rawEntryLines ++ entries.map(_.line))
     } catch {
       case t: Throwable =>
         fs.delete(new Path(rp, baseDir), true)
@@ -3345,18 +3301,17 @@ object TxTable {
     // like plain append (widening extends the map); the CHECK guard
     // wraps the LOGICAL frame (constraints speak logical names) and
     // its counts ride the same single pass as the partitioned write
-    val v0 = latestVersion(spark, root)
+    val meta0 = metaAt(fs, rp, latestVersion(fs, rp))
     // value-partitioned appends break a hash-bucketed layout exactly
     // like plain appends do — refuse loudly
-    bucketSpecAt(fs, rp, v0).foreach { case (c, n) =>
+    meta0.bucketBy.foreach { case (c, n) =>
       throw new IllegalStateException(
         s"txtable: $root is bucket-clustered (bucketby:$c,$n); a " +
           "value-partitioned append would break the layout - " +
           "appendBucketedBy maintains it, overwrite replaces it")
     }
-    val (guarded, verifyChecks) =
-      checkGuard(df, checkConstraints(spark, root, v0))
-    val m0 = snapshotColMap(fs, rp, v0)
+    val (guarded, verifyChecks) = checkGuard(df, meta0.checks)
+    val m0 = meta0.colMap
     val (physDf0, extMap) = toPhysicalFrame(guarded, m0)
     val effMap = extMap.orElse(m0)
     val physParts = partCols.map(physName(effMap, _))
@@ -3511,29 +3466,22 @@ object TxTable {
         sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
         xvals = e.xvals ++ strHex)
     })
-    commitRetry(spark, root) { prevV =>
-      if (skipIf(prevV)) {
+    commitRetry(spark, root) { head =>
+      if (skipIf(head.version)) {
         fs.delete(new Path(rp, baseDir), true)
-        return prevV
+        return head.version
       }
-      preCommit(prevV)
-      val prev0 = snapshotLines(fs, rp, prevV)
-      if (prev0.exists(_.startsWith("bucketby:"))) {
+      preCommit(head.version)
+      if (head.meta.bucketBy.isDefined) {
         fs.delete(new Path(rp, baseDir), true)
         throw new IllegalStateException(
           s"txtable: $root became bucket-clustered concurrently; " +
             "value-partitioned appends would break the layout")
       }
-      val prev =
-        if (extMap.isDefined) prev0.filterNot(_.startsWith("colmap:"))
-        else prev0
-      val statsHdr =
-        if (prev.exists(_.startsWith("statscol:"))) None
-        else Some(s"statscol:${
-          (physParts ++ statsCols.map(physName(effMap, _))).mkString(",")}")
-      ("append", batchTag.map(t => s"batch:$t").toSeq ++
-        statsHdr.toSeq ++ extMap.map(colMapLine).toSeq ++
-        prev ++ entries.map(_.line))
+      val meta = batchTag.fold(head.meta)(head.meta.tagged)
+      Commit("append", meta.copy(colMap = extMap.orElse(meta.colMap))
+        .withStats(physParts ++ statsCols.map(physName(effMap, _))),
+        head.rawEntryLines ++ entries.map(_.line))
     }
   }
 
@@ -3636,17 +3584,17 @@ object TxTable {
     }
     // an empty epoch still commits its tag (replay-protection cursor)
     if (stagedFiles.isEmpty)
-      return commitRetry(spark, root) { prevV =>
-        if (alreadyApplied(prevV)) return prevV
-        preCommit(prevV)
-        ("append", s"batch:$tag" +: snapshotLines(fs, rp, prevV))
+      return commitRetry(spark, root) { head =>
+        if (alreadyApplied(head.version)) return head.version
+        preCommit(head.version)
+        Commit("append", head.meta.tagged(tag), head.rawEntryLines)
       }
     val conf = spark.sessionState.newHadoopConf()
     def rewriteFallback(): Int = appendPartitionedTagged(
       spark.read.parquet(stagedFiles: _*), root, partCols, statsCols,
       Some(tag), alreadyApplied, preCommit)
     // fast path needs file column names == snapshot physical names
-    val m = snapshotColMap(fs, rp, latestVersion(spark, root))
+    val m = metaAt(fs, rp, latestVersion(fs, rp)).colMap
     if (m.exists(_.exists { case (l, p) => l != p })) return rewriteFallback()
     // footer facts for every staged file, overlapped like dirSchemas
     val wanted = partCols ++ statsCols
@@ -3696,24 +3644,21 @@ object TxTable {
     val baseDir = s"data/append-${java.util.UUID.randomUUID()}"
     val entries = promotePartEntries(fs, rp, baseDir, partCols, statsCols,
       keyed.map { case (f, sf, t) => (f, sf, t.get) })
-    commitRetry(spark, root) { prevV =>
-      if (alreadyApplied(prevV)) {
+    commitRetry(spark, root) { head =>
+      if (alreadyApplied(head.version)) {
         fs.delete(new Path(rp, baseDir), true)
-        return prevV
+        return head.version
       }
-      preCommit(prevV)
-      val prev = snapshotLines(fs, rp, prevV)
-      if (prev.exists(_.startsWith("bucketby:"))) {
+      preCommit(head.version)
+      if (head.meta.bucketBy.isDefined) {
         fs.delete(new Path(rp, baseDir), true)
         throw new IllegalStateException(
           s"txtable: $root is bucket-clustered; a partitioned " +
             "streaming append would break the layout")
       }
-      val statsHdr =
-        if (prev.exists(_.startsWith("statscol:"))) None
-        else Some(s"statscol:${(partCols ++ statsCols).mkString(",")}")
-      ("append", Seq(s"batch:$tag") ++ statsHdr.toSeq ++
-        prev ++ entries.map(_.line))
+      Commit("append",
+        head.meta.tagged(tag).withStats(partCols ++ statsCols),
+        head.rawEntryLines ++ entries.map(_.line))
     }
   }
 
@@ -3816,10 +3761,11 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(fs, rp)
     if (v == 0) return Seq.empty
-    if (snapshotKeys(fs, rp, v).isDefined) return Seq.empty
+    val meta = metaAt(fs, rp, v)
+    if (meta.keys.isDefined) return Seq.empty
     // a hash-bucketed layout's `_graft_bkt=<id>` dirs are NOT value
     // partitions — the bucket face reports them, not this one
-    if (bucketSpecAt(fs, rp, v).isDefined) return Seq.empty
+    if (meta.bucketBy.isDefined) return Seq.empty
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return Seq.empty
     val segNames: Seq[Option[Seq[String]]] = entries.map { e =>
@@ -3830,7 +3776,7 @@ object TxTable {
     if (segNames.exists(_.isEmpty)) return Seq.empty
     val distinctShapes = segNames.flatten.distinct
     if (distinctShapes.size != 1) return Seq.empty
-    val m = snapshotColMap(fs, rp, v)
+    val m = meta.colMap
     // physical → logical; a physical with no live binding (dropped
     // partition column) disproves the layout for the SQL face
     val phys = distinctShapes.head
@@ -3928,9 +3874,9 @@ object TxTable {
       s"txtable: unknown partitioned-commit mode '$mode'")
     val (fs, rp) = fsFor(spark, root)
     if (staged.isEmpty && mode == "append") return latestVersion(spark, root)
-    val v0 = latestVersion(spark, root)
-    val m = snapshotColMap(fs, rp, v0)
-    val physParts = logicalParts.map(physName(m, _))
+    val v0 = latestVersion(fs, rp)
+    val meta0 = metaAt(fs, rp, v0)
+    val physParts = logicalParts.map(physName(meta0.colMap, _))
     physParts.foreach(requireStatsGrammarSafe)
     staged.foreach { case (_, t) =>
       t.foreach {
@@ -3946,8 +3892,7 @@ object TxTable {
     // BOOTSTRAP load declares its own (integral bounds only — that's
     // what footers prove; see stagedFacts)
     val statsCols =
-      (if (v0 == 0) bootstrapStatsCols
-       else snapshotStatsCols(fs, rp, v0))
+      (if (v0 == 0) bootstrapStatsCols else meta0.statsCols)
         .filterNot(physParts.contains).distinct
     val conf = spark.sessionState.newHadoopConf()
     val facts: Map[String, StagedFacts] =
@@ -3984,12 +3929,12 @@ object TxTable {
       }
     }
     var emptyDir: Option[String] = None
-    try commitRetry(spark, root) { prevV =>
-      val entries0 = snapshotEntries(fs, rp, prevV)
+    try commitRetry(spark, root) { head =>
+      val entries0 = headEntries(fs, rp, head)
       require(!entries0.exists(_.isDelta),
         s"txtable: partitioned SQL writes need a delta-free snapshot " +
           s"of $root — run compactSnapshot first")
-      require(snapshotKeys(fs, rp, prevV).isEmpty,
+      require(head.meta.keys.isEmpty,
         s"txtable: partitioned SQL writes refuse keyed tables " +
           s"($root declares key columns)")
       def tupleOrRefuse(e: Entry): Option[Seq[Any]] =
@@ -4022,20 +3967,15 @@ object TxTable {
         else {
           val dirName = emptyDir.getOrElse {
             val d = writeEmptyDir(spark, rp,
-              s"data/$opName-${java.util.UUID.randomUUID()}", fileSchema)
+              s"data/$opName-${java.util.UUID.randomUUID()}",
+              parquetSchemaOf(fileSchema))
             emptyDir = Some(d)
             d
           }
           Seq(statsEntry(spark, rp, dirName, Seq.empty).line)
         }
-      val statsHdr =
-        if (prevV > 0 && snapshotStatsCols(fs, rp, prevV).nonEmpty)
-          Some(s"statscol:${
-            snapshotStatsCols(fs, rp, prevV).mkString(",")}")
-        else if (physParts.nonEmpty)
-          Some(s"statscol:${(physParts ++ statsCols).mkString(",")}")
-        else None
-      (opName, statsHdr.toSeq ++ lines)
+      Commit(opName, head.meta.copy(bucketBy = None).withStats(
+        if (physParts.isEmpty) Seq.empty else physParts ++ statsCols), lines)
     } catch {
       case e: Throwable =>
         fs.delete(new Path(rp, baseDir), true)
@@ -4058,14 +3998,14 @@ object TxTable {
     sets: Map[String, String]): Int = {
     require(sets.nonEmpty, "txtable: updateWhere needs at least one SET")
     val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, "update") { stage => (prevV, entries) =>
-      require(prevV > 0, s"txtable: nothing to update at $root")
+    swapCommit(spark, root, "update") { stage => (head, entries) =>
+      require(head.version > 0, s"txtable: nothing to update at $root")
       require(!entries.exists(_.isDelta),
         s"txtable: updateWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
-      val keys = snapshotKeys(fs, rp, prevV).getOrElse(Seq.empty)
-      val statsCols = snapshotStatsCols(fs, rp, prevV)
-      val m = snapshotColMap(fs, rp, prevV)
+      val keys = head.meta.keys.getOrElse(Seq.empty)
+      val statsCols = head.meta.statsCols
+      val m = head.meta.colMap
       // SETs address the snapshot's LOGICAL columns; rewritten rows
       // keep the dir's physical schema
       val physSets = sets.map { case (c, ex) => physName(m, c) -> ex }
@@ -4617,7 +4557,7 @@ object TxTable {
     // declared DEFAULT columns fill exactly as on the plain read
     // path — PER DIR on the union branches (a pre-ADD dir next to a
     // post-ADD dir must read the default, not union-null)
-    val added = liveAddedCols(fs, rp, v)
+    val added = metaAt(fs, rp, v).liveAdded
     def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, added)
     val df =
       // kept dirs with positional deletes read their VISIBLE rows
@@ -5389,9 +5329,9 @@ object TxTable {
       var acc = Map.empty[String, String]
       ((fromV + 1) to hi).reverse.map { v =>
         val here = v -> acc
-        val mPrev = snapshotColMap(fs, rp, v - 1)
+        val mPrev = metaAt(fs, rp, v - 1).colMap
         if (Set("merge", "overwrite", "compact").contains(opOf(v)) &&
-          snapshotColMap(fs, rp, v).isEmpty && mPrev.nonEmpty)
+          metaAt(fs, rp, v).colMap.isEmpty && mPrev.nonEmpty)
           acc = acc ++ liveMap(mPrev.get).collect {
             case (l, p) if p != l => p -> acc.getOrElse(l, l)
           }
@@ -5422,7 +5362,7 @@ object TxTable {
           // every replace-style commit, including row-level CoW DML
           // (a GDPR deleteWhere, an updateWhere backfill), feeds
           // downstream consumers through the keyed snapshot diff
-          val keys = snapshotKeys(fs, rp, v).getOrElse(
+          val keys = metaAt(fs, rp, v).keys.getOrElse(
             throw new IllegalArgumentException(
               s"txtable: v$v of $root replaced content without a key " +
                 "declaration - no row identity to derive a change feed from"))
@@ -5465,8 +5405,8 @@ object TxTable {
     val raw = readResolved(spark, root, v - 1)
     if (cur.columns.forall(raw.columns.contains)) raw
     else {
-      val logical = toLogical(raw, snapshotColMap(fs, rp, v - 1))
-      val mTo = snapshotColMap(fs, rp, v)
+      val logical = toLogical(raw, metaAt(fs, rp, v - 1).colMap)
+      val mTo = metaAt(fs, rp, v).colMap
       logical.select(logical.columns.toSeq
         .map(c => col(c).as(physName(mTo, c))): _*)
     }
@@ -5566,7 +5506,7 @@ object TxTable {
           val stagedDir = f"_changes/v$v%08d"
           val staged = new Path(rp, stagedDir)
           if (!fs.exists(staged)) {
-            val keys = snapshotKeys(fs, rp, v).getOrElse(
+            val keys = metaAt(fs, rp, v).keys.getOrElse(
               throw new IllegalArgumentException(
                 s"txtable: v$v of $root replaced content without a key " +
                   "declaration - no row identity to derive a change feed from"))
@@ -5673,18 +5613,15 @@ object TxTable {
       s"txtable: cannot restore $root to v$toVersion")
     require(fs.exists(commitPath(rp, toVersion)),
       s"txtable: v$toVersion of $root was vacuumed - nothing to restore")
-    val lines = snapshotLines(fs, rp, toVersion)
-    commitRetry(spark, root) { prevV =>
-      // restoring to a version that predates the column mapping must
-      // roll the NAMES back with the data: the target's lines carry no
-      // colmap, so without an explicit bare reset commitRetry would
-      // re-inject HEAD's mapping and the restore would keep HEAD's
-      // renames/drop tombstones over the restored content
-      val reset =
-        if (!lines.exists(_.startsWith("colmap:")) &&
-          snapshotColMap(fs, rp, prevV).isDefined) Seq("colmap:")
-        else Seq.empty
-      ("restore", reset ++ lines)
+    val target = headAt(fs, rp, toVersion)
+    commitRetry(spark, root) { head =>
+      // the NAMES roll back with the data: a target that predates the
+      // column mapping clears HEAD's, so HEAD's renames/drop tombstones
+      // never survive over the restored content
+      val t = target.meta
+      Commit("restore", head.meta.copy(keys = t.keys,
+        statsCols = t.statsCols, bucketBy = t.bucketBy, colMap = t.colMap),
+        target.rawEntryLines)
     }
   }
 
@@ -5710,19 +5647,16 @@ object TxTable {
         .makeQualified(fs.getUri, fs.getWorkingDirectory)
       e.copy(dir = abs.toUri.getPath)
     }
-    val headers =
-      snapshotKeys(fs, srp, v).map(ks => s"key:${ks.mkString(",")}").toSeq ++
-        (snapshotStatsCols(fs, srp, v) match {
-          case Seq() => Seq.empty
-          case cs => Seq(s"statscol:${cs.mkString(",")}")
-        }) ++
-        // the clone borrows the source's physical files, so it must
-        // borrow the cloned version's column mapping with them — a
-        // clone of a renamed table reads under the renamed names
-        snapshotColMap(fs, srp, v).map(colMapLine).toSeq
-    commitRetry(spark, dstRoot) { prevV =>
-      require(prevV == 0, s"txtable: clone target $dstRoot gained commits")
-      ("clone", headers ++ absolute.map(_.line))
+    val src = metaAt(fs, srp, v)
+    commitRetry(spark, dstRoot) { head =>
+      require(head.version == 0,
+        s"txtable: clone target $dstRoot gained commits")
+      // the clone borrows the source's physical files, so it must
+      // borrow the cloned version's column mapping with them — a
+      // clone of a renamed table reads under the renamed names
+      Commit("clone", head.meta.copy(keys = src.keys,
+        statsCols = src.statsCols, colMap = src.colMap),
+        absolute.map(_.line))
     }
   }
 
@@ -5745,16 +5679,6 @@ object TxTable {
   }
   private val rowsKey = "_rows"
 
-  /** The commit's NDV header line (`ndv:<analyzedVersion>;<phys>=<n>,
-    * ...`), carried forward by every commit like the column mapping. */
-  private def ndvLineOf(fs: FileSystem, rp: Path, v: Int): Option[String] =
-    if (v <= 0) None
-    else commitLines(fs, rp, v).find(_.startsWith("ndv:"))
-
-  private def histLinesOf(fs: FileSystem, rp: Path, v: Int): Seq[String] =
-    if (v <= 0) Seq.empty
-    else commitLines(fs, rp, v).filter(_.startsWith("hist:"))
-
   /** Equi-height histograms of snapshot `version` by LOGICAL name —
     * (height, bins as (lo, hi, ndv)) — served ONLY while provably
     * fresh (the analyze-time entry multiset is unchanged; a stale
@@ -5769,7 +5693,8 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     if (v == 0) return Map.empty
-    val lines = histLinesOf(fs, rp, v)
+    val f = commitFile(fs, rp, v)
+    val lines = f.meta.hists
     if (lines.isEmpty) return Map.empty
     // the freshness proof below reads and sorts the full entry list of
     // BOTH the current and the analyze-time snapshot — cache the
@@ -5779,23 +5704,21 @@ object TxTable {
     // can never serve the ghost's distributions
     val cacheKey = rp.makeQualified(fs.getUri, fs.getWorkingDirectory)
       .toString + "#" + v
-    val sig = commitLines(fs, rp, v).hashCode
+    val sig = f.lines.hashCode
     val cached = histCache.get(cacheKey)
     if (cached != null && cached._1 == sig) return cached._2
-    val m = snapshotColMap(fs, rp, v)
+    val m = f.meta.colMap
     def logicalOf(p: String): Option[String] = m match {
       case Some(mm) => liveMap(mm).find(_._2 == p).map(_._1)
       case None => Some(p)
     }
     // one freshness proof per distinct analyze version, not per line
+    lazy val sorted = snapshotEntries(fs, rp, v).map(_.line).sorted
     val freshAv = scala.collection.mutable.HashMap[String, Boolean]()
-    def freshAt(av: String): Boolean = freshAv.getOrElseUpdate(av,
-      av.nonEmpty && av.forall(_.isDigit) &&
-        (try snapshotEntries(fs, rp, v).map(_.line).sorted ==
-          snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-        catch { case scala.util.control.NonFatal(_) => false }))
+    def freshAt(av: String): Boolean =
+      freshAv.getOrElseUpdate(av, analyzedOver(fs, rp, av, sorted))
     val out = lines.flatMap { line =>
-      val segs = line.drop(5).split(";")
+      val segs = line.split(";")
       if (segs.length < 4) None
       else {
         if (!freshAt(segs(0))) None
@@ -5837,7 +5760,8 @@ object TxTable {
     rsd: Double = 0.05, histograms: Boolean = false,
     histogramBins: Int = 64): Int = {
     val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
+      val prevV = head.version
       require(prevV > 0, s"txtable: nothing to analyze at $root")
       val df = read(spark, root, version = prevV)
       val targets =
@@ -5848,8 +5772,7 @@ object TxTable {
       require(targets.nonEmpty, s"txtable: no analyzable columns at $root")
       targets.foreach(c => require(df.columns.contains(c),
         s"txtable: no column '$c' to analyze at $root"))
-      val m = snapshotColMap(fs, rp, prevV)
-      val phys = targets.map(physName(m, _))
+      val phys = targets.map(physName(head.meta.colMap, _))
       // the ndv grammar borrows colmap's separators plus ';'
       phys.foreach(p => require(validColName(p) && !p.contains(";"),
         s"txtable: column '$p' cannot carry ndv stats " +
@@ -5877,8 +5800,10 @@ object TxTable {
         else analyzeHistograms(df, targets, phys, nullsOf, prevV,
           histogramBins,
           rowCount(spark, root, prevV).getOrElse(df.count()))
-      ("analyze", (s"ndv:$vTok;$body" +: histLines) ++
-        snapshotLines(fs, rp, prevV))
+      // without histograms this pass leaves the carried ones be
+      Commit("analyze", head.meta.copy(ndv = Some(s"$vTok;$body"),
+        hists = if (histLines.isEmpty) head.meta.hists else histLines),
+        head.rawEntryLines)
     }
   }
 
@@ -5958,7 +5883,7 @@ object TxTable {
       if (nn <= 0) None
       else {
         val height = nn.toDouble / bins
-        Some(s"hist:$prevV;${phys(i)};$height;" +
+        Some(s"$prevV;${phys(i)};$height;" +
           (0 until bins).map(b =>
             s"${e(b)},${e(b + 1)},${ndvMap.getOrElse((j, b), 0L)}")
             .mkString(";"))
@@ -5981,15 +5906,9 @@ object TxTable {
     * so identical entries mean the analyze-time numbers still describe
     * exactly this data. */
   private def analyzeIsFresh(fs: FileSystem, rp: Path, v: Int,
-    line: String): Boolean = {
-    val payload = line.drop(4)
-    val vTok = payload.take(payload.indexOf(';'))
-    val av = vTok.stripSuffix("!")
-    av.nonEmpty && av.forall(_.isDigit) &&
-      (try snapshotEntries(fs, rp, v).map(_.line).sorted ==
-        snapshotEntries(fs, rp, av.toInt).map(_.line).sorted
-      catch { case scala.util.control.NonFatal(_) => false })
-  }
+    ndv: String): Boolean =
+    analyzedOver(fs, rp, ndv.take(ndv.indexOf(';')).stripSuffix("!"),
+      snapshotEntries(fs, rp, v).map(_.line).sorted)
 
   /** Raw sketch bytes for every (live entry, col) pair: inline base64
     * decodes driver-side; blobs spilled past the inline cap resolve
@@ -6060,7 +5979,7 @@ object TxTable {
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = snapshotColMap(fs, rp, v)
+    val m = metaAt(fs, rp, v).colMap
     val pgs = groupCols.map(physName(m, _))
     val pc = physName(m, col)
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
@@ -6149,17 +6068,15 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     if (v == 0) return Map.empty
-    val m = snapshotColMap(fs, rp, v)
+    val meta = metaAt(fs, rp, v)
     val cap = rowCount(spark, root, v)
     def clamp(n: Long): Long = cap.fold(n)(math.min(n, _))
     // with a mapping, only LIVE physicals have a logical face
-    def logicalOf(p: String): Option[String] = m match {
+    def logicalOf(p: String): Option[String] = meta.colMap match {
       case Some(mm) => liveMap(mm).find(_._2 == p).map(_._1)
       case None => Some(p)
     }
-    val headerLine = ndvLineOf(fs, rp, v)
-    val header: Map[String, Long] = headerLine.map { line =>
-      val payload = line.drop(4)
+    val header: Map[String, Long] = meta.ndv.map { payload =>
       val sep = payload.indexOf(';')
       payload.drop(sep + 1).split(",").toSeq.flatMap { kv =>
         val i = kv.lastIndexOf('=')
@@ -6174,7 +6091,7 @@ object TxTable {
         }
       }.toMap
     }.getOrElse(Map.empty)
-    if (headerLine.exists(analyzeIsFresh(fs, rp, v, _))) header
+    if (meta.ndv.exists(analyzeIsFresh(fs, rp, v, _))) header
     else {
       val merged = mergedNdvPhys(fs, rp, v).flatMap { case (p, n) =>
         logicalOf(p).map(_ -> clamp(n))
@@ -6198,11 +6115,10 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     if (v == 0) return Map.empty
-    ndvLineOf(fs, rp, v).filter(analyzeIsFresh(fs, rp, v, _)).map { line =>
-      val payload = line.drop(4)
+    val meta = metaAt(fs, rp, v)
+    meta.ndv.filter(analyzeIsFresh(fs, rp, v, _)).map { payload =>
       val sep = payload.indexOf(';')
-      val m = snapshotColMap(fs, rp, v)
-      def logicalOf(p: String): Option[String] = m match {
+      def logicalOf(p: String): Option[String] = meta.colMap match {
         case Some(mm) => liveMap(mm).find(_._2 == p).map(_._1)
         case None => Some(p)
       }
@@ -6234,10 +6150,9 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     if (v == 0) return Map.empty
-    ndvLineOf(fs, rp, v).map { line =>
-      val payload = line.drop(4)
+    metaAt(fs, rp, v).ndv.map { payload =>
       val vTok = payload.take(payload.indexOf(';'))
-      val fresh = vTok.endsWith("!") && analyzeIsFresh(fs, rp, v, line)
+      val fresh = vTok.endsWith("!") && analyzeIsFresh(fs, rp, v, payload)
       if (fresh) columnNdv(spark, root, v) else Map.empty[String, Long]
     }.getOrElse(Map.empty)
   }
@@ -6283,7 +6198,7 @@ object TxTable {
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = snapshotColMap(fs, rp, v)
+    val m = metaAt(fs, rp, v).colMap
     val total = entries.map(_.stats(rowsKey)._1).sum
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // positional deletes keep `_rows` EXACT (adjusted at delete time)
@@ -6351,7 +6266,7 @@ object TxTable {
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = snapshotColMap(fs, rp, v)
+    val m = metaAt(fs, rp, v).colMap
     val pgs = groupCols.map(physName(m, _))
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // every live dir single-valued (integral lo == hi, or the string
@@ -6410,7 +6325,7 @@ object TxTable {
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = snapshotColMap(fs, rp, v)
+    val m = metaAt(fs, rp, v).colMap
     val pgs = partCols.map(physName(m, _))
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // clustering is provable iff EVERY live dir is single-valued and
@@ -6454,11 +6369,12 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val v = if (version >= 0) version else latestVersion(spark, root)
     if (v == 0) return None
-    val (physB, n) = bucketSpecAt(fs, rp, v).getOrElse(return None)
+    val meta = metaAt(fs, rp, v)
+    val (physB, n) = meta.bucketBy.getOrElse(return None)
     val entries = snapshotEntries(fs, rp, v)
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = snapshotColMap(fs, rp, v)
+    val m = meta.colMap
     val logicalB = m.flatMap(_.collectFirst {
       case (l, p) if p == physB => l
     }).getOrElse(physB)
@@ -6533,7 +6449,7 @@ object TxTable {
     require(r.entries.forall(_.stats.contains(rowsKey)),
       s"txtable: a dir of $root predates row-count stats — compact " +
         "to restore the metadata-only partition listing")
-    val pgs = partCols.map(physName(r.colMap, _))
+    val pgs = partCols.map(physName(r.meta.colMap, _))
     val live = r.entries.filter(_.stats(rowsKey)._1 > 0)
     val out = live.groupBy(e => dirTupleOf(e.dir, pgs))
       .toSeq.map { case (tup, es) =>
@@ -6563,21 +6479,12 @@ object TxTable {
   // them in writeAndCommit so no face can smuggle in a violating
   // snapshot. ----
 
-  private def checkLines(fs: FileSystem, rp: Path, v: Int): Seq[String] =
-    if (v == 0) Seq.empty
-    else commitLines(fs, rp, v)
-      .filter(l => l.startsWith("check:") && l.length > 6)
-
   /** The table's persistent CHECK constraints, (name, predicateSql). */
   def checkConstraints(spark: SparkSession, root: String,
     version: Int = -1): Seq[(String, String)] = {
     val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(fs, rp)
-    checkLines(fs, rp, v).map { l =>
-      val body = l.drop(6)
-      val i = body.indexOf('=')
-      (body.substring(0, i), body.substring(i + 1))
-    }
+    metaAt(fs, rp, if (version >= 0) version else latestVersion(fs, rp))
+      .checks
   }
 
   /** Arms the write-face CHECK gate: wraps `df` in an `observe` node
@@ -6651,29 +6558,27 @@ object TxTable {
     require(violations == 0L,
       s"txtable: cannot add CHECK '$name' - $violations existing rows " +
         s"violate ($predicateSql)")
-    commitRetry(spark, root) { prevV =>
-      require(prevV > 0, s"txtable: nothing to alter at $root")
-      val existing = checkLines(fs, rp, prevV)
-      require(!existing.exists(_.startsWith(s"check:$name=")),
+    commitRetry(spark, root) { head =>
+      require(head.version > 0, s"txtable: nothing to alter at $root")
+      val existing = head.meta.checks
+      require(!existing.exists(_._1 == name),
         s"txtable: constraint '$name' already exists at $root")
-      ("addcheck",
-        (existing :+ s"check:$name=$predicateSql") ++
-          snapshotLines(fs, rp, prevV))
+      Commit("addcheck",
+        head.meta.copy(checks = existing :+ (name -> predicateSql)),
+        head.rawEntryLines)
     }
   }
 
   /** Drop a named CHECK constraint (one metadata commit). */
   def dropCheckConstraint(spark: SparkSession, root: String,
     name: String): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
-      val existing = checkLines(fs, rp, prevV)
-      require(existing.exists(_.startsWith(s"check:$name=")),
+    commitRetry(spark, root) { head =>
+      val existing = head.meta.checks
+      require(existing.exists(_._1 == name),
         s"txtable: no CHECK constraint '$name' at $root")
-      val remaining = existing.filterNot(_.startsWith(s"check:$name="))
-      ("dropcheck",
-        (if (remaining.isEmpty) Seq("check:") else remaining) ++
-          snapshotLines(fs, rp, prevV))
+      Commit("dropcheck",
+        head.meta.copy(checks = existing.filterNot(_._1 == name)),
+        head.rawEntryLines)
     }
   }
 
@@ -6751,10 +6656,11 @@ object TxTable {
   def compactDirs(spark: SparkSession, root: String, maxDirs: Int = 8): Int = {
     require(maxDirs >= 1, "compactDirs must keep at least one dir")
     val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
+    commitRetry(spark, root) { head =>
+      val prevV = head.version
       require(prevV > 0, s"txtable: nothing to compact at $root")
-      val entries = snapshotEntries(fs, rp, prevV)
-      require(!entries.exists(_.isDelta) && snapshotKeys(fs, rp, prevV).isEmpty,
+      val entries = headEntries(fs, rp, head)
+      require(!entries.exists(_.isDelta) && head.meta.keys.isEmpty,
         "txtable: compactDirs serves plain append tables; keyed/delta " +
           "snapshots resolve by commit order - use compactSnapshot")
       if (entries.size <= maxDirs) return prevV
@@ -6769,7 +6675,7 @@ object TxTable {
       val foldSchemas = fold.map { case (e, _) => foldSchemaOf.get(e.dir) }
       // declared defaults re-land in the folded files (never NULL) —
       // PER DIR on the union branches, post-fill on the uniform ones
-      val addedNow = liveAddedCols(fs, rp, prevV)
+      val addedNow = head.meta.liveAdded
       def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, addedNow)
       val folded =
         // a fold member with positional deletes must fold its VISIBLE
@@ -6785,15 +6691,12 @@ object TxTable {
           fill(readDirFrame(spark, rp, e.dir)) }
           .reduce(_.unionByName(_, allowMissingColumns = true))
       val dirName = s"data/compact-${java.util.UUID.randomUUID()}"
-      val statsCols = snapshotStatsCols(fs, rp, prevV)
-      val (obsFolded, mkEntry) = observeStats(folded, statsCols)
+      val (obsFolded, mkEntry) = observeStats(folded, head.meta.statsCols)
       obsFolded.write.mode("overwrite")
         .parquet(new Path(rp, dirName).toString)
       val entry = mkEntry(spark, rp, dirName, false)
-      ("compact",
-        (if (statsCols.nonEmpty) Seq(s"statscol:${statsCols.mkString(",")}")
-         else Seq.empty) ++
-          keep.map(_._1.line) :+ entry.line)
+      Commit("compact", head.meta.copy(bucketBy = None),
+        keep.map(_._1.line) :+ entry.line)
     }
   }
 
@@ -7484,9 +7387,9 @@ object TxTable {
     * from the physical schema when no header exists yet (one
     * footer-level probe; no data read). */
   private def colMapOrIdentity(spark: SparkSession, root: String,
-    fs: FileSystem, rp: Path, v: Int): Seq[(String, String)] =
-    snapshotColMap(fs, rp, v).getOrElse(
-      readResolved(spark, root, v).columns.toSeq.map(c => (c, c)))
+    head: Head): Seq[(String, String)] =
+    head.meta.colMap.getOrElse(
+      readResolved(spark, root, head.version).columns.toSeq.map(c => (c, c)))
 
   /** Rename a column in ONE metadata commit — no data rewrite, any
     * table size (the Delta/Iceberg column-mapping move): the commit
@@ -7575,16 +7478,15 @@ object TxTable {
           .eval(null)
       }
     }
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
-      require(prevV > 0, s"txtable: nothing to alter at $root")
-      val m0 = colMapOrIdentity(spark, root, fs, rp, prevV)
+    commitRetry(spark, root) { head =>
+      require(head.version > 0, s"txtable: nothing to alter at $root")
+      val m0 = colMapOrIdentity(spark, root, head)
       cols.foreach { case (name, _, _) =>
         require(!liveMap(m0).exists(_._1 == name),
           s"txtable: column '$name' already exists at $root")
       }
       var m = m0
-      var declared = snapshotAddedCols(fs, rp, prevV)
+      var declared = head.meta.declared
         .filter(c => liveMap(m0).exists(_._2 == c.phys))
       cols.foreach { case (name, dt, default) =>
         // fresh physical name: never reuse ANY physical (live or
@@ -7597,9 +7499,8 @@ object TxTable {
         m = m :+ (name -> phys)
         declared = declared :+ DeclaredCol(phys, dt, default)
       }
-      ("addcol", Seq(colMapLine(m), schemaLine(declared)) ++
-        snapshotLines(fs, rp, prevV).filterNot(l =>
-          l.startsWith("colmap:") || l.startsWith("schema:")))
+      Commit("addcol", head.meta.copy(colMap = Some(m), declared = declared),
+        head.rawEntryLines)
     }
   }
 
@@ -7607,17 +7508,16 @@ object TxTable {
     to: String): Int = {
     require(validColName(to),
       s"txtable: invalid column name '$to' (empty or reserved character)")
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
-      require(prevV > 0, s"txtable: nothing to rename at $root")
-      val m = colMapOrIdentity(spark, root, fs, rp, prevV)
+    commitRetry(spark, root) { head =>
+      require(head.version > 0, s"txtable: nothing to rename at $root")
+      val m = colMapOrIdentity(spark, root, head)
       require(liveMap(m).exists(_._1 == from),
         s"txtable: no column '$from' to rename at $root")
       require(!liveMap(m).exists(_._1 == to),
         s"txtable: column '$to' already exists at $root")
       val next = m.map { case (l, p) => (if (l == from) to else l, p) }
-      ("rename", colMapLine(next) +:
-        snapshotLines(fs, rp, prevV).filterNot(_.startsWith("colmap:")))
+      Commit("rename", head.meta.copy(colMap = Some(next)),
+        head.rawEntryLines)
     }
   }
 
@@ -7629,26 +7529,25 @@ object TxTable {
     * materializes the drop physically. Key and stats columns refuse
     * to drop — resolution and pruning depend on them. */
   def dropColumn(spark: SparkSession, root: String, name: String): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { prevV =>
-      require(prevV > 0, s"txtable: nothing to drop at $root")
-      val m = colMapOrIdentity(spark, root, fs, rp, prevV)
+    commitRetry(spark, root) { head =>
+      require(head.version > 0, s"txtable: nothing to drop at $root")
+      val m = colMapOrIdentity(spark, root, head)
       require(liveMap(m).exists(_._1 == name),
         s"txtable: no column '$name' to drop at $root")
       require(liveMap(m).size > 1,
         s"txtable: cannot drop the last column of $root")
       val phys = physName(Some(m), name)
-      require(!snapshotKeys(fs, rp, prevV).exists(_.contains(phys)),
+      require(!head.meta.keys.exists(_.contains(phys)),
         s"txtable: cannot drop key column '$name'")
-      require(!snapshotStatsCols(fs, rp, prevV).contains(phys),
+      require(!head.meta.statsCols.contains(phys),
         s"txtable: cannot drop stats column '$name' — " +
           "range pruning depends on it")
-      require(!bucketSpecAt(fs, rp, prevV).exists(_._1 == phys),
+      require(!head.meta.bucketBy.exists(_._1 == phys),
         s"txtable: cannot drop bucket column '$name' — the " +
           "bucket-clustered layout is keyed on it")
       val next = m.map { case (l, p) => (if (l == name) "" else l, p) }
-      ("dropcol", colMapLine(next) +:
-        snapshotLines(fs, rp, prevV).filterNot(_.startsWith("colmap:")))
+      Commit("dropcol", head.meta.copy(colMap = Some(next)),
+        head.rawEntryLines)
     }
   }
 
@@ -7665,16 +7564,17 @@ object TxTable {
     val rows = (1 to latest).flatMap { v =>
       if (!fs.exists(commitPath(rp, v))) None
       else {
-        val lines = commitLines(fs, rp, v)
-        val op = lines.find(_.startsWith("op:")).map(_.drop(3)).getOrElse("?")
-        val entries = expandEntryLines(fs, rp, lines).flatMap(parseEntry)
+        val f = commitFile(fs, rp, v)
+        val op = f.lines.find(_.startsWith("op:")).map(_.drop(3))
+          .getOrElse("?")
+        val entries = expandEntryLines(fs, rp, f.rawEntryLines)
+          .flatMap(parseEntry)
         Some((v, op, entries.size.toLong, entries.count(_.isDelta).toLong,
-          lines.find(_.startsWith("key:")).map(_.drop(4)).getOrElse(""),
-          lines.find(_.startsWith("statscol:")).map(_.drop(9)).getOrElse(""),
-          lines.filter(_.startsWith("batch:")).map(_.drop(6)).mkString(","),
+          f.meta.keys.getOrElse(Seq.empty).mkString(","),
+          f.meta.statsCols.mkString(","), f.meta.batches.mkString(","),
           // the version's VISIBLE columns in logical names — how a
           // rename/drop shows up in the audit trail
-          snapshotColMap(fs, rp, v).map(liveMap(_).map(_._1))
+          f.meta.colMap.map(liveMap(_).map(_._1))
             .getOrElse(Seq.empty).mkString(",")))
       }
     }
@@ -7840,7 +7740,7 @@ object TxTable {
     val parts = layoutPartCols(spark, root, r.v)
     Seq((root, r.v, op, entries.size.toLong,
       entries.count(_.isDelta).toLong, rowsOpt, bytesOpt,
-      r.keys.getOrElse(Seq.empty).mkString(","), parts.mkString(",")))
+      r.meta.keys.getOrElse(Seq.empty).mkString(","), parts.mkString(",")))
       .toDF("location", "version", "last_operation", "num_dirs",
         "num_delta_dirs", "num_rows", "size_bytes", "key_columns",
         "partition_columns")

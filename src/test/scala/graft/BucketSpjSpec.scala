@@ -294,7 +294,7 @@ class BucketSpjSpec extends SparkSpec {
     val root = tmpDir() + "/bkt-meta"
     TxTable.appendBucketedBy((1L to 200L).map(k => (k, k % 5))
       .toDF("k", "v"), root, "k", 4, statsCols = Seq("k"))
-    // a CHECK-constraint commit (snapshotLines carrier) keeps the spec
+    // a CHECK-constraint commit (every header carried) keeps the spec
     TxTable.addCheckConstraint(spark, root, "k_pos", "k > 0")
     assert(TxTable.bucketSpecOf(spark, root) === Some(("k", 4)))
     // the bucket column cannot be dropped from under the layout

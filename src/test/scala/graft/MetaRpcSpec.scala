@@ -60,6 +60,21 @@ class MetaRpcSpec extends SparkSpec {
     assert(n <= 7, s"MoR ranged read cost $n commit-metadata RPCs")
   }
 
+  test("a second append consults its parent commit once") {
+    import spark.implicits._
+    val root = tmpDir() + "/rpc-append"
+    TxTable.append(Seq((1L, 10.0)).toDF("k", "v"), root)
+    val n = rpcsOf {
+      TxTable.append(Seq((2L, 20.0)).toDF("k", "v"), root)
+    }
+    info(s"second append: $n metadata RPCs")
+    // two head resolutions (one before the write, one per claim
+    // attempt; 5 each), one parent-commit consult each, and one
+    // content read of the parent (the cache holds commits it has
+    // read, not ones this JVM claimed) = 14
+    assert(n <= 14, s"second append cost $n commit-metadata RPCs")
+  }
+
   test("format-face read stays within the same budget per load") {
     import spark.implicits._
     val root = tmpDir() + "/rpc-face"
