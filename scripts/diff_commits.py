@@ -9,8 +9,15 @@ Each root is a table root or any directory holding table roots: every
 `include:<manifest>` lines are expanded into the manifest's entry lines
 (the path is relative to the table root), and UUIDs become `<uuid>`, so
 two runs of the same writes compare equal however their dirs were named
-and their entries packed. An entry's `pd:` sidecar segments are written
-sorted by sidecar name, i.e. by UUID, so they compare as a sorted set.
+and their entries packed; an absolute path under the root (a shallow
+clone's entries name its source's dirs that way) starts with `<root>`.
+An entry's `pd:` sidecar segments are written sorted by sidecar name,
+i.e. by UUID, so they compare as a sorted set.
+A `batch:<stream>:<id>` tag's stream becomes `<stream1>`, `<stream2>`, ...
+numbered by first appearance in the table (versions in order, lines in
+file order): a sink's stream id may be derived from a per-run path, such
+as a hash of its checkpoint location, so two runs of one build name the
+same stream differently.
 A commit's other lines (`op:` and the table headers) compare as a sorted
 list: every reader looks a header up by its prefix, so their order carries
 no meaning. Entry lines (`dir:`/`delta:`, after expansion) keep their
@@ -26,6 +33,7 @@ import sys
 UUID = re.compile(
     r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 VERSION = re.compile(r"v\d+")
+BATCH = re.compile(r"batch:(.*):(\d+)")
 
 
 def commit_dirs(root):
@@ -41,8 +49,14 @@ def versions(commits):
     return {f for f in os.listdir(commits) if VERSION.fullmatch(f)}
 
 
-def normalize(line):
-    line = UUID.sub("<uuid>", line)
+def normalize(line, root, streams):
+    """`line` with the tree `root`, UUIDs and stream ids replaced;
+    `streams` maps the table's stream ids seen so far to their tokens."""
+    line = UUID.sub("<uuid>", line.replace(root, "<root>"))
+    tag = BATCH.fullmatch(line)
+    if tag:
+        token = streams.setdefault(tag.group(1), f"<stream{len(streams) + 1}>")
+        return f"batch:{token}:{tag.group(2)}"
     if not is_entry(line):
         return line
     segs = line.split("|")
@@ -54,9 +68,9 @@ def is_entry(line):
     return line.startswith(("dir:", "delta:"))
 
 
-def lines_of(table_root, commit_file):
-    """A commit's lines, manifests expanded and UUIDs normalized: its
-    other lines sorted, then its entry lines in order."""
+def lines_of(root, table_root, commit_file, streams):
+    """A commit's lines, manifests expanded, UUIDs and stream ids
+    normalized: its other lines sorted, then its entry lines in order."""
     out = []
     with open(commit_file, encoding="utf-8") as f:
         for line in f.read().split("\n"):
@@ -66,13 +80,14 @@ def lines_of(table_root, commit_file):
                     out.extend(l for l in m.read().split("\n") if l)
             else:
                 out.append(line)
-    out = [normalize(l) for l in out]
+    out = [normalize(l, root, streams) for l in out]
     return sorted(l for l in out if not is_entry(l)) + [
         l for l in out if is_entry(l)]
 
 
 def main(root_a, root_b):
     differ = False
+    abs_a, abs_b = os.path.abspath(root_a), os.path.abspath(root_b)
     dirs_a, dirs_b = commit_dirs(root_a), commit_dirs(root_b)
     for rel in sorted(dirs_a ^ dirs_b):
         print(f"only under {root_a if rel in dirs_a else root_b}: {rel}")
@@ -83,9 +98,12 @@ def main(root_a, root_b):
         for v in sorted(va ^ vb):
             print(f"only under {ca if v in va else cb}: {v}")
             differ = True
+        streams_a, streams_b = {}, {}
         for v in sorted(va & vb):
-            a = lines_of(os.path.dirname(ca), os.path.join(ca, v))
-            b = lines_of(os.path.dirname(cb), os.path.join(cb, v))
+            a = lines_of(abs_a, os.path.dirname(ca), os.path.join(ca, v),
+                         streams_a)
+            b = lines_of(abs_b, os.path.dirname(cb), os.path.join(cb, v),
+                         streams_b)
             diff = list(difflib.unified_diff(
                 a, b, os.path.join(ca, v), os.path.join(cb, v), lineterm=""))
             if diff:

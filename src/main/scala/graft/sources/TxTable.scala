@@ -153,19 +153,23 @@ object TxTable {
   }
   private val commitCache =
     new java.util.concurrent.ConcurrentHashMap[String, CachedLines]()
+  private def cacheKey(fs: FileSystem, p: Path): String =
+    p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
+  private def cacheCommit(fs: FileSystem, p: Path, f: CachedLines): Unit = {
+    if (commitCache.size >= 8192) commitCache.clear()
+    commitCache.put(cacheKey(fs, p), f)
+  }
   private def commitFile(fs: FileSystem, rp: Path, v: Int): CachedLines = {
     val p = commitPath(rp, v)
-    val key = p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
     metaRpcs.incrementAndGet() // cache-validation getFileStatus
     val st = fs.getFileStatus(p)
-    val c = commitCache.get(key)
+    val c = commitCache.get(cacheKey(fs, p))
     if (c != null && c.mtime == st.getModificationTime &&
       c.len == st.getLen) c
     else {
       val f = CachedLines(st.getModificationTime, st.getLen,
         readFileUtf8(fs, p).split("\n").toSeq)
-      if (commitCache.size >= 8192) commitCache.clear()
-      commitCache.put(key, f)
+      cacheCommit(fs, p, f)
       f
     }
   }
@@ -340,7 +344,7 @@ object TxTable {
   private def manifestLines(fs: FileSystem, rp: Path,
     rel: String): Seq[String] = {
     val p = new Path(rp, rel)
-    val key = p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
+    val key = cacheKey(fs, p)
     val st = fs.getFileStatus(p)
     val cached = manifestCache.get(key)
     if (cached != null && cached.mtime == st.getModificationTime &&
@@ -509,28 +513,42 @@ object TxTable {
     if (v <= 0) TableMeta() else commitFile(fs, rp, v).meta
 
   /** The parent a commit attempt builds on: its version, its table
-    * metadata, and its entry-bearing lines AS WRITTEN (include lines
+    * metadata, its entry-bearing lines AS WRITTEN (include lines
     * verbatim — carrying these instead of the expansion is what keeps
-    * append commits metadata-O(1)). */
+    * append commits metadata-O(1)), and its entries, expanded once on
+    * first use. */
   private final case class Head(version: Int, meta: TableMeta,
-    rawEntryLines: Seq[String])
+    rawEntryLines: Seq[String])(fs: FileSystem, rp: Path) {
+    /** The entries in commit order (manifests expanded). */
+    lazy val entries: Seq[Entry] =
+      expandEntryLines(fs, rp, rawEntryLines).flatMap(parseEntry)
+  }
 
   private def headAt(fs: FileSystem, rp: Path, v: Int): Head =
-    if (v <= 0) Head(0, TableMeta(), Seq.empty)
+    if (v <= 0) Head(0, TableMeta(), Seq.empty)(fs, rp)
     else {
       val f = commitFile(fs, rp, v)
-      Head(v, f.meta, f.rawEntryLines)
+      Head(v, f.meta, f.rawEntryLines)(fs, rp)
     }
 
-  /** The head's entries in commit order (manifests expanded). */
-  private def headEntries(fs: FileSystem, rp: Path, h: Head): Seq[Entry] =
-    expandEntryLines(fs, rp, h.rawEntryLines).flatMap(parseEntry)
+  /** A writer's verdict on one entry line of its parent. */
+  private sealed trait DirOutcome
+  /** The verdicts a commit may give every entry it did not read. */
+  private sealed trait RestOutcome extends DirOutcome
+  private case object Carry extends RestOutcome
+  private case object Drop extends RestOutcome
+  private final case class Replace(line: String) extends DirOutcome
+  /** Attach the dir's new sidecar `name`, holding `n` dead positions. */
+  private final case class Pdel(name: String, n: Long) extends DirOutcome
 
   /** What one writer commits on top of a [[Head]]: the operation, the
-    * table metadata, and the entry lines (`dir:`/`delta:`/`include:`)
+    * table metadata, the outcome of each parent entry line it `read`
+    * (every one must still be in the head), the outcome of the `rest`,
+    * and the lines of its new dirs, appended after the head's entries
     * in merge-on-read resolution order. */
   private final case class Commit(op: String, meta: TableMeta,
-    entryLines: Seq[String])
+    read: Map[String, DirOutcome] = Map.empty, rest: RestOutcome = Carry,
+    added: Seq[String] = Seq.empty)
 
   /** A declared (ADD COLUMNS) column: physical name, type, and the
     * optional DEFAULT — the SQL literal pre-ADD rows read instead of
@@ -1508,43 +1526,38 @@ object TxTable {
       if (keepPrev) toPhysicalFrame(guarded, m0) else (guarded, None)
     val physStats =
       if (keepPrev) statsCols.map(physName(m0, _)) else statsCols
-    val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
-    // stats ride the write action (observeStats) — no post-write
-    // rescan of the batch just to record its commit-line stats
-    val (obsDf, mkEntry) = observeStats(physDf, physStats)
-    obsDf.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
-    try verifyChecks() catch {
-      case t: Throwable =>
-        fs.delete(new Path(rp, dirName), true)
-        throw t
-    }
-    val entry = mkEntry(spark, rp, dirName, false)
-    commitRetry(spark, root) { head =>
-      // a concurrent writer may have landed this same micro-batch
-      // between the caller's pre-check and the claim (appendBatch);
-      // drop the staged dir rather than leaking it until vacuum
-      if (skipIf(head.version)) {
-        fs.delete(new Path(rp, dirName), true)
-        return head.version
-      }
-      // constraint probes (appendChecked) re-validate against the
-      // claim's parent, so a concurrent commit that landed between
-      // validation and the claim can't smuggle in a violating snapshot
-      preCommitCheck(head.version)
-      val meta = batchTag.fold(head.meta)(head.meta.tagged)
-      if (!keepPrev) Commit(op, meta.rewritten(None, statsCols), Seq(entry.line))
-      else {
-        // re-check at the claim parent: a concurrent writer may have
-        // bucket-clustered the table between validation and the claim
-        if (meta.bucketBy.isDefined) {
-          fs.delete(new Path(rp, dirName), true)
-          throw new IllegalStateException(
-            s"txtable: $root became bucket-clustered concurrently; " +
-              "plain appends would break the layout")
+    commitRetry(spark, root) { stage =>
+      val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
+      // stats ride the write action (observeStats) — no post-write
+      // rescan of the batch just to record its commit-line stats
+      val (obsDf, mkEntry) = observeStats(physDf, physStats)
+      obsDf.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
+      verifyChecks()
+      val entry = mkEntry(spark, rp, dirName, false)
+      head =>
+        // a concurrent writer may have landed this same micro-batch
+        // between the caller's pre-check and the claim (appendBatch)
+        if (skipIf(head.version)) None
+        else {
+          // constraint probes (appendChecked) re-validate against the
+          // claim's parent, so a concurrent commit that landed between
+          // validation and the claim can't smuggle in a violating
+          // snapshot
+          preCommitCheck(head.version)
+          val meta = batchTag.fold(head.meta)(head.meta.tagged)
+          if (!keepPrev) Some(Commit(op, meta.rewritten(None, statsCols),
+            rest = Drop, added = Seq(entry.line)))
+          else {
+            // re-check at the claim parent: a concurrent writer may
+            // have bucket-clustered the table between validation and
+            // the claim
+            if (meta.bucketBy.isDefined) throw new IllegalStateException(
+              s"txtable: $root became bucket-clustered concurrently; " +
+                "plain appends would break the layout")
+            Some(Commit(op, meta.copy(colMap = extMap.orElse(meta.colMap))
+              .withStats(physStats), added = Seq(entry.line)))
+          }
         }
-        Commit(op, meta.copy(colMap = extMap.orElse(meta.colMap))
-          .withStats(physStats), head.rawEntryLines :+ entry.line)
-      }
     }
   }
 
@@ -1575,11 +1588,11 @@ object TxTable {
     * entries past the last include line rolls into a fresh manifest
     * once it reaches the threshold, so appends are amortized O(1)
     * metadata. Best-effort by construction: a failed match just leaves
-    * lines inline — never incorrect, only larger. Returns the packed
-    * lines and any manifest files staged for this attempt (deleted by
-    * the caller if the claim loses). */
+    * lines inline — never incorrect, only larger. A fresh manifest is
+    * staged through `stage`, so a lost claim deletes it. */
   private def packEntryLines(fs: FileSystem, rp: Path, head: Head,
-    lines0: Seq[String], rollover: Int): (Seq[String], Seq[String]) = {
+    lines0: Seq[String], rollover: Int,
+    stage: String => String): Seq[String] = {
     def isEntry(l: String) = parseEntry(l).isDefined
     val v0 = lines0.toVector
     // (1) re-include the parent's intact manifest blocks — matched
@@ -1624,9 +1637,9 @@ object TxTable {
     val lastInc = cur.lastIndexWhere(_.startsWith("include:"))
     val tailIdx = cur.zipWithIndex
       .collect { case (l, i) if i > lastInc && isEntry(l) => i }
-    if (tailIdx.length < rollover) (cur, Seq.empty)
+    if (tailIdx.length < rollover) cur
     else {
-      val rel = s"$manifestDirName/m-${java.util.UUID.randomUUID()}"
+      val rel = stage(s"$manifestDirName/m-${java.util.UUID.randomUUID()}")
       val body = tailIdx.map(cur(_))
       val p = new Path(rp, rel)
       fs.mkdirs(p.getParent)
@@ -1634,8 +1647,7 @@ object TxTable {
       try out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
       val st = fs.getFileStatus(p)
-      manifestCache.put(
-        p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString,
+      manifestCache.put(cacheKey(fs, p),
         CachedLines(st.getModificationTime, st.getLen, body))
       val keep = tailIdx.toSet
       val first = tailIdx.head
@@ -1644,78 +1656,139 @@ object TxTable {
         else if (keep.contains(i)) Seq.empty
         else Seq(l)
       }
-      (packed, Seq(rel))
+      packed
     }
   }
 
-  /** The optimistic-concurrency loop every write commits through:
-    * build the commit against the current head, claim version+1
-    * atomically, and retry from the NEW head if another writer claimed
-    * it first. Each attempt reads the parent commit file once
-    * ([[headAt]]) and hands the writer that [[Head]]; the writer's
-    * [[Commit]] record already carries the parent's headers by
-    * default. The two carry rules that depend on the commit's own
-    * content run here: `schema:` entries stay only while the commit's
-    * map binds them, and `hist:` lines only while they are fresh
-    * against its entries. [[verifyCommit]] then refuses, before any
-    * claim, a commit that would record what no writer can mean. */
+  /** THE commit body of every write: the optimistic-concurrency loop
+    * and its staging ledger. `prepare` runs once, staging through the
+    * function it gets (root-relative paths) what every attempt reuses,
+    * and returns the attempt: the current [[Head]] to a [[Commit]], or
+    * to None when there is nothing to commit (the call then returns the
+    * head's version). Each attempt reads the parent commit once, claims
+    * version+1 atomically, and retries from the NEW head when another
+    * writer claimed it first.
+    *
+    * Staging: a path staged while preparing survives a lost claim; one
+    * staged during an attempt (a per-attempt rewrite, a rolled
+    * manifest) is deleted when that attempt loses; every staged path is
+    * deleted when the commit aborts (any throw) or the writer skips.
+    *
+    * Entries: with nothing read and the rest carried, the parent's
+    * lines stay verbatim (include lines too — appends stay
+    * metadata-O(1)). Otherwise every read line must still be in the
+    * head, or the attempt aborts (ConcurrentModificationException: its
+    * rows or positions no longer describe the table); each entry takes
+    * its outcome in place and the added lines follow. A sidecar's dead
+    * rows leave `_rows`; more of them than `_rows` means the entry is
+    * wrong, and dropping the dir on equality could then lose live rows.
+    * When no entry remains, one zero-row dir keeps the first parent
+    * entry's footer schema (an empty snapshot has no schema to read
+    * back).
+    *
+    * The two header carry rules that depend on the commit's own entries
+    * run here: `schema:` entries stay only while the map binds them, and
+    * `hist:` lines only while they are fresh against the entries.
+    * [[verifyCommit]] then refuses, before any claim, a commit that would
+    * record what no writer can mean. The claimed commit is cached, so the
+    * next consult of it in this JVM costs one status check. */
   private def commitRetry(spark: SparkSession, root: String,
-    maxRetries: Int = 10)(content: Head => Commit): Int = {
+    maxRetries: Int = 10)(
+    prepare: (String => String) => Head => Option[Commit]): Int = {
     val (fs, rp) = fsFor(spark, root)
-    fs.mkdirs(commitDir(rp))
     val rollover = spark.conf
       .getOption("spark.graft.manifestRollover").map(_.toInt).getOrElse(256)
-    var stagedManifests: Seq[String] = Seq.empty
-    var attempt = 0
-    // Any abnormal exit (non-retryable claim failure, exhausted
-    // retries, a content-builder throw, a refused commit) leaves the
-    // last attempt's staged manifests unreferenced — delete them on the
-    // way out instead of leaking until vacuum's orphan sweep. A
-    // SUCCESSFUL claim returns from inside the try and skips the catch:
-    // its staged manifests are referenced by the committed version.
-    try {
-    while (attempt <= maxRetries) {
-      // a lost race re-packs against the NEW parent; this attempt's
-      // staged manifests are unreferenced — drop, don't leak
-      stagedManifests.foreach(m => fs.delete(new Path(rp, m), false))
-      stagedManifests = Seq.empty
-      val head = headAt(fs, rp, latestVersion(fs, rp))
-      val prevV = head.version
-      val c0 = content(head)
-      val c = c0.copy(meta = c0.meta.copy(declared = c0.meta.liveAdded,
-        hists = freshHists(fs, rp, c0.meta.hists, c0.entryLines)))
-      verifyCommit(root, head.meta, c)
-      val (packedLines, staged) =
-        packEntryLines(fs, rp, head, c.entryLines, rollover)
-      stagedManifests = staged
-      val body = (s"op:${c.op}" +: (c.meta.render(head.meta) ++ packedLines))
-        .mkString("\n")
-      val claim = commitPath(rp, prevV + 1)
-      try {
-        if (fs.getScheme == "file") {
-          // LOCAL filesystems: Hadoop's create(overwrite = false) is
-          // check-then-act there (RawLocalFileSystem probes existence
-          // before opening), so two racers can both pass the check and
-          // the later close silently overwrites the earlier claim —
-          // a LOST COMMIT (caught by the OCC stress test). Claim via
-          // link(2) instead: write the body to a temp file fully, then
-          // hard-link it into place — atomic in the kernel, fails with
-          // EEXIST if the version was claimed, and the commit is never
-          // visible partially written.
-          val dst = java.nio.file.Paths.get(claim.toUri.getPath)
-          java.nio.file.Files.createDirectories(dst.getParent)
-          val tmp = java.nio.file.Files.createTempFile(
-            dst.getParent, ".commit-", ".tmp")
-          try {
-            java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-            java.nio.file.Files.createLink(dst, tmp)
-          } finally java.nio.file.Files.deleteIfExists(tmp)
-        } else {
-          // HDFS-class filesystems: create(overwrite = false) IS the
-          // atomic namenode claim
-          val out = fs.create(claim, false)
-          try out.write(body.getBytes("UTF-8")) finally out.close()
+    var prepared, attempt = Vector.empty[String]
+    var claiming = false
+    val stage = (p: String) => {
+      if (claiming) attempt :+= p else prepared :+= p
+      p
+    }
+    def delete(ps: Seq[String]): Unit =
+      ps.foreach(p => fs.delete(new Path(rp, p), true))
+    // sidecars of dirs whose rows all died: unreferenced once committed
+    var emptied = Seq.empty[String]
+    def entryLines(head: Head, c: Commit): Seq[String] = {
+      val kept =
+        if (c.read.isEmpty)
+          if (c.rest == Carry) head.rawEntryLines else Seq.empty
+        else {
+          val present = head.entries.map(_.line).toSet
+          val gone = c.read.keys.filterNot(present).toSeq
+          if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
+            s"txtable: ${c.op} of $root lost its snapshot — ${gone.size} " +
+              "dir(s) being rewritten or receiving deletes changed under " +
+              s"the statement (e.g. ${gone.head.take(80)}); re-run it")
+          head.entries.flatMap { e =>
+            c.read.getOrElse(e.line, c.rest) match {
+              case Carry => Some(e.line)
+              case Drop => None
+              case Replace(l) => Some(l)
+              case Pdel(name, n) =>
+                val nAll = e.stats.get(rowsKey).map(_._1)
+                  .getOrElse(visibleDirFrame(spark, rp, e).count())
+                if (n > nAll) throw new IllegalStateException(
+                  s"txtable: ${c.op} matched $n rows in ${e.dir} for " +
+                    s"positional deletion, whose entry records only $nAll " +
+                    "live rows - refusing to commit over inconsistent dir " +
+                    "metadata")
+                if (n == nAll) { emptied :+= s"${e.dir}/$name"; None }
+                else Some(e.copy(
+                  stats = e.stats + (rowsKey -> (nAll - n, nAll - n)),
+                  pdels = e.pdels + (name -> n)).line)
+            }
+          }
         }
+      val lines = kept ++ c.added
+      if (lines.nonEmpty || head.entries.isEmpty) lines
+      else {
+        val src = head.entries.head.dir
+        val d = writeEmptyDir(spark, rp,
+          stage(s"data/${c.op}-${java.util.UUID.randomUUID()}"),
+          dirSchemas(spark, rp, Seq(src))(src))
+        Seq(statsEntry(spark, rp, d,
+          c.meta.keys.getOrElse(Seq.empty) ++ c.meta.statsCols).line)
+      }
+    }
+    // the won version and its lines; no lines = the writer skipped
+    val (v, claimed) = try {
+      val content = prepare(stage)
+      claiming = true
+      fs.mkdirs(commitDir(rp))
+      var outcome: Option[(Int, Option[Seq[String]])] = None
+      var lost = 0
+      while (outcome.isEmpty) {
+        if (lost > maxRetries) throw new IllegalStateException(
+          s"txtable: commit to $root failed after $maxRetries conflicts")
+        delete(attempt)
+        attempt = Vector.empty
+        emptied = Seq.empty
+        val head = headAt(fs, rp, latestVersion(fs, rp))
+        content(head) match {
+          case None => outcome = Some((head.version, None))
+          case Some(c) =>
+            val lines = entryLines(head, c)
+            val meta = c.meta.copy(declared = c.meta.liveAdded,
+              hists = freshHists(fs, rp, c.meta.hists, lines))
+            verifyCommit(root, c.op, head.meta, meta, lines)
+            val body = (s"op:${c.op}" +: (meta.render(head.meta) ++
+              packEntryLines(fs, rp, head, lines, rollover, stage)))
+              .mkString("\n")
+            if (claimVersion(fs, rp, head.version + 1, body))
+              outcome = Some((head.version + 1, Some(body.split("\n").toSeq)))
+            else lost += 1
+        }
+      }
+      outcome.get
+    } catch {
+      case e: Throwable =>
+        try delete(prepared ++ attempt)
+        catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+        throw e
+    }
+    claimed match {
+      case None => delete(prepared ++ attempt)
+      case Some(lines) =>
         // A v1 claim means a FRESH table is being born at this path.
         // If a previous table lived (and died) here in this JVM's
         // lifetime, its commit/manifest lines may still be cached —
@@ -1727,36 +1800,68 @@ object TxTable {
         // per-hit content read (which would defeat the cache), no
         // extra RPC. Cross-JVM recreates can't hit this JVM's cache
         // with anything the FileStatus check doesn't already cover.
-        if (prevV == 0) {
-          val prefix = rp.makeQualified(fs.getUri,
-            fs.getWorkingDirectory).toString + "/"
+        if (v == 1) {
+          val prefix = cacheKey(fs, rp) + "/"
           commitCache.keySet.removeIf(_.startsWith(prefix))
           manifestCache.keySet.removeIf(_.startsWith(prefix))
         }
-        writeHint(fs, rp, prevV + 1)
-        return prevV + 1
-      } catch {
-        // Only a lost race is retryable: the claimed version already
-        // exists. Some filesystems signal that as a generic IOException,
-        // so probe for the file. Anything else (permissions, quota, a
-        // dead filesystem) is a real failure — rethrow instead of
-        // re-running the content builder (for merge, a full O(table)
-        // recompute) nine more times and misreporting it as contention.
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          attempt += 1
-        case e: java.io.IOException =>
-          if (fs.exists(claim)) attempt += 1 else throw e
-      }
+        // the claimed lines are in hand: cache them under the claim's
+        // status, so the next read or write of this table validates
+        // with one status check instead of re-reading its parent
+        // (best-effort, like the hint)
+        try {
+          metaRpcs.incrementAndGet() // the claim's getFileStatus
+          val p = commitPath(rp, v)
+          val st = fs.getFileStatus(p)
+          cacheCommit(fs, p,
+            CachedLines(st.getModificationTime, st.getLen, lines))
+        } catch { case scala.util.control.NonFatal(_) => () }
+        writeHint(fs, rp, v)
+        delete(emptied)
     }
-    throw new IllegalStateException(
-      s"txtable: commit to $root failed after $maxRetries conflicts")
+    v
+  }
+
+  /** Claim version `v` with `body`: true when claimed, false when
+    * another writer already holds it. Only a lost race is retryable.
+    * Some filesystems signal it as a generic IOException, so probe for
+    * the file; anything else (permissions, quota, a dead filesystem) is
+    * a real failure — rethrow instead of re-running the attempt (for
+    * merge, a full O(table) recompute) nine more times and
+    * misreporting it as contention. */
+  private def claimVersion(fs: FileSystem, rp: Path, v: Int,
+    body: String): Boolean = {
+    val claim = commitPath(rp, v)
+    try {
+      if (fs.getScheme == "file") {
+        // LOCAL filesystems: Hadoop's create(overwrite = false) is
+        // check-then-act there (RawLocalFileSystem probes existence
+        // before opening), so two racers can both pass the check and
+        // the later close silently overwrites the earlier claim —
+        // a LOST COMMIT (caught by the OCC stress test). Claim via
+        // link(2) instead: write the body to a temp file fully, then
+        // hard-link it into place — atomic in the kernel, fails with
+        // EEXIST if the version was claimed, and the commit is never
+        // visible partially written.
+        val dst = java.nio.file.Paths.get(claim.toUri.getPath)
+        java.nio.file.Files.createDirectories(dst.getParent)
+        val tmp = java.nio.file.Files.createTempFile(
+          dst.getParent, ".commit-", ".tmp")
+        try {
+          java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
+          java.nio.file.Files.createLink(dst, tmp)
+        } finally java.nio.file.Files.deleteIfExists(tmp)
+      } else {
+        // HDFS-class filesystems: create(overwrite = false) IS the
+        // atomic namenode claim
+        val out = fs.create(claim, false)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+      }
+      true
     } catch {
-      case e: Throwable =>
-        stagedManifests.foreach { m =>
-          try fs.delete(new Path(rp, m), false)
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        throw e
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case e: java.io.IOException =>
+        if (fs.exists(claim)) false else throw e
     }
   }
 
@@ -1791,11 +1896,11 @@ object TxTable {
     * its rows twice), none records a negative `_rows` (row counts and
     * the positional over-count check trust it), and the headers parse
     * back to the record they were rendered from. */
-  private def verifyCommit(root: String, parent: TableMeta,
-    c: Commit): Unit = {
+  private def verifyCommit(root: String, op: String, parent: TableMeta,
+    meta: TableMeta, lines: Seq[String]): Unit = {
     def refuse(why: String) = throw new IllegalStateException(
-      s"txtable: refusing to commit ${c.op} to $root - $why")
-    val inline = c.entryLines.flatMap(parseEntry)
+      s"txtable: refusing to commit $op to $root - $why")
+    val inline = lines.flatMap(parseEntry)
     val seen = scala.collection.mutable.HashSet[String]()
     inline.foreach { e =>
       if (!seen.add(e.dir)) refuse(s"dir ${e.dir} appears twice")
@@ -1803,7 +1908,7 @@ object TxTable {
         refuse(s"dir ${e.dir} records _rows=${r._1}:${r._2}")
       }
     }
-    if (TableMeta.parse(c.meta.render(parent)) != c.meta)
+    if (TableMeta.parse(meta.render(parent)) != meta)
       refuse("its headers do not parse back to the table metadata")
   }
 
@@ -1894,7 +1999,7 @@ object TxTable {
     keyCols: Seq[String] = Seq("k")): Int = {
     val (latest, valueCols) = resolveLatest(changes, keyCols)
     val rp = fsFor(spark, root)._2
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { stage => head =>
       val base =
         if (head.version > 0) read(spark, root, head.version)
           .select((keyCols.map(col) ++
@@ -1907,14 +2012,14 @@ object TxTable {
         .filter(col("op").isNull || col("op") =!= "D")
         .select((keyCols.map(col) ++ valueCols.map(c =>
           coalesce(col(c), col(s"_base_$c")).as(c))): _*)
-      val dirName = s"data/merge-${java.util.UUID.randomUUID()}"
+      val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
       val (obsMerged, mkEntry) = observeStats(merged, keyCols)
       obsMerged.write.mode("overwrite")
         .parquet(new Path(rp, dirName).toString)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
-      Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
-        Seq(mkEntry(spark, rp, dirName, false).line))
+      Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
+        rest = Drop, added = Seq(mkEntry(spark, rp, dirName, false).line)))
     }
   }
 
@@ -1957,7 +2062,7 @@ object TxTable {
     require(dup.isEmpty,
       s"txtable: mergeInto source has duplicate keys (${keyCols.mkString(",")})")
     def isTrue(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { stage => head =>
       val base =
         if (head.version > 0) read(spark, root, head.version)
         else source.filter(lit(false))
@@ -1983,13 +2088,13 @@ object TxTable {
             .when(col("_t").isNull, col(s"s_$c"))   // inserted row
             .otherwise(col(c)).as(c)
         }: _*)
-      val dirName = s"data/merge-${java.util.UUID.randomUUID()}"
+      val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
       val (obsOut, mkEntry) = observeStats(out, keyCols)
       obsOut.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
-      Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
-        Seq(mkEntry(spark, rp, dirName, false).line))
+      Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
+        rest = Drop, added = Seq(mkEntry(spark, rp, dirName, false).line)))
     }
   }
 
@@ -2043,28 +2148,29 @@ object TxTable {
     val physKeys = keyCols.map(physName(m0, _))
     val (latestPhys, extMap) =
       toPhysicalFrame(latest, m0, exclude = Set("op", "seq"))
-    val dirName = s"data/delta-${java.util.UUID.randomUUID()}"
-    val (obsLatest, mkEntry) = observeStats(latestPhys, physKeys)
-    obsLatest.write.mode("overwrite")
-      .parquet(new Path(rp, dirName).toString)
-    val entry = mkEntry(spark, rp, dirName, true)
-    commitRetry(spark, root) { head =>
-      // a concurrent writer may have landed the same batch between the
-      // pre-check and the claim: re-check against the claim's parent
-      // (and drop the staged delta dir rather than leak it)
-      if (alreadyApplied(head.version)) {
-        fs.delete(new Path(rp, dirName), true)
-        return head.version
-      }
-      preCommit(head.version)
-      val recorded = head.meta.keys
-      require(recorded.forall(_ == physKeys),
-        s"txtable: $root is keyed on ${recorded.get.mkString(",")}, " +
-          s"got ${physKeys.mkString(",")}")
-      val meta = batchId.fold(head.meta)(id => head.meta.tagged(s"$sid:$id"))
-      Commit("delta", meta.rewritten(Some(physKeys), Seq.empty,
-        resetMap = false).copy(colMap = extMap.orElse(meta.colMap)),
-        head.rawEntryLines :+ entry.line)
+    commitRetry(spark, root) { stage =>
+      val dirName = stage(s"data/delta-${java.util.UUID.randomUUID()}")
+      val (obsLatest, mkEntry) = observeStats(latestPhys, physKeys)
+      obsLatest.write.mode("overwrite")
+        .parquet(new Path(rp, dirName).toString)
+      val entry = mkEntry(spark, rp, dirName, true)
+      head =>
+        // a concurrent writer may have landed the same batch between
+        // the pre-check and the claim: re-check against the claim's
+        // parent
+        if (alreadyApplied(head.version)) None
+        else {
+          preCommit(head.version)
+          val recorded = head.meta.keys
+          require(recorded.forall(_ == physKeys),
+            s"txtable: $root is keyed on ${recorded.get.mkString(",")}, " +
+              s"got ${physKeys.mkString(",")}")
+          val meta =
+            batchId.fold(head.meta)(id => head.meta.tagged(s"$sid:$id"))
+          Some(Commit("delta", meta.rewritten(Some(physKeys), Seq.empty,
+            resetMap = false).copy(colMap = extMap.orElse(meta.colMap)),
+            added = Seq(entry.line)))
+        }
     }
   }
 
@@ -2217,42 +2323,55 @@ object TxTable {
   def optimizeZOrderN(spark: SparkSession, root: String,
     zCols: Seq[String], nDirs: Int = 8): Int = {
     require(nDirs >= 1, "optimizeZOrder needs at least one output dir")
+    pinnedCommit(spark, root)(zRewrite(spark, root, zCols, nDirs, _, _))
+  }
+
+  /** The full z-order rewrite of snapshot `base`: its resolved rows as
+    * aligned z-prefix blocks ([[writeZBlocks]]) in place of every dir.
+    * The dirs are rewritten from read()'s logical output, so the keys
+    * move to logical names and any mapping resets (see
+    * compactSnapshot); the stats declaration moves to the z dims. */
+  private def zRewrite(spark: SparkSession, root: String,
+    zCols: Seq[String], nDirs: Int, base: Int,
+    stage: String => String): Option[Commit] = {
     val (fs, rp) = fsFor(spark, root)
-    // The O(table) rewrite stages OUTSIDE the claim loop, pinned to the
-    // snapshot it read: a commit that lands in between makes the staged
-    // copy stale (committing it would drop the interleaved rows), so
-    // the claim aborts, the stage is deleted, and the whole rewrite
-    // re-runs against the new snapshot — bounded times, not the claim
-    // loop's ten (each retry here is a full-table rewrite).
-    var attempt = 0
-    while (attempt < 3) {
-      val base = latestVersion(spark, root)
-      require(base > 0, s"txtable: nothing to optimize at $root")
-      val resolved = read(spark, root, base)
-      val parent = s"data/zopt-${java.util.UUID.randomUUID()}"
-      // Dirs are ALIGNED z-prefix blocks (bucket = z >> shift), not
-      // sampled quantile ranges: a quantile boundary that straddles a
-      // Morton cell widens that dir's min/max box in EVERY dimension
-      // and pruning degrades, whereas prefix blocks are axis-aligned
-      // boxes by construction — the tightest stats the interleave can
-      // give. The shift derives from max(z) alone (one cheap 1-row
-      // aggregate): the smallest shift whose ALIGNED block count over
-      // [0, maxZ] fits nDirs. Heavily-clustered z distributions may
-      // leave some blocks empty (fewer, larger dirs) — that only
-      // costs layout granularity, never pruning correctness, and the
-      // alternative (estimating distinct blocks per candidate shift)
-      // measured 4x the whole rewrite's cost at sf0.1.
-      val withZ = withZColumn(resolved, zCols)
-      val mzRow = withZ.agg(max("_z")).collect()(0)
-      // no max(_z) means zero live rows (an empty table, or a tail of
-      // only zero-row dirs): nothing to re-cluster — return the
-      // snapshot unchanged rather than failing a routine nightly run
-      if (mzRow.isNullAt(0)) return base
-      val mz = mzRow.getLong(0)
+    val meta = metaAt(fs, rp, base)
+    val keys = meta.keys.map(_.map(logicalName(meta.colMap, _)))
+    writeZBlocks(spark, fs, rp, read(spark, root, base), zCols, nDirs,
+      keys.getOrElse(Seq.empty) ++ zCols, stage).map(entries =>
+      Commit("compact", meta.rewritten(keys, zCols), rest = Drop,
+        added = entries.map(_.line)))
+  }
+
+  /** Write `df`'s rows under one staged `data/zopt-<uuid>` dir as one
+    * `_b=<block>` dir per ALIGNED z-prefix block (block = z >> shift),
+    * not sampled quantile ranges: a quantile boundary that straddles a
+    * Morton cell widens that dir's min/max box in EVERY dimension and
+    * pruning degrades, whereas prefix blocks are axis-aligned boxes by
+    * construction — the tightest stats the interleave can give. The
+    * shift derives from max(z) alone (one cheap 1-row aggregate): the
+    * smallest shift whose ALIGNED block count over [0, maxZ] fits
+    * nDirs. Heavily-clustered z distributions may leave some blocks
+    * empty (fewer, larger dirs) — that only costs layout granularity,
+    * never pruning correctness, and the alternative (estimating
+    * distinct blocks per candidate shift) measured 4x the whole
+    * rewrite's cost at sf0.1. Returns the blocks' entries with stats on
+    * `statsCols`, from ONE grouped stats pass; None when `df` has no
+    * live rows (an empty table, or a tail of only zero-row dirs) —
+    * nothing to re-cluster, so a routine nightly run commits nothing. */
+  private def writeZBlocks(spark: SparkSession, fs: FileSystem, rp: Path,
+    df: DataFrame, zCols: Seq[String], nDirs: Int, statsCols: Seq[String],
+    stage: String => String): Option[Seq[Entry]] = {
+    val withZ = withZColumn(df, zCols)
+    val mzRow = withZ.agg(max("_z")).collect()(0)
+    if (mzRow.isNullAt(0)) None
+    else {
       val blockBits = 63 - java.lang.Long.numberOfLeadingZeros(
         math.max(1L, nDirs.toLong)) // floor(log2(nDirs))
-      val zBits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, mz))
+      val zBits = 64 - java.lang.Long.numberOfLeadingZeros(
+        math.max(1L, mzRow.getLong(0)))
       val shift = math.max(0, zBits - blockBits)
+      val parent = stage(s"data/zopt-${java.util.UUID.randomUUID()}")
       withZ
         .withColumn("_b", expr(s"shiftright(_z, $shift)"))
         .repartition(col("_b"))
@@ -2260,34 +2379,39 @@ object TxTable {
         .drop("_z")
         .write.partitionBy("_b").mode("overwrite")
         .parquet(new Path(rp, parent).toString)
-      val meta = metaAt(fs, rp, base)
-      // dirs rewritten from read()'s logical output: keys move to
-      // logical names and any mapping resets (see compactSnapshot)
-      val keys = meta.keys.map(_.map(logicalName(meta.colMap, _)))
-      val statsCols = zCols
       val buckets = fs.listStatus(new Path(rp, parent)).toSeq
         .map(_.getPath.getName).filter(_.startsWith("_b="))
         .sortBy(n => n.stripPrefix("_b=").toLong)
-      // ONE grouped stats pass over all buckets (was one Spark job per
-      // bucket — nDirs sequential scans of the just-written table)
-      val entries = bucketStatsEntries(spark, rp, parent,
-        buckets.map(b => s"$parent/$b"),
-        keys.getOrElse(Seq.empty) ++ statsCols)
-      try {
-        return commitRetry(spark, root) { head =>
-          if (head.version != base) throw new StaleOptimize
-          Commit("compact", head.meta.rewritten(keys, statsCols),
-            entries.map(_.line))
-        }
-      } catch {
-        case _: StaleOptimize =>
-          fs.delete(new Path(rp, parent), true)
-          attempt += 1
-      }
+      Some(bucketStatsEntries(spark, rp, parent,
+        buckets.map(b => s"$parent/$b"), statsCols))
     }
-    throw new IllegalStateException(
-      s"txtable: optimize of $root lost the commit race 3 times; " +
-        "rerun when concurrent writes quiesce")
+  }
+
+  /** The commit of a rewrite staged OUTSIDE the claim loop, pinned to
+    * the snapshot it read: `rewrite(base, stage)` stages the rewrite of
+    * version `base` once and returns its commit (None: nothing to
+    * rewrite). A commit that lands in between makes the staged copy
+    * stale (committing it would drop the interleaved rows), so the
+    * claim aborts, the body deletes the stage, and the rewrite re-runs
+    * against the new snapshot — bounded times, not the claim loop's ten
+    * (each retry here is a full-table rewrite). */
+  private def pinnedCommit(spark: SparkSession, root: String,
+    tries: Int = 3)(rewrite: (Int, String => String) => Option[Commit]): Int = {
+    val base = latestVersion(spark, root)
+    require(base > 0, s"txtable: nothing to optimize at $root")
+    try commitRetry(spark, root) { stage =>
+      val c = rewrite(base, stage)
+      head => {
+        if (c.isDefined && head.version != base) throw new StaleOptimize
+        c
+      }
+    } catch {
+      case _: StaleOptimize if tries > 1 =>
+        pinnedCommit(spark, root, tries - 1)(rewrite)
+      case _: StaleOptimize => throw new IllegalStateException(
+        s"txtable: optimize of $root lost the commit race 3 times; " +
+          "rerun when concurrent writes quiesce")
+    }
   }
 
   /** Control-flow marker: a concurrent commit invalidated a staged
@@ -2314,76 +2438,38 @@ object TxTable {
     zCols: Seq[String], nDirs: Int = 8): Int = {
     require(nDirs >= 1, "optimizeZOrder needs at least one output dir")
     val (fs, rp) = fsFor(spark, root)
-    var attempt = 0
-    while (attempt < 3) {
-      val base = latestVersion(spark, root)
-      require(base > 0, s"txtable: nothing to optimize at $root")
+    pinnedCommit(spark, root) { (base, stage) =>
       val entries = snapshotEntries(fs, rp, base)
       require(!entries.exists(_.isDelta),
         s"txtable: optimizeZOrderIncremental needs a delta-free " +
           s"snapshot of $root — run compactSnapshot first")
       val meta = metaAt(fs, rp, base)
-      if (meta.colMap.exists(_.exists { case (l, p) => l != p }))
-        return optimizeZOrderN(spark, root, zCols, nDirs)
       val (clustered, tail) =
         entries.partition(_.dir.startsWith("data/zopt-"))
-      if (clustered.isEmpty)
-        return optimizeZOrderN(spark, root, zCols, nDirs)
-      if (tail.isEmpty) return base
-      val keys = meta.keys
-      val statsCols = meta.statsCols
-      val parent = s"data/zopt-${java.util.UUID.randomUUID()}"
-      // per-dir default fill BEFORE the union — the re-clustered
-      // files must carry the default, not a materialized NULL
-      val addedNow = meta.liveAdded
-      val tailDf = tail
-        .map(e => fillDeclaredDefaults(visibleDirFrame(spark, rp, e),
-          addedNow))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      val withZ = withZColumn(tailDf, zCols)
-      val mzRow = withZ.agg(max("_z")).collect()(0)
-      // no max(_z) means zero live rows (an empty table, or a tail of
-      // only zero-row dirs): nothing to re-cluster — return the
-      // snapshot unchanged rather than failing a routine nightly run
-      if (mzRow.isNullAt(0)) return base
-      val mz = mzRow.getLong(0)
-      // the tail gets its OWN aligned grid — blocks need not share the
-      // base generation's shift to be axis-aligned stats boxes
-      val blockBits = 63 - java.lang.Long.numberOfLeadingZeros(
-        math.max(1L, nDirs.toLong))
-      val zBits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, mz))
-      val shift = math.max(0, zBits - blockBits)
-      withZ
-        .withColumn("_b", expr(s"shiftright(_z, $shift)"))
-        .repartition(col("_b"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.partitionBy("_b").mode("overwrite")
-        .parquet(new Path(rp, parent).toString)
-      val buckets = fs.listStatus(new Path(rp, parent)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("_b="))
-        .sortBy(n => n.stripPrefix("_b=").toLong)
-      // ONE grouped stats pass over the tail's buckets (see
-      // optimizeZOrderN — was one Spark job per bucket)
-      val newEntries = bucketStatsEntries(spark, rp, parent,
-        buckets.map(b => s"$parent/$b"),
-        (keys.getOrElse(Seq.empty) ++ statsCols ++ zCols).distinct)
-      try {
-        return commitRetry(spark, root) { head =>
-          if (head.version != base) throw new StaleOptimize
-          Commit("compact", head.meta.rewritten(keys,
+      if (meta.colMap.exists(_.exists { case (l, p) => l != p }) ||
+        clustered.isEmpty) zRewrite(spark, root, zCols, nDirs, base, stage)
+      else if (tail.isEmpty) None
+      else {
+        val keys = meta.keys
+        val statsCols = meta.statsCols
+        // per-dir default fill BEFORE the union — the re-clustered
+        // files must carry the default, not a materialized NULL
+        val addedNow = meta.liveAdded
+        val tailDf = tail
+          .map(e => fillDeclaredDefaults(visibleDirFrame(spark, rp, e),
+            addedNow))
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+        // the tail gets its OWN aligned grid — blocks need not share the
+        // base generation's shift to be axis-aligned stats boxes
+        writeZBlocks(spark, fs, rp, tailDf, zCols, nDirs,
+          (keys.getOrElse(Seq.empty) ++ statsCols ++ zCols).distinct,
+          stage).map(blocks =>
+          Commit("compact", meta.rewritten(keys,
             (statsCols ++ zCols).distinct, resetMap = false),
-            clustered.map(_.line) ++ newEntries.map(_.line))
-        }
-      } catch {
-        case _: StaleOptimize =>
-          fs.delete(new Path(rp, parent), true)
-          attempt += 1
+            read = tail.map(_.line -> Drop).toMap,
+            added = blocks.map(_.line)))
       }
     }
-    throw new IllegalStateException(
-      s"txtable: optimize of $root lost the commit race 3 times; " +
-        "rerun when concurrent writes quiesce")
   }
 
   /** Fold all deltas of the current snapshot into one materialized
@@ -2406,11 +2492,11 @@ object TxTable {
           replace = true)
       case None => ()
     }
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to compact at $root")
       val m = head.meta.colMap
       val resolved = read(spark, root, head.version)
-      val dirName = s"data/compact-${java.util.UUID.randomUUID()}"
+      val dirName = stage(s"data/compact-${java.util.UUID.randomUUID()}")
       // the new dir is born under the LOGICAL names (read's output),
       // materializing any renames and shedding drop tombstones — so
       // the key/stats headers move to logical and the mapping RESETS
@@ -2423,8 +2509,8 @@ object TxTable {
       obsResolved.write.mode("overwrite")
         .parquet(new Path(rp, dirName).toString)
       val entry = mkEntry(spark, rp, dirName, false)
-      Commit("compact", head.meta.rewritten(keys, statsCols),
-        Seq(entry.line))
+      Some(Commit("compact", head.meta.rewritten(keys, statsCols),
+        rest = Drop, added = Seq(entry.line)))
     }
   }
 
@@ -2457,20 +2543,14 @@ object TxTable {
     * are below the threshold (no commit written). */
   def optimizeCompact(spark: SparkSession, root: String,
     targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    var staged: Seq[String] = Seq.empty
-    commitRetry(spark, root) { head =>
-      val prevV = head.version
-      staged.foreach(d => fs.delete(new Path(rp, d), true))
-      staged = Seq.empty
-      require(prevV > 0, s"txtable: nothing to optimize at $root")
-      val entries = headEntries(fs, rp, head)
+    val rp = fsFor(spark, root)._2
+    commitRetry(spark, root) { stage => head =>
+      require(head.version > 0, s"txtable: nothing to optimize at $root")
+      val entries = head.entries
       require(!entries.exists(_.isDelta),
         s"txtable: optimizeCompact needs a delta-free snapshot of $root " +
           "— run compactSnapshot first")
       val sized = entrySizes(spark, rp, entries)
-      if (sized.count(_._2 < targetBytes) < 2)
-        return prevV // nothing worth packing; no empty commit
       val keys = head.meta.keys
       val statsCols = head.meta.statsCols
       // PARTITION-AWARE packing: a provably partition-clustered table
@@ -2521,13 +2601,15 @@ object TxTable {
         }
       }
       cur.keys.toSeq.foreach(flush)
-      // all-singleton bins = nothing to pack (e.g. the small dirs sit
-      // in different partition values) — no empty commit
-      if (bins.forall(_.size == 1)) return prevV
-      val newLines = bins.toSeq.map { bin =>
-        if (bin.size == 1) bin.head.line // carried by name, unopened
-        else {
-          val dirName = s"data/opt-${java.util.UUID.randomUUID()}"
+      // all-singleton bins = nothing to pack (fewer than two small
+      // dirs, or the small dirs sit in different partition values) —
+      // no empty commit
+      if (bins.forall(_.size == 1)) None
+      else {
+        // a bin of several dirs rewrites into one at its first member's
+        // position; singletons carry by name, unopened
+        val packed = bins.toSeq.filter(_.size > 1).flatMap { bin =>
+          val dirName = stage(s"data/opt-${java.util.UUID.randomUUID()}")
           // the fill is PER DIR: unioning first would null-fill the
           // pre-ADD dirs' rows for a column another bin member carries
           val addedNow = head.meta.liveAdded
@@ -2539,19 +2621,19 @@ object TxTable {
             keys.getOrElse(Seq.empty) ++ statsCols)
           obsMerged.write.mode("overwrite")
             .parquet(new Path(rp, dirName).toString)
-          staged = staged :+ dirName
           val entry = mkEntry(spark, rp, dirName, false)
           // a merged bucket dir RE-RECORDS its id: every bin member
           // carried the same `_bucket` (it's in the group key), so
           // the proof survives the pack
-          bspec.flatMap(_ => bin.head.stats.get(bucketStatKey))
+          val line = bspec.flatMap(_ => bin.head.stats.get(bucketStatKey))
             .fold(entry)(id => entry.copy(
               stats = entry.stats + (bucketStatKey -> id))).line
+          (bin.head.line -> Replace(line)) +: bin.tail.map(_.line -> Drop)
         }
+        // content-preserving: every header carries (renames stay
+        // metadata, the bucket layout survives the within-bucket pack)
+        Some(Commit("compact", head.meta, read = packed.toMap))
       }
-      // content-preserving: every header carries (renames stay
-      // metadata, the bucket layout survives the within-bucket pack)
-      Commit("compact", head.meta, newLines)
     }
   }
 
@@ -2618,109 +2700,11 @@ object TxTable {
         c.phys -> c.internalDefault }.toMap)
   }
 
-  /** A row-level DML statement's verdict on one dir it read. */
-  private sealed trait DirOutcome
-  private case object Carry extends DirOutcome
-  private case object Drop extends DirOutcome
-  private final case class Replace(line: String) extends DirOutcome
-  /** Attach the dir's new sidecar `name`, holding `n` dead positions. */
-  private final case class Pdel(name: String, n: Long) extends DirOutcome
-
-  /** One claim attempt of a row-level DML statement: the outcome of
-    * each entry line it read, the lines of new dirs (rewrites, inserts)
-    * appended after the head's entries, and the `key:`/`statscol:`
-    * headers it re-declares. */
-  private final case class DirSwap(read: Map[String, DirOutcome],
-    added: Seq[String], keys: Seq[String], statsCols: Seq[String])
-
-  /** THE commit of every row-level DML face (Scala delete in both
-    * modes and update; SQL copy-on-write and merge-on-read), on one
-    * [[commitRetry]] claim. `prepare` runs once, staging through the
-    * function it gets (root-relative paths) what every attempt reuses,
-    * and returns the attempt, which maps the head (version, entries) to
-    * a [[DirSwap]]; what an attempt stages is deleted when it loses the
-    * claim, and everything staged when the commit aborts. An attempt
-    * aborts (ConcurrentModificationException) when a read line is gone
-    * from the head — its rows or positions no longer describe the
-    * table — applies each read dir's outcome in place, appends the new
-    * dirs, and keeps one zero-row dir when no entry remains (an empty
-    * snapshot has no schema to read back). A sidecar's dead rows leave
-    * `_rows`; more of them than `_rows` means the entry is wrong, and
-    * dropping the dir on equality could then lose live rows. */
-  private def swapCommit(spark: SparkSession, root: String, op: String)(
-    prepare: (String => String) => (Head, Seq[Entry]) => DirSwap): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    var prepared, attempt = Vector.empty[String]
-    var claiming = false
-    val stage = (p: String) => {
-      if (claiming) attempt :+= p else prepared :+= p
-      p
-    }
-    def delete(ps: Seq[String]): Unit =
-      ps.foreach(p => fs.delete(new Path(rp, p), true))
-    // sidecars of dirs whose rows all died: unreferenced once committed
-    var emptied = Seq.empty[String]
-    try {
-      val plan = prepare(stage)
-      claiming = true
-      val v = commitRetry(spark, root) { head =>
-        delete(attempt)
-        attempt = Vector.empty
-        emptied = Seq.empty
-        val entries = headEntries(fs, rp, head)
-        val swap = plan(head, entries)
-        val present = entries.map(_.line).toSet
-        val gone = swap.read.keys.filterNot(present).toSeq
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"txtable: $op of $root lost its snapshot — ${gone.size} dir(s) " +
-            "being rewritten or receiving deletes changed under the " +
-            s"statement (e.g. ${gone.head.take(80)}); re-run it")
-        val lines = entries.flatMap { e =>
-          swap.read.getOrElse(e.line, Carry) match {
-            case Carry => Some(e.line)
-            case Drop => None
-            case Replace(l) => Some(l)
-            case Pdel(name, n) =>
-              val nAll = e.stats.get(rowsKey).map(_._1)
-                .getOrElse(visibleDirFrame(spark, rp, e).count())
-              if (n > nAll) throw new IllegalStateException(
-                s"txtable: $op matched $n rows in ${e.dir} for positional " +
-                  s"deletion, whose entry records only $nAll live rows - " +
-                  "refusing to commit over inconsistent dir metadata")
-              if (n == nAll) { emptied :+= s"${e.dir}/$name"; None }
-              else Some(e.copy(
-                stats = e.stats + (rowsKey -> (nAll - n, nAll - n)),
-                pdels = e.pdels + (name -> n)).line)
-          }
-        } ++ swap.added
-        // every entry was read and dropped: the first one's footer
-        // schema keeps the table readable
-        val kept =
-          if (lines.nonEmpty) lines
-          else {
-            val src = entries.head.dir
-            val d = writeEmptyDir(spark, rp,
-              stage(s"data/$op-${java.util.UUID.randomUUID()}"),
-              dirSchemas(spark, rp, Seq(src))(src))
-            Seq(statsEntry(spark, rp, d, swap.keys ++ swap.statsCols).line)
-          }
-        Commit(op, head.meta.rewritten(Some(swap.keys).filter(_.nonEmpty),
-          swap.statsCols, resetMap = false), kept)
-      }
-      delete(emptied)
-      v
-    } catch {
-      case e: Throwable =>
-        delete(prepared ++ attempt)
-        throw e
-    }
-  }
-
-  /** Move executor-staged files into a new `data/<op>-<uuid>` dir;
-    * returns its name. */
+  /** Move executor-staged files into a new `data/<op>-<uuid>` dir,
+    * staged through `stage`; returns its name. */
   private def promoteStaged(fs: FileSystem, rp: Path, op: String,
-    staged: Seq[String]): String = {
-    val dirName = s"data/$op-${java.util.UUID.randomUUID()}"
+    staged: Seq[String], stage: String => String): String = {
+    val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
     val dirPath = new Path(rp, dirName)
     fs.mkdirs(dirPath)
     staged.foreach { f =>
@@ -2762,20 +2746,25 @@ object TxTable {
     * Unaffected entry lines carry over from the CURRENT head — a
     * concurrent commit that only touched other dirs composes fine, but
     * one that changed or removed an affected dir's line aborts loudly
-    * ([[swapCommit]]). */
+    * ([[commitRetry]]). */
   private[sources] def cowCommit(spark: SparkSession, root: String,
     plan: CowPlan, staged: Seq[String], op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, op) { stage =>
+    commitRetry(spark, root) { stage =>
       val added =
         if (staged.isEmpty) Seq.empty
-        else Seq(statsEntry(spark, rp, stage(promoteStaged(fs, rp, op, staged)),
+        else Seq(statsEntry(spark, rp, promoteStaged(fs, rp, op, staged, stage),
           plan.keys ++ plan.statsCols).line)
-      val swap = DirSwap(plan.affectedLines.map(_ -> Drop).toMap, added,
-        plan.keys, plan.statsCols)
-      (_, _) => swap
+      head => Some(Commit(op, planMeta(head, plan),
+        read = plan.affectedLines.map(_ -> Drop).toMap, added = added))
     }
   }
+
+  /** The headers of a SQL row-level rewrite: the head's, re-declaring
+    * the key and stats columns `plan` scanned under. */
+  private def planMeta(head: Head, plan: CowPlan): TableMeta =
+    head.meta.rewritten(Some(plan.keys).filter(_.nonEmpty), plan.statsCols,
+      resetMap = false)
 
   /** The latest snapshot's column mapping (None = identity / no
     * commits) — what a V2 batch writer needs to stage files under the
@@ -2828,43 +2817,37 @@ object TxTable {
           replace = replace)
       case _ => ()
     }
-    val dirName = promoteStaged(fs, rp,
-      if (replace) "overwrite" else "append", staged)
-    val dirPath = new Path(rp, dirName)
-    // empty INSERT OVERWRITE: a zero-row file carries the schema
-    if (staged.isEmpty)
-      writeEmptyDir(spark, rp, dirName, parquetSchemaOf(writeSchema))
-    try commitRetry(spark, root) { head =>
-      // a table's FIRST content (bootstrap INSERT, or replace-all)
-      // declares its stats columns: write-time per-dir stats are what
-      // feed dir pruning, metadata aggregates and the CBO, and a
-      // SQL-first table should get them without the Scala API
-      if (replace) {
-        val entry = statsEntry(spark, rp, dirName, bootstrapStatsCols)
-        Commit("overwrite", head.meta.rewritten(None, bootstrapStatsCols),
-          Seq(entry.line))
-      } else {
-        if (head.meta.bucketBy.isDefined) {
-          fs.delete(dirPath, true)
-          throw new IllegalStateException(
+    commitRetry(spark, root) { stage =>
+      val dirName = promoteStaged(fs, rp,
+        if (replace) "overwrite" else "append", staged, stage)
+      // empty INSERT OVERWRITE: a zero-row file carries the schema
+      if (staged.isEmpty)
+        writeEmptyDir(spark, rp, dirName, parquetSchemaOf(writeSchema))
+      head =>
+        // a table's FIRST content (bootstrap INSERT, or replace-all)
+        // declares its stats columns: write-time per-dir stats are what
+        // feed dir pruning, metadata aggregates and the CBO, and a
+        // SQL-first table should get them without the Scala API
+        if (replace) {
+          val entry = statsEntry(spark, rp, dirName, bootstrapStatsCols)
+          Some(Commit("overwrite",
+            head.meta.rewritten(None, bootstrapStatsCols), rest = Drop,
+            added = Seq(entry.line)))
+        } else {
+          if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
             s"txtable: $root is bucket-clustered; INSERT INTO would " +
               "break the layout - appendBucketedBy maintains it, " +
               "INSERT OVERWRITE replaces it")
+          val statsCols =
+            if (head.version == 0) bootstrapStatsCols.distinct
+            else (head.meta.keys.getOrElse(Seq.empty) ++
+              head.meta.statsCols).distinct
+          val entry = statsEntry(spark, rp, dirName, statsCols)
+          Some(Commit("append",
+            if (head.version == 0) head.meta.copy(statsCols = statsCols)
+            else head.meta,
+            added = Seq(entry.line)))
         }
-        val statsCols =
-          if (head.version == 0) bootstrapStatsCols.distinct
-          else (head.meta.keys.getOrElse(Seq.empty) ++
-            head.meta.statsCols).distinct
-        val entry = statsEntry(spark, rp, dirName, statsCols)
-        Commit("append",
-          if (head.version == 0) head.meta.copy(statsCols = statsCols)
-          else head.meta,
-          head.rawEntryLines :+ entry.line)
-      }
-    } catch {
-      case e: Throwable =>
-        fs.delete(dirPath, true)
-        throw e
     }
   }
 
@@ -2881,20 +2864,21 @@ object TxTable {
     plan: CowPlan, stagedInserts: Seq[String], stagedDeletes: Seq[String],
     op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, op) { stage =>
+    commitRetry(spark, root) { stage =>
       val inserted =
         if (stagedInserts.isEmpty) Seq.empty
         else Seq(statsEntry(spark, rp,
-          stage(promoteStaged(fs, rp, op, stagedInserts)),
+          promoteStaged(fs, rp, op, stagedInserts, stage),
           plan.keys ++ plan.statsCols).line)
       val dead =
         if (stagedDeletes.isEmpty) Map.empty[String, Pdel]
         else writePdels(spark, rp, spark.read.parquet(stagedDeletes: _*),
           stage)
       val lineOf = plan.affectedDirs.zip(plan.affectedLines).toMap
-      val swap = DirSwap(dead.map { case (d, o) => lineOf(d) -> o },
-        inserted, plan.keys, plan.statsCols)
-      (_, _) => swap
+      val read: Map[String, DirOutcome] =
+        dead.map { case (d, o) => lineOf(d) -> o }
+      head => Some(Commit(op, planMeta(head, plan), read = read,
+        added = inserted))
     }
   }
 
@@ -3004,9 +2988,10 @@ object TxTable {
     * against the new parent and deletes the stale staged files. */
   def deleteWhere(spark: SparkSession, root: String, predSql: String,
     positional: Boolean = false): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, "delete") { stage => (head, entries) =>
+    val rp = fsFor(spark, root)._2
+    commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to delete from at $root")
+      val entries = head.entries
       require(!entries.exists(_.isDelta),
         s"txtable: deleteWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
@@ -3027,7 +3012,7 @@ object TxTable {
       val dead =
         if (coords.isEmpty) Map.empty[String, Pdel]
         else writePdels(spark, rp, coords.reduce(_ union _), stage)
-      DirSwap(fates.map { case (e, fate) =>
+      val read = fates.map { case (e, fate) =>
         e.line -> (fate match {
           case Refuted => Carry
           case Covered => Drop
@@ -3047,7 +3032,9 @@ object TxTable {
             else Right(survivors)
           }
         })
-      }.toMap, Seq.empty, keys, statsCols)
+      }.toMap
+      // rewritten dirs no longer prove a bucket layout
+      Some(Commit("delete", head.meta.copy(bucketBy = None), read = read))
     }
   }
 
@@ -3188,7 +3175,7 @@ object TxTable {
           s"txtable: $root is bucketed as bucketby:$c,$n - an append " +
             s"bucketed by $physB,$numBuckets does not match")
         case None =>
-          val live = headEntries(fs, rp, h)
+          val live = h.entries
             .exists(e => e.stats.get(rowsKey).forall(_._1 > 0))
           require(!live,
             s"txtable: $root has unbucketed content; a bucketed " +
@@ -3197,22 +3184,6 @@ object TxTable {
       }
     requireCompat(head0)
     val helper = "_graft_bkt"
-    val baseDir = s"data/append-${java.util.UUID.randomUUID()}"
-    val basePath = new Path(rp, baseDir).toString
-    try {
-      // the repartition clusters each bucket's rows into one task →
-      // one file per bucket per append, whatever the task count
-      physDf0
-        .withColumn(helper,
-          pmod(hash(col(physB)), lit(numBuckets)).cast("long"))
-        .repartition(col(helper))
-        .write.partitionBy(helper).mode("overwrite").parquet(basePath)
-      verifyChecks()
-    } catch {
-      case t: Throwable =>
-        fs.delete(new Path(rp, baseDir), true)
-        throw t
-    }
     // per-bucket stats in ONE aggregate over the written layout; the
     // real columns stayed IN the files (the helper was a copy of the
     // derived id), so later reads serve full rows per dir. A DateType
@@ -3221,39 +3192,45 @@ object TxTable {
     // partitioned write path
     val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
       keys = if (dtB == DateType) Seq.empty else Seq(physB -> col(physB)))
-    val statRows = spark.read.parquet(basePath)
-      .groupBy(col(helper).cast("long").as(helper))
-      .agg(agg.aggs.head, agg.aggs.tail: _*)
-      .collect() // bucket-cardinality readback (<= numBuckets rows)
-      .map(r => r.getLong(0) -> r).toMap
-    if (statRows.isEmpty) {
-      fs.delete(new Path(rp, baseDir), true)
-      throw new IllegalArgumentException(
+    commitRetry(spark, root) { stage =>
+      val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
+      val basePath = new Path(rp, baseDir).toString
+      // the repartition clusters each bucket's rows into one task →
+      // one file per bucket per append, whatever the task count
+      physDf0
+        .withColumn(helper,
+          pmod(hash(col(physB)), lit(numBuckets)).cast("long"))
+        .repartition(col(helper))
+        .write.partitionBy(helper).mode("overwrite").parquet(basePath)
+      verifyChecks()
+      val statRows = spark.read.parquet(basePath)
+        .groupBy(col(helper).cast("long").as(helper))
+        .agg(agg.aggs.head, agg.aggs.tail: _*)
+        .collect() // bucket-cardinality readback (<= numBuckets rows)
+        .map(r => r.getLong(0) -> r).toMap
+      if (statRows.isEmpty) throw new IllegalArgumentException(
         "txtable: bucketed append of empty frame")
-    }
-    val entries = finishEntries(spark, rp,
-      statRows.keys.toSeq.sorted.map { id =>
-        val e = agg.decode(s"$baseDir/$helper=$id",
-          i => statRows(id).get(1 + i))
-        // bucket dirs record no `sx:` exact markers
-        e.copy(stats = e.stats + (bucketStatKey -> (id, id)),
-          xvals = Map.empty)
-      })
-    try commitRetry(spark, root) { head =>
-      requireCompat(head)
-      val physStats = agg.integral ++ agg.strings
-      val bucketed = Some(physB -> numBuckets)
-      if (replace)
-        Commit("overwrite", head.meta.rewritten(None, physStats)
-          .copy(bucketBy = bucketed), entries.map(_.line))
-      else
-        Commit("append", head.meta.copy(bucketBy = bucketed,
-          colMap = extMap.orElse(head.meta.colMap)).withStats(physStats),
-          head.rawEntryLines ++ entries.map(_.line))
-    } catch {
-      case t: Throwable =>
-        fs.delete(new Path(rp, baseDir), true)
-        throw t
+      val entries = finishEntries(spark, rp,
+        statRows.keys.toSeq.sorted.map { id =>
+          val e = agg.decode(s"$baseDir/$helper=$id",
+            i => statRows(id).get(1 + i))
+          // bucket dirs record no `sx:` exact markers
+          e.copy(stats = e.stats + (bucketStatKey -> (id, id)),
+            xvals = Map.empty)
+        })
+      head => {
+        requireCompat(head)
+        val physStats = agg.integral ++ agg.strings
+        val bucketed = Some(physB -> numBuckets)
+        if (replace)
+          Some(Commit("overwrite", head.meta.rewritten(None, physStats)
+            .copy(bucketBy = bucketed), rest = Drop,
+            added = entries.map(_.line)))
+        else
+          Some(Commit("append", head.meta.copy(bucketBy = bucketed,
+            colMap = extMap.orElse(head.meta.colMap)).withStats(physStats),
+            added = entries.map(_.line)))
+      }
     }
   }
 
@@ -3316,16 +3293,6 @@ object TxTable {
     val effMap = extMap.orElse(m0)
     val physParts = partCols.map(physName(effMap, _))
     val helpers = partCols.indices.map(i => s"_graft_part$i")
-    val baseDir = s"data/append-${java.util.UUID.randomUUID()}"
-    val basePath = new Path(rp, baseDir).toString
-    // ONE pass over the data whatever the partition count (a daily-
-    // partitioned year must not become 365 serial jobs): hive-style
-    // dynamic `partitionBy` on DUPLICATED helper columns, so the real
-    // partition columns stay IN the files (plain partitionBy strips
-    // them into the path, which would vanish under the snapshot
-    // reader's per-dir scans). The pre-shuffle on the helpers clusters
-    // each tuple's rows into the task that writes its dir — one file
-    // per partition instead of tasks × dirs fragments.
     // Integral helpers are the value itself; STRING helpers are the
     // 'x'-prefixed lowercase hex of the UTF-8 bytes — hex keeps every
     // dir name path-safe and escape-free whatever the value holds,
@@ -3348,56 +3315,6 @@ object TxTable {
         .cast("long")
       case _ => col(p).cast("long")
     }
-    try {
-      physParts.zip(helpers).zip(partKind)
-        .foldLeft(physDf0) { case (d, ((p, h), kind)) =>
-          d.withColumn(h, helperExpr(p, kind))
-        }.repartition(helpers.map(col): _*)
-        .write.partitionBy(helpers: _*).mode("overwrite").parquet(basePath)
-      verifyChecks()
-    } catch {
-      case t: Throwable =>
-        fs.delete(new Path(rp, baseDir), true)
-        val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .take(16).toSeq
-        if (chain.exists(e => e.getMessage != null &&
-          e.getMessage.contains(capMsg)))
-          throw new IllegalArgumentException(capMsg)
-        throw t
-    }
-    // NULLs can't address a `$partCol=v` dir (they land in the hive
-    // default-partition dir) — partitioned appends need a total
-    // partition assignment; fail loudly rather than lose rows. Leaf
-    // tuples stay in the RAW dir-name token space ("5" / "x6162")
-    // until entry building decodes them per column type.
-    def leafTuples(p: Path, depth: Int): Seq[Seq[String]] =
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
-        .filter(_.startsWith(s"${helpers(depth)}=")).flatMap { n =>
-          val v = n.stripPrefix(s"${helpers(depth)}=")
-          if (v == "__HIVE_DEFAULT_PARTITION__") {
-            fs.delete(new Path(rp, baseDir), true)
-            throw new IllegalArgumentException(
-              s"txtable: partition column '${partCols(depth)}' contains " +
-                "NULLs — partitioned appends need a total partition " +
-                "assignment; coalesce NULLs to a sentinel value first")
-          }
-          if (partIsStr(depth) &&
-            (v.length - 1) / 2 > strStatMaxBytes) {
-            // unreachable when the write-side raise_error policed the
-            // cap; kept as the loud backstop for exotic filesystems
-            fs.delete(new Path(rp, baseDir), true)
-            throw new IllegalArgumentException(capMsg)
-          }
-          if (depth == helpers.length - 1) Seq(Seq(v))
-          else leafTuples(new Path(p, n), depth + 1).map(v +: _)
-        }
-    val tuples = leafTuples(new Path(rp, baseDir), 0)
-      .sortBy(_.mkString(","))
-    if (tuples.isEmpty) {
-      fs.delete(new Path(rp, baseDir), true)
-      throw new IllegalArgumentException(
-        "txtable: partitioned append of empty frame")
-    }
     // per-dir exact stats in ONE aggregate over the written layout
     // (the hive partition columns group rows by leaf dir), read back
     // before the rename so the helper names can't collide with data
@@ -3414,74 +3331,122 @@ object TxTable {
       keys = physParts.zip(partKind).map { case (p, kind) =>
         p -> (if (kind == 'd') helperExpr(p, kind) else col(p))
       })
-    def dirNameOf(vs: Seq[String]): String = baseDir + physParts.zip(vs)
-      .map { case (p, v) => s"/$p=$v" }.mkString
-    val g = helpers.length
-    val statRows = spark.read.parquet(basePath)
-      // pin helper types: partition-value inference may type small
-      // integral tokens INT; 'x'-prefixed hex tokens always infer
-      // string and group back verbatim
-      .groupBy(helpers.zip(partIsStr).map { case (h, isStr) =>
-        (if (isStr) col(h).cast("string") else col(h).cast("long")).as(h)
-      }: _*)
-      .agg(agg.aggs.head, agg.aggs.tail: _*)
-      .collect() // partition-cardinality readback (dates/buckets)
-      .map { r =>
-        val vs: Seq[String] = partIsStr.zipWithIndex.map { case (isStr, i) =>
-          if (isStr) r.getString(i) else r.getLong(i).toString
+    commitRetry(spark, root) { stage =>
+      val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
+      val basePath = new Path(rp, baseDir).toString
+      // ONE pass over the data whatever the partition count (a daily-
+      // partitioned year must not become 365 serial jobs): hive-style
+      // dynamic `partitionBy` on DUPLICATED helper columns, so the real
+      // partition columns stay IN the files (plain partitionBy strips
+      // them into the path, which would vanish under the snapshot
+      // reader's per-dir scans). The pre-shuffle on the helpers clusters
+      // each tuple's rows into the task that writes its dir — one file
+      // per partition instead of tasks × dirs fragments.
+      try {
+        physParts.zip(helpers).zip(partKind)
+          .foldLeft(physDf0) { case (d, ((p, h), kind)) =>
+            d.withColumn(h, helperExpr(p, kind))
+          }.repartition(helpers.map(col): _*)
+          .write.partitionBy(helpers: _*).mode("overwrite").parquet(basePath)
+        verifyChecks()
+      } catch {
+        case t: Throwable =>
+          val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+            .take(16).toSeq
+          if (chain.exists(e => e.getMessage != null &&
+            e.getMessage.contains(capMsg)))
+            throw new IllegalArgumentException(capMsg)
+          throw t
+      }
+      // NULLs can't address a `$partCol=v` dir (they land in the hive
+      // default-partition dir) — partitioned appends need a total
+      // partition assignment; fail loudly rather than lose rows. Leaf
+      // tuples stay in the RAW dir-name token space ("5" / "x6162")
+      // until entry building decodes them per column type.
+      def leafTuples(p: Path, depth: Int): Seq[Seq[String]] =
+        fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
+          .filter(_.startsWith(s"${helpers(depth)}=")).flatMap { n =>
+            val v = n.stripPrefix(s"${helpers(depth)}=")
+            if (v == "__HIVE_DEFAULT_PARTITION__")
+              throw new IllegalArgumentException(
+                s"txtable: partition column '${partCols(depth)}' contains " +
+                  "NULLs — partitioned appends need a total partition " +
+                  "assignment; coalesce NULLs to a sentinel value first")
+            // unreachable when the write-side raise_error policed the
+            // cap; kept as the loud backstop for exotic filesystems
+            if (partIsStr(depth) && (v.length - 1) / 2 > strStatMaxBytes)
+              throw new IllegalArgumentException(capMsg)
+            if (depth == helpers.length - 1) Seq(Seq(v))
+            else leafTuples(new Path(p, n), depth + 1).map(v +: _)
+          }
+      val tuples = leafTuples(new Path(rp, baseDir), 0)
+        .sortBy(_.mkString(","))
+      if (tuples.isEmpty) throw new IllegalArgumentException(
+        "txtable: partitioned append of empty frame")
+      def dirNameOf(vs: Seq[String]): String = baseDir + physParts.zip(vs)
+        .map { case (p, v) => s"/$p=$v" }.mkString
+      val g = helpers.length
+      val statRows = spark.read.parquet(basePath)
+        // pin helper types: partition-value inference may type small
+        // integral tokens INT; 'x'-prefixed hex tokens always infer
+        // string and group back verbatim
+        .groupBy(helpers.zip(partIsStr).map { case (h, isStr) =>
+          (if (isStr) col(h).cast("string") else col(h).cast("long")).as(h)
+        }: _*)
+        .agg(agg.aggs.head, agg.aggs.tail: _*)
+        .collect() // partition-cardinality readback (dates/buckets)
+        .map { r =>
+          val vs: Seq[String] = partIsStr.zipWithIndex.map { case (isStr, i) =>
+            if (isStr) r.getString(i) else r.getLong(i).toString
+          }
+          vs -> agg.decode(dirNameOf(vs), i => r.get(g + i))
+        }.toMap
+      // helper dirs → `$physPart=v` entry dirs: one metadata rename per
+      // path level per distinct prefix, leaves become the entry dirs
+      def renameLevel(p: Path, depth: Int): Unit = {
+        fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
+          .filter(_.getName.startsWith(s"${helpers(depth)}="))
+          .foreach { d =>
+            val v = d.getName.stripPrefix(s"${helpers(depth)}=")
+            val dst = new Path(p, s"${physParts(depth)}=$v")
+            fs.rename(d, dst)
+            if (depth < helpers.length - 1) renameLevel(dst, depth + 1)
+          }
+      }
+      renameLevel(new Path(rp, baseDir), 0)
+      val entries = finishEntries(spark, rp, tuples.map { vs =>
+        val e = statRows(vs)
+        // the NULL-rejection above proved the partition columns null-
+        // free — record that as their `n,<col>` stats so metadata-only
+        // GROUP BY on a partition column can trust the per-dir counts.
+        // Integral keys get exact `lo == hi` range stats; string keys
+        // get the truncation-free bounds PLUS the `sx:` exact marker
+        // (the token is the value's own hex, so stats and data cannot
+        // disagree — both derive from the dir Spark actually wrote).
+        val intParts = physParts.zip(partIsStr).zip(vs).collect {
+          case ((p, false), v) => p -> (v.toLong, v.toLong)
         }
-        vs -> agg.decode(dirNameOf(vs), i => r.get(g + i))
-      }.toMap
-    // helper dirs → `$physPart=v` entry dirs: one metadata rename per
-    // path level per distinct prefix, leaves become the entry dirs
-    def renameLevel(p: Path, depth: Int): Unit = {
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
-        .filter(_.getName.startsWith(s"${helpers(depth)}="))
-        .foreach { d =>
-          val v = d.getName.stripPrefix(s"${helpers(depth)}=")
-          val dst = new Path(p, s"${physParts(depth)}=$v")
-          fs.rename(d, dst)
-          if (depth < helpers.length - 1) renameLevel(dst, depth + 1)
+        val strHex = physParts.zip(partIsStr).zip(vs).collect {
+          case ((p, true), v) => p -> v.drop(1) // strip the 'x' prefix
         }
-    }
-    renameLevel(new Path(rp, baseDir), 0)
-    val entries = finishEntries(spark, rp, tuples.map { vs =>
-      val e = statRows(vs)
-      // the NULL-rejection above proved the partition columns null-
-      // free — record that as their `n,<col>` stats so metadata-only
-      // GROUP BY on a partition column can trust the per-dir counts.
-      // Integral keys get exact `lo == hi` range stats; string keys
-      // get the truncation-free bounds PLUS the `sx:` exact marker
-      // (the token is the value's own hex, so stats and data cannot
-      // disagree — both derive from the dir Spark actually wrote).
-      val intParts = physParts.zip(partIsStr).zip(vs).collect {
-        case ((p, false), v) => p -> (v.toLong, v.toLong)
-      }
-      val strHex = physParts.zip(partIsStr).zip(vs).collect {
-        case ((p, true), v) => p -> v.drop(1) // strip the 'x' prefix
-      }
-      e.copy(
-        stats = e.stats ++ intParts ++
-          physParts.map(p => s"$nullsPrefix$p" -> (0L, 0L)),
-        sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
-        xvals = e.xvals ++ strHex)
-    })
-    commitRetry(spark, root) { head =>
-      if (skipIf(head.version)) {
-        fs.delete(new Path(rp, baseDir), true)
-        return head.version
-      }
-      preCommit(head.version)
-      if (head.meta.bucketBy.isDefined) {
-        fs.delete(new Path(rp, baseDir), true)
-        throw new IllegalStateException(
-          s"txtable: $root became bucket-clustered concurrently; " +
-            "value-partitioned appends would break the layout")
-      }
-      val meta = batchTag.fold(head.meta)(head.meta.tagged)
-      Commit("append", meta.copy(colMap = extMap.orElse(meta.colMap))
-        .withStats(physParts ++ statsCols.map(physName(effMap, _))),
-        head.rawEntryLines ++ entries.map(_.line))
+        e.copy(
+          stats = e.stats ++ intParts ++
+            physParts.map(p => s"$nullsPrefix$p" -> (0L, 0L)),
+          sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
+          xvals = e.xvals ++ strHex)
+      })
+      head =>
+        if (skipIf(head.version)) None
+        else {
+          preCommit(head.version)
+          if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
+            s"txtable: $root became bucket-clustered concurrently; " +
+              "value-partitioned appends would break the layout")
+          val meta = batchTag.fold(head.meta)(head.meta.tagged)
+          Some(Commit("append", meta.copy(colMap = extMap.orElse(meta.colMap))
+            .withStats(physParts ++ statsCols.map(physName(effMap, _))),
+            added = entries.map(_.line)))
+        }
     }
   }
 
@@ -3584,10 +3549,12 @@ object TxTable {
     }
     // an empty epoch still commits its tag (replay-protection cursor)
     if (stagedFiles.isEmpty)
-      return commitRetry(spark, root) { head =>
-        if (alreadyApplied(head.version)) return head.version
-        preCommit(head.version)
-        Commit("append", head.meta.tagged(tag), head.rawEntryLines)
+      return commitRetry(spark, root) { _ => head =>
+        if (alreadyApplied(head.version)) None
+        else {
+          preCommit(head.version)
+          Some(Commit("append", head.meta.tagged(tag)))
+        }
       }
     val conf = spark.sessionState.newHadoopConf()
     def rewriteFallback(): Int = appendPartitionedTagged(
@@ -3641,24 +3608,21 @@ object TxTable {
     val epochChecks = checkConstraints(spark, root)
     if (epochChecks.nonEmpty)
       enforceChecksNow(spark.read.parquet(stagedFiles: _*), epochChecks)
-    val baseDir = s"data/append-${java.util.UUID.randomUUID()}"
-    val entries = promotePartEntries(fs, rp, baseDir, partCols, statsCols,
-      keyed.map { case (f, sf, t) => (f, sf, t.get) })
-    commitRetry(spark, root) { head =>
-      if (alreadyApplied(head.version)) {
-        fs.delete(new Path(rp, baseDir), true)
-        return head.version
-      }
-      preCommit(head.version)
-      if (head.meta.bucketBy.isDefined) {
-        fs.delete(new Path(rp, baseDir), true)
-        throw new IllegalStateException(
-          s"txtable: $root is bucket-clustered; a partitioned " +
-            "streaming append would break the layout")
-      }
-      Commit("append",
-        head.meta.tagged(tag).withStats(partCols ++ statsCols),
-        head.rawEntryLines ++ entries.map(_.line))
+    commitRetry(spark, root) { stage =>
+      val entries = promotePartEntries(fs, rp,
+        stage(s"data/append-${java.util.UUID.randomUUID()}"), partCols,
+        statsCols, keyed.map { case (f, sf, t) => (f, sf, t.get) })
+      head =>
+        if (alreadyApplied(head.version)) None
+        else {
+          preCommit(head.version)
+          if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
+            s"txtable: $root is bucket-clustered; a partitioned " +
+              "streaming append would break the layout")
+          Some(Commit("append",
+            head.meta.tagged(tag).withStats(partCols ++ statsCols),
+            added = entries.map(_.line)))
+        }
     }
   }
 
@@ -3910,77 +3874,63 @@ object TxTable {
         } finally pool.shutdown()
       }
     val opName = if (mode == "append") "append" else "overwrite"
-    val baseDir = s"data/$opName-${java.util.UUID.randomUUID()}"
-    val newEntries = promotePartEntries(fs, rp, baseDir, physParts,
-      statsCols, staged.map { case (f, t) => (f, facts(f), t) })
     val stagedTuples = staged.map(_._2).toSet
-    // the staged-⊆-filter contract, checked ONCE outside the retry
-    if (mode == "filter" && stagedTuples.nonEmpty) {
-      val ok = evalPartFilter(spark, filterSql.get, partSchema,
-        stagedTuples.toSeq)
-      val bad = stagedTuples -- ok
-      if (bad.nonEmpty) {
-        fs.delete(new Path(rp, baseDir), true)
-        throw new IllegalArgumentException(
+    commitRetry(spark, root) { stage =>
+      val newEntries = promotePartEntries(fs, rp,
+        stage(s"data/$opName-${java.util.UUID.randomUUID()}"), physParts,
+        statsCols, staged.map { case (f, t) => (f, facts(f), t) })
+      // the staged-⊆-filter contract, checked ONCE outside the retry
+      if (mode == "filter" && stagedTuples.nonEmpty) {
+        val ok = evalPartFilter(spark, filterSql.get, partSchema,
+          stagedTuples.toSeq)
+        val bad = stagedTuples -- ok
+        if (bad.nonEmpty) throw new IllegalArgumentException(
           "txtable: INSERT OVERWRITE by filter received rows outside " +
             s"the overwritten partitions (e.g. tuple ${bad.head
               .mkString("(", ",", ")")} fails [${filterSql.get}]) — " +
             "widen the filter or fix the inserted data")
       }
-    }
-    var emptyDir: Option[String] = None
-    try commitRetry(spark, root) { head =>
-      val entries0 = headEntries(fs, rp, head)
-      require(!entries0.exists(_.isDelta),
-        s"txtable: partitioned SQL writes need a delta-free snapshot " +
-          s"of $root — run compactSnapshot first")
-      require(head.meta.keys.isEmpty,
-        s"txtable: partitioned SQL writes refuse keyed tables " +
-          s"($root declares key columns)")
-      def tupleOrRefuse(e: Entry): Option[Seq[Any]] =
-        dirTupleOf(e.dir, physParts).orElse {
-          // a zero-row entry (the empty-overwrite schema dir) can't
-          // violate partition semantics — keep it, never refuse on it
-          if (e.stats.get(rowsKey).exists(_._1 == 0L)) None
-          else throw new IllegalArgumentException(
-            s"txtable: partition-scoped write against $root found dir " +
-              s"'${e.dir}' whose layout does not prove partition " +
-              s"columns (${physParts.mkString(", ")}) — the table " +
-              "mixes unpartitioned data; rewrite it partitioned first")
-        }
-      val kept: Seq[Entry] = mode match {
-        case "append" => entries0
-        case "replace" => Seq.empty
-        case "dynamic" =>
-          entries0.filter(e => !tupleOrRefuse(e).exists(stagedTuples))
-        case "filter" =>
-          val prevTuples = entries0.flatMap(tupleOrRefuse)
-          val matching =
-            evalPartFilter(spark, filterSql.get, partSchema, prevTuples)
-          entries0.filter(e => !tupleOrRefuse(e).exists(matching))
-      }
-      // a zero-entry snapshot is unreadable: an overwrite that empties
-      // the table keeps a readable zero-row dir carrying the schema
-      val lines0 = kept.map(_.line) ++ newEntries.map(_.line)
-      val lines =
-        if (lines0.nonEmpty) lines0
-        else {
-          val dirName = emptyDir.getOrElse {
-            val d = writeEmptyDir(spark, rp,
-              s"data/$opName-${java.util.UUID.randomUUID()}",
-              parquetSchemaOf(fileSchema))
-            emptyDir = Some(d)
-            d
+      head =>
+        val entries0 = head.entries
+        require(!entries0.exists(_.isDelta),
+          s"txtable: partitioned SQL writes need a delta-free snapshot " +
+            s"of $root — run compactSnapshot first")
+        require(head.meta.keys.isEmpty,
+          s"txtable: partitioned SQL writes refuse keyed tables " +
+            s"($root declares key columns)")
+        def tupleOrRefuse(e: Entry): Option[Seq[Any]] =
+          dirTupleOf(e.dir, physParts).orElse {
+            // a zero-row entry (the empty-overwrite schema dir) can't
+            // violate partition semantics — keep it, never refuse on it
+            if (e.stats.get(rowsKey).exists(_._1 == 0L)) None
+            else throw new IllegalArgumentException(
+              s"txtable: partition-scoped write against $root found dir " +
+                s"'${e.dir}' whose layout does not prove partition " +
+                s"columns (${physParts.mkString(", ")}) — the table " +
+                "mixes unpartitioned data; rewrite it partitioned first")
           }
-          Seq(statsEntry(spark, rp, dirName, Seq.empty).line)
+        val dropped: Seq[Entry] = mode match {
+          case "append" => Seq.empty
+          case "replace" => entries0
+          case "dynamic" =>
+            entries0.filter(e => tupleOrRefuse(e).exists(stagedTuples))
+          case "filter" =>
+            val prevTuples = entries0.flatMap(tupleOrRefuse)
+            val matching =
+              evalPartFilter(spark, filterSql.get, partSchema, prevTuples)
+            entries0.filter(e => tupleOrRefuse(e).exists(matching))
         }
-      Commit(opName, head.meta.copy(bucketBy = None).withStats(
-        if (physParts.isEmpty) Seq.empty else physParts ++ statsCols), lines)
-    } catch {
-      case e: Throwable =>
-        fs.delete(new Path(rp, baseDir), true)
-        emptyDir.foreach(d => fs.delete(new Path(rp, d), true))
-        throw e
+        // a zero-entry snapshot is unreadable: an overwrite that empties
+        // the table keeps a readable zero-row dir carrying the schema
+        val blank =
+          if (newEntries.nonEmpty || dropped.size < entries0.size) Seq.empty
+          else Seq(statsEntry(spark, rp, writeEmptyDir(spark, rp,
+            stage(s"data/$opName-${java.util.UUID.randomUUID()}"),
+            parquetSchemaOf(fileSchema)), Seq.empty).line)
+        Some(Commit(opName, head.meta.copy(bucketBy = None).withStats(
+          if (physParts.isEmpty) Seq.empty else physParts ++ statsCols),
+          read = dropped.map(_.line -> Drop).toMap,
+          added = newEntries.map(_.line) ++ blank))
     }
   }
 
@@ -3997,9 +3947,10 @@ object TxTable {
   def updateWhere(spark: SparkSession, root: String, predSql: String,
     sets: Map[String, String]): Int = {
     require(sets.nonEmpty, "txtable: updateWhere needs at least one SET")
-    val (fs, rp) = fsFor(spark, root)
-    swapCommit(spark, root, "update") { stage => (head, entries) =>
+    val rp = fsFor(spark, root)._2
+    commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to update at $root")
+      val entries = head.entries
       require(!entries.exists(_.isDelta),
         s"txtable: updateWhere needs a delta-free snapshot of $root — " +
           "run compactSnapshot first")
@@ -4010,7 +3961,7 @@ object TxTable {
       // keep the dir's physical schema
       val physSets = sets.map { case (c, ex) => physName(m, c) -> ex }
       val fates = predicateTriage(spark, rp, predSql, entries, m)
-      DirSwap(fates.map { case (e, fate) =>
+      val read = fates.map { case (e, fate) =>
         e.line -> (if (fate == Refuted) Carry
         else rewriteDir(spark, rp, e, m, "update", keys ++ statsCols,
           stage) { (raw, df, _) =>
@@ -4031,7 +3982,9 @@ object TxTable {
             }
           }.toIndexedSeq: _*))
         })
-      }.toMap, Seq.empty, keys, statsCols)
+      }.toMap
+      // rewritten dirs no longer prove a bucket layout
+      Some(Commit("update", head.meta.copy(bucketBy = None), read = read))
     }
   }
 
@@ -5614,14 +5567,14 @@ object TxTable {
     require(fs.exists(commitPath(rp, toVersion)),
       s"txtable: v$toVersion of $root was vacuumed - nothing to restore")
     val target = headAt(fs, rp, toVersion)
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       // the NAMES roll back with the data: a target that predates the
       // column mapping clears HEAD's, so HEAD's renames/drop tombstones
       // never survive over the restored content
       val t = target.meta
-      Commit("restore", head.meta.copy(keys = t.keys,
+      Some(Commit("restore", head.meta.copy(keys = t.keys,
         statsCols = t.statsCols, bucketBy = t.bucketBy, colMap = t.colMap),
-        target.rawEntryLines)
+        rest = Drop, added = target.entries.map(_.line)))
     }
   }
 
@@ -5648,15 +5601,15 @@ object TxTable {
       e.copy(dir = abs.toUri.getPath)
     }
     val src = metaAt(fs, srp, v)
-    commitRetry(spark, dstRoot) { head =>
+    commitRetry(spark, dstRoot) { _ => head =>
       require(head.version == 0,
         s"txtable: clone target $dstRoot gained commits")
       // the clone borrows the source's physical files, so it must
       // borrow the cloned version's column mapping with them — a
       // clone of a renamed table reads under the renamed names
-      Commit("clone", head.meta.copy(keys = src.keys,
+      Some(Commit("clone", head.meta.copy(keys = src.keys,
         statsCols = src.statsCols, colMap = src.colMap),
-        absolute.map(_.line))
+        added = absolute.map(_.line)))
     }
   }
 
@@ -5759,8 +5712,7 @@ object TxTable {
     cols: Seq[String] = Seq.empty, exact: Boolean = false,
     rsd: Double = 0.05, histograms: Boolean = false,
     histogramBins: Int = 64): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       val prevV = head.version
       require(prevV > 0, s"txtable: nothing to analyze at $root")
       val df = read(spark, root, version = prevV)
@@ -5801,9 +5753,8 @@ object TxTable {
           histogramBins,
           rowCount(spark, root, prevV).getOrElse(df.count()))
       // without histograms this pass leaves the carried ones be
-      Commit("analyze", head.meta.copy(ndv = Some(s"$vTok;$body"),
-        hists = if (histLines.isEmpty) head.meta.hists else histLines),
-        head.rawEntryLines)
+      Some(Commit("analyze", head.meta.copy(ndv = Some(s"$vTok;$body"),
+        hists = if (histLines.isEmpty) head.meta.hists else histLines)))
     }
   }
 
@@ -6558,27 +6509,25 @@ object TxTable {
     require(violations == 0L,
       s"txtable: cannot add CHECK '$name' - $violations existing rows " +
         s"violate ($predicateSql)")
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to alter at $root")
       val existing = head.meta.checks
       require(!existing.exists(_._1 == name),
         s"txtable: constraint '$name' already exists at $root")
-      Commit("addcheck",
-        head.meta.copy(checks = existing :+ (name -> predicateSql)),
-        head.rawEntryLines)
+      Some(Commit("addcheck",
+        head.meta.copy(checks = existing :+ (name -> predicateSql))))
     }
   }
 
   /** Drop a named CHECK constraint (one metadata commit). */
   def dropCheckConstraint(spark: SparkSession, root: String,
     name: String): Int = {
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       val existing = head.meta.checks
       require(existing.exists(_._1 == name),
         s"txtable: no CHECK constraint '$name' at $root")
-      Commit("dropcheck",
-        head.meta.copy(checks = existing.filterNot(_._1 == name)),
-        head.rawEntryLines)
+      Some(Commit("dropcheck",
+        head.meta.copy(checks = existing.filterNot(_._1 == name))))
     }
   }
 
@@ -6655,48 +6604,49 @@ object TxTable {
     * folded dir; atomic commit as always. */
   def compactDirs(spark: SparkSession, root: String, maxDirs: Int = 8): Int = {
     require(maxDirs >= 1, "compactDirs must keep at least one dir")
-    val (fs, rp) = fsFor(spark, root)
-    commitRetry(spark, root) { head =>
-      val prevV = head.version
-      require(prevV > 0, s"txtable: nothing to compact at $root")
-      val entries = headEntries(fs, rp, head)
+    val rp = fsFor(spark, root)._2
+    commitRetry(spark, root) { stage => head =>
+      require(head.version > 0, s"txtable: nothing to compact at $root")
+      val entries = head.entries
       require(!entries.exists(_.isDelta) && head.meta.keys.isEmpty,
         "txtable: compactDirs serves plain append tables; keyed/delta " +
           "snapshots resolve by commit order - use compactSnapshot")
-      if (entries.size <= maxDirs) return prevV
-      val sized = entrySizes(spark, rp, entries)
-      // fold the smallest (n - maxDirs + 1) dirs into one
-      val (fold, keep) = sized.sortBy(_._2)
-        .splitAt(entries.size - maxDirs + 1)
-      val foldPaths = fold.map { case (e, _) => new Path(rp, e.dir).toString }
-      // schema-evolved dirs fold by name (null-fill), same as read
-      val foldSchemaOf = dirSparkSchemas(spark, rp,
-        fold.map { case (e, _) => e.dir })
-      val foldSchemas = fold.map { case (e, _) => foldSchemaOf.get(e.dir) }
-      // declared defaults re-land in the folded files (never NULL) —
-      // PER DIR on the union branches, post-fill on the uniform ones
-      val addedNow = head.meta.liveAdded
-      def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, addedNow)
-      val folded =
-        // a fold member with positional deletes must fold its VISIBLE
-        // rows (the per-dir path), or deleted rows would resurrect
-        if (fold.exists(_._1.pdels.nonEmpty))
-          fold.map { case (e, _) => fill(visibleDirFrame(spark, rp, e)) }
+      if (entries.size <= maxDirs) None
+      else {
+        val sized = entrySizes(spark, rp, entries)
+        // fold the smallest (n - maxDirs + 1) dirs into one; the rest
+        // keep their commit order
+        val fold = sized.sortBy(_._2).take(entries.size - maxDirs + 1)
+        val foldPaths = fold.map { case (e, _) => new Path(rp, e.dir).toString }
+        // schema-evolved dirs fold by name (null-fill), same as read
+        val foldSchemaOf = dirSparkSchemas(spark, rp,
+          fold.map { case (e, _) => e.dir })
+        val foldSchemas = fold.map { case (e, _) => foldSchemaOf.get(e.dir) }
+        // declared defaults re-land in the folded files (never NULL) —
+        // PER DIR on the union branches, post-fill on the uniform ones
+        val addedNow = head.meta.liveAdded
+        def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, addedNow)
+        val folded =
+          // a fold member with positional deletes must fold its VISIBLE
+          // rows (the per-dir path), or deleted rows would resurrect
+          if (fold.exists(_._1.pdels.nonEmpty))
+            fold.map { case (e, _) => fill(visibleDirFrame(spark, rp, e)) }
+              .reduce(_.unionByName(_, allowMissingColumns = true))
+          else if (foldSchemas.distinct.size == 1 && foldSchemas.head.isDefined)
+            fill(spark.read.schema(foldSchemas.head.get).parquet(foldPaths: _*))
+          else if (foldSchemas.distinct.size == 1)
+            fill(spark.read.parquet(foldPaths: _*))
+          else fold.map { case (e, _) =>
+            fill(readDirFrame(spark, rp, e.dir)) }
             .reduce(_.unionByName(_, allowMissingColumns = true))
-        else if (foldSchemas.distinct.size == 1 && foldSchemas.head.isDefined)
-          fill(spark.read.schema(foldSchemas.head.get).parquet(foldPaths: _*))
-        else if (foldSchemas.distinct.size == 1)
-          fill(spark.read.parquet(foldPaths: _*))
-        else fold.map { case (e, _) =>
-          fill(readDirFrame(spark, rp, e.dir)) }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      val dirName = s"data/compact-${java.util.UUID.randomUUID()}"
-      val (obsFolded, mkEntry) = observeStats(folded, head.meta.statsCols)
-      obsFolded.write.mode("overwrite")
-        .parquet(new Path(rp, dirName).toString)
-      val entry = mkEntry(spark, rp, dirName, false)
-      Commit("compact", head.meta.copy(bucketBy = None),
-        keep.map(_._1.line) :+ entry.line)
+        val dirName = stage(s"data/compact-${java.util.UUID.randomUUID()}")
+        val (obsFolded, mkEntry) = observeStats(folded, head.meta.statsCols)
+        obsFolded.write.mode("overwrite")
+          .parquet(new Path(rp, dirName).toString)
+        val entry = mkEntry(spark, rp, dirName, false)
+        Some(Commit("compact", head.meta.copy(bucketBy = None),
+          read = fold.map(_._1.line -> Drop).toMap, added = Seq(entry.line)))
+      }
     }
   }
 
@@ -7478,7 +7428,7 @@ object TxTable {
           .eval(null)
       }
     }
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to alter at $root")
       val m0 = colMapOrIdentity(spark, root, head)
       cols.foreach { case (name, _, _) =>
@@ -7499,8 +7449,8 @@ object TxTable {
         m = m :+ (name -> phys)
         declared = declared :+ DeclaredCol(phys, dt, default)
       }
-      Commit("addcol", head.meta.copy(colMap = Some(m), declared = declared),
-        head.rawEntryLines)
+      Some(Commit("addcol",
+        head.meta.copy(colMap = Some(m), declared = declared)))
     }
   }
 
@@ -7508,7 +7458,7 @@ object TxTable {
     to: String): Int = {
     require(validColName(to),
       s"txtable: invalid column name '$to' (empty or reserved character)")
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to rename at $root")
       val m = colMapOrIdentity(spark, root, head)
       require(liveMap(m).exists(_._1 == from),
@@ -7516,8 +7466,7 @@ object TxTable {
       require(!liveMap(m).exists(_._1 == to),
         s"txtable: column '$to' already exists at $root")
       val next = m.map { case (l, p) => (if (l == from) to else l, p) }
-      Commit("rename", head.meta.copy(colMap = Some(next)),
-        head.rawEntryLines)
+      Some(Commit("rename", head.meta.copy(colMap = Some(next))))
     }
   }
 
@@ -7529,7 +7478,7 @@ object TxTable {
     * materializes the drop physically. Key and stats columns refuse
     * to drop — resolution and pruning depend on them. */
   def dropColumn(spark: SparkSession, root: String, name: String): Int = {
-    commitRetry(spark, root) { head =>
+    commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to drop at $root")
       val m = colMapOrIdentity(spark, root, head)
       require(liveMap(m).exists(_._1 == name),
@@ -7546,8 +7495,7 @@ object TxTable {
         s"txtable: cannot drop bucket column '$name' — the " +
           "bucket-clustered layout is keyed on it")
       val next = m.map { case (l, p) => (if (l == name) "" else l, p) }
-      Commit("dropcol", head.meta.copy(colMap = Some(next)),
-        head.rawEntryLines)
+      Some(Commit("dropcol", head.meta.copy(colMap = Some(next))))
     }
   }
 

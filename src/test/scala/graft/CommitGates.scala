@@ -43,7 +43,62 @@ object CommitGates {
     "analyzeGateQuery" -> (TxTable.analyzeGateQuery _),
     "sqlMaintGateQuery" -> (TxTable.sqlMaintGateQuery _),
     "bucketSpjShuffleGateQuery" -> (TxTable.bucketSpjShuffleGateQuery _),
-    "streamPartGateQuery" -> (TxTable.streamPartGateQuery _))
+    "streamPartGateQuery" -> (TxTable.streamPartGateQuery _),
+    "faces" -> (faces _))
+
+  /** The commit faces no gate above reaches — `overwrite`, `merge`,
+    * `compactDirs`, `compactSnapshot`, `restore`, `cloneAt`, a
+    * replacing `appendBucketedBy`, `dropCheckConstraint`, `dropColumn`
+    * and the tagged appends — on small generated tables, one root per
+    * face group under `<scratchDir>/faces`. */
+  private def faces(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = spark.conf.get("spark.graft.scratchDir")
+    def t(name: String) = s"$base/$name"
+    val rows = spark.range(0, 400).select(col("id").as("k"),
+      (col("id") % 7).as("p"), (col("id") * 1.5).as("v"))
+    def slice(lo: Long, hi: Long) = rows.filter(col("k") >= lo && col("k") < hi)
+    def changes(lo: Long, hi: Long, op: String, seq: Long) = slice(lo, hi)
+      .select(col("k"), lit(op).as("op"), (col("v") + 1).as("v"),
+        (col("k") + seq).as("seq"))
+
+    // plain appends of uneven sizes, folded, overwritten, restored and
+    // cloned (clone entries name the source's dirs by absolute path)
+    Seq((0L, 200L), (200L, 220L), (220L, 230L), (230L, 260L), (260L, 262L))
+      .foreach { case (lo, hi) =>
+        TxTable.append(slice(lo, hi), t("plain"), statsCols = Seq("k")) }
+    TxTable.compactDirs(spark, t("plain"), maxDirs = 3)
+    TxTable.overwrite(slice(0, 50), t("plain"), statsCols = Seq("k"))
+    TxTable.restore(spark, t("plain"), 6)
+    TxTable.cloneAt(spark, t("plain"), t("clone"), version = 6)
+    TxTable.append(slice(300, 310), t("clone"))
+    TxTable.compactDirs(spark, t("clone"), maxDirs = 1)
+
+    // keyed: copy-on-write merges, a tagged delta, then the fold
+    TxTable.merge(spark, t("keyed"), changes(0, 100, "I", 0))
+    TxTable.merge(spark, t("keyed"), changes(50, 150, "U", 1000))
+    TxTable.mergeDelta(spark, t("keyed"), changes(90, 120, "D", 2000),
+      batchId = Some(0L), streamId = "faces")
+    TxTable.compactSnapshot(spark, t("keyed"))
+
+    // bucketed: append, replace, and the bucket-preserving fold
+    TxTable.appendBucketedBy(slice(0, 200), t("bucket"), "k", 4,
+      statsCols = Seq("p"))
+    TxTable.appendBucketedBy(slice(100, 300), t("bucket"), "k", 4,
+      statsCols = Seq("p"), replace = true)
+    TxTable.compactSnapshot(spark, t("bucket"))
+
+    // tagged appends, constraints and column DDL
+    TxTable.appendPartitionedBy(slice(0, 100), t("ddl"), Seq("p"))
+    TxTable.appendBatch(slice(100, 150), t("ddl"), batchId = 0L,
+      streamId = "faces")
+    TxTable.addCheckConstraint(spark, t("ddl"), "k_nonneg", "k >= 0")
+    TxTable.appendChecked(slice(150, 160), t("ddl"), notNull = Seq("k"))
+    TxTable.dropCheckConstraint(spark, t("ddl"), "k_nonneg")
+    TxTable.addColumn(spark, t("ddl"), "extra",
+      org.apache.spark.sql.types.LongType)
+    TxTable.dropColumn(spark, t("ddl"), "v")
+  }
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, scratchDir) = args.take(2)

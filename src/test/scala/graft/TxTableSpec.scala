@@ -168,18 +168,25 @@ class TxTableSpec extends SparkSpec {
   test("a non-conflict IOException surfaces after one attempt, not 10 recomputes") {
     import spark.implicits._
     val root = tmpDir() + "/tx-ioerr"
-    TxTable.append(Seq((1L, 1.0)).toDF("k", "v"), root)
+    val control = tmpDir() + "/tx-ioerr-control"
+    Seq(root, control).foreach(TxTable.append(Seq((1L, 1.0)).toDF("k", "v"), _))
+    val changes = Seq((2L, "I", 2.0, 1L)).toDF("k", "op", "v", "seq")
+    // the Spark jobs of one merge attempt, on an identical table
+    val once = jobsDuring { TxTable.merge(spark, control, changes) }
     // plant a trap: the next claim path is a symlink into a missing dir,
     // so create() fails with a genuine I/O error and exists() stays false
     java.nio.file.Files.createSymbolicLink(
       java.nio.file.Paths.get(root, "_commits", "v00000002"),
       java.nio.file.Paths.get(root, "missing-dir", "x"))
-    val changes = Seq((2L, "I", 2.0, 1L)).toDF("k", "op", "v", "seq")
-    intercept[java.io.IOException] { TxTable.merge(spark, root, changes) }
-    // exactly ONE content attempt: one merge data dir, not ten
-    val merges = new java.io.File(root, "data").listFiles()
-      .count(_.getName.startsWith("merge-"))
-    assert(merges === 1, "the O(table) merge recompute must not be retried")
+    val jobs = jobsDuring {
+      intercept[java.io.IOException] { TxTable.merge(spark, root, changes) }
+    }
+    // exactly ONE content attempt, not ten
+    assert(once > 0 && jobs === once,
+      "the O(table) merge recompute must not be retried")
+    // and the aborted attempt's merge dir is deleted with it
+    assert(!new java.io.File(root, "data").listFiles()
+      .exists(_.getName.startsWith("merge-")))
   }
 
   test("streaming delta upsert: O(batch) commits, compaction folds on schedule") {
