@@ -116,18 +116,9 @@ object TxStatsAggRewrite extends Rule[LogicalPlan] {
   private def relOf(p: LogicalPlan,
     notNullOk: Set[ExprId]): Option[RelInfo] =
     p match {
-      case l: LogicalRelation => l.relation match {
-        case t: graft.sources.TxRelation if !t.rowRestricted =>
-          Some(RelInfo(t.spark, t.root, t.metadataVersion))
-        case _ => None
-      }
+      case l: LogicalRelation => metaOf(l.relation)
       case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-        d.table match {
-          case t: graft.sources.TxMetaAggTable if !t.metaRowRestricted =>
-            val s = org.apache.spark.sql.SparkSession.active
-            Some(RelInfo(s, t.metaRoot, t.metaVersion(s)))
-          case _ => None
-        }
+        metaOf(d.table)
       case Project(ps, c) if ps.forall(_.isInstanceOf[AttributeReference]) =>
         relOf(c, notNullOk)
       case Filter(cond, c) if conjuncts(cond).forall {
@@ -136,6 +127,16 @@ object TxStatsAggRewrite extends Rule[LogicalPlan] {
       } => relOf(c, notNullOk)
       case _ => None
     }
+
+  /** A graft-tx relation or table whose reader options leave the
+    * whole table visible — restricted rows are not what the stats
+    * describe. */
+  private def metaOf(t: Any): Option[RelInfo] = t match {
+    case t: graft.sources.TxMetaAggTable if !t.readerOptions.restricted =>
+      val s = org.apache.spark.sql.SparkSession.active
+      Some(RelInfo(s, t.metaRoot, t.metaVersion(s)))
+    case _ => None
+  }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)

@@ -519,12 +519,8 @@ class GraftCatalog extends DelegatingCatalogExtension
     val CurKey = "CURRENT_DEFAULT"
     val ExKey = "EXISTS_DEFAULT"
     val baseByName = base.schema().fields.map(f => f.name -> f).toMap
-    val pinned = travel.get("versionAsOf")
-      .map(TxTable.resolveRef(spark, root, _))
-      .orElse(travel.get("timestampAsOf").map(t =>
-        TxTable.versionAt(spark, root, t.toLong)))
-      .getOrElse(-1)
-    val alterDefaults = TxTable.declaredDefaultSql(spark, root, pinned)
+    val alterDefaults = TxTable.declaredDefaultSql(spark, root,
+      TxTableSource.readerOptions(travel).version(spark, root))
     StructType(live.fields.map { f =>
       val fromAlter = alterDefaults.get(f.name)
       val fromBase = baseByName.get(f.name).map(_.metadata)

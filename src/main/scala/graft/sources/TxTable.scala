@@ -512,13 +512,14 @@ object TxTable {
   private def metaAt(fs: FileSystem, rp: Path, v: Int): TableMeta =
     if (v <= 0) TableMeta() else commitFile(fs, rp, v).meta
 
-  /** The parent a commit attempt builds on: its version, its table
-    * metadata, its entry-bearing lines AS WRITTEN (include lines
-    * verbatim — carrying these instead of the expansion is what keeps
-    * append commits metadata-O(1)), and its entries, expanded once on
-    * first use. */
+  /** One resolved commit — the snapshot a read plans from and the
+    * parent a commit attempt builds on: its version (0 before the
+    * first commit), its table metadata, its entry-bearing lines AS
+    * WRITTEN (include lines verbatim — carrying these instead of the
+    * expansion is what keeps append commits metadata-O(1)), and its
+    * entries, expanded once on first use. */
   private final case class Head(version: Int, meta: TableMeta,
-    rawEntryLines: Seq[String])(fs: FileSystem, rp: Path) {
+    rawEntryLines: Seq[String])(val fs: FileSystem, val rp: Path) {
     /** The entries in commit order (manifests expanded). */
     lazy val entries: Seq[Entry] =
       expandEntryLines(fs, rp, rawEntryLines).flatMap(parseEntry)
@@ -575,9 +576,7 @@ object TxTable {
     * StructField metadata so INSERT-side default resolution works. */
   private[sources] def declaredDefaultSql(spark: SparkSession,
     root: String, version: Int): Map[String, String] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(fs, rp)
-    val meta = metaAt(fs, rp, v)
+    val meta = resolve(spark, root, version).meta
     meta.liveAdded.collect { case c if c.default.isDefined =>
       logicalName(meta.colMap, c.phys) -> c.default.get
     }.toMap
@@ -694,16 +693,13 @@ object TxTable {
       renamed.map(_._1))
   }
 
-  /** The resolved scan plan of one snapshot: which data dirs survive
-    * range pruning, and which ranges apply where. Shared by `read`
-    * (the DataFrame assembly) and the format face's `inputFiles`
-    * (the pruning proof surface) so the two can never disagree. */
-  private case class SnapshotPlan(version: Int, keyCols: Seq[String],
-    allEntries: Seq[Entry], entries: Seq[Entry],
-    preRanges: Map[String, (Long, Long)],
-    postRanges: Map[String, (Long, Long)],
-    preStrRanges: Map[String, (String, String)] = Map.empty,
-    postStrRanges: Map[String, (String, String)] = Map.empty)
+  /** The resolved scan plan of one snapshot: the data dirs that survive
+    * the dir triage, and the filters the resolved rows must pass.
+    * Shared by `read` (the DataFrame assembly) and the format face's
+    * `inputFiles` (the pruning proof surface) so the two can never
+    * disagree. */
+  private case class SnapshotPlan(keyCols: Seq[String],
+    allEntries: Seq[Entry], entries: Seq[Entry], rows: Seq[Filter])
 
   /** ONE snapshot resolution, shared by every layer of a read. The
     * round-15 chain (`read` → `readResolved` → `readResolved0` →
@@ -717,21 +713,10 @@ object TxTable {
     * versions. The table metadata is the commit file's cached record
     * (no further RPCs); only manifest expansion (`include:` lines) may
     * read more files, exactly as the uncached path would. */
-  private final case class Resolved(fs: FileSystem, rp: Path, v: Int,
-    lines: Seq[String], meta: TableMeta) {
-    lazy val entries: Seq[Entry] =
-      expandEntryLines(fs, rp, lines).flatMap(parseEntry)
-  }
-
   private def resolve(spark: SparkSession, root: String,
-    version: Int): Resolved = {
+    version: Int): Head = {
     val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(fs, rp)
-    if (v < 1) Resolved(fs, rp, v, Seq.empty, TableMeta())
-    else {
-      val f = commitFile(fs, rp, v)
-      Resolved(fs, rp, v, f.lines, f.meta)
-    }
+    headAt(fs, rp, if (version >= 0) version else latestVersion(fs, rp))
   }
 
   /** What a condition proves about a dir from its commit line alone:
@@ -819,69 +804,69 @@ object TxTable {
     triage(fs.flatten, fs.forall(_.isDefined), entries, m)
   }
 
-  private def planSnapshot(spark: SparkSession, root: String, version: Int,
-    keyRange: Option[(Long, Long)],
-    colRanges: Map[String, (Long, Long)],
-    strRanges: Map[String, (String, String)] = Map.empty): SnapshotPlan =
-    planSnapshot(resolve(spark, root, version), keyRange, colRanges,
-      strRanges)
-
-  private def planSnapshot(r: Resolved,
-    keyRange: Option[(Long, Long)],
-    colRanges: Map[String, (Long, Long)],
-    strRanges: Map[String, (String, String)]): SnapshotPlan = {
-    val v = r.v
-    require(v > 0, s"txtable: no committed snapshot at ${r.rp}")
-    val allEntries = r.entries
+  /** Plan snapshot `h` under `filters` (LOGICAL names) plus `keyRange`
+    * on the table's default range column — the first key column, else
+    * the first declared stats column; without either it restricts
+    * nothing. Every filter restricts the resolved rows; the dirs the
+    * [[triage]] of the filters refutes are never opened. Merge-on-read
+    * safety: on a snapshot with deltas only KEY-column filters prune —
+    * pruning on a value column would drop a 'U' row whose NEW value
+    * left the range (its stale base row would survive the anti-join)
+    * and a 'D' row whose carried value is out of range (the deleted
+    * base row would resurface). Key columns never change across
+    * versions of a row, so their filters prune delta dirs soundly: a
+    * change batch whose stats exclude the range cannot affect any row
+    * in it. Dirs without stats are never pruned. */
+  private def planSnapshot(h: Head, filters: Seq[Filter],
+    keyRange: Option[(Long, Long)]): SnapshotPlan = {
+    require(h.version > 0, s"txtable: no committed snapshot at ${h.rp}")
+    val allEntries = h.entries
     require(allEntries.nonEmpty,
-      s"txtable: snapshot v$v of ${r.rp} is empty")
-    val keyCols = r.meta.keys
-      .getOrElse(if (allEntries.exists(_.isDelta)) Seq("k") else Seq.empty)
-    // the un-named keyRange addresses the table's default range column:
-    // first key col, else the first declared stats col
-    val rangeCol = keyCols.headOption
-      .orElse(r.meta.statsCols.headOption)
-    val ranges: Map[String, (Long, Long)] = colRanges ++
-      keyRange.flatMap(r => rangeCol.map(_ -> r))
-    // Merge-on-read safety: a range on a VALUE column must wait for
-    // resolution — pre-filtering the tail would drop a 'U' row whose
-    // NEW value left the range (its stale base row would survive the
-    // anti-join) and a 'D' row whose carried value is out of range
-    // (the deleted base row would resurface). Key columns never change
-    // across versions of a row, so key ranges prune dirs and filter
-    // rows safely anywhere; on keyed/delta snapshots every other range
-    // applies to the RESOLVED rows only. Plain append tables have no
-    // resolution step, so all ranges stay pre-scan there.
+      s"txtable: snapshot v${h.version} of ${h.rp} is empty")
     val hasDelta = allEntries.exists(_.isDelta)
-    val (preRanges, postRanges) =
-      if (!hasDelta) (ranges, Map.empty[String, (Long, Long)])
-      else ranges.partition { case (c, _) => keyCols.contains(c) }
-    // string ranges follow the same MoR split; string columns are
-    // never key columns (keys are integral), so on a delta snapshot
-    // they are always post-resolution
-    val (preStr, postStr) =
-      if (!hasDelta) (strRanges, Map.empty[String, (String, String)])
-      else (Map.empty[String, (String, String)], strRanges)
-    // a dir survives unless some named range refutes its recorded
-    // stats box (no stats for a column ⇒ can't prune on it)
+    val keyCols = h.meta.keys.getOrElse(if (hasDelta) Seq("k") else Seq.empty)
+    val m = h.meta.colMap
+    val rows = filters ++ keyRange.toSeq.flatMap { case (lo, hi) =>
+      keyCols.headOption.orElse(h.meta.statsCols.headOption).toSeq
+        .flatMap(c => TxTableSource.between(logicalName(m, c), lo, hi))
+    }
+    val keyNames = keyCols.map(logicalName(m, _)).toSet
+    val pruning =
+      if (!hasDelta) rows else rows.filter(_.references.forall(keyNames))
     val entries =
-      if (preRanges.isEmpty && preStr.isEmpty) allEntries
-      else allEntries.filter(boxFate(_, preRanges, preStr) != Refuted)
-    SnapshotPlan(v, keyCols, allEntries, entries, preRanges, postRanges,
-      preStr, postStr)
+      if (pruning.isEmpty) allEntries
+      else triage(pruning, whole = false, allEntries, m)
+        .collect { case (e, fate) if fate != Refuted => e }
+    SnapshotPlan(keyCols, allEntries, entries, rows)
   }
 
+  /** The Scala range arguments as the bound filters of [[readWhere]]. */
+  private def rangeFilters(colRanges: Map[String, (Long, Long)],
+    strRanges: Map[String, (String, String)]): Seq[Filter] =
+    colRanges.toSeq.flatMap { case (c, (lo, hi)) =>
+      TxTableSource.between(c, lo, hi) } ++
+      strRanges.toSeq.flatMap { case (c, (lo, hi)) =>
+        TxTableSource.between(c, lo, hi) }
+
   /** Data FILES of the snapshot that survive dir pruning under the
-    * given ranges — what the `graft-tx` relation reports as
-    * `Dataset.inputFiles`, so option-driven skipping is observable
-    * from the standard API. */
+    * given ranges (see [[filesWhere]]). */
   private[sources] def dataFiles(spark: SparkSession, root: String,
     version: Int = -1, keyRange: Option[(Long, Long)] = None,
     colRanges: Map[String, (Long, Long)] = Map.empty,
-    strRanges: Map[String, (String, String)] = Map.empty): Array[String] = {
-    val r = resolve(spark, root, version)
-    val entries = planSnapshot(r, keyRange, colRanges, strRanges).entries
-    val files = listDataFiles(spark, r.rp, entries.map(_.dir))
+    strRanges: Map[String, (String, String)] = Map.empty): Array[String] =
+    filesWhere(spark, root, version, rangeFilters(colRanges, strRanges),
+      keyRange)
+
+  /** Data FILES of the snapshot that survive the dir triage of
+    * `filters` — what the `graft-tx` relation reports as
+    * `Dataset.inputFiles`, so option-driven skipping is observable
+    * from the standard API. */
+  private[sources] def filesWhere(spark: SparkSession, root: String,
+    version: Int, filters: Seq[Filter],
+    keyRange: Option[(Long, Long)]): Array[String] = {
+    val h = resolve(spark, root, version)
+    val entries = planSnapshot(h, filters, keyRange).entries
+    val files = listDataFiles(spark, h.rp, entries.map(_.dir))
     entries.toArray.flatMap(e => files.getOrElse(e.dir, Seq.empty))
   }
 
@@ -892,95 +877,71 @@ object TxTable {
     * key columns come from the snapshot's own `key:` header — readers
     * never need to know how the table was written.
     *
-    * `keyRange = Some((lo, hi))` is the point/range-lookup fast path:
-    * data dirs whose recorded min/max key stats cannot intersect
-    * [lo, hi] are pruned from the file listing entirely (never opened
-    * — the partition-pruning analog), and the resolved rows are
-    * filtered to the range. Pruning a delta dir is safe for the same
-    * reason: a change batch whose stats exclude the range cannot
-    * affect any row in it. Dirs without stats are never pruned. */
+    * `keyRange = Some((lo, hi))` is the point/range-lookup fast path
+    * on the default range column, `colRanges`/`strRanges` inclusive
+    * boxes on named columns: data dirs whose recorded stats cannot
+    * intersect them are pruned from the file listing entirely (never
+    * opened — the partition-pruning analog), and the resolved rows
+    * are filtered to them ([[readWhere]]). */
   def read(spark: SparkSession, root: String, version: Int = -1,
     keyRange: Option[(Long, Long)] = None,
     colRanges: Map[String, (Long, Long)] = Map.empty,
-    strRanges: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val r = resolve(spark, root, version)
-    val mOpt = r.meta.colMap
+    strRanges: Map[String, (String, String)] = Map.empty): DataFrame =
+    readWhere(spark, root, version, rangeFilters(colRanges, strRanges),
+      keyRange)
+
+  /** [[read]] under `filters` in the snapshot's LOGICAL names (plus
+    * `keyRange`, see [[planSnapshot]]): the dirs their triage refutes
+    * are never opened, and the resolved rows — null-filled declared
+    * columns included — pass every filter once. A filter on a column
+    * the snapshot lacks restricts nothing. */
+  private[sources] def readWhere(spark: SparkSession, root: String,
+    version: Int, filters: Seq[Filter],
+    keyRange: Option[(Long, Long)]): DataFrame = {
+    val h = resolve(spark, root, version)
+    val plan = planSnapshot(h, filters, keyRange)
     // callers address columns by the snapshot's LOGICAL names; the
     // physical plumbing below (stats, files, resolution) speaks the
     // immutable physical names
-    toLogical(
-      readResolved(spark, r, keyRange,
-        physRanges(mOpt, colRanges), physRanges(mOpt, strRanges)),
-      mOpt)
+    val df = toLogical(readResolved(spark, h, plan), h.meta.colMap)
+    plan.rows.filter(_.references.forall(df.columns.contains))
+      .flatMap(TxTableSource.toPredicate).foldLeft(df)(_ filter _)
   }
 
-  /** `read` in PHYSICAL column names (pre-mapping) — the internal
-    * face rewrite ops and the change-feed staging consume. Declared
-    * (ALTER TABLE ADD COLUMNS) columns that no scanned dir carries
-    * yet null-fill here, so every read face — API, format, catalog,
-    * SQL — serves the full declared schema; range filters requested
-    * on a just-filled column still apply (all-NULL never satisfies a
-    * between, matching the value-filter semantics). */
+  /** `read` in PHYSICAL column names (pre-mapping), unfiltered — the
+    * internal face rewrite ops and the change-feed staging consume. */
   private def readResolved(spark: SparkSession, root: String,
-    version: Int): DataFrame =
-    readResolved(spark, resolve(spark, root, version), None, Map.empty,
-      Map.empty)
+    version: Int): DataFrame = {
+    val h = resolve(spark, root, version)
+    readResolved(spark, h, planSnapshot(h, Seq.empty, None))
+  }
 
-  private def readResolved(spark: SparkSession, r: Resolved,
-    keyRange: Option[(Long, Long)],
-    colRanges: Map[String, (Long, Long)],
-    strRanges: Map[String, (String, String)]): DataFrame = {
-    val df = readResolved0(spark, r, keyRange, colRanges, strRanges)
-    // the null-fill column set comes from the SAME resolved snapshot
-    // the plan was built from — never a second head resolution
-    val declared = r.meta.liveAdded
-    if (declared.isEmpty) df
-    else {
-      val missing = declared.filterNot(c => df.columns.contains(c.phys))
-      // a column declared WITH a DEFAULT fills pre-ADD rows with that
-      // literal instead of NULL (initial-default semantics)
-      val filled = missing.foldLeft(df) { (d, c) =>
+  /** The resolved rows of `plan`'s dirs in PHYSICAL names. Declared
+    * (ALTER TABLE ADD COLUMNS) columns that no scanned dir carries yet
+    * fill here — from the SAME resolved snapshot the plan was built
+    * from, never a second head resolution — so every read face (API,
+    * format, catalog, SQL) serves the full declared schema. */
+  private def readResolved(spark: SparkSession, h: Head,
+    plan: SnapshotPlan): DataFrame = {
+    val df = readResolved0(spark, h, plan)
+    // a column declared WITH a DEFAULT fills pre-ADD rows with that
+    // literal instead of NULL (initial-default semantics)
+    h.meta.liveAdded.filterNot(c => df.columns.contains(c.phys))
+      .foldLeft(df) { (d, c) =>
         // dead NULL branch: nullable even when a DEFAULT fills (see
         // fillDeclaredDefaults)
         d.withColumn(c.phys,
           when(lit(false), lit(null).cast(c.dt)).otherwise(
             c.default.map(expr).getOrElse(lit(null)).cast(c.dt)))
       }
-      // ranges over a column that was JUST filled must still restrict
-      // rows (readResolved0 skipped them — the column wasn't there)
-      val ranges: Map[String, (Any, Any)] =
-        colRanges.map { case (c, r) => c -> (r: (Any, Any)) } ++
-          strRanges.map { case (c, r) => c -> (r: (Any, Any)) }
-      missing.map(_.phys).foldLeft(filled) { (d, p) =>
-        ranges.get(p) match {
-          case Some((lo, hi)) => d.filter(col(p).between(lo, hi))
-          case None => d
-        }
-      }
-    }
   }
 
-  private def readResolved0(spark: SparkSession, r: Resolved,
-    keyRange: Option[(Long, Long)],
-    colRanges: Map[String, (Long, Long)],
-    strRanges: Map[String, (String, String)]): DataFrame = {
+  private def readResolved0(spark: SparkSession, r: Head,
+    plan: SnapshotPlan): DataFrame = {
     val rp = r.rp
-    val plan = planSnapshot(r, keyRange, colRanges, strRanges)
-    val v = plan.version
     val allEntries = plan.allEntries
     val keyCols = plan.keyCols
-    // integral and string ranges filter rows identically (between on
-    // the column's own type); only the stats space differs
-    val preRanges: Map[String, (Any, Any)] =
-      plan.preRanges ++ plan.preStrRanges
-    val postRanges: Map[String, (Any, Any)] =
-      plan.postRanges ++ plan.postStrRanges
     val entries = plan.entries
-    def applyRanges(df: DataFrame, rs: Map[String, (Any, Any)]): DataFrame =
-      rs.foldLeft(df) { case (d, (c, (lo, hi))) =>
-        if (d.columns.contains(c)) d.filter(col(c).between(lo, hi)) else d
-      }
-    def rangeFilter(df: DataFrame): DataFrame = applyRanges(df, preRanges)
     // per-dir Spark schemas from footers (no inference jobs); a dir
     // absent from the map (no data file) falls back to inference
     val schemaOf = dirSparkSchemas(spark, rp, allEntries.map(_.dir))
@@ -1012,8 +973,7 @@ object TxTable {
     // the pruned survivors: in a keyed snapshot a full-row dir after a
     // delta upserts earlier dirs' keys, so even when pruning removed
     // every delta entry the surviving dirs still need later-wins
-    // resolution (a plain union would return stale duplicates), and
-    // postRanges must still apply to the resolved rows.
+    // resolution (a plain union would return stale duplicates).
     if (!allEntries.exists(_.isDelta)) {
       // Schema evolution: dirs appended with a widened schema resolve
       // by name, missing columns null-filled. The common case (all
@@ -1041,8 +1001,8 @@ object TxTable {
               .reduce(_.unionByName(_, allowMissingColumns = true)))
         }
       val pdDfs = pdE.map(e => applyPdels(spark, rp, e, readDir(e.dir)))
-      rangeFilter((cleanDf.toSeq ++ pdDfs)
-        .reduce(_.unionByName(_, allowMissingColumns = true)))
+      (cleanDf.toSeq ++ pdDfs)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
     }
     else {
       // Merge-on-read, scale-safe: the base (the dirs committed before
@@ -1070,7 +1030,7 @@ object TxTable {
       val (baseE, tailE) = entries.zipWithIndex
         .partition { case (e, _) => origPos(e.dir) < firstDeltaPos }
       val tailParts = tailE.map { case (e, i) =>
-        val df = rangeFilter(applyPdels(spark, rp, e, readDir(e.dir)))
+        val df = applyPdels(spark, rp, e, readDir(e.dir))
         val keyed = if (e.isDelta) df else df.withColumn("op", lit("U"))
         keyed.withColumn("_cv", lit(i.toLong))
       }
@@ -1078,7 +1038,7 @@ object TxTable {
       // first-seen commit order — a WIDENED delta evolves the schema
       // by name, and parts predating a column read it as null
       val basePartsRaw = baseE.map { case (e, _) =>
-        rangeFilter(applyPdels(spark, rp, e, readDir(e.dir)))
+        applyPdels(spark, rp, e, readDir(e.dir))
       }
       val dataCols = (basePartsRaw ++ tailParts).map(_.columns.toSeq)
         .reduce((a, b) => a ++ b.filterNot(a.contains))
@@ -1105,7 +1065,7 @@ object TxTable {
         }
       // every tail entry pruned (e.g. a key range excluding all delta
       // batches): the resolved base IS the snapshot's answer
-      if (tailE.isEmpty) return applyRanges(base, postRanges)
+      if (tailE.isEmpty) return base
       val wt = Window.partitionBy(keyExprs: _*).orderBy(col("_cv").desc)
       val tail = tailParts.map(conform(_, Seq("op") ++ dataCols ++ Seq("_cv")))
         .reduce(_.unionByName(_))
@@ -1114,9 +1074,8 @@ object TxTable {
         .select((col("op") +: dataCols.map(col)): _*)
       val survivors = base.join(
         broadcast(tail.select(keyExprs: _*)), keyCols, "left_anti")
-      applyRanges(survivors.unionByName(
-        tail.filter(col("op") =!= "D").select(dataCols.map(col): _*)),
-        postRanges)
+      survivors.unionByName(
+        tail.filter(col("op") =!= "D").select(dataCols.map(col): _*))
     }
   }
 
@@ -1463,9 +1422,7 @@ object TxTable {
     * snapshot is not bucket-declared). */
   def bucketSpecOf(spark: SparkSession, root: String,
     version: Int = -1): Option[(String, Int)] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(fs, rp)
-    val meta = metaAt(fs, rp, v)
+    val meta = resolve(spark, root, version).meta
     meta.bucketBy.map { case (phys, n) =>
       (meta.colMap.flatMap(_.collectFirst { case (l, p) if p == phys => l })
         .getOrElse(phys), n)
@@ -1476,10 +1433,10 @@ object TxTable {
     * `_bytes` stats. None when any entry predates byte recording. */
   private[sources] def snapshotBytes(spark: SparkSession, root: String,
     version: Int = -1): Option[Long] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val v = h.version
     if (v == 0) return None
-    val sizes = snapshotEntries(fs, rp, v).map(_.stats.get(bytesKey).map(_._1))
+    val sizes = h.entries.map(_.stats.get(bytesKey).map(_._1))
     if (sizes.isEmpty || sizes.exists(_.isEmpty)) None
     else Some(sizes.flatten.sum)
   }
@@ -1505,7 +1462,8 @@ object TxTable {
     // that cannot evaluate a constraint (a schema-replacing overwrite
     // against a constraint on a dropped column) fails analysis loudly
     // — DROP CONSTRAINT first, never silently skip.
-    val meta0 = metaAt(fs, rp, latestVersion(fs, rp))
+    val head0 = resolve(spark, root, -1)
+    val meta0 = head0.meta
     // a plain append onto a hash-bucketed layout would silently break
     // the clustering contract every bucketed SPJ trusts — refuse
     // loudly (an overwrite REPLACES content, so it may reset the
@@ -1526,7 +1484,7 @@ object TxTable {
       if (keepPrev) toPhysicalFrame(guarded, m0) else (guarded, None)
     val physStats =
       if (keepPrev) statsCols.map(physName(m0, _)) else statsCols
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
       // stats ride the write action (observeStats) — no post-write
       // rescan of the batch just to record its commit-line stats
@@ -1665,9 +1623,10 @@ object TxTable {
     * function it gets (root-relative paths) what every attempt reuses,
     * and returns the attempt: the current [[Head]] to a [[Commit]], or
     * to None when there is nothing to commit (the call then returns the
-    * head's version). Each attempt reads the parent commit once, claims
-    * version+1 atomically, and retries from the NEW head when another
-    * writer claimed it first.
+    * head's version). The first attempt builds on `parent`, the head the
+    * writer already resolved to prepare, when it passes one; every other
+    * attempt reads the head once. Each claims version+1 atomically, and
+    * retries from the NEW head when another writer claimed it first.
     *
     * Staging: a path staged while preparing survives a lost claim; one
     * staged during an attempt (a per-attempt rewrite, a rolled
@@ -1693,7 +1652,7 @@ object TxTable {
     * record what no writer can mean. The claimed commit is cached, so the
     * next consult of it in this JVM costs one status check. */
   private def commitRetry(spark: SparkSession, root: String,
-    maxRetries: Int = 10)(
+    parent: Option[Head] = None, maxRetries: Int = 10)(
     prepare: (String => String) => Head => Option[Commit]): Int = {
     val (fs, rp) = fsFor(spark, root)
     val rollover = spark.conf
@@ -1763,7 +1722,8 @@ object TxTable {
         delete(attempt)
         attempt = Vector.empty
         emptied = Seq.empty
-        val head = headAt(fs, rp, latestVersion(fs, rp))
+        val head = parent.filter(_ => lost == 0)
+          .getOrElse(headAt(fs, rp, latestVersion(fs, rp)))
         content(head) match {
           case None => outcome = Some((head.version, None))
           case Some(c) =>
@@ -2138,17 +2098,17 @@ object TxTable {
     def alreadyApplied(v: Int): Boolean = batchId.exists { id =>
       appliedBatchId(fs, rp, v, sid).exists(_ >= id)
     }
-    if (alreadyApplied(latestVersion(spark, root)))
-      return latestVersion(spark, root)
+    val head0 = resolve(spark, root, -1)
+    if (alreadyApplied(head0.version)) return head0.version
     val (latest, _) = resolveLatest(changes, keyCols)
     // callers speak the snapshot's LOGICAL names; delta FILES join
     // the table's immutable physical columns (op/seq are bookkeeping,
     // never mapped). Widening batches extend the mapping.
-    val m0 = metaAt(fs, rp, latestVersion(fs, rp)).colMap
+    val m0 = head0.meta.colMap
     val physKeys = keyCols.map(physName(m0, _))
     val (latestPhys, extMap) =
       toPhysicalFrame(latest, m0, exclude = Set("op", "seq"))
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val dirName = stage(s"data/delta-${java.util.UUID.randomUUID()}")
       val (obsLatest, mkEntry) = observeStats(latestPhys, physKeys)
       obsLatest.write.mode("overwrite")
@@ -2666,14 +2626,14 @@ object TxTable {
     * ReplaceData reads every surviving dir's rows in full. */
   private[sources] def cowPlan(spark: SparkSession, root: String,
     filters: Seq[Filter], version: Int = -1): CowPlan = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     require(v > 0, s"txtable: nothing to rewrite at $root")
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     require(!entries.exists(_.isDelta),
       s"txtable: SQL DML needs a delta-free snapshot of $root — " +
         "run compactSnapshot first")
-    val meta = metaAt(fs, rp, v)
+    val meta = h.meta
     val m = meta.colMap
     // pushed filters are a subset of the condition: they refute only
     val affected = triage(filters, whole = false, entries, m)
@@ -3095,8 +3055,8 @@ object TxTable {
     * covers whole partitions and drops them as pure metadata, and
     * partition-bounded reads prune to exactly the matching dirs — the
     * classic date-partitioned warehouse table. A DATE key's bounds are
-    * epoch days, which no date literal translates to, so a DATE-keyed
-    * delete opens its candidate dirs. Values are read back from the
+    * epoch days, the encoding a DATE literal translates to, so DATE
+    * keys prune and cover the same way. Values are read back from the
     * directory names Spark writes, so the entry stats can never
     * disagree with the data. */
   def appendPartitioned(df: DataFrame, root: String, partCol: String,
@@ -3154,7 +3114,7 @@ object TxTable {
       StringType).contains(dtB),
       s"txtable: bucket column must be integral, date or string, " +
         s"got $dtB")
-    val head0 = headAt(fs, rp, latestVersion(fs, rp))
+    val head0 = resolve(spark, root, -1)
     val meta0 = head0.meta
     val (guarded, verifyChecks) = checkGuard(df, meta0.checks)
     val m0 = meta0.colMap
@@ -3192,7 +3152,7 @@ object TxTable {
     // partitioned write path
     val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
       keys = if (dtB == DateType) Seq.empty else Seq(physB -> col(physB)))
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
       val basePath = new Path(rp, baseDir).toString
       // the repartition clusters each bucket's rows into one task →
@@ -3278,7 +3238,8 @@ object TxTable {
     // like plain append (widening extends the map); the CHECK guard
     // wraps the LOGICAL frame (constraints speak logical names) and
     // its counts ride the same single pass as the partitioned write
-    val meta0 = metaAt(fs, rp, latestVersion(fs, rp))
+    val head0 = resolve(spark, root, -1)
+    val meta0 = head0.meta
     // value-partitioned appends break a hash-bucketed layout exactly
     // like plain appends do — refuse loudly
     meta0.bucketBy.foreach { case (c, n) =>
@@ -3331,7 +3292,7 @@ object TxTable {
       keys = physParts.zip(partKind).map { case (p, kind) =>
         p -> (if (kind == 'd') helperExpr(p, kind) else col(p))
       })
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
       val basePath = new Path(rp, baseDir).toString
       // ONE pass over the data whatever the partition count (a daily-
@@ -3543,13 +3504,14 @@ object TxTable {
     val tag = s"$sid:$batchId"
     def alreadyApplied(v: Int): Boolean =
       appliedBatchId(fs, rp, v, sid).exists(_ >= batchId)
-    if (alreadyApplied(latestVersion(spark, root))) {
+    val head0 = resolve(spark, root, -1)
+    if (alreadyApplied(head0.version)) {
       stagedFiles.foreach(f => fs.delete(new Path(f), false))
-      return latestVersion(spark, root)
+      return head0.version
     }
     // an empty epoch still commits its tag (replay-protection cursor)
     if (stagedFiles.isEmpty)
-      return commitRetry(spark, root) { _ => head =>
+      return commitRetry(spark, root, Some(head0)) { _ => head =>
         if (alreadyApplied(head.version)) None
         else {
           preCommit(head.version)
@@ -3561,7 +3523,7 @@ object TxTable {
       spark.read.parquet(stagedFiles: _*), root, partCols, statsCols,
       Some(tag), alreadyApplied, preCommit)
     // fast path needs file column names == snapshot physical names
-    val m = metaAt(fs, rp, latestVersion(fs, rp)).colMap
+    val m = head0.meta.colMap
     if (m.exists(_.exists { case (l, p) => l != p })) return rewriteFallback()
     // footer facts for every staged file, overlapped like dirSchemas
     val wanted = partCols ++ statsCols
@@ -3608,7 +3570,7 @@ object TxTable {
     val epochChecks = checkConstraints(spark, root)
     if (epochChecks.nonEmpty)
       enforceChecksNow(spark.read.parquet(stagedFiles: _*), epochChecks)
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val entries = promotePartEntries(fs, rp,
         stage(s"data/append-${java.util.UUID.randomUUID()}"), partCols,
         statsCols, keyed.map { case (f, sf, t) => (f, sf, t.get) })
@@ -3722,15 +3684,15 @@ object TxTable {
     * Metadata-only: commit lines, no file I/O. */
   private[graft] def layoutPartCols(spark: SparkSession,
     root: String, version: Int = -1): Seq[String] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(fs, rp)
+    val h = resolve(spark, root, version)
+    val v = h.version
     if (v == 0) return Seq.empty
-    val meta = metaAt(fs, rp, v)
+    val meta = h.meta
     if (meta.keys.isDefined) return Seq.empty
     // a hash-bucketed layout's `_graft_bkt=<id>` dirs are NOT value
     // partitions — the bucket face reports them, not this one
     if (meta.bucketBy.isDefined) return Seq.empty
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return Seq.empty
     val segNames: Seq[Option[Seq[String]]] = entries.map { e =>
       val segs = e.dir.split('/').drop(2).toSeq
@@ -3838,8 +3800,9 @@ object TxTable {
       s"txtable: unknown partitioned-commit mode '$mode'")
     val (fs, rp) = fsFor(spark, root)
     if (staged.isEmpty && mode == "append") return latestVersion(spark, root)
-    val v0 = latestVersion(fs, rp)
-    val meta0 = metaAt(fs, rp, v0)
+    val head0 = resolve(spark, root, -1)
+    val v0 = head0.version
+    val meta0 = head0.meta
     val physParts = logicalParts.map(physName(meta0.colMap, _))
     physParts.foreach(requireStatsGrammarSafe)
     staged.foreach { case (_, t) =>
@@ -3875,7 +3838,7 @@ object TxTable {
       }
     val opName = if (mode == "append") "append" else "overwrite"
     val stagedTuples = staged.map(_._2).toSet
-    commitRetry(spark, root) { stage =>
+    commitRetry(spark, root, Some(head0)) { stage =>
       val newEntries = promotePartEntries(fs, rp,
         stage(s"data/$opName-${java.util.UUID.randomUUID()}"), physParts,
         statsCols, staged.map { case (f, t) => (f, facts(f), t) })
@@ -5590,17 +5553,17 @@ object TxTable {
     * (compact the clone first to materialize it). */
   def cloneAt(spark: SparkSession, srcRoot: String, dstRoot: String,
     version: Int = -1): Int = {
-    val (fs, srp) = fsFor(spark, srcRoot)
-    val v = if (version >= 0) version else latestVersion(spark, srcRoot)
+    val h = resolve(spark, srcRoot, version)
+    val (fs, srp, v) = (h.fs, h.rp, h.version)
     require(v > 0, s"txtable: nothing to clone at $srcRoot")
     require(latestVersion(spark, dstRoot) == 0,
       s"txtable: clone target $dstRoot already exists")
-    val absolute = snapshotEntries(fs, srp, v).map { e =>
+    val absolute = h.entries.map { e =>
       val abs = new Path(srp, e.dir)
         .makeQualified(fs.getUri, fs.getWorkingDirectory)
       e.copy(dir = abs.toUri.getPath)
     }
-    val src = metaAt(fs, srp, v)
+    val src = h.meta
     commitRetry(spark, dstRoot) { _ => head =>
       require(head.version == 0,
         s"txtable: clone target $dstRoot gained commits")
@@ -5622,10 +5585,10 @@ object TxTable {
     * resolution — never guess). */
   def rowCount(spark: SparkSession, root: String,
     version: Int = -1): Option[Long] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val v = h.version
     if (v == 0) return None
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     val counts = entries.map(_.stats.get(rowsKey).map(_._1))
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
@@ -5643,30 +5606,29 @@ object TxTable {
   private[graft] def columnHistograms(spark: SparkSession, root: String,
     version: Int = -1)
     : Map[String, (Double, Seq[(Double, Double, Long)])] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return Map.empty
-    val f = commitFile(fs, rp, v)
-    val lines = f.meta.hists
+    val lines = h.meta.hists
     if (lines.isEmpty) return Map.empty
     // the freshness proof below reads and sorts the full entry list of
     // BOTH the current and the analyze-time snapshot — cache the
     // parsed result per (root, version), validated by the commit's own
-    // (FileStatus-checked) line text like hllNdvCache, so repeated
+    // (FileStatus-checked) content like hllNdvCache, so repeated
     // planning calls pay O(1), and a recreated table at the same path
     // can never serve the ghost's distributions
     val cacheKey = rp.makeQualified(fs.getUri, fs.getWorkingDirectory)
       .toString + "#" + v
-    val sig = f.lines.hashCode
+    val sig = (h.meta, h.rawEntryLines).hashCode
     val cached = histCache.get(cacheKey)
     if (cached != null && cached._1 == sig) return cached._2
-    val m = f.meta.colMap
+    val m = h.meta.colMap
     def logicalOf(p: String): Option[String] = m match {
       case Some(mm) => liveMap(mm).find(_._2 == p).map(_._1)
       case None => Some(p)
     }
     // one freshness proof per distinct analyze version, not per line
-    lazy val sorted = snapshotEntries(fs, rp, v).map(_.line).sorted
+    lazy val sorted = h.entries.map(_.line).sorted
     val freshAv = scala.collection.mutable.HashMap[String, Boolean]()
     def freshAt(av: String): Boolean =
       freshAv.getOrElseUpdate(av, analyzedOver(fs, rp, av, sorted))
@@ -5924,13 +5886,13 @@ object TxTable {
   private[graft] def metadataGroupedNdv(spark: SparkSession,
     root: String, version: Int, groupCols: Seq[String], col: String)
     : Option[Seq[(Seq[Any], Long)]] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return None
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = metaAt(fs, rp, v).colMap
+    val m = h.meta.colMap
     val pgs = groupCols.map(physName(m, _))
     val pc = physName(m, col)
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
@@ -6016,10 +5978,10 @@ object TxTable {
     * exists. */
   private[graft] def columnNdv(spark: SparkSession, root: String,
     version: Int = -1): Map[String, Long] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return Map.empty
-    val meta = metaAt(fs, rp, v)
+    val meta = h.meta
     val cap = rowCount(spark, root, v)
     def clamp(n: Long): Long = cap.fold(n)(math.min(n, _))
     // with a mapping, only LIVE physicals have a logical face
@@ -6063,10 +6025,10 @@ object TxTable {
     * before it prices a join key at all. */
   private[graft] def analyzeNullCounts(spark: SparkSession, root: String,
     version: Int = -1): Map[String, Long] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return Map.empty
-    val meta = metaAt(fs, rp, v)
+    val meta = h.meta
     meta.ndv.filter(analyzeIsFresh(fs, rp, v, _)).map { payload =>
       val sep = payload.indexOf(';')
       def logicalOf(p: String): Option[String] = meta.colMap match {
@@ -6098,10 +6060,10 @@ object TxTable {
     * version simply fails the proof. */
   private[graft] def exactNdv(spark: SparkSession, root: String,
     version: Int = -1): Map[String, Long] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return Map.empty
-    metaAt(fs, rp, v).ndv.map { payload =>
+    h.meta.ndv.map { payload =>
       val vTok = payload.take(payload.indexOf(';'))
       val fresh = vTok.endsWith("!") && analyzeIsFresh(fs, rp, v, payload)
       if (fresh) columnNdv(spark, root, v) else Map.empty[String, Long]
@@ -6143,13 +6105,13 @@ object TxTable {
   private[graft] def metadataAgg(spark: SparkSession, root: String,
     version: Int, cols: Seq[String], countCols: Seq[String] = Seq.empty)
     : Option[(Long, Map[String, (Long, Long)], Map[String, Long])] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val v = h.version
     if (v == 0) return None
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = metaAt(fs, rp, v).colMap
+    val m = h.meta.colMap
     val total = entries.map(_.stats(rowsKey)._1).sum
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // positional deletes keep `_rows` EXACT (adjusted at delete time)
@@ -6211,13 +6173,13 @@ object TxTable {
     countCols: Seq[String] = Seq.empty)
     : Option[Seq[(Seq[Any], Long, Map[String, (Long, Long)],
       Map[String, Long])]] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val v = h.version
     if (v == 0) return None
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = metaAt(fs, rp, v).colMap
+    val m = h.meta.colMap
     val pgs = groupCols.map(physName(m, _))
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // every live dir single-valued (integral lo == hi, or the string
@@ -6270,13 +6232,13 @@ object TxTable {
     root: String, version: Int, partCols: Seq[String])
     : Option[(Seq[(Seq[Any], Seq[String])],
       Option[Seq[(String, String)]])] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (rp, v) = (h.rp, h.version)
     if (v == 0) return None
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
-    val m = metaAt(fs, rp, v).colMap
+    val m = h.meta.colMap
     val pgs = partCols.map(physName(m, _))
     val live = entries.filter(_.stats(rowsKey)._1 > 0)
     // clustering is provable iff EVERY live dir is single-valued and
@@ -6317,12 +6279,12 @@ object TxTable {
     root: String, version: Int)
     : Option[(String, Int, Seq[(Int, Seq[String])],
       Option[Seq[(String, String)]])] = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = if (version >= 0) version else latestVersion(spark, root)
+    val h = resolve(spark, root, version)
+    val (rp, v) = (h.rp, h.version)
     if (v == 0) return None
-    val meta = metaAt(fs, rp, v)
+    val meta = h.meta
     val (physB, n) = meta.bucketBy.getOrElse(return None)
-    val entries = snapshotEntries(fs, rp, v)
+    val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
     if (entries.exists(e => !e.stats.contains(rowsKey))) return None
     val m = meta.colMap
@@ -6393,8 +6355,8 @@ object TxTable {
     version: Int = -1)
     : (Seq[String], Seq[(Seq[Any], Long, Long, Long)]) = {
     val r = resolve(spark, root, version)
-    require(r.v > 0, s"txtable: no committed snapshot at $root")
-    val partCols = layoutPartCols(spark, root, r.v)
+    require(r.version > 0, s"txtable: no committed snapshot at $root")
+    val partCols = layoutPartCols(spark, root, r.version)
     require(partCols.nonEmpty,
       s"txtable: $root has no provable partition-clustered layout")
     require(r.entries.forall(_.stats.contains(rowsKey)),
@@ -6433,9 +6395,7 @@ object TxTable {
   /** The table's persistent CHECK constraints, (name, predicateSql). */
   def checkConstraints(spark: SparkSession, root: String,
     version: Int = -1): Seq[(String, String)] = {
-    val (fs, rp) = fsFor(spark, root)
-    metaAt(fs, rp, if (version >= 0) version else latestVersion(fs, rp))
-      .checks
+    resolve(spark, root, version).meta.checks
   }
 
   /** Arms the write-face CHECK gate: wraps `df` in an `observe` node
@@ -7677,16 +7637,17 @@ object TxTable {
   def describeDetail(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val r = resolve(spark, root, -1)
-    require(r.v > 0, s"txtable: no committed snapshot at $root")
+    require(r.version > 0, s"txtable: no committed snapshot at $root")
     val entries = r.entries
     val rowsOpt =
       if (entries.forall(_.stats.contains(rowsKey)))
         Some(entries.map(_.stats(rowsKey)._1).sum)
       else None
-    val bytesOpt = snapshotBytes(spark, root, r.v)
-    val op = r.lines.find(_.startsWith("op:")).map(_.drop(3)).getOrElse("?")
-    val parts = layoutPartCols(spark, root, r.v)
-    Seq((root, r.v, op, entries.size.toLong,
+    val bytesOpt = snapshotBytes(spark, root, r.version)
+    val op = commitLines(r.fs, r.rp, r.version)
+      .find(_.startsWith("op:")).map(_.drop(3)).getOrElse("?")
+    val parts = layoutPartCols(spark, root, r.version)
+    Seq((root, r.version, op, entries.size.toLong,
       entries.count(_.isDelta).toLong, rowsOpt, bytesOpt,
       r.meta.keys.getOrElse(Seq.empty).mkString(","), parts.mkString(",")))
       .toDF("location", "version", "last_operation", "num_dirs",

@@ -48,14 +48,15 @@ import org.apache.spark.util.SerializableConfiguration
   * re-implementing it under PartitionReader would forfeit exactly the
   * codegen/pushdown machinery `TxTable.read` already composes.
   * Pushdown still flows BOTH ways:
-  *  - options → snapshot pinning (versionAsOf / timestampAsOf) and
-  *    range-box dir pruning before a single footer is opened;
-  *  - Catalyst's pushed filters → integral-column ranges intersected
-  *    into the same dir pruning, plus predicate/projection pushdown
-  *    into the inner parquet scans (`buildScan`'s required columns and
-  *    filters reach the resolved plan, and Spark re-checks every
-  *    filter above, so over-pruning is impossible and under-pruning
-  *    only costs I/O).
+  *  - options → snapshot pinning (versionAsOf / timestampAsOf), parsed
+  *    once into [[TxTableSource.ReaderOptions]];
+  *  - the option ranges and Catalyst's pushed filters → ONE filter
+  *    list, from which the commit stats' dir triage prunes before a
+  *    single footer is opened and which restricts the resolved rows,
+  *    pushing down into the inner parquet scans (`buildScan`'s
+  *    required columns and filters reach the resolved plan, and Spark
+  *    re-checks every filter above, so over-pruning is impossible and
+  *    under-pruning only costs I/O).
   * `Dataset.inputFiles` reports the surviving data files (the relation
   * implements FileRelation), so dir skipping is observable — and
   * testable — from the standard API.
@@ -327,15 +328,80 @@ object TxTableSource {
         java.sql.Timestamp.valueOf(s).getTime)
     }
 
-  /** True when reader params restrict rows (keyRange / colRange.* /
-    * strRange.*): whole-table statistics then no longer describe the
-    * relation and must not be reported. */
-  private[sources] def rowRestricting(params: Map[String, String]): Boolean =
-    params.keys.exists { k0 =>
-      val k = k0.toLowerCase(java.util.Locale.ROOT)
-      k == "keyrange" || k.startsWith("colrange.") ||
-        k.startsWith("strrange.")
+  /** The reader options of every `graft-tx` read face, parsed once
+    * ([[readerOptions]]): the version pin — `versionAsOf` (an integer
+    * version or a tag name) or `timestampAsOf` (millis since epoch) —
+    * plus the row restrictions, `keyRange` on the table's default range
+    * column and the `colRange.<c>`/`strRange.<c>` boxes as inclusive
+    * bound filters. A restricted read is a subset, so whole-table
+    * statistics no longer describe it. */
+  private[graft] final case class ReaderOptions(
+    versionAsOf: Option[String] = None,
+    timestampAsOf: Option[Long] = None,
+    keyRange: Option[(Long, Long)] = None,
+    rows: Seq[Filter] = Seq.empty) {
+    def pinned: Boolean = versionAsOf.isDefined || timestampAsOf.isDefined
+    def restricted: Boolean = keyRange.isDefined || rows.nonEmpty
+
+    /** The pinned version, or -1 (the latest). */
+    def version(spark: SparkSession, root: String): Int =
+      versionAsOf.map(TxTable.resolveRef(spark, root, _))
+        .orElse(timestampAsOf.map(TxTable.versionAt(spark, root, _)))
+        .getOrElse(-1)
+
+    /** The row restrictions on `names`' spelling of each column:
+      * option keys can arrive lowercased (DataFrameReader's options
+      * iterate as a CaseInsensitiveMap), and a range on an unresolved
+      * name would neither prune nor filter. */
+    def on(names: Seq[String]): ReaderOptions = {
+      def res(c: String) = names.find(_.equalsIgnoreCase(c)).getOrElse(c)
+      copy(rows = rows.map {
+        case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(res(c), v)
+        case LessThanOrEqual(c, v) => LessThanOrEqual(res(c), v)
+        case f => f
+      })
     }
+  }
+
+  /** `c BETWEEN lo AND hi` as the two bound filters the dir triage and
+    * the row filter both read. */
+  private[graft] def between(c: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
+  /** THE parse of the reader options, keys matched case-insensitively.
+    * A range is `lo,hi`; a `strRange` splits at its FIRST comma (bounds
+    * holding commas need the Scala `read(strRanges = ...)` API). */
+  private[graft] def readerOptions(params: Map[String, String])
+    : ReaderOptions = {
+    def get(key: String) =
+      params.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
+    def prefixed(p: String, k: String) =
+      k.length > p.length && k.regionMatches(true, 0, p, 0, p.length)
+    def range(k: String, v: String, limit: Int) = v.split(",", limit) match {
+      case Array(lo, hi) => (lo, hi)
+      case _ => throw new IllegalArgumentException(
+        s"graft-tx: option $k must be 'lo,hi', got '$v'")
+    }
+    def longs(k: String, v: String) = {
+      val (lo, hi) = range(k, v, 0)
+      (lo.trim.toLong, hi.trim.toLong)
+    }
+    val version = get("versionAsOf")
+    val ts = get("timestampAsOf").map(parseTs)
+    require(version.isEmpty || ts.isEmpty,
+      "graft-tx: versionAsOf and timestampAsOf are mutually exclusive")
+    val rows = params.toSeq.sortBy(_._1).flatMap { case (k, v) =>
+      if (prefixed("colRange.", k)) {
+        val (lo, hi) = longs(k, v)
+        between(k.substring(9), lo, hi)
+      } else if (prefixed("strRange.", k)) {
+        val (lo, hi) = range(k, v, 2)
+        between(k.substring(9), lo, hi)
+      } else Seq.empty
+    }
+    ReaderOptions(version, ts, get("keyRange").map(longs("keyRange", _)),
+      rows)
+  }
 
   /** Catalyst-typed stat value for a recorded Long bound — only types
     * whose commit stats are exact integral encodings qualify; anything
@@ -444,39 +510,6 @@ object TxTableSource {
     }
   }
 
-  /** `colRange.<name> = "lo,hi"` options (plus bare `keyRange`),
-    * collected case-preservingly for the column part. */
-  private[graft] def optionRanges(
-    parameters: Map[String, String]): Map[String, (Long, Long)] =
-    parameters.flatMap { case (k, v) =>
-      if (k.toLowerCase(java.util.Locale.ROOT)
-        .startsWith("colrange.") && k.length > 9)
-        Some(k.substring(9) -> parseRange(k, v))
-      else None
-    }
-
-  private[graft] def parseRange(key: String, v: String): (Long, Long) =
-    v.split(",").map(_.trim) match {
-      case Array(lo, hi) => (lo.toLong, hi.toLong)
-      case _ => throw new IllegalArgumentException(
-        s"graft-tx: option $key must be 'lo,hi', got '$v'")
-    }
-
-  /** `strRange.<name> = "lo,hi"` options — string-stats dir skipping.
-    * The FIRST comma splits (bounds containing commas need the Scala
-    * `read(strRanges = ...)` API). */
-  private[graft] def strOptionRanges(
-    parameters: Map[String, String]): Map[String, (String, String)] =
-    parameters.flatMap { case (k, v) =>
-      if (k.toLowerCase(java.util.Locale.ROOT)
-        .startsWith("strrange.") && k.length > 9) {
-        val parts = v.split(",", 2)
-        if (parts.length != 2) throw new IllegalArgumentException(
-          s"graft-tx: option $k must be 'lo,hi', got '$v'")
-        Some(k.substring(9) -> (parts(0), parts(1)))
-      } else None
-    }
-
   /** Per-column bounds implied by Catalyst's pushed filters, for dir
     * pruning, in the order `o`. Conservative by construction: only
     * comparisons, equality, IN and AND of them contribute; everything
@@ -528,7 +561,8 @@ object TxTableSource {
   private[graft] val hexOrdering: Ordering[String] = Ordering.by(hexKey)
 
   /** Integral bounds implied by pushed filters, for dir pruning: a
-    * one-sided bound extends to the Long range. */
+    * one-sided bound extends to the Long range. A DATE literal bounds
+    * in epoch days, the encoding DATE partition keys record. */
   private[graft] def rangesFromFilters(
     filters: Array[Filter]): Map[String, (Long, Long)] =
     boundsFrom[Long](filters, {
@@ -538,14 +572,15 @@ object TxTableSource {
       case b: Byte => Some(b.toLong)
       case i: java.lang.Integer => Some(i.toLong)
       case l: java.lang.Long => Some(l.longValue)
+      case d: java.sql.Date => Some(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d)
+          .toLong)
+      case d: java.time.LocalDate => Some(d.toEpochDay)
       case _ => None
     }, x => Option.when(x < Long.MaxValue)(x + 1),
       x => Option.when(x > Long.MinValue)(x - 1)).map { case (c, (lo, hi)) =>
       c -> (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
     }
-
-  private[graft] def intersect[T](a: (T, T), b: (T, T))(
-    implicit o: Ordering[T]): (T, T) = (o.max(a._1, b._1), o.min(a._2, b._2))
 
   /** Catalyst pushed filters → one parquet-mr `FilterPredicate` (the
     * public FilterCompat face), for the DSv2 scans that move rows
@@ -795,7 +830,7 @@ case class TxChangesRelation(spark: SparkSession, root: String,
 
   private def opt(k: String): Option[String] = parameters.get(k)
     .orElse(parameters.get(k.toLowerCase(java.util.Locale.ROOT)))
-  require(opt("versionAsOf").isEmpty && opt("timestampAsOf").isEmpty,
+  require(!TxTableSource.readerOptions(parameters).pinned,
     "graft-tx: readChangeFeed selects a version RANGE - use " +
       "startingVersion/endingVersion (or the Timestamp twins), not " +
       "versionAsOf/timestampAsOf")
@@ -829,69 +864,41 @@ case class TxChangesRelation(spark: SparkSession, root: String,
     df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }
 
-/** One `graft-tx` read: snapshot selection from options, scan-time
-  * range pruning from options ∩ pushed filters. The version is
-  * re-resolved per scan (not pinned at relation construction), so a
-  * catalog table over a continuously-loaded root follows the table —
-  * Spark's own per-query plan gives each query snapshot isolation. */
+/** One `graft-tx` read: the snapshot its reader options pin, and ONE
+  * filter list — the option ranges plus Catalyst's pushed filters —
+  * from which [[TxTable]]'s dir triage prunes and which restricts the
+  * resolved rows. The version is re-resolved per scan (not pinned at
+  * relation construction), so a catalog table over a continuously-
+  * loaded root follows the table — Spark's own per-query plan gives
+  * each query snapshot isolation. */
 case class TxRelation(spark: SparkSession, root: String,
   parameters: Map[String, String])
-  extends BaseRelation with PrunedFilteredScan with FileRelation {
+  extends BaseRelation with PrunedFilteredScan with FileRelation
+  with TxMetaAggTable {
 
-  private val versionOpt = parameters.get("versionAsOf")
-    .orElse(parameters.get("versionasof"))
-    .map(TxTable.resolveRef(spark, root, _)) // int version or tag name
-  private val tsOpt = parameters.get("timestampAsOf")
-    .orElse(parameters.get("timestampasof")).map(TxTableSource.parseTs)
-  require(versionOpt.isEmpty || tsOpt.isEmpty,
-    "graft-tx: versionAsOf and timestampAsOf are mutually exclusive")
-  private val optRanges = TxTableSource.optionRanges(parameters) ++
-    parameters.get("keyRange").orElse(parameters.get("keyrange"))
-      .map(v => "__keyRange__" -> TxTableSource.parseRange("keyRange", v))
-  private val strOptRanges = TxTableSource.strOptionRanges(parameters)
+  private[graft] val readerOptions =
+    TxTableSource.readerOptions(parameters)
+  // a versionAsOf ref (a tag name too) resolves once, at load
+  private val pinnedRef =
+    readerOptions.versionAsOf.map(TxTable.resolveRef(spark, root, _))
 
-  private def keyRangeOpt: Option[(Long, Long)] = optRanges.get("__keyRange__")
-  // DataFrameReader options pass through a CaseInsensitiveMap whose
-  // iterator yields LOWERCASED keys, so `colRange.Price` arrives as
-  // `colrange.price` — resolve the column part against the real
-  // schema case-insensitively or mixed-case columns silently lose
-  // their range (no pruning AND no row filter)
-  private def resolveCol(c: String): String =
-    unprunedSchema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c)
-  private def colRangesOf(extra: Map[String, (Long, Long)]) =
-    withOptions(optRanges - "__keyRange__", extra)
-  private def strRangesOf(extra: Map[String, (String, String)]) =
-    withOptions(strOptRanges, extra)(TxTableSource.hexOrdering)
-  private def withOptions[T](opts: Map[String, (T, T)],
-    extra: Map[String, (T, T)])(implicit o: Ordering[T]) = {
-    val base = opts.map { case (c, r) => resolveCol(c) -> r }
-    base ++ extra.map { case (c, r) =>
-      c -> base.get(c).fold(r)(TxTableSource.intersect(_, r)) }
-  }
+  private def resolvedVersion: Int =
+    pinnedRef.getOrElse(readerOptions.version(spark, root))
 
-  private def resolvedVersion: Int = tsOpt match {
-    case Some(ts) => TxTable.versionAt(spark, root, ts)
-    case None => versionOpt.getOrElse(-1)
-  }
-
+  private[graft] def metaRoot: String = root
   /** The version `plans.TxStatsAggRewrite` answers metadata-only
     * aggregates at (same resolution as a scan: pinned, or latest at
     * optimization time). */
-  private[graft] def metadataVersion: Int = resolvedVersion
-  /** True when reader options restrict rows (keyRange / colRange.* /
-    * strRange.*) — whole-table stats no longer describe the relation,
-    * so the stats-aggregate rewrite must not fire. */
-  private[graft] def rowRestricted: Boolean =
-    optRanges.nonEmpty || strOptRanges.nonEmpty
+  override private[graft] def metaVersion(s: SparkSession): Int =
+    resolvedVersion
 
   override def sqlContext: SQLContext = spark.sqlContext
 
-  // ranges filter rows, never columns — the un-ranged probe also
-  // breaks the schema → resolveCol → colRangesOf → schema cycle
-  private lazy val unprunedSchema: StructType =
+  override val schema: StructType =
     TxTable.read(spark, root, version = resolvedVersion).schema
 
-  override val schema: StructType = unprunedSchema
+  // option ranges filter rows, never columns
+  private lazy val optionRows = readerOptions.on(schema.fieldNames).rows
 
   /** Metadata-only table size from the per-dir `_bytes` stats — this
     * is what lets Catalyst AUTO-BROADCAST a small graft-tx dimension
@@ -921,10 +928,8 @@ case class TxRelation(spark: SparkSession, root: String,
 
   override def buildScan(requiredColumns: Array[String],
     filters: Array[Filter]): RDD[Row] = {
-    val df = TxTable.read(spark, root, version = resolvedVersion,
-      keyRange = keyRangeOpt,
-      colRanges = colRangesOf(TxTableSource.rangesFromFilters(filters)),
-      strRanges = strRangesOf(TxTableSource.strRangesFromFilters(filters)))
+    val df = TxTable.readWhere(spark, root, resolvedVersion,
+      optionRows ++ filters, readerOptions.keyRange)
     // Un-pinned relations re-resolve the version per scan (a catalog
     // table follows a continuously-loaded root), so a commit may have
     // landed since load(). TxTable evolution only WIDENS by name, so
@@ -936,20 +941,17 @@ case class TxRelation(spark: SparkSession, root: String,
       s"graft-tx: column(s) ${missing.mkString(",")} vanished from $root " +
         "since this relation was created (overwrite with a narrower " +
         "schema?) - re-load or REFRESH TABLE")
-    val filtered = filters.flatMap(TxTableSource.toPredicate)
-      .foldLeft(df)(_ filter _)
     // empty requiredColumns (SELECT count(*)) legitimately projects to
     // zero-field rows — never ship full-width rows Spark will discard.
     // toRdd (not .rdd): the plan's own UnsafeRows, zero conversion
     // (see needConversion above)
-    filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
+    df.select(requiredColumns.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 
   override def inputFiles: Array[String] =
-    TxTable.dataFiles(spark, root, version = resolvedVersion,
-      keyRange = keyRangeOpt, colRanges = colRangesOf(Map.empty),
-      strRanges = strRangesOf(Map.empty))
+    TxTable.filesWhere(spark, root, resolvedVersion, optionRows,
+      readerOptions.keyRange)
 }
 
 /** Offset = commit version. Immutable commits make version ranges a
@@ -1020,35 +1022,16 @@ class GraftTxTable(tableSchema: StructType, root: String,
     new TxWriteBuilder(root, info)
 }
 
-/** V2 graft-tx tables whose commit metadata can answer aggregates —
-  * the hook `plans.TxStatsAggRewrite` uses to serve count/min/max
-  * over CATALOG tables and the storage-partitioned face from stats,
-  * exactly as it does over the path-based V1 relation. */
+/** graft-tx relations whose commit metadata can answer aggregates —
+  * the hook `plans.TxStatsAggRewrite` uses to serve count/min/max from
+  * stats over the path-based V1 relation, CATALOG tables and the
+  * storage-partitioned face alike. */
 private[graft] trait TxMetaAggTable {
   private[graft] def metaRoot: String
-  private[graft] def metaOptions: CaseInsensitiveStringMap
+  private[graft] def readerOptions: TxTableSource.ReaderOptions
   /** Pinned version for metadata answers (same resolution as a scan). */
-  private[graft] def metaVersion(spark: SparkSession): Int = {
-    val v = Option(metaOptions.get("versionAsOf"))
-    val ts = Option(metaOptions.get("timestampAsOf"))
-    (v, ts) match {
-      case (Some(x), _) => TxTable.resolveRef(spark, metaRoot, x)
-      case (None, Some(t)) =>
-        TxTable.versionAt(spark, metaRoot, TxTableSource.parseTs(t))
-      case _ => -1
-    }
-  }
-  /** Row-restricting reader options veto whole-table stats. */
-  private[graft] def metaRowRestricted: Boolean = {
-    val it = metaOptions.keySet().iterator()
-    var restricted = false
-    while (it.hasNext) {
-      val k = it.next().toLowerCase
-      if (k == "keyrange" || k.startsWith("colrange.") ||
-        k.startsWith("strrange.")) restricted = true
-    }
-    restricted
-  }
+  private[graft] def metaVersion(spark: SparkSession): Int =
+    readerOptions.version(spark, metaRoot)
 }
 
 /** The session catalog's face of a `graft-tx` root (`CREATE TABLE t
@@ -1057,9 +1040,9 @@ private[graft] trait TxMetaAggTable {
   * BATCH_READ — but its Scan implements the connector's `V1Scan`
   * bridge, handing execution to the SAME [[TxRelation]] the path-based
   * batch face uses. One snapshot-resolution implementation serves both
-  * faces; column pruning and filter→range pruning flow through the
-  * pushdown interfaces into `TxRelation.buildScan` exactly as on the
-  * path face. */
+  * faces; column pruning and the pushed filters' dir triage flow
+  * through the pushdown interfaces into `TxRelation.buildScan` exactly
+  * as on the path face. */
 object GraftTxCatalogTable {
   /** Per-row source-dir metadata column (the row-level-DML group
     * identity; see [[GraftRowLevelOperation.requiredMetadataAttributes]]).
@@ -1168,10 +1151,9 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
 
   /** `ALTER TABLE t DROP PARTITION (c = v, ...)` → deleteWhere on the
     * tuple equality, the partition-reload idiom's delete half. The
-    * triage covers the matching single-valued, NULL-free integral or
-    * string partition dirs and drops them in ONE metadata commit,
-    * reading no rows; a DATE tuple's dirs are opened and dropped
-    * after one count each. */
+    * triage covers the matching single-valued, NULL-free integral,
+    * DATE or string partition dirs and drops them in ONE metadata
+    * commit, reading no rows. */
   override def dropPartition(ident: InternalRow): Boolean = {
     val spark = SparkSession.active
     val ps = partitionSchema()
@@ -1230,7 +1212,8 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
   override def name(): String = s"graft-tx $root"
   override def schema(): StructType = tableSchema
   private[graft] def metaRoot: String = root
-  private[graft] def metaOptions: CaseInsensitiveStringMap = options
+  private[graft] val readerOptions =
+    TxTableSource.readerOptions(TxTableSource.paramsOf(options))
 
   /** The table's declared (or layout-proven) partition columns as
     * identity transforms — what routes `INSERT INTO ... PARTITION`
@@ -1301,15 +1284,13 @@ class GraftTxCatalogTable(tableSchema: StructType, root: String,
     * strRange declared at CREATE TABLE) sees a subset whose DML
     * semantics on the hidden rows would be ambiguous. Refuse both
     * loudly. */
-  private def dmlRefusal: Option[String] = {
-    val params = TxTableSource.paramsOf(options)
-    if (params.contains("versionAsOf") || params.contains("timestampAsOf"))
+  private def dmlRefusal: Option[String] =
+    if (readerOptions.pinned)
       Some("a time-travel pin (FOR VERSION/TIMESTAMP AS OF reads are " +
         "immutable)")
-    else if (metaRowRestricted)
+    else if (readerOptions.restricted)
       Some("row-restricting options (keyRange/colRange.*/strRange.*)")
     else None
-  }
 
   /** Group-based copy-on-write DML: Spark's own RewriteDeleteFromTable
     * / RewriteUpdateTable / RewriteMergeIntoTable build the ReplaceData
@@ -1378,13 +1359,16 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  private val readerOptions = TxTableSource.readerOptions(params)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   // report every filter as unhandled so Spark re-evaluates all of
-  // them above the scan; the relation still USES them for dir
-  // pruning + inner-parquet pushdown (best-effort, never trusted)
+  // them above the scan; the relation still USES them — its dir
+  // triage prunes by them and they restrict the resolved rows, which
+  // pushes them into the inner parquet scans (best-effort, never
+  // trusted)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
     filters
@@ -1407,17 +1391,12 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
     // joined with its dir. Delta snapshots and row-restricted faces
     // refuse loudly — their visible rows are not raw-file rows.
     if (required.fieldNames.exists(GraftTxCatalogTable.MetaCols.contains)) {
-      require(!TxTableSource.rowRestricting(params),
+      require(!readerOptions.restricted,
         s"graft-tx: __graft_* metadata columns are not served on " +
           "a row-restricted table (keyRange/colRange/strRange)")
       val spark = SparkSession.active
-      val version = params.get("versionAsOf").orElse(params.get("versionasof"))
-        .map(TxTable.resolveRef(spark, root, _)).orElse(
-          params.get("timestampAsOf").orElse(params.get("timestampasof"))
-            .map(t => TxTable.versionAt(spark, root,
-              TxTableSource.parseTs(t))))
-        .getOrElse(-1)
-      val plan = TxTable.cowPlan(spark, root, pushed.toSeq, version)
+      val plan = TxTable.cowPlan(spark, root, pushed.toSeq,
+        readerOptions.version(spark, root))
       new TxCowScan(spark, plan, required, None)
     } else bucketSpec match {
       // a hash-bucketed table serves a REAL V2 scan that reports its
@@ -1428,15 +1407,9 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
       // (bucketFileSlices); anything else — row-restricted faces,
       // a spec drifted from the snapshot, a rewritten layout —
       // degrades to the plain scan, never wrong-answers.
-      case Some((bcol, n)) if !TxTableSource.rowRestricting(params) =>
+      case Some((bcol, n)) if !readerOptions.restricted =>
         val spark = SparkSession.active
-        val version = params.get("versionAsOf")
-          .orElse(params.get("versionasof"))
-          .map(TxTable.resolveRef(spark, root, _)).orElse(
-            params.get("timestampAsOf").orElse(params.get("timestampasof"))
-              .map(t => TxTable.versionAt(spark, root,
-                TxTableSource.parseTs(t))))
-          .getOrElse(-1)
+        val version = readerOptions.version(spark, root)
         TxTable.bucketFileSlices(spark, root, version) match {
           case Some((col2, n2, slices, m)) if col2 == bcol && n2 == n =>
             // the reported partitioning resolves against the scan
@@ -1473,14 +1446,9 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
     override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
       val spark = SparkSession.active
-      val version = params.get("versionAsOf").orElse(params.get("versionasof"))
-        .map(TxTable.resolveRef(spark, root, _)).orElse(
-          params.get("timestampAsOf").orElse(params.get("timestampasof"))
-            .map(t => TxTable.versionAt(spark, root,
-              TxTableSource.parseTs(t))))
-        .getOrElse(-1)
-      TxTableSource.v2Statistics(spark, root, version, required,
-        restricted = TxTableSource.rowRestricting(params))
+      TxTableSource.v2Statistics(spark, root,
+        readerOptions.version(spark, root), required,
+        restricted = readerOptions.restricted)
     }
     override def readSchema(): StructType = required
     override def description(): String = s"graft-tx catalog scan of $root"
@@ -1536,7 +1504,8 @@ class GraftTxSpjTable(tableSchema: StructType, root: String,
     s"graft-tx $root [pby ${partCols.mkString(",")}]"
   override def schema(): StructType = tableSchema
   private[graft] def metaRoot: String = root
-  private[graft] def metaOptions: CaseInsensitiveStringMap = options
+  private[graft] val readerOptions =
+    TxTableSource.readerOptions(TxTableSource.paramsOf(options))
   override def partitioning(): Array[Transform] =
     partCols.map(Expressions.identity).toArray
 
@@ -1669,12 +1638,18 @@ class TxSpjScanBuilder(root: String, fullSchema: StructType,
     pushed.filter(f =>
       f.references.nonEmpty && !f.references.exists(partCols.contains))
 
+  // the scan moves raw file rows per partition value, so a row
+  // restriction it cannot honour refuses loudly (like the __graft_*
+  // metadata-column scan) instead of returning rows outside the range
   override def build(): Scan = {
+    val opts = TxTableSource.readerOptions(params)
+    require(!opts.restricted,
+      "graft-tx: the storage-partitioned face (partitionCol) does not " +
+        "serve row-restricting options (keyRange/colRange/strRange) - " +
+        "filter with WHERE instead")
     val spark = SparkSession.active
-    val version = params.get("versionasof").orElse(params.get("versionAsOf"))
-      .map(TxTable.resolveRef(spark, root, _)).getOrElse(-1)
-    new TxSpjScan(spark, root, version, partCols, required, partPred,
-      pruned, pushed)
+    new TxSpjScan(spark, root, opts.version(spark, root), partCols,
+      required, partPred, pruned, pushed)
   }
 }
 

@@ -152,4 +152,32 @@ class DirTriageSpec extends SparkSpec {
     assert(spark.table("triage_check").count() === 0L)
     spark.sql("DROP TABLE triage_check")
   }
+
+  test("a DATE-keyed DELETE and DROP PARTITION cost the same Spark jobs " +
+    "on 8 dirs as on 16") {
+    // one dir per day: DATE keys record epoch-day bounds, which a DATE
+    // literal translates to, so covered days drop as metadata
+    def dateDirs(root: String, n: Int): Unit =
+      TxTable.appendPartitioned(spark.range(n * 10L).select($"id".as("k"),
+        org.apache.spark.sql.functions.expr(
+          s"date_add(DATE'2026-01-01', CAST(id % $n AS INT))").as("d")),
+        root, "d")
+    def rangeDelete(n: Int) = sqlJobs("triage_date_del", n, dateDirs,
+      "DELETE FROM triage_date_del WHERE d >= DATE'2026-01-04'")
+    def dropPart(n: Int) = sqlJobs("triage_date_part", n, dateDirs,
+      "ALTER TABLE triage_date_part DROP PARTITION (d = DATE'2026-01-04')")
+    Seq[(String, Int => Int)]("DATE range DELETE" -> rangeDelete,
+      "DATE DROP PARTITION" -> dropPart).foreach { case (what, jobs) =>
+      jobs(4)
+      val (j8, j16) = (jobs(8), jobs(16))
+      assert(j8 === j16, s"$what ran $j8 jobs on 8 dirs, $j16 on 16")
+    }
+    val root = tmpDir() + "/triage-date-check"
+    dateDirs(root, 8)
+    TxTable.deleteWhere(spark, root, "d = DATE'2026-01-02'")
+    assert(dirsOf(commitText(root, 2)).length === 7)
+    assert(TxTable.read(spark, root).filter("d = DATE'2026-01-02'")
+      .count() === 0L)
+    assert(TxTable.read(spark, root).count() === 70L)
+  }
 }

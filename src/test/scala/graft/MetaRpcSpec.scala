@@ -68,12 +68,12 @@ class MetaRpcSpec extends SparkSpec {
       TxTable.append(Seq((2L, 20.0)).toDF("k", "v"), root)
     }
     info(s"second append: $n metadata RPCs")
-    // two head resolutions (one before the write, one per claim
-    // attempt; 5 each), one status check of the parent commit each (the
-    // first append cached the commit it claimed, so its content is not
-    // read again), and one status check of the claimed commit to cache
-    // it for the next consult = 13
-    assert(n <= 13, s"second append cost $n commit-metadata RPCs")
+    // one head resolution (5), shared by the write and its first claim
+    // attempt, one status check of the parent commit (the first append
+    // cached the commit it claimed, so its content is not read again),
+    // and one status check of the claimed commit to cache it for the
+    // next consult = 7
+    assert(n <= 7, s"second append cost $n commit-metadata RPCs")
   }
 
   test("format-face read stays within the same budget per load") {

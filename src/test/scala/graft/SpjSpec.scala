@@ -586,4 +586,35 @@ class SpjSpec extends SparkSpec {
         .map(_.getLong(0)).toSet === Set(3L, 4L, 5L, 6L))
     }
   }
+
+  test("timestampAsOf pins the partitioned face's scan to its snapshot") {
+    val root = tmpDir() + "/spj-asof"
+    TxTable.appendPartitioned(
+      (1L to 40L).map(k => (k, k % 4)).toDF("k", "p"), root, "p")
+    Thread.sleep(20)
+    val tsBetween = System.currentTimeMillis()
+    Thread.sleep(20)
+    TxTable.appendPartitioned(
+      (41L to 60L).map(k => (k, k % 4 + 10)).toDF("k", "p"), root, "p")
+    val pinned = spark.read.format("graft-tx").option("partitionCol", "p")
+      .option("timestampAsOf", tsBetween).load(root)
+    assert(pinned.select("k").collect().map(_.getLong(0)).toSet ===
+      (1L to 40L).toSet)
+    assert(pinned.select("p").distinct().count() === 4L)
+  }
+
+  test("row-restricting options refuse loudly on the partitioned face") {
+    val root = tmpDir() + "/spj-restrict"
+    TxTable.appendPartitioned(
+      (1L to 40L).map(k => (k, k % 4)).toDF("k", "p"), root, "p",
+      statsCols = Seq("k"))
+    Seq("keyRange" -> "1,5", "colRange.k" -> "1,5", "strRange.k" -> "1,5")
+      .foreach { case (k, v) =>
+        val e = intercept[IllegalArgumentException] {
+          spark.read.format("graft-tx").option("partitionCol", "p")
+            .option(k, v).load(root).collect()
+        }
+        assert(e.getMessage.contains("row-restricting"), k)
+      }
+  }
 }

@@ -107,6 +107,117 @@ class TxSourceSpec extends SparkSpec {
     assert(rs("n") === (3L, 9L))
     assert(rs("a") === (1L, 2L))
     assert(!rs.contains("s") && !rs.contains("t"))
+    // DATE literals bound in epoch days, the DATE partition key encoding
+    val day = java.time.LocalDate.of(2026, 1, 2).toEpochDay
+    val ds = TxTableSource.rangesFromFilters(Array(
+      EqualTo("d", java.sql.Date.valueOf("2026-01-02")),
+      GreaterThan("e", java.time.LocalDate.of(2026, 1, 2))))
+    assert(ds("d") === (day, day))
+    assert(ds("e") === (day + 1, Long.MaxValue))
+  }
+
+  /** Data files the plan of `df` scans, read off its RDD lineage — so a
+    * relation's inner snapshot scan counts too. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    def walk(r: org.apache.spark.rdd.RDD[_]): Seq[String] = r match {
+      case f: org.apache.spark.sql.execution.datasources.FileScanRDD =>
+        f.filePartitions.flatMap(_.files.map(_.filePath.toPath.toUri.getPath))
+      case _ => r.dependencies.flatMap(d => walk(d.rdd))
+    }
+    walk(df.queryExecution.toRdd).toSet
+  }
+
+  /** The Scala `colRanges`, the `colRange.*` options and the equivalent
+    * SQL WHERE — on the path face and on a catalog table — select the
+    * same data files and the same rows. */
+  private def sameSelection(root: String, name: String,
+    ranges: Map[String, (Long, Long)], rows: Long, pruned: Boolean): Unit = {
+    val where = ranges.map { case (c, (lo, hi)) =>
+      s"$c BETWEEN $lo AND $hi" }.mkString(" AND ")
+    val byOptions = ranges.foldLeft(spark.read.format("graft-tx")) {
+      case (r, (c, (lo, hi))) => r.option(s"colRange.$c", s"$lo,$hi")
+    }.load(root)
+    face(root).createOrReplaceTempView(s"${name}_path")
+    spark.sql(s"CREATE TABLE ${name}_cat USING `graft-tx` " +
+      s"OPTIONS (path '$root')")
+    try {
+      val faces = Seq(
+        "read(colRanges)" -> TxTable.read(spark, root, colRanges = ranges),
+        "colRange options" -> byOptions,
+        "path WHERE" -> spark.sql(s"SELECT * FROM ${name}_path WHERE $where"),
+        "catalog WHERE" -> spark.sql(s"SELECT * FROM ${name}_cat WHERE $where"))
+      val (files, got) = (scannedFiles(faces.head._2),
+        faces.head._2.collect().map(_.toSeq).toSet)
+      assert(got.size === rows)
+      faces.tail.foreach { case (what, df) =>
+        assert(scannedFiles(df) === files, what)
+        assert(df.collect().map(_.toSeq).toSet === got, what)
+      }
+      // inputFiles reports the dirs the triage keeps; the optimizer may
+      // still drop a kept scan whose rows the filter folds to nothing
+      // (a pre-ADD dir's NULL-filled column)
+      def paths(df: org.apache.spark.sql.DataFrame) = df.inputFiles
+        .map(new org.apache.hadoop.fs.Path(_).toUri.getPath).toSet
+      val (kept, all) = (paths(byOptions), paths(face(root)))
+      assert(files.nonEmpty && files.subsetOf(kept))
+      if (pruned) assert(kept.size < all.size) else assert(kept === all)
+    } finally spark.sql(s"DROP TABLE ${name}_cat")
+  }
+
+  test("plain table: Scala ranges, options and SQL WHERE select alike") {
+    import spark.implicits._
+    val root = tmpDir() + "/txsrc-eq-plain"
+    (0 until 4).foreach { i =>
+      TxTable.append((i * 100L until i * 100L + 100L)
+        .map(k => (k, k * 2)).toDF("k", "v"), root, statsCols = Seq("k"))
+    }
+    sameSelection(root, "eq_plain", Map("k" -> (150L, 160L)), 11L,
+      pruned = true)
+  }
+
+  test("keyed MoR table: a value-column range selects alike, unpruned") {
+    import spark.implicits._
+    val root = tmpDir() + "/txsrc-eq-mor"
+    TxTable.mergeDelta(spark, root, (1L to 100L)
+      .map(k => (k, "I", k * 10, k)).toDF("k", "op", "v", "seq"))
+    TxTable.mergeDelta(spark, root, (1L to 50L)
+      .map(k => (k, if (k % 5 == 0) "D" else "U", k * 10 + 1000, 100 + k))
+      .toDF("k", "op", "v", "seq"))
+    // v in [400, 1200]: keys 51-100 keep k*10 (v >= 510), keys 1-20
+    // not deleted moved to k*10+1000 (<= 1200 for k <= 20)
+    sameSelection(root, "eq_mor", Map("v" -> (400L, 1200L)), 66L,
+      pruned = false)
+  }
+
+  test("column-mapped table: ranges on the renamed column select alike") {
+    import spark.implicits._
+    val root = tmpDir() + "/txsrc-eq-mapped"
+    (0 until 4).foreach { i =>
+      TxTable.append((i * 100L until i * 100L + 100L)
+        .map(k => (k, k * 2)).toDF("k", "v"), root, statsCols = Seq("k"))
+    }
+    TxTable.renameColumn(spark, root, "k", "key")
+    sameSelection(root, "eq_mapped", Map("key" -> (150L, 260L)), 111L,
+      pruned = true)
+  }
+
+  test("null-filled declared column: ranges on it select alike") {
+    import spark.implicits._
+    val root = tmpDir() + "/txsrc-eq-declared"
+    (0 until 2).foreach { i =>
+      TxTable.append((i * 10L until i * 10L + 10L).map(k => (k, k * 2))
+        .toDF("k", "v"), root, statsCols = Seq("k"))
+    }
+    TxTable.addColumn(spark, root, "x", org.apache.spark.sql.types.LongType)
+    (2 until 4).foreach { i =>
+      TxTable.append((i * 10L until i * 10L + 10L)
+        .map(k => (k, k * 2, (i - 2) * 100L + k % 10)).toDF("k", "v", "x"),
+        root, statsCols = Seq("k", "x"))
+    }
+    // pre-ADD dirs read x as NULL and are opened; the x = 100..109
+    // dir is refuted
+    sameSelection(root, "eq_declared", Map("x" -> (5L, 7L)), 3L,
+      pruned = true)
   }
 
   test("writes through the format face: append, overwrite, modes") {
