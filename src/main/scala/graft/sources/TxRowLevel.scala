@@ -35,11 +35,12 @@ import org.apache.spark.util.SerializableConfiguration
   *    table. Positional-delete sidecars are folded in the readers, so
   *    dead rows neither reappear nor get rewritten.
   *  - WRITE ([[TxCowBatchWrite]]): executors stage the replacement
-  *    rows as parquet files under `_staging/` ([[TxDataWriter]], the
-  *    streaming sink's writer) in PHYSICAL column names; the driver
-  *    commit swaps exactly the scanned dirs for the staged data in
-  *    one OCC commit ([[TxTable.cowCommit]]), verifying the scanned
-  *    entry lines are byte-identical at claim time — a concurrent
+  *    rows as parquet files under `_staging/` ([[TxStagedWriter]],
+  *    the one writer of every DSv2 write face) in PHYSICAL column
+  *    names; the driver commit swaps exactly the scanned dirs for the
+  *    staged data in one OCC commit ([[TxTable.cowCommit]]),
+  *    verifying the scanned entry lines are byte-identical at claim
+  *    time — a concurrent
   *    writer that touched an affected dir aborts the DML loudly
   *    instead of silently losing its commit.
   *
@@ -353,16 +354,15 @@ class TxCowBatchWrite(root: String, op: GraftRowLevelOperation,
     val plan = planOf
     val fileSchema = StructType(info.schema().fields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
-    TxCowWriterFactory(stagingDir, fileSchema,
+    TxStagedWriterFactory(stagingDir, fileSchema, Seq.empty,
       new SerializableConfiguration(
         SparkSession.active.sessionState.newHadoopConf()))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
-      TxTable.cowCommit(spark, root, planOf, messages.collect {
-        case TxCommitMessage(p, _) if p != null => p
-      }.toSeq, op.opName)
+      TxTable.cowCommit(spark, root, planOf,
+        TxStagedMessage.files(messages).map(_.path), op.opName)
     }
 }
 
@@ -389,16 +389,6 @@ abstract class TxStagedBatchWrite(root: String) extends BatchWrite {
     fs.delete(p, true)
     ()
   }
-}
-
-case class TxCowWriterFactory(stagingDir: String, schema: StructType,
-  conf: SerializableConfiguration)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-    taskId: Long): DataWriter[InternalRow] =
-    new TxDataWriter(new org.apache.hadoop.fs.Path(
-      s"$stagingDir/part-$partitionId-$taskId.parquet"),
-      schema, conf)
 }
 
 /** MERGE-ON-READ row-level DML ([[SupportsDelta]], opt-in via
@@ -483,8 +473,8 @@ case class TxDeltaWriterFactory(stagingDir: String, insertSchema: StructType,
 }
 
 /** One task's delta stream: inserts go to `<prefix>-ins.parquet`
-  * (lazily, physical names), delete coordinates to
-  * `<prefix>-del.parquet` as (_dir, _file, _pos). An update is a
+  * ([[TxStagedWriter]], lazily, physical names), delete coordinates
+  * to `<prefix>-del.parquet` as (_dir, _file, _pos). An update is a
   * delete of the old coordinates plus an insert of the new row —
   * Spark's projections hand all three pieces. */
 class TxDeltaWriter(prefix: String, insertSchema: StructType,
@@ -495,16 +485,12 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
 
   private val delSchema = StructType(Seq(StructField("_dir", StringType),
     StructField("_file", StringType), StructField("_pos", LongType)))
-  private var insWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+  private val inserts =
+    new TxStagedWriter(s"$prefix-ins", insertSchema, Seq.empty, conf)
   private var delWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private val insPath = new org.apache.hadoop.fs.Path(s"$prefix-ins.parquet")
   private val delPath = new org.apache.hadoop.fs.Path(s"$prefix-del.parquet")
 
-  override def insert(row: InternalRow): Unit = {
-    if (insWriter == null)
-      insWriter = TxParquetIO.writer(insPath, insertSchema, conf.value)
-    insWriter.write(row)
-  }
+  override def insert(row: InternalRow): Unit = inserts.write(row)
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     require(metadata != null && !metadata.isNullAt(0) &&
@@ -531,19 +517,15 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
   override def write(row: InternalRow): Unit = insert(row)
 
   override def commit(): WriterCommitMessage = {
-    if (insWriter != null) insWriter.close()
     if (delWriter != null) delWriter.close()
-    TxDeltaCommitMessage(
-      if (insWriter != null) Some(insPath.toString) else None,
+    TxDeltaCommitMessage(inserts.staged().headOption.map(_.path),
       if (delWriter != null) Some(delPath.toString) else None)
   }
 
   override def abort(): Unit = {
-    if (insWriter != null) insWriter.close()
+    inserts.abort()
     if (delWriter != null) delWriter.close()
-    val fs = insPath.getFileSystem(conf.value)
-    fs.delete(insPath, false)
-    fs.delete(delPath, false)
+    delPath.getFileSystem(conf.value).delete(delPath, false)
     ()
   }
 
@@ -551,7 +533,7 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
 }
 
 /** `INSERT INTO` / `INSERT OVERWRITE` on the catalog face: executors
-  * stage rows as parquet ([[TxDataWriter]] again), the driver commit
+  * stage rows as parquet ([[TxStagedWriter]] again), the driver commit
   * lands them as one transactional append / replace-all
   * ([[TxTable.appendStaged]]). Appends stage under the snapshot's
   * PHYSICAL column names; an overwrite's files are born logical and
@@ -564,11 +546,11 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
   * clustered distribution + within-partition sort on the partition
   * columns (public `RequiresDistributionAndOrdering` — Spark shuffles
   * once before the writers see a row), each writer task stages ONE
-  * file per partition value it owns ([[TxPartitionedDataWriter]], the
-  * streaming sink's writer), and the commit promotes the files by
-  * rename with footer stats ([[TxTable.commitPartitionedSql]]). Three
-  * overwrite scopes land as ONE commit each, swapping exactly the
-  * replaced partitions' entries:
+  * file per partition value it owns ([[TxStagedWriter]] with partition
+  * columns), and the commit promotes the files by rename with the
+  * stats their writers saw ([[TxTable.promotePartitioned]], the
+  * streaming sink's promote). Three overwrite scopes land as ONE
+  * commit each, swapping exactly the replaced partitions' entries:
   *
   *  - `SupportsDynamicOverwrite` — `INSERT OVERWRITE` under dynamic
   *    partitionOverwriteMode / `df.writeTo(t).overwritePartitions()`:
@@ -688,92 +670,48 @@ class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
         StructType(info.schema().fields.map(f =>
           f.copy(name = TxTable.physNameOf(m, f.name))))
       }
-    TxCowWriterFactory(stagingDir, fileSchema,
+    TxStagedWriterFactory(stagingDir, fileSchema, Seq.empty,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
-      TxTable.appendStaged(spark, root, messages.collect {
-        case TxCommitMessage(p, _) if p != null => p
-      }.toSeq, replace, info.schema(), bootstrapStats, bucketSpec)
+      TxTable.appendStaged(spark, root,
+        TxStagedMessage.files(messages).map(_.path), replace, info.schema(),
+        bootstrapStats, bucketSpec)
     }
 }
 
 /** The PARTITIONED batch write: clustered+sorted input (the Write's
-  * required distribution), one staged file per partition value per
-  * task ([[TxPartitionedDataWriter]] — the streaming sink's writer,
-  * with its writer-observed tuple proof), one
-  * [[TxTable.commitPartitionedSql]] commit swapping exactly the
-  * replaced partitions. Files stage under the snapshot's PHYSICAL
-  * column names, so the column mapping carries through overwrites
-  * (a partition-scoped overwrite keeps other dirs — it must not
-  * reset the mapping the way replace-all does). */
+  * required distribution), one staged file per partition tuple per
+  * task ([[TxStagedWriter]], with its writer-observed tuples and
+  * stats), one [[TxTable.promotePartitioned]] commit swapping exactly
+  * the replaced partitions. Files stage under the snapshot's PHYSICAL
+  * column names ([[TxTable.staging]]), so the column mapping carries
+  * through overwrites (a partition-scoped overwrite keeps other dirs —
+  * it must not reset the mapping the way replace-all does). */
 class TxCatalogPartBatchWrite(root: String, info: LogicalWriteInfo,
   partCols: Seq[String], mode: String, filterSql: Option[String],
   bootstrapStats: Seq[String] = Seq.empty)
   extends TxStagedBatchWrite(root) {
 
   // partition-column types checked ONCE, loudly, before any task runs
-  partCols.foreach { c =>
-    require(info.schema().fieldNames.contains(c),
-      s"graft-tx: partition column '$c' is not in the write schema " +
-        s"(${info.schema().fieldNames.mkString(", ")})")
-    require(info.schema()(c).dataType match {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.DateType |
-        org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }, s"graft-tx: partition column '$c' must be integral, date or " +
-      s"string, got ${info.schema()(c).dataType}")
-  }
+  TxStagedWriter.requirePartitionable(info.schema(), partCols)
 
-  private def physSchemaAndParts(spark: SparkSession)
-    : (StructType, Seq[String]) = {
-    val m = TxTable.colMapOf(spark, root)
-    val fileSchema = StructType(info.schema().fields.map(f =>
-      f.copy(name = TxTable.physNameOf(m, f.name))))
-    (fileSchema, partCols.map(TxTable.physNameOf(m, _)))
-  }
+  private lazy val staging =
+    TxTable.staging(SparkSession.active, root, info.schema(), partCols)
 
   override def createBatchWriterFactory(
-    pinfo: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val (fileSchema, physParts) = physSchemaAndParts(spark)
-    TxBatchPartWriterFactory(stagingDir, fileSchema, physParts,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-  }
+    pinfo: PhysicalWriteInfo): DataWriterFactory =
+    TxStagedWriterFactory(stagingDir, staging.fileSchema, staging.physParts,
+      new SerializableConfiguration(
+        SparkSession.active.sessionState.newHadoopConf()))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
-      val staged = messages.collect {
-        case TxPartCommitMessage(fl, n) if n > 0 => fl
-      }.flatten.toSeq
-      staged.foreach { f =>
-        require(f.partVals.forall(_.isDefined),
-          s"graft-tx: partition column(s) (${partCols.mkString(", ")}) " +
-            "contain NULLs — partitioned writes need a total partition " +
-            "assignment; coalesce NULLs to a sentinel value first")
-      }
-      val partSchema = StructType(partCols.map(c => info.schema()(c)))
-      val (fileSchema, _) = physSchemaAndParts(spark)
-      val m = TxTable.colMapOf(spark, root)
-      TxTable.commitPartitionedSql(spark, root,
-        staged.map(f => f.path -> f.partVals.map(_.get)), partCols, mode,
-        filterSql, partSchema, fileSchema,
-        bootstrapStats.map(TxTable.physNameOf(m, _)))
+      TxTable.promotePartitioned(spark, root, staging,
+        TxStagedMessage.files(messages), bootstrapStats, mode, filterSql)
     }
-}
-
-case class TxBatchPartWriterFactory(stagingDir: String, schema: StructType,
-  physParts: Seq[String],
-  conf: SerializableConfiguration) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-    taskId: Long): DataWriter[InternalRow] =
-    new TxPartitionedDataWriter(
-      s"$stagingDir/part-$partitionId-$taskId", schema, physParts, conf)
 }
 
 /** Conservative V2-Predicate → Spark-SQL-text renderer, the bridge

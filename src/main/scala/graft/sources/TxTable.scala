@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot-versioned transactional table — the warehouse's
   * atomically-loadable table (the role a transactional table format
@@ -184,7 +185,7 @@ object TxTable {
     * prune directories that cannot intersect a requested range box
     * (the partition-pruning / file-skipping analog for a
     * key-addressed table, generalized to any stats column set). */
-  private case class Entry(isDelta: Boolean, dir: String,
+  private[sources] case class Entry(isDelta: Boolean, dir: String,
     stats: Map[String, (Long, Long)],
     sstats: Map[String, (String, String)] = Map.empty,
     xvals: Map[String, String] = Map.empty,
@@ -277,6 +278,12 @@ object TxTable {
     * successor → no stat recorded, the dir just never prunes on that
     * column. The same move Delta/Iceberg make for string file stats. */
   private val strStatMaxBytes = 48
+
+  /** The refusal of a string partition value past [[strStatMaxBytes]]. */
+  private val partValueCapMsg = s"txtable: partition value exceeds " +
+    s"$strStatMaxBytes UTF-8 bytes - the exact-value stat that proves " +
+    "the clustering caps there; hash or bucket long keys instead"
+
   private def hexEnc(b: Array[Byte]): String = {
     val sb = new java.lang.StringBuilder(b.length * 2)
     b.foreach(x => sb.append(f"${x & 0xff}%02x"))
@@ -416,7 +423,7 @@ object TxTable {
     *  - `batch:<stream>:<id>` — streaming replay tags, carried per
     *    stream by every commit ([[tagged]]), so an interleaved append
     *    or compaction never reopens a sink's exactly-once window. */
-  private final case class TableMeta(
+  private[sources] final case class TableMeta(
     keys: Option[Seq[String]] = None,
     statsCols: Seq[String] = Seq.empty,
     bucketBy: Option[(String, Int)] = None,
@@ -518,7 +525,7 @@ object TxTable {
     * WRITTEN (include lines verbatim — carrying these instead of the
     * expansion is what keeps append commits metadata-O(1)), and its
     * entries, expanded once on first use. */
-  private final case class Head(version: Int, meta: TableMeta,
+  private[sources] final case class Head(version: Int, meta: TableMeta,
     rawEntryLines: Seq[String])(val fs: FileSystem, val rp: Path) {
     /** The entries in commit order (manifests expanded). */
     lazy val entries: Seq[Entry] =
@@ -636,45 +643,59 @@ object TxTable {
       df.select(cols.map { case (l, p) => col(p).as(l) }: _*)
   }
 
+  /** Physical names for the LOGICAL columns `names` under mapping `m`,
+    * auto-extending the mapping for columns it has never seen (schema
+    * widening after a rename). A new column whose name collides with a
+    * reserved physical (e.g. re-adding a dropped column's name) gets a
+    * fresh uuid-suffixed physical so old file data can never leak into
+    * it. Returns the physical names and the pairs the mapping gains
+    * (none for an unmapped table: its names are the physical ones). */
+  private def physicalNames(names: Seq[String],
+    m: Option[Seq[(String, String)]], exclude: Set[String] = Set.empty)
+    : (Seq[String], Seq[(String, String)]) = m match {
+    case None => (names, Seq.empty)
+    case Some(pairs) =>
+      val logToPhys = liveMap(pairs).toMap
+      val reserved = scala.collection.mutable.Set(pairs.map(_._2): _*)
+      var added = Seq.empty[(String, String)]
+      val out = names.map { c =>
+        if (exclude.contains(c)) c
+        else logToPhys.getOrElse(c, {
+          // the auto-extended pair is written into the colmap header
+          // verbatim — a name holding ',' / '=' / newline would
+          // corrupt the header and break every later read of the
+          // table, so enforce renameColumn's name rule BEFORE any
+          // commit is staged (generated physicals only append a hex
+          // suffix, so validating the logical covers both sides)
+          require(validColName(c),
+            s"txtable: invalid column name '$c' for a column-mapped " +
+              "table (empty or reserved character)")
+          val p =
+            if (!reserved.contains(c)) c
+            else s"${c}_${java.util.UUID.randomUUID().toString.take(8)}"
+          reserved += p
+          added :+= (c -> p)
+          p
+        })
+      }
+      (out, added)
+  }
+
   /** Translate an incoming LOGICAL frame to physical names for the
-    * write path, auto-extending the mapping for columns the map has
-    * never seen (schema widening after a rename). A new column whose
-    * name collides with a reserved physical (e.g. re-adding a dropped
-    * column's name) gets a fresh uuid-suffixed physical so old file
-    * data can never leak into it. Returns the translated frame and,
+    * write path ([[physicalNames]]). Returns the translated frame and,
     * when a mapping governs the table, the extended map to commit. */
   private def toPhysicalFrame(df: DataFrame,
     m: Option[Seq[(String, String)]],
     exclude: Set[String] = Set.empty)
-    : (DataFrame, Option[Seq[(String, String)]]) = m match {
-    case None => (df, None)
-    case Some(pairs) =>
-      val logToPhys = liveMap(pairs).toMap
-      val reserved = scala.collection.mutable.Set(pairs.map(_._2): _*)
-      var extended = pairs
-      val out = df.columns.toSeq.map { c =>
-        if (exclude.contains(c)) col(c)
-        else logToPhys.get(c) match {
-          case Some(p) => col(c).as(p)
-          case None =>
-            // the auto-extended pair is written into the colmap header
-            // verbatim — a name holding ',' / '=' / newline would
-            // corrupt the header and break every later read of the
-            // table, so enforce renameColumn's name rule BEFORE any
-            // commit is staged (generated physicals only append a hex
-            // suffix, so validating the logical covers both sides)
-            require(validColName(c),
-              s"txtable: invalid column name '$c' for a column-mapped " +
-                "table (empty or reserved character)")
-            val p =
-              if (!reserved.contains(c)) c
-              else s"${c}_${java.util.UUID.randomUUID().toString.take(8)}"
-            reserved += p
-            extended = extended :+ (c -> p)
-            col(c).as(p)
-        }
-      }
-      (df.select(out: _*), Some(extended))
+    : (DataFrame, Option[Seq[(String, String)]]) = {
+    val (phys, added) = physicalNames(df.columns.toSeq, m, exclude)
+    m match {
+      case None => (df, None)
+      case Some(pairs) =>
+        (df.select(df.columns.toSeq.zip(phys).map { case (c, p) =>
+          if (exclude.contains(c)) col(c) else col(c).as(p) }: _*),
+          Some(pairs ++ added))
+    }
   }
 
   /** DML predicate/SET evaluation on a PHYSICAL dir frame: expose the
@@ -713,7 +734,7 @@ object TxTable {
     * versions. The table metadata is the commit file's cached record
     * (no further RPCs); only manifest expansion (`include:` lines) may
     * read more files, exactly as the uncached path would. */
-  private def resolve(spark: SparkSession, root: String,
+  private[sources] def resolve(spark: SparkSession, root: String,
     version: Int): Head = {
     val (fs, rp) = fsFor(spark, root)
     headAt(fs, rp, if (version >= 0) version else latestVersion(fs, rp))
@@ -848,23 +869,12 @@ object TxTable {
       strRanges.toSeq.flatMap { case (c, (lo, hi)) =>
         TxTableSource.between(c, lo, hi) }
 
-  /** Data FILES of the snapshot that survive dir pruning under the
-    * given ranges (see [[filesWhere]]). */
-  private[sources] def dataFiles(spark: SparkSession, root: String,
-    version: Int = -1, keyRange: Option[(Long, Long)] = None,
-    colRanges: Map[String, (Long, Long)] = Map.empty,
-    strRanges: Map[String, (String, String)] = Map.empty): Array[String] =
-    filesWhere(spark, root, version, rangeFilters(colRanges, strRanges),
-      keyRange)
-
   /** Data FILES of the snapshot that survive the dir triage of
     * `filters` — what the `graft-tx` relation reports as
     * `Dataset.inputFiles`, so option-driven skipping is observable
     * from the standard API. */
-  private[sources] def filesWhere(spark: SparkSession, root: String,
-    version: Int, filters: Seq[Filter],
-    keyRange: Option[(Long, Long)]): Array[String] = {
-    val h = resolve(spark, root, version)
+  private[sources] def filesWhere(spark: SparkSession, h: Head,
+    filters: Seq[Filter], keyRange: Option[(Long, Long)]): Array[String] = {
     val entries = planSnapshot(h, filters, keyRange).entries
     val files = listDataFiles(spark, h.rp, entries.map(_.dir))
     entries.toArray.flatMap(e => files.getOrElse(e.dir, Seq.empty))
@@ -887,18 +897,16 @@ object TxTable {
     keyRange: Option[(Long, Long)] = None,
     colRanges: Map[String, (Long, Long)] = Map.empty,
     strRanges: Map[String, (String, String)] = Map.empty): DataFrame =
-    readWhere(spark, root, version, rangeFilters(colRanges, strRanges),
-      keyRange)
+    readWhere(spark, resolve(spark, root, version),
+      rangeFilters(colRanges, strRanges), keyRange)
 
   /** [[read]] under `filters` in the snapshot's LOGICAL names (plus
     * `keyRange`, see [[planSnapshot]]): the dirs their triage refutes
     * are never opened, and the resolved rows — null-filled declared
     * columns included — pass every filter once. A filter on a column
     * the snapshot lacks restricts nothing. */
-  private[sources] def readWhere(spark: SparkSession, root: String,
-    version: Int, filters: Seq[Filter],
-    keyRange: Option[(Long, Long)]): DataFrame = {
-    val h = resolve(spark, root, version)
+  private[sources] def readWhere(spark: SparkSession, h: Head,
+    filters: Seq[Filter], keyRange: Option[(Long, Long)]): DataFrame = {
     val plan = planSnapshot(h, filters, keyRange)
     // callers address columns by the snapshot's LOGICAL names; the
     // physical plumbing below (stats, files, resolution) speaks the
@@ -1307,21 +1315,10 @@ object TxTable {
     val work = for {
       (d, hs) <- perDir; (c, b) <- hs if b.length > cap
     } yield (d, c, b)
-    if (work.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, work.size))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[Unit]] =
-          work.map { case (d, c, b) =>
-            () => {
-              val os = fs.create(hllSidecarPath(rp, d, c), true)
-              try os.write(java.util.Base64.getDecoder.decode(b))
-              finally os.close()
-            }
-          }
-        pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
-      } finally pool.shutdown()
+    fanOut(work) { case (d, c, b) =>
+      val os = fs.create(hllSidecarPath(rp, d, c), true)
+      try os.write(java.util.Base64.getDecoder.decode(b))
+      finally os.close()
     }
     perDir.map { case (d, hs) =>
       d -> hs.map { case (c, b) =>
@@ -1429,13 +1426,10 @@ object TxTable {
     }
   }
 
-  /** Metadata-only on-disk size of snapshot `v` — the sum of per-dir
+  /** Metadata-only on-disk size of snapshot `h` — the sum of per-dir
     * `_bytes` stats. None when any entry predates byte recording. */
-  private[sources] def snapshotBytes(spark: SparkSession, root: String,
-    version: Int = -1): Option[Long] = {
-    val h = resolve(spark, root, version)
-    val v = h.version
-    if (v == 0) return None
+  private[sources] def snapshotBytes(h: Head): Option[Long] = {
+    if (h.version == 0) return None
     val sizes = h.entries.map(_.stats.get(bytesKey).map(_._1))
     if (sizes.isEmpty || sizes.exists(_.isEmpty)) None
     else Some(sizes.flatten.sum)
@@ -3063,20 +3057,6 @@ object TxTable {
     statsCols: Seq[String] = Seq.empty): Int =
     appendPartitionedBy(df, root, Seq(partCol), statsCols)
 
-  /** [[appendPartitioned]] on a COMPOSITE partition key: one leaf dir
-    * per distinct (c1, ..., cn) tuple, each single-valued and
-    * null-free on every key column — the layout the multi-key
-    * storage-partitioned join face proves its co-clustering from
-    * (ref analog: CompositeInputFormat co-partitions its merge join
-    * on arbitrary composite tuples, src/mapred/org/apache/hadoop/
-    * mapred/join/CompositeInputFormat.java:1). Still ONE pass over
-    * the data: hive-style dynamic partitionBy on duplicated helper
-    * columns, stats read back per leaf in one grouped aggregate, then
-    * pure metadata renames. */
-  def appendPartitionedBy(df: DataFrame, root: String,
-    partCols: Seq[String], statsCols: Seq[String] = Seq.empty): Int =
-    appendPartitionedTagged(df, root, partCols, statsCols, None, _ => false)
-
   /** Append `df` HASH-BUCKET-clustered on `bucketCol` into
     * `numBuckets` buckets: ONE pass over the data (hive-style
     * dynamic partitionBy on the derived bucket id), one dir per
@@ -3194,13 +3174,18 @@ object TxTable {
     }
   }
 
-  /** [[appendPartitionedBy]] with streaming replay protection: the
-    * commit carries `batchTag` and `skipIf` recognizes an epoch another
-    * writer already folded (the appendBatch contract, partitioned). */
-  private def appendPartitionedTagged(df: DataFrame, root: String,
-    partCols: Seq[String], statsCols: Seq[String],
-    batchTag: Option[String], skipIf: Int => Boolean,
-    preCommit: Int => Unit = _ => ()): Int = {
+  /** [[appendPartitioned]] on a COMPOSITE partition key: one leaf dir
+    * per distinct (c1, ..., cn) tuple, each single-valued and
+    * null-free on every key column — the layout the multi-key
+    * storage-partitioned join face proves its co-clustering from
+    * (ref analog: CompositeInputFormat co-partitions its merge join
+    * on arbitrary composite tuples, src/mapred/org/apache/hadoop/
+    * mapred/join/CompositeInputFormat.java:1). Still ONE pass over
+    * the data: hive-style dynamic partitionBy on duplicated helper
+    * columns, stats read back per leaf in one grouped aggregate, then
+    * pure metadata renames. */
+  def appendPartitionedBy(df: DataFrame, root: String,
+    partCols: Seq[String], statsCols: Seq[String] = Seq.empty): Int = {
     val spark = df.sparkSession
     val (fs, rp) = fsFor(spark, root)
     require(partCols.nonEmpty, "txtable: no partition columns")
@@ -3264,13 +3249,10 @@ object TxTable {
     // (and the hex dir name would blow filesystem name limits) —
     // checked IN the write expression so the one pass over the data
     // also polices the cap, with no extra validation job
-    val capMsg = s"txtable: partition value exceeds $strStatMaxBytes " +
-      "UTF-8 bytes - the exact-value stat that proves the clustering " +
-      "caps there; hash or bucket long keys instead"
     def helperExpr(p: String, kind: Char) = kind match {
       case 's' => concat(lit("x"), lower(hex(
         when(octet_length(col(p)) > lit(strStatMaxBytes),
-          raise_error(lit(capMsg))).otherwise(col(p)))))
+          raise_error(lit(partValueCapMsg))).otherwise(col(p)))))
       // DateType → its own internal days-since-epoch integer
       case 'd' => datediff(col(p), lit(java.sql.Date.valueOf("1970-01-01")))
         .cast("long")
@@ -3315,8 +3297,8 @@ object TxTable {
           val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
             .take(16).toSeq
           if (chain.exists(e => e.getMessage != null &&
-            e.getMessage.contains(capMsg)))
-            throw new IllegalArgumentException(capMsg)
+            e.getMessage.contains(partValueCapMsg)))
+            throw new IllegalArgumentException(partValueCapMsg)
           throw t
       }
       // NULLs can't address a `$partCol=v` dir (they land in the hive
@@ -3336,7 +3318,7 @@ object TxTable {
             // unreachable when the write-side raise_error policed the
             // cap; kept as the loud backstop for exotic filesystems
             if (partIsStr(depth) && (v.length - 1) / 2 > strStatMaxBytes)
-              throw new IllegalArgumentException(capMsg)
+              throw new IllegalArgumentException(partValueCapMsg)
             if (depth == helpers.length - 1) Seq(Seq(v))
             else leafTuples(new Path(p, n), depth + 1).map(v +: _)
           }
@@ -3396,209 +3378,28 @@ object TxTable {
           sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
           xvals = e.xvals ++ strHex)
       })
-      head =>
-        if (skipIf(head.version)) None
-        else {
-          preCommit(head.version)
-          if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
-            s"txtable: $root became bucket-clustered concurrently; " +
-              "value-partitioned appends would break the layout")
-          val meta = batchTag.fold(head.meta)(head.meta.tagged)
-          Some(Commit("append", meta.copy(colMap = extMap.orElse(meta.colMap))
+      head => {
+        if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
+          s"txtable: $root became bucket-clustered concurrently; " +
+            "value-partitioned appends would break the layout")
+        Some(Commit("append",
+          head.meta.copy(colMap = extMap.orElse(head.meta.colMap))
             .withStats(physParts ++ statsCols.map(physName(effMap, _))),
-            added = entries.map(_.line)))
-        }
+          added = entries.map(_.line)))
+      }
     }
   }
 
-  /** Footer-derived facts of one staged parquet file: row count, byte
-    * length, and per-column integral (min, max) / null counts folded
-    * across row groups. A column appears in `stats` only when every
-    * row group reports trustworthy values (all-NULL groups contribute
-    * nulls but no bounds, like the write-side aggregates); in `nulls`
-    * only when every group records a null count. */
-  private case class StagedFacts(rows: Long, bytes: Long,
-    stats: Map[String, (Long, Long)], nulls: Map[String, Long])
-
-  private def stagedFacts(conf: org.apache.hadoop.conf.Configuration,
-    f: Path, cols: Seq[String]): StagedFacts = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics, Statistics => PqStats}
-    val fs = f.getFileSystem(conf)
-    val bytes = fs.getFileStatus(f).getLen
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      def boundOf(s: PqStats[_], hi: Boolean): Option[Long] = s match {
-        case l: LongStatistics => Some(if (hi) l.getMax else l.getMin)
-        case i: IntStatistics =>
-          Some((if (hi) i.getMax else i.getMin).toLong)
-        case _ => None
-      }
-      var stats = Map.empty[String, (Long, Long)]
-      var nulls = Map.empty[String, Long]
-      cols.distinct.foreach { c =>
-        val chunks = blocks.map(_.getColumns.asScala.find(
-          _.getPath.toDotString == c))
-        if (!chunks.exists(_.isEmpty)) {
-          val cs = chunks.flatten
-          val sts = cs.map(_.getStatistics)
-          if (!sts.exists(s => s == null || !s.isNumNullsSet)) {
-            nulls += c -> sts.map(_.getNumNulls).sum
-            // a group without recorded values is trustworthy only if
-            // it is PROVABLY all-NULL; otherwise the stat was dropped
-            // and the file's bounds are unknowable
-            val sound = sts.zip(cs).forall { case (s, ch) =>
-              s.hasNonNullValue || s.getNumNulls == ch.getValueCount }
-            val valued = sts.filter(_.hasNonNullValue)
-            val bounds = valued.flatMap(s =>
-              boundOf(s, hi = false).zip(boundOf(s, hi = true)))
-            if (sound && bounds.nonEmpty && bounds.size == valued.size)
-              stats += c -> (bounds.map(_._1).min, bounds.map(_._2).max)
-          }
-        }
-      }
-      StagedFacts(rows, bytes, stats, nulls)
-    } finally r.close()
-  }
-
-  /** Promote STAGED parquet files — one partition value per file, the
-    * layout the partitioned streaming sink's clustered, sorted writers
-    * produce — into a partitioned snapshot by RENAME: the single-write
-    * ingest path. The stream's own writers are the only pass over the
-    * data; per-dir stats come from the parquet FOOTERS (driver-side,
-    * 16-way pooled metadata reads), so promotion runs ZERO Spark jobs
-    * and moves zero bytes — against the rewrite path's second full
-    * write per epoch, this halves the write amplification of a 100 TB
-    * ingest pipeline. The layout is TRUSTED ONLY WHEN PROVEN from the
-    * footers (every file single-valued and null-free on every
-    * partition column — the same proof partitionFileSlices demands);
-    * anything unprovable — a file spanning two values (Spark declined
-    * the requested clustering), NULL partition values, dropped footer
-    * stats, a non-identity column mapping — falls back to the one-pass
-    * partitioned rewrite, which re-shuffles but never wrong-answers.
-    * STRING partition keys prove through `providedParts` instead: the
-    * sink's writer OBSERVED every row it staged, so its per-file key
-    * tuple is authoritative — parquet binary footer bounds (which may
-    * be truncated) are NEVER consulted for strings, and string stats
-    * columns still ride only the rewrite path (truncation-widened
-    * bounds are a read-side contract this path must not weaken
-    * silently). Exactly-once via the appendBatch batch-tag replay
-    * protection. Reference analog: promoting task outputs into the
-    * destination by rename is the committer move of
-    * src/mapred/org/apache/hadoop/mapred/FileOutputCommitter.java:1 —
-    * here the committed artifact also carries its stats. */
-  private[graft] def appendPartitionedStaged(spark: SparkSession,
-    root: String, stagedFiles: Seq[String], partCols: Seq[String],
-    batchId: Long, statsCols: Seq[String] = Seq.empty,
-    streamId: String = "default",
-    preCommit: Int => Unit = _ => (),
-    providedParts: Map[String, Seq[Any]] = Map.empty): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    // like appendPartitionedTagged, this path mints Entry lines
-    // directly — same stats-grammar forgery guard
-    (partCols ++ statsCols).foreach(requireStatsGrammarSafe)
-    val sid = sanitizeStreamId(streamId)
-    val tag = s"$sid:$batchId"
-    def alreadyApplied(v: Int): Boolean =
-      appliedBatchId(fs, rp, v, sid).exists(_ >= batchId)
-    val head0 = resolve(spark, root, -1)
-    if (alreadyApplied(head0.version)) {
-      stagedFiles.foreach(f => fs.delete(new Path(f), false))
-      return head0.version
-    }
-    // an empty epoch still commits its tag (replay-protection cursor)
-    if (stagedFiles.isEmpty)
-      return commitRetry(spark, root, Some(head0)) { _ => head =>
-        if (alreadyApplied(head.version)) None
-        else {
-          preCommit(head.version)
-          Some(Commit("append", head.meta.tagged(tag)))
-        }
-      }
-    val conf = spark.sessionState.newHadoopConf()
-    def rewriteFallback(): Int = appendPartitionedTagged(
-      spark.read.parquet(stagedFiles: _*), root, partCols, statsCols,
-      Some(tag), alreadyApplied, preCommit)
-    // fast path needs file column names == snapshot physical names
-    val m = head0.meta.colMap
-    if (m.exists(_.exists { case (l, p) => l != p })) return rewriteFallback()
-    // footer facts for every staged file, overlapped like dirSchemas
-    val wanted = partCols ++ statsCols
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, stagedFiles.size))
-    val facts: Seq[(String, StagedFacts)] =
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[(String, StagedFacts)]] =
-          stagedFiles.map(f =>
-            () => f -> stagedFacts(conf, new Path(f), wanted))
-        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
-    // each file proves its key tuple ONE of two ways: the writer's
-    // own observation (providedParts — any key type, including
-    // strings), or the integral footer stats (`lo == hi`, zero
-    // nulls). One unprovable file sends the whole epoch down the
-    // rewrite path — per-file mixing of proof sources is fine, mixing
-    // of OUTCOMES is not (a half-promoted epoch isn't atomic).
-    def tupleOf(f: String, sf: StagedFacts): Option[Seq[Any]] =
-      providedParts.get(f).orElse {
-        val vs = partCols.map { pc =>
-          if (sf.nulls.get(pc).contains(0L))
-            sf.stats.get(pc).collect { case (lo, hi) if lo == hi => lo: Any }
-          else None
-        }
-        if (vs.forall(_.isDefined)) Some(vs.map(_.get)) else None
-      }
-    val keyed = facts.map { case (f, sf) => (f, sf, tupleOf(f, sf)) }
-    val proven = keyed.forall(_._3.isDefined) &&
-      // string keys must fit the exact-value stat cap — longer values
-      // fall to the rewrite, whose loud error names the contract
-      keyed.forall(_._3.get.forall {
-        case s: String => s.getBytes("UTF-8").length <= strStatMaxBytes
-        case _ => true
-      })
-    if (!proven) return rewriteFallback()
-    // CHECK constraints gate the streaming promote path too: a
-    // column-pruned read-back of the epoch's staged files (the data
-    // is already parquet on disk — the minimal possible validation;
-    // the rewrite fallback above inherits the in-write guard). The
-    // fast path requires an identity colmap, so the files' names ARE
-    // the logical names the predicates speak.
-    val epochChecks = checkConstraints(spark, root)
-    if (epochChecks.nonEmpty)
-      enforceChecksNow(spark.read.parquet(stagedFiles: _*), epochChecks)
-    commitRetry(spark, root, Some(head0)) { stage =>
-      val entries = promotePartEntries(fs, rp,
-        stage(s"data/append-${java.util.UUID.randomUUID()}"), partCols,
-        statsCols, keyed.map { case (f, sf, t) => (f, sf, t.get) })
-      head =>
-        if (alreadyApplied(head.version)) None
-        else {
-          preCommit(head.version)
-          if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
-            s"txtable: $root is bucket-clustered; a partitioned " +
-              "streaming append would break the layout")
-          Some(Commit("append",
-            head.meta.tagged(tag).withStats(partCols ++ statsCols),
-            added = entries.map(_.line)))
-        }
-    }
-  }
-
-  /** Promote proven-single-tuple staged files into `$p=v` entry dirs
-    * under `baseDir` — the shared layout/stat-minting step of the
-    * partitioned promote paths (streaming epoch commits and the SQL
-    * write face). One metadata rename per file; per-dir stats folded
-    * from the footer facts; integral keys get exact `lo == hi` range
-    * stats, string keys the `sx:` exact-value marker — the same
-    * clustering proof appendPartitionedBy records. */
+  /** Promote staged files, each holding one NULL-free partition
+    * tuple, into `$p=v` entry dirs under `baseDir`: one metadata rename
+    * per file, per-dir stats folded from what the files' writers saw.
+    * Integral keys get exact `lo == hi` range stats, string keys the
+    * `sx:` exact-value marker — the same clustering proof
+    * appendPartitionedBy records. */
   private def promotePartEntries(fs: FileSystem, rp: Path, baseDir: String,
     partCols: Seq[String], statsCols: Seq[String],
-    keyed: Seq[(String, StagedFacts, Seq[Any])]): Seq[Entry] = {
-    val byTuple = keyed.groupBy(_._3)
+    staged: Seq[TxStagedFile]): Seq[Entry] = {
+    val byTuple = staged.groupBy(_.partVals.flatten)
     byTuple.toSeq.sortBy(t => tupleSortKey(t._1)).map {
       case (vs, fl) =>
         val dirName = baseDir + partCols.zip(vs).map {
@@ -3606,23 +3407,23 @@ object TxTable {
           case (p, v) => s"/$p=x${hexOf(v.toString)}"
         }.mkString
         fs.mkdirs(new Path(rp, dirName))
-        fl.foreach { case (f, _, _) =>
-          val src = new Path(f)
+        fl.foreach { f =>
+          val src = new Path(f.path)
           require(fs.rename(src,
             new Path(new Path(rp, dirName), src.getName)),
-            s"txtable: failed to promote staged file $f")
+            s"txtable: failed to promote staged file ${f.path}")
         }
-        val rows = fl.map(_._2.rows).sum
-        val bytes = fl.map(_._2.bytes).sum
+        val rows = fl.map(_.rows).sum
+        val bytes = fl.map(_.bytes).sum
         val extra = statsCols.distinct.flatMap { c =>
-          val ss = fl.map(_._2.stats.get(c))
-          val ns = fl.map(_._2.nulls.get(c))
+          val ss = fl.map(_.bounds.get(c))
+          val ns = fl.map(_.nulls.get(c))
           // bounds: every file must report (all-NULL files excepted —
           // those carry nulls and no bounds, so require nulls known)
           val bound =
             if (ns.exists(_.isEmpty) ||
-              fl.zip(ss).exists { case ((_, sf, _), s) =>
-                s.isEmpty && !sf.nulls.get(c).contains(sf.rows) }) None
+              fl.zip(ss).exists { case (f, s) =>
+                s.isEmpty && !f.nulls.get(c).contains(f.rows) }) None
             else ss.flatten match {
               case Seq() => None
               case bs => Some(c -> (bs.map(_._1).min, bs.map(_._2).max))
@@ -3759,16 +3560,47 @@ object TxTable {
     }.toSet
   }
 
-  /** SQL-face partitioned commit — `INSERT INTO` / `INSERT OVERWRITE
-    * [PARTITION (...)]` / `df.writeTo(t).overwritePartitions()` on a
-    * partition-declared catalog table. Executor-staged, writer-
-    * clustered parquet files (one partition tuple per file, physical
-    * column names, tuples writer-observed) promote by RENAME into
-    * `$p=v` entry dirs with footer-derived stats, and land in ONE OCC
-    * commit that — per `mode` — also drops exactly the replaced
-    * partitions' entries:
+  /** Where a DSv2 write stages its files: the write's `schema` and
+    * partition columns in LOGICAL names, the file schema and partition
+    * columns in the snapshot's PHYSICAL names, and the pairs the
+    * column mapping gains for columns it has never seen (see
+    * [[physicalNames]]) — fixed once, before any task runs, so the
+    * commit promotes exactly the names the files were written under. */
+  private[graft] final case class Staging(schema: StructType,
+    partCols: Seq[String], fileSchema: StructType, physParts: Seq[String],
+    added: Seq[(String, String)])
+
+  /** The [[Staging]] of a write of `schema` into `root`'s latest
+    * snapshot. */
+  private[graft] def staging(spark: SparkSession, root: String,
+    schema: StructType, partCols: Seq[String]): Staging = {
+    val (fs, rp) = fsFor(spark, root)
+    val m = metaAt(fs, rp, latestVersion(fs, rp)).colMap
+    val (phys, added) = physicalNames(schema.fieldNames.toSeq, m)
+    val byName = schema.fieldNames.zip(phys).toMap
+    Staging(schema, partCols, StructType(schema.fields.zip(phys).map {
+      case (f, p) => f.copy(name = p) }), partCols.map(byName), added)
+  }
+
+  /** A streaming epoch's duties at commit: record its `batch:` tag,
+    * commit nothing when the stream already applied it, and run the
+    * sink's `preCommit` check against each attempt's parent version. */
+  private[graft] final case class Epoch(streamId: String, batchId: Long,
+    preCommit: Int => Unit)
+
+  /** The one partitioned promote — the streaming sink's epochs
+    * (`epoch` set, mode `append`) and the SQL face's `INSERT INTO` /
+    * `INSERT OVERWRITE [PARTITION (...)]` /
+    * `df.writeTo(t).overwritePartitions()` on a partition-declared
+    * catalog table. Executor-staged, writer-clustered parquet files (one
+    * partition tuple per file, physical column names, tuples and stats
+    * as the writer saw them) promote by RENAME into `$p=v` entry dirs,
+    * so this runs zero Spark jobs and moves zero bytes: the epoch or
+    * statement wrote its data exactly once. They land in ONE OCC commit
+    * that — per `mode` — also drops exactly the replaced partitions'
+    * entries:
     *
-    *  - `"append"`    keeps every prior entry (INSERT INTO);
+    *  - `"append"`    keeps every prior entry (INSERT INTO, an epoch);
     *  - `"dynamic"`   drops entries whose tuple appears in the staged
     *                  data (dynamic partition overwrite — the daily-
     *                  reload idiom: untouched partitions' files are
@@ -3781,67 +3613,79 @@ object TxTable {
     *  - `"replace"`   drops everything (INSERT OVERWRITE of the whole
     *                  table) but keeps the clustered layout.
     *
-    * Prior entries must PROVE their tuples through their dir names
-    * (zero-row entries excepted — they can't violate partition
-    * semantics); an unprovable non-empty dir refuses loudly rather
-    * than silently keeping replaced rows. Keyed/MoR snapshots refuse —
-    * partition-overwrite semantics over keyed resolution would be
-    * ambiguous. Reference analog: the warehouse's atomic partition-
-    * rename loads (src/mapred/org/apache/hadoop/mapred/
-    * FileOutputCommitter.java:1) — here the swap is one commit-log
-    * claim, and old versions stay time-travelable until vacuum. */
-  private[sources] def commitPartitionedSql(spark: SparkSession,
-    root: String, staged: Seq[(String, Seq[Any])],
-    logicalParts: Seq[String], mode: String, filterSql: Option[String],
-    partSchema: org.apache.spark.sql.types.StructType,
-    fileSchema: org.apache.spark.sql.types.StructType,
-    bootstrapStatsCols: Seq[String] = Seq.empty): Int = {
+    * NULL tuples and string values past the exact-value stat cap refuse
+    * before anything moves. The per-dir stats cover the table's declared
+    * stats columns, or `bootstrapStats` when it declares none. Prior
+    * entries must PROVE their tuples through their dir names (zero-row
+    * entries excepted — they can't violate partition semantics); an
+    * unprovable non-empty dir refuses loudly rather than silently
+    * keeping replaced rows. The SQL face refuses keyed and merge-on-read
+    * snapshots (partition-overwrite semantics over keyed resolution
+    * would be ambiguous) and arrives CHECK-enforced by Spark's
+    * CheckInvariant; an epoch refuses a bucket-clustered table and
+    * checks the table's CHECK constraints on its staged files.
+    * Reference analog: promoting task outputs into the destination by
+    * rename is the committer move of src/mapred/org/apache/hadoop/
+    * mapred/FileOutputCommitter.java:1 — here the swap is one
+    * commit-log claim, the committed artifact also carries its stats,
+    * and old versions stay time-travelable until vacuum. */
+  private[graft] def promotePartitioned(spark: SparkSession,
+    root: String, st: Staging, staged: Seq[TxStagedFile],
+    bootstrapStats: Seq[String], mode: String = "append",
+    filterSql: Option[String] = None, epoch: Option[Epoch] = None): Int = {
     require(Seq("append", "dynamic", "filter", "replace").contains(mode),
       s"txtable: unknown partitioned-commit mode '$mode'")
     val (fs, rp) = fsFor(spark, root)
-    if (staged.isEmpty && mode == "append") return latestVersion(spark, root)
+    val tag = epoch.map(e => s"${sanitizeStreamId(e.streamId)}:${e.batchId}")
+    def applied(v: Int): Boolean = epoch.exists(e =>
+      appliedBatchId(fs, rp, v, sanitizeStreamId(e.streamId))
+        .exists(_ >= e.batchId))
     val head0 = resolve(spark, root, -1)
-    val v0 = head0.version
-    val meta0 = head0.meta
-    val physParts = logicalParts.map(physName(meta0.colMap, _))
-    physParts.foreach(requireStatsGrammarSafe)
-    staged.foreach { case (_, t) =>
-      t.foreach {
+    if (applied(head0.version)) return head0.version
+    if (staged.isEmpty && mode == "append")
+      // an empty epoch still commits its tag (replay-protection cursor)
+      return tag.fold(head0.version) { t =>
+        commitRetry(spark, root, Some(head0)) { _ => head =>
+          if (applied(head.version)) None
+          else {
+            epoch.get.preCommit(head.version)
+            Some(Commit("append", head.meta.tagged(t)))
+          }
+        }
+      }
+    staged.foreach { f =>
+      require(f.partVals.forall(_.isDefined),
+        s"graft-tx: partition column(s) (${st.partCols.mkString(", ")}) " +
+          "contain NULLs — partitioned writes need a total partition " +
+          "assignment; coalesce NULLs to a sentinel value first")
+      f.partVals.flatten.foreach {
         case s: String => require(s.getBytes("UTF-8").length <= strStatMaxBytes,
-          s"txtable: partition value exceeds $strStatMaxBytes UTF-8 " +
-            "bytes - the exact-value stat that proves the clustering " +
-            "caps there; hash or bucket long keys instead")
+          partValueCapMsg)
         case _ => ()
       }
     }
-    // footer facts for the snapshot's stats columns (physical names;
-    // partition columns are writer-proven, not footer-proven); the
-    // BOOTSTRAP load declares its own (integral bounds only — that's
-    // what footers prove; see stagedFacts)
+    val meta0 = head0.meta
+    // a mapping gains the staged columns it has never seen
+    def extended(m: Option[Seq[(String, String)]]) = m.map(pairs =>
+      pairs ++ st.added.filterNot(a => liveMap(pairs).exists(_._1 == a._1)))
+    val physParts = st.physParts
     val statsCols =
-      (if (v0 == 0) bootstrapStatsCols else meta0.statsCols)
+      (if (meta0.statsCols.nonEmpty) meta0.statsCols
+      else bootstrapStats.map(physName(extended(meta0.colMap), _)))
         .filterNot(physParts.contains).distinct
-    val conf = spark.sessionState.newHadoopConf()
-    val facts: Map[String, StagedFacts] =
-      if (staged.isEmpty) Map.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, staged.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[
-            (String, StagedFacts)]] = staged.map { case (f, _) =>
-            () => f -> stagedFacts(conf, new Path(f), statsCols)
-          }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
+    (physParts ++ statsCols).foreach(requireStatsGrammarSafe)
+    // catalog writes arrive CHECK-enforced; an epoch's rows are already
+    // parquet on disk, so read back only the constraints' columns
+    if (epoch.isDefined && meta0.checks.nonEmpty)
+      enforceChecksNow(toLogical(spark.read.parquet(staged.map(_.path): _*),
+        extended(meta0.colMap)), meta0.checks)
     val opName = if (mode == "append") "append" else "overwrite"
-    val stagedTuples = staged.map(_._2).toSet
+    val stagedTuples = staged.map(_.partVals.flatten).toSet
+    val partSchema = StructType(st.partCols.map(st.schema(_)))
     commitRetry(spark, root, Some(head0)) { stage =>
       val newEntries = promotePartEntries(fs, rp,
         stage(s"data/$opName-${java.util.UUID.randomUUID()}"), physParts,
-        statsCols, staged.map { case (f, t) => (f, facts(f), t) })
+        statsCols, staged)
       // the staged-⊆-filter contract, checked ONCE outside the retry
       if (mode == "filter" && stagedTuples.nonEmpty) {
         val ok = evalPartFilter(spark, filterSql.get, partSchema,
@@ -3854,46 +3698,58 @@ object TxTable {
             "widen the filter or fix the inserted data")
       }
       head =>
-        val entries0 = head.entries
-        require(!entries0.exists(_.isDelta),
-          s"txtable: partitioned SQL writes need a delta-free snapshot " +
-            s"of $root — run compactSnapshot first")
-        require(head.meta.keys.isEmpty,
-          s"txtable: partitioned SQL writes refuse keyed tables " +
-            s"($root declares key columns)")
-        def tupleOrRefuse(e: Entry): Option[Seq[Any]] =
-          dirTupleOf(e.dir, physParts).orElse {
-            // a zero-row entry (the empty-overwrite schema dir) can't
-            // violate partition semantics — keep it, never refuse on it
-            if (e.stats.get(rowsKey).exists(_._1 == 0L)) None
-            else throw new IllegalArgumentException(
-              s"txtable: partition-scoped write against $root found dir " +
-                s"'${e.dir}' whose layout does not prove partition " +
-                s"columns (${physParts.mkString(", ")}) — the table " +
-                "mixes unpartitioned data; rewrite it partitioned first")
+        if (applied(head.version)) None
+        else {
+          val entries0 = head.entries
+          epoch match {
+            case Some(e) =>
+              e.preCommit(head.version)
+              if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
+                s"txtable: $root is bucket-clustered; a partitioned " +
+                  "streaming append would break the layout")
+            case None =>
+              require(!entries0.exists(_.isDelta),
+                s"txtable: partitioned SQL writes need a delta-free " +
+                  s"snapshot of $root — run compactSnapshot first")
+              require(head.meta.keys.isEmpty,
+                s"txtable: partitioned SQL writes refuse keyed tables " +
+                  s"($root declares key columns)")
           }
-        val dropped: Seq[Entry] = mode match {
-          case "append" => Seq.empty
-          case "replace" => entries0
-          case "dynamic" =>
-            entries0.filter(e => tupleOrRefuse(e).exists(stagedTuples))
-          case "filter" =>
-            val prevTuples = entries0.flatMap(tupleOrRefuse)
-            val matching =
-              evalPartFilter(spark, filterSql.get, partSchema, prevTuples)
-            entries0.filter(e => tupleOrRefuse(e).exists(matching))
+          def tupleOrRefuse(e: Entry): Option[Seq[Any]] =
+            dirTupleOf(e.dir, physParts).orElse {
+              // a zero-row entry (the empty-overwrite schema dir) can't
+              // violate partition semantics — keep it, never refuse on it
+              if (e.stats.get(rowsKey).exists(_._1 == 0L)) None
+              else throw new IllegalArgumentException(
+                s"txtable: partition-scoped write against $root found dir " +
+                  s"'${e.dir}' whose layout does not prove partition " +
+                  s"columns (${physParts.mkString(", ")}) — the table " +
+                  "mixes unpartitioned data; rewrite it partitioned first")
+            }
+          val dropped: Seq[Entry] = mode match {
+            case "append" => Seq.empty
+            case "replace" => entries0
+            case "dynamic" =>
+              entries0.filter(e => tupleOrRefuse(e).exists(stagedTuples))
+            case "filter" =>
+              val prevTuples = entries0.flatMap(tupleOrRefuse)
+              val matching =
+                evalPartFilter(spark, filterSql.get, partSchema, prevTuples)
+              entries0.filter(e => tupleOrRefuse(e).exists(matching))
+          }
+          // a zero-entry snapshot is unreadable: an overwrite that empties
+          // the table keeps a readable zero-row dir carrying the schema
+          val blank =
+            if (newEntries.nonEmpty || dropped.size < entries0.size) Seq.empty
+            else Seq(statsEntry(spark, rp, writeEmptyDir(spark, rp,
+              stage(s"data/$opName-${java.util.UUID.randomUUID()}"),
+              parquetSchemaOf(st.fileSchema)), Seq.empty).line)
+          val meta = head.meta.copy(bucketBy = None,
+            colMap = extended(head.meta.colMap)).withStats(physParts ++ statsCols)
+          Some(Commit(opName, tag.fold(meta)(meta.tagged),
+            read = dropped.map(_.line -> Drop).toMap,
+            added = newEntries.map(_.line) ++ blank))
         }
-        // a zero-entry snapshot is unreadable: an overwrite that empties
-        // the table keeps a readable zero-row dir carrying the schema
-        val blank =
-          if (newEntries.nonEmpty || dropped.size < entries0.size) Seq.empty
-          else Seq(statsEntry(spark, rp, writeEmptyDir(spark, rp,
-            stage(s"data/$opName-${java.util.UUID.randomUUID()}"),
-            parquetSchemaOf(fileSchema)), Seq.empty).line)
-        Some(Commit(opName, head.meta.copy(bucketBy = None).withStats(
-          if (physParts.isEmpty) Seq.empty else physParts ++ statsCols),
-          read = dropped.map(_.line -> Drop).toMap,
-          added = newEntries.map(_.line) ++ blank))
     }
   }
 
@@ -4048,43 +3904,33 @@ object TxTable {
       Option(schemaCache.get(qual(d))).map(d -> _)).toMap
     val misses = dirs.filterNot(hits.contains)
     if (misses.isEmpty) return hits
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, misses.size))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: Seq[java.util.concurrent.Callable[
-        Option[(String, org.apache.parquet.schema.MessageType)]]] =
-        misses.map { d =>
-          () => {
-            val fs = rp.getFileSystem(conf)
-            def firstFile(p: Path): Option[Path] = {
-              val (ds, fsx) = fs.listStatus(p).partition(_.isDirectory)
-              fsx.map(_.getPath).find { f =>
-                val n = f.getName
-                n.endsWith(".parquet") && !n.startsWith("_") &&
-                  !n.startsWith(".")
-              }.orElse(ds.map(_.getPath)
-                // positional-delete sidecar dirs hold (_file, _pos)
-                // metadata, never the dir's data schema
-                .filterNot(_.getName.startsWith("_pdel-"))
-                .sortBy(_.getName)
-                .iterator.flatMap(firstFile(_).iterator).nextOption())
-            }
-            firstFile(new Path(rp, d)).map { f =>
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-              try d -> r.getFileMetaData.getSchema finally r.close()
-            }
-          }
-        }
-      val probed = pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toMap
-      // dirs WITHOUT a data file are deliberately not cached (absent
-      // from the map by contract); a soft cap bounds a long-lived
-      // driver touching unboundedly many tables
-      if (schemaCache.size >= 65536) schemaCache.clear()
-      probed.foreach { case (d, s) => schemaCache.put(qual(d), s) }
-      hits ++ probed
-    } finally pool.shutdown()
+    val probed = fanOut(misses) { d =>
+      val fs = rp.getFileSystem(conf)
+      def firstFile(p: Path): Option[Path] = {
+        val (ds, fsx) = fs.listStatus(p).partition(_.isDirectory)
+        fsx.map(_.getPath).find { f =>
+          val n = f.getName
+          n.endsWith(".parquet") && !n.startsWith("_") &&
+            !n.startsWith(".")
+        }.orElse(ds.map(_.getPath)
+          // positional-delete sidecar dirs hold (_file, _pos)
+          // metadata, never the dir's data schema
+          .filterNot(_.getName.startsWith("_pdel-"))
+          .sortBy(_.getName)
+          .iterator.flatMap(firstFile(_).iterator).nextOption())
+      }
+      firstFile(new Path(rp, d)).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        try d -> r.getFileMetaData.getSchema finally r.close()
+      }
+    }.flatten.toMap
+    // dirs WITHOUT a data file are deliberately not cached (absent
+    // from the map by contract); a soft cap bounds a long-lived
+    // driver touching unboundedly many tables
+    if (schemaCache.size >= 65536) schemaCache.clear()
+    probed.foreach { case (d, s) => schemaCache.put(qual(d), s) }
+    hits ++ probed
   }
 
   /** Spark read type for a bloom-indexable parquet field: integrals
@@ -4155,6 +4001,27 @@ object TxTable {
     }
   }
 
+  /** `f` over every item on a driver pool of at most 16 threads — the
+    * one fan-out of the per-dir and per-file metadata RPCs, whose
+    * serial loops would be 10^4 round trips at 10^4 dirs on an object
+    * store. None or one item runs inline, starting no thread. Results
+    * keep `items`' order; a failure rethrows its own exception. */
+  private def fanOut[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      import scala.jdk.CollectionConverters._
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, items.size))
+      try pool.invokeAll(items.map(a =>
+        (() => f(a)): java.util.concurrent.Callable[B]).asJava)
+        .asScala.toSeq.map { r =>
+          try r.get() catch {
+            case e: java.util.concurrent.ExecutionException => throw e.getCause
+          }
+        }
+      finally pool.shutdown()
+    }
+
   /** Data files of many dirs, listed on the bounded driver pool —
     * one listStatus per dir, overlapped 16 ways: the serial loop is
     * a 10k-round-trip tail at 10k dirs on an object store. Order
@@ -4163,40 +4030,30 @@ object TxTable {
   private def listDataFiles(spark: SparkSession, rp: Path,
     dirs: Seq[String], recursive: Boolean = false)
     : Map[String, Seq[String]] = {
-    if (dirs.isEmpty) return Map.empty
     val conf = spark.sessionState.newHadoopConf()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, dirs.size))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: Seq[java.util.concurrent.Callable[(String, Seq[String])]] =
-        dirs.distinct.map { d =>
-          () => {
-            val fs = rp.getFileSystem(conf)
-            val keep = (s: org.apache.hadoop.fs.FileStatus) => s.isFile &&
-              !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".")
-            val files =
-              if (recursive) {
-                // entry dirs may hold partition subdirs (zopt/_b=…,
-                // appendPartitioned leaves): one recursive listing.
-                // Positional-delete sidecar subtrees (_pdel-*) are
-                // metadata, never data — drop anything under one.
-                val it = fs.listFiles(new Path(rp, d), true)
-                val buf = scala.collection.mutable.ArrayBuffer[String]()
-                while (it.hasNext) {
-                  val s = it.next()
-                  if (keep(s) && !s.getPath.toString.contains("/_pdel-"))
-                    buf += s.getPath.toString
-                }
-                buf.toSeq
-              } else fs.listStatus(new Path(rp, d)).filter(keep)
-                .map(_.getPath.toString).toSeq
-            d -> files
+    fanOut(dirs.distinct) { d =>
+      val fs = rp.getFileSystem(conf)
+      val keep = (s: org.apache.hadoop.fs.FileStatus) => s.isFile &&
+        !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith(".")
+      val files =
+        if (recursive) {
+          // entry dirs may hold partition subdirs (zopt/_b=…,
+          // appendPartitioned leaves): one recursive listing.
+          // Positional-delete sidecar subtrees (_pdel-*) are
+          // metadata, never data — drop anything under one.
+          val it = fs.listFiles(new Path(rp, d), true)
+          val buf = scala.collection.mutable.ArrayBuffer[String]()
+          while (it.hasNext) {
+            val s = it.next()
+            if (keep(s) && !s.getPath.toString.contains("/_pdel-"))
+              buf += s.getPath.toString
           }
-        }
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-    } finally pool.shutdown()
+          buf.toSeq
+        } else fs.listStatus(new Path(rp, d)).filter(keep)
+          .map(_.getPath.toString).toSeq
+      d -> files
+    }.toMap
   }
 
   /** Per-entry on-disk bytes: the `_bytes` commit stat when present
@@ -4205,24 +4062,11 @@ object TxTable {
   private def entrySizes(spark: SparkSession, rp: Path,
     entries: Seq[Entry]): Seq[(Entry, Long)] = {
     val missing = entries.filterNot(_.stats.contains(bytesKey))
-    val listed: Map[String, Long] =
-      if (missing.isEmpty) Map.empty
-      else {
-        val conf = spark.sessionState.newHadoopConf()
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, missing.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[(String, Long)]] =
-            missing.map { e =>
-              () => {
-                val fs = rp.getFileSystem(conf)
-                e.dir -> fs.getContentSummary(new Path(rp, e.dir)).getLength
-              }
-            }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
+    val conf = spark.sessionState.newHadoopConf()
+    val listed = fanOut(missing) { e =>
+      e.dir -> rp.getFileSystem(conf).getContentSummary(new Path(rp, e.dir))
+        .getLength
+    }.toMap
     entries.map(e => e -> e.stats.get(bytesKey).map(_._1)
       .getOrElse(listed(e.dir)))
   }
@@ -5838,36 +5682,15 @@ object TxTable {
     } yield ((e.dir, c), java.util.Base64.getDecoder.decode(b64))
     val wantSpill = live.flatMap(e => cols.collect {
       case c if e.hstats.get(c).contains(hllSpillMarker) => (e.dir, c) })
-    val sidecars: Seq[((String, String), Array[Byte])] =
-      if (wantSpill.isEmpty) Seq.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, wantSpill.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: Seq[java.util.concurrent.Callable[
-            ((String, String), Option[Array[Byte]])]] =
-            wantSpill.map { case (d, c) =>
-              () => {
-                val p = hllSidecarPath(rp, d, c)
-                val bytes =
-                  try {
-                    val n = fs.getFileStatus(p).getLen.toInt
-                    val buf = new Array[Byte](n)
-                    val in = fs.open(p)
-                    try in.readFully(0, buf) finally in.close()
-                    Some(buf)
-                  } catch { case _: java.io.IOException => None }
-                ((d, c), bytes)
-              }
-            }
-          pool.invokeAll(tasks.asJava).asScala
-            .flatMap(f => f.get() match {
-              case (k, Some(b)) => Some(k -> b)
-              case _ => None
-            }).toSeq
-        } finally pool.shutdown()
-      }
+    val sidecars = fanOut(wantSpill) { case (d, c) =>
+      val p = hllSidecarPath(rp, d, c)
+      try {
+        val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+        val in = fs.open(p)
+        try in.readFully(0, buf) finally in.close()
+        Some((d, c) -> buf)
+      } catch { case _: java.io.IOException => None }
+    }.flatten
     (inline ++ sidecars).toMap
   }
 
@@ -7643,7 +7466,7 @@ object TxTable {
       if (entries.forall(_.stats.contains(rowsKey)))
         Some(entries.map(_.stats(rowsKey)._1).sum)
       else None
-    val bytesOpt = snapshotBytes(spark, root, r.version)
+    val bytesOpt = snapshotBytes(r)
     val op = commitLines(r.fs, r.rp, r.version)
       .find(_.startsWith("op:")).map(_.drop(3)).getOrElse("?")
     val parts = layoutPartCols(spark, root, r.version)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsRuntimeFiltering, V1Scan}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsTriggerAvailableNow, Offset => V2Offset}
-import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.FileRelation
 import org.apache.spark.sql.execution.streaming.Source
@@ -469,7 +469,8 @@ object TxTableSource {
     : org.apache.spark.sql.connector.read.Statistics = {
     import java.util.OptionalLong
     val size =
-      if (restricted) None else TxTable.snapshotBytes(spark, root, version)
+      if (restricted) None
+      else TxTable.snapshotBytes(TxTable.resolve(spark, root, version))
     val rows =
       if (restricted) None else TxTable.rowCount(spark, root, version)
     val colStats = new java.util.HashMap[NamedReference,
@@ -867,10 +868,10 @@ case class TxChangesRelation(spark: SparkSession, root: String,
 /** One `graft-tx` read: the snapshot its reader options pin, and ONE
   * filter list — the option ranges plus Catalyst's pushed filters —
   * from which [[TxTable]]'s dir triage prunes and which restricts the
-  * resolved rows. The version is re-resolved per scan (not pinned at
-  * relation construction), so a catalog table over a continuously-
-  * loaded root follows the table — Spark's own per-query plan gives
-  * each query snapshot isolation. */
+  * resolved rows. The head is resolved once per scan, size estimate
+  * or file report (not pinned at relation construction), so a catalog
+  * table over a continuously-loaded root follows the table — Spark's
+  * own per-query plan gives each query snapshot isolation. */
 case class TxRelation(spark: SparkSession, root: String,
   parameters: Map[String, String])
   extends BaseRelation with PrunedFilteredScan with FileRelation
@@ -884,6 +885,9 @@ case class TxRelation(spark: SparkSession, root: String,
 
   private def resolvedVersion: Int =
     pinnedRef.getOrElse(readerOptions.version(spark, root))
+
+  private def head(): TxTable.Head =
+    TxTable.resolve(spark, root, resolvedVersion)
 
   private[graft] def metaRoot: String = root
   /** The version `plans.TxStatsAggRewrite` answers metadata-only
@@ -908,14 +912,16 @@ case class TxRelation(spark: SparkSession, root: String,
     * back to listing the snapshot's file lengths when any entry
     * predates byte recording (still planning-time metadata, one
     * listStatus per dir). */
-  override def sizeInBytes: Long =
-    TxTable.snapshotBytes(spark, root, resolvedVersion).getOrElse {
+  override def sizeInBytes: Long = {
+    val h = head()
+    TxTable.snapshotBytes(h).getOrElse {
       val conf = spark.sessionState.newHadoopConf()
-      TxTable.dataFiles(spark, root, version = resolvedVersion).map { f =>
+      TxTable.filesWhere(spark, h, Seq.empty, None).map { f =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum
     }
+  }
 
   // The inner snapshot plan already produces InternalRows (Spark's
   // vectorized parquet scans + whole-stage codegen); declaring
@@ -927,31 +933,39 @@ case class TxRelation(spark: SparkSession, root: String,
   override def needConversion: Boolean = false
 
   override def buildScan(requiredColumns: Array[String],
-    filters: Array[Filter]): RDD[Row] = {
-    val df = TxTable.readWhere(spark, root, resolvedVersion,
-      optionRows ++ filters, readerOptions.keyRange)
-    // Un-pinned relations re-resolve the version per scan (a catalog
-    // table follows a continuously-loaded root), so a commit may have
-    // landed since load(). TxTable evolution only WIDENS by name, so
-    // the relation's declared columns stay valid — but an overwrite
-    // can drop them; fail with intent instead of a confusing
-    // downstream AnalysisException.
-    val missing = schema.fieldNames.filterNot(df.columns.contains)
+    filters: Array[Filter]): RDD[Row] =
+    TxRelation.scan(spark, root, head(), optionRows ++ filters,
+      readerOptions.keyRange, requiredColumns, schema.fieldNames)
+
+  override def inputFiles: Array[String] =
+    TxTable.filesWhere(spark, head(), optionRows, readerOptions.keyRange)
+}
+
+object TxRelation {
+  /** The rows of head `h` that pass `filters` (and `keyRange`),
+    * projected to `cols` — the plan's own InternalRows. */
+  private[sources] def scan(spark: SparkSession, root: String,
+    h: TxTable.Head, filters: Seq[Filter], keyRange: Option[(Long, Long)],
+    cols: Array[String], declared: Array[String]): RDD[Row] = {
+    val df = TxTable.readWhere(spark, h, filters, keyRange)
+    // Un-pinned reads resolve the head per scan (a catalog table
+    // follows a continuously-loaded root), so a commit may have landed
+    // since the `declared` columns were planned. TxTable evolution only
+    // WIDENS by name, so they stay valid — but an overwrite can drop
+    // them; fail with intent instead of a confusing downstream
+    // AnalysisException.
+    val missing = declared.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"graft-tx: column(s) ${missing.mkString(",")} vanished from $root " +
         "since this relation was created (overwrite with a narrower " +
         "schema?) - re-load or REFRESH TABLE")
-    // empty requiredColumns (SELECT count(*)) legitimately projects to
-    // zero-field rows — never ship full-width rows Spark will discard.
-    // toRdd (not .rdd): the plan's own UnsafeRows, zero conversion
-    // (see needConversion above)
-    df.select(requiredColumns.map(col).toIndexedSeq: _*)
+    // empty cols (SELECT count(*)) legitimately project to zero-field
+    // rows — never ship full-width rows Spark will discard. toRdd (not
+    // .rdd): the plan's own UnsafeRows, zero conversion (see
+    // TxRelation.needConversion)
+    df.select(cols.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
-
-  override def inputFiles: Array[String] =
-    TxTable.filesWhere(spark, root, resolvedVersion, optionRows,
-      readerOptions.keyRange)
 }
 
 /** Offset = commit version. Immutable commits make version ranges a
@@ -1461,8 +1475,13 @@ class TxCatalogScanBuilder(root: String, fullSchema: StructType,
         override val schema: StructType = required
         // the delegate relation's rows are already InternalRows
         override def needConversion: Boolean = false
-        override def buildScan(): RDD[Row] =
-          TxRelation(context.sparkSession, root, params).buildScan(cols, fs)
+        override def buildScan(): RDD[Row] = {
+          val spark = context.sparkSession
+          TxRelation.scan(spark, root,
+            TxTable.resolve(spark, root, readerOptions.version(spark, root)),
+            readerOptions.on(fullSchema.fieldNames).rows ++ fs,
+            readerOptions.keyRange, cols, cols)
+        }
       }.asInstanceOf[T]
     }
   }
@@ -2115,8 +2134,9 @@ class TxPartitionReader(part: TxInputPartition, schema: StructType,
   * (public `RequiresDistributionAndOrdering` — Spark shuffles/sorts
   * each micro-batch before the writers see a row), so every writer
   * task receives whole partition values in contiguous runs and stages
-  * ONE file per value. Commit promotes those files by rename with
-  * footer-derived stats ([[TxTable.appendPartitionedStaged]]) — the
+  * ONE file per value ([[TxStagedWriter]], under the snapshot's
+  * physical column names). Commit promotes those files by rename with
+  * the stats their writers saw ([[TxTable.promotePartitioned]]) — the
   * epoch's data is written exactly once, and the streamed table gets
   * the same provably-clustered layout as a batch appendPartitionedBy:
   * storage-partitioned joins, metadata-only GROUP BY and dir pruning
@@ -2128,20 +2148,7 @@ class TxWriteBuilder(root: String, info: LogicalWriteInfo)
     Option(info.options.get("partitionBy"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-  partCols.foreach { c =>
-    require(info.schema().fieldNames.contains(c),
-      s"graft-tx sink: partitionBy column '$c' is not in the stream " +
-        s"schema (${info.schema().fieldNames.mkString(", ")})")
-    require(info.schema()(c).dataType match {
-      case org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.DateType |
-        org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }, s"graft-tx sink: partitionBy column '$c' must be integral, " +
-      "date or string")
-  }
+  TxStagedWriter.requirePartitionable(info.schema(), partCols)
   require(partCols.isEmpty || Option(info.options.get("keys")).isEmpty,
     "graft-tx sink: partitionBy and keys are mutually exclusive " +
       "(keyed CDC merges fold by key, not layout)")
@@ -2169,28 +2176,13 @@ class TxWriteBuilder(root: String, info: LogicalWriteInfo)
   }
 }
 
-case class TxCommitMessage(path: String, rows: Long)
-  extends WriterCommitMessage
-
-/** One staged file of a partitioned writer task, with the partition
-  * tuple the WRITER OBSERVED while producing it — Longs for integral
-  * keys, Strings for string keys, None when any row's key was NULL.
-  * The writer saw every row, so these facts prove single-valuedness
-  * and null-freedom directly: the promote never has to trust parquet
-  * binary footer bounds (which may be truncated) for string keys. */
-case class TxStagedFile(path: String, partVals: Seq[Option[Any]])
-
-/** Commit message of one partitioned writer task: every staged file
-  * it produced (one per contiguous partition-value run). */
-case class TxPartCommitMessage(files: Seq[TxStagedFile], rows: Long)
-  extends WriterCommitMessage
-
 /** Exactly-once micro-batch loads, DSv2 shape: executors stage each
   * epoch's rows as parquet files under `_staging/<stream>/epoch-<id>`
-  * ([[TxParquetIO]] writers — no Spark plan in the executor), and the
+  * ([[TxStagedWriter]] — no Spark plan in the executor), and the
   * driver-side `commit` applies the staged batch through the
   * transactional write paths — `mergeDelta` (keyed CDC), `appendBatch`
-  * (plain), `overwrite` (Complete mode) — carrying the epoch id where
+  * (plain), `overwrite` (Complete mode), the rename promote
+  * (`partitionBy`) — carrying the epoch id where
   * replay protection applies. A replayed epoch re-stages its files and
   * the batch tag recognizes it at commit: at-least-once delivery
   * composes to exactly-once table state, same contract as the V1 sink
@@ -2319,14 +2311,22 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
   private def stagingDir(epochId: Long) =
     s"$root/_staging/$streamId/epoch-$epochId"
 
+  // a partitioned epoch's staging (physical names), fixed when the
+  // epoch's writer factory is created and promoted at its commit
+  @volatile private var staging: TxTable.Staging = _
+
   override def createStreamingWriterFactory(
     pinfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
     defaultLineageGuard
+    val spark = SparkSession.active
     val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    if (partCols.nonEmpty)
-      TxPartitionedWriterFactory(root, streamId, schema, partCols, conf)
-    else TxStreamingWriterFactory(root, streamId, schema, conf)
+      spark.sessionState.newHadoopConf())
+    val dir = s"$root/_staging/$streamId"
+    if (partCols.isEmpty) TxStagedWriterFactory(dir, schema, Seq.empty, conf)
+    else {
+      staging = TxTable.staging(spark, root, schema, partCols)
+      TxStagedWriterFactory(dir, staging.fileSchema, staging.physParts, conf)
+    }
   }
 
   override def commit(epochId: Long,
@@ -2343,27 +2343,13 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
     val ownershipCheck: Int => Unit = _ => verifyDefaultOwnership()
     val spark = SparkSession.active
     if (partCols.nonEmpty) {
-      val staged = messages.collect {
-        case TxPartCommitMessage(fl, n) if n > 0 => fl
-      }.flatten
-      // writer-observed partition tuples: the purity proof for the
-      // rename promote — files whose every key was non-NULL carry
-      // their exact tuple; any None leaves the file out of the map
-      // and the promote falls back to the loud-on-NULL rewrite
-      val provided = staged.collect {
-        case TxStagedFile(p, vs) if vs.forall(_.isDefined) =>
-          p -> vs.map(_.get)
-      }.toMap
-      TxTable.appendPartitionedStaged(spark, root,
-        staged.map(_.path).toIndexedSeq, partCols, epochId, statsCols,
-        streamId = streamId, preCommit = ownershipCheck,
-        providedParts = provided)
+      TxTable.promotePartitioned(spark, root, staging,
+        TxStagedMessage.files(messages), statsCols,
+        epoch = Some(TxTable.Epoch(streamId, epochId, ownershipCheck)))
       cleanup(epochId)
       return
     }
-    val files = messages.collect {
-      case TxCommitMessage(p, n) if p != null && n > 0 => p
-    }
+    val files = TxStagedMessage.files(messages).map(_.path)
     val batch =
       if (files.isEmpty)
         spark.createDataFrame(
@@ -2405,29 +2391,119 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
   }
 }
 
-case class TxStreamingWriterFactory(root: String, streamId: String,
-  schema: StructType, conf: SerializableConfiguration)
-  extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-    epochId: Long): DataWriter[InternalRow] =
-    new TxDataWriter(new org.apache.hadoop.fs.Path(
-      s"$root/_staging/$streamId/epoch-$epochId/" +
-        s"part-$partitionId-$taskId.parquet"), schema, conf)
+/** One staged parquet file and what its writer saw while writing it:
+  * the row count, the byte length after close, the partition tuple
+  * (Longs for integral and date keys, Strings for string keys, None
+  * for NULL), and for every flat column its null count and — for the
+  * columns parquet stores as INT32 or INT64 that hold a non-null
+  * value — its (min, max) in the encoding the footer records (day
+  * counts, unscaled decimals, timestamp micros). The writer saw every
+  * row, so these facts prove a file's tuple directly: the promote
+  * never trusts footer bounds, which may be truncated for strings. */
+case class TxStagedFile(path: String, rows: Long, bytes: Long,
+  partVals: Seq[Option[Any]], nulls: Map[String, Long],
+  bounds: Map[String, (Long, Long)])
+
+/** Commit message of one writer task: every file it staged. */
+case class TxStagedMessage(files: Seq[TxStagedFile])
+  extends WriterCommitMessage
+
+object TxStagedMessage {
+  /** Every file the committed tasks staged. */
+  def files(messages: Array[WriterCommitMessage]): Seq[TxStagedFile] =
+    messages.toSeq.collect { case TxStagedMessage(fs) => fs }.flatten
 }
 
-/** Stages one task's rows to one parquet file; file creation is lazy
-  * so empty partitions stage nothing. Task retries write distinct
-  * file names (taskId) and only committed tasks' messages reach the
-  * driver, so a zombie task can't corrupt an epoch. */
-class TxDataWriter(path: org.apache.hadoop.fs.Path, schema: StructType,
-  conf: SerializableConfiguration) extends DataWriter[InternalRow] {
+/** The one writer factory of the DSv2 write faces: batch tasks stage
+  * under `dir`, streaming tasks under `dir/epoch-<id>`. */
+case class TxStagedWriterFactory(dir: String, schema: StructType,
+  partCols: Seq[String], conf: SerializableConfiguration)
+  extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int,
+    taskId: Long): DataWriter[InternalRow] =
+    new TxStagedWriter(s"$dir/part-$partitionId-$taskId", schema,
+      partCols, conf)
+  override def createWriter(partitionId: Int, taskId: Long,
+    epochId: Long): DataWriter[InternalRow] =
+    new TxStagedWriter(s"$dir/epoch-$epochId/part-$partitionId-$taskId",
+      schema, partCols, conf)
+}
+
+/** Stages one task's rows as ONE parquet file per contiguous run of
+  * one `partCols` tuple — `<prefix>.parquet` when there are no
+  * partition columns (the file never rolls), `<prefix>-<n>.parquet`
+  * otherwise — and reports each file's [[TxStagedFile]] facts. A
+  * partitioned Write requires its input clustered and sorted on the
+  * partition columns, so a run IS a tuple and the task stages exactly
+  * one file per tuple it owns; rolling on change keeps ONE open
+  * parquet writer per task (an open-writer map would buffer a row
+  * group PER VALUE — the memory shape hive-style dynamic partition
+  * writes sort specifically to avoid). Rows handed over unsorted only
+  * make more, smaller files, each still single-valued. File creation
+  * is lazy, so empty tasks stage nothing; task retries write distinct
+  * names (taskId) and only committed tasks' messages reach the
+  * driver, so a zombie task cannot corrupt a commit. */
+class TxStagedWriter(prefix: String, schema: StructType,
+  partCols: Seq[String], conf: SerializableConfiguration)
+  extends DataWriter[InternalRow] {
+  import org.apache.spark.sql.types._
+  private val partIdx = partCols.map(schema.fieldIndex)
+  private val n = schema.length
+  private val flat = schema.fields.map(!_.dataType.isInstanceOf[ArrayType])
+  // a column's value as parquet's INT32/INT64 footer statistics order it
+  private val integral: Array[(InternalRow, Int) => Long] =
+    schema.fields.map(_.dataType match {
+      case ByteType => (r: InternalRow, i: Int) => r.getByte(i).toLong
+      case ShortType => (r: InternalRow, i: Int) => r.getShort(i).toLong
+      case IntegerType | DateType =>
+        (r: InternalRow, i: Int) => r.getInt(i).toLong
+      case LongType | TimestampType | TimestampNTZType =>
+        (r: InternalRow, i: Int) => r.getLong(i)
+      case d: DecimalType if d.precision <= 18 => (r: InternalRow, i: Int) =>
+        r.getDecimal(i, d.precision, d.scale).toUnscaledLong
+      case _ => null
+    })
   private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var n = 0L
+  private var path: org.apache.hadoop.fs.Path = _
+  private var tuple: Seq[Option[Any]] = _
+  private var files = List.empty[TxStagedFile]
+  private var rows = 0L
+  private val nulls = new Array[Long](n)
+  private val lo = new Array[Long](n)
+  private val hi = new Array[Long](n)
+  private val valued = new Array[Boolean](n)
+
+  private def tupleOf(row: InternalRow): Seq[Option[Any]] =
+    partIdx.map { i =>
+      if (row.isNullAt(i)) None
+      // copy strings out of the unsafe row buffer — the value outlives it
+      else if (integral(i) == null) Some(row.getUTF8String(i).toString)
+      else Some(integral(i)(row, i))
+    }
 
   override def write(row: InternalRow): Unit = {
-    if (writer == null) writer = TxParquetIO.writer(path, schema, conf.value)
+    val t = tupleOf(row)
+    if (writer == null || t != tuple) {
+      finish()
+      path = new org.apache.hadoop.fs.Path(
+        if (partCols.isEmpty) s"$prefix.parquet"
+        else s"$prefix-${files.size}.parquet")
+      writer = TxParquetIO.writer(path, schema, conf.value)
+      tuple = t
+    }
     writer.write(row)
-    n += 1
+    rows += 1
+    var i = 0
+    while (i < n) {
+      if (row.isNullAt(i)) nulls(i) += 1
+      else if (integral(i) != null) {
+        val x = integral(i)(row, i)
+        if (!valued(i)) { lo(i) = x; hi(i) = x; valued(i) = true }
+        else if (x < lo(i)) lo(i) = x
+        else if (x > hi(i)) hi(i) = x
+      }
+      i += 1
+    }
   }
 
   // metadata-aware writes (the row-level DML path): graft stages only
@@ -2436,99 +2512,54 @@ class TxDataWriter(path: org.apache.hadoop.fs.Path, schema: StructType,
   override def write(metadata: InternalRow, row: InternalRow): Unit =
     write(row)
 
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    TxCommitMessage(if (n > 0) path.toString else null, n)
+  /** Close the open file and record its facts. */
+  private def finish(): Unit = if (writer != null) {
+    writer.close()
+    writer = null
+    val cols = (0 until n).filter(flat)
+    files ::= TxStagedFile(path.toString, rows,
+      path.getFileSystem(conf.value).getFileStatus(path).getLen, tuple,
+      cols.map(i => schema(i).name -> nulls(i)).toMap,
+      cols.filter(valued).map(i => schema(i).name -> (lo(i), hi(i))).toMap)
+    rows = 0L
+    java.util.Arrays.fill(nulls, 0L)
+    java.util.Arrays.fill(valued, false)
   }
+
+  /** Every file this task staged, the open one closed. */
+  def staged(): Seq[TxStagedFile] = { finish(); files.reverse }
+
+  override def commit(): WriterCommitMessage = TxStagedMessage(staged())
 
   override def abort(): Unit = {
     if (writer != null) writer.close()
-    path.getFileSystem(conf.value).delete(path, false)
-    ()
+    val fs = new org.apache.hadoop.fs.Path(prefix).getFileSystem(conf.value)
+    (Option(path).map(_.toString).toSeq ++ files.map(_.path)).distinct
+      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false))
   }
 
   override def close(): Unit = ()
 }
 
-case class TxPartitionedWriterFactory(root: String, streamId: String,
-  schema: StructType, partCols: Seq[String],
-  conf: SerializableConfiguration) extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-    epochId: Long): DataWriter[InternalRow] =
-    new TxPartitionedDataWriter(
-      s"$root/_staging/$streamId/epoch-$epochId/part-$partitionId-$taskId",
-      schema, partCols, conf)
-}
-
-/** Stages one task's rows as ONE parquet file per contiguous
-  * partition-value run. The Write's required ordering sorts each task
-  * by the partition columns, so a run IS a value and the task stages
-  * exactly one file per value it owns — rolling on change keeps ONE
-  * open parquet writer per task (an open-writer map would buffer a
-  * row group PER VALUE — the memory shape hive-style dynamic
-  * partition writes sort specifically to avoid). If the engine ever
-  * hands rows unsorted, rolling still only ever starts a NEW file —
-  * each file stays single-valued (more, smaller files; never a wrong
-  * layout). NULL partition values stage like any run and fail the
-  * promote-time purity proof, so they surface as the partitioned
-  * append's loud NULL rejection instead of lost rows. */
-class TxPartitionedDataWriter(pathPrefix: String, schema: StructType,
-  partCols: Seq[String], conf: SerializableConfiguration)
-  extends DataWriter[InternalRow] {
-  private val partIdx: Seq[(Int, org.apache.spark.sql.types.DataType)] =
-    partCols.map(c => schema.fieldIndex(c) -> schema(c).dataType)
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var cur: Seq[Option[Any]] = null
-  private var seq = 0
-  private var rows = 0L
-  private var files = List.empty[TxStagedFile]
-
-  private def valueOf(row: InternalRow): Seq[Option[Any]] =
-    partIdx.map { case (i, dt) =>
-      if (row.isNullAt(i)) None
-      else Some(dt match {
-        case org.apache.spark.sql.types.LongType => row.getLong(i): Any
-        case org.apache.spark.sql.types.IntegerType =>
-          row.getInt(i).toLong: Any
-        // DateType's InternalRow encoding is the int day count — the
-        // same Long the dir stats and slice tuples speak
-        case org.apache.spark.sql.types.DateType =>
-          row.getInt(i).toLong: Any
-        case org.apache.spark.sql.types.StringType =>
-          // copy out of the unsafe row buffer — the value outlives it
-          row.getUTF8String(i).toString: Any
-        case _ => row.getShort(i).toLong: Any
-      })
+object TxStagedWriter {
+  /** The partition columns a staged write can promote by rename: each
+    * in `schema`, and integral, date or string — the types whose
+    * values a dir name and an exact stat record. */
+  def requirePartitionable(schema: StructType, partCols: Seq[String]): Unit =
+    partCols.foreach { c =>
+      require(schema.fieldNames.contains(c),
+        s"graft-tx: partition column '$c' is not in the write schema " +
+          s"(${schema.fieldNames.mkString(", ")})")
+      require(schema(c).dataType match {
+        case org.apache.spark.sql.types.LongType |
+          org.apache.spark.sql.types.IntegerType |
+          org.apache.spark.sql.types.ShortType |
+          org.apache.spark.sql.types.DateType |
+          org.apache.spark.sql.types.StringType => true
+        case _ => false
+      }, s"graft-tx: partition column '$c' must be integral, date or " +
+        s"string, got ${schema(c).dataType}")
     }
-
-  override def write(row: InternalRow): Unit = {
-    val v = valueOf(row)
-    if (writer == null || v != cur) {
-      if (writer != null) writer.close()
-      val p = new org.apache.hadoop.fs.Path(s"$pathPrefix-$seq.parquet")
-      seq += 1
-      files ::= TxStagedFile(p.toString, v)
-      writer = TxParquetIO.writer(p, schema, conf.value)
-      cur = v
-    }
-    writer.write(row)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    TxPartCommitMessage(files.reverse, rows)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) writer.close()
-    files.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f.path)
-      p.getFileSystem(conf.value).delete(p, false)
-    }
-  }
-
-  override def close(): Unit = ()
 }
 
 object TxStreamSource {

@@ -48,9 +48,11 @@ object CommitGates {
 
   /** The commit faces no gate above reaches — `overwrite`, `merge`,
     * `compactDirs`, `compactSnapshot`, `restore`, `cloneAt`, a
-    * replacing `appendBucketedBy`, `dropCheckConstraint`, `dropColumn`
-    * and the tagged appends — on small generated tables, one root per
-    * face group under `<scratchDir>/faces`. */
+    * replacing `appendBucketedBy`, `dropCheckConstraint`, `dropColumn`,
+    * the tagged appends, a streamed partitioned epoch into a
+    * renamed-column table, and SQL `INSERT` plus a dynamic `INSERT
+    * OVERWRITE` on a string-`PARTITIONED BY` table — on small generated
+    * tables, one root per face group under `<scratchDir>/faces`. */
   private def faces(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     val base = spark.conf.get("spark.graft.scratchDir")
@@ -98,6 +100,37 @@ object CommitGates {
     TxTable.addColumn(spark, t("ddl"), "extra",
       org.apache.spark.sql.types.LongType)
     TxTable.dropColumn(spark, t("ddl"), "v")
+
+    // a streamed partitioned epoch into a column-mapped table: the
+    // stream speaks the renamed logical names
+    TxTable.appendPartitionedBy(slice(0, 100), t("streamed"), Seq("p"),
+      statsCols = Seq("k"))
+    TxTable.renameColumn(spark, t("streamed"), "v", "val")
+    slice(100, 160).withColumnRenamed("v", "val").coalesce(1)
+      .write.parquet(t("streamed-src"))
+    spark.readStream.schema(slice(0, 0).withColumnRenamed("v", "val").schema)
+      .parquet(t("streamed-src"))
+      .writeStream.format("graft-tx").option("path", t("streamed"))
+      .option("partitionBy", "p").option("statsCols", "k")
+      .option("checkpointLocation", t("streamed-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+
+    // SQL INSERT, then a dynamic INSERT OVERWRITE, on a STRING key
+    slice(0, 200).select(col("k"), col("p").cast("string").as("p"),
+      col("v")).createOrReplaceTempView("faces_src")
+    spark.sql("CREATE TABLE faces_part (k BIGINT, p STRING, v DOUBLE) " +
+      s"USING `graft-tx` PARTITIONED BY (p) OPTIONS (path '${t("sqlPart")}')")
+    try {
+      spark.sql("INSERT INTO faces_part SELECT k, p, v FROM faces_src")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      spark.sql("INSERT OVERWRITE faces_part " +
+        "SELECT k, p, v + 1 FROM faces_src WHERE p IN ('2', '3')")
+    } finally {
+      spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      spark.sql("DROP TABLE faces_part")
+      spark.catalog.dropTempView("faces_src")
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -83,9 +83,9 @@ class MetaRpcSpec extends SparkSpec {
     spark.read.format("graft-tx").load(root).count()
     val n = rpcsOf { spark.read.format("graft-tx").load(root).count() }
     info(s"format-face read: $n metadata RPCs")
-    // the DSv2 lifecycle legitimately resolves more than once (infer
-    // schema, build scan, report files) — budget a small multiple of
-    // the single-read cost, not the unbounded pre-r16 chain.
-    assert(n <= 30, s"format-face read cost $n commit-metadata RPCs")
+    // three head resolutions: the change-feed schema the reader infers
+    // through the DSv2 provider first, the relation's schema, and the
+    // metadata-only count — not the unbounded pre-r16 chain
+    assert(n <= 23, s"format-face read cost $n commit-metadata RPCs")
   }
 }

@@ -54,4 +54,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
     jobs.get
   }
+
+  /** Stage `rows` through the DSv2 write faces' one writer as a single
+    * task would: files `<prefix>[-<n>].parquet`, one per run of one
+    * `partCols` tuple, with the facts the writer saw. */
+  def stageRows(prefix: String,
+    schema: org.apache.spark.sql.types.StructType, partCols: Seq[String],
+    rows: Seq[org.apache.spark.sql.Row]): Seq[graft.sources.TxStagedFile] = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val w = new graft.sources.TxStagedWriter(prefix, schema, partCols,
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf()))
+    rows.foreach(r =>
+      w.write(toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    w.staged()
+  }
 }

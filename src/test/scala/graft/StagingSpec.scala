@@ -118,19 +118,18 @@ class StagingSpec extends SparkSpec {
 
   test("a partitioned staged promote whose pre-commit check throws " +
     "leaves no promoted dir") {
+    import org.apache.spark.sql.Row
     val root = tmpDir() + "/precommit-promote"
     TxTable.appendPartitionedBy(Seq((1L, 1L)).toDF("day", "k"), root,
       Seq("day"))
-    val files = Seq(1L, 2L).map { day =>
-      val dir = tmpDir() + s"/stage-$day"
-      Seq((day, 10L * day)).toDF("day", "k").coalesce(1).write.parquet(dir)
-      new java.io.File(dir).listFiles().map(_.getAbsolutePath)
-        .find(_.endsWith(".parquet")).get
-    }
+    val schema = TxTable.read(spark, root).schema
+    val staged = stageRows(root + "/_staging/s/epoch-0/part-0-0", schema,
+      Seq("day"), Seq(Row(1L, 10L), Row(2L, 20L)))
     intercept[IllegalArgumentException] {
-      TxTable.appendPartitionedStaged(spark, root, files, Seq("day"),
-        batchId = 0L,
-        preCommit = _ => throw new IllegalArgumentException("refused"))
+      TxTable.promotePartitioned(spark, root,
+        TxTable.staging(spark, root, schema, Seq("day")), staged, Seq.empty,
+        epoch = Some(TxTable.Epoch("s", 0L,
+          _ => throw new IllegalArgumentException("refused"))))
     }
     assertClean(root, 1)
   }

@@ -662,8 +662,10 @@ class TxSourceSpec extends SparkSpec {
     val sid = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(ckpt).toLong & 0xffffffffL)
     val before = TxTable.latestVersion(spark, root)
-    TxTable.appendPartitionedStaged(spark, root, Seq.empty, Seq("day"),
-      batchId = 0L, streamId = sid)
+    val schema = TxTable.read(spark, root).schema
+    TxTable.promotePartitioned(spark, root,
+      TxTable.staging(spark, root, schema, Seq("day")), Seq.empty, Seq("k"),
+      epoch = Some(TxTable.Epoch(sid, 0L, _ => ())))
     assert(TxTable.latestVersion(spark, root) === before)
   }
 
@@ -731,66 +733,158 @@ class TxSourceSpec extends SparkSpec {
   }
 
   test("partitioned promote runs ZERO Spark jobs on the fast path") {
-    import spark.implicits._
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val root = tmpDir() + "/txsink-partzero"
-    val staging = new org.apache.hadoop.fs.Path(root + "/_staging/z/epoch-0")
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = staging.getFileSystem(conf)
-    fs.mkdirs(staging)
     val schema = StructType(Seq(StructField("day", LongType),
       StructField("k", LongType)))
-    // stage two partition-pure files (what the clustered writers
-    // produce) BEFORE attaching the job counter — only the promote
-    // itself must be job-free
-    Seq((1L, Seq(10L, 11L)), (2L, Seq(20L))).zipWithIndex.foreach {
-      case ((day, ks), i) =>
-        val tmp = tmpDir() + s"/stage-$i"
-        ks.map(k => (day, k)).toDF("day", "k").coalesce(1)
-          .write.parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.rename(part,
-          new org.apache.hadoop.fs.Path(staging, s"part-0-$i-0.parquet"))
-    }
-    val files = fs.listStatus(staging).map(_.getPath.toString).toSeq
-    assert(schema.fieldNames.toSeq === Seq("day", "k"))
+    // stage two partition-pure files through the writer BEFORE
+    // attaching the job counter — only the promote itself must be
+    // job-free
+    val staged = stageRows(root + "/_staging/z/epoch-0/part-0-0", schema,
+      Seq("day"), Seq(Row(1L, 10L), Row(1L, 11L), Row(2L, 20L)))
+    assert(staged.map(_.partVals) === Seq(Seq(Some(1L)), Seq(Some(2L))))
+    val st = TxTable.staging(spark, root, schema, Seq("day"))
     val jobs = jobsDuring {
-      TxTable.appendPartitionedStaged(spark, root, files, Seq("day"),
-        batchId = 0L, statsCols = Seq("k"))
+      TxTable.promotePartitioned(spark, root, st, staged, Seq("k"),
+        epoch = Some(TxTable.Epoch("z", 0L, _ => ())))
     }
     assert(jobs === 0,
       s"the rename-promote must be driver-side metadata only, " +
         s"ran $jobs jobs")
-    // and the footer-derived stats are the real write-side grammar:
-    // metadata GROUP BY serves per-day counts with zero data I/O
+    // and the writer-seen stats are the real write-side grammar:
+    // metadata GROUP BY serves per-day counts with zero data I/O, and
+    // a k-range read prunes dirs
     assert(TxTable.read(spark, root).count() === 3L)
     val spj = spark.read.format("graft-tx")
       .option("partitionCol", "day").load(root)
     assert(spj.groupBy("day").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((1L, 2L), (2L, 1L)))
+    assert(TxTable.read(spark, root, colRanges = Map("k" -> (15L, 99L)))
+      .inputFiles.length === 1)
   }
 
-  test("partitioned promote falls back to the rewrite on impure files") {
+  test("partitionBy sink: a renamed-column table promotes by rename") {
+    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = tmpDir() + "/txsink-partmixed"
-    val staged = tmpDir() + "/txsink-partmixed-staged"
-    // ONE file holding two partition values — the purity proof must
-    // fail and the rewrite path must land the same proven layout
-    Seq((1L, 10L), (2L, 20L)).toDF("day", "k")
-      .coalesce(1).write.parquet(staged)
-    val files = new java.io.File(staged).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-    TxTable.appendPartitionedStaged(spark, root, files, Seq("day"),
-      batchId = 0L)
+    val root = tmpDir() + "/txsink-partmapped"
+    TxTable.appendPartitionedBy(Seq((1L, 10L, 1.0)).toDF("day", "k", "v"),
+      root, Seq("day"), statsCols = Seq("k"))
+    // both the partition column and a data column are renamed: the
+    // epoch stages under the PHYSICAL names (day, v) and promotes
+    TxTable.renameColumn(spark, root, "day", "dt")
+    TxTable.renameColumn(spark, root, "v", "value")
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long, Double)]
+    val q = input.toDF().toDF("dt", "k", "value")
+      .writeStream.format("graft-tx").option("path", root)
+      .option("partitionBy", "dt").option("statsCols", "k")
+      .option("checkpointLocation", tmpDir() + "/txsink-partmapped-ckpt")
+      .outputMode("append").start()
+    try {
+      input.addData((1L, 11L, 1.1), (2L, 20L, 2.0))
+      q.processAllAvailable()
+    } finally q.stop()
     assert(TxTable.read(spark, root).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((1L, 10L), (2L, 20L)))
-    // still one single-valued dir per value (the SPJ proof holds)
-    val spj = spark.read.format("graft-tx")
-      .option("partitionCol", "day").load(root)
-    assert(spj.count() === 2L)
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ===
+      Set((1L, 10L, 1.0), (1L, 11L, 1.1), (2L, 20L, 2.0)))
+    // the epoch's files keep their staged names under physical dirs
+    val epochFiles = face(root).inputFiles.map(new org.apache.hadoop.fs.Path(_))
+      .filter(_.getName.matches("part-\\d+-\\d+-\\d+\\.parquet"))
+    assert(epochFiles.length === 2 &&
+      epochFiles.forall(_.getParent.getName.startsWith("day=")),
+      s"the epoch must promote its staged files, got " +
+        face(root).inputFiles.mkString(", "))
+    // the layout still proves its clustering on the logical name
+    assert(spark.read.format("graft-tx").option("partitionCol", "dt")
+      .load(root).groupBy("dt").count().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L), (2L, 1L)))
+  }
+
+  test("partitionBy sink: a string value over the stat cap is refused") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val root = tmpDir() + "/txsink-partcap"
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, Long)]
+    val q = input.toDF().toDF("day", "k")
+      .writeStream.format("graft-tx").option("path", root)
+      .option("partitionBy", "day")
+      .option("checkpointLocation", tmpDir() + "/txsink-partcap-ckpt")
+      .outputMode("append").start()
+    input.addData(("x" * 49, 1L))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + " | " + messages(t.getCause)
+    assert(messages(e).contains("partition value exceeds 48 UTF-8 bytes"),
+      messages(e))
+    assert(!TxTable.exists(spark, root) ||
+      TxTable.latestVersion(spark, root) === 0)
+  }
+
+  test("the staged writer's facts equal the file's footer facts") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("b", BooleanType), StructField("y", ByteType),
+      StructField("s", ShortType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("str", StringType),
+      StructField("bin", BinaryType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("dec", DecimalType(10, 2)),
+      StructField("wide", DecimalType(30, 5)),
+      StructField("arr", ArrayType(LongType)),
+      StructField("none", LongType)))
+    def row(n: Int): Row = Row(n % 2 == 0, (n - 3).toByte, (n * 100).toShort,
+      n * -7, n.toLong << 40, n * 0.5f, n * -1.25, s"s$n",
+      Array[Byte](n.toByte), java.sql.Date.valueOf(s"2026-0${n + 1}-15"),
+      new java.sql.Timestamp(n * 86400000L - 5),
+      java.time.LocalDateTime.of(2020, 1, n + 1, 0, 0),
+      BigDecimal(n * 1.25 - 3), BigDecimal(n).pow(3), Seq(n.toLong, -n.toLong),
+      null)
+    val nullRow = Row.fromSeq(Seq.fill(schema.length)(null))
+    val rows = (1 to 5).map(row) :+ nullRow :+ row(0)
+    val Seq(f) = stageRows(tmpDir() + "/facts/part-0-0", schema, Seq.empty,
+      rows)
+    val p = new org.apache.hadoop.fs.Path(f.path)
+    val conf = spark.sessionState.newHadoopConf()
+    assert(f.bytes === p.getFileSystem(conf).getFileStatus(p).getLen)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    val blocks = try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+    assert(f.rows === blocks.map(_.getRowCount).sum)
+    assert(f.rows === 7L && f.partVals === Seq.empty)
+    // the footer's facts, folded over row groups: a null count per
+    // top-level column, (min, max) per INT32/INT64 column with values
+    val chunks = blocks.flatMap(_.getColumns.asScala)
+      .filter(_.getPath.size == 1).groupBy(_.getPath.toDotString)
+    val nulls = chunks.map { case (c, cs) =>
+      c -> cs.map(_.getStatistics.getNumNulls).sum }
+    val bounds = chunks.flatMap { case (c, cs) =>
+      val sts = cs.map(_.getStatistics).filter(_.hasNonNullValue)
+      sts.headOption.collect {
+        case _: org.apache.parquet.column.statistics.IntStatistics =>
+          val is = sts.map(_.asInstanceOf[
+            org.apache.parquet.column.statistics.IntStatistics])
+          c -> (is.map(_.getMin.toLong).min, is.map(_.getMax.toLong).max)
+        case _: org.apache.parquet.column.statistics.LongStatistics =>
+          val ls = sts.map(_.asInstanceOf[
+            org.apache.parquet.column.statistics.LongStatistics])
+          c -> (ls.map(_.getMin).min, ls.map(_.getMax).max)
+      }
+    }
+    assert(f.nulls === nulls)
+    assert(f.bounds === bounds)
+    // every INT32/INT64 column with values has bounds; "none" has none
+    assert(f.bounds.keySet === Set("y", "s", "i", "l", "dt", "ts", "ntz",
+      "dec"))
+    assert(f.nulls("none") === 7L && f.nulls("l") === 1L)
   }
 
   test("maxVersionsPerTrigger drains a backlog in capped micro-batches") {
