@@ -783,9 +783,11 @@ object Dedup {
     * retry). At 100 TB this is the band-index discipline: the
     * expensive corpus-scale derivation is a persisted artifact, and
     * the iterative algorithms run against the artifact. Content is
-    * deterministic, so memoization cannot change results. */
-  private val scratchCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * deterministic, so memoization cannot change results. The cache
+    * keeps the schema each artifact was written with, so a read starts
+    * no footer-reading schema-inference job. */
+  private val scratchCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
   private[graft] def scratchRelation(spark: SparkSession, key: String,
     dir: String)(build: => DataFrame): DataFrame = {
     // cluster-portable: artifacts live on the input's shared
@@ -806,7 +808,7 @@ object Dedup {
     // computeIfAbsent throws "Recursive update". A racing duplicate
     // build is benign — content is deterministic and the write is an
     // overwrite.
-    val path = Option(scratchCache.get(cacheKey)).getOrElse {
+    val (path, schema) = Option(scratchCache.get(cacheKey)).getOrElse {
       val p = new org.apache.hadoop.fs.Path(basep, id)
       val fs = Scratch.fileSystem(spark, p)
       // sweep superseded versions of the same artifact so a session
@@ -819,13 +821,15 @@ object Dedup {
           }
           .foreach(s => fs.delete(s.getPath, true))
       val t0 = System.nanoTime()
-      build.write.mode("overwrite").parquet(p.toString)
+      val built = build
+      built.write.mode("overwrite").parquet(p.toString)
       Scratch.buildNanos.addAndGet(System.nanoTime() - t0)
       Scratch.registerCleanup(spark, p)
-      scratchCache.putIfAbsent(cacheKey, p.toString)
-      p.toString
+      scratchCache.putIfAbsent(cacheKey, (p.toString, built.schema))
+      (p.toString, built.schema)
     }
-    spark.read.parquet(path)
+    // the file source marks a user schema nullable, as inference does
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Shared source ↔ span-fingerprint edge base for the graph family
@@ -864,34 +868,41 @@ object Dedup {
       Tables.documents(spark, dir).select(col("source").as("v")).distinct()
     }
 
-  def sourceRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
+  /** `iters` unrolled rounds of q40 fixed-point PageRank (mass 2^40,
+    * damping 85/100, integer arithmetic both engines compute bitwise
+    * equal) over weighted edges `(u, v, w, s = u's strength)` and nodes
+    * `(v)`: (v, pr). A round is one broadcast join and ONE aggregate:
+    * every node adds a zero row (taken from `nodes`, since naming the
+    * previous `pr` twice doubles the plan every round), so no join with
+    * `nodes` is needed. Shared by [[sourceRank]] and TextOps.textrank. */
+  private[operators] def pageRankQ40(edges: DataFrame, nodes: DataFrame,
+    iters: Int): DataFrame = {
     val S = 1099511627776L // 2^40
-    // the projected weighted edge list (+ per-node strength) is a
-    // persisted artifact: the fingerprint self-join builds it once per
-    // input, and the iterations (and retries) run against the artifact
-    val ews = srcEdges(spark, dir).persist()
-    val nodes = srcNodes(spark, dir).persist()
     val n = nodes.count() // 1-row readback; node-scale, not corpus-scale
     val base = 15L * S / (100L * n)
+    val zeros = nodes.select(col("v"), lit(0L).as("c"))
+    // null ends never join; filtering them here (not by inference in
+    // all rounds but the last) lets AQE reuse ONE broadcast of the edges
+    val es = broadcast(edges.filter(col("u").isNotNull && col("v").isNotNull))
     var pr = nodes.select(col("v"), lit(S / n).as("pr"))
-    for (_ <- 1 to iters) {
-      val contrib = pr.select(col("v").as("u"), col("pr"))
-        .join(broadcast(ews), "u")
+    for (_ <- 1 to iters)
+      pr = pr.select(col("v").as("u"), col("pr")).join(es, "u")
         .select(col("v"), expr("(pr * w) div s").as("c"))
-        .groupBy("v").agg(sum("c").as("agg"))
-      pr = nodes.join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          (lit(base) + expr("(85 * coalesce(agg, cast(0 as bigint))) div 100"))
-            .as("pr"))
-    }
-    // distributed final rank: range-partitioned globalRank, never a
-    // naked Window.orderBy holding every source in one task (the
-    // source domain is 10^7-10^8 at 100 TB)
-    Relational.globalRank(
-      pr.select(col("v").as("source"), col("pr").as("pr_q40")),
-      32, col("pr_q40").desc, col("source"))
-      .withColumnRenamed("rn", "rnk")
+        .unionByName(zeros)
+        .groupBy("v")
+        .agg((lit(base) + expr("(85 * sum(c)) div 100")).as("pr"))
+    pr
   }
+
+  /** PageRank over the projected source graph; the final rank is the
+    * distributed globalRank, never a naked Window.orderBy holding every
+    * source in one task (the source domain is 10^7-10^8 at 100 TB). */
+  def sourceRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
+    Relational.globalRank(
+      pageRankQ40(srcEdges(spark, dir), srcNodes(spark, dir), iters)
+        .select(col("v").as("source"), col("pr").as("pr_q40")),
+      col("pr_q40").desc, col("source"))
+      .withColumnRenamed("rn", "rnk")
 
   /** Label-propagation community detection (Raghavan et al. 2007,
     * synchronous variant) over the projected source graph — the
@@ -909,9 +920,8 @@ object Dedup {
     * join + one grouped argmax each — no corpus re-read, no global
     * windows ([[graft.operators.Relational.globalRank]] family). */
   def communities(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val ews = srcEdges(spark, dir).persist()
-    val nodes = srcNodes(spark, dir).persist()
-    var lab = nodes.select(col("v"), col("v").as("lab"))
+    val ews = srcEdges(spark, dir)
+    var lab = srcNodes(spark, dir).select(col("v"), col("v").as("lab"))
     for (_ <- 1 to iters) {
       val scores = lab.select(col("v").as("nbr"), col("lab"))
         .join(broadcast(ews.select(col("u"), col("v").as("nbr"), col("w"))),
@@ -989,7 +999,7 @@ object Dedup {
     // holds the whole source domain
     Relational.globalRank(
       hub.select(col("source"), col("hs").as("hub_q40")),
-      32, col("hub_q40").desc, col("source"))
+      col("hub_q40").desc, col("source"))
       .withColumnRenamed("rn", "rnk")
   }
 

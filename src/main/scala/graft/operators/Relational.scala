@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningTotal
 import graft.Tables
 
 /** Relational core: the MapReduce programming model of the reference
@@ -159,38 +160,15 @@ object Relational {
   }
 
   /** Distributed global row_number over a total order — the TeraSort
-    * formulation (ref: examples/terasort/TeraSort.java:1): range-
-    * partition on the sort key (sampled bounds, the InputSampler
-    * algorithm), rank locally within each range, then add per-partition
-    * offsets. The offsets table is one row per partition (≤ thousands
-    * at any scale) so its prefix-sum window and broadcast are trivial —
-    * no operator ever sees all rows in one partition, unlike a naked
-    * `Window.orderBy(...)`.
-    *
-    * Requires `keys` to be a TOTAL order (include a unique tiebreaker):
-    * range partitioning guarantees every key in partition i sorts
-    * before every key in partition i+1 only when keys are distinct. */
-  def globalRank(df: DataFrame, numParts: Int, keys: Column*): DataFrame = {
-    // Rebase on the computed RDD: the ranked rows AND the offsets table
-    // below both consume `parted`, and two independent evaluations of a
-    // SAMPLED range exchange can disagree on partition boundaries
-    // (sampling + AQE re-planning), which would pair local ranks with
-    // offsets from a different partitioning — duplicated and missing
-    // global ranks. One RDD = one shuffle = one set of boundaries.
-    val parted0 = df.repartitionByRange(numParts, keys: _*)
-      .withColumn("_pid", spark_partition_id())
-    val parted = df.sparkSession.createDataFrame(parted0.rdd, parted0.schema)
-    val localW = Window.partitionBy("_pid").orderBy(keys: _*)
-    val local = parted.withColumn("_lrn", row_number().over(localW))
-    val offW = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("_pid").agg(count(lit(1)).as("_cnt"))
-      .withColumn("_off", coalesce(sum("_cnt").over(offW), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn("rn", col("_lrn") + col("_off"))
-      .drop("_pid", "_lrn", "_off")
-  }
+    * formulation (ref: examples/terasort/TeraSort.java:1): one sort,
+    * range-partitioned on sampled bounds (the InputSampler algorithm)
+    * into the session's shuffle-partition count (AQE coalesces it), then
+    * per-partition row counts as prefix offsets ([[RunningTotal]]). No
+    * operator ever sees all rows in one partition, unlike a naked
+    * `Window.orderBy(...)`. For ranks that are a function of the data,
+    * `keys` must be a TOTAL order (include a unique tiebreaker). */
+  def globalRank(df: DataFrame, keys: Column*): DataFrame =
+    RunningTotal.append(df.orderBy(keys: _*), "rn")
 
   /** Range-bucket assignment — the TotalOrderPartitioner contract
     * (ref: mapred/lib/TotalOrderPartitioner.java:1): every row mapped
@@ -200,7 +178,7 @@ object Relational {
     * `globalRank` — no single-partition window at any scale. The
     * physical-partitioning twin is `rangePartition` below. */
   def totalOrderBucket(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = globalRank(Tables.orders(spark, dir), 32,
+    val ranked = globalRank(Tables.orders(spark, dir),
       col("o_totalprice"), col("o_orderkey"))
     val total = ranked.agg(count(lit(1)).as("_n"))
     // ntile semantics: q = N div k, r = N % k; bucket b ∈ [1,r] holds
@@ -230,16 +208,15 @@ object Relational {
     * the permutation a pure function of (seed, id) — re-running the
     * pipeline, re-running on another engine, or resuming after a
     * failure all produce byte-identical order, and changing the seed
-    * is a fresh shuffle. Ranks come from [[globalRank]] (sampled
-    * range partition + per-partition offsets), so no operator ever
-    * holds all rows in one partition — the naked
+    * is a fresh shuffle. Positions come from [[globalRank]] (one
+    * range-partitioned sort + per-partition offsets), so no operator
+    * ever holds all rows in one partition — the naked
     * `ORDER BY hash` window the naive form needs is exactly what
     * doesn't survive 100 TB. */
-  def deterministicShuffle(df: DataFrame, seed: String, idCol: String,
-    numParts: Int = 32): DataFrame = {
+  def deterministicShuffle(df: DataFrame, seed: String, idCol: String): DataFrame = {
     val keyed = df.withColumn("_skey",
       md5(concat_ws(":", lit(seed), col(idCol))))
-    globalRank(keyed, numParts, col("_skey"), col(idCol))
+    globalRank(keyed, col("_skey"), col(idCol))
       .withColumnRenamed("rn", "pos").drop("_skey")
   }
 
@@ -253,31 +230,14 @@ object Relational {
     * shard = floor(preceding-cumsum / budget), so every shard except
     * the last carries at least `budget` tokens and document order is
     * preserved within and across shards — the "pack the training set
-    * into N-token files" step. The global cumulative sum uses the
-    * same two-phase offsets trick as [[globalRank]] (partition-local
-    * running sums + a partition-count-scale offsets table), never a
-    * single-partition window. */
+    * into N-token files" step. The global cumulative sum of the BIGINT
+    * `weightCol` is [[globalRank]]'s per-partition offsets over one
+    * range-partitioned sort, never a single-partition window. */
   def shardByBudget(df: DataFrame, orderCol: String, weightCol: String,
-    budget: Long, numParts: Int = 32): DataFrame = {
-    // rebase on the computed RDD for the same reason as globalRank:
-    // the ranked rows and the offsets table must see ONE sampled
-    // range partitioning, not two independent evaluations
-    val parted0 = df.repartitionByRange(numParts, col(orderCol))
-      .withColumn("_pid", spark_partition_id())
-    val parted = df.sparkSession.createDataFrame(parted0.rdd, parted0.schema)
-    val localW = Window.partitionBy("_pid").orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted.withColumn("_lcs", sum(col(weightCol)).over(localW))
-    val offW = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("_pid").agg(sum(col(weightCol)).as("_w"))
-      .withColumn("_off", coalesce(sum("_w").over(offW), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn("shard",
-        expr(s"(_lcs + _off - $weightCol) div $budget"))
-      .drop("_pid", "_lcs", "_off")
-  }
+    budget: Long): DataFrame =
+    RunningTotal.append(df.orderBy(col(orderCol)), "_cs", Some(weightCol))
+      .withColumn("shard", expr(s"(_cs - $weightCol) div $budget"))
+      .drop("_cs")
 
   def shardBudgetGate(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables.documents(spark, dir).select(col("doc_id"),
@@ -477,12 +437,11 @@ object Relational {
     * sampler variant): every step-th record of the key order — fully
     * DETERMINISTIC, so unlike the seeded random samplers it is
     * oracle-hashable. The rank comes from the distributed globalRank
-    * (no single-partition window); emitted with the rank so the
-    * sample is reproducible downstream. */
+    * (one range-partitioned sort, no single-partition window); emitted
+    * with the rank so the sample is reproducible downstream. */
   def intervalSample(spark: SparkSession, dir: String, step: Int = 100): DataFrame =
     globalRank(Tables.orders(spark, dir)
-      .select("o_orderkey", "o_custkey", "o_totalprice"), 32,
-      col("o_orderkey"))
+      .select("o_orderkey", "o_custkey", "o_totalprice"), col("o_orderkey"))
       .filter(col("rn") % step === 1)
       .select(col("rn"), col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
 

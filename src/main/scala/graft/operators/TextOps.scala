@@ -355,28 +355,17 @@ object TextOps {
   /** Sequence packing — shaping documents into fixed-token-budget
     * training sequences: deterministic first-fit in doc_id order,
     * sequence = floor(tokens_before / budget). The prefix sum is
-    * DISTRIBUTED (range partition → local cumsum → broadcast
-    * per-partition offsets, one row per partition — the globalRank
-    * pattern), so no single-partition window touches the corpus at
-    * any scale. Output: per sequence, the doc span and token count. */
+    * DISTRIBUTED (one range-partitioned sort + per-partition offsets,
+    * the globalRank pattern), so no single-partition window touches
+    * the corpus at any scale. Output: per sequence, the doc span and
+    * token count. */
   def packSequences(spark: SparkSession, dir: String, budget: Int = 2048): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         expr(s"cast(size(filter(split($normExpr, ' '), x -> x <> '')) as bigint)").as("n"))
-    // rebase on the computed RDD — the offsets table and the final join
-    // both consume this frame, and two evaluations of a sampled range
-    // exchange can disagree on boundaries (see Relational.globalRank)
-    val parted0 = docs.repartitionByRange(32, col("doc_id"))
-      .withColumn("_pid", spark_partition_id())
-    val parted = spark.createDataFrame(parted0.rdd, parted0.schema)
-    val localW = Window.partitionBy("_pid").orderBy("doc_id")
-    val local = parted.withColumn("_lcum", sum("n").over(localW))
-    val offW = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("_pid").agg(sum("n").as("_cnt"))
-      .withColumn("_off", coalesce(sum("_cnt").over(offW), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), "_pid")
-      .withColumn("seq_id", expr(s"(_lcum + _off - n) div ${budget}L"))
+    org.apache.spark.sql.graft.RunningTotal
+      .append(docs.orderBy("doc_id"), "_cum", Some("n"))
+      .withColumn("seq_id", expr(s"(_cum - n) div ${budget}L"))
       .groupBy("seq_id")
       .agg(count(lit(1)).as("n_docs"), sum("n").as("seq_tokens"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
@@ -828,19 +817,16 @@ object TextOps {
       .filter(col("w") =!= 0)
   }
 
-  /** TextRank keyword scoring (Mihalcea & Tarau 2004): PageRank over
-    * the token-adjacency co-occurrence graph, in the same q40
-    * fixed-point integer scheme as the source-graph PageRank
-    * (Dedup.sourceRank) so both engines' iterates are bitwise equal.
-    * Edge building is map-side (explode of adjacent token pairs) +
-    * one count aggregate; each of the 5 unrolled iterations joins the
-    * vocabulary-scale rank vector against the BROADCAST edge list —
-    * at 100 TB the corpus is read once and everything iterative runs
-    * at vocabulary scale, never corpus scale. */
+  /** TextRank keyword scoring (Mihalcea & Tarau 2004): the q40 PageRank
+    * of [[Dedup.pageRankQ40]] over the token-adjacency co-occurrence
+    * graph, so both engines' iterates are bitwise equal. Edge building
+    * is map-side (explode of adjacent token pairs) + one count
+    * aggregate, memoized; the rounds join the vocabulary-scale rank
+    * vector against the BROADCAST edges — at 100 TB the corpus is read
+    * once and everything iterative runs at vocabulary scale. */
   def textrank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val S = 1099511627776L // 2^40
-    // word-adjacency edge list + strength as a persisted artifact
-    // (the graph-family scratchRelation discipline): the corpus-scale
+    // word-adjacency edge list + strength as a scratch artifact (the
+    // graph-family scratchRelation discipline): the corpus-scale
     // explode runs once per input, iterations run against the artifact
     val ews = Dedup.scratchRelation(spark, "wordedges", dir) {
       val toks = Tables.documents(spark, dir)
@@ -860,30 +846,16 @@ object TextOps {
         .unionByName(und.select(col("v").as("u"), col("u").as("v"), col("w")))
       val strength = edges.groupBy("u").agg(sum("w").as("s"))
       edges.join(strength, "u")
-    }.persist()
+    }
     val nodes = Dedup.scratchRelation(spark, "wordnodes", dir) {
       Tables.documents(spark, dir)
         .select(explode(split(expr(normExpr), " ")).as("v"))
         .filter(col("v") =!= "").distinct()
-    }.persist()
-    val n = nodes.count() // vocabulary-scale 1-row readback
-    val base = 15L * S / (100L * n)
-    var pr = nodes.select(col("v"), lit(S / n).as("pr"))
-    for (_ <- 1 to iters) {
-      val contrib = pr.select(col("v").as("u"), col("pr"))
-        .join(broadcast(ews), "u")
-        .select(col("v"), expr("(pr * w) div s").as("c"))
-        .groupBy("v").agg(sum("c").as("agg"))
-      pr = nodes.join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          (lit(base) + expr("(85 * coalesce(agg, cast(0 as bigint))) div 100"))
-            .as("pr"))
     }
-    // distributed final rank over the vocabulary: globalRank range-
-    // partitions instead of collapsing every word into one task
     Relational.globalRank(
-      pr.select(col("v").as("word"), col("pr").as("pr_q40")),
-      32, col("pr_q40").desc, col("word"))
+      Dedup.pageRankQ40(ews, nodes, iters)
+        .select(col("v").as("word"), col("pr").as("pr_q40")),
+      col("pr_q40").desc, col("word"))
       .withColumnRenamed("rn", "rnk")
   }
 }

@@ -339,35 +339,17 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("graph-family final ranks never sort all rows in one task") {
-    // pagerank / hits / textrank rank via Relational.globalRank: the
-    // ONLY unpartitioned Window allowed in their plans is the per-
-    // partition offsets prefix sum, which runs over one row per range
-    // partition (<= 32 rows at any data scale). A naked
-    // row_number().over(Window.orderBy(...)) over the node domain —
-    // the shape this test exists to keep out — has no such aggregate
-    // beneath it and fails here.
-    import org.apache.spark.sql.catalyst.plans.logical
-    def assertRankDistributed(name: String,
-      df: org.apache.spark.sql.DataFrame): Unit = {
-      val wins = df.queryExecution.optimizedPlan.collect {
-        case w: logical.Window if w.partitionSpec.isEmpty => w
-      }
-      assert(wins.nonEmpty, s"$name: expected the globalRank offsets window")
-      wins.foreach { w =>
-        val overOffsets = w.child.collectFirst {
-          case a: logical.Aggregate if a.groupingExpressions
-            .exists(_.references.exists(_.name == "_pid")) => a
-        }.isDefined
-        assert(overOffsets,
-          s"$name: unpartitioned Window must only rank the per-partition " +
-            s"offsets table, not the node domain:\n${w.treeString}")
-      }
+    // pagerank / hits / textrank rank via Relational.globalRank: one
+    // range-partitioned sort plus per-partition offsets. A naked
+    // row_number().over(Window.orderBy(...)) over the node domain is
+    // the shape this test exists to keep out.
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      assertRangeTotals("pagerank",
+        graft.operators.Dedup.sourceRank(spark, sfDir))
+      assertRangeTotals("hits", graft.operators.Dedup.hits(spark, sfDir))
+      assertRangeTotals("textrank",
+        graft.operators.TextOps.textrank(spark, sfDir))
     }
-    assertRankDistributed("pagerank",
-      graft.operators.Dedup.sourceRank(spark, sfDir))
-    assertRankDistributed("hits", graft.operators.Dedup.hits(spark, sfDir))
-    assertRankDistributed("textrank",
-      graft.operators.TextOps.textrank(spark, sfDir))
   }
 
   test("r8 operators: every window is key-partitioned, edges broadcast") {

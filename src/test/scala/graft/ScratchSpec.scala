@@ -79,4 +79,13 @@ class ScratchSpec extends SparkSpec {
     writeSubset(1)
     assert(Dedup.sourceRank(spark, d).count() === 1L)
   }
+
+  test("an artifact read carries its written schema and starts no job") {
+    val grams = Dedup.spanGrams(spark, sfDir) // builds or reuses it
+    val dir = new org.apache.hadoop.fs.Path(grams.inputFiles.head).getParent
+    // the schema inference would give the artifact's files
+    assert(grams.schema === spark.read.parquet(dir.toString).schema)
+    // and no footer-reading inference job on a memoized read
+    assert(jobsDuring(Dedup.spanGrams(spark, sfDir)) === 0)
+  }
 }

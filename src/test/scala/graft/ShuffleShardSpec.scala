@@ -10,16 +10,16 @@ class ShuffleShardSpec extends SparkSpec {
   test("deterministicShuffle: a permutation, reproducible, seed-sensitive") {
     import spark.implicits._
     val df = (1L to 500L).map(i => (i, s"doc$i")).toDF("id", "payload")
-    val p1 = Relational.deterministicShuffle(df, "seedA", "id", numParts = 8)
+    val p1 = Relational.deterministicShuffle(df, "seedA", "id")
       .select("id", "pos").collect().map(r => r.getLong(0) -> r.getLong(1))
     // a bijection onto 1..n
     assert(p1.map(_._2).sorted.toSeq === (1L to 500L))
     // reproducible: same seed → identical permutation (fresh plan)
-    val p2 = Relational.deterministicShuffle(df, "seedA", "id", numParts = 8)
+    val p2 = Relational.deterministicShuffle(df, "seedA", "id")
       .select("id", "pos").collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(p1.sortBy(_._1).toSeq === p2.sortBy(_._1).toSeq)
     // seed-sensitive: a different seed is a different permutation
-    val p3 = Relational.deterministicShuffle(df, "seedB", "id", numParts = 8)
+    val p3 = Relational.deterministicShuffle(df, "seedB", "id")
       .select("id", "pos").collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(p1.sortBy(_._1).toSeq !== p3.sortBy(_._1).toSeq)
     // and genuinely shuffled: not the identity order
@@ -29,8 +29,7 @@ class ShuffleShardSpec extends SparkSpec {
   test("shardByBudget: contiguous shards, every full shard meets the budget") {
     import spark.implicits._
     val df = (1L to 300L).map(i => (i, (i % 7) + 1)).toDF("id", "w")
-    val out = Relational.shardByBudget(df, "id", "w", budget = 40L,
-      numParts = 8).collect()
+    val out = Relational.shardByBudget(df, "id", "w", budget = 40L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
     // shards are contiguous and non-decreasing in id order
@@ -52,25 +51,13 @@ class ShuffleShardSpec extends SparkSpec {
   test("no single-partition window over row-scale data in either plan") {
     import spark.implicits._
     val df = (1L to 1000L).map(i => (i, 1L)).toDF("id", "w")
-    // the only unpartitioned windows allowed are the offsets tables
-    // (partition-count-scale); assert by checking the shuffled row
-    // count never passes through a Window with no partition spec on
-    // the big side — structurally: the physical plan's window nodes
-    // must sit above an aggregate of _pid (tiny), not above the scan
-    val plans = Seq(
-      Relational.deterministicShuffle(df, "s", "id", 8),
-      Relational.shardByBudget(df, "id", "w", 100L, 8))
-    plans.foreach { p =>
-      val phys = p.queryExecution.executedPlan.toString
-      // the per-row window is partitioned by _pid; the global one
-      // only ever consumes the offsets aggregate
-      val windowLines = phys.linesIterator
-        .filter(_.contains("Window")).toSeq
-      assert(windowLines.nonEmpty)
-      windowLines.filterNot(_.contains("_pid")).foreach { w =>
-        assert(w.contains("_w") || w.contains("_cnt"),
-          s"unpartitioned window must be offsets-table-scale: $w")
-      }
+    // positions and shard sums both come from one range-partitioned
+    // sort plus per-partition offsets: no unpartitioned Window at all
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      assertRangeTotals("deterministicShuffle",
+        Relational.deterministicShuffle(df, "s", "id"))
+      assertRangeTotals("shardByBudget",
+        Relational.shardByBudget(df, "id", "w", 100L), "_cs", positions = false)
     }
   }
 }
