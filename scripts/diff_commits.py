@@ -18,6 +18,9 @@ numbered by first appearance in the table (versions in order, lines in
 file order): a sink's stream id may be derived from a per-run path, such
 as a hash of its checkpoint location, so two runs of one build name the
 same stream differently.
+A scratch table dir's per-JVM owner token (`graft-<name>-<hash>-<owner>`,
+see `Scratch.owner`) is dropped from paths and lines, so the same table
+pairs up across two runs.
 A commit's other lines (`op:` and the table headers) compare as a sorted
 list: every reader looks a header up by its prefix, so their order carries
 no meaning. Entry lines (`dir:`/`delta:`, after expansion) keep their
@@ -34,14 +37,21 @@ UUID = re.compile(
     r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 VERSION = re.compile(r"v\d+")
 BATCH = re.compile(r"batch:(.*):(\d+)")
+OWNER = re.compile(r"(graft-[A-Za-z0-9]+-[0-9a-f]{8})-[0-9a-f]{8}")
+
+
+def unowned(path):
+    return OWNER.sub(r"\1", path)
 
 
 def commit_dirs(root):
-    """Relative paths of every `_commits` dir under `root`."""
-    out = set()
+    """Every `_commits` dir under `root`: its relative path without owner
+    tokens, mapped to its relative path."""
+    out = {}
     for d, subdirs, _ in os.walk(root):
         if "_commits" in subdirs:
-            out.add(os.path.relpath(os.path.join(d, "_commits"), root))
+            rel = os.path.relpath(os.path.join(d, "_commits"), root)
+            out[unowned(rel)] = rel
     return out
 
 
@@ -52,7 +62,7 @@ def versions(commits):
 def normalize(line, root, streams):
     """`line` with the tree `root`, UUIDs and stream ids replaced;
     `streams` maps the table's stream ids seen so far to their tokens."""
-    line = UUID.sub("<uuid>", line.replace(root, "<root>"))
+    line = unowned(UUID.sub("<uuid>", line.replace(root, "<root>")))
     tag = BATCH.fullmatch(line)
     if tag:
         token = streams.setdefault(tag.group(1), f"<stream{len(streams) + 1}>")
@@ -89,11 +99,12 @@ def main(root_a, root_b):
     differ = False
     abs_a, abs_b = os.path.abspath(root_a), os.path.abspath(root_b)
     dirs_a, dirs_b = commit_dirs(root_a), commit_dirs(root_b)
-    for rel in sorted(dirs_a ^ dirs_b):
+    for rel in sorted(dirs_a.keys() ^ dirs_b.keys()):
         print(f"only under {root_a if rel in dirs_a else root_b}: {rel}")
         differ = True
-    for rel in sorted(dirs_a & dirs_b):
-        ca, cb = os.path.join(root_a, rel), os.path.join(root_b, rel)
+    for rel in sorted(dirs_a.keys() & dirs_b.keys()):
+        ca = os.path.join(root_a, dirs_a[rel])
+        cb = os.path.join(root_b, dirs_b[rel])
         va, vb = versions(ca), versions(cb)
         for v in sorted(va ^ vb):
             print(f"only under {ca if v in va else cb}: {v}")

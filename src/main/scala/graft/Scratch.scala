@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -72,31 +73,45 @@ object Scratch {
   private[graft] val buildNanos =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** This JVM's owner token. Every artifact name the JVM mints ends
+    * with it, so two JVMs on one scratch root never share a path: one's
+    * exit cleanup or superseded-version sweep cannot delete what the
+    * other is still reading. */
+  private[graft] val owner: String =
+    java.util.UUID.randomUUID().toString.take(8)
 
-  /** Best-effort delete-on-JVM-exit via the FileSystem API. Failures
-    * are swallowed: Hadoop's own shutdown hook may close the FS cache
-    * first, and leftover scratch is reclaimed by the next run's
-    * create-time sweep anyway. */
+  // the artifacts this JVM built, deleted when it exits
+  private val owned =
+    new java.util.concurrent.ConcurrentHashMap[String, Configuration]()
+  private lazy val exitHook: Unit = { sys.addShutdownHook(cleanup(_ => true)); () }
+
+  /** Delete-on-JVM-exit of `p`, an artifact this JVM built. */
   def registerCleanup(spark: SparkSession, p: Path): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    if (cleanupRegistered.add(p.toString)) {
-      sys.addShutdownHook {
+    owned.putIfAbsent(p.toString, spark.sessionState.newHadoopConf())
+    exitHook
+  }
+
+  /** Delete this JVM's registered artifacts that `which` selects —
+    * never another JVM's. Best effort via the FileSystem API: failures
+    * are swallowed, as Hadoop's own shutdown hook may close the FS
+    * cache first. */
+  private[graft] def cleanup(which: Path => Boolean): Unit =
+    owned.forEach { (path, conf) =>
+      val p = new Path(path)
+      if (which(p)) {
+        owned.remove(path)
         try p.getFileSystem(conf).delete(p, true)
         catch { case scala.util.control.NonFatal(_) => () }
       }
-      ()
     }
-  }
 
-  /** A fresh scratch directory for `prefix` scoped to input `dir`:
-    * any previous leftover with the same identity is removed first
-    * (repeated runs reuse, not accumulate, scratch space), and the
-    * path is registered for exit cleanup. Returns the qualified URI
-    * string — safe to hand to `DataFrame.write`. */
+  /** A fresh scratch directory of this JVM for `prefix` scoped to
+    * input `dir`: any previous leftover with the same identity is
+    * removed first (repeated runs reuse, not accumulate, scratch
+    * space), and the path is registered for exit cleanup. Returns the
+    * qualified URI string — safe to hand to `DataFrame.write`. */
   def freshRoot(spark: SparkSession, prefix: String, dir: String): String = {
-    val p = new Path(base(spark), f"$prefix-${dir.hashCode}%08x")
+    val p = new Path(base(spark), f"$prefix-${dir.hashCode}%08x-$owner")
     val fs = fileSystem(spark, p)
     fs.delete(p, true)
     registerCleanup(spark, p)

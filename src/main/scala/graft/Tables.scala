@@ -1,23 +1,71 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the warehouse star schema (TESTDATA.md).
   *
   * Loads are plain parquet scans so Catalyst column pruning and filter
   * pushdown reach the file source (`PushedFilters`/`ReadSchema` in
-  * `.explain`). At cluster scale the same call reads HDFS through the
-  * standard Hadoop connectors — the storage integration the reference
-  * provides natively (ref: src/core/org/apache/hadoop/fs,
-  * src/hdfs).
+  * `.explain`); their schema comes from a cached footer read
+  * ([[footerSchema]]), so a load starts no schema-inference job. At
+  * cluster scale the same call reads HDFS through the standard Hadoop
+  * connectors — the storage integration the reference provides
+  * natively (ref: src/core/org/apache/hadoop/fs, src/hdfs).
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // a Spark Connect client has no Hadoop conf to read the footer with
+    // (nor the classic session class on its classpath)
+    if (spark.getClass.getName != "org.apache.spark.sql.classic.SparkSession")
+      spark.read.parquet(path)
+    else spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  // the session flags Spark's footer conversion reads
+  private val converterFlags = Seq("spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, Seq[Option[String]]), StructType]()
+
+  /** The schema `spark.read.parquet(path)` infers, without its
+    * footer-reading Spark job: Spark's own conversion of the footer of
+    * the file (or of a directory's first data file, the one inference
+    * reads), made nullable, cached by file, length, modification time
+    * and the session's converter flags. */
+  private[graft] def footerSchema(spark: SparkSession,
+    path: String): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st0 = fs.getFileStatus(p)
+    val st =
+      if (!st0.isDirectory) st0
+      else fs.listStatus(p).filter(s => s.isFile &&
+        !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith(".")).minBy(_.getPath.getName)
+    val flags = converterFlags.map(spark.conf.getOption)
+    footerSchemas.computeIfAbsent(
+      (st.getPath.toString, st.getLen, st.getModificationTime, flags), _ => {
+        val footer = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS)
+        graft.sources.TxTable.nullable(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+          .asInstanceOf[StructType]
+      })
+  }
 
   /** Register every table as a temp view so users can drive the whole
     * engine through `spark.sql(...)` — the warehouse-SQL surface the

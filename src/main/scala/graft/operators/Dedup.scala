@@ -797,7 +797,7 @@ object Dedup {
     // long-lived session rebuilds the artifact instead of silently
     // serving a stale one
     val ver = Scratch.contentVersion(spark, dir)
-    val id = f"rel-$key-${dir.hashCode}%08x-$ver"
+    val id = f"rel-$key-${dir.hashCode}%08x-$ver-${Scratch.owner}"
     val basep = Scratch.base(spark)
     // the base participates in the cache key: re-pointing
     // spark.graft.scratchDir mid-session must not serve artifacts
@@ -811,13 +811,14 @@ object Dedup {
     val (path, schema) = Option(scratchCache.get(cacheKey)).getOrElse {
       val p = new org.apache.hadoop.fs.Path(basep, id)
       val fs = Scratch.fileSystem(spark, p)
-      // sweep superseded versions of the same artifact so a session
-      // that rewrites its input N times holds one copy, not N
+      // sweep this JVM's superseded versions of the same artifact so
+      // a session that rewrites its input N times holds one copy, not N
       if (fs.exists(basep))
         fs.listStatus(basep)
           .filter { s =>
             val n = s.getPath.getName
-            n.startsWith(f"rel-$key-${dir.hashCode}%08x-") && n != id
+            n.startsWith(f"rel-$key-${dir.hashCode}%08x-") &&
+              n.endsWith(s"-${Scratch.owner}") && n != id
           }
           .foreach(s => fs.delete(s.getPath, true))
       val t0 = System.nanoTime()

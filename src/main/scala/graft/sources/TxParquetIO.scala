@@ -2,16 +2,13 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.api.ReadSupport.ReadContext
-import org.apache.parquet.hadoop.api.WriteSupport.WriteContext
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordConsumer, RecordMaterializer}
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -21,73 +18,20 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Executor-side parquet ↔ `InternalRow` without a Spark plan — the
   * record-level IO a DataSourceV2 `PartitionReader` / `DataWriter`
   * needs (those interfaces hand rows one at a time; there is no
-  * DataFrame in an executor). Built on parquet-mr's PUBLIC
-  * `ReadSupport`/`WriteSupport` API only — no Spark-internal parquet
-  * classes — so the graft-tx streaming faces stay inside the
-  * supported connector surface.
+  * DataFrame in an executor).
   *
-  * Scope: the flat relational schemas a [[TxTable]] holds — all
-  * primitive Spark types, strings, binary, decimals, dates,
-  * timestamps (reading INT64 millis/micros/nanos AND legacy INT96),
-  * plus one-level arrays of those. Nested structs/maps fail loudly:
-  * the table format never writes them, and a clear error beats a
-  * silently-wrong decode. */
+  * Reading is built on parquet-mr's public `ReadSupport` API, for the
+  * flat relational schemas the streaming and row-level faces read —
+  * all primitive Spark types, strings, binary, decimals, dates,
+  * timestamps (INT64 millis/micros/nanos AND legacy INT96), plus
+  * one-level arrays of those; nested structs/maps fail loudly, since a
+  * clear error beats a silently-wrong decode.
+  *
+  * Writing is Spark's own parquet `OutputWriter` ([[writer]]): every
+  * graft write, whichever face it comes from, stages its files through
+  * [[TxStagedWriter]] and so through this one writer, which writes
+  * every type a `df.write.parquet` job writes. */
 private[sources] object TxParquetIO {
-
-  // ---------------------------------------------------------- schema
-
-  private def parquetTypeOf(f: StructField): Type = f.dataType match {
-    case ArrayType(elem, _) =>
-      Types.optionalGroup().as(LogicalTypeAnnotation.listType())
-        .addField(Types.repeatedGroup()
-          .addField(primitiveOf("element", elem)).named("list"))
-        .named(f.name)
-    case dt => primitiveOf(f.name, dt)
-  }
-
-  private def primitiveOf(name: String, dt: DataType): Type = {
-    def p(tn: PrimitiveTypeName) = Types.primitive(tn, Repetition.OPTIONAL)
-    dt match {
-      case BooleanType => p(PrimitiveTypeName.BOOLEAN).named(name)
-      case ByteType => p(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(8, true)).named(name)
-      case ShortType => p(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(16, true)).named(name)
-      case IntegerType => p(PrimitiveTypeName.INT32).named(name)
-      case LongType => p(PrimitiveTypeName.INT64).named(name)
-      case FloatType => p(PrimitiveTypeName.FLOAT).named(name)
-      case DoubleType => p(PrimitiveTypeName.DOUBLE).named(name)
-      case StringType => p(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case BinaryType => p(PrimitiveTypeName.BINARY).named(name)
-      case DateType => p(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case TimestampType => p(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS))
-        .named(name)
-      case TimestampNTZType => p(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS))
-        .named(name)
-      case d: DecimalType if d.precision <= 18 =>
-        p(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-      case d: DecimalType =>
-        Types.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
-          Repetition.OPTIONAL).length(16)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-      case other => throw new IllegalArgumentException(
-        s"graft-tx streaming: unsupported type $other for column '$name' " +
-          "(flat relational columns and primitive arrays only)")
-    }
-  }
-
-  private[sources] def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(parquetTypeOf(f)))
-    b.named("graft_row")
-  }
 
   // ---------------------------------------------------------- reading
 
@@ -285,95 +229,31 @@ private[sources] object TxParquetIO {
 
   // ---------------------------------------------------------- writing
 
-  private class RowWriteSupport(schema: StructType)
-    extends WriteSupport[InternalRow] {
-    private var rc: RecordConsumer = _
-    private val message = messageTypeOf(schema)
-
-    override def init(conf: Configuration): WriteContext =
-      new WriteContext(message, java.util.Collections.emptyMap[String, String])
-
-    override def prepareForWrite(consumer: RecordConsumer): Unit =
-      rc = consumer
-
-    // SpecializedGetters is the shared accessor face of InternalRow
-    // and ArrayData, so one scalar write path serves both rows and
-    // array elements
-    private def writeValue(dt: DataType,
-      row: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Unit =
-      dt match {
-        case BooleanType => rc.addBoolean(row.getBoolean(i))
-        case ByteType => rc.addInteger(row.getByte(i).toInt)
-        case ShortType => rc.addInteger(row.getShort(i).toInt)
-        case IntegerType | DateType => rc.addInteger(row.getInt(i))
-        case LongType | TimestampType | TimestampNTZType =>
-          rc.addLong(row.getLong(i))
-        case FloatType => rc.addFloat(row.getFloat(i))
-        case DoubleType => rc.addDouble(row.getDouble(i))
-        case StringType =>
-          rc.addBinary(Binary.fromReusedByteArray(row.getUTF8String(i).getBytes))
-        case BinaryType =>
-          rc.addBinary(Binary.fromReusedByteArray(row.getBinary(i)))
-        case d: DecimalType if d.precision <= 18 =>
-          rc.addLong(row.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-        case d: DecimalType =>
-          val unscaled = row.getDecimal(i, d.precision, d.scale)
-            .toJavaBigDecimal.unscaledValue.toByteArray
-          val out = new Array[Byte](16)
-          // sign-extend into the fixed 16-byte big-endian buffer
-          val sign: Byte = if (unscaled.head < 0) -1 else 0
-          java.util.Arrays.fill(out, sign)
-          System.arraycopy(unscaled, 0, out, 16 - unscaled.length,
-            unscaled.length)
-          rc.addBinary(Binary.fromConstantByteArray(out))
-        case other => throw new IllegalArgumentException(
-          s"graft-tx streaming: unsupported element type $other")
-      }
-
-    override def write(row: InternalRow): Unit = {
-      rc.startMessage()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!row.isNullAt(i)) {
-          rc.startField(f.name, i)
-          f.dataType match {
-            case ArrayType(elem, _) =>
-              val arr = row.getArray(i)
-              rc.startGroup()
-              if (arr.numElements() > 0) {
-                rc.startField("list", 0)
-                (0 until arr.numElements()).foreach { j =>
-                  rc.startGroup()
-                  if (!arr.isNullAt(j)) {
-                    rc.startField("element", 0)
-                    writeValue(elem, arr, j)
-                    rc.endField("element", 0)
-                  }
-                  rc.endGroup()
-                }
-                rc.endField("list", 0)
-              }
-              rc.endGroup()
-            case dt => writeValue(dt, row, i)
-          }
-          rc.endField(f.name, i)
-        }
-      }
-      rc.endMessage()
-    }
+  /** The Hadoop conf Spark's own parquet writer needs for `schema` —
+    * `ParquetFileFormat.prepareWrite` fills in the write support, the
+    * row schema and the session's codec and legacy-format settings,
+    * exactly as a `df.write.parquet` job would — with timestamps
+    * stored as INT64 micros, never legacy INT96, so their footer
+    * statistics exist and equal what the writer saw. Built once per
+    * write and shipped to its writer tasks. */
+  def writeConf(spark: org.apache.spark.sql.SparkSession,
+    schema: StructType): org.apache.spark.util.SerializableConfiguration = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    job.getConfiguration.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
+    new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)
   }
 
-  private class RowWriterBuilder(path: Path, schema: StructType)
-    extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
-    override def self(): RowWriterBuilder = this
-    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-      new RowWriteSupport(schema)
-  }
-
-  def writer(path: Path, schema: StructType,
-    conf: Configuration): ParquetWriter[InternalRow] =
-    new RowWriterBuilder(path, schema)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+  /** Spark's parquet `OutputWriter` for one file at `path`, under a
+    * conf from [[writeConf]]: the files every write face stages are
+    * byte-for-byte what Spark's file writer produces, for every type
+    * it writes (nested structs, maps and arrays included). */
+  def writer(path: String, conf: Configuration)
+    : org.apache.spark.sql.execution.datasources.OutputWriter =
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter(
+      path, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
 }

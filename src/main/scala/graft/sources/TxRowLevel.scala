@@ -354,15 +354,14 @@ class TxCowBatchWrite(root: String, op: GraftRowLevelOperation,
     val plan = planOf
     val fileSchema = StructType(info.schema().fields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
-    TxStagedWriterFactory(stagingDir, fileSchema, Seq.empty,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+    TxStagedWriterFactory.of(SparkSession.active, stagingDir, fileSchema,
+      sketchCols = plan.keys ++ plan.statsCols)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
       TxTable.cowCommit(spark, root, planOf,
-        TxStagedMessage.files(messages).map(_.path), op.opName)
+        TxStagedMessage.files(messages), op.opName)
     }
 }
 
@@ -446,49 +445,42 @@ class TxDeltaBatchWrite(root: String, op: GraftRowLevelOperation,
     val plan = op.effectivePlan
     val fileSchema = StructType(info.schema().fields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
-    TxDeltaWriterFactory(stagingDir, fileSchema,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    TxDeltaWriterFactory(
+      TxStagedWriterFactory.of(spark, s"$stagingDir/ins", fileSchema,
+        sketchCols = plan.keys ++ plan.statsCols),
+      TxStagedWriterFactory.of(spark, s"$stagingDir/del",
+        TxDeltaWriter.delSchema))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: TxDeltaCommitMessage => m }
     commitStaged { spark =>
       TxTable.deltaDmlCommit(spark, root, op.effectivePlan,
-        msgs.flatMap(_.insertFile).toSeq, msgs.flatMap(_.deleteFile).toSeq,
+        msgs.flatMap(_.inserts).toSeq, msgs.flatMap(_.deletes).map(_.path).toSeq,
         op.opName)
     }
   }
 }
 
-case class TxDeltaCommitMessage(insertFile: Option[String],
-  deleteFile: Option[String]) extends WriterCommitMessage
+case class TxDeltaCommitMessage(inserts: Seq[TxStagedFile],
+  deletes: Seq[TxStagedFile]) extends WriterCommitMessage
 
-case class TxDeltaWriterFactory(stagingDir: String, insertSchema: StructType,
-  conf: SerializableConfiguration)
+case class TxDeltaWriterFactory(inserts: TxStagedWriterFactory,
+  deletes: TxStagedWriterFactory)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
     : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new TxDeltaWriter(
-      s"$stagingDir/part-$partitionId-$taskId", insertSchema, conf)
+    new TxDeltaWriter(inserts.writer(partitionId, taskId),
+      deletes.writer(partitionId, taskId))
 }
 
-/** One task's delta stream: inserts go to `<prefix>-ins.parquet`
-  * ([[TxStagedWriter]], lazily, physical names), delete coordinates
-  * to `<prefix>-del.parquet` as (_dir, _file, _pos). An update is a
-  * delete of the old coordinates plus an insert of the new row —
-  * Spark's projections hand all three pieces. */
-class TxDeltaWriter(prefix: String, insertSchema: StructType,
-  conf: SerializableConfiguration)
+/** One task's delta stream, two [[TxStagedWriter]]s (lazily): inserted
+  * rows under the physical names, and delete coordinates as (_dir,
+  * _file, _pos). An update is a delete of the old coordinates plus an
+  * insert of the new row — Spark's projections hand all three
+  * pieces. */
+class TxDeltaWriter(inserts: TxStagedWriter, deletes: TxStagedWriter)
   extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  private val delSchema = StructType(Seq(StructField("_dir", StringType),
-    StructField("_file", StringType), StructField("_pos", LongType)))
-  private val inserts =
-    new TxStagedWriter(s"$prefix-ins", insertSchema, Seq.empty, conf)
-  private var delWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private val delPath = new org.apache.hadoop.fs.Path(s"$prefix-del.parquet")
 
   override def insert(row: InternalRow): Unit = inserts.write(row)
 
@@ -496,11 +488,9 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
     require(metadata != null && !metadata.isNullAt(0) &&
       !id.isNullAt(0) && !id.isNullAt(1),
       "graft-tx: delta delete without source coordinates")
-    if (delWriter == null)
-      delWriter = TxParquetIO.writer(delPath, delSchema, conf.value)
     // metadata = [__graft_dir], id = [__graft_file, __graft_pos] —
     // copy the strings out of the (reused) projection rows
-    delWriter.write(org.apache.spark.sql.catalyst.InternalRow(
+    deletes.write(org.apache.spark.sql.catalyst.InternalRow(
       org.apache.spark.unsafe.types.UTF8String
         .fromString(metadata.getUTF8String(0).toString),
       org.apache.spark.unsafe.types.UTF8String
@@ -516,20 +506,18 @@ class TxDeltaWriter(prefix: String, insertSchema: StructType,
 
   override def write(row: InternalRow): Unit = insert(row)
 
-  override def commit(): WriterCommitMessage = {
-    if (delWriter != null) delWriter.close()
-    TxDeltaCommitMessage(inserts.staged().headOption.map(_.path),
-      if (delWriter != null) Some(delPath.toString) else None)
-  }
+  override def commit(): WriterCommitMessage =
+    TxDeltaCommitMessage(inserts.staged(), deletes.staged())
 
-  override def abort(): Unit = {
-    inserts.abort()
-    if (delWriter != null) delWriter.close()
-    delPath.getFileSystem(conf.value).delete(delPath, false)
-    ()
-  }
+  override def abort(): Unit = { inserts.abort(); deletes.abort() }
 
   override def close(): Unit = ()
+}
+
+object TxDeltaWriter {
+  import org.apache.spark.sql.types.{LongType, StringType, StructField}
+  val delSchema: StructType = StructType(Seq(StructField("_dir", StringType),
+    StructField("_file", StringType), StructField("_pos", LongType)))
 }
 
 /** `INSERT INTO` / `INSERT OVERWRITE` on the catalog face: executors
@@ -657,6 +645,10 @@ class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
   bucketSpec: Option[(String, Int)] = None)
   extends TxStagedBatchWrite(root) {
 
+  // the stats columns the writers sketch: the ones the commit will
+  // record, as of the snapshot the write starts from
+  @volatile private var sketched: Seq[String] = Seq.empty
+
   override def createBatchWriterFactory(
     pinfo: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
@@ -670,15 +662,15 @@ class TxCatalogBatchWrite(root: String, info: LogicalWriteInfo,
         StructType(info.schema().fields.map(f =>
           f.copy(name = TxTable.physNameOf(m, f.name))))
       }
-    TxStagedWriterFactory(stagingDir, fileSchema, Seq.empty,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    sketched = TxTable.appendStatsCols(spark, root, replace, bootstrapStats)
+    TxStagedWriterFactory.of(spark, stagingDir, fileSchema,
+      sketchCols = sketched)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
-      TxTable.appendStaged(spark, root,
-        TxStagedMessage.files(messages).map(_.path), replace, info.schema(),
-        bootstrapStats, bucketSpec)
+      TxTable.appendStaged(spark, root, TxStagedMessage.files(messages),
+        replace, info.schema(), bootstrapStats, bucketSpec, sketched)
     }
 }
 
@@ -703,9 +695,8 @@ class TxCatalogPartBatchWrite(root: String, info: LogicalWriteInfo,
 
   override def createBatchWriterFactory(
     pinfo: PhysicalWriteInfo): DataWriterFactory =
-    TxStagedWriterFactory(stagingDir, staging.fileSchema, staging.physParts,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+    TxStagedWriterFactory.of(SparkSession.active, stagingDir,
+      staging.fileSchema, staging.physParts)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>

@@ -1269,14 +1269,16 @@ object TxTable {
     * summary — the CBO must price the scan, not the metadata riding
     * in the same dir. */
   private def finishEntries(spark: SparkSession, rp: Path,
-    raw: Seq[Entry]): Seq[Entry] = {
+    raw: Seq[Entry], knownBytes: Map[String, Long] = Map.empty)
+    : Seq[Entry] = {
     val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val spilled = spillHstatsAll(fs, rp, raw.map(e => e.dir -> e.hstats),
       hllInlineMax(spark))
     raw.map { e =>
       val h = spilled(e.dir)
-      val bytes = fs.getContentSummary(new Path(rp, e.dir)).getLength -
-        sidecarBytes(fs, rp, e.dir, h)
+      val bytes = knownBytes.getOrElse(e.dir,
+        fs.getContentSummary(new Path(rp, e.dir)).getLength -
+          sidecarBytes(fs, rp, e.dir, h))
       e.copy(stats = e.stats + (bytesKey -> (bytes, bytes)), hstats = h)
     }
   }
@@ -1326,20 +1328,12 @@ object TxTable {
     }.toMap
   }
 
-  /** `Entry` for a freshly-written dir, its stats computed by ONE
-    * 1-row [[StatsAgg]] over the dir — with parquet aggregate pushdown
-    * a footer read for the min/max/count part, not a data scan. */
+  /** `Entry` for a dir on disk, its stats computed by ONE 1-row
+    * [[StatsAgg]] over the dir — the rescan every write face's
+    * writer-folded entry must equal (WriteStatsSpec checks each face
+    * against it). */
   private def statsEntry(spark: SparkSession, rp: Path, dirName: String,
     statsCols: Seq[String], isDelta: Boolean = false): Entry = {
-    // The stats-line grammar is only unambiguous when no user column
-    // can FORGE a reserved segment: a column literally named "n,k"
-    // would write k's null-count stat, "str:k" k's string bounds,
-    // "_rows"/"_bytes" the row/byte pseudo-columns — and a forged
-    // null-count of 0 makes the metadata-only GROUP BY treat a
-    // NULL-bearing dir as null-free (wrong results, not an error).
-    // toPhysical enforces this on column-mapped tables; this is the
-    // chokepoint every OTHER write path's stats/key columns funnel
-    // through, so enforce it here too.
     statsCols.foreach(requireStatsGrammarSafe)
     val df = readDirFrame(spark, rp, dirName)
     val agg = StatsAgg.of(df.schema, statsCols)
@@ -1347,32 +1341,91 @@ object TxTable {
     finishEntries(spark, rp, Seq(agg.decode(dirName, r.get)))
       .head.copy(isDelta = isDelta)
   }
-  /** In-write stats observer — the [[checkGuard]] discipline applied
-    * to the per-dir stats aggregate: the [[StatsAgg]] rides the write
-    * action itself via `observe`, so a freshly-written dir's [[Entry]]
-    * is assembled with NO second scan of the batch. At warehouse scale
-    * the post-write stats pass re-read every byte just written; here
-    * the metrics are folded per-task during the write and merged on
-    * the driver. Values are identical to a rescan (the written rows
-    * ARE the observed rows). Returns the wrapped frame to write and an
-    * assembler to call AFTER the write action (it blocks on the
-    * observation). */
-  private def observeStats(df: DataFrame, statsCols: Seq[String])
-    : (DataFrame, (SparkSession, Path, String, Boolean) => Entry) = {
+
+  /** Write `df` as the data dir `dirName` (staged by the caller through
+    * the commit ledger) and return its entry, with stats on
+    * `statsCols`. The rows go through [[TxStagedWriter]] tasks as ONE
+    * SQL execution of `df`'s plan, into a private staging prefix; the
+    * files the committed tasks list then move into the dir by rename,
+    * and the entry folds what their writers saw ([[factsEntry]]) —
+    * no committer, no observation pass, no rescan. A dir always holds
+    * at least one file, so a zero-row `df` stages one carrying its
+    * schema. */
+  private def writeDir(spark: SparkSession, rp: Path, dirName: String,
+    df: DataFrame, statsCols: Seq[String], isDelta: Boolean = false): Entry = {
+    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new Path(rp, s"_staging/write-${java.util.UUID.randomUUID()}")
+    try {
+      // the optimized plan's nullability, as Spark's file writer takes
+      // it: a column proven non-null is stored REQUIRED
+      val factory = TxStagedWriterFactory.of(spark, tmp.toString,
+        df.queryExecution.optimizedPlan.schema, sketchCols = statsCols)
+      val files = TxStagedWriter.stage(df, factory) match {
+        case Seq() => val w = factory.writer(0, 0L); w.touch(); w.staged()
+        case staged => staged
+      }
+      promotedEntry(spark, fs, rp, dirName, statsCols, files)
+        .copy(isDelta = isDelta)
+    } finally fs.delete(tmp, true)
+  }
+
+  /** The entry of dir `dirName` holding exactly `files`, its stats on
+    * `statsCols` folded from what their writers saw: the same
+    * `_rows`, integral bounds, NULL counts, string bounds, `sx:` value
+    * and HLL sketch a [[StatsAgg]] over the dir's rows records (the
+    * sketches merge as `hll_sketch_agg` merges partial buffers), and
+    * `_bytes` as the files' summed length. A stats column the writers
+    * did not sketch — one of a type the aggregate skips — records
+    * nothing, as there. */
+  private def factsEntry(spark: SparkSession, rp: Path, dirName: String,
+    statsCols: Seq[String], files: Seq[TxStagedFile]): Entry = {
+    import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
+    // The stats-line grammar is only unambiguous when no user column
+    // can FORGE a reserved segment: a column literally named "n,k"
+    // would write k's null-count stat, "str:k" k's string bounds,
+    // "_rows"/"_bytes" the row/byte pseudo-columns — and a forged
+    // null-count of 0 makes the metadata-only GROUP BY treat a
+    // NULL-bearing dir as null-free (wrong results, not an error).
+    // toPhysical enforces this on column-mapped tables; this is the
+    // chokepoint every OTHER single-dir write funnels through.
     statsCols.foreach(requireStatsGrammarSafe)
-    val agg = StatsAgg.of(df.schema, statsCols)
-    val aggs = agg.aggs.zipWithIndex.map { case (a, i) => a.as(s"c$i") }
-    val obs = org.apache.spark.sql.Observation(
-      "graft_stats_" + java.util.UUID.randomUUID().toString.take(8))
-    val wrapped = df.observe(obs, aggs.head, aggs.tail: _*)
-    val mk = (spark: SparkSession, rp: Path, dirName: String,
-      isDelta: Boolean) => {
-      val m = obs.get
-      finishEntries(spark, rp,
-        Seq(agg.decode(dirName, i => m.getOrElse(s"c$i", null))))
-        .head.copy(isDelta = isDelta)
+    val cols = statsCols.distinct.filter(c => files.forall(_.sketches.contains(c)))
+    val byUtf8: Ordering[String] = (a, b) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    def span[T](bs: Seq[(T, T)])(implicit o: Ordering[T]): Option[(T, T)] =
+      if (bs.isEmpty) None else Some((bs.map(_._1).min, bs.map(_._2).max))
+    val rows = files.map(_.rows).sum
+    val strs = cols.flatMap(c =>
+      span(files.flatMap(_.strBounds.get(c)))(byUtf8).map(c -> _))
+    val hll = cols.map { c =>
+      val merged = files.foldLeft(new HllSketch(hllLgK, TgtHllType.HLL_8)) {
+        (acc, f) =>
+          val u = new Union(hllLgK)
+          u.update(acc)
+          u.update(HllSketch.heapify(f.sketches(c)))
+          u.getResult(TgtHllType.HLL_8)
+      }
+      c -> java.util.Base64.getEncoder.encodeToString(
+        merged.toUpdatableByteArray)
     }
-    (wrapped, mk)
+    val raw = Entry(isDelta = false, dirName,
+      Map(rowsKey -> (rows, rows)) ++
+        cols.flatMap(c => span(files.flatMap(_.bounds.get(c))).map(c -> _)) ++
+        cols.map { c =>
+          val n = files.map(_.nulls.getOrElse(c, 0L)).sum
+          s"$nullsPrefix$c" -> (n, n)
+        },
+      strs.flatMap { case (c, (mn, mx)) => strStatBounds(mn, mx).map(c -> _) }
+        .toMap,
+      // a string column whose min == max holds EXACTLY ONE distinct
+      // non-null value: the `sx:` exact marker (see StatsAgg.decode)
+      strs.collect { case (c, (mn, mx)) if mn == mx &&
+        mn.getBytes("UTF-8").length <= strStatMaxBytes => c -> hexOf(mn)
+      }.toMap,
+      hll.toMap)
+    finishEntries(spark, rp, Seq(raw),
+      Map(dirName -> files.map(_.bytes).sum)).head
   }
 
   /** Batched [[statsEntry]] for the aligned z-prefix buckets one
@@ -1447,7 +1500,6 @@ object TxTable {
     batchTag: Option[String] = None,
     skipIf: Int => Boolean = _ => false): Int = {
     val spark = df.sparkSession
-    val (fs, rp) = fsFor(spark, root)
     // persistent CHECK constraints gate EVERY write face (append,
     // overwrite, streaming epochs) with ZERO extra scan: the guard
     // observes violation counts during the write action itself, and
@@ -1457,35 +1509,47 @@ object TxTable {
     // against a constraint on a dropped column) fails analysis loudly
     // — DROP CONSTRAINT first, never silently skip.
     val head0 = resolve(spark, root, -1)
-    val meta0 = head0.meta
+    val (guarded, verifyChecks) = checkGuard(df, head0.meta.checks)
+    // appends translate logical→physical under a column mapping
+    // (widening extends the map); an overwrite replaces all content
+    // with the caller's logical frame, so its files are born logical
+    // and the mapping resets
+    val m0 = head0.meta.colMap
+    val (physDf, extMap) =
+      if (keepPrev) toPhysicalFrame(guarded, m0) else (guarded, None)
+    val physStats =
+      if (keepPrev) statsCols.map(physName(m0, _)) else statsCols
+    commitDir(spark, root, head0, op, keepPrev, statsCols, physStats, extMap,
+      preCommitCheck, batchTag, skipIf) { (rp, dirName) =>
+      val entry = writeDir(spark, rp, dirName, physDf, physStats)
+      verifyChecks()
+      entry
+    }
+  }
+
+  /** Commit one new data dir — `write` fills the ledger-staged dir it
+    * is handed and returns its entry — as `op` onto `head0`'s table:
+    * `dirs(prev) ++ [it]` when `keepPrev`, else `[it]` alone with the
+    * stats headers reset to `statsCols`. The body of [[writeAndCommit]]
+    * and of a streaming sink's plain append epoch ([[appendEpoch]]). */
+  private def commitDir(spark: SparkSession, root: String, head0: Head,
+    op: String, keepPrev: Boolean, statsCols: Seq[String],
+    physStats: Seq[String], extMap: Option[Seq[(String, String)]],
+    preCommitCheck: Int => Unit, batchTag: Option[String],
+    skipIf: Int => Boolean)(write: (Path, String) => Entry): Int = {
+    val rp = fsFor(spark, root)._2
     // a plain append onto a hash-bucketed layout would silently break
     // the clustering contract every bucketed SPJ trusts — refuse
     // loudly (an overwrite REPLACES content, so it may reset the
     // layout; its commit drops the declaration)
-    if (keepPrev) meta0.bucketBy.foreach { case (c, n) =>
+    if (keepPrev) head0.meta.bucketBy.foreach { case (c, n) =>
       throw new IllegalStateException(
         s"txtable: $root is bucket-clustered (bucketby:$c,$n); a " +
           "plain append would break the layout - appendBucketedBy " +
           "maintains it, overwrite replaces it")
     }
-    val (guarded, verifyChecks) = checkGuard(df, meta0.checks)
-    // appends translate logical→physical under a column mapping
-    // (widening extends the map); an overwrite replaces all content
-    // with the caller's logical frame, so its files are born logical
-    // and the mapping resets
-    val m0 = meta0.colMap
-    val (physDf, extMap) =
-      if (keepPrev) toPhysicalFrame(guarded, m0) else (guarded, None)
-    val physStats =
-      if (keepPrev) statsCols.map(physName(m0, _)) else statsCols
     commitRetry(spark, root, Some(head0)) { stage =>
-      val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
-      // stats ride the write action (observeStats) — no post-write
-      // rescan of the batch just to record its commit-line stats
-      val (obsDf, mkEntry) = observeStats(physDf, physStats)
-      obsDf.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
-      verifyChecks()
-      val entry = mkEntry(spark, rp, dirName, false)
+      val entry = write(rp, stage(s"data/$op-${java.util.UUID.randomUUID()}"))
       head =>
         // a concurrent writer may have landed this same micro-batch
         // between the caller's pre-check and the claim (appendBatch)
@@ -1510,6 +1574,38 @@ object TxTable {
               .withStats(physStats), added = Seq(entry.line)))
           }
         }
+    }
+  }
+
+  /** Commit a streaming sink's plain append epoch: the files its
+    * writers staged under the snapshot's physical names (`st`) move by
+    * rename into one new dir, with the stats those writers saw — the
+    * epoch's rows are never read back or written again. Same duties
+    * as [[appendBatch]]: the `batch:` tag, a skip when the stream
+    * already applied the epoch, `preCommit` per attempt, and the
+    * table's CHECK constraints, here checked on the staged files. An
+    * empty epoch commits a zero-row dir carrying the schema. */
+  private[graft] def appendEpoch(spark: SparkSession, root: String,
+    st: Staging, staged: Seq[TxStagedFile], statsCols: Seq[String],
+    epoch: Epoch): Int = {
+    val (fs, rp) = fsFor(spark, root)
+    val sid = sanitizeStreamId(epoch.streamId)
+    def applied(v: Int): Boolean =
+      appliedBatchId(fs, rp, v, sid).exists(_ >= epoch.batchId)
+    val head0 = resolve(spark, root, -1)
+    if (applied(head0.version)) return head0.version
+    val extMap = st.extend(head0.meta.colMap)
+    if (staged.nonEmpty && head0.meta.checks.nonEmpty)
+      enforceChecksNow(toLogical(spark.read.schema(st.fileSchema)
+        .parquet(staged.map(_.path): _*), extMap), head0.meta.checks)
+    val physStats = st.physOf(statsCols)
+    commitDir(spark, root, head0, "append", keepPrev = true, statsCols,
+      physStats, extMap, epoch.preCommit, Some(s"$sid:${epoch.batchId}"),
+      applied) { (rp, dirName) =>
+      if (staged.nonEmpty)
+        promotedEntry(spark, fs, rp, dirName, physStats, staged)
+      else factsEntry(spark, rp, dirName, physStats,
+        emptyFile(spark, rp, dirName, st.fileSchema, physStats))
     }
   }
 
@@ -1696,11 +1792,10 @@ object TxTable {
       if (lines.nonEmpty || head.entries.isEmpty) lines
       else {
         val src = head.entries.head.dir
-        val d = writeEmptyDir(spark, rp,
-          stage(s"data/${c.op}-${java.util.UUID.randomUUID()}"),
-          dirSchemas(spark, rp, Seq(src))(src))
-        Seq(statsEntry(spark, rp, d,
-          c.meta.keys.getOrElse(Seq.empty) ++ c.meta.statsCols).line)
+        val d = stage(s"data/${c.op}-${java.util.UUID.randomUUID()}")
+        val statsCols = c.meta.keys.getOrElse(Seq.empty) ++ c.meta.statsCols
+        Seq(factsEntry(spark, rp, d, statsCols, emptyFile(spark, rp, d,
+          dirSparkSchemas(spark, rp, Seq(src))(src), statsCols)).line)
       }
     }
     // the won version and its lines; no lines = the writer skipped
@@ -1967,13 +2062,11 @@ object TxTable {
         .select((keyCols.map(col) ++ valueCols.map(c =>
           coalesce(col(c), col(s"_base_$c")).as(c))): _*)
       val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
-      val (obsMerged, mkEntry) = observeStats(merged, keyCols)
-      obsMerged.write.mode("overwrite")
-        .parquet(new Path(rp, dirName).toString)
+      val entry = writeDir(spark, rp, dirName, merged, keyCols)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
       Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
-        rest = Drop, added = Seq(mkEntry(spark, rp, dirName, false).line)))
+        rest = Drop, added = Seq(entry.line)))
     }
   }
 
@@ -2043,12 +2136,11 @@ object TxTable {
             .otherwise(col(c)).as(c)
         }: _*)
       val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
-      val (obsOut, mkEntry) = observeStats(out, keyCols)
-      obsOut.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
+      val entry = writeDir(spark, rp, dirName, out, keyCols)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
       Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
-        rest = Drop, added = Seq(mkEntry(spark, rp, dirName, false).line)))
+        rest = Drop, added = Seq(entry.line)))
     }
   }
 
@@ -2104,10 +2196,8 @@ object TxTable {
       toPhysicalFrame(latest, m0, exclude = Set("op", "seq"))
     commitRetry(spark, root, Some(head0)) { stage =>
       val dirName = stage(s"data/delta-${java.util.UUID.randomUUID()}")
-      val (obsLatest, mkEntry) = observeStats(latestPhys, physKeys)
-      obsLatest.write.mode("overwrite")
-        .parquet(new Path(rp, dirName).toString)
-      val entry = mkEntry(spark, rp, dirName, true)
+      val entry = writeDir(spark, rp, dirName, latestPhys, physKeys,
+        isDelta = true)
       head =>
         // a concurrent writer may have landed the same batch between
         // the pre-check and the claim: re-check against the claim's
@@ -2458,11 +2548,8 @@ object TxTable {
       // under their own maps
       val keys = head.meta.keys.map(_.map(logicalName(m, _)))
       val statsCols = head.meta.statsCols.map(logicalName(m, _))
-      val (obsResolved, mkEntry) = observeStats(resolved,
+      val entry = writeDir(spark, rp, dirName, resolved,
         keys.getOrElse(Seq.empty) ++ statsCols)
-      obsResolved.write.mode("overwrite")
-        .parquet(new Path(rp, dirName).toString)
-      val entry = mkEntry(spark, rp, dirName, false)
       Some(Commit("compact", head.meta.rewritten(keys, statsCols),
         rest = Drop, added = Seq(entry.line)))
     }
@@ -2571,11 +2658,8 @@ object TxTable {
             .map(e => fillDeclaredDefaults(
               visibleDirFrame(spark, rp, e), addedNow))
             .reduce(_.unionByName(_, allowMissingColumns = true))
-          val (obsMerged, mkEntry) = observeStats(merged,
+          val entry = writeDir(spark, rp, dirName, merged,
             keys.getOrElse(Seq.empty) ++ statsCols)
-          obsMerged.write.mode("overwrite")
-            .parquet(new Path(rp, dirName).toString)
-          val entry = mkEntry(spark, rp, dirName, false)
           // a merged bucket dir RE-RECORDS its id: every bin member
           // carried the same `_bucket` (it's in the group key), so
           // the proof survives the pack
@@ -2654,61 +2738,56 @@ object TxTable {
         c.phys -> c.internalDefault }.toMap)
   }
 
-  /** Move executor-staged files into a new `data/<op>-<uuid>` dir,
-    * staged through `stage`; returns its name. */
-  private def promoteStaged(fs: FileSystem, rp: Path, op: String,
-    staged: Seq[String], stage: String => String): String = {
-    val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
+  /** Move exactly the staged `files` into dir `dirName` by rename —
+    * never a listing of where they were staged, so a file no committed
+    * task reported cannot land in a committed dir. */
+  private def promoteStaged(fs: FileSystem, rp: Path, dirName: String,
+    files: Seq[TxStagedFile]): Unit = {
     val dirPath = new Path(rp, dirName)
     fs.mkdirs(dirPath)
-    staged.foreach { f =>
-      val src = new Path(f)
+    files.foreach { f =>
+      val src = new Path(f.path)
       require(fs.rename(src, new Path(dirPath, src.getName)),
-        s"txtable: failed to stage $f into $dirName")
+        s"txtable: failed to stage ${f.path} into $dirName")
     }
-    dirName
   }
 
-  /** Write dir `dirName` as one zero-row parquet file carrying the
-    * parquet `schema` as given (nested columns included) — no Spark
-    * job; returns `dirName`. */
-  private def writeEmptyDir(spark: SparkSession, rp: Path, dirName: String,
-    schema: org.apache.parquet.schema.MessageType): String = {
-    import org.apache.parquet.hadoop.ParquetFileWriter
-    val w = new ParquetFileWriter(
-      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new Path(new Path(rp, dirName), "part-empty.parquet"),
-        spark.sessionState.newHadoopConf()),
-      schema, ParquetFileWriter.Mode.CREATE,
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null,
-      org.apache.parquet.column.ParquetProperties.builder().build())
-    w.start()
-    w.end(java.util.Collections.emptyMap[String, String]())
-    dirName
+  /** [[promoteStaged]] `files` into `dirName`, and its [[factsEntry]]
+    * on `statsCols`. */
+  private def promotedEntry(spark: SparkSession, fs: FileSystem, rp: Path,
+    dirName: String, statsCols: Seq[String],
+    files: Seq[TxStagedFile]): Entry = {
+    promoteStaged(fs, rp, dirName, files)
+    factsEntry(spark, rp, dirName, statsCols, files)
   }
 
-  /** The parquet schema Spark writes for `schema`. */
-  private def parquetSchemaOf(
-    schema: org.apache.spark.sql.types.StructType)
-    : org.apache.parquet.schema.MessageType =
-    new org.apache.spark.sql.execution.datasources.parquet
-      .SparkToParquetSchemaConverter(
-        org.apache.spark.sql.internal.SQLConf.get).convert(schema)
+  /** One zero-row file of `schema` staged into dir `dirName` by the
+    * committing JVM itself — what keeps an emptied snapshot readable;
+    * returns its facts. */
+  private def emptyFile(spark: SparkSession, rp: Path, dirName: String,
+    schema: StructType, sketchCols: Seq[String]): Seq[TxStagedFile] = {
+    val w = TxStagedWriterFactory.of(spark, new Path(rp, dirName).toString,
+      schema, sketchCols = sketchCols).writer(0, 0L)
+    w.touch()
+    w.staged()
+  }
 
   /** Commit a group-based rewrite: swap `plan`'s affected dirs for ONE
-    * new data dir holding the staged files (stats computed over it).
+    * new data dir holding the staged files (stats as their writers saw
+    * them).
     * Unaffected entry lines carry over from the CURRENT head — a
     * concurrent commit that only touched other dirs composes fine, but
     * one that changed or removed an affected dir's line aborts loudly
     * ([[commitRetry]]). */
   private[sources] def cowCommit(spark: SparkSession, root: String,
-    plan: CowPlan, staged: Seq[String], op: String): Int = {
+    plan: CowPlan, staged: Seq[TxStagedFile], op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage =>
       val added =
         if (staged.isEmpty) Seq.empty
-        else Seq(statsEntry(spark, rp, promoteStaged(fs, rp, op, staged, stage),
-          plan.keys ++ plan.statsCols).line)
+        else Seq(promotedEntry(spark, fs, rp, stage(s"data/$op-" +
+          java.util.UUID.randomUUID()), plan.keys ++ plan.statsCols,
+          staged).line)
       head => Some(Commit(op, planMeta(head, plan),
         read = plan.affectedLines.map(_ -> Drop).toMap, added = added))
     }
@@ -2736,12 +2815,15 @@ object TxTable {
     * PHYSICAL names); overwrite replaces all content with the staged
     * logical-born files and resets the column mapping, exactly like
     * [[overwrite]]. An empty overwrite keeps a readable zero-row dir
-    * (written from `writeSchema`). An empty append is a no-op. */
+    * (written from `writeSchema`). An empty append is a no-op. The
+    * entry takes its stats from the writers' facts, which cover the
+    * `sketched` columns ([[appendStatsCols]] when the write began). */
   private[sources] def appendStaged(spark: SparkSession, root: String,
-    staged: Seq[String], replace: Boolean,
+    staged: Seq[TxStagedFile], replace: Boolean,
     writeSchema: org.apache.spark.sql.types.StructType,
-    bootstrapStatsCols: Seq[String] = Seq.empty,
-    bucketSpec: Option[(String, Int)] = None): Int = {
+    bootstrapStatsCols: Seq[String],
+    bucketSpec: Option[(String, Int)],
+    sketched: Seq[String]): Int = {
     val (fs, rp) = fsFor(spark, root)
     if (staged.isEmpty && !replace) return latestVersion(spark, root)
     // a DECLARED-bucketed table (CREATE ... PARTITIONED BY
@@ -2756,7 +2838,7 @@ object TxTable {
       case Some((bcol, n)) if staged.nonEmpty =>
         // append-staged files speak the snapshot's PHYSICAL names;
         // overwrite files are born logical
-        val raw = spark.read.parquet(staged: _*)
+        val raw = spark.read.parquet(staged.map(_.path): _*)
         val df =
           if (replace) raw
           else colMapOf(spark, root).map(liveMap(_))
@@ -2772,18 +2854,31 @@ object TxTable {
       case _ => ()
     }
     commitRetry(spark, root) { stage =>
-      val dirName = promoteStaged(fs, rp,
-        if (replace) "overwrite" else "append", staged, stage)
+      val dirName = stage(s"data/${if (replace) "overwrite" else "append"}-" +
+        java.util.UUID.randomUUID())
+      promoteStaged(fs, rp, dirName, staged)
       // empty INSERT OVERWRITE: a zero-row file carries the schema
-      if (staged.isEmpty)
-        writeEmptyDir(spark, rp, dirName, parquetSchemaOf(writeSchema))
+      val files =
+        if (staged.nonEmpty) staged
+        else emptyFile(spark, rp, dirName, writeSchema, bootstrapStatsCols)
+      // the writers sketched `sketched`; a head whose stats columns
+      // changed since the write was planned cannot take these facts
+      def entryOn(statsCols: Seq[String]): Entry = {
+        if (!statsCols.forall(sketched.contains))
+          throw new java.util.ConcurrentModificationException(
+            s"txtable: the stats columns of $root changed under the " +
+              s"write (now ${statsCols.mkString(",")}, written for " +
+              s"${sketched.mkString(",")}); re-run it")
+        factsEntry(spark, rp, dirName, statsCols, files)
+      }
       head =>
         // a table's FIRST content (bootstrap INSERT, or replace-all)
         // declares its stats columns: write-time per-dir stats are what
         // feed dir pruning, metadata aggregates and the CBO, and a
         // SQL-first table should get them without the Scala API
         if (replace) {
-          val entry = statsEntry(spark, rp, dirName, bootstrapStatsCols)
+          val entry = entryOn(
+            appendStatsCols(head.version, head.meta, replace, bootstrapStatsCols))
           Some(Commit("overwrite",
             head.meta.rewritten(None, bootstrapStatsCols), rest = Drop,
             added = Seq(entry.line)))
@@ -2792,17 +2887,34 @@ object TxTable {
             s"txtable: $root is bucket-clustered; INSERT INTO would " +
               "break the layout - appendBucketedBy maintains it, " +
               "INSERT OVERWRITE replaces it")
-          val statsCols =
-            if (head.version == 0) bootstrapStatsCols.distinct
-            else (head.meta.keys.getOrElse(Seq.empty) ++
-              head.meta.statsCols).distinct
-          val entry = statsEntry(spark, rp, dirName, statsCols)
+          val statsCols = appendStatsCols(head.version, head.meta, replace,
+            bootstrapStatsCols)
+          val entry = entryOn(statsCols)
           Some(Commit("append",
             if (head.version == 0) head.meta.copy(statsCols = statsCols)
             else head.meta,
             added = Seq(entry.line)))
         }
     }
+  }
+
+  /** The stats columns an [[appendStaged]] onto `head` records: a
+    * table's FIRST content (bootstrap INSERT, or replace-all) declares
+    * `bootstrapStatsCols`; an append keeps the head's key and stats
+    * columns. */
+  private def appendStatsCols(version: Int, meta: TableMeta,
+    replace: Boolean, bootstrapStatsCols: Seq[String]): Seq[String] =
+    if (replace) bootstrapStatsCols
+    else if (version == 0) bootstrapStatsCols.distinct
+    else (meta.keys.getOrElse(Seq.empty) ++ meta.statsCols).distinct
+
+  /** [[appendStatsCols]] onto `root`'s latest snapshot — the columns an
+    * `INSERT`'s writers sketch. */
+  private[sources] def appendStatsCols(spark: SparkSession, root: String,
+    replace: Boolean, bootstrapStatsCols: Seq[String]): Seq[String] = {
+    val (fs, rp) = fsFor(spark, root)
+    val v = latestVersion(fs, rp)
+    appendStatsCols(v, metaAt(fs, rp, v), replace, bootstrapStatsCols)
   }
 
   /** Commit a MERGE-ON-READ row-level rewrite: the staged delete
@@ -2815,15 +2927,15 @@ object TxTable {
     * concurrent commits elsewhere compose. Scanned rows were already
     * sidecar-folded, so a coordinate can never double-kill. */
   private[sources] def deltaDmlCommit(spark: SparkSession, root: String,
-    plan: CowPlan, stagedInserts: Seq[String], stagedDeletes: Seq[String],
-    op: String): Int = {
+    plan: CowPlan, stagedInserts: Seq[TxStagedFile],
+    stagedDeletes: Seq[String], op: String): Int = {
     val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage =>
       val inserted =
         if (stagedInserts.isEmpty) Seq.empty
-        else Seq(statsEntry(spark, rp,
-          promoteStaged(fs, rp, op, stagedInserts, stage),
-          plan.keys ++ plan.statsCols).line)
+        else Seq(promotedEntry(spark, fs, rp, stage(s"data/$op-" +
+          java.util.UUID.randomUUID()), plan.keys ++ plan.statsCols,
+          stagedInserts).line)
       val dead =
         if (stagedDeletes.isEmpty) Map.empty[String, Pdel]
         else writePdels(spark, rp, spark.read.parquet(stagedDeletes: _*),
@@ -2841,43 +2953,39 @@ object TxTable {
     * that received any (staged through `stage`). ONE job whatever the
     * dir count: coordinates cluster by dir (hash repartition = all of
     * a dir's rows in one task) and each task streams its dirs' pairs
-    * straight into sidecar files through TxParquetIO — a scattered
+    * straight into sidecar files through TxStagedWriter — a scattered
     * delete touching 10^4 dirs costs one shuffle of O(changed)
     * coordinate rows, not 10^4 driver jobs. Dedup guards the `_rows`
     * subtraction against a double-fired coordinate. */
   private def writePdels(spark: SparkSession, rp: Path, coords: DataFrame,
     stage: String => String): Map[String, Pdel] = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val pdSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("_file",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("_pos",
+        org.apache.spark.sql.types.LongType)))
+    val conf = TxParquetIO.writeConf(spark, pdSchema)
     val rootStr = rp.toString
     import spark.implicits._
     coords.dropDuplicates("_dir", "_file", "_pos")
       .repartition(col("_dir"))
       .mapPartitions { rows =>
         val out = scala.collection.mutable.Map[String,
-          (String, org.apache.parquet.hadoop.ParquetWriter[
-            org.apache.spark.sql.catalyst.InternalRow], Array[Long])]()
-        val pdSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("_pos",
-            org.apache.spark.sql.types.LongType)))
+          (String, TxStagedWriter)]()
         rows.foreach { r =>
           val d = r.getString(0)
-          val (_, w, n) = out.getOrElseUpdate(d, {
+          val (_, w) = out.getOrElseUpdate(d, {
             val name = s"_pdel-${java.util.UUID.randomUUID()}"
             val p = new Path(new Path(new Path(rootStr), d), name)
-            (name, TxParquetIO.writer(
-              new Path(p, "part-0.parquet"), pdSchema, conf.value),
-              Array(0L))
+            (name, new TxStagedWriter(new Path(p, "part-0").toString,
+              pdSchema, Seq.empty, conf))
           })
           w.write(org.apache.spark.sql.catalyst.InternalRow(
             org.apache.spark.unsafe.types.UTF8String
               .fromString(r.getString(1)), r.getLong(2)))
-          n(0) += 1
         }
-        out.iterator.map { case (d, (name, w, n)) =>
-          w.close(); (d, name, n(0))
+        out.iterator.map { case (d, (name, w)) =>
+          (d, name, w.staged().map(_.rows).sum)
         }
       }.collect().map { case (d, name, n) =>
         stage(s"$d/$name")
@@ -2890,8 +2998,7 @@ object TxTable {
     * frame, the same frame with the snapshot's logical names laid over
     * it, and those alias names) and returns the dir's outcome, or the
     * rows that replace it in physical columns. Those land in a new
-    * `data/<op>-<uuid>` dir whose stats ride the write action
-    * (observeStats) — no post-write rescan. */
+    * `data/<op>-<uuid>` dir ([[writeDir]]). */
   private def rewriteDir(spark: SparkSession, rp: Path, e: Entry,
     m: Option[Seq[(String, String)]], op: String, statsCols: Seq[String],
     stage: String => String)(rewrite: (DataFrame, DataFrame, Seq[String])
@@ -2902,9 +3009,7 @@ object TxTable {
       case Left(o) => o
       case Right(rows) =>
         val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
-        val (obsDf, mkEntry) = observeStats(rows, statsCols.distinct)
-        obsDf.write.mode("overwrite").parquet(new Path(rp, dirName).toString)
-        Replace(mkEntry(spark, rp, dirName, false).line)
+        Replace(writeDir(spark, rp, dirName, rows, statsCols).line)
     }
   }
 
@@ -3568,7 +3673,18 @@ object TxTable {
     * commit promotes exactly the names the files were written under. */
   private[graft] final case class Staging(schema: StructType,
     partCols: Seq[String], fileSchema: StructType, physParts: Seq[String],
-    added: Seq[(String, String)])
+    added: Seq[(String, String)]) {
+    /** Mapping `m` gaining the staged columns it has never seen. */
+    def extend(m: Option[Seq[(String, String)]]): Option[Seq[(String, String)]] =
+      m.map(pairs =>
+        pairs ++ added.filterNot(a => liveMap(pairs).exists(_._1 == a._1)))
+    /** The physical names of the logical `cols` the write holds. */
+    def physOf(cols: Seq[String]): Seq[String] =
+      cols.flatMap(c => schema.fieldNames.indexOf(c) match {
+        case -1 => None
+        case i => Some(fileSchema(i).name)
+      })
+  }
 
   /** The [[Staging]] of a write of `schema` into `root`'s latest
     * snapshot. */
@@ -3665,20 +3781,17 @@ object TxTable {
       }
     }
     val meta0 = head0.meta
-    // a mapping gains the staged columns it has never seen
-    def extended(m: Option[Seq[(String, String)]]) = m.map(pairs =>
-      pairs ++ st.added.filterNot(a => liveMap(pairs).exists(_._1 == a._1)))
     val physParts = st.physParts
     val statsCols =
       (if (meta0.statsCols.nonEmpty) meta0.statsCols
-      else bootstrapStats.map(physName(extended(meta0.colMap), _)))
+      else bootstrapStats.map(physName(st.extend(meta0.colMap), _)))
         .filterNot(physParts.contains).distinct
     (physParts ++ statsCols).foreach(requireStatsGrammarSafe)
     // catalog writes arrive CHECK-enforced; an epoch's rows are already
     // parquet on disk, so read back only the constraints' columns
     if (epoch.isDefined && meta0.checks.nonEmpty)
       enforceChecksNow(toLogical(spark.read.parquet(staged.map(_.path): _*),
-        extended(meta0.colMap)), meta0.checks)
+        st.extend(meta0.colMap)), meta0.checks)
     val opName = if (mode == "append") "append" else "overwrite"
     val stagedTuples = staged.map(_.partVals.flatten).toSet
     val partSchema = StructType(st.partCols.map(st.schema(_)))
@@ -3741,11 +3854,13 @@ object TxTable {
           // the table keeps a readable zero-row dir carrying the schema
           val blank =
             if (newEntries.nonEmpty || dropped.size < entries0.size) Seq.empty
-            else Seq(statsEntry(spark, rp, writeEmptyDir(spark, rp,
-              stage(s"data/$opName-${java.util.UUID.randomUUID()}"),
-              parquetSchemaOf(st.fileSchema)), Seq.empty).line)
+            else {
+              val d = stage(s"data/$opName-${java.util.UUID.randomUUID()}")
+              Seq(factsEntry(spark, rp, d, Seq.empty,
+                emptyFile(spark, rp, d, st.fileSchema, Seq.empty)).line)
+            }
           val meta = head.meta.copy(bucketBy = None,
-            colMap = extended(head.meta.colMap)).withStats(physParts ++ statsCols)
+            colMap = st.extend(head.meta.colMap)).withStats(physParts ++ statsCols)
           Some(Commit(opName, tag.fold(meta)(meta.tagged),
             read = dropped.map(_.line -> Drop).toMap,
             added = newEntries.map(_.line) ++ blank))
@@ -3981,24 +4096,25 @@ object TxTable {
     val cache = scala.collection.mutable.HashMap[
       org.apache.parquet.schema.MessageType,
       org.apache.spark.sql.types.StructType]()
-    // nullable everywhere, matching inference (file reads are always
-    // nullable; StructType.asNullable itself is private[spark])
-    def nullify(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = dt match {
-      case st: org.apache.spark.sql.types.StructType =>
-        org.apache.spark.sql.types.StructType(st.fields.map(f =>
-          f.copy(dataType = nullify(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
-        a.copy(elementType = nullify(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
-        m.copy(keyType = nullify(m.keyType),
-          valueType = nullify(m.valueType), valueContainsNull = true)
-      case other => other
-    }
     msgs.map { case (d, mt) =>
-      d -> cache.getOrElseUpdate(mt, nullify(conv.convert(mt))
+      d -> cache.getOrElseUpdate(mt, nullable(conv.convert(mt))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     }
+  }
+
+  /** `dt` nullable everywhere, matching inference (file reads are
+    * always nullable; StructType.asNullable itself is private[spark]). */
+  private[graft] def nullable(dt: org.apache.spark.sql.types.DataType)
+    : org.apache.spark.sql.types.DataType = dt match {
+    case st: org.apache.spark.sql.types.StructType =>
+      org.apache.spark.sql.types.StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: org.apache.spark.sql.types.ArrayType =>
+      a.copy(elementType = nullable(a.elementType), containsNull = true)
+    case m: org.apache.spark.sql.types.MapType =>
+      m.copy(keyType = nullable(m.keyType),
+        valueType = nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** `f` over every item on a driver pool of at most 16 threads — the
@@ -6423,10 +6539,7 @@ object TxTable {
             fill(readDirFrame(spark, rp, e.dir)) }
             .reduce(_.unionByName(_, allowMissingColumns = true))
         val dirName = stage(s"data/compact-${java.util.UUID.randomUUID()}")
-        val (obsFolded, mkEntry) = observeStats(folded, head.meta.statsCols)
-        obsFolded.write.mode("overwrite")
-          .parquet(new Path(rp, dirName).toString)
-        val entry = mkEntry(spark, rp, dirName, false)
+        val entry = writeDir(spark, rp, dirName, folded, head.meta.statsCols)
         Some(Commit("compact", head.meta.copy(bucketBy = None),
           read = fold.map(_._1.line -> Drop).toMap, added = Seq(entry.line)))
       }

@@ -100,17 +100,17 @@ class TxTableSource extends RelationProvider
     * the SESSION CATALOG (CREATE TABLE ... USING graft-tx) injects a
     * `provider` key that path-based reads/writes never carry, and its
     * table must be the BATCH relation (data schema); everything else
-    * is the streaming face (change-feed schema when the table exists,
-    * empty for a sink about to create it — there the query's own
-    * schema is authoritative and the table's is unused). */
+    * is the streaming face, whose change-feed schema [[GraftTxTable]]
+    * derives only when a stream asks for it — a path-based BATCH read
+    * also passes through here before it falls back to the V1
+    * relation, and must not build a feed it then discards. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
     val root = TxTableSource.rootOfV2(options)
-    if (!TxTable.exists(spark, root)) new StructType()
-    else if (TxTableSource.isCatalogContext(options) ||
-      options.containsKey("partitionCol"))
+    if ((TxTableSource.isCatalogContext(options) ||
+      options.containsKey("partitionCol")) && TxTable.exists(spark, root))
       TxRelation(spark, root, TxTableSource.paramsOf(options)).schema
-    else TxStreamSource.feedSchema(spark, root)
+    else new StructType()
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -986,13 +986,23 @@ class GraftTxTable(tableSchema: StructType, root: String,
   extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"graft-tx $root"
-  override def schema(): StructType = tableSchema
+
+  // the change-feed schema, derived when a stream first asks (empty
+  // for a missing table, and for a sink about to create one — there
+  // the query's own schema is authoritative)
+  private lazy val feedSchema: StructType =
+    if (tableSchema.nonEmpty || !TxTable.exists(SparkSession.active, root))
+      tableSchema
+    else TxStreamSource.feedSchema(SparkSession.active, root)
+  override def schema(): StructType = feedSchema
 
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = new java.util.HashSet[TableCapability]
     caps.add(TableCapability.STREAMING_WRITE)
     // no feed schema (missing table) ⇒ not readable as a stream yet
-    if (tableSchema.nonEmpty) caps.add(TableCapability.MICRO_BATCH_READ)
+    if (tableSchema.nonEmpty ||
+      TxTable.exists(SparkSession.active, root))
+      caps.add(TableCapability.MICRO_BATCH_READ)
     caps
   }
 
@@ -1023,11 +1033,11 @@ class GraftTxTable(tableSchema: StructType, root: String,
     maxRows.foreach(n => require(n >= 1,
       s"graft-tx streaming: maxRowsPerTrigger must be >= 1, got $n"))
     () => new Scan {
-      override def readSchema(): StructType = tableSchema
+      override def readSchema(): StructType = feedSchema
       override def description(): String =
         s"graft-tx change feed of $root from v$startingVersion"
       override def toMicroBatchStream(ckpt: String): MicroBatchStream =
-        new TxMicroBatchStream(root, tableSchema, startingVersion,
+        new TxMicroBatchStream(root, feedSchema, startingVersion,
           maxVersions, maxBytes, maxRows)
     }
   }
@@ -2180,10 +2190,11 @@ class TxWriteBuilder(root: String, info: LogicalWriteInfo)
   * epoch's rows as parquet files under `_staging/<stream>/epoch-<id>`
   * ([[TxStagedWriter]] — no Spark plan in the executor), and the
   * driver-side `commit` applies the staged batch through the
-  * transactional write paths — `mergeDelta` (keyed CDC), `appendBatch`
-  * (plain), `overwrite` (Complete mode), the rename promote
-  * (`partitionBy`) — carrying the epoch id where
-  * replay protection applies. A replayed epoch re-stages its files and
+  * transactional write paths — the rename promotes (`appendEpoch` for
+  * plain epochs, `promotePartitioned` under `partitionBy`), which
+  * never read the rows back, and `mergeDelta` (keyed CDC) and
+  * `overwrite` (Complete mode), which resolve them — carrying the
+  * epoch id where replay protection applies. A replayed epoch re-stages its files and
   * the batch tag recognizes it at commit: at-least-once delivery
   * composes to exactly-once table state, same contract as the V1 sink
   * this replaces (tags stay checkpoint-scoped and byte-compatible, so
@@ -2311,7 +2322,12 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
   private def stagingDir(epochId: Long) =
     s"$root/_staging/$streamId/epoch-$epochId"
 
-  // a partitioned epoch's staging (physical names), fixed when the
+  // unpartitioned complete-mode and keyed (CDC) epochs resolve rows,
+  // so they read their staged files back; every other epoch promotes
+  // them by rename
+  private val promotes = partCols.nonEmpty || (!complete && keyCols.isEmpty)
+
+  // a promoted epoch's staging (physical names), fixed when the
   // epoch's writer factory is created and promoted at its commit
   @volatile private var staging: TxTable.Staging = _
 
@@ -2319,13 +2335,13 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
     pinfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
     defaultLineageGuard
     val spark = SparkSession.active
-    val conf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
     val dir = s"$root/_staging/$streamId"
-    if (partCols.isEmpty) TxStagedWriterFactory(dir, schema, Seq.empty, conf)
+    if (!promotes) TxStagedWriterFactory.of(spark, dir, schema)
     else {
       staging = TxTable.staging(spark, root, schema, partCols)
-      TxStagedWriterFactory(dir, staging.fileSchema, staging.physParts, conf)
+      TxStagedWriterFactory.of(spark, dir, staging.fileSchema,
+        staging.physParts,
+        if (partCols.isEmpty) staging.physOf(statsCols) else Seq.empty)
     }
   }
 
@@ -2342,39 +2358,34 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
     // loudly instead of having its next epoch silently replay-dropped.
     val ownershipCheck: Int => Unit = _ => verifyDefaultOwnership()
     val spark = SparkSession.active
-    if (partCols.nonEmpty) {
-      TxTable.promotePartitioned(spark, root, staging,
-        TxStagedMessage.files(messages), statsCols,
-        epoch = Some(TxTable.Epoch(streamId, epochId, ownershipCheck)))
-      cleanup(epochId)
-      return
-    }
-    val files = TxStagedMessage.files(messages).map(_.path)
-    val batch =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), schema)
-      else spark.read.parquet(files.toIndexedSeq: _*)
+    val staged = TxStagedMessage.files(messages)
+    val epoch = TxTable.Epoch(streamId, epochId, ownershipCheck)
+    def batch = // the epoch's rows, for the commits that resolve them
+      if (staged.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.parquet(staged.map(_.path): _*)
         .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    if (complete) {
+    if (partCols.nonEmpty)
+      TxTable.promotePartitioned(spark, root, staging, staged, statsCols,
+        epoch = Some(epoch))
+    else if (promotes)
+      TxTable.appendEpoch(spark, root, staging, staged, statsCols, epoch)
+    else if (complete)
       // Complete mode re-emits the whole result: idempotent by value,
       // replays converge without a tag
       TxTable.overwrite(batch, root, statsCols)
-    } else keyCols match {
-      case Some(ks) =>
-        // CDC shape: (keys..., op, values..., seq) — seq is the
-        // within-batch resolution order (highest wins per key). Fail
-        // the stream with the contract, not an opaque window error.
-        require(batch.columns.contains("op") && batch.columns.contains("seq"),
-          "graft-tx sink with keys expects CDC rows " +
-            "(keys..., op, values..., seq); got " +
-            batch.columns.mkString("(", ", ", ")"))
-        TxTable.mergeDelta(spark, root, batch, ks,
-          batchId = Some(epochId), streamId = streamId,
-          preCommit = ownershipCheck)
-      case None =>
-        TxTable.appendBatch(batch, root, epochId, statsCols,
-          streamId = streamId, preCommit = ownershipCheck)
+    else {
+      // CDC shape: (keys..., op, values..., seq) — seq is the
+      // within-batch resolution order (highest wins per key). Fail
+      // the stream with the contract, not an opaque window error.
+      val rows = batch
+      require(rows.columns.contains("op") && rows.columns.contains("seq"),
+        "graft-tx sink with keys expects CDC rows " +
+          "(keys..., op, values..., seq); got " +
+          rows.columns.mkString("(", ", ", ")"))
+      TxTable.mergeDelta(spark, root, rows, keyCols.get,
+        batchId = Some(epochId), streamId = streamId,
+        preCommit = ownershipCheck)
     }
     cleanup(epochId)
   }
@@ -2394,15 +2405,22 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
 /** One staged parquet file and what its writer saw while writing it:
   * the row count, the byte length after close, the partition tuple
   * (Longs for integral and date keys, Strings for string keys, None
-  * for NULL), and for every flat column its null count and — for the
-  * columns parquet stores as INT32 or INT64 that hold a non-null
-  * value — its (min, max) in the encoding the footer records (day
-  * counts, unscaled decimals, timestamp micros). The writer saw every
-  * row, so these facts prove a file's tuple directly: the promote
-  * never trusts footer bounds, which may be truncated for strings. */
+  * for NULL), for every flat column its null count, and — for the columns
+  * parquet stores as INT32 or INT64 that hold a non-null value — its
+  * (min, max) in the encoding the footer records (day counts, unscaled
+  * decimals, timestamp micros). For each sketched column
+  * ([[TxStagedWriterFactory.sketchCols]]) it also keeps, as the
+  * per-dir statistics aggregate records them, the string (min, max)
+  * of a STRING column and one updatable HLL sketch. The writer saw
+  * every row, so these facts prove a file's tuple and a dir's stats
+  * directly: neither the promote nor the commit rescans what was
+  * written, and neither trusts footer bounds, which may be truncated
+  * for strings. */
 case class TxStagedFile(path: String, rows: Long, bytes: Long,
   partVals: Seq[Option[Any]], nulls: Map[String, Long],
-  bounds: Map[String, (Long, Long)])
+  bounds: Map[String, (Long, Long)],
+  strBounds: Map[String, (String, String)] = Map.empty,
+  sketches: Map[String, Array[Byte]] = Map.empty)
 
 /** Commit message of one writer task: every file it staged. */
 case class TxStagedMessage(files: Seq[TxStagedFile])
@@ -2414,42 +2432,65 @@ object TxStagedMessage {
     messages.toSeq.collect { case TxStagedMessage(fs) => fs }.flatten
 }
 
-/** The one writer factory of the DSv2 write faces: batch tasks stage
-  * under `dir`, streaming tasks under `dir/epoch-<id>`. */
+/** The one writer factory of every graft write: batch tasks stage
+  * under `dir`, streaming tasks under `dir/epoch-<id>`. `conf` comes
+  * from [[TxParquetIO.writeConf]] for `schema`; `sketchCols` are the
+  * columns whose string bounds and HLL sketch the writer keeps. */
 case class TxStagedWriterFactory(dir: String, schema: StructType,
-  partCols: Seq[String], conf: SerializableConfiguration)
+  partCols: Seq[String], conf: SerializableConfiguration,
+  sketchCols: Seq[String])
   extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
-    taskId: Long): DataWriter[InternalRow] =
-    new TxStagedWriter(s"$dir/part-$partitionId-$taskId", schema,
-      partCols, conf)
+    taskId: Long): DataWriter[InternalRow] = writer(partitionId, taskId)
   override def createWriter(partitionId: Int, taskId: Long,
     epochId: Long): DataWriter[InternalRow] =
     new TxStagedWriter(s"$dir/epoch-$epochId/part-$partitionId-$taskId",
-      schema, partCols, conf)
+      schema, partCols, conf, sketchCols)
+  def writer(partitionId: Int, taskId: Long): TxStagedWriter =
+    new TxStagedWriter(s"$dir/part-$partitionId-$taskId", schema,
+      partCols, conf, sketchCols)
+}
+
+object TxStagedWriterFactory {
+  /** The factory for writes of `schema` into `dir` in `spark`'s
+    * session. */
+  def of(spark: SparkSession, dir: String, schema: StructType,
+    partCols: Seq[String] = Seq.empty,
+    sketchCols: Seq[String] = Seq.empty): TxStagedWriterFactory =
+    TxStagedWriterFactory(dir, schema, partCols,
+      TxParquetIO.writeConf(spark, schema), sketchCols)
 }
 
 /** Stages one task's rows as ONE parquet file per contiguous run of
   * one `partCols` tuple — `<prefix>.parquet` when there are no
   * partition columns (the file never rolls), `<prefix>-<n>.parquet`
-  * otherwise — and reports each file's [[TxStagedFile]] facts. A
-  * partitioned Write requires its input clustered and sorted on the
-  * partition columns, so a run IS a tuple and the task stages exactly
-  * one file per tuple it owns; rolling on change keeps ONE open
-  * parquet writer per task (an open-writer map would buffer a row
-  * group PER VALUE — the memory shape hive-style dynamic partition
+  * otherwise — through Spark's own parquet writer
+  * ([[TxParquetIO.writer]]), and reports each file's [[TxStagedFile]]
+  * facts. A partitioned Write requires its input clustered and sorted
+  * on the partition columns, so a run IS a tuple and the task stages
+  * exactly one file per tuple it owns; rolling on change keeps ONE
+  * open parquet writer per task (an open-writer map would buffer a
+  * row group PER VALUE — the memory shape hive-style dynamic partition
   * writes sort specifically to avoid). Rows handed over unsorted only
   * make more, smaller files, each still single-valued. File creation
   * is lazy, so empty tasks stage nothing; task retries write distinct
   * names (taskId) and only committed tasks' messages reach the
-  * driver, so a zombie task cannot corrupt a commit. */
+  * commit, so a zombie task cannot corrupt it. The sketches are the
+  * ones Spark's `hll_sketch_agg` builds (lgK 12, HLL_8, the same
+  * `update` call per value), so a dir's merged sketch estimates what
+  * the aggregate over its rows estimates. */
 class TxStagedWriter(prefix: String, schema: StructType,
-  partCols: Seq[String], conf: SerializableConfiguration)
+  partCols: Seq[String], conf: SerializableConfiguration,
+  sketchCols: Seq[String] = Seq.empty)
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.types._
+  import org.apache.datasketches.hll.HllSketch
   private val partIdx = partCols.map(schema.fieldIndex)
   private val n = schema.length
-  private val flat = schema.fields.map(!_.dataType.isInstanceOf[ArrayType])
+  private val flat = schema.fields.map(_.dataType match {
+    case _: ArrayType | _: StructType | _: MapType => false
+    case _ => true
+  })
   // a column's value as parquet's INT32/INT64 footer statistics order it
   private val integral: Array[(InternalRow, Int) => Long] =
     schema.fields.map(_.dataType match {
@@ -2463,7 +2504,17 @@ class TxStagedWriter(prefix: String, schema: StructType,
         r.getDecimal(i, d.precision, d.scale).toUnscaledLong
       case _ => null
     })
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+  // the sketched columns: the integral and STRING ones
+  private val sketched: Array[Int] = sketchCols.distinct.flatMap { c =>
+    Some(schema.fieldNames.indexOf(c)).filter(i => i >= 0 && (schema(i).dataType match {
+      case LongType | IntegerType | ShortType | StringType => true
+      case _ => false
+    }))
+  }.toArray
+  private val isString = sketched.map(schema(_).dataType == StringType)
+  private val binary = org.apache.spark.sql.catalyst.util.CollationFactory
+    .fetchCollation(StringType.collationId)
+  private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = _
   private var path: org.apache.hadoop.fs.Path = _
   private var tuple: Seq[Option[Any]] = _
   private var files = List.empty[TxStagedFile]
@@ -2472,6 +2523,9 @@ class TxStagedWriter(prefix: String, schema: StructType,
   private val lo = new Array[Long](n)
   private val hi = new Array[Long](n)
   private val valued = new Array[Boolean](n)
+  private val strLo = new Array[UTF8String](sketched.length)
+  private val strHi = new Array[UTF8String](sketched.length)
+  private var sketches: Array[HllSketch] = _
 
   private def tupleOf(row: InternalRow): Seq[Option[Any]] =
     partIdx.map { i =>
@@ -2481,16 +2535,24 @@ class TxStagedWriter(prefix: String, schema: StructType,
       else Some(integral(i)(row, i))
     }
 
+  /** Open the next file (`t` its tuple). */
+  private def open(t: Seq[Option[Any]]): Unit = {
+    finish()
+    path = new org.apache.hadoop.fs.Path(
+      if (partCols.isEmpty) s"$prefix.parquet"
+      else s"$prefix-${files.size}.parquet")
+    writer = TxParquetIO.writer(path.toString, conf.value)
+    tuple = t
+    sketches = sketched.map(_ =>
+      new HllSketch(12, org.apache.datasketches.hll.TgtHllType.HLL_8))
+  }
+
+  /** Stage a zero-row file carrying the schema, unless one is open. */
+  def touch(): Unit = if (writer == null) open(partIdx.map(_ => None))
+
   override def write(row: InternalRow): Unit = {
     val t = tupleOf(row)
-    if (writer == null || t != tuple) {
-      finish()
-      path = new org.apache.hadoop.fs.Path(
-        if (partCols.isEmpty) s"$prefix.parquet"
-        else s"$prefix-${files.size}.parquet")
-      writer = TxParquetIO.writer(path, schema, conf.value)
-      tuple = t
-    }
+    if (writer == null || t != tuple) open(t)
     writer.write(row)
     rows += 1
     var i = 0
@@ -2504,6 +2566,23 @@ class TxStagedWriter(prefix: String, schema: StructType,
       }
       i += 1
     }
+    var j = 0
+    while (j < sketched.length) {
+      val c = sketched(j)
+      if (!row.isNullAt(c)) {
+        if (isString(j)) {
+          val s = row.getUTF8String(c)
+          if (strLo(j) == null || s.compareTo(strLo(j)) < 0)
+            strLo(j) = s.clone()
+          if (strHi(j) == null || s.compareTo(strHi(j)) > 0)
+            strHi(j) = s.clone()
+          // hll_sketch_agg skips the empty string
+          if (!binary.equalsFunction.apply(s, UTF8String.EMPTY_UTF8))
+            sketches(j).update(binary.sortKeyFunction.apply(s))
+        } else sketches(j).update(integral(c)(row, c))
+      }
+      j += 1
+    }
   }
 
   // metadata-aware writes (the row-level DML path): graft stages only
@@ -2516,14 +2595,20 @@ class TxStagedWriter(prefix: String, schema: StructType,
   private def finish(): Unit = if (writer != null) {
     writer.close()
     writer = null
-    val cols = (0 until n).filter(flat)
+    val name = (i: Int) => schema(i).name
     files ::= TxStagedFile(path.toString, rows,
       path.getFileSystem(conf.value).getFileStatus(path).getLen, tuple,
-      cols.map(i => schema(i).name -> nulls(i)).toMap,
-      cols.filter(valued).map(i => schema(i).name -> (lo(i), hi(i))).toMap)
+      (0 until n).filter(flat).map(i => name(i) -> nulls(i)).toMap,
+      (0 until n).filter(valued).map(i => name(i) -> (lo(i), hi(i))).toMap,
+      sketched.indices.filter(strLo(_) != null).map(j =>
+        name(sketched(j)) -> (strLo(j).toString, strHi(j).toString)).toMap,
+      sketched.indices.map(j =>
+        name(sketched(j)) -> sketches(j).toUpdatableByteArray).toMap)
     rows = 0L
     java.util.Arrays.fill(nulls, 0L)
     java.util.Arrays.fill(valued, false)
+    java.util.Arrays.fill(strLo.asInstanceOf[Array[AnyRef]], null)
+    java.util.Arrays.fill(strHi.asInstanceOf[Array[AnyRef]], null)
   }
 
   /** Every file this task staged, the open one closed. */
@@ -2542,6 +2627,27 @@ class TxStagedWriter(prefix: String, schema: StructType,
 }
 
 object TxStagedWriter {
+  /** Stage `df`'s rows through `factory`'s writers as ONE SQL execution
+    * of `df`'s own plan (its Observations and the listeners see that
+    * plan), one writer per partition; returns the files of every
+    * partition's successful attempt — exactly what a commit may
+    * promote. A failed attempt aborts its own files; anything else
+    * left under `factory.dir` is never listed. */
+  def stage(df: DataFrame, factory: TxStagedWriterFactory)
+    : Seq[TxStagedFile] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("graft-tx write")) {
+      val rdd = qe.toRdd
+      rdd.sparkContext.runJob(rdd,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+          val w = factory.writer(ctx.partitionId(), ctx.taskAttemptId())
+          try { it.foreach(w.write); w.staged() }
+          catch { case t: Throwable => w.abort(); throw t }
+        }).toSeq.flatten
+    }
+  }
+
   /** The partition columns a staged write can promote by rename: each
     * in `schema`, and integral, date or string — the types whose
     * values a dir name and an exact stat record. */

@@ -2,15 +2,16 @@ package graft
 
 import graft.operators.Dedup
 
-/** Pins the Spark-job budget of the iterative PageRank, as MetaRpcSpec
-  * pins commit-metadata RPCs: nearly all of q_pagerank's time at small
-  * scale is fixed per-job cost, so a job a refactor adds is a
-  * regression even when the answer stays right. The budget at sf0.01
-  * on local[4]: the node count (2), one broadcast of the edge artifact
-  * that every round reuses (1), one shuffle per round's aggregate (5),
-  * the range sort's bound sampling and its shuffle (2) and the write
-  * (1). The rank offsets add no count job here: AQE coalesces the 20
-  * ranked sources into one partition. */
+/** Pins Spark-job budgets, as MetaRpcSpec pins commit-metadata RPCs:
+  * nearly all of a small query's time is fixed per-job cost, so a job
+  * a refactor adds is a regression even when the answer stays right.
+  * Pinned: the iterative PageRank, a table load (no schema-inference
+  * job) and a SQL INSERT (the write, no stats rescan). PageRank's
+  * budget at sf0.01 on local[4]: the node count (2), one broadcast of
+  * the edge artifact that every round reuses (1), one shuffle per
+  * round's aggregate (5), the range sort's bound sampling and its
+  * shuffle (2) and the write (1). The rank offsets add no count job
+  * here: AQE coalesces the 20 ranked sources into one partition. */
 class JobBudgetSpec extends SparkSpec {
 
   // the sf0.01 rung next to the suite's sf0.001 tables
@@ -27,5 +28,31 @@ class JobBudgetSpec extends SparkSpec {
     info(s"sourceRank: ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
     assert(jobs.size <= 11,
       s"sourceRank ran ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+  }
+
+  test("a table load reads its schema from the footer, job-free") {
+    for (nanos <- Seq("false", "true"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanos) {
+        for (t <- Tables.all) {
+          val p = s"$sf001/$t.parquet"
+          assert(Tables.footerSchema(spark, p) === spark.read.parquet(p).schema,
+            s"$t (nanosAsLong $nanos)")
+        }
+      }
+    // the parent inferred orders' schema with one footer-reading job
+    assert(jobsDuring(Tables.orders(spark, sf001)) === 0)
+  }
+
+  test("SQL INSERT INTO runs one Spark job: the write, no rescan") {
+    import spark.implicits._
+    val root = tmpDir() + "/jb_insert"
+    graft.sources.TxTable.append(Seq((1L, "a")).toDF("k", "s"), root,
+      Seq("k", "s"))
+    spark.sql("DROP TABLE IF EXISTS jb_insert")
+    spark.sql(s"CREATE TABLE jb_insert USING `graft-tx` OPTIONS (path '$root')")
+    spark.sql("INSERT INTO jb_insert VALUES (2, 'b')")
+    val jobs = jobNamesDuring(spark.sql("INSERT INTO jb_insert VALUES (3, 'c')"))
+    assert(jobs.size === 1, s"INSERT ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
+    assert(spark.table("jb_insert").count() === 3L)
   }
 }

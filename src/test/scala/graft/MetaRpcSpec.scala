@@ -83,9 +83,9 @@ class MetaRpcSpec extends SparkSpec {
     spark.read.format("graft-tx").load(root).count()
     val n = rpcsOf { spark.read.format("graft-tx").load(root).count() }
     info(s"format-face read: $n metadata RPCs")
-    // three head resolutions: the change-feed schema the reader infers
-    // through the DSv2 provider first, the relation's schema, and the
-    // metadata-only count — not the unbounded pre-r16 chain
-    assert(n <= 23, s"format-face read cost $n commit-metadata RPCs")
+    // two head resolutions — the relation's schema and the
+    // metadata-only count — plus the DSv2 provider's existence probe;
+    // the change-feed schema is no longer built for a batch read
+    assert(n <= 17, s"format-face read cost $n commit-metadata RPCs")
   }
 }

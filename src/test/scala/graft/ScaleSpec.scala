@@ -198,7 +198,7 @@ class ScaleSpec extends SparkSpec {
     // immediate replay of the same batch finds nothing novel
     val again = graft.sources.TxTable.read(spark,
       new org.apache.hadoop.fs.Path(Scratch.base(spark),
-        f"graft-bandindex-${sfDir.hashCode}%08x").toString)
+        f"graft-bandindex-${sfDir.hashCode}%08x-${Scratch.owner}").toString)
     assert(again.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0)
       .count() > 0, "novel batch bands must be appended to the index")
   }

@@ -88,4 +88,38 @@ class ScratchSpec extends SparkSpec {
     // and no footer-reading inference job on a memoized read
     assert(jobsDuring(Dedup.spanGrams(spark, sfDir)) === 0)
   }
+
+  test("cleaning up one owner leaves another owner's artifact readable") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val scratch = java.nio.file.Files
+      .createTempDirectory("graft-owners").toString
+    val d = tmpDir()
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    docs.write.parquet(s"$d/documents.parquet")
+    withConf("spark.graft.scratchDir" -> scratch) {
+      val mine = new Path(Dedup.spanGrams(spark, d).inputFiles.head).getParent
+      val fs = mine.getFileSystem(spark.sessionState.newHadoopConf())
+      val n = spark.read.parquet(mine.toString).count()
+      // another JVM's copies of the same artifact: the same content
+      // version, and a version this JVM would call superseded
+      val name = mine.getName
+      assert(name.endsWith(s"-${Scratch.owner}"), name)
+      val key = name.stripSuffix(s"-${Scratch.owner}")
+      val theirs = new Path(mine.getParent, s"$key-0ther000")
+      val theirsOld = new Path(mine.getParent,
+        key.take(key.lastIndexOf('-')) + "-0-0ther000")
+      for (t <- Seq(theirs, theirsOld))
+        FileUtil.copy(fs, mine, fs, t, false, spark.sessionState.newHadoopConf())
+      // a rewritten input: this JVM sweeps only its own old version
+      docs.limit(50).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      val mine2 = new Path(Dedup.spanGrams(spark, d).inputFiles.head).getParent
+      assert(mine2 != mine)
+      assert(!fs.exists(mine) && fs.exists(theirs) && fs.exists(theirsOld))
+      // this JVM's exit cleanup deletes only what it built
+      Scratch.cleanup(_.toString.contains(scratch))
+      assert(!fs.exists(mine2))
+      assert(spark.read.parquet(theirs.toString).count() === n)
+      assert(spark.read.parquet(theirsOld.toString).count() === n)
+    }
+  }
 }

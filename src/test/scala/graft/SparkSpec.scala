@@ -125,17 +125,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     jobs.toArray(Array.empty[String]).toSeq
   }
 
-  /** Stage `rows` through the DSv2 write faces' one writer as a single
+  /** Stage `rows` through the write faces' one writer as a single
     * task would: files `<prefix>[-<n>].parquet`, one per run of one
-    * `partCols` tuple, with the facts the writer saw. */
+    * `partCols` tuple, with the facts the writer saw (string bounds
+    * and sketches on `sketchCols`). */
   def stageRows(prefix: String,
     schema: org.apache.spark.sql.types.StructType, partCols: Seq[String],
-    rows: Seq[org.apache.spark.sql.Row]): Seq[graft.sources.TxStagedFile] = {
+    rows: Seq[org.apache.spark.sql.Row],
+    sketchCols: Seq[String] = Seq.empty): Seq[graft.sources.TxStagedFile] = {
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(schema)
     val w = new graft.sources.TxStagedWriter(prefix, schema, partCols,
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+      graft.sources.TxStagedWriterFactory.of(spark, "", schema).conf,
+      sketchCols)
     rows.foreach(r =>
       w.write(toRow(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
     w.staged()

@@ -46,7 +46,8 @@ class WriteStatsSpec extends SparkSpec {
   }
   private def entryLines(root: String): Seq[String] =
     if (!new java.io.File(root, "_commits").exists) Seq.empty
-    else commitLines(root).filter(_.startsWith("dir:"))
+    else commitLines(root).filter(l =>
+      l.startsWith("dir:") || l.startsWith("delta:"))
 
   /** The entry lines `write` adds to the snapshot. */
   private def written(root: String)(write: => Unit): Seq[String] = {
@@ -59,7 +60,7 @@ class WriteStatsSpec extends SparkSpec {
 
   /** `dir` and its segments keyed by name (`k`, `n,k`, `str:s`, …). */
   private def parse(line: String): (String, Map[String, String]) = {
-    val parts = line.stripPrefix("dir:").split('|').toSeq
+    val parts = line.stripPrefix("dir:").stripPrefix("delta:").split('|').toSeq
     (parts.head, parts.tail.map { seg =>
       val i = seg.indexOf('=')
       seg.take(i) -> seg.drop(i + 1)
@@ -194,6 +195,37 @@ class WriteStatsSpec extends SparkSpec {
         TxTable.optimizeCompact(spark, packed, targetBytes = 1L << 30))
         .foreach(l => assert(assertRescanned(packed, l, statsCols).isEmpty))
     }
+  }
+
+  /** `df` as CDC change rows: every row an insert at `seq` 1. */
+  private def changes(df: DataFrame): DataFrame =
+    df.withColumn("op", lit("I")).withColumn("seq", lit(1L))
+
+  test("CDC merge, mergeInto and mergeDelta record the rescan's stats") {
+    val merged = tmpDir() + "/ws_merge"
+    val into = tmpDir() + "/ws_merge_into"
+    val deltas = tmpDir() + "/ws_merge_delta"
+    for (df <- Seq(first, second)) {
+      written(merged)(TxTable.merge(spark, merged, changes(df)))
+        .foreach(l => assert(assertRescanned(merged, l, Seq("k")).isEmpty))
+      written(into)(TxTable.mergeInto(spark, into, df, Seq("k"),
+        matchedUpdate = Map("q" -> "s_q + 1")))
+        .foreach(l => assert(assertRescanned(into, l, Seq("k")).isEmpty))
+      val Seq(l) = written(deltas)(
+        TxTable.mergeDelta(spark, deltas, changes(df), Seq("k")))
+      assert(l.startsWith("delta:"))
+      assert(assertRescanned(deltas, l, Seq("k")).isEmpty)
+    }
+  }
+
+  test("a deleteWhere rewrite records the rescan's stats") {
+    val root = tmpDir() + "/ws_delete"
+    TxTable.append(first, root, statsCols)
+    TxTable.append(second, root, statsCols)
+    // every dir holds a match and keeps rows: each rewrites
+    val lines = written(root)(TxTable.deleteWhere(spark, root, "k % 3 = 0"))
+    assert(lines.size === 2)
+    lines.foreach(l => assert(assertRescanned(root, l, statsCols).isEmpty))
   }
 
   test("SQL INSERT records the rescan's stats") {

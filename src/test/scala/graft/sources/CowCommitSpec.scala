@@ -22,19 +22,14 @@ class CowCommitSpec extends graft.SparkSpec {
     root
   }
 
-  private def stageOne(root: String, rows: Seq[(Long, String)]): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_staging/test-${
-      java.util.UUID.randomUUID()}.parquet")
+  private def stageOne(root: String,
+    rows: Seq[(Long, String)]): TxStagedFile = {
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("s", StringType)))
-    val w = TxParquetIO.writer(p, schema,
-      spark.sessionState.newHadoopConf())
-    rows.foreach { case (k, s) =>
-      w.write(org.apache.spark.sql.catalyst.InternalRow(
-        k, org.apache.spark.unsafe.types.UTF8String.fromString(s)))
-    }
-    w.close()
-    p.toString
+    val Seq(f) = stageRows(s"$root/_staging/test-${java.util.UUID.randomUUID()}",
+      schema, Seq.empty, rows.map { case (k, s) => org.apache.spark.sql.Row(k, s) },
+      sketchCols = Seq("k"))
+    f
   }
 
   test("a concurrent commit touching other dirs composes") {
