@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Rebase
 import graft.{Scratch, Tables}
 import graft.functions.GraftFunctions
 
@@ -344,9 +345,7 @@ object Dedup {
       .persist()
     // re-base each round's labels on their computed RDD so the
     // iterative plan's lineage stays flat (see connectedComponentsStar)
-    def rebase(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    var labels = rebase(edges.select(col("doc_a").as("doc_id"))
+    var labels = Rebase(edges.select(col("doc_a").as("doc_id"))
       .distinct()
       .withColumn("cluster", col("doc_id")))
       .persist()
@@ -371,7 +370,7 @@ object Dedup {
       val viaEdges = edges
         .join(labels, edges("doc_b") === labels("doc_id"))
         .select(edges("doc_a").as("doc_id"), col("cluster"))
-      val next = rebase(labels.select(col("doc_id"), col("cluster"))
+      val next = Rebase(labels.select(col("doc_id"), col("cluster"))
         .union(viaEdges)
         .groupBy("doc_id").agg(min("cluster").as("cluster")))
         .persist()
@@ -411,15 +410,12 @@ object Dedup {
     * every node, cluster = component minimum. */
   def connectedComponentsStar(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     import org.apache.spark.sql.functions.{greatest, least}
-    val spark = edges.sparkSession
     // Iterative plans must not accumulate lineage: each round re-bases
     // the edge set on its computed RDD (a leaf scan to Catalyst), or
     // the optimizer re-plans a tree that doubles every round and
     // eventually overflows the stack. The RDD is persisted per round
     // and the previous round's freed.
-    def rebase(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    var e = rebase(edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    var e = Rebase(edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .distinct()).persist()
@@ -442,7 +438,7 @@ object Dedup {
       val joined = lsOriented.join(mins2, lsOriented("a") === mins2("u"))
       // one distinct AFTER orientation normalization — a pre-normalize
       // distinct would be subsumed by this one (an extra shuffle/round)
-      val ss = rebase(joined.filter(col("b") =!= col("m"))
+      val ss = Rebase(joined.filter(col("b") =!= col("m"))
         .select(col("b").as("a"), col("m").as("b"))
         .unionByName(joined.select(col("u").as("a"), col("m").as("b")))
         .filter(col("a") =!= col("b"))
@@ -1022,16 +1018,14 @@ object Dedup {
     // without the flat lineage those references — especially the
     // broadcast subplans of the semi joins — re-executed the whole
     // band-join chain per round (bench: 125 s; rebased: seconds).
-    def rebase(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    var alive = rebase(minhashPairs(spark, dir)).persist()
+    var alive = Rebase(minhashPairs(spark, dir)).persist()
     alive.count() // one action per round, lineage never deepens
     for (_ <- 1 to rounds) {
       val deg = alive.select(col("doc_a").as("id"))
         .unionByName(alive.select(col("doc_b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("id")
-      val next = rebase(alive
+      val next = Rebase(alive
         .join(keep.select(col("id").as("doc_a")), Seq("doc_a"), "semi")
         .join(keep.select(col("id").as("doc_b")), Seq("doc_b"), "semi"))
         .persist()

@@ -690,18 +690,19 @@ class TxCatalogPartBatchWrite(root: String, info: LogicalWriteInfo,
   // partition-column types checked ONCE, loudly, before any task runs
   TxStagedWriter.requirePartitionable(info.schema(), partCols)
 
-  private lazy val staging =
-    TxTable.staging(SparkSession.active, root, info.schema(), partCols)
+  private lazy val staging = TxTable.staging(SparkSession.active, root,
+    info.schema(), partCols, bootstrapStats)
 
+  // the writers sketch the columns the commit records stats on
   override def createBatchWriterFactory(
     pinfo: PhysicalWriteInfo): DataWriterFactory =
     TxStagedWriterFactory.of(SparkSession.active, stagingDir,
-      staging.fileSchema, staging.physParts)
+      staging.fileSchema, staging.physParts, staging.statsCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     commitStaged { spark =>
       TxTable.promotePartitioned(spark, root, staging,
-        TxStagedMessage.files(messages), bootstrapStats, mode, filterSql)
+        TxStagedMessage.files(messages), mode, filterSql)
     }
 }
 

@@ -1151,46 +1151,43 @@ object TxTable {
     }
   }
 
-  /** The per-dir write-statistics aggregate — ONE layout for every
-    * write face, whether it rides the write itself (`observe`),
-    * rescans one dir, or groups a just-written layout by dir: the row
-    * count (pseudo-column `_rows`, which metadata-only COUNT(*) reads
-    * back), then the integral columns' long min/max pairs and their
-    * NULL counts, then the STRING columns' min/max pairs (recorded as
-    * hex-encoded UTF-8 byte bounds, see [[strStatBounds]] for the
-    * truncation soundness) and their NULL counts, then one mergeable
-    * NDV sketch per `hll` column
-    * (per-dir HLL registers merge at read into table-level NDV that
-    * stays fresh across appends without a rescan). `hll` pairs each
-    * sketched column with its sketch input. Min/max/count/sum are
-    * order-free and the HLL registers are a function of the value
-    * SET, so every face records what a rescan of the dir would. */
+  /** The per-dir write-statistics aggregate of a dir on disk — the
+    * rescan ([[statsEntry]]) every write face's writer-folded entry
+    * must equal: the row count (pseudo-column `_rows`, which
+    * metadata-only COUNT(*) reads back), then the integral columns'
+    * long min/max pairs and their NULL counts, then the STRING columns'
+    * min/max pairs (recorded as hex-encoded UTF-8 byte bounds, see
+    * [[strStatBounds]] for the truncation soundness) and their NULL
+    * counts, then one mergeable NDV sketch per column (per-dir HLL
+    * registers merge at read into table-level NDV that stays fresh
+    * across appends without a rescan). */
   private final case class StatsAgg(integral: Seq[String],
-    strings: Seq[String], hll: Seq[(String, Column)]) {
+    strings: Seq[String]) {
     // each stats column also records its NULL count under `n,<col>`
     // (',' can never appear in a real column name) — min/max skip
     // NULLs, so only this stat lets a metadata-only GROUP BY trust
     // that a single-valued dir has no hidden NULL-group rows
     private def nulls(c: String): Column =
       sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long")
+    private val hll = integral ++ strings
     val aggs: Seq[Column] = count(lit(1)) +:
       (integral.flatMap(c =>
         Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))) ++
         integral.map(nulls) ++
         strings.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
         strings.map(nulls) ++
-        hll.map { case (_, e) => hll_sketch_agg(e, hllLgK) })
+        hll.map(c => hll_sketch_agg(col(c), hllLgK)))
 
-    /** Dir `dir`'s entry from one result of [[aggs]], slot `i` read as
-      * `at(i)`. A NULL slot is "no stat" (an empty dir, an all-NULL
-      * column): no bounds, a zero NULL count, no sketch. The `hstats`
-      * blobs are raw until [[finishEntries]] spills the oversized. */
-    def decode(dir: String, at: Int => Any): Entry = {
-      def long(i: Int): Option[Long] = at(i) match {
+    /** Dir `dir`'s entry from the result row `r` of [[aggs]]. A NULL
+      * slot is "no stat" (an empty dir, an all-NULL column): no
+      * bounds, a zero NULL count, no sketch. The `hstats` blobs are
+      * raw until [[finishEntries]] spills the oversized. */
+    def decode(dir: String, r: org.apache.spark.sql.Row): Entry = {
+      def long(i: Int): Option[Long] = r.get(i) match {
         case l: java.lang.Long => Some(l.longValue())
         case _ => None
       }
-      def str(i: Int): Option[String] = at(i) match {
+      def str(i: Int): Option[String] = r.get(i) match {
         case s: String => Some(s)
         case _ => None
       }
@@ -1226,8 +1223,8 @@ object TxTable {
         strMinMax.collect { case (c, (mn, mx)) if mn == mx &&
           mn.getBytes("UTF-8").length <= strStatMaxBytes => c -> hexOf(mn)
         }.toMap,
-        hll.map(_._1).zipWithIndex.flatMap { case (c, i) =>
-          at(hllBase + i) match {
+        hll.zipWithIndex.flatMap { case (c, i) =>
+          r.get(hllBase + i) match {
             case b: Array[Byte] =>
               Some(c -> java.util.Base64.getEncoder.encodeToString(b))
             case _ => None
@@ -1236,24 +1233,17 @@ object TxTable {
     }
   }
   private object StatsAgg {
-    /** The integral and STRING `statsCols` of `schema`, named through
-      * `phys`, all sketched after the caller's `keys` sketches; any
-      * other type yields no stats for that column, which just disables
-      * pruning on it. */
-    def of(schema: org.apache.spark.sql.types.StructType,
-      statsCols: Seq[String], phys: String => String = identity,
-      keys: Seq[(String, Column)] = Seq.empty): StatsAgg = {
+    /** The integral and STRING `statsCols` of `schema`; any other type
+      * yields no stats for that column, which just disables pruning on
+      * it. */
+    def of(schema: StructType, statsCols: Seq[String]): StatsAgg = {
       import org.apache.spark.sql.types._
       def typed(pred: DataType => Boolean) = statsCols.distinct
         .filter(c => schema.find(_.name == c).map(_.dataType).exists(pred))
-        .map(phys)
-      val integral = typed {
+      StatsAgg(typed {
         case LongType | IntegerType | ShortType => true
         case _ => false
-      }
-      val strings = typed(_ == StringType)
-      StatsAgg(integral, strings,
-        (keys ++ (integral ++ strings).map(c => c -> col(c))).distinctBy(_._1))
+      }, typed(_ == StringType))
     }
   }
 
@@ -1338,35 +1328,43 @@ object TxTable {
     val df = readDirFrame(spark, rp, dirName)
     val agg = StatsAgg.of(df.schema, statsCols)
     val r = df.agg(agg.aggs.head, agg.aggs.tail: _*).collect()(0)
-    finishEntries(spark, rp, Seq(agg.decode(dirName, r.get)))
+    finishEntries(spark, rp, Seq(agg.decode(dirName, r)))
       .head.copy(isDelta = isDelta)
   }
 
   /** Write `df` as the data dir `dirName` (staged by the caller through
     * the commit ledger) and return its entry, with stats on
-    * `statsCols`. The rows go through [[TxStagedWriter]] tasks as ONE
-    * SQL execution of `df`'s plan, into a private staging prefix; the
-    * files the committed tasks list then move into the dir by rename,
-    * and the entry folds what their writers saw ([[factsEntry]]) —
-    * no committer, no observation pass, no rescan. A dir always holds
-    * at least one file, so a zero-row `df` stages one carrying its
+    * `statsCols`: [[staged]] files moved into the dir by rename, the
+    * entry folded from what their writers saw ([[factsEntry]]) — no
+    * committer, no observation pass, no rescan. A dir always holds at
+    * least one file, so a zero-row `df` stages one carrying its
     * schema. */
   private def writeDir(spark: SparkSession, rp: Path, dirName: String,
-    df: DataFrame, statsCols: Seq[String], isDelta: Boolean = false): Entry = {
+    df: DataFrame, statsCols: Seq[String], isDelta: Boolean = false): Entry =
+    staged(spark, rp, df, statsCols, touch = true) { files =>
+      promotedEntry(spark, rp.getFileSystem(spark.sessionState
+        .newHadoopConf()), rp, dirName, statsCols, files)
+        .copy(isDelta = isDelta)
+    }
+
+  /** Stage `df`'s rows through [[TxStagedWriter]] tasks, as ONE SQL
+    * execution of `df`'s plan, into a private `_staging/write-<uuid>`
+    * prefix, and hand `promote` the files the committed tasks list
+    * (`partCols`, `tupleCol`, `touch`: as the factory and
+    * [[TxStagedWriter.stage]] take them). The prefix, with any file
+    * `promote` did not move out of it, is deleted after. */
+  private def staged[T](spark: SparkSession, rp: Path, df: DataFrame,
+    sketchCols: Seq[String], partCols: Seq[String] = Seq.empty,
+    tupleCol: Option[String] = None, touch: Boolean = false)(
+    promote: Seq[TxStagedFile] => T): T = {
     val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(rp, s"_staging/write-${java.util.UUID.randomUUID()}")
-    try {
-      // the optimized plan's nullability, as Spark's file writer takes
-      // it: a column proven non-null is stored REQUIRED
-      val factory = TxStagedWriterFactory.of(spark, tmp.toString,
-        df.queryExecution.optimizedPlan.schema, sketchCols = statsCols)
-      val files = TxStagedWriter.stage(df, factory) match {
-        case Seq() => val w = factory.writer(0, 0L); w.touch(); w.staged()
-        case staged => staged
-      }
-      promotedEntry(spark, fs, rp, dirName, statsCols, files)
-        .copy(isDelta = isDelta)
-    } finally fs.delete(tmp, true)
+    // the optimized plan's nullability, as Spark's file writer takes
+    // it: a column proven non-null is stored REQUIRED
+    try promote(TxStagedWriter.stage(df, TxStagedWriterFactory.of(spark,
+      tmp.toString, df.queryExecution.optimizedPlan.schema, partCols,
+      sketchCols, tupleCol), touch))
+    finally fs.delete(tmp, true)
   }
 
   /** The entry of dir `dirName` holding exactly `files`, its stats on
@@ -1376,9 +1374,17 @@ object TxTable {
     * sketches merge as `hll_sketch_agg` merges partial buffers), and
     * `_bytes` as the files' summed length. A stats column the writers
     * did not sketch — one of a type the aggregate skips — records
-    * nothing, as there. */
+    * nothing, as there. Every write face's entries fold here; the
+    * grouped faces fold one per tuple ([[promoteTuples]]). */
   private def factsEntry(spark: SparkSession, rp: Path, dirName: String,
-    statsCols: Seq[String], files: Seq[TxStagedFile]): Entry = {
+    statsCols: Seq[String], files: Seq[TxStagedFile]): Entry =
+    finishEntries(spark, rp, Seq(factsRaw(dirName, statsCols, files)),
+      Map(dirName -> files.map(_.bytes).sum)).head
+
+  /** [[factsEntry]] before [[finishEntries]]: raw sketches, no
+    * `_bytes`. */
+  private def factsRaw(dirName: String, statsCols: Seq[String],
+    files: Seq[TxStagedFile]): Entry = {
     import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
     // The stats-line grammar is only unambiguous when no user column
     // can FORGE a reserved segment: a column literally named "n,k"
@@ -1387,7 +1393,7 @@ object TxTable {
     // null-count of 0 makes the metadata-only GROUP BY treat a
     // NULL-bearing dir as null-free (wrong results, not an error).
     // toPhysical enforces this on column-mapped tables; this is the
-    // chokepoint every OTHER single-dir write funnels through.
+    // chokepoint every OTHER write funnels through.
     statsCols.foreach(requireStatsGrammarSafe)
     val cols = statsCols.distinct.filter(c => files.forall(_.sketches.contains(c)))
     val byUtf8: Ordering[String] = (a, b) =>
@@ -1409,7 +1415,7 @@ object TxTable {
       c -> java.util.Base64.getEncoder.encodeToString(
         merged.toUpdatableByteArray)
     }
-    val raw = Entry(isDelta = false, dirName,
+    Entry(isDelta = false, dirName,
       Map(rowsKey -> (rows, rows)) ++
         cols.flatMap(c => span(files.flatMap(_.bounds.get(c))).map(c -> _)) ++
         cols.map { c =>
@@ -1424,33 +1430,78 @@ object TxTable {
         mn.getBytes("UTF-8").length <= strStatMaxBytes => c -> hexOf(mn)
       }.toMap,
       hll.toMap)
-    finishEntries(spark, rp, Seq(raw),
-      Map(dirName -> files.map(_.bytes).sum)).head
   }
 
-  /** Batched [[statsEntry]] for the aligned z-prefix buckets one
-    * optimize pass just wrote under `parent`: ONE grouped
-    * [[StatsAgg]] over the parent read computes every bucket's stats
-    * instead of one Spark job per bucket — the single-pass discipline
-    * [[appendBucketedBy]] already uses. The grouped aggregate sees
-    * exactly each `_b=` dir's rows, so per-bucket numbers are
-    * identical to per-dir [[statsEntry]] calls. */
-  private def bucketStatsEntries(spark: SparkSession, rp: Path,
-    parent: String, buckets: Seq[String],
-    statsCols: Seq[String]): Seq[Entry] = {
-    statsCols.foreach(requireStatsGrammarSafe)
-    val df = spark.read.parquet(new Path(rp, parent).toString)
-    val agg = StatsAgg.of(df.schema, statsCols)
-    val byBucket = df.groupBy(col("_b").cast("long").as("_b"))
-      .agg(agg.aggs.head, agg.aggs.tail: _*)
-      .collect() // bucket-cardinality readback (<= nDirs rows)
-      .map(r => s"$parent/_b=${r.getLong(0)}" -> r).toMap
-    finishEntries(spark, rp, buckets.map { d =>
-      val r = byBucket.getOrElse(d, throw new IllegalStateException(
-        s"txtable: bucket dir $d missing from the grouped stats pass"))
-      // the leading _b group column shifts every stat slot by one
-      agg.decode(d, i => r.get(1 + i))
-    })
+  /** The one grouped promote: the staged `files` of each distinct
+    * tuple of `tupleCols` (as their writers saw it) move by rename
+    * into the dir `<baseDir>/<col>=<token>...`, the token the number
+    * for integral and DATE values and `x<hex of the UTF-8>` for
+    * strings — hex keeps every dir name path-safe and escape-free
+    * whatever the value holds, and the `x` keeps an empty string out of
+    * hive's default partition and all-digit hex out of partition-type
+    * inference. Each dir's entry is its [[factsEntry]] on `statsCols`
+    * amended by `keyStats(tuple, entry)`; entries come in tuple order.
+    * A NULL tuple value (it cannot address a dir) or a string past
+    * [[strStatMaxBytes]] (its exact-value stat cannot be recorded)
+    * refuses before anything moves. The partitioned, bucketed and
+    * z-order writes and the SQL/streaming partitioned commits all land
+    * their dirs here. */
+  private def promoteTuples(spark: SparkSession, rp: Path, baseDir: String,
+    tupleCols: Seq[String], statsCols: Seq[String],
+    files: Seq[TxStagedFile])(keyStats: (Seq[Any], Entry) => Entry)
+    : Seq[Entry] = {
+    files.foreach { f =>
+      require(f.partVals.forall(_.isDefined),
+        s"txtable: partition column(s) (${tupleCols.mkString(", ")}) " +
+          "contain NULLs — partitioned writes need a total partition " +
+          "assignment; coalesce NULLs to a sentinel value first")
+      f.partVals.flatten.foreach {
+        case v: String => require(
+          v.getBytes("UTF-8").length <= strStatMaxBytes, partValueCapMsg)
+        case _ => ()
+      }
+    }
+    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = files.groupBy(_.partVals.flatten).toSeq
+      .sortBy(t => tupleSortKey(t._1)).map { case (vs, fl) =>
+        val dir = baseDir + tupleCols.zip(vs).map {
+          case (c, v: Long) => s"/$c=$v"
+          case (c, v) => s"/$c=x${hexOf(v.toString)}"
+        }.mkString
+        promoteStaged(fs, rp, dir, fl)
+        (keyStats(vs, factsRaw(dir, statsCols, fl)), fl.map(_.bytes).sum)
+      }
+    finishEntries(spark, rp, dirs.map(_._1),
+      dirs.map { case (e, bytes) => e.dir -> bytes }.toMap)
+  }
+
+  /** A value-partitioned dir's key stats, from its tuple over
+    * `physParts`: every key NULL-free (`n,<key>=0:0`, which lets a
+    * metadata-only GROUP BY on it trust the per-dir counts), integral
+    * and DATE keys the exact `lo == hi` range (dates as their
+    * days-since-epoch encoding — the value DateType holds, so stats
+    * and data cannot drift), string keys the `str:` bounds and the
+    * `sx:` exact-value marker of the value — the clustering proof the
+    * storage-partitioned and metadata-GROUP-BY faces demand. The
+    * writers sketch integral and string keys; a key they did not
+    * sketch (a DATE key) gets the one-value sketch of its value. */
+  private def partKeyStats(physParts: Seq[String])(vs: Seq[Any],
+    e: Entry): Entry = {
+    import org.apache.datasketches.hll.{HllSketch, TgtHllType}
+    val ints = physParts.zip(vs).collect { case (p, v: Long) => p -> (v, v) }
+    val strs = physParts.zip(vs).collect {
+      case (p, v: String) => p -> hexOf(v) }
+    val unsketched = ints.filterNot(kv => e.hstats.contains(kv._1)).map {
+      case (p, (v, _)) =>
+        val h = new HllSketch(hllLgK, TgtHllType.HLL_8)
+        h.update(v)
+        p -> java.util.Base64.getEncoder.encodeToString(h.toUpdatableByteArray)
+    }
+    e.copy(
+      stats = e.stats ++ ints ++
+        physParts.map(p => s"$nullsPrefix$p" -> (0L, 0L)),
+      sstats = e.sstats ++ strs.map { case (p, h) => p -> (h, h) },
+      xvals = e.xvals ++ strs, hstats = e.hstats ++ unsketched)
   }
 
   /** On-disk bytes of dir `d`'s SPILLED hll sidecars (entries whose
@@ -2381,7 +2432,7 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val meta = metaAt(fs, rp, base)
     val keys = meta.keys.map(_.map(logicalName(meta.colMap, _)))
-    writeZBlocks(spark, fs, rp, read(spark, root, base), zCols, nDirs,
+    writeZBlocks(spark, rp, read(spark, root, base), zCols, nDirs,
       keys.getOrElse(Seq.empty) ++ zCols, stage).map(entries =>
       Commit("compact", meta.rewritten(keys, zCols), rest = Drop,
         added = entries.map(_.line)))
@@ -2399,11 +2450,14 @@ object TxTable {
     * empty (fewer, larger dirs) — that only costs layout granularity,
     * never pruning correctness, and the alternative (estimating
     * distinct blocks per candidate shift) measured 4x the whole
-    * rewrite's cost at sf0.1. Returns the blocks' entries with stats on
-    * `statsCols`, from ONE grouped stats pass; None when `df` has no
-    * live rows (an empty table, or a tail of only zero-row dirs) —
-    * nothing to re-cluster, so a routine nightly run commits nothing. */
-  private def writeZBlocks(spark: SparkSession, fs: FileSystem, rp: Path,
+    * rewrite's cost at sf0.1. The rows stage in ONE write, each block
+    * shuffled to one task and sorted by z, with the block as the
+    * writers' unstored tuple column; [[promoteTuples]] renames each
+    * block's file into its dir with stats on `statsCols` from what the
+    * writers saw. None when `df` has no live rows (an empty table, or a
+    * tail of only zero-row dirs) — nothing to re-cluster, so a routine
+    * nightly run commits nothing. */
+  private def writeZBlocks(spark: SparkSession, rp: Path,
     df: DataFrame, zCols: Seq[String], nDirs: Int, statsCols: Seq[String],
     stage: String => String): Option[Seq[Entry]] = {
     val withZ = withZColumn(df, zCols)
@@ -2416,18 +2470,13 @@ object TxTable {
         math.max(1L, mzRow.getLong(0)))
       val shift = math.max(0, zBits - blockBits)
       val parent = stage(s"data/zopt-${java.util.UUID.randomUUID()}")
-      withZ
+      val blocks = withZ
         .withColumn("_b", expr(s"shiftright(_z, $shift)"))
         .repartition(col("_b"))
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.partitionBy("_b").mode("overwrite")
-        .parquet(new Path(rp, parent).toString)
-      val buckets = fs.listStatus(new Path(rp, parent)).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("_b="))
-        .sortBy(n => n.stripPrefix("_b=").toLong)
-      Some(bucketStatsEntries(spark, rp, parent,
-        buckets.map(b => s"$parent/$b"), statsCols))
+      Some(staged(spark, rp, blocks, statsCols, tupleCol = Some("_b"))(
+        promoteTuples(spark, rp, parent, Seq("_b"), statsCols, _)((_, e) => e)))
     }
   }
 
@@ -2505,7 +2554,7 @@ object TxTable {
           .reduce(_.unionByName(_, allowMissingColumns = true))
         // the tail gets its OWN aligned grid — blocks need not share the
         // base generation's shift to be axis-aligned stats boxes
-        writeZBlocks(spark, fs, rp, tailDf, zCols, nDirs,
+        writeZBlocks(spark, rp, tailDf, zCols, nDirs,
           (keys.getOrElse(Seq.empty) ++ statsCols ++ zCols).distinct,
           stage).map(blocks =>
           Commit("compact", meta.rewritten(keys,
@@ -3155,22 +3204,22 @@ object TxTable {
     * partition-bounded reads prune to exactly the matching dirs — the
     * classic date-partitioned warehouse table. A DATE key's bounds are
     * epoch days, the encoding a DATE literal translates to, so DATE
-    * keys prune and cover the same way. Values are read back from the
-    * directory names Spark writes, so the entry stats can never
-    * disagree with the data. */
+    * keys prune and cover the same way. Each dir's key stats derive
+    * from the tuple its writer saw, the same value that names the dir,
+    * so the entry stats can never disagree with the data. */
   def appendPartitioned(df: DataFrame, root: String, partCol: String,
     statsCols: Seq[String] = Seq.empty): Int =
     appendPartitionedBy(df, root, Seq(partCol), statsCols)
 
   /** Append `df` HASH-BUCKET-clustered on `bucketCol` into
-    * `numBuckets` buckets: ONE pass over the data (hive-style
-    * dynamic partitionBy on the derived bucket id), one dir per
-    * bucket, each dir's entry carrying the reserved `_bucket` stat
+    * `numBuckets` buckets: ONE write (the derived bucket id is the
+    * writers' unstored tuple column, see [[promoteTuples]]), one dir
+    * per bucket, each dir's entry carrying the reserved `_bucket` stat
     * that proves its id plus per-dir range/null/NDV stats on
-    * `statsCols`. The commit declares `bucketby:<physCol>,<n>`;
-    * later bucketed appends must match it, and every
-    * layout-breaking write face refuses loudly instead of silently
-    * degrading the clustering. WHY at warehouse scale: identity
+    * `statsCols`, as its writers saw them. The commit declares
+    * `bucketby:<physCol>,<n>`; later bucketed appends must match it,
+    * and every layout-breaking write face refuses loudly instead of
+    * silently degrading the clustering. WHY at warehouse scale: identity
     * partitioning cannot co-locate a HIGH-CARDINALITY join key (one
     * dir per distinct value), but two tables bucketed the same way
     * join with ZERO shuffle through the catalog face's
@@ -3187,7 +3236,7 @@ object TxTable {
     replace: Boolean = false): Int = {
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
-    val (fs, rp) = fsFor(spark, root)
+    val rp = fsFor(spark, root)._2
     require(numBuckets >= 2 && numBuckets <= (1 << 20),
       s"txtable: numBuckets must be in [2, 1048576], got $numBuckets")
     statsCols.foreach(requireStatsGrammarSafe)
@@ -3229,43 +3278,40 @@ object TxTable {
       }
     requireCompat(head0)
     val helper = "_graft_bkt"
-    // per-bucket stats in ONE aggregate over the written layout; the
-    // real columns stayed IN the files (the helper was a copy of the
-    // derived id), so later reads serve full rows per dir. A DateType
-    // bucket column is excluded from the NDV sketch (sketch input
-    // must be int/long/string); statsCols sketches mirror the
-    // partitioned write path
-    val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
-      keys = if (dtB == DateType) Seq.empty else Seq(physB -> col(physB)))
+    // the integral, then the STRING stats columns (any other type
+    // records no stats); the bucket column sketches too, and records
+    // its sketch alone unless it is one of them
+    val physStats = statsCols.distinct
+      .flatMap(c => df.schema.find(_.name == c))
+      .filter(f => TxStagedWriter.sketchable(f.dataType))
+      .sortBy(_.dataType == StringType).map(f => physName(effMap, f.name))
+    val keyOnly = Seq(physB).filterNot(physStats.contains)
     commitRetry(spark, root, Some(head0)) { stage =>
       val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
-      val basePath = new Path(rp, baseDir).toString
-      // the repartition clusters each bucket's rows into one task →
-      // one file per bucket per append, whatever the task count
-      physDf0
+      // the shuffle clusters each bucket's rows into one task and the
+      // sort into one run → one file per bucket per append, whatever
+      // the task count; the bucket id selects the file, unstored
+      val buckets = physDf0
         .withColumn(helper,
           pmod(hash(col(physB)), lit(numBuckets)).cast("long"))
         .repartition(col(helper))
-        .write.partitionBy(helper).mode("overwrite").parquet(basePath)
-      verifyChecks()
-      val statRows = spark.read.parquet(basePath)
-        .groupBy(col(helper).cast("long").as(helper))
-        .agg(agg.aggs.head, agg.aggs.tail: _*)
-        .collect() // bucket-cardinality readback (<= numBuckets rows)
-        .map(r => r.getLong(0) -> r).toMap
-      if (statRows.isEmpty) throw new IllegalArgumentException(
-        "txtable: bucketed append of empty frame")
-      val entries = finishEntries(spark, rp,
-        statRows.keys.toSeq.sorted.map { id =>
-          val e = agg.decode(s"$baseDir/$helper=$id",
-            i => statRows(id).get(1 + i))
+        .sortWithinPartitions(helper)
+      val entries = staged(spark, rp, buckets, physStats ++ keyOnly,
+        tupleCol = Some(helper)) { files =>
+        verifyChecks()
+        if (files.isEmpty) throw new IllegalArgumentException(
+          "txtable: bucketed append of empty frame")
+        promoteTuples(spark, rp, baseDir, Seq(helper), physStats ++ keyOnly,
+          files) { (vs, e) =>
+          val id = vs.head.asInstanceOf[Long]
           // bucket dirs record no `sx:` exact markers
-          e.copy(stats = e.stats + (bucketStatKey -> (id, id)),
-            xvals = Map.empty)
-        })
+          e.copy(stats = e.stats -- keyOnly.flatMap(c =>
+            Seq(c, s"$nullsPrefix$c")) + (bucketStatKey -> (id, id)),
+            sstats = e.sstats -- keyOnly, xvals = Map.empty)
+        }
+      }
       head => {
         requireCompat(head)
-        val physStats = agg.integral ++ agg.strings
         val bucketed = Some(physB -> numBuckets)
         if (replace)
           Some(Commit("overwrite", head.meta.rewritten(None, physStats)
@@ -3285,45 +3331,30 @@ object TxTable {
     * storage-partitioned join face proves its co-clustering from
     * (ref analog: CompositeInputFormat co-partitions its merge join
     * on arbitrary composite tuples, src/mapred/org/apache/hadoop/
-    * mapred/join/CompositeInputFormat.java:1). Still ONE pass over
-    * the data: hive-style dynamic partitionBy on duplicated helper
-    * columns, stats read back per leaf in one grouped aggregate, then
-    * pure metadata renames. */
+    * mapred/join/CompositeInputFormat.java:1). ONE write whatever the
+    * partition count (a daily-partitioned year must not become 365
+    * serial jobs): the rows shuffle on the key so each tuple's rows
+    * reach one task, which stages them as one file (the keys stay IN
+    * the files, so per-dir scans serve full rows); [[promoteTuples]]
+    * renames each file into its `$p=v` dir with the stats its writer
+    * saw and the tuple's exact key stats ([[partKeyStats]]). */
   def appendPartitionedBy(df: DataFrame, root: String,
     partCols: Seq[String], statsCols: Seq[String] = Seq.empty): Int = {
     val spark = df.sparkSession
-    val (fs, rp) = fsFor(spark, root)
+    val rp = fsFor(spark, root)._2
     require(partCols.nonEmpty, "txtable: no partition columns")
-    // this path builds Entry lines directly (per-leaf stats read back
-    // from the written layout), bypassing statsEntry — so it must
-    // enforce the same stats-grammar guard: a partition/stats column
-    // named `_rows`, `str:x` or `n,x` would FORGE reserved segments
+    // the entry lines are built from the writers' facts, so the
+    // partition and stats columns must pass the stats-grammar guard:
+    // one named `_rows`, `str:x` or `n,x` would FORGE reserved segments
     // and the metadata-only paths would then serve the forged numbers
     // as exact (wrong results, not an error)
     (partCols ++ statsCols).foreach(requireStatsGrammarSafe)
-    // integral and DATE keys record exact `lo == hi` range stats
-    // (dates as their days-since-epoch encoding — exactly the value
-    // DateType holds internally, so stats and data cannot drift);
-    // STRING keys record the `sx:` exact-value marker — all prove the
+    // integral and DATE keys record exact `lo == hi` range stats,
+    // STRING keys the `sx:` exact-value marker — all prove the
     // clustering the SPJ / metadata-GROUP-BY faces demand. Anything
     // else (float, decimal, timestamp) has no exact stats encoding:
     // refuse loudly.
-    val partKind: Seq[Char] = partCols.map { partCol =>
-      val dt = df.schema.find(_.name == partCol).map(_.dataType)
-        .getOrElse(throw new IllegalArgumentException(
-          s"txtable: no partition column '$partCol' in the frame"))
-      dt match {
-        case org.apache.spark.sql.types.LongType |
-          org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.ShortType => 'i'
-        case org.apache.spark.sql.types.DateType => 'd'
-        case org.apache.spark.sql.types.StringType => 's'
-        case other => throw new IllegalArgumentException(
-          s"txtable: partition column '$partCol' must be integral, " +
-            s"date or string, got $other")
-      }
-    }
-    val partIsStr: Seq[Boolean] = partKind.map(_ == 's')
+    TxStagedWriter.requirePartitionable(df.schema, partCols)
     // logical→physical translation under a column mapping, exactly
     // like plain append (widening extends the map); the CHECK guard
     // wraps the LOGICAL frame (constraints speak logical names) and
@@ -3343,214 +3374,30 @@ object TxTable {
     val (physDf0, extMap) = toPhysicalFrame(guarded, m0)
     val effMap = extMap.orElse(m0)
     val physParts = partCols.map(physName(effMap, _))
-    val helpers = partCols.indices.map(i => s"_graft_part$i")
-    // Integral helpers are the value itself; STRING helpers are the
-    // 'x'-prefixed lowercase hex of the UTF-8 bytes — hex keeps every
-    // dir name path-safe and escape-free whatever the value holds,
-    // and the 'x' prefix keeps an empty string out of hive's default
-    // partition and all-digit hex out of partition-type inference.
-    // string partition VALUES cap at strStatMaxBytes: past that the
-    // exact-value stat that proves the clustering cannot be recorded
-    // (and the hex dir name would blow filesystem name limits) —
-    // checked IN the write expression so the one pass over the data
-    // also polices the cap, with no extra validation job
-    def helperExpr(p: String, kind: Char) = kind match {
-      case 's' => concat(lit("x"), lower(hex(
-        when(octet_length(col(p)) > lit(strStatMaxBytes),
-          raise_error(lit(partValueCapMsg))).otherwise(col(p)))))
-      // DateType → its own internal days-since-epoch integer
-      case 'd' => datediff(col(p), lit(java.sql.Date.valueOf("1970-01-01")))
-        .cast("long")
-      case _ => col(p).cast("long")
-    }
-    // per-dir exact stats in ONE aggregate over the written layout
-    // (the hive partition columns group rows by leaf dir), read back
-    // before the rename so the helper names can't collide with data
-    // columns. The read-back scans the PHYSICAL files, and read-side
-    // prune lookups key entry stats by physical names — so the
-    // aggregate and the stats map must both speak physical, not the
-    // caller's logical. Partition columns carry per-dir NDV sketches
-    // too (the real columns are still data columns here — helpers are
-    // the copies), so a partitioned table's merged NDV covers its keys
-    // as well; DATE keys sketch their days-since-epoch encoding (the
-    // sketch input type must be int/long/string — and distinct days
-    // ARE distinct dates, so the estimate is the right one)
-    val agg = StatsAgg.of(df.schema, statsCols, physName(effMap, _),
-      keys = physParts.zip(partKind).map { case (p, kind) =>
-        p -> (if (kind == 'd') helperExpr(p, kind) else col(p))
-      })
+    // the files and the entries speak PHYSICAL names: read-side prune
+    // lookups key entry stats by them
+    val physStats = physParts ++ statsCols.map(physName(effMap, _))
     commitRetry(spark, root, Some(head0)) { stage =>
       val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
-      val basePath = new Path(rp, baseDir).toString
-      // ONE pass over the data whatever the partition count (a daily-
-      // partitioned year must not become 365 serial jobs): hive-style
-      // dynamic `partitionBy` on DUPLICATED helper columns, so the real
-      // partition columns stay IN the files (plain partitionBy strips
-      // them into the path, which would vanish under the snapshot
-      // reader's per-dir scans). The pre-shuffle on the helpers clusters
-      // each tuple's rows into the task that writes its dir — one file
-      // per partition instead of tasks × dirs fragments.
-      try {
-        physParts.zip(helpers).zip(partKind)
-          .foldLeft(physDf0) { case (d, ((p, h), kind)) =>
-            d.withColumn(h, helperExpr(p, kind))
-          }.repartition(helpers.map(col): _*)
-          .write.partitionBy(helpers: _*).mode("overwrite").parquet(basePath)
+      val keys = physParts.map(col)
+      val entries = staged(spark, rp,
+        physDf0.repartition(keys: _*).sortWithinPartitions(keys: _*),
+        physStats, physParts) { files =>
         verifyChecks()
-      } catch {
-        case t: Throwable =>
-          val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-            .take(16).toSeq
-          if (chain.exists(e => e.getMessage != null &&
-            e.getMessage.contains(partValueCapMsg)))
-            throw new IllegalArgumentException(partValueCapMsg)
-          throw t
+        if (files.isEmpty) throw new IllegalArgumentException(
+          "txtable: partitioned append of empty frame")
+        promoteTuples(spark, rp, baseDir, physParts, physStats, files)(
+          partKeyStats(physParts))
       }
-      // NULLs can't address a `$partCol=v` dir (they land in the hive
-      // default-partition dir) — partitioned appends need a total
-      // partition assignment; fail loudly rather than lose rows. Leaf
-      // tuples stay in the RAW dir-name token space ("5" / "x6162")
-      // until entry building decodes them per column type.
-      def leafTuples(p: Path, depth: Int): Seq[Seq[String]] =
-        fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
-          .filter(_.startsWith(s"${helpers(depth)}=")).flatMap { n =>
-            val v = n.stripPrefix(s"${helpers(depth)}=")
-            if (v == "__HIVE_DEFAULT_PARTITION__")
-              throw new IllegalArgumentException(
-                s"txtable: partition column '${partCols(depth)}' contains " +
-                  "NULLs — partitioned appends need a total partition " +
-                  "assignment; coalesce NULLs to a sentinel value first")
-            // unreachable when the write-side raise_error policed the
-            // cap; kept as the loud backstop for exotic filesystems
-            if (partIsStr(depth) && (v.length - 1) / 2 > strStatMaxBytes)
-              throw new IllegalArgumentException(partValueCapMsg)
-            if (depth == helpers.length - 1) Seq(Seq(v))
-            else leafTuples(new Path(p, n), depth + 1).map(v +: _)
-          }
-      val tuples = leafTuples(new Path(rp, baseDir), 0)
-        .sortBy(_.mkString(","))
-      if (tuples.isEmpty) throw new IllegalArgumentException(
-        "txtable: partitioned append of empty frame")
-      def dirNameOf(vs: Seq[String]): String = baseDir + physParts.zip(vs)
-        .map { case (p, v) => s"/$p=$v" }.mkString
-      val g = helpers.length
-      val statRows = spark.read.parquet(basePath)
-        // pin helper types: partition-value inference may type small
-        // integral tokens INT; 'x'-prefixed hex tokens always infer
-        // string and group back verbatim
-        .groupBy(helpers.zip(partIsStr).map { case (h, isStr) =>
-          (if (isStr) col(h).cast("string") else col(h).cast("long")).as(h)
-        }: _*)
-        .agg(agg.aggs.head, agg.aggs.tail: _*)
-        .collect() // partition-cardinality readback (dates/buckets)
-        .map { r =>
-          val vs: Seq[String] = partIsStr.zipWithIndex.map { case (isStr, i) =>
-            if (isStr) r.getString(i) else r.getLong(i).toString
-          }
-          vs -> agg.decode(dirNameOf(vs), i => r.get(g + i))
-        }.toMap
-      // helper dirs → `$physPart=v` entry dirs: one metadata rename per
-      // path level per distinct prefix, leaves become the entry dirs
-      def renameLevel(p: Path, depth: Int): Unit = {
-        fs.listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
-          .filter(_.getName.startsWith(s"${helpers(depth)}="))
-          .foreach { d =>
-            val v = d.getName.stripPrefix(s"${helpers(depth)}=")
-            val dst = new Path(p, s"${physParts(depth)}=$v")
-            fs.rename(d, dst)
-            if (depth < helpers.length - 1) renameLevel(dst, depth + 1)
-          }
-      }
-      renameLevel(new Path(rp, baseDir), 0)
-      val entries = finishEntries(spark, rp, tuples.map { vs =>
-        val e = statRows(vs)
-        // the NULL-rejection above proved the partition columns null-
-        // free — record that as their `n,<col>` stats so metadata-only
-        // GROUP BY on a partition column can trust the per-dir counts.
-        // Integral keys get exact `lo == hi` range stats; string keys
-        // get the truncation-free bounds PLUS the `sx:` exact marker
-        // (the token is the value's own hex, so stats and data cannot
-        // disagree — both derive from the dir Spark actually wrote).
-        val intParts = physParts.zip(partIsStr).zip(vs).collect {
-          case ((p, false), v) => p -> (v.toLong, v.toLong)
-        }
-        val strHex = physParts.zip(partIsStr).zip(vs).collect {
-          case ((p, true), v) => p -> v.drop(1) // strip the 'x' prefix
-        }
-        e.copy(
-          stats = e.stats ++ intParts ++
-            physParts.map(p => s"$nullsPrefix$p" -> (0L, 0L)),
-          sstats = e.sstats ++ strHex.map { case (p, h) => p -> (h, h) },
-          xvals = e.xvals ++ strHex)
-      })
       head => {
         if (head.meta.bucketBy.isDefined) throw new IllegalStateException(
           s"txtable: $root became bucket-clustered concurrently; " +
             "value-partitioned appends would break the layout")
         Some(Commit("append",
           head.meta.copy(colMap = extMap.orElse(head.meta.colMap))
-            .withStats(physParts ++ statsCols.map(physName(effMap, _))),
+            .withStats(physStats),
           added = entries.map(_.line)))
       }
-    }
-  }
-
-  /** Promote staged files, each holding one NULL-free partition
-    * tuple, into `$p=v` entry dirs under `baseDir`: one metadata rename
-    * per file, per-dir stats folded from what the files' writers saw.
-    * Integral keys get exact `lo == hi` range stats, string keys the
-    * `sx:` exact-value marker — the same clustering proof
-    * appendPartitionedBy records. */
-  private def promotePartEntries(fs: FileSystem, rp: Path, baseDir: String,
-    partCols: Seq[String], statsCols: Seq[String],
-    staged: Seq[TxStagedFile]): Seq[Entry] = {
-    val byTuple = staged.groupBy(_.partVals.flatten)
-    byTuple.toSeq.sortBy(t => tupleSortKey(t._1)).map {
-      case (vs, fl) =>
-        val dirName = baseDir + partCols.zip(vs).map {
-          case (p, v: Long) => s"/$p=$v"
-          case (p, v) => s"/$p=x${hexOf(v.toString)}"
-        }.mkString
-        fs.mkdirs(new Path(rp, dirName))
-        fl.foreach { f =>
-          val src = new Path(f.path)
-          require(fs.rename(src,
-            new Path(new Path(rp, dirName), src.getName)),
-            s"txtable: failed to promote staged file ${f.path}")
-        }
-        val rows = fl.map(_.rows).sum
-        val bytes = fl.map(_.bytes).sum
-        val extra = statsCols.distinct.flatMap { c =>
-          val ss = fl.map(_.bounds.get(c))
-          val ns = fl.map(_.nulls.get(c))
-          // bounds: every file must report (all-NULL files excepted —
-          // those carry nulls and no bounds, so require nulls known)
-          val bound =
-            if (ns.exists(_.isEmpty) ||
-              fl.zip(ss).exists { case (f, s) =>
-                s.isEmpty && !f.nulls.get(c).contains(f.rows) }) None
-            else ss.flatten match {
-              case Seq() => None
-              case bs => Some(c -> (bs.map(_._1).min, bs.map(_._2).max))
-            }
-          val nc =
-            if (ns.exists(_.isEmpty)) None
-            else Some(s"$nullsPrefix$c" ->
-              { val n = ns.flatten.sum; (n, n) })
-          bound.toSeq ++ nc.toSeq
-        }
-        val intParts = partCols.zip(vs).collect {
-          case (p, v: Long) => p -> (v, v)
-        }
-        val strHex = partCols.zip(vs).collect {
-          case (p, v: String) => p -> hexOf(v)
-        }
-        Entry(isDelta = false, dirName,
-          Map(rowsKey -> (rows, rows), bytesKey -> (bytes, bytes)) ++
-            intParts ++
-            partCols.map(p => s"$nullsPrefix$p" -> (0L, 0L)) ++ extra,
-          strHex.map { case (p, h) => p -> (h, h) }.toMap,
-          strHex.toMap)
     }
   }
 
@@ -3669,11 +3516,13 @@ object TxTable {
     * partition columns in LOGICAL names, the file schema and partition
     * columns in the snapshot's PHYSICAL names, and the pairs the
     * column mapping gains for columns it has never seen (see
-    * [[physicalNames]]) — fixed once, before any task runs, so the
-    * commit promotes exactly the names the files were written under. */
+    * [[physicalNames]]), and the physical columns a partitioned write
+    * records stats on, keys first — fixed once, before any task runs,
+    * so the commit promotes exactly the names the files were written
+    * under and records exactly the stats their writers sketched. */
   private[graft] final case class Staging(schema: StructType,
     partCols: Seq[String], fileSchema: StructType, physParts: Seq[String],
-    added: Seq[(String, String)]) {
+    added: Seq[(String, String)], statsCols: Seq[String]) {
     /** Mapping `m` gaining the staged columns it has never seen. */
     def extend(m: Option[Seq[(String, String)]]): Option[Seq[(String, String)]] =
       m.map(pairs =>
@@ -3687,15 +3536,22 @@ object TxTable {
   }
 
   /** The [[Staging]] of a write of `schema` into `root`'s latest
-    * snapshot. */
+    * snapshot; a partitioned write records stats on its keys and the
+    * snapshot's stats columns or, when it declares none,
+    * `bootstrapStats`. */
   private[graft] def staging(spark: SparkSession, root: String,
-    schema: StructType, partCols: Seq[String]): Staging = {
+    schema: StructType, partCols: Seq[String],
+    bootstrapStats: Seq[String] = Seq.empty): Staging = {
     val (fs, rp) = fsFor(spark, root)
-    val m = metaAt(fs, rp, latestVersion(fs, rp)).colMap
-    val (phys, added) = physicalNames(schema.fieldNames.toSeq, m)
+    val meta = metaAt(fs, rp, latestVersion(fs, rp))
+    val (phys, added) = physicalNames(schema.fieldNames.toSeq, meta.colMap)
     val byName = schema.fieldNames.zip(phys).toMap
-    Staging(schema, partCols, StructType(schema.fields.zip(phys).map {
-      case (f, p) => f.copy(name = p) }), partCols.map(byName), added)
+    val st = Staging(schema, partCols, StructType(schema.fields.zip(phys)
+      .map { case (f, p) => f.copy(name = p) }), partCols.map(byName),
+      added, Seq.empty)
+    st.copy(statsCols = (st.physParts ++ (
+      if (meta.statsCols.nonEmpty) meta.statsCols
+      else bootstrapStats.map(physName(st.extend(meta.colMap), _)))).distinct)
   }
 
   /** A streaming epoch's duties at commit: record its `batch:` tag,
@@ -3729,9 +3585,11 @@ object TxTable {
     *  - `"replace"`   drops everything (INSERT OVERWRITE of the whole
     *                  table) but keeps the clustered layout.
     *
-    * NULL tuples and string values past the exact-value stat cap refuse
-    * before anything moves. The per-dir stats cover the table's declared
-    * stats columns, or `bootstrapStats` when it declares none. Prior
+    * The dirs land through [[promoteTuples]]: NULL tuples and string
+    * values past the exact-value stat cap refuse before anything moves,
+    * and the per-dir stats, as the writers saw them, cover the keys and
+    * the stats columns `st` fixed (the table's declared ones, or the
+    * write's bootstrap ones when it declares none). Prior
     * entries must PROVE their tuples through their dir names (zero-row
     * entries excepted — they can't violate partition semantics); an
     * unprovable non-empty dir refuses loudly rather than silently
@@ -3747,8 +3605,8 @@ object TxTable {
     * and old versions stay time-travelable until vacuum. */
   private[graft] def promotePartitioned(spark: SparkSession,
     root: String, st: Staging, staged: Seq[TxStagedFile],
-    bootstrapStats: Seq[String], mode: String = "append",
-    filterSql: Option[String] = None, epoch: Option[Epoch] = None): Int = {
+    mode: String = "append", filterSql: Option[String] = None,
+    epoch: Option[Epoch] = None): Int = {
     require(Seq("append", "dynamic", "filter", "replace").contains(mode),
       s"txtable: unknown partitioned-commit mode '$mode'")
     val (fs, rp) = fsFor(spark, root)
@@ -3769,24 +3627,8 @@ object TxTable {
           }
         }
       }
-    staged.foreach { f =>
-      require(f.partVals.forall(_.isDefined),
-        s"graft-tx: partition column(s) (${st.partCols.mkString(", ")}) " +
-          "contain NULLs — partitioned writes need a total partition " +
-          "assignment; coalesce NULLs to a sentinel value first")
-      f.partVals.flatten.foreach {
-        case s: String => require(s.getBytes("UTF-8").length <= strStatMaxBytes,
-          partValueCapMsg)
-        case _ => ()
-      }
-    }
     val meta0 = head0.meta
     val physParts = st.physParts
-    val statsCols =
-      (if (meta0.statsCols.nonEmpty) meta0.statsCols
-      else bootstrapStats.map(physName(st.extend(meta0.colMap), _)))
-        .filterNot(physParts.contains).distinct
-    (physParts ++ statsCols).foreach(requireStatsGrammarSafe)
     // catalog writes arrive CHECK-enforced; an epoch's rows are already
     // parquet on disk, so read back only the constraints' columns
     if (epoch.isDefined && meta0.checks.nonEmpty)
@@ -3796,9 +3638,9 @@ object TxTable {
     val stagedTuples = staged.map(_.partVals.flatten).toSet
     val partSchema = StructType(st.partCols.map(st.schema(_)))
     commitRetry(spark, root, Some(head0)) { stage =>
-      val newEntries = promotePartEntries(fs, rp,
+      val newEntries = promoteTuples(spark, rp,
         stage(s"data/$opName-${java.util.UUID.randomUUID()}"), physParts,
-        statsCols, staged)
+        st.statsCols, staged)(partKeyStats(physParts))
       // the staged-⊆-filter contract, checked ONCE outside the retry
       if (mode == "filter" && stagedTuples.nonEmpty) {
         val ok = evalPartFilter(spark, filterSql.get, partSchema,
@@ -3860,7 +3702,7 @@ object TxTable {
                 emptyFile(spark, rp, d, st.fileSchema, Seq.empty)).line)
             }
           val meta = head.meta.copy(bucketBy = None,
-            colMap = st.extend(head.meta.colMap)).withStats(physParts ++ statsCols)
+            colMap = st.extend(head.meta.colMap)).withStats(st.statsCols)
           Some(Commit(opName, tag.fold(meta)(meta.tagged),
             read = dropped.map(_.line -> Drop).toMap,
             added = newEntries.map(_.line) ++ blank))
@@ -5392,8 +5234,11 @@ object TxTable {
               else cur.filter(lit(false))
             val tmp = new Path(rp,
               s"_changes/.tmp-${java.util.UUID.randomUUID()}")
-            snapshotDiff(prev, cur, keys)
-              .write.mode("overwrite").parquet(tmp.toString)
+            // an empty diff stages one zero-row file carrying the schema
+            val diff = snapshotDiff(prev, cur, keys)
+            TxStagedWriter.stage(diff, TxStagedWriterFactory.of(spark,
+              tmp.toString, diff.queryExecution.optimizedPlan.schema),
+              touch = true)
             fs.mkdirs(new Path(rp, "_changes"))
             // HDFS-semantics rename(tmp, existing-dir) moves tmp
             // INSIDE the dir and returns true — so "rename succeeded"

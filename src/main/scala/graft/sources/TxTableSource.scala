@@ -2338,10 +2338,10 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
     val dir = s"$root/_staging/$streamId"
     if (!promotes) TxStagedWriterFactory.of(spark, dir, schema)
     else {
-      staging = TxTable.staging(spark, root, schema, partCols)
+      staging = TxTable.staging(spark, root, schema, partCols, statsCols)
       TxStagedWriterFactory.of(spark, dir, staging.fileSchema,
         staging.physParts,
-        if (partCols.isEmpty) staging.physOf(statsCols) else Seq.empty)
+        if (partCols.isEmpty) staging.physOf(statsCols) else staging.statsCols)
     }
   }
 
@@ -2366,7 +2366,7 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
       else spark.read.parquet(staged.map(_.path): _*)
         .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     if (partCols.nonEmpty)
-      TxTable.promotePartitioned(spark, root, staging, staged, statsCols,
+      TxTable.promotePartitioned(spark, root, staging, staged,
         epoch = Some(epoch))
     else if (promotes)
       TxTable.appendEpoch(spark, root, staging, staged, statsCols, epoch)
@@ -2403,13 +2403,13 @@ class TxStreamingWrite(root: String, info: LogicalWriteInfo,
 }
 
 /** One staged parquet file and what its writer saw while writing it:
-  * the row count, the byte length after close, the partition tuple
-  * (Longs for integral and date keys, Strings for string keys, None
-  * for NULL), for every flat column its null count, and — for the columns
-  * parquet stores as INT32 or INT64 that hold a non-null value — its
-  * (min, max) in the encoding the footer records (day counts, unscaled
-  * decimals, timestamp micros). For each sketched column
-  * ([[TxStagedWriterFactory.sketchCols]]) it also keeps, as the
+  * the row count, the byte length after close, the tuple that selected
+  * it (Longs for integral and date values, Strings for string values,
+  * None for NULL), for every stored flat column its null count, and —
+  * for the columns parquet stores as INT32 or INT64 that hold a
+  * non-null value — its (min, max) in the encoding the footer records
+  * (day counts, unscaled decimals, timestamp micros). For each sketched
+  * column ([[TxStagedWriterFactory.sketchCols]]) it also keeps, as the
   * per-dir statistics aggregate records them, the string (min, max)
   * of a STRING column and one updatable HLL sketch. The writer saw
   * every row, so these facts prove a file's tuple and a dir's stats
@@ -2434,37 +2434,41 @@ object TxStagedMessage {
 
 /** The one writer factory of every graft write: batch tasks stage
   * under `dir`, streaming tasks under `dir/epoch-<id>`. `conf` comes
-  * from [[TxParquetIO.writeConf]] for `schema`; `sketchCols` are the
-  * columns whose string bounds and HLL sketch the writer keeps. */
+  * from [[TxParquetIO.writeConf]] for the stored schema; `sketchCols`
+  * are the columns whose string bounds and HLL sketch the writer keeps.
+  * A file's tuple is its rows' `partCols` values, or the value of
+  * `tupleCol`: a column of `schema` that selects the file but is not
+  * stored (the bucket id of a bucketed write, the z block of a z-order
+  * rewrite), projected out of each row before the write. */
 case class TxStagedWriterFactory(dir: String, schema: StructType,
   partCols: Seq[String], conf: SerializableConfiguration,
-  sketchCols: Seq[String])
+  sketchCols: Seq[String], tupleCol: Option[String] = None)
   extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
     taskId: Long): DataWriter[InternalRow] = writer(partitionId, taskId)
   override def createWriter(partitionId: Int, taskId: Long,
     epochId: Long): DataWriter[InternalRow] =
     new TxStagedWriter(s"$dir/epoch-$epochId/part-$partitionId-$taskId",
-      schema, partCols, conf, sketchCols)
+      schema, partCols, conf, sketchCols, tupleCol)
   def writer(partitionId: Int, taskId: Long): TxStagedWriter =
     new TxStagedWriter(s"$dir/part-$partitionId-$taskId", schema,
-      partCols, conf, sketchCols)
+      partCols, conf, sketchCols, tupleCol)
 }
 
 object TxStagedWriterFactory {
   /** The factory for writes of `schema` into `dir` in `spark`'s
     * session. */
   def of(spark: SparkSession, dir: String, schema: StructType,
-    partCols: Seq[String] = Seq.empty,
-    sketchCols: Seq[String] = Seq.empty): TxStagedWriterFactory =
-    TxStagedWriterFactory(dir, schema, partCols,
-      TxParquetIO.writeConf(spark, schema), sketchCols)
+    partCols: Seq[String] = Seq.empty, sketchCols: Seq[String] = Seq.empty,
+    tupleCol: Option[String] = None): TxStagedWriterFactory =
+    TxStagedWriterFactory(dir, schema, partCols, TxParquetIO.writeConf(spark,
+      TxStagedWriter.stored(schema, tupleCol)), sketchCols, tupleCol)
 }
 
 /** Stages one task's rows as ONE parquet file per contiguous run of
-  * one `partCols` tuple — `<prefix>.parquet` when there are no
-  * partition columns (the file never rolls), `<prefix>-<n>.parquet`
-  * otherwise — through Spark's own parquet writer
+  * one tuple (the `partCols` values, or the unstored `tupleCol` value)
+  * — `<prefix>.parquet` when there is no tuple (the file never rolls),
+  * `<prefix>-<n>.parquet` otherwise — through Spark's own parquet writer
   * ([[TxParquetIO.writer]]), and reports each file's [[TxStagedFile]]
   * facts. A partitioned Write requires its input clustered and sorted
   * on the partition columns, so a run IS a tuple and the task stages
@@ -2481,37 +2485,37 @@ object TxStagedWriterFactory {
   * the aggregate over its rows estimates. */
 class TxStagedWriter(prefix: String, schema: StructType,
   partCols: Seq[String], conf: SerializableConfiguration,
-  sketchCols: Seq[String] = Seq.empty)
+  sketchCols: Seq[String] = Seq.empty, tupleCol: Option[String] = None)
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.types._
   import org.apache.datasketches.hll.HllSketch
-  private val partIdx = partCols.map(schema.fieldIndex)
-  private val n = schema.length
-  private val flat = schema.fields.map(_.dataType match {
+  import TxStagedWriter.longOf
+  // the tuple's columns and values, read off the incoming row
+  private val tupleAt = (partCols ++ tupleCol).map { c =>
+    val i = schema.fieldIndex(c)
+    (i, longOf(schema(i).dataType))
+  }
+  // the stored row: the incoming one, less the tuple column
+  private val stored = TxStagedWriter.stored(schema, tupleCol)
+  private val project: InternalRow => InternalRow = tupleCol.fold(
+    identity[InternalRow] _) { c =>
+    import org.apache.spark.sql.catalyst.expressions._
+    UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if f.name != c => BoundReference(i, f.dataType, f.nullable)
+    })
+  }
+  private val n = stored.length
+  private val flat = stored.fields.map(_.dataType match {
     case _: ArrayType | _: StructType | _: MapType => false
     case _ => true
   })
-  // a column's value as parquet's INT32/INT64 footer statistics order it
-  private val integral: Array[(InternalRow, Int) => Long] =
-    schema.fields.map(_.dataType match {
-      case ByteType => (r: InternalRow, i: Int) => r.getByte(i).toLong
-      case ShortType => (r: InternalRow, i: Int) => r.getShort(i).toLong
-      case IntegerType | DateType =>
-        (r: InternalRow, i: Int) => r.getInt(i).toLong
-      case LongType | TimestampType | TimestampNTZType =>
-        (r: InternalRow, i: Int) => r.getLong(i)
-      case d: DecimalType if d.precision <= 18 => (r: InternalRow, i: Int) =>
-        r.getDecimal(i, d.precision, d.scale).toUnscaledLong
-      case _ => null
-    })
+  private val integral = stored.fields.map(f => longOf(f.dataType))
   // the sketched columns: the integral and STRING ones
   private val sketched: Array[Int] = sketchCols.distinct.flatMap { c =>
-    Some(schema.fieldNames.indexOf(c)).filter(i => i >= 0 && (schema(i).dataType match {
-      case LongType | IntegerType | ShortType | StringType => true
-      case _ => false
-    }))
+    Some(stored.fieldNames.indexOf(c)).filter(i =>
+      i >= 0 && TxStagedWriter.sketchable(stored(i).dataType))
   }.toArray
-  private val isString = sketched.map(schema(_).dataType == StringType)
+  private val isString = sketched.map(stored(_).dataType == StringType)
   private val binary = org.apache.spark.sql.catalyst.util.CollationFactory
     .fetchCollation(StringType.collationId)
   private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = _
@@ -2528,18 +2532,18 @@ class TxStagedWriter(prefix: String, schema: StructType,
   private var sketches: Array[HllSketch] = _
 
   private def tupleOf(row: InternalRow): Seq[Option[Any]] =
-    partIdx.map { i =>
+    tupleAt.map { case (i, long) =>
       if (row.isNullAt(i)) None
       // copy strings out of the unsafe row buffer — the value outlives it
-      else if (integral(i) == null) Some(row.getUTF8String(i).toString)
-      else Some(integral(i)(row, i))
+      else if (long == null) Some(row.getUTF8String(i).toString)
+      else Some(long(row, i))
     }
 
   /** Open the next file (`t` its tuple). */
   private def open(t: Seq[Option[Any]]): Unit = {
     finish()
     path = new org.apache.hadoop.fs.Path(
-      if (partCols.isEmpty) s"$prefix.parquet"
+      if (tupleAt.isEmpty) s"$prefix.parquet"
       else s"$prefix-${files.size}.parquet")
     writer = TxParquetIO.writer(path.toString, conf.value)
     tuple = t
@@ -2548,11 +2552,12 @@ class TxStagedWriter(prefix: String, schema: StructType,
   }
 
   /** Stage a zero-row file carrying the schema, unless one is open. */
-  def touch(): Unit = if (writer == null) open(partIdx.map(_ => None))
+  def touch(): Unit = if (writer == null) open(tupleAt.map(_ => None))
 
-  override def write(row: InternalRow): Unit = {
-    val t = tupleOf(row)
+  override def write(in: InternalRow): Unit = {
+    val t = tupleOf(in)
     if (writer == null || t != tuple) open(t)
+    val row = project(in)
     writer.write(row)
     rows += 1
     var i = 0
@@ -2595,7 +2600,7 @@ class TxStagedWriter(prefix: String, schema: StructType,
   private def finish(): Unit = if (writer != null) {
     writer.close()
     writer = null
-    val name = (i: Int) => schema(i).name
+    val name = (i: Int) => stored(i).name
     files ::= TxStagedFile(path.toString, rows,
       path.getFileSystem(conf.value).getFileStatus(path).getLen, tuple,
       (0 until n).filter(flat).map(i => name(i) -> nulls(i)).toMap,
@@ -2627,17 +2632,43 @@ class TxStagedWriter(prefix: String, schema: StructType,
 }
 
 object TxStagedWriter {
+  import org.apache.spark.sql.types._
+
+  /** The columns `schema`'s writers store: all but `tupleCol`. */
+  def stored(schema: StructType, tupleCol: Option[String]): StructType =
+    tupleCol.fold(schema)(c => StructType(schema.filterNot(_.name == c)))
+
+  /** A value of type `dt` as parquet's INT32/INT64 footer statistics
+    * order it; null for the types stored otherwise. */
+  def longOf(dt: DataType): (InternalRow, Int) => Long = dt match {
+    case ByteType => (r, i) => r.getByte(i).toLong
+    case ShortType => (r, i) => r.getShort(i).toLong
+    case IntegerType | DateType => (r, i) => r.getInt(i).toLong
+    case LongType | TimestampType | TimestampNTZType => (r, i) => r.getLong(i)
+    case d: DecimalType if d.precision <= 18 => (r, i) =>
+      r.getDecimal(i, d.precision, d.scale).toUnscaledLong
+    case _ => null
+  }
+
+  /** The types whose string bounds and HLL sketch a writer keeps: the
+    * ones the per-dir statistics aggregate records. */
+  def sketchable(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | ShortType | StringType => true
+    case _ => false
+  }
+
   /** Stage `df`'s rows through `factory`'s writers as ONE SQL execution
     * of `df`'s own plan (its Observations and the listeners see that
     * plan), one writer per partition; returns the files of every
     * partition's successful attempt — exactly what a commit may
     * promote. A failed attempt aborts its own files; anything else
-    * left under `factory.dir` is never listed. */
-  def stage(df: DataFrame, factory: TxStagedWriterFactory)
-    : Seq[TxStagedFile] = {
+    * left under `factory.dir` is never listed. With `touch`, a
+    * zero-row `df` stages one file carrying the schema. */
+  def stage(df: DataFrame, factory: TxStagedWriterFactory,
+    touch: Boolean = false): Seq[TxStagedFile] = {
     val qe = df.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
-      Some("graft-tx write")) {
+    val files = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("graft-tx write")) {
       val rdd = qe.toRdd
       rdd.sparkContext.runJob(rdd,
         (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
@@ -2646,6 +2677,8 @@ object TxStagedWriter {
           catch { case t: Throwable => w.abort(); throw t }
         }).toSeq.flatten
     }
+    if (files.nonEmpty || !touch) files
+    else { val w = factory.writer(0, 0L); w.touch(); w.staged() }
   }
 
   /** The partition columns a staged write can promote by rename: each

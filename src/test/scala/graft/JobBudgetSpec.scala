@@ -1,12 +1,16 @@
 package graft
 
 import graft.operators.Dedup
+import graft.sources.TxTable
+import scala.jdk.CollectionConverters._
 
 /** Pins Spark-job budgets, as MetaRpcSpec pins commit-metadata RPCs:
   * nearly all of a small query's time is fixed per-job cost, so a job
   * a refactor adds is a regression even when the answer stays right.
   * Pinned: the iterative PageRank, a table load (no schema-inference
-  * job) and a SQL INSERT (the write, no stats rescan). PageRank's
+  * job), a SQL INSERT (the write, no stats rescan) and the grouped
+  * writes (partitioned, bucketed, z-order: one write each, no
+  * readback, no committer files). PageRank's
   * budget at sf0.01 on local[4]: the node count (2), one broadcast of
   * the edge artifact that every round reuses (1), one shuffle per
   * round's aggregate (5), the range sort's bound sampling and its
@@ -54,5 +58,46 @@ class JobBudgetSpec extends SparkSpec {
     val jobs = jobNamesDuring(spark.sql("INSERT INTO jb_insert VALUES (3, 'c')"))
     assert(jobs.size === 1, s"INSERT ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
     assert(spark.table("jb_insert").count() === 3L)
+  }
+
+  /** Paths under `root` a committer leaves behind. */
+  private def committerDebris(root: String): Seq[String] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try it.iterator().asScala.map(_.toString).filter(p =>
+      p.endsWith("/_SUCCESS") || p.contains("/_temporary")).toList
+    finally it.close()
+  }
+
+  /** The grouped writes stage through the one staged writer: each runs
+    * ONE write job, after its shuffle's AQE map-stage job, and no
+    * readback of what it wrote. The z-order rewrite also runs its
+    * dims' min/max aggregate and its max-z aggregate, two jobs each. */
+  test("grouped writes: one staged write each, no committer debris") {
+    import spark.implicits._
+    val rows = (1L to 40L).map(k => (k, k % 4, s"v${k % 3}"))
+      .toDF("k", "p", "s")
+    val part = tmpDir() + "/jb_part"
+    val bucket = tmpDir() + "/jb_bucket"
+    val zorder = tmpDir() + "/jb_zorder"
+    TxTable.appendPartitionedBy(rows, part, Seq("p"), Seq("k"))
+    TxTable.appendBucketedBy(rows, bucket, "k", 4, Seq("k"))
+    TxTable.append(rows, zorder, Seq("k"))
+    for ((name, write, root, budget) <- Seq[(String, () => Any, String, Int)](
+      ("appendPartitionedBy", () =>
+        TxTable.appendPartitionedBy(rows, part, Seq("p"), Seq("k")), part, 2),
+      ("appendBucketedBy", () =>
+        TxTable.appendBucketedBy(rows, bucket, "k", 4, Seq("k")), bucket, 2),
+      ("optimizeZOrder", () =>
+        TxTable.optimizeZOrder(spark, zorder, "k", "p", nDirs = 4), zorder,
+        6))) {
+      val jobs = jobNamesDuring(write())
+      info(s"$name: ${jobs.size} Spark jobs: ${jobs.mkString("; ")}")
+      assert(jobs.count(_.contains("TxTableSource.scala")) === 1,
+        s"$name: not one staged write: ${jobs.mkString("; ")}")
+      assert(jobs.size === budget,
+        s"$name ran ${jobs.size} jobs: ${jobs.mkString("; ")}")
+      assert(committerDebris(root).isEmpty,
+        s"$name left ${committerDebris(root).mkString(", ")}")
+    }
   }
 }

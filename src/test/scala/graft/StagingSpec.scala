@@ -127,7 +127,7 @@ class StagingSpec extends SparkSpec {
       Seq("day"), Seq(Row(1L, 10L), Row(2L, 20L)))
     intercept[IllegalArgumentException] {
       TxTable.promotePartitioned(spark, root,
-        TxTable.staging(spark, root, schema, Seq("day")), staged, Seq.empty,
+        TxTable.staging(spark, root, schema, Seq("day")), staged,
         epoch = Some(TxTable.Epoch("s", 0L,
           _ => throw new IllegalArgumentException("refused"))))
     }

@@ -664,7 +664,7 @@ class TxSourceSpec extends SparkSpec {
     val before = TxTable.latestVersion(spark, root)
     val schema = TxTable.read(spark, root).schema
     TxTable.promotePartitioned(spark, root,
-      TxTable.staging(spark, root, schema, Seq("day")), Seq.empty, Seq("k"),
+      TxTable.staging(spark, root, schema, Seq("day"), Seq("k")), Seq.empty,
       epoch = Some(TxTable.Epoch(sid, 0L, _ => ())))
     assert(TxTable.latestVersion(spark, root) === before)
   }
@@ -741,12 +741,13 @@ class TxSourceSpec extends SparkSpec {
     // stage two partition-pure files through the writer BEFORE
     // attaching the job counter — only the promote itself must be
     // job-free
+    val st = TxTable.staging(spark, root, schema, Seq("day"), Seq("k"))
     val staged = stageRows(root + "/_staging/z/epoch-0/part-0-0", schema,
-      Seq("day"), Seq(Row(1L, 10L), Row(1L, 11L), Row(2L, 20L)))
+      Seq("day"), Seq(Row(1L, 10L), Row(1L, 11L), Row(2L, 20L)),
+      sketchCols = st.statsCols)
     assert(staged.map(_.partVals) === Seq(Seq(Some(1L)), Seq(Some(2L))))
-    val st = TxTable.staging(spark, root, schema, Seq("day"))
     val jobs = jobsDuring {
-      TxTable.promotePartitioned(spark, root, st, staged, Seq("k"),
+      TxTable.promotePartitioned(spark, root, st, staged,
         epoch = Some(TxTable.Epoch("z", 0L, _ => ())))
     }
     assert(jobs === 0,
@@ -775,6 +776,7 @@ class TxSourceSpec extends SparkSpec {
     // epoch stages under the PHYSICAL names (day, v) and promotes
     TxTable.renameColumn(spark, root, "day", "dt")
     TxTable.renameColumn(spark, root, "v", "value")
+    val loaded = face(root).inputFiles.toSet
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Double)]
     val q = input.toDF().toDF("dt", "k", "value")
@@ -790,7 +792,8 @@ class TxSourceSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ===
       Set((1L, 10L, 1.0), (1L, 11L, 1.1), (2L, 20L, 2.0)))
     // the epoch's files keep their staged names under physical dirs
-    val epochFiles = face(root).inputFiles.map(new org.apache.hadoop.fs.Path(_))
+    val epochFiles = face(root).inputFiles.filterNot(loaded)
+      .map(new org.apache.hadoop.fs.Path(_))
       .filter(_.getName.matches("part-\\d+-\\d+-\\d+\\.parquet"))
     assert(epochFiles.length === 2 &&
       epochFiles.forall(_.getParent.getName.startsWith("day=")),

@@ -239,4 +239,56 @@ class WriteStatsSpec extends SparkSpec {
         .foreach(l => assert(assertRescanned(root, l, statsCols).isEmpty))
     }
   }
+
+  test("SQL partitioned INSERT and the partitionBy sink record the " +
+    "rescan's stats") {
+    // SQL: a STRING-keyed PARTITIONED BY table, two INSERTs and a
+    // dynamic INSERT OVERWRITE
+    val sqlRoot = tmpDir() + "/ws_sql_part"
+    spark.sql("DROP TABLE IF EXISTS ws_sql_part")
+    spark.sql("CREATE TABLE ws_sql_part (k BIGINT, m BIGINT, q BIGINT, " +
+      "s STRING, region STRING, d DATE) USING `graft-tx` PARTITIONED BY " +
+      s"(region) OPTIONS (path '$sqlRoot', statsCols '${statsCols.mkString(",")}')")
+    try {
+      for ((df, i) <- Seq(first, second).zipWithIndex) {
+        df.createOrReplaceTempView(s"ws_part_src$i")
+        val lines = written(sqlRoot)(
+          spark.sql(s"INSERT INTO ws_sql_part SELECT * FROM ws_part_src$i"))
+        assert(lines.size === 2)
+        lines.foreach(l => assert(
+          assertRescanned(sqlRoot, l, "region" +: statsCols).isEmpty))
+      }
+      withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        written(sqlRoot)(spark.sql(
+          "INSERT OVERWRITE ws_sql_part SELECT * FROM ws_part_src1"))
+          .foreach(l => assert(
+            assertRescanned(sqlRoot, l, "region" +: statsCols).isEmpty))
+      }
+    } finally spark.sql("DROP TABLE ws_sql_part")
+    // the sink: a DATE-keyed partitionBy stream, one epoch per frame;
+    // the key records its exact stats as appendPartitionedBy does
+    val sinkRoot = tmpDir() + "/ws_sink_part"
+    val src = tmpDir() + "/ws_sink_src"
+    val ckpt = tmpDir() + "/ws_sink_ckpt"
+    for (df <- Seq(first, second)) {
+      df.coalesce(1).write.mode("append").parquet(src)
+      val lines = written(sinkRoot)(spark.readStream.schema(first.schema)
+        .parquet(src).writeStream.format("graft-tx")
+        .option("path", sinkRoot).option("partitionBy", "d")
+        .option("statsCols", statsCols.mkString(","))
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination())
+      assert(lines.size === 3)
+      lines.foreach { l =>
+        val extra = assertRescanned(sinkRoot, l, statsCols)
+        val (dir, _) = parse(l)
+        val day = dir.split("/d=").last
+        assert(extra.keySet === Set("d", "n,d", "hll:d"), l)
+        assert(extra("d") === s"$day:$day")
+        assert(extra("n,d") === "0:0")
+        assert(hllEstimate(sinkRoot, dir, "d", extra("hll:d")) === 1.0)
+      }
+    }
+  }
 }
