@@ -2,6 +2,8 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the warehouse star schema (TESTDATA.md).
@@ -25,7 +27,7 @@ object Tables {
     // (nor the classic session class on its classpath)
     if (spark.getClass.getName != "org.apache.spark.sql.classic.SparkSession")
       spark.read.parquet(path)
-    else spark.read.schema(footerSchema(spark, path)).parquet(path)
+    else parquet(spark, path)
   }
 
   // the session flags Spark's footer conversion reads
@@ -33,38 +35,52 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong")
-  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Seq[Option[String]]), StructType]()
+  private val relations = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[Any, BaseRelation]]())
 
   /** The schema `spark.read.parquet(path)` infers, without its
-    * footer-reading Spark job: Spark's own conversion of the footer of
-    * the file (or of a directory's first data file, the one inference
-    * reads), made nullable, cached by file, length, modification time
-    * and the session's converter flags. */
+    * footer-reading Spark job (see [[parquet]]). */
   private[graft] def footerSchema(spark: SparkSession,
-    path: String): StructType = {
+    path: String): StructType = parquet(spark, path).schema
+
+  /** `spark.read.parquet(path)`, resolved once per session and file
+    * set: the relation Spark's `DataSource` resolves — its path checks
+    * and its file listing — is reused while the file, or each of a
+    * directory's data files, keeps its length and modification time
+    * and the session its converter flags, so a repeated load costs one
+    * status call. Its schema is the `known` one, else Spark's own
+    * conversion of the footer of the file (or of a directory's first
+    * data file, the one inference reads), made nullable. */
+  private[graft] def parquet(spark: SparkSession, path: String,
+    known: Option[StructType] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st0 = fs.getFileStatus(p)
-    val st =
-      if (!st0.isDirectory) st0
-      else fs.listStatus(p).filter(s => s.isFile &&
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val st0 = fs.getFileStatus(new Path(path))
+    val files =
+      if (!st0.isDirectory) Seq(st0)
+      else fs.listStatus(st0.getPath).filter(s => s.isFile &&
         !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")).minBy(_.getPath.getName)
-    val flags = converterFlags.map(spark.conf.getOption)
-    footerSchemas.computeIfAbsent(
-      (st.getPath.toString, st.getLen, st.getModificationTime, flags), _ => {
+        !s.getPath.getName.startsWith(".")).sortBy(_.getPath.getName).toSeq
+    val key = (path, files.map(s => (s.getPath.toString, s.getLen,
+      s.getModificationTime)), converterFlags.map(spark.conf.getOption))
+    val rels = relations.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap())
+    spark.baseRelationToDataFrame(rels.computeIfAbsent(key, _ => {
+      val schema = known.getOrElse {
+        val st = files.head
         val footer = ParquetFooterReader.readFooter(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+            fs.getConf),
           org.apache.parquet.format.converter.ParquetMetadataConverter
             .SKIP_ROW_GROUPS)
         graft.sources.TxTable.nullable(ParquetFileFormat.readSchemaFromFooter(
           new org.apache.parquet.hadoop.Footer(st.getPath, footer),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
           .asInstanceOf[StructType]
-      })
+      }
+      DataSource(spark, "parquet", Seq(path), Some(schema)).resolveRelation()
+    }))
   }
 
   /** Register every table as a temp view so users can drive the whole

@@ -826,7 +826,7 @@ object Dedup {
       (p.toString, built.schema)
     }
     // the file source marks a user schema nullable, as inference does
-    spark.read.schema(schema).parquet(path)
+    Tables.parquet(spark, path, Some(schema))
   }
 
   /** Shared source ↔ span-fingerprint edge base for the graph family

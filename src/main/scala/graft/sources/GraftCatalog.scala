@@ -456,7 +456,7 @@ class GraftCatalog extends DelegatingCatalogExtension
     val schema =
       if (!TxTable.exists(spark, root)) base.schema()
       else withDefaultMetadata(spark, root, base,
-        TxRelation(spark, root, params).schema, travel)
+        TxTableSource.schemaOf(spark, root, params), travel)
     val opts = new java.util.HashMap[String, String]()
     params.foreach { case (k, v) => opts.put(k, v) }
     opts.put("provider", "graft-tx")

@@ -810,19 +810,19 @@ object TxTable {
     * translate, or a predicate that does not resolve (every dir then
     * opens, and the per-dir evaluation reports the error), keeps the
     * filters from being whole. */
-  private def predicateTriage(spark: SparkSession, rp: Path,
+  private def predicateTriage(spark: SparkSession, fs: FileSystem, rp: Path,
     predSql: String, entries: Seq[Entry],
     m: Option[Seq[(String, String)]]): Seq[(Entry, DirFate)] = {
-    val schemas = dirSparkSchemas(spark, rp, entries.map(_.dir))
+    val schemas = dirSparkSchemas(fs, rp, entries.map(_.dir))
     val schema = org.apache.spark.sql.types.StructType(
       entries.flatMap(e => schemas.get(e.dir)).flatMap(_.fields)
         .distinctBy(_.name).map(f => f.copy(name = logicalName(m, f.name))))
-    val fs =
+    val filters =
       try org.apache.spark.sql.graft.FilterTranslation.conjuncts(
         spark.createDataFrame(java.util.Collections
           .emptyList[org.apache.spark.sql.Row](), schema).filter(predSql))
       catch { case _: org.apache.spark.sql.AnalysisException => Seq(None) }
-    triage(fs.flatten, fs.forall(_.isDefined), entries, m)
+    triage(filters.flatten, filters.forall(_.isDefined), entries, m)
   }
 
   /** Plan snapshot `h` under `filters` (LOGICAL names) plus `keyRange`
@@ -861,6 +861,17 @@ object TxTable {
     SnapshotPlan(keyCols, allEntries, entries, rows)
   }
 
+  /** The dirs of `h` a read under `filters` and `keyRange` opens. */
+  private[sources] def planned(h: Head, filters: Seq[Filter],
+    keyRange: Option[(Long, Long)]): Seq[Entry] =
+    planSnapshot(h, filters, keyRange).entries
+
+  /** The columns snapshot `h` reads as: a plain snapshot's from the
+    * footers and the head alone, any other's from its resolved frame
+    * (analysis only, no job). */
+  private[sources] def schemaOf(spark: SparkSession, h: Head): StructType =
+    plainSchema(h).getOrElse(readWhere(spark, h, Seq.empty, None).schema)
+
   /** The Scala range arguments as the bound filters of [[readWhere]]. */
   private def rangeFilters(colRanges: Map[String, (Long, Long)],
     strRanges: Map[String, (String, String)]): Seq[Filter] =
@@ -869,15 +880,58 @@ object TxTable {
       strRanges.toSeq.flatMap { case (c, (lo, hi)) =>
         TxTableSource.between(c, lo, hi) }
 
-  /** Data FILES of the snapshot that survive the dir triage of
-    * `filters` — what the `graft-tx` relation reports as
-    * `Dataset.inputFiles`, so option-driven skipping is observable
-    * from the standard API. */
-  private[sources] def filesWhere(spark: SparkSession, h: Head,
-    filters: Seq[Filter], keyRange: Option[(Long, Long)]): Array[String] = {
-    val entries = planSnapshot(h, filters, keyRange).entries
-    val files = listDataFiles(spark, h.rp, entries.map(_.dir))
-    entries.toArray.flatMap(e => files.getOrElse(e.dir, Seq.empty))
+  /** The dirs of `es` a scan's translated `filters` (names as the
+    * files spell them) do not refute — [[triage]] at a scan. */
+  private[sources] def surviving(filters: Seq[Filter],
+    es: Seq[Entry]): Seq[Entry] =
+    if (filters.isEmpty) es
+    else triage(filters, whole = false, es, None)
+      .collect { case (e, fate) if fate != Refuted => e }
+
+  /** The latest head, probed forward from `h` — one `exists` per
+    * version since `h` (commit versions are dense, and a claimed
+    * commit never changes), so a reader that already holds a head
+    * follows the table without a second hint read. */
+  private[sources] def latestFrom(h: Head): Head = {
+    var v = h.version
+    while ({ metaRpcs.incrementAndGet()
+      h.fs.exists(commitPath(h.rp, v + 1)) }) v += 1
+    if (v == h.version) h else headAt(h.fs, h.rp, v)
+  }
+
+  /** The schema snapshot `h` reads as when it is PLAIN, or None. A
+    * plain snapshot has no delta entries, no `pd:` sidecars, one dir
+    * schema (footers, [[dirSparkSchemas]]), logical names equal to the
+    * physical ones, and every declared column in its files: its rows
+    * are exactly its files' rows, so it reads as one native file scan. */
+  private[sources] def plainSchema(h: Head): Option[StructType] = {
+    val es = h.entries
+    val schemas = dirSparkSchemas(h.fs, h.rp, es.map(_.dir))
+    es.map(e => schemas.get(e.dir)).distinct match {
+      case Seq(Some(sc)) if !es.exists(e => e.isDelta || e.pdels.nonEmpty) &&
+        h.meta.liveAdded.forall(c => sc.fieldNames.contains(c.phys)) &&
+        h.meta.colMap.forall(m => liveMap(m).filter(p =>
+          sc.fieldNames.contains(p._2)) == sc.fieldNames.toSeq.map(n => (n, n)))
+        => Some(sc)
+      case _ => None
+    }
+  }
+
+  /** Spark's own parquet scan of `dirs` read as `schema`, over a
+    * [[TxFileIndex]] fixed to them: no `DataSource` resolution, and
+    * each dir listed once per JVM. */
+  private def scanDirs(spark: SparkSession, fs: FileSystem, rp: Path,
+    es: Seq[Entry], schema: StructType): DataFrame =
+    TxFileIndex.frame(spark, TxFileIndex(fs, rp, es), schema)
+
+  /** The data bytes of each of `es`: the `_bytes` stat, else the
+    * length of the dir's listed files ([[dataFiles]]). */
+  private[sources] def entryBytes(fs: FileSystem, rp: Path,
+    es: Seq[Entry]): Seq[Long] = {
+    val listed = dataFiles(fs, rp,
+      es.filterNot(_.stats.contains(bytesKey)).map(_.dir))
+    es.map(e => e.stats.get(bytesKey).map(_._1)
+      .getOrElse(listed(e.dir).map(_.getLen).sum))
   }
 
   /** Read snapshot `version` (default: latest). A snapshot with no
@@ -919,10 +973,12 @@ object TxTable {
   /** `read` in PHYSICAL column names (pre-mapping), unfiltered — the
     * internal face rewrite ops and the change-feed staging consume. */
   private def readResolved(spark: SparkSession, root: String,
-    version: Int): DataFrame = {
-    val h = resolve(spark, root, version)
+    version: Int): DataFrame =
+    readPhysical(spark, resolve(spark, root, version))
+
+  /** Snapshot `h` in PHYSICAL column names, unfiltered. */
+  private def readPhysical(spark: SparkSession, h: Head): DataFrame =
     readResolved(spark, h, planSnapshot(h, Seq.empty, None))
-  }
 
   /** The resolved rows of `plan`'s dirs in PHYSICAL names. Declared
     * (ALTER TABLE ADD COLUMNS) columns that no scanned dir carries yet
@@ -944,35 +1000,36 @@ object TxTable {
       }
   }
 
+  /** The operators of `plan` over native scans: each group of dirs
+    * that reads alike is ONE relation over a [[TxFileIndex]] fixed to
+    * it ([[scanDirs]]) — a plain snapshot is a single scan, sidecar
+    * dirs, widened dirs and merge-on-read parts each their own — with
+    * every schema from the footers, so building the frame resolves no
+    * `DataSource` and lists no dir twice in a JVM. */
   private def readResolved0(spark: SparkSession, r: Head,
     plan: SnapshotPlan): DataFrame = {
-    val rp = r.rp
+    val (fs, rp) = (r.fs, r.rp)
     val allEntries = plan.allEntries
     val keyCols = plan.keyCols
     val entries = plan.entries
-    // per-dir Spark schemas from footers (no inference jobs); a dir
-    // absent from the map (no data file) falls back to inference
-    val schemaOf = dirSparkSchemas(spark, rp, allEntries.map(_.dir))
+    // per-dir Spark schemas from footers; a dir without a data file
+    // reads as no rows and no columns
+    val schemaOf = dirSparkSchemas(fs, rp, allEntries.map(_.dir))
+    def schema(e: Entry) = schemaOf.getOrElse(e.dir, new StructType())
     // defaults fill PER DIR: a pre-ADD dir unioned with a post-ADD dir
     // must read the default while the post-ADD dir reads stored values
     // (an end-of-read fill could not tell the two apart)
     val declaredDefaults = r.meta.liveAdded.filter(_.default.isDefined)
-    def readDir(dir: String): DataFrame = {
-      val p = new Path(rp, dir).toString
-      val raw = schemaOf.get(dir) match {
-        case Some(sc) => spark.read.schema(sc).parquet(p)
-        case None => spark.read.parquet(p)
-      }
-      fillDeclaredDefaults(raw, declaredDefaults)
-    }
+    def scan(es: Seq[Entry], sc: StructType): DataFrame =
+      fillDeclaredDefaults(scanDirs(spark, fs, rp, es, sc), declaredDefaults)
+    def readDir(e: Entry): DataFrame = scan(Seq(e), schema(e))
     if (entries.isEmpty) {
       // every dir pruned: empty frame in the table's FULL schema —
-      // union the per-dir schemas by name (footer-only probes) so
+      // one empty scan per distinct dir schema, unioned by name, so
       // columns added by widened commits survive even though no dir
       // is scanned; delta bookkeeping columns (op, seq) are dropped
       // exactly as resolution would
-      val merged = allEntries
-        .map(e => readDir(e.dir).filter(lit(false)))
+      val merged = allEntries.map(schema).distinct.map(scan(Seq.empty, _))
         .reduce(_.unionByName(_, allowMissingColumns = true))
       return if (allEntries.exists(_.isDelta)) merged.drop("op", "seq")
       else merged
@@ -985,30 +1042,19 @@ object TxTable {
     if (!allEntries.exists(_.isDelta)) {
       // Schema evolution: dirs appended with a widened schema resolve
       // by name, missing columns null-filled. The common case (all
-      // dirs share one schema) keeps the single multi-path scan — one
-      // FileSourceScan over every dir, no per-dir union overhead; the
-      // schema probe reads footers only (driver-side metadata).
+      // dirs share one schema) keeps the single multi-dir scan — one
+      // FileSourceScan over every dir, no per-dir union overhead.
       // Dirs carrying positional-delete sidecars leave the fast path
       // (each needs its own per-dir anti-join) and union back in —
-      // the CLEAN majority still scans as one multi-path relation.
+      // the CLEAN majority still scans as one relation.
       val (pdE, cleanE) = entries.partition(_.pdels.nonEmpty)
       val cleanDf: Option[DataFrame] =
         if (cleanE.isEmpty) None
-        else {
-          val paths = cleanE.map(e => new Path(rp, e.dir).toString)
-          val schemas = cleanE.map(e => schemaOf.get(e.dir))
-          Some(
-            if (schemas.distinct.size == 1 && schemas.head.isDefined)
-              fillDeclaredDefaults(
-                spark.read.schema(schemas.head.get).parquet(paths: _*),
-                declaredDefaults)
-            else if (schemas.distinct.size == 1)
-              fillDeclaredDefaults(spark.read.parquet(paths: _*),
-                declaredDefaults)
-            else cleanE.map(e => readDir(e.dir))
-              .reduce(_.unionByName(_, allowMissingColumns = true)))
-        }
-      val pdDfs = pdE.map(e => applyPdels(spark, rp, e, readDir(e.dir)))
+        else if (cleanE.map(schema).distinct.size == 1)
+          Some(scan(cleanE, schema(cleanE.head)))
+        else Some(cleanE.map(readDir)
+          .reduce(_.unionByName(_, allowMissingColumns = true)))
+      val pdDfs = pdE.map(e => applyPdels(spark, rp, e, readDir(e)))
       (cleanDf.toSeq ++ pdDfs)
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
@@ -1038,7 +1084,7 @@ object TxTable {
       val (baseE, tailE) = entries.zipWithIndex
         .partition { case (e, _) => origPos(e.dir) < firstDeltaPos }
       val tailParts = tailE.map { case (e, i) =>
-        val df = applyPdels(spark, rp, e, readDir(e.dir))
+        val df = applyPdels(spark, rp, e, readDir(e))
         val keyed = if (e.isDelta) df else df.withColumn("op", lit("U"))
         keyed.withColumn("_cv", lit(i.toLong))
       }
@@ -1046,7 +1092,7 @@ object TxTable {
       // first-seen commit order — a WIDENED delta evolves the schema
       // by name, and parts predating a column read it as null
       val basePartsRaw = baseE.map { case (e, _) =>
-        applyPdels(spark, rp, e, readDir(e.dir))
+        applyPdels(spark, rp, e, readDir(e))
       }
       val dataCols = (basePartsRaw ++ tailParts).map(_.columns.toSeq)
         .reduce((a, b) => a ++ b.filterNot(a.contains))
@@ -1108,13 +1154,7 @@ object TxTable {
     * timestamps that are perfectly servable from the retained window. */
   private[sources] def versionAt(spark: SparkSession, root: String,
     tsMillis: Long): Int = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = (1 to latestVersion(spark, root))
-      .filter { vv =>
-        val p = commitPath(rp, vv)
-        fs.exists(p) && fs.getFileStatus(p).getModificationTime <= tsMillis
-      }
-      .foldLeft(0)(math.max)
+    val v = lastCommitWhere(spark, root, _ <= tsMillis)
     require(v > 0,
       s"txtable: no retained snapshot of $root existed at epoch-millis " +
         s"$tsMillis (older versions may have been vacuumed)")
@@ -1127,14 +1167,16 @@ object TxTable {
     * committed at or after the instant; never throws for an instant
     * that predates the table). */
   private[sources] def versionBefore(spark: SparkSession, root: String,
-    tsMillis: Long): Int = {
+    tsMillis: Long): Int = lastCommitWhere(spark, root, _ < tsMillis)
+
+  /** The highest retained version whose commit mtime passes `ok`, or 0. */
+  private def lastCommitWhere(spark: SparkSession, root: String,
+    ok: Long => Boolean): Int = {
     val (fs, rp) = fsFor(spark, root)
-    (1 to latestVersion(spark, root))
-      .filter { vv =>
-        val p = commitPath(rp, vv)
-        fs.exists(p) && fs.getFileStatus(p).getModificationTime < tsMillis
-      }
-      .foldLeft(0)(math.max)
+    (1 to latestVersion(fs, rp)).filter { v =>
+      val p = commitPath(rp, v)
+      fs.exists(p) && ok(fs.getFileStatus(p).getModificationTime)
+    }.foldLeft(0)(math.max)
   }
 
   /** Commit history: version, operation, data-dir count. */
@@ -1258,10 +1300,9 @@ object TxTable {
     * just spilled into the dir are subtracted from its content
     * summary — the CBO must price the scan, not the metadata riding
     * in the same dir. */
-  private def finishEntries(spark: SparkSession, rp: Path,
+  private def finishEntries(spark: SparkSession, fs: FileSystem, rp: Path,
     raw: Seq[Entry], knownBytes: Map[String, Long] = Map.empty)
     : Seq[Entry] = {
-    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val spilled = spillHstatsAll(fs, rp, raw.map(e => e.dir -> e.hstats),
       hllInlineMax(spark))
     raw.map { e =>
@@ -1300,7 +1341,7 @@ object TxTable {
     * oversized blobs across a commit's new dirs write through one
     * bounded pool — a serial create-per-sidecar loop would put 10^4
     * small-file RPC latencies on the commit path at scale (the same
-    * job-count discipline as dirSchemas/entrySizes). */
+    * job-count discipline as dirSchemas/dataFiles). */
   private def spillHstatsAll(fs: FileSystem, rp: Path,
     perDir: Seq[(String, Map[String, String])], cap: Int)
     : Map[String, Map[String, String]] = {
@@ -1324,11 +1365,12 @@ object TxTable {
     * against it). */
   private def statsEntry(spark: SparkSession, rp: Path, dirName: String,
     statsCols: Seq[String], isDelta: Boolean = false): Entry = {
+    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     statsCols.foreach(requireStatsGrammarSafe)
-    val df = readDirFrame(spark, rp, dirName)
+    val df = readDirFrame(spark, fs, rp, Entry(isDelta = false, dirName, Map.empty))
     val agg = StatsAgg.of(df.schema, statsCols)
     val r = df.agg(agg.aggs.head, agg.aggs.tail: _*).collect()(0)
-    finishEntries(spark, rp, Seq(agg.decode(dirName, r)))
+    finishEntries(spark, fs, rp, Seq(agg.decode(dirName, r)))
       .head.copy(isDelta = isDelta)
   }
 
@@ -1339,11 +1381,11 @@ object TxTable {
     * committer, no observation pass, no rescan. A dir always holds at
     * least one file, so a zero-row `df` stages one carrying its
     * schema. */
-  private def writeDir(spark: SparkSession, rp: Path, dirName: String,
-    df: DataFrame, statsCols: Seq[String], isDelta: Boolean = false): Entry =
-    staged(spark, rp, df, statsCols, touch = true) { files =>
-      promotedEntry(spark, rp.getFileSystem(spark.sessionState
-        .newHadoopConf()), rp, dirName, statsCols, files)
+  private def writeDir(spark: SparkSession, fs: FileSystem, rp: Path,
+    dirName: String, df: DataFrame, statsCols: Seq[String],
+    isDelta: Boolean = false): Entry =
+    staged(fs, rp, df, statsCols, touch = true) { files =>
+      promotedEntry(spark, fs, rp, dirName, statsCols, files)
         .copy(isDelta = isDelta)
     }
 
@@ -1353,15 +1395,15 @@ object TxTable {
     * (`partCols`, `tupleCol`, `touch`: as the factory and
     * [[TxStagedWriter.stage]] take them). The prefix, with any file
     * `promote` did not move out of it, is deleted after. */
-  private def staged[T](spark: SparkSession, rp: Path, df: DataFrame,
+  private def staged[T](fs: FileSystem, rp: Path, df: DataFrame,
     sketchCols: Seq[String], partCols: Seq[String] = Seq.empty,
     tupleCol: Option[String] = None, touch: Boolean = false)(
     promote: Seq[TxStagedFile] => T): T = {
-    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(rp, s"_staging/write-${java.util.UUID.randomUUID()}")
     // the optimized plan's nullability, as Spark's file writer takes
     // it: a column proven non-null is stored REQUIRED
-    try promote(TxStagedWriter.stage(df, TxStagedWriterFactory.of(spark,
+    try promote(TxStagedWriter.stage(df, TxStagedWriterFactory.of(
+      df.sparkSession,
       tmp.toString, df.queryExecution.optimizedPlan.schema, partCols,
       sketchCols, tupleCol), touch))
     finally fs.delete(tmp, true)
@@ -1376,9 +1418,9 @@ object TxTable {
     * did not sketch — one of a type the aggregate skips — records
     * nothing, as there. Every write face's entries fold here; the
     * grouped faces fold one per tuple ([[promoteTuples]]). */
-  private def factsEntry(spark: SparkSession, rp: Path, dirName: String,
-    statsCols: Seq[String], files: Seq[TxStagedFile]): Entry =
-    finishEntries(spark, rp, Seq(factsRaw(dirName, statsCols, files)),
+  private def factsEntry(spark: SparkSession, fs: FileSystem, rp: Path,
+    dirName: String, statsCols: Seq[String], files: Seq[TxStagedFile]): Entry =
+    finishEntries(spark, fs, rp, Seq(factsRaw(dirName, statsCols, files)),
       Map(dirName -> files.map(_.bytes).sum)).head
 
   /** [[factsEntry]] before [[finishEntries]]: raw sketches, no
@@ -1446,7 +1488,8 @@ object TxTable {
     * refuses before anything moves. The partitioned, bucketed and
     * z-order writes and the SQL/streaming partitioned commits all land
     * their dirs here. */
-  private def promoteTuples(spark: SparkSession, rp: Path, baseDir: String,
+  private def promoteTuples(spark: SparkSession, fs: FileSystem, rp: Path,
+    baseDir: String,
     tupleCols: Seq[String], statsCols: Seq[String],
     files: Seq[TxStagedFile])(keyStats: (Seq[Any], Entry) => Entry)
     : Seq[Entry] = {
@@ -1461,7 +1504,6 @@ object TxTable {
         case _ => ()
       }
     }
-    val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
     val dirs = files.groupBy(_.partVals.flatten).toSeq
       .sortBy(t => tupleSortKey(t._1)).map { case (vs, fl) =>
         val dir = baseDir + tupleCols.zip(vs).map {
@@ -1471,7 +1513,7 @@ object TxTable {
         promoteStaged(fs, rp, dir, fl)
         (keyStats(vs, factsRaw(dir, statsCols, fl)), fl.map(_.bytes).sum)
       }
-    finishEntries(spark, rp, dirs.map(_._1),
+    finishEntries(spark, fs, rp, dirs.map(_._1),
       dirs.map { case (e, bytes) => e.dir -> bytes }.toMap)
   }
 
@@ -1571,8 +1613,8 @@ object TxTable {
     val physStats =
       if (keepPrev) statsCols.map(physName(m0, _)) else statsCols
     commitDir(spark, root, head0, op, keepPrev, statsCols, physStats, extMap,
-      preCommitCheck, batchTag, skipIf) { (rp, dirName) =>
-      val entry = writeDir(spark, rp, dirName, physDf, physStats)
+      preCommitCheck, batchTag, skipIf) { (fs, rp, dirName) =>
+      val entry = writeDir(spark, fs, rp, dirName, physDf, physStats)
       verifyChecks()
       entry
     }
@@ -1587,8 +1629,8 @@ object TxTable {
     op: String, keepPrev: Boolean, statsCols: Seq[String],
     physStats: Seq[String], extMap: Option[Seq[(String, String)]],
     preCommitCheck: Int => Unit, batchTag: Option[String],
-    skipIf: Int => Boolean)(write: (Path, String) => Entry): Int = {
-    val rp = fsFor(spark, root)._2
+    skipIf: Int => Boolean)(write: (FileSystem, Path, String) => Entry): Int = {
+    val (fs, rp) = (head0.fs, head0.rp)
     // a plain append onto a hash-bucketed layout would silently break
     // the clustering contract every bucketed SPJ trusts — refuse
     // loudly (an overwrite REPLACES content, so it may reset the
@@ -1600,7 +1642,7 @@ object TxTable {
           "maintains it, overwrite replaces it")
     }
     commitRetry(spark, root, Some(head0)) { stage =>
-      val entry = write(rp, stage(s"data/$op-${java.util.UUID.randomUUID()}"))
+      val entry = write(fs, rp, stage(s"data/$op-${java.util.UUID.randomUUID()}"))
       head =>
         // a concurrent writer may have landed this same micro-batch
         // between the caller's pre-check and the claim (appendBatch)
@@ -1652,10 +1694,10 @@ object TxTable {
     val physStats = st.physOf(statsCols)
     commitDir(spark, root, head0, "append", keepPrev = true, statsCols,
       physStats, extMap, epoch.preCommit, Some(s"$sid:${epoch.batchId}"),
-      applied) { (rp, dirName) =>
+      applied) { (fs, rp, dirName) =>
       if (staged.nonEmpty)
         promotedEntry(spark, fs, rp, dirName, physStats, staged)
-      else factsEntry(spark, rp, dirName, physStats,
+      else factsEntry(spark, fs, rp, dirName, physStats,
         emptyFile(spark, rp, dirName, st.fileSchema, physStats))
     }
   }
@@ -1826,7 +1868,7 @@ object TxTable {
               case Replace(l) => Some(l)
               case Pdel(name, n) =>
                 val nAll = e.stats.get(rowsKey).map(_._1)
-                  .getOrElse(visibleDirFrame(spark, rp, e).count())
+                  .getOrElse(visibleDirFrame(spark, fs, rp, e).count())
                 if (n > nAll) throw new IllegalStateException(
                   s"txtable: ${c.op} matched $n rows in ${e.dir} for " +
                     s"positional deletion, whose entry records only $nAll " +
@@ -1845,8 +1887,8 @@ object TxTable {
         val src = head.entries.head.dir
         val d = stage(s"data/${c.op}-${java.util.UUID.randomUUID()}")
         val statsCols = c.meta.keys.getOrElse(Seq.empty) ++ c.meta.statsCols
-        Seq(factsEntry(spark, rp, d, statsCols, emptyFile(spark, rp, d,
-          dirSparkSchemas(spark, rp, Seq(src))(src), statsCols)).line)
+        Seq(factsEntry(spark, fs, rp, d, statsCols, emptyFile(spark, rp, d,
+          dirSparkSchemas(fs, rp, Seq(src))(src), statsCols)).line)
       }
     }
     // the won version and its lines; no lines = the writer skipped
@@ -2098,10 +2140,10 @@ object TxTable {
   def merge(spark: SparkSession, root: String, changes: DataFrame,
     keyCols: Seq[String] = Seq("k")): Int = {
     val (latest, valueCols) = resolveLatest(changes, keyCols)
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage => head =>
       val base =
-        if (head.version > 0) read(spark, root, head.version)
+        if (head.version > 0) readWhere(spark, head, Seq.empty, None)
           .select((keyCols.map(col) ++
             valueCols.map(c => col(c).as(s"_base_$c"))): _*)
         else latest
@@ -2113,7 +2155,7 @@ object TxTable {
         .select((keyCols.map(col) ++ valueCols.map(c =>
           coalesce(col(c), col(s"_base_$c")).as(c))): _*)
       val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
-      val entry = writeDir(spark, rp, dirName, merged, keyCols)
+      val entry = writeDir(spark, fs, rp, dirName, merged, keyCols)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
       Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
@@ -2151,7 +2193,7 @@ object TxTable {
     matchedDeleteCond: Option[String] = None,
     insertNotMatched: Boolean = true,
     notMatchedCond: Option[String] = None): Int = {
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     val valueCols = source.columns.filterNot(keyCols.contains).toSeq
     // cardinality check: one aggregate over the source (source-scale,
     // cheap next to the merge join itself), 0-or-1-row readback
@@ -2162,7 +2204,7 @@ object TxTable {
     def isTrue(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
     commitRetry(spark, root) { stage => head =>
       val base =
-        if (head.version > 0) read(spark, root, head.version)
+        if (head.version > 0) readWhere(spark, head, Seq.empty, None)
         else source.filter(lit(false))
       require(base.columns.sorted.sameElements(source.columns.sorted),
         s"txtable: mergeInto source schema ${source.columns.mkString(",")} " +
@@ -2187,7 +2229,7 @@ object TxTable {
             .otherwise(col(c)).as(c)
         }: _*)
       val dirName = stage(s"data/merge-${java.util.UUID.randomUUID()}")
-      val entry = writeDir(spark, rp, dirName, out, keyCols)
+      val entry = writeDir(spark, fs, rp, dirName, out, keyCols)
       // copy-on-write from logical frames: new files carry logical
       // names, so the mapping (if any) resets — see compactSnapshot
       Some(Commit("merge", head.meta.rewritten(Some(keyCols), Seq.empty),
@@ -2247,7 +2289,7 @@ object TxTable {
       toPhysicalFrame(latest, m0, exclude = Set("op", "seq"))
     commitRetry(spark, root, Some(head0)) { stage =>
       val dirName = stage(s"data/delta-${java.util.UUID.randomUUID()}")
-      val entry = writeDir(spark, rp, dirName, latestPhys, physKeys,
+      val entry = writeDir(spark, fs, rp, dirName, latestPhys, physKeys,
         isDelta = true)
       head =>
         // a concurrent writer may have landed the same batch between
@@ -2432,7 +2474,7 @@ object TxTable {
     val (fs, rp) = fsFor(spark, root)
     val meta = metaAt(fs, rp, base)
     val keys = meta.keys.map(_.map(logicalName(meta.colMap, _)))
-    writeZBlocks(spark, rp, read(spark, root, base), zCols, nDirs,
+    writeZBlocks(spark, fs, rp, read(spark, root, base), zCols, nDirs,
       keys.getOrElse(Seq.empty) ++ zCols, stage).map(entries =>
       Commit("compact", meta.rewritten(keys, zCols), rest = Drop,
         added = entries.map(_.line)))
@@ -2457,7 +2499,7 @@ object TxTable {
     * writers saw. None when `df` has no live rows (an empty table, or a
     * tail of only zero-row dirs) — nothing to re-cluster, so a routine
     * nightly run commits nothing. */
-  private def writeZBlocks(spark: SparkSession, rp: Path,
+  private def writeZBlocks(spark: SparkSession, fs: FileSystem, rp: Path,
     df: DataFrame, zCols: Seq[String], nDirs: Int, statsCols: Seq[String],
     stage: String => String): Option[Seq[Entry]] = {
     val withZ = withZColumn(df, zCols)
@@ -2475,8 +2517,8 @@ object TxTable {
         .repartition(col("_b"))
         .sortWithinPartitions("_z")
         .drop("_z")
-      Some(staged(spark, rp, blocks, statsCols, tupleCol = Some("_b"))(
-        promoteTuples(spark, rp, parent, Seq("_b"), statsCols, _)((_, e) => e)))
+      Some(staged(fs, rp, blocks, statsCols, tupleCol = Some("_b"))(
+        promoteTuples(spark, fs, rp, parent, Seq("_b"), statsCols, _)((_, e) => e)))
     }
   }
 
@@ -2549,12 +2591,12 @@ object TxTable {
         // files must carry the default, not a materialized NULL
         val addedNow = meta.liveAdded
         val tailDf = tail
-          .map(e => fillDeclaredDefaults(visibleDirFrame(spark, rp, e),
+          .map(e => fillDeclaredDefaults(visibleDirFrame(spark, fs, rp, e),
             addedNow))
           .reduce(_.unionByName(_, allowMissingColumns = true))
         // the tail gets its OWN aligned grid — blocks need not share the
         // base generation's shift to be axis-aligned stats boxes
-        writeZBlocks(spark, rp, tailDf, zCols, nDirs,
+        writeZBlocks(spark, fs, rp, tailDf, zCols, nDirs,
           (keys.getOrElse(Seq.empty) ++ statsCols ++ zCols).distinct,
           stage).map(blocks =>
           Commit("compact", meta.rewritten(keys,
@@ -2588,7 +2630,7 @@ object TxTable {
     commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to compact at $root")
       val m = head.meta.colMap
-      val resolved = read(spark, root, head.version)
+      val resolved = readWhere(spark, head, Seq.empty, None)
       val dirName = stage(s"data/compact-${java.util.UUID.randomUUID()}")
       // the new dir is born under the LOGICAL names (read's output),
       // materializing any renames and shedding drop tombstones — so
@@ -2597,7 +2639,7 @@ object TxTable {
       // under their own maps
       val keys = head.meta.keys.map(_.map(logicalName(m, _)))
       val statsCols = head.meta.statsCols.map(logicalName(m, _))
-      val entry = writeDir(spark, rp, dirName, resolved,
+      val entry = writeDir(spark, fs, rp, dirName, resolved,
         keys.getOrElse(Seq.empty) ++ statsCols)
       Some(Commit("compact", head.meta.rewritten(keys, statsCols),
         rest = Drop, added = Seq(entry.line)))
@@ -2633,14 +2675,14 @@ object TxTable {
     * are below the threshold (no commit written). */
   def optimizeCompact(spark: SparkSession, root: String,
     targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to optimize at $root")
       val entries = head.entries
       require(!entries.exists(_.isDelta),
         s"txtable: optimizeCompact needs a delta-free snapshot of $root " +
           "— run compactSnapshot first")
-      val sized = entrySizes(spark, rp, entries)
+      val sized = entries.zip(entryBytes(fs, rp, entries))
       val keys = head.meta.keys
       val statsCols = head.meta.statsCols
       // PARTITION-AWARE packing: a provably partition-clustered table
@@ -2705,9 +2747,9 @@ object TxTable {
           val addedNow = head.meta.liveAdded
           val merged = bin
             .map(e => fillDeclaredDefaults(
-              visibleDirFrame(spark, rp, e), addedNow))
+              visibleDirFrame(spark, fs, rp, e), addedNow))
             .reduce(_.unionByName(_, allowMissingColumns = true))
-          val entry = writeDir(spark, rp, dirName, merged,
+          val entry = writeDir(spark, fs, rp, dirName, merged,
             keys.getOrElse(Seq.empty) ++ statsCols)
           // a merged bucket dir RE-RECORDS its id: every bin member
           // carried the same `_bucket` (it's in the group key), so
@@ -2765,8 +2807,7 @@ object TxTable {
     // pushed filters are a subset of the condition: they refute only
     val affected = triage(filters, whole = false, entries, m)
       .collect { case (e, fate) if fate != Refuted => e }
-    val fmap = listDataFiles(spark, rp, affected.map(_.dir),
-      recursive = true)
+    val fmap = listDataFiles(fs, rp, affected.map(_.dir))
     val files = affected.flatMap { e =>
       val pdFiles =
         if (e.pdels.isEmpty) Seq.empty
@@ -2807,7 +2848,7 @@ object TxTable {
     dirName: String, statsCols: Seq[String],
     files: Seq[TxStagedFile]): Entry = {
     promoteStaged(fs, rp, dirName, files)
-    factsEntry(spark, rp, dirName, statsCols, files)
+    factsEntry(spark, fs, rp, dirName, statsCols, files)
   }
 
   /** One zero-row file of `schema` staged into dir `dirName` by the
@@ -2918,7 +2959,7 @@ object TxTable {
             s"txtable: the stats columns of $root changed under the " +
               s"write (now ${statsCols.mkString(",")}, written for " +
               s"${sketched.mkString(",")}); re-run it")
-        factsEntry(spark, rp, dirName, statsCols, files)
+        factsEntry(spark, fs, rp, dirName, statsCols, files)
       }
       head =>
         // a table's FIRST content (bootstrap INSERT, or replace-all)
@@ -3048,17 +3089,18 @@ object TxTable {
     * it, and those alias names) and returns the dir's outcome, or the
     * rows that replace it in physical columns. Those land in a new
     * `data/<op>-<uuid>` dir ([[writeDir]]). */
-  private def rewriteDir(spark: SparkSession, rp: Path, e: Entry,
+  private def rewriteDir(spark: SparkSession, fs: FileSystem, rp: Path,
+    e: Entry,
     m: Option[Seq[(String, String)]], op: String, statsCols: Seq[String],
     stage: String => String)(rewrite: (DataFrame, DataFrame, Seq[String])
       => Either[DirOutcome, DataFrame]): DirOutcome = {
-    val raw = visibleDirFrame(spark, rp, e)
+    val raw = visibleDirFrame(spark, fs, rp, e)
     val (df, extras) = withLogicalAliases(raw, m)
     rewrite(raw, df, extras) match {
       case Left(o) => o
       case Right(rows) =>
         val dirName = stage(s"data/$op-${java.util.UUID.randomUUID()}")
-        Replace(writeDir(spark, rp, dirName, rows, statsCols).line)
+        Replace(writeDir(spark, fs, rp, dirName, rows, statsCols).line)
     }
   }
 
@@ -3096,7 +3138,7 @@ object TxTable {
     * against the new parent and deletes the stale staged files. */
   def deleteWhere(spark: SparkSession, root: String, predSql: String,
     positional: Boolean = false): Int = {
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to delete from at $root")
       val entries = head.entries
@@ -3109,11 +3151,11 @@ object TxTable {
       // physical stats, and the predicate evaluates over logical
       // aliases laid over each physical dir frame
       val m = head.meta.colMap
-      val fates = predicateTriage(spark, rp, predSql, entries, m)
+      val fates = predicateTriage(spark, fs, rp, predSql, entries, m)
       val coords = if (!positional) Seq.empty else fates.collect {
         case (e, Opened) =>
           val (df, _) = withLogicalAliases(
-            positionedRows(spark, rp, e, readDirFrame(spark, rp, e.dir)), m)
+            positionedRows(spark, rp, e, readDirFrame(spark, fs, rp, e)), m)
           df.filter(s"($predSql) IS TRUE").select(lit(e.dir).as("_dir"),
             col("_graft_pd_f").as("_file"), col("_graft_pd_p").as("_pos"))
       }
@@ -3125,7 +3167,7 @@ object TxTable {
           case Refuted => Carry
           case Covered => Drop
           case _ if positional => dead.getOrElse(e.dir, Carry)
-          case _ => rewriteDir(spark, rp, e, m, "delete", keys ++ statsCols,
+          case _ => rewriteDir(spark, fs, rp, e, m, "delete", keys ++ statsCols,
             stage) { (_, df, extras) =>
             // SQL DELETE removes only rows where the predicate is TRUE
             // — NULL-pred rows survive, so the keep filter is IS NOT
@@ -3236,7 +3278,7 @@ object TxTable {
     replace: Boolean = false): Int = {
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     require(numBuckets >= 2 && numBuckets <= (1 << 20),
       s"txtable: numBuckets must be in [2, 1048576], got $numBuckets")
     statsCols.foreach(requireStatsGrammarSafe)
@@ -3296,12 +3338,12 @@ object TxTable {
           pmod(hash(col(physB)), lit(numBuckets)).cast("long"))
         .repartition(col(helper))
         .sortWithinPartitions(helper)
-      val entries = staged(spark, rp, buckets, physStats ++ keyOnly,
+      val entries = staged(fs, rp, buckets, physStats ++ keyOnly,
         tupleCol = Some(helper)) { files =>
         verifyChecks()
         if (files.isEmpty) throw new IllegalArgumentException(
           "txtable: bucketed append of empty frame")
-        promoteTuples(spark, rp, baseDir, Seq(helper), physStats ++ keyOnly,
+        promoteTuples(spark, fs, rp, baseDir, Seq(helper), physStats ++ keyOnly,
           files) { (vs, e) =>
           val id = vs.head.asInstanceOf[Long]
           // bucket dirs record no `sx:` exact markers
@@ -3341,7 +3383,7 @@ object TxTable {
   def appendPartitionedBy(df: DataFrame, root: String,
     partCols: Seq[String], statsCols: Seq[String] = Seq.empty): Int = {
     val spark = df.sparkSession
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     require(partCols.nonEmpty, "txtable: no partition columns")
     // the entry lines are built from the writers' facts, so the
     // partition and stats columns must pass the stats-grammar guard:
@@ -3380,13 +3422,13 @@ object TxTable {
     commitRetry(spark, root, Some(head0)) { stage =>
       val baseDir = stage(s"data/append-${java.util.UUID.randomUUID()}")
       val keys = physParts.map(col)
-      val entries = staged(spark, rp,
+      val entries = staged(fs, rp,
         physDf0.repartition(keys: _*).sortWithinPartitions(keys: _*),
         physStats, physParts) { files =>
         verifyChecks()
         if (files.isEmpty) throw new IllegalArgumentException(
           "txtable: partitioned append of empty frame")
-        promoteTuples(spark, rp, baseDir, physParts, physStats, files)(
+        promoteTuples(spark, fs, rp, baseDir, physParts, physStats, files)(
           partKeyStats(physParts))
       }
       head => {
@@ -3638,7 +3680,7 @@ object TxTable {
     val stagedTuples = staged.map(_.partVals.flatten).toSet
     val partSchema = StructType(st.partCols.map(st.schema(_)))
     commitRetry(spark, root, Some(head0)) { stage =>
-      val newEntries = promoteTuples(spark, rp,
+      val newEntries = promoteTuples(spark, fs, rp,
         stage(s"data/$opName-${java.util.UUID.randomUUID()}"), physParts,
         st.statsCols, staged)(partKeyStats(physParts))
       // the staged-⊆-filter contract, checked ONCE outside the retry
@@ -3698,7 +3740,7 @@ object TxTable {
             if (newEntries.nonEmpty || dropped.size < entries0.size) Seq.empty
             else {
               val d = stage(s"data/$opName-${java.util.UUID.randomUUID()}")
-              Seq(factsEntry(spark, rp, d, Seq.empty,
+              Seq(factsEntry(spark, fs, rp, d, Seq.empty,
                 emptyFile(spark, rp, d, st.fileSchema, Seq.empty)).line)
             }
           val meta = head.meta.copy(bucketBy = None,
@@ -3723,7 +3765,7 @@ object TxTable {
   def updateWhere(spark: SparkSession, root: String, predSql: String,
     sets: Map[String, String]): Int = {
     require(sets.nonEmpty, "txtable: updateWhere needs at least one SET")
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to update at $root")
       val entries = head.entries
@@ -3736,10 +3778,10 @@ object TxTable {
       // SETs address the snapshot's LOGICAL columns; rewritten rows
       // keep the dir's physical schema
       val physSets = sets.map { case (c, ex) => physName(m, c) -> ex }
-      val fates = predicateTriage(spark, rp, predSql, entries, m)
+      val fates = predicateTriage(spark, fs, rp, predSql, entries, m)
       val read = fates.map { case (e, fate) =>
         e.line -> (if (fate == Refuted) Carry
-        else rewriteDir(spark, rp, e, m, "update", keys ++ statsCols,
+        else rewriteDir(spark, fs, rp, e, m, "update", keys ++ statsCols,
           stage) { (raw, df, _) =>
           physSets.keys.foreach { c =>
             require(raw.columns.contains(c),
@@ -3829,8 +3871,9 @@ object TxTable {
     * unpruned until the next build. One maintenance pass per new dir:
     * a metadata-only row count (parquet footers) + one bloom
     * aggregation scan. Returns the number of dirs newly indexed. */
-  /** Parquet footer schema per dir (first data file's), probed with
-    * parquet-mr on a bounded driver thread pool — a footer read per
+  /** Parquet footer schema per dir (the first data file's in the
+    * [[dataFiles]] listing, which the dir's scans then reuse), probed
+    * with parquet-mr on the driver's metadata pool — a footer read per
     * dir, never a Spark job (`spark.read.parquet(...).schema` launches
     * a footer-inference JOB per call, which is exactly the per-dir
     * serial-job scaling this path exists to avoid). Serial probing at
@@ -3849,39 +3892,23 @@ object TxTable {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.parquet.schema.MessageType]()
 
-  private[graft] def dirSchemas(spark: SparkSession, rp: Path,
+  private[graft] def dirSchemas(fs: FileSystem, rp: Path,
     dirs: Seq[String])
     : Map[String, org.apache.parquet.schema.MessageType] = {
     if (dirs.isEmpty) return Map.empty
-    val conf = spark.sessionState.newHadoopConf()
-    val fsq = rp.getFileSystem(conf)
     def qual(d: String): String = new Path(rp, d)
-      .makeQualified(fsq.getUri, fsq.getWorkingDirectory).toString
+      .makeQualified(fs.getUri, fs.getWorkingDirectory).toString
     val hits = dirs.flatMap(d =>
       Option(schemaCache.get(qual(d))).map(d -> _)).toMap
     val misses = dirs.filterNot(hits.contains)
     if (misses.isEmpty) return hits
-    val probed = fanOut(misses) { d =>
-      val fs = rp.getFileSystem(conf)
-      def firstFile(p: Path): Option[Path] = {
-        val (ds, fsx) = fs.listStatus(p).partition(_.isDirectory)
-        fsx.map(_.getPath).find { f =>
-          val n = f.getName
-          n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".")
-        }.orElse(ds.map(_.getPath)
-          // positional-delete sidecar dirs hold (_file, _pos)
-          // metadata, never the dir's data schema
-          .filterNot(_.getName.startsWith("_pdel-"))
-          .sortBy(_.getName)
-          .iterator.flatMap(firstFile(_).iterator).nextOption())
-      }
-      firstFile(new Path(rp, d)).map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try d -> r.getFileMetaData.getSchema finally r.close()
-      }
-    }.flatten.toMap
+    val firstFiles = dataFiles(fs, rp, misses).flatMap { case (d, fl) =>
+      fl.map(_.getPath).find(_.getName.endsWith(".parquet")).map(d -> _) }
+    val probed = fanOut(firstFiles.toSeq) { case (d, f) =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, fs.getConf))
+      try d -> r.getFileMetaData.getSchema finally r.close()
+    }.toMap
     // dirs WITHOUT a data file are deliberately not cached (absent
     // from the map by contract); a soft cap bounds a long-lived
     // driver touching unboundedly many tables
@@ -3928,10 +3955,10 @@ object TxTable {
     * ~4 s of serial driver jobs before reading its first byte; with
     * the schema supplied explicitly the load is pure planning.
     * Dirs with no data file are absent from the result. */
-  private def dirSparkSchemas(spark: SparkSession, rp: Path,
+  private def dirSparkSchemas(fs: FileSystem, rp: Path,
     dirs: Seq[String])
     : Map[String, org.apache.spark.sql.types.StructType] = {
-    val msgs = dirSchemas(spark, rp, dirs)
+    val msgs = dirSchemas(fs, rp, dirs)
     val conv = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(
         org.apache.spark.sql.internal.SQLConf.get)
@@ -3959,88 +3986,94 @@ object TxTable {
     case other => other
   }
 
-  /** `f` over every item on a driver pool of at most 16 threads — the
-    * one fan-out of the per-dir and per-file metadata RPCs, whose
-    * serial loops would be 10^4 round trips at 10^4 dirs on an object
-    * store. None or one item runs inline, starting no thread. Results
-    * keep `items`' order; a failure rethrows its own exception. */
+  /** `f` over every item on the driver's metadata pool — the one
+    * fan-out of the per-dir and per-file metadata RPCs, whose serial
+    * loops would be 10^4 round trips at 10^4 dirs on an object store.
+    * None or one item runs inline, starting no thread, and so does a
+    * fan-out from a pool thread (a nested wait could exhaust the
+    * pool). Results keep `items`' order; a failure rethrows its own
+    * exception. */
   private def fanOut[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size <= 1) items.map(f)
+    if (items.size <= 1 ||
+      Thread.currentThread.getName.startsWith(metaPoolName)) items.map(f)
     else {
       import scala.jdk.CollectionConverters._
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, items.size))
-      try pool.invokeAll(items.map(a =>
+      metaPool.invokeAll(items.map(a =>
         (() => f(a)): java.util.concurrent.Callable[B]).asJava)
         .asScala.toSeq.map { r =>
           try r.get() catch {
             case e: java.util.concurrent.ExecutionException => throw e.getCause
           }
         }
-      finally pool.shutdown()
     }
 
-  /** Data files of many dirs, listed on the bounded driver pool —
-    * one listStatus per dir, overlapped 16 ways: the serial loop is
-    * a 10k-round-trip tail at 10k dirs on an object store. Order
-    * within each dir follows the listing; callers keep entry order
-    * by iterating their own dir sequence. */
-  private def listDataFiles(spark: SparkSession, rp: Path,
-    dirs: Seq[String], recursive: Boolean = false)
-    : Map[String, Seq[String]] = {
-    val conf = spark.sessionState.newHadoopConf()
-    fanOut(dirs.distinct) { d =>
-      val fs = rp.getFileSystem(conf)
-      val keep = (s: org.apache.hadoop.fs.FileStatus) => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".")
-      val files =
-        if (recursive) {
-          // entry dirs may hold partition subdirs (zopt/_b=…,
-          // appendPartitioned leaves): one recursive listing.
-          // Positional-delete sidecar subtrees (_pdel-*) are
-          // metadata, never data — drop anything under one.
-          val it = fs.listFiles(new Path(rp, d), true)
-          val buf = scala.collection.mutable.ArrayBuffer[String]()
-          while (it.hasNext) {
-            val s = it.next()
-            if (keep(s) && !s.getPath.toString.contains("/_pdel-"))
-              buf += s.getPath.toString
-          }
-          buf.toSeq
-        } else fs.listStatus(new Path(rp, d)).filter(keep)
-          .map(_.getPath.toString).toSeq
-      d -> files
-    }.toMap
+  private val metaPoolName = "graft-meta-"
+  /** The JVM's one metadata pool: 16 daemon threads at most, each
+    * retired after a minute idle. */
+  private lazy val metaPool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val p = new java.util.concurrent.ThreadPoolExecutor(16, 16, 60L,
+      java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, metaPoolName + n.incrementAndGet())
+        t.setDaemon(true)
+        t
+      })
+    p.allowCoreThreadTimeOut(true)
+    p
   }
 
-  /** Per-entry on-disk bytes: the `_bytes` commit stat when present
-    * (zero I/O), else getContentSummary on the bounded driver pool —
-    * never a serial per-dir RPC loop. */
-  private def entrySizes(spark: SparkSession, rp: Path,
-    entries: Seq[Entry]): Seq[(Entry, Long)] = {
-    val missing = entries.filterNot(_.stats.contains(bytesKey))
-    val conf = spark.sessionState.newHadoopConf()
-    val listed = fanOut(missing) { e =>
-      e.dir -> rp.getFileSystem(conf).getContentSummary(new Path(rp, e.dir))
-        .getLength
-    }.toMap
-    entries.map(e => e -> e.stats.get(bytesKey).map(_._1)
-      .getOrElse(listed(e.dir)))
+  /** JVM-lifetime data-file listing cache, keyed by QUALIFIED dir path
+    * — sound for the reason [[schemaCache]] is: a committed dir never
+    * changes, and a recreated table never mints the same dir path. */
+  private val filesCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Seq[org.apache.hadoop.fs.FileStatus]]()
+
+  /** The data files of each of `dirs`: every file under the dir but
+    * hidden (`_`/`.`) ones and the positional-delete sidecar subtrees
+    * (`_pdel-*`, metadata, never data), listed once per JVM per dir
+    * ([[filesCache]]) on the metadata pool. Order within a dir follows
+    * the listing; callers keep entry order by iterating their own dir
+    * sequence. */
+  private[sources] def dataFiles(fs: FileSystem, rp: Path,
+    dirs: Seq[String]): Map[String, Seq[org.apache.hadoop.fs.FileStatus]] = {
+    def qual(d: String): String = new Path(rp, d)
+      .makeQualified(fs.getUri, fs.getWorkingDirectory).toString
+    val hits = dirs.distinct.flatMap(d =>
+      Option(filesCache.get(qual(d))).map(d -> _)).toMap
+    // plain listStatus, never a located listing: on the local
+    // filesystem a LocatedFileStatus forks a process per file to load
+    // its permissions
+    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { s =>
+        val n = s.getPath.getName
+        if (s.isDirectory) { if (n.startsWith("_pdel-")) Nil else walk(s.getPath) }
+        else if (n.startsWith("_") || n.startsWith(".")) Nil
+        else Seq(s)
+      }
+    val listed = fanOut(dirs.distinct.filterNot(hits.contains)) { d =>
+      d -> walk(new Path(rp, d))
+    }
+    if (filesCache.size >= 65536) filesCache.clear()
+    listed.foreach { case (d, fl) => filesCache.put(qual(d), fl) }
+    hits ++ listed
   }
+
+  /** [[dataFiles]] as path strings. */
+  private def listDataFiles(fs: FileSystem, rp: Path,
+    dirs: Seq[String]): Map[String, Seq[String]] =
+    dataFiles(fs, rp, dirs).map { case (d, fl) =>
+      d -> fl.map(_.getPath.toString) }
 
   /** One data dir as a DataFrame with its schema supplied from the
     * footer — a driver metadata read instead of the schema-inference
     * Spark job `spark.read.parquet(dir)` launches per call. Every
     * per-dir DML/compaction/feed path goes through here. */
-  private def readDirFrame(spark: SparkSession, rp: Path,
-    dir: String): DataFrame = {
-    val p = new Path(rp, dir).toString
-    dirSparkSchemas(spark, rp, Seq(dir)).get(dir) match {
-      case Some(sc) => spark.read.schema(sc).parquet(p)
-      case None => spark.read.parquet(p)
-    }
-  }
+  private def readDirFrame(spark: SparkSession, fs: FileSystem, rp: Path,
+    e: Entry): DataFrame =
+    scanDirs(spark, fs, rp, Seq(e),
+      dirSparkSchemas(fs, rp, Seq(e.dir)).getOrElse(e.dir, new StructType()))
 
   // ------------------------------------------------ positional deletes
 
@@ -4086,9 +4119,9 @@ object TxTable {
     * positional deletes. Every path that reads an EXISTING entry's
     * rows (DML rewrites, compaction folds, the change feed, bloom
     * reads) must use this, or deleted rows would resurrect. */
-  private def visibleDirFrame(spark: SparkSession, rp: Path,
+  private def visibleDirFrame(spark: SparkSession, fs: FileSystem, rp: Path,
     e: Entry): DataFrame =
-    applyPdels(spark, rp, e, readDirFrame(spark, rp, e.dir))
+    applyPdels(spark, rp, e, readDirFrame(spark, fs, rp, e))
 
   def buildBloomIndex(spark: SparkSession, root: String, colName: String,
     fpp: Double = 0.01): Int = {
@@ -4113,7 +4146,7 @@ object TxTable {
     //    files are dir-keyed and idempotent), so no filter ever
     //    transits the driver — 10k dirs × multi-MB filters stay
     //    distributed end to end.
-    val schemas = dirSchemas(spark, rp, pending.map(_.dir))
+    val schemas = dirSchemas(fs, rp, pending.map(_.dir))
     def colType(d: String): Option[DataType] =
       schemas.get(d).flatMap(bloomableType(_, colName))
     val eligible = pending.filter(e => colType(e.dir).isDefined)
@@ -4133,8 +4166,7 @@ object TxTable {
     // cross-check below turns any future rendering drift into a loud
     // failure instead of missing rows).
     val pathRe = "^(?:[a-zA-Z][a-zA-Z0-9+.\\-]*:(?://[^/]*)?)?(/.*)$"
-    val filesOf = listDataFiles(spark, rp, eligible.map(_.dir),
-      recursive = true)
+    val filesOf = listDataFiles(fs, rp, eligible.map(_.dir))
     val fileDirRows = eligible.flatMap(e =>
       filesOf.getOrElse(e.dir, Seq.empty).map { f =>
         org.apache.spark.sql.Row(new Path(f).toUri.getRawPath, e.dir)
@@ -4257,38 +4289,18 @@ object TxTable {
     * guards against. Run `compactSnapshot` first. */
   def readBloomFiltered(spark: SparkSession, root: String, colName: String,
     probes: Seq[Any]): DataFrame = {
-    val (fs, rp) = fsFor(spark, root)
-    val v = latestVersion(spark, root)
-    val entries = snapshotEntries(fs, rp, v)
+    val h = resolve(spark, root, -1)
+    val entries = h.entries
     require(!entries.exists(_.isDelta),
       s"txtable: bloom-filtered reads need a delta-free snapshot " +
         s"(value pruning over unresolved deltas is unsound); " +
         s"run compactSnapshot($root) first")
     val (kept, _) = bloomSurvivingDirs(spark, root, colName, probes)
-    val probeFilter = col(colName).isin(probes: _*)
-    if (kept.isEmpty) return read(spark, root, v).filter(probeFilter)
-      .filter(lit(false))
-    val paths = kept.map(d => new Path(rp, d).toString)
-    val schemaOf = dirSparkSchemas(spark, rp, kept)
-    val schemas = kept.map(schemaOf.get)
-    val entryOf = entries.map(e => e.dir -> e).toMap
-    // declared DEFAULT columns fill exactly as on the plain read
-    // path — PER DIR on the union branches (a pre-ADD dir next to a
-    // post-ADD dir must read the default, not union-null)
-    val added = metaAt(fs, rp, v).liveAdded
-    def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, added)
-    val df =
-      // kept dirs with positional deletes read their VISIBLE rows
-      if (kept.exists(d => entryOf.get(d).exists(_.pdels.nonEmpty)))
-        kept.map(d => fill(visibleDirFrame(spark, rp, entryOf(d))))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else if (schemas.distinct.size == 1 && schemas.head.isDefined)
-        fill(spark.read.schema(schemas.head.get).parquet(paths: _*))
-      else if (schemas.distinct.size == 1)
-        fill(spark.read.parquet(paths: _*))
-      else kept.map(d => fill(readDirFrame(spark, rp, d)))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    df.filter(probeFilter)
+    // the kept dirs read as the snapshot reads them: visible rows,
+    // widened dirs by name, declared DEFAULT columns filled per dir
+    readResolved0(spark, h, SnapshotPlan(Seq.empty, entries,
+      entries.filter(e => kept.contains(e.dir)), Seq.empty))
+      .filter(col(colName).isin(probes: _*))
   }
 
   /** Oracle-gated end-to-end bloom-index exercise (q_txtable_bloom):
@@ -5067,7 +5079,7 @@ object TxTable {
         else df.select(df.columns.toSeq
           .map(c => col(c).as(ren.getOrElse(c, c))): _*)
       }
-      def dirDf(e: Entry) = visibleDirFrame(spark, rp, e)
+      def dirDf(e: Entry) = visibleDirFrame(spark, fs, rp, e)
       val batch: Seq[DataFrame] = op match {
         case "compact" | "rename" | "dropcol" =>
           Seq.empty // same content: new layout / new names only
@@ -5205,7 +5217,7 @@ object TxTable {
           "at or after the oldest retained snapshot")
     }
     def filesOf(dirs: Seq[String]): Seq[String] = {
-      val m = listDataFiles(spark, rp, dirs)
+      val m = listDataFiles(fs, rp, dirs)
       dirs.flatMap(d => m.getOrElse(d, Seq.empty))
     }
     ((fromV + 1) to toV).flatMap { v =>
@@ -6017,7 +6029,7 @@ object TxTable {
     : Option[(Seq[(Seq[Any], Seq[String])],
       Option[Seq[(String, String)]])] = {
     val h = resolve(spark, root, version)
-    val (rp, v) = (h.rp, h.version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return None
     val entries = h.entries
     if (entries.isEmpty || entries.exists(_.isDelta)) return None
@@ -6041,7 +6053,7 @@ object TxTable {
         e.stats.get(s"$nullsPrefix$pg").exists(_._1 == 0L)
     } }
     if (!ok) return None
-    val filesByDir = listDataFiles(spark, rp, live.map(_.dir))
+    val filesByDir = listDataFiles(fs, rp, live.map(_.dir))
     val slices = live.groupBy(e => pgs.map(pg => dirExactValue(e, pg).get))
       .toSeq.map { case (gvs, es) =>
         gvs -> es.flatMap(e => filesByDir.getOrElse(e.dir, Seq.empty))
@@ -6064,7 +6076,7 @@ object TxTable {
     : Option[(String, Int, Seq[(Int, Seq[String])],
       Option[Seq[(String, String)]])] = {
     val h = resolve(spark, root, version)
-    val (rp, v) = (h.rp, h.version)
+    val (fs, rp, v) = (h.fs, h.rp, h.version)
     if (v == 0) return None
     val meta = h.meta
     val (physB, n) = meta.bucketBy.getOrElse(return None)
@@ -6082,7 +6094,7 @@ object TxTable {
       }
     }
     if (!ok) return None
-    val filesByDir = listDataFiles(spark, rp, live.map(_.dir))
+    val filesByDir = listDataFiles(fs, rp, live.map(_.dir))
     val slices = live.groupBy(_.stats(bucketStatKey)._1.toInt).toSeq
       .map { case (id, es) =>
         id -> es.flatMap(e => filesByDir.getOrElse(e.dir, Seq.empty))
@@ -6348,7 +6360,7 @@ object TxTable {
     * folded dir; atomic commit as always. */
   def compactDirs(spark: SparkSession, root: String, maxDirs: Int = 8): Int = {
     require(maxDirs >= 1, "compactDirs must keep at least one dir")
-    val rp = fsFor(spark, root)._2
+    val (fs, rp) = fsFor(spark, root)
     commitRetry(spark, root) { stage => head =>
       require(head.version > 0, s"txtable: nothing to compact at $root")
       val entries = head.entries
@@ -6357,34 +6369,17 @@ object TxTable {
           "snapshots resolve by commit order - use compactSnapshot")
       if (entries.size <= maxDirs) None
       else {
-        val sized = entrySizes(spark, rp, entries)
+        val sized = entries.zip(entryBytes(fs, rp, entries))
         // fold the smallest (n - maxDirs + 1) dirs into one; the rest
         // keep their commit order
         val fold = sized.sortBy(_._2).take(entries.size - maxDirs + 1)
-        val foldPaths = fold.map { case (e, _) => new Path(rp, e.dir).toString }
-        // schema-evolved dirs fold by name (null-fill), same as read
-        val foldSchemaOf = dirSparkSchemas(spark, rp,
-          fold.map { case (e, _) => e.dir })
-        val foldSchemas = fold.map { case (e, _) => foldSchemaOf.get(e.dir) }
-        // declared defaults re-land in the folded files (never NULL) —
-        // PER DIR on the union branches, post-fill on the uniform ones
-        val addedNow = head.meta.liveAdded
-        def fill(d: DataFrame): DataFrame = fillDeclaredDefaults(d, addedNow)
-        val folded =
-          // a fold member with positional deletes must fold its VISIBLE
-          // rows (the per-dir path), or deleted rows would resurrect
-          if (fold.exists(_._1.pdels.nonEmpty))
-            fold.map { case (e, _) => fill(visibleDirFrame(spark, rp, e)) }
-              .reduce(_.unionByName(_, allowMissingColumns = true))
-          else if (foldSchemas.distinct.size == 1 && foldSchemas.head.isDefined)
-            fill(spark.read.schema(foldSchemas.head.get).parquet(foldPaths: _*))
-          else if (foldSchemas.distinct.size == 1)
-            fill(spark.read.parquet(foldPaths: _*))
-          else fold.map { case (e, _) =>
-            fill(readDirFrame(spark, rp, e.dir)) }
-            .reduce(_.unionByName(_, allowMissingColumns = true))
+        // the fold members read as the snapshot reads them: visible
+        // rows, schema-evolved dirs by name, declared defaults re-landed
+        // in the folded files (never NULL)
+        val folded = readResolved0(spark, head,
+          SnapshotPlan(Seq.empty, entries, fold.map(_._1), Seq.empty))
         val dirName = stage(s"data/compact-${java.util.UUID.randomUUID()}")
-        val entry = writeDir(spark, rp, dirName, folded, head.meta.statsCols)
+        val entry = writeDir(spark, fs, rp, dirName, folded, head.meta.statsCols)
         Some(Commit("compact", head.meta.copy(bucketBy = None),
           read = fold.map(_._1.line -> Drop).toMap, added = Seq(entry.line)))
       }
@@ -7077,10 +7072,10 @@ object TxTable {
   /** The snapshot's column mapping, materializing the identity map
     * from the physical schema when no header exists yet (one
     * footer-level probe; no data read). */
-  private def colMapOrIdentity(spark: SparkSession, root: String,
+  private def colMapOrIdentity(spark: SparkSession,
     head: Head): Seq[(String, String)] =
     head.meta.colMap.getOrElse(
-      readResolved(spark, root, head.version).columns.toSeq.map(c => (c, c)))
+      readPhysical(spark, head).columns.toSeq.map(c => (c, c)))
 
   /** Rename a column in ONE metadata commit — no data rewrite, any
     * table size (the Delta/Iceberg column-mapping move): the commit
@@ -7171,7 +7166,7 @@ object TxTable {
     }
     commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to alter at $root")
-      val m0 = colMapOrIdentity(spark, root, head)
+      val m0 = colMapOrIdentity(spark, head)
       cols.foreach { case (name, _, _) =>
         require(!liveMap(m0).exists(_._1 == name),
           s"txtable: column '$name' already exists at $root")
@@ -7201,7 +7196,7 @@ object TxTable {
       s"txtable: invalid column name '$to' (empty or reserved character)")
     commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to rename at $root")
-      val m = colMapOrIdentity(spark, root, head)
+      val m = colMapOrIdentity(spark, head)
       require(liveMap(m).exists(_._1 == from),
         s"txtable: no column '$from' to rename at $root")
       require(!liveMap(m).exists(_._1 == to),
@@ -7221,7 +7216,7 @@ object TxTable {
   def dropColumn(spark: SparkSession, root: String, name: String): Int = {
     commitRetry(spark, root) { _ => head =>
       require(head.version > 0, s"txtable: nothing to drop at $root")
-      val m = colMapOrIdentity(spark, root, head)
+      val m = colMapOrIdentity(spark, head)
       require(liveMap(m).exists(_._1 == name),
         s"txtable: no column '$name' to drop at $root")
       require(liveMap(m).size > 1,

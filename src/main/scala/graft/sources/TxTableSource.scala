@@ -40,26 +40,19 @@ import org.apache.spark.util.SerializableConfiguration
   *     .option("path", root).option("keys", "k").start()   //   load
   * }}}
   *
-  * Architecture: a relation wrapping the snapshot-resolved plan — the
-  * shape Delta Lake's own batch DataSource uses — rather than a
-  * DataSourceV2 record reader, because a merge-on-read snapshot IS a
+  * Architecture: a plain snapshot reads as Spark's own parquet relation
+  * over its [[TxFileIndex]], so `FileSourceStrategy` plans one native
+  * scan in the reader's plan and the index's dir triage prunes by the
+  * scan's data filters. Any other snapshot is a relation wrapping the
+  * snapshot-resolved plan — the shape Delta Lake's own batch
+  * DataSource uses — because a merge-on-read snapshot IS a
   * multi-operator Spark plan (window resolution + broadcast anti-join
-  * over vectorized parquet scans), not a per-partition record stream;
-  * re-implementing it under PartitionReader would forfeit exactly the
-  * codegen/pushdown machinery `TxTable.read` already composes.
-  * Pushdown still flows BOTH ways:
-  *  - options → snapshot pinning (versionAsOf / timestampAsOf), parsed
-  *    once into [[TxTableSource.ReaderOptions]];
-  *  - the option ranges and Catalyst's pushed filters → ONE filter
-  *    list, from which the commit stats' dir triage prunes before a
-  *    single footer is opened and which restricts the resolved rows,
-  *    pushing down into the inner parquet scans (`buildScan`'s
-  *    required columns and filters reach the resolved plan, and Spark
-  *    re-checks every filter above, so over-pruning is impossible and
-  *    under-pruning only costs I/O).
-  * `Dataset.inputFiles` reports the surviving data files (the relation
-  * implements FileRelation), so dir skipping is observable — and
-  * testable — from the standard API.
+  * over native scans), not a per-partition record stream: options pin
+  * the snapshot ([[TxTableSource.ReaderOptions]]), and the option
+  * ranges plus Catalyst's pushed filters form ONE filter list that
+  * prunes dirs and restricts the resolved rows (Spark re-checks every
+  * filter above). `Dataset.inputFiles` reports the surviving data
+  * files on both, so dir skipping is observable from the standard API.
   */
 class TxTableSource extends RelationProvider
   with CreatableRelationProvider with DataSourceRegister
@@ -109,7 +102,7 @@ class TxTableSource extends RelationProvider
     val root = TxTableSource.rootOfV2(options)
     if ((TxTableSource.isCatalogContext(options) ||
       options.containsKey("partitionCol")) && TxTable.exists(spark, root))
-      TxRelation(spark, root, TxTableSource.paramsOf(options)).schema
+      TxTableSource.schemaOf(spark, root, TxTableSource.paramsOf(options))
     else new StructType()
   }
 
@@ -123,7 +116,7 @@ class TxTableSource extends RelationProvider
       val spark = SparkSession.active
       val live =
         if (TxTable.exists(spark, root))
-          TxRelation(spark, root, TxTableSource.paramsOf(options)).schema
+          TxTableSource.schemaOf(spark, root, TxTableSource.paramsOf(options))
         else schema
       // declared PARTITIONED BY wins; a table built by the API proves
       // its partitioning through its own committed layout. Lenient on
@@ -170,12 +163,15 @@ class TxTableSource extends RelationProvider
         "DataSourceV2 micro-batch stream; unset " +
         "spark.sql.streaming.disabledV2MicroBatchReaders for graft-tx")
 
+  /** A batch read: the change feed, or the snapshot the reader
+    * options pin ([[TxRelation.of]] — Spark's own parquet relation when
+    * the snapshot is plain). */
   override def createRelation(sqlContext: SQLContext,
     parameters: Map[String, String]): BaseRelation = {
     val root = TxTableSource.rootOf(parameters)
     if (TxTableSource.changeFeedRequested(parameters))
       TxChangesRelation(sqlContext.sparkSession, root, parameters)
-    else TxRelation(sqlContext.sparkSession, root, parameters)
+    else TxRelation.of(sqlContext.sparkSession, root, parameters)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -237,6 +233,12 @@ object TxTableSource {
   private[sources] def isCatalogContext(
     options: CaseInsensitiveStringMap): Boolean =
     "graft-tx".equalsIgnoreCase(options.get("provider"))
+
+  /** The columns a batch read of `params`' snapshot returns, from the
+    * footers and the head alone ([[TxTable.schemaOf]]). */
+  private[sources] def schemaOf(spark: SparkSession, root: String,
+    params: Map[String, String]): StructType =
+    TxTable.schemaOf(spark, readerOptions(params).head(spark, root))
 
   private[sources] def paramsOf(
     options: CaseInsensitiveStringMap): Map[String, String] = {
@@ -348,6 +350,10 @@ object TxTableSource {
       versionAsOf.map(TxTable.resolveRef(spark, root, _))
         .orElse(timestampAsOf.map(TxTable.versionAt(spark, root, _)))
         .getOrElse(-1)
+
+    /** The head these options read: the pinned one, or the latest. */
+    private[sources] def head(spark: SparkSession, root: String): TxTable.Head =
+      TxTable.resolve(spark, root, version(spark, root))
 
     /** The row restrictions on `names`' spelling of each column:
       * option keys can arrive lowercased (DataFrameReader's options
@@ -865,41 +871,40 @@ case class TxChangesRelation(spark: SparkSession, root: String,
     df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }
 
-/** One `graft-tx` read: the snapshot its reader options pin, and ONE
-  * filter list — the option ranges plus Catalyst's pushed filters —
-  * from which [[TxTable]]'s dir triage prunes and which restricts the
-  * resolved rows. The head is resolved once per scan, size estimate
-  * or file report (not pinned at relation construction), so a catalog
-  * table over a continuously-loaded root follows the table — Spark's
-  * own per-query plan gives each query snapshot isolation. */
-case class TxRelation(spark: SparkSession, root: String,
-  parameters: Map[String, String])
+/** One `graft-tx` read of a snapshot that is not plain, or of one the
+  * reader options restrict to row ranges: the snapshot its options pin,
+  * and ONE filter list — the option ranges plus Catalyst's pushed
+  * filters — from which [[TxTable]]'s dir triage prunes and which
+  * restricts the resolved rows. Its scan is the snapshot's operators
+  * over native scans ([[TxTable.readWhere]]), run as an inner query. A
+  * pinned relation keeps the head it was created on; an un-pinned one
+  * follows the table, probing forward from the head it last saw, so a
+  * catalog table over a continuously-loaded root follows the table —
+  * Spark's own per-query plan gives each query snapshot isolation. */
+case class TxRelation private[sources] (spark: SparkSession, root: String,
+  parameters: Map[String, String])(h0: TxTable.Head)
   extends BaseRelation with PrunedFilteredScan with FileRelation
   with TxMetaAggTable {
 
   private[graft] val readerOptions =
     TxTableSource.readerOptions(parameters)
-  // a versionAsOf ref (a tag name too) resolves once, at load
-  private val pinnedRef =
-    readerOptions.versionAsOf.map(TxTable.resolveRef(spark, root, _))
+  @volatile private var cur = h0
 
-  private def resolvedVersion: Int =
-    pinnedRef.getOrElse(readerOptions.version(spark, root))
-
-  private def head(): TxTable.Head =
-    TxTable.resolve(spark, root, resolvedVersion)
+  private def head(): TxTable.Head = {
+    if (!readerOptions.pinned) cur = TxTable.latestFrom(cur)
+    cur
+  }
 
   private[graft] def metaRoot: String = root
   /** The version `plans.TxStatsAggRewrite` answers metadata-only
     * aggregates at (same resolution as a scan: pinned, or latest at
     * optimization time). */
   override private[graft] def metaVersion(s: SparkSession): Int =
-    resolvedVersion
+    head().version
 
   override def sqlContext: SQLContext = spark.sqlContext
 
-  override val schema: StructType =
-    TxTable.read(spark, root, version = resolvedVersion).schema
+  override val schema: StructType = TxTable.schemaOf(spark, h0)
 
   // option ranges filter rows, never columns
   private lazy val optionRows = readerOptions.on(schema.fieldNames).rows
@@ -908,28 +913,15 @@ case class TxRelation(spark: SparkSession, root: String,
     * is what lets Catalyst AUTO-BROADCAST a small graft-tx dimension
     * table: BaseRelation's default is spark.sql.defaultSizeInBytes
     * (effectively infinite), under which every join against this
-    * source plans as a shuffle however small the table is. Falls
-    * back to listing the snapshot's file lengths when any entry
-    * predates byte recording (still planning-time metadata, one
-    * listStatus per dir). */
+    * source plans as a shuffle however small the table is. */
   override def sizeInBytes: Long = {
     val h = head()
-    TxTable.snapshotBytes(h).getOrElse {
-      val conf = spark.sessionState.newHadoopConf()
-      TxTable.filesWhere(spark, h, Seq.empty, None).map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(conf).getFileStatus(p).getLen
-      }.sum
-    }
+    TxTable.entryBytes(h.fs, h.rp, h.entries).sum
   }
 
   // The inner snapshot plan already produces InternalRows (Spark's
   // vectorized parquet scans + whole-stage codegen); declaring
   // needConversion = false hands them to the V1 scan exec AS-IS.
-  // The default (true) routes every row through an InternalRow →
-  // Row → InternalRow round trip — measured 3x slower than the raw
-  // reader on a 6M-row sf1 scan, a per-row tax every query on this
-  // face was paying.
   override def needConversion: Boolean = false
 
   override def buildScan(requiredColumns: Array[String],
@@ -937,18 +929,39 @@ case class TxRelation(spark: SparkSession, root: String,
     TxRelation.scan(spark, root, head(), optionRows ++ filters,
       readerOptions.keyRange, requiredColumns, schema.fieldNames)
 
-  override def inputFiles: Array[String] =
-    TxTable.filesWhere(spark, head(), optionRows, readerOptions.keyRange)
+  override def inputFiles: Array[String] = {
+    val h = head()
+    TxFileIndex(h.fs, h.rp,
+      TxTable.planned(h, optionRows, readerOptions.keyRange)).inputFiles
+  }
 }
 
 object TxRelation {
+  /** The batch relation of `parameters`' snapshot of `root`: Spark's
+    * own parquet relation over the snapshot's [[TxFileIndex]] when the
+    * snapshot is plain ([[TxTable.plainSchema]]) and the options
+    * restrict no rows — `FileSourceStrategy` then plans one native
+    * scan inside the reader's plan — else a [[TxRelation]]. The head
+    * is resolved once, here, for both. */
+  private[sources] def of(spark: SparkSession, root: String,
+    parameters: Map[String, String]): BaseRelation = {
+    val opts = TxTableSource.readerOptions(parameters)
+    val h = opts.head(spark, root)
+    TxTable.plainSchema(h) match {
+      case Some(sc) if !opts.restricted =>
+        TxFileIndex.relation(spark,
+          TxFileIndex.face(h, opts, opts.pinned, sc), sc)
+      case _ => TxRelation(spark, root, parameters)(h)
+    }
+  }
+
   /** The rows of head `h` that pass `filters` (and `keyRange`),
     * projected to `cols` — the plan's own InternalRows. */
   private[sources] def scan(spark: SparkSession, root: String,
     h: TxTable.Head, filters: Seq[Filter], keyRange: Option[(Long, Long)],
     cols: Array[String], declared: Array[String]): RDD[Row] = {
     val df = TxTable.readWhere(spark, h, filters, keyRange)
-    // Un-pinned reads resolve the head per scan (a catalog table
+    // Un-pinned reads follow the head per scan (a catalog table
     // follows a continuously-loaded root), so a commit may have landed
     // since the `declared` columns were planned. TxTable evolution only
     // WIDENS by name, so they stay valid — but an overwrite can drop
@@ -961,8 +974,7 @@ object TxRelation {
         "schema?) - re-load or REFRESH TABLE")
     // empty cols (SELECT count(*)) legitimately project to zero-field
     // rows — never ship full-width rows Spark will discard. toRdd (not
-    // .rdd): the plan's own UnsafeRows, zero conversion (see
-    // TxRelation.needConversion)
+    // .rdd): the plan's own UnsafeRows, zero conversion
     df.select(cols.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
@@ -996,15 +1008,12 @@ class GraftTxTable(tableSchema: StructType, root: String,
     else TxStreamSource.feedSchema(SparkSession.active, root)
   override def schema(): StructType = feedSchema
 
-  override def capabilities(): java.util.Set[TableCapability] = {
-    val caps = new java.util.HashSet[TableCapability]
-    caps.add(TableCapability.STREAMING_WRITE)
-    // no feed schema (missing table) ⇒ not readable as a stream yet
-    if (tableSchema.nonEmpty ||
-      TxTable.exists(SparkSession.active, root))
-      caps.add(TableCapability.MICRO_BATCH_READ)
-    caps
-  }
+  // no existence probe: a batch read asks only whether BATCH_READ is
+  // here, and a stream over a missing table already fails at load, on
+  // the V1 fallback's eager schema (sourceSchema)
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.Set.of(TableCapability.STREAMING_WRITE,
+      TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
     // first commit version INCLUDED in the feed (default 1 = full

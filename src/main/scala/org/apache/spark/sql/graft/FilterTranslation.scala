@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.PredicateHelper
+import org.apache.spark.sql.catalyst.expressions.{Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, SimplifyCasts}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
@@ -16,5 +16,10 @@ object FilterTranslation extends PredicateHelper {
     SimplifyCasts(ConstantFolding(df.queryExecution.analyzed))
       .collectFirst { case f: logical.Filter => f.condition }.toSeq
       .flatMap(splitConjunctivePredicates)
-      .map(DataSourceStrategy.translateFilter(_, false))
+      .map(translate)
+
+  /** One predicate as Spark pushes it to a scan, None if it does not
+    * translate. */
+  def translate(e: Expression): Option[Filter] =
+    DataSourceStrategy.translateFilter(e, false)
 }

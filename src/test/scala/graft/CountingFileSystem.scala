@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, LocalFileSystem, LocatedFileStatus, Path, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** The local filesystem, counting the metadata-mutating calls made
-  * through it — `create`, `mkdirs`, `rename` and `delete` — into
-  * [[CountingFileSystem.counts]]. Installed for the `file` scheme with
+  * through it — `create`, `mkdirs`, `rename` and `delete` — and its
+  * directory listings (`listStatus`, whichever listing call made it)
+  * into [[CountingFileSystem.counts]]. Installed for the `file` scheme with
   * its instance cache off ([[CountingFileSystem.conf]]), so every
   * filesystem a session's Hadoop conf resolves, in the session's own
   * calls and in local tasks, counts. */
@@ -37,6 +38,15 @@ class CountingFileSystem extends LocalFileSystem {
   override def delete(f: Path, recursive: Boolean): Boolean = {
     count("delete")
     super.delete(f, recursive)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    count("listStatus")
+    super.listStatus(f)
+  }
+  override def listLocatedStatus(f: Path)
+    : RemoteIterator[LocatedFileStatus] = {
+    count("listStatus")
+    super.listLocatedStatus(f)
   }
 }
 

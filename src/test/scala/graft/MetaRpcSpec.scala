@@ -83,9 +83,22 @@ class MetaRpcSpec extends SparkSpec {
     spark.read.format("graft-tx").load(root).count()
     val n = rpcsOf { spark.read.format("graft-tx").load(root).count() }
     info(s"format-face read: $n metadata RPCs")
-    // two head resolutions — the relation's schema and the
-    // metadata-only count — plus the DSv2 provider's existence probe;
-    // the change-feed schema is no longer built for a batch read
-    assert(n <= 17, s"format-face read cost $n commit-metadata RPCs")
+    // one head resolution at load (6, as one TxTable.read), then the
+    // metadata-only count at the relation's own head: one forward
+    // probe and one status check of that commit
+    assert(n <= 8, s"format-face read cost $n commit-metadata RPCs")
+  }
+
+  test("mergeInto's commit body reads the head it was handed") {
+    import spark.implicits._
+    val root = tmpDir() + "/rpc-mergeinto"
+    TxTable.append(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"), root)
+    val src = Seq((2L, 21.0), (3L, 30.0)).toDF("k", "v")
+    val n = rpcsOf { TxTable.mergeInto(spark, root, src, Seq("k")) }
+    info(s"mergeInto: $n metadata RPCs")
+    // one head resolution (5) for the attempt, the claim's status
+    // check, and one status check to cache the claimed commit = 7; a
+    // body that re-read its version by number paid one more (8)
+    assert(n <= 7, s"mergeInto cost $n commit-metadata RPCs")
   }
 }

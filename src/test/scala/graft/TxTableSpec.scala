@@ -1910,13 +1910,13 @@ class TxTableSpec extends SparkSpec {
     TxTable.append(Seq((1L, "a")).toDF("k", "s"), root)
     val dir = fs.listStatus(new org.apache.hadoop.fs.Path(root, "data"))
       .head.getPath.getName
-    val first = TxTable.dirSchemas(spark, rp, Seq(s"data/$dir"))
+    val first = TxTable.dirSchemas(fs, rp, Seq(s"data/$dir"))
     assert(first.nonEmpty && first.head._2.containsField("k"))
     // dirs are immutable and uuid-named, so the second probe must not
     // touch the filesystem: delete the data files, probe again — the
     // schema still resolves (a re-probe would return empty)
     fs.delete(new org.apache.hadoop.fs.Path(root, s"data/$dir"), true)
-    val again = TxTable.dirSchemas(spark, rp, Seq(s"data/$dir"))
+    val again = TxTable.dirSchemas(fs, rp, Seq(s"data/$dir"))
     assert(again === first, "cached footer schema must serve without IO")
   }
 }
