@@ -51,7 +51,8 @@ object Tables {
     * and the session its converter flags, so a repeated load costs one
     * status call. Its schema is the `known` one, else Spark's own
     * conversion of the footer of the file (or of a directory's first
-    * data file, the one inference reads), made nullable. */
+    * data file, the one inference reads), made nullable. Its scans
+    * run through [[graft.sources.TxParquetFormat]]. */
   private[graft] def parquet(spark: SparkSession, path: String,
     known: Option[StructType] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -79,7 +80,8 @@ object Tables {
           new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
           .asInstanceOf[StructType]
       }
-      DataSource(spark, "parquet", Seq(path), Some(schema)).resolveRelation()
+      graft.sources.TxParquetFormat.over(
+        DataSource(spark, "parquet", Seq(path), Some(schema)).resolveRelation())
     }))
   }
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.FilterTranslation
 import org.apache.spark.sql.types.StructType
 
@@ -92,7 +91,7 @@ private[graft] object TxFileIndex {
   def relation(spark: SparkSession, index: TxFileIndex,
     schema: StructType): HadoopFsRelation =
     HadoopFsRelation(index, new StructType(), schema, None,
-      new ParquetFileFormat, Map.empty)(spark)
+      new TxParquetFormat, Map.empty)(spark)
 
   def frame(spark: SparkSession, index: TxFileIndex,
     schema: StructType): DataFrame =

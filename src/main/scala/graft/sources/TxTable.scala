@@ -4214,8 +4214,7 @@ object TxTable {
       acc.iterator
     }.reduceByKey((a, b) => { a._1.mergeInPlace(b._1); (a._1, a._2 + b._2) },
       math.max(1, eligible.size))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = TxHadoopConf(spark.sessionState.newHadoopConf())
     val rootStr = rp.toString
     val colL = colName
     val written = merged.mapPartitions { it =>

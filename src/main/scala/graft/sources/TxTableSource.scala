@@ -19,7 +19,6 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** The standard read/write face of [[TxTable]] — `graft-tx` as a
   * registered data source (ref analog: the reference warehouse's
@@ -1818,7 +1817,7 @@ class TxSpjScan(spark: SparkSession, root: String, version: Int,
       c => TxTable.physNameOf(colMap, c),
       c => outSchema.fields.find(_.name == c).map(_.dataType),
       partCols.contains)
-    TxSpjReaderFactory(fileSchema, new SerializableConfiguration(
+    TxSpjReaderFactory(fileSchema, TxHadoopConf(
       spark.sessionState.newHadoopConf()), pq)
   }
 }
@@ -1920,13 +1919,13 @@ class TxBucketSpjScan(spark: SparkSession, root: String, version: Int,
       c => TxTable.physNameOf(colMap, c),
       c => outSchema.fields.find(_.name == c).map(_.dataType),
       _ => false)
-    TxSpjReaderFactory(fileSchema, new SerializableConfiguration(
+    TxSpjReaderFactory(fileSchema, TxHadoopConf(
       spark.sessionState.newHadoopConf()), pq)
   }
 }
 
 case class TxSpjReaderFactory(fileSchema: StructType,
-  conf: SerializableConfiguration,
+  conf: TxHadoopConf,
   filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]
     = None) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -1936,7 +1935,7 @@ case class TxSpjReaderFactory(fileSchema: StructType,
 
 /** Chains one value's parquet files through [[TxParquetIO]]. */
 class TxSpjPartitionReader(files: Seq[String], schema: StructType,
-  conf: SerializableConfiguration,
+  conf: TxHadoopConf,
   filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]
     = None) extends PartitionReader[InternalRow] {
 
@@ -2087,7 +2086,7 @@ class TxMicroBatchStream(root: String, schema: StructType,
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    TxReaderFactory(schema, new SerializableConfiguration(
+    TxReaderFactory(schema, TxHadoopConf(
       spark.sessionState.newHadoopConf()))
 
   override def commit(end: V2Offset): Unit = ()
@@ -2101,7 +2100,7 @@ case class TxInputPartition(file: String, constOp: Option[String],
   version: Int) extends InputPartition
 
 case class TxReaderFactory(schema: StructType,
-  conf: SerializableConfiguration) extends PartitionReaderFactory {
+  conf: TxHadoopConf) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new TxPartitionReader(p.asInstanceOf[TxInputPartition], schema, conf)
 }
@@ -2111,7 +2110,7 @@ case class TxReaderFactory(schema: StructType,
   * constant where the file has none, `commit_version` always constant.
   * No Spark plan, no driver involvement — pure executor record IO. */
 class TxPartitionReader(part: TxInputPartition, schema: StructType,
-  conf: SerializableConfiguration) extends PartitionReader[InternalRow] {
+  conf: TxHadoopConf) extends PartitionReader[InternalRow] {
 
   // feed fields that must come FROM the file, in feed order
   private val fileFields = StructType(schema.fields.filterNot(f =>
@@ -2450,7 +2449,7 @@ object TxStagedMessage {
   * stored (the bucket id of a bucketed write, the z block of a z-order
   * rewrite), projected out of each row before the write. */
 case class TxStagedWriterFactory(dir: String, schema: StructType,
-  partCols: Seq[String], conf: SerializableConfiguration,
+  partCols: Seq[String], conf: TxHadoopConf,
   sketchCols: Seq[String], tupleCol: Option[String] = None)
   extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -2493,7 +2492,7 @@ object TxStagedWriterFactory {
   * `update` call per value), so a dir's merged sketch estimates what
   * the aggregate over its rows estimates. */
 class TxStagedWriter(prefix: String, schema: StructType,
-  partCols: Seq[String], conf: SerializableConfiguration,
+  partCols: Seq[String], conf: TxHadoopConf,
   sketchCols: Seq[String] = Seq.empty, tupleCol: Option[String] = None)
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.types._
