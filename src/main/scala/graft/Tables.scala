@@ -35,9 +35,14 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong")
+  // (qualified path, known schema, files, converter flags)
+  private type RelKey = (String, Option[StructType],
+    Seq[(String, Long, Long)], Seq[Option[String]])
   private val relations = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[Any, BaseRelation]]())
+      java.util.concurrent.ConcurrentHashMap[RelKey, BaseRelation]]())
+  private def relationsOf(spark: SparkSession) = relations.computeIfAbsent(
+    spark, _ => new java.util.concurrent.ConcurrentHashMap())
 
   /** The schema `spark.read.parquet(path)` infers, without its
     * footer-reading Spark job (see [[parquet]]). */
@@ -51,23 +56,27 @@ object Tables {
     * and the session its converter flags, so a repeated load costs one
     * status call. Its schema is the `known` one, else Spark's own
     * conversion of the footer of the file (or of a directory's first
-    * data file, the one inference reads), made nullable. Its scans
-    * run through [[graft.sources.TxParquetFormat]]. */
+    * data file, the one inference reads), made nullable. A changed
+    * file set or a [[forget]] drops the path's older relations, and a
+    * session keeps at most 256. Its scans run through
+    * [[graft.sources.TxParquetFormat]]. */
   private[graft] def parquet(spark: SparkSession, path: String,
     known: Option[StructType] = None): DataFrame = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val st0 = fs.getFileStatus(new Path(path))
+    val qp = st0.getPath.toString
     val files =
       if (!st0.isDirectory) Seq(st0)
       else fs.listStatus(st0.getPath).filter(s => s.isFile &&
         !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith(".")).sortBy(_.getPath.getName).toSeq
-    val key = (path, files.map(s => (s.getPath.toString, s.getLen,
-      s.getModificationTime)), converterFlags.map(spark.conf.getOption))
-    val rels = relations.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap())
-    spark.baseRelationToDataFrame(rels.computeIfAbsent(key, _ => {
+    val key: RelKey = (qp, known, files.map(s => (s.getPath.toString,
+      s.getLen, s.getModificationTime)), converterFlags.map(spark.conf.getOption))
+    val rels = relationsOf(spark)
+    spark.baseRelationToDataFrame(Option(rels.get(key)).getOrElse {
+      rels.keySet.removeIf(_._1 == qp)
+      if (rels.size >= 256) rels.clear()
       val schema = known.getOrElse {
         val st = files.head
         val footer = ParquetFooterReader.readFooter(
@@ -80,10 +89,17 @@ object Tables {
           new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
           .asInstanceOf[StructType]
       }
-      graft.sources.TxParquetFormat.over(
+      val rel = graft.sources.TxParquetFormat.over(
         DataSource(spark, "parquet", Seq(path), Some(schema)).resolveRelation())
-    }))
+      rels.put(key, rel)
+      rel
+    })
   }
+
+  /** Drop the relations [[parquet]] keeps for `path` (qualified), once
+    * its files are deleted. */
+  private[graft] def forget(spark: SparkSession, path: Path): Unit =
+    relationsOf(spark).keySet.removeIf(_._1 == path.toString)
 
   /** Register every table as a temp view so users can drive the whole
     * engine through `spark.sql(...)` — the warehouse-SQL surface the

@@ -816,7 +816,10 @@ object Dedup {
             n.startsWith(f"rel-$key-${dir.hashCode}%08x-") &&
               n.endsWith(s"-${Scratch.owner}") && n != id
           }
-          .foreach(s => fs.delete(s.getPath, true))
+          .foreach { s =>
+            fs.delete(s.getPath, true)
+            Tables.forget(spark, s.getPath)
+          }
       val t0 = System.nanoTime()
       val built = build
       built.write.mode("overwrite").parquet(p.toString)

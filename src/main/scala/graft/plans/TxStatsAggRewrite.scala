@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ShortType}
 
@@ -109,21 +109,14 @@ object TxStatsAggRewrite extends Rule[LogicalPlan] {
     * (the grouped caller passes its group keys, whose null-freeness
     * its own firing proof establishes; any other Filter or computed
     * projection means stats no longer describe the input). Matches
-    * all three batch faces: the path face (a plain snapshot's file
-    * relation over its `TxFileIndex`, else the V1 relation), catalog tables, and
+    * all three batch faces: the V1 path relation, catalog tables, and
     * the storage-partitioned face (the latter two pre-pushdown as
     * DataSourceV2Relation — extended operator-optimization rules run
     * before V2 scan pushdown). */
   private def relOf(p: LogicalPlan,
     notNullOk: Set[ExprId]): Option[RelInfo] =
     p match {
-      case l: LogicalRelation => metaOf(l.relation match {
-        // the format face plans a plain snapshot as Spark's own file
-        // relation; its index is the table (a group scan's is not)
-        case HadoopFsRelation(i: graft.sources.TxFileIndex, _, _, _, _, _)
-          if i.whole => i
-        case r => r
-      })
+      case l: LogicalRelation => metaOf(l.relation)
       case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         metaOf(d.table)
       case Project(ps, c) if ps.forall(_.isInstanceOf[AttributeReference]) =>

@@ -8,43 +8,32 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.graft.FilterTranslation
 import org.apache.spark.sql.types.StructType
 
-/** The data files of a graft-tx snapshot as Spark's own `FileIndex`: a
-  * relation over it plans as ONE native parquet scan inside the
-  * reader's plan, with no inner query, no per-read `DataSource`
-  * resolution and no `InMemoryFileIndex` listing. `listFiles` runs the
-  * commit stats' dir triage on the scan's translated data filters and
-  * returns the surviving dirs' files, each dir listed once per JVM
-  * ([[TxTable.dataFiles]]). Two kinds: the format face's index over a
-  * whole plain snapshot ([[TxFileIndex.face]]), which is the
-  * [[TxMetaAggTable]] the stats rewrite answers from (`whole`), and an
-  * index fixed to one group of dirs, the scan under each snapshot
-  * operator. `key` is its identity, so equal reads plan equal scans
-  * (cache and exchange reuse). */
+/** The data files of a group of graft-tx dirs as Spark's own
+  * `FileIndex`: a relation over it plans as ONE native parquet scan,
+  * with no per-read `DataSource` resolution and no `InMemoryFileIndex`
+  * listing. `listFiles` runs the commit stats' dir triage on the scan's
+  * translated data filters and returns the surviving dirs' files, each
+  * dir listed once per JVM ([[TxTable.dataFiles]]). It is the scan under
+  * each snapshot operator; equal dir groups are equal indexes, so equal
+  * reads plan equal scans (cache and exchange reuse). */
 private[graft] final class TxFileIndex private (fs: FileSystem, rp: Path,
-  roots: Seq[Path], private val key: Any,
-  snapshot: () => (Int, Seq[TxTable.Entry]),
-  private[graft] val readerOptions: TxTableSource.ReaderOptions,
-  private[graft] val whole: Boolean)
-  extends FileIndex with TxMetaAggTable {
+  es: Seq[TxTable.Entry]) extends FileIndex {
 
-  private[graft] def metaRoot: String = rp.toString
-  override private[graft] def metaVersion(s: SparkSession): Int =
-    snapshot()._1
+  private val key = (rp.toString, es.map(_.dir))
 
   private def files(es: Seq[TxTable.Entry]): Seq[FileStatus] = {
     val byDir = TxTable.dataFiles(fs, rp, es.map(_.dir))
     es.flatMap(e => byDir.getOrElse(e.dir, Seq.empty))
   }
 
-  override def rootPaths: Seq[Path] = roots
+  override def rootPaths: Seq[Path] = es.map(e => new Path(rp, e.dir))
   override def listFiles(partitionFilters: Seq[Expression],
     dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
     Seq(PartitionDirectory(InternalRow.empty, files(TxTable.surviving(
-      dataFilters.flatMap(FilterTranslation.translate), snapshot()._2)).toArray))
+      dataFilters.flatMap(FilterTranslation.translate), es)).toArray))
   override def inputFiles: Array[String] =
-    files(snapshot()._2).map(_.getPath.toString).toArray
-  override def sizeInBytes: Long =
-    TxTable.entryBytes(fs, rp, snapshot()._2).sum
+    files(es).map(_.getPath.toString).toArray
+  override def sizeInBytes: Long = TxTable.entryBytes(fs, rp, es).sum
   override def refresh(): Unit = ()
   override def partitionSchema: StructType = new StructType()
 
@@ -58,42 +47,11 @@ private[graft] final class TxFileIndex private (fs: FileSystem, rp: Path,
 private[graft] object TxFileIndex {
   /** An index fixed to the dirs of `es`. */
   private[sources] def apply(fs: FileSystem, rp: Path,
-    es: Seq[TxTable.Entry]): TxFileIndex =
-    new TxFileIndex(fs, rp, es.map(e => new Path(rp, e.dir)),
-      (rp.toString, es.map(_.dir)), () => (-1, es),
-      TxTableSource.ReaderOptions(), whole = false)
+    es: Seq[TxTable.Entry]): TxFileIndex = new TxFileIndex(fs, rp, es)
 
-  /** The format face's index over the plain snapshot `h`, read as
-    * `schema`: `pinned` keeps `h`; otherwise each use follows the table
-    * from the last head it saw ([[TxTable.latestFrom]]), and refuses a
-    * head that is no longer plain in `schema` (a re-load plans it). */
-  private[sources] def face(h: TxTable.Head, opts: TxTableSource.ReaderOptions,
-    pinned: Boolean, schema: StructType): TxFileIndex = {
-    @volatile var cur = h
-    def snapshot(): (Int, Seq[TxTable.Entry]) = {
-      if (!pinned) {
-        val next = TxTable.latestFrom(cur)
-        if (next ne cur) {
-          require(TxTable.plainSchema(next).contains(schema),
-            s"graft-tx: v${next.version} of ${h.rp} no longer reads as " +
-              "the plain snapshot this DataFrame was planned on - re-load it")
-          cur = next
-        }
-      }
-      (cur.version, cur.entries)
-    }
-    new TxFileIndex(h.fs, h.rp, Seq(h.rp),
-      (h.rp.toString, opts, if (pinned) Some(h.version) else None),
-      () => snapshot(), opts, whole = true)
-  }
-
-  /** The relation Spark plans as its own parquet scan of `index`. */
-  def relation(spark: SparkSession, index: TxFileIndex,
-    schema: StructType): HadoopFsRelation =
-    HadoopFsRelation(index, new StructType(), schema, None,
-      new TxParquetFormat, Map.empty)(spark)
-
+  /** Spark's own parquet scan of `index`'s files, read as `schema`. */
   def frame(spark: SparkSession, index: TxFileIndex,
     schema: StructType): DataFrame =
-    spark.baseRelationToDataFrame(relation(spark, index, schema))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      schema, None, new TxParquetFormat, Map.empty)(spark))
 }

@@ -237,14 +237,14 @@ private[sources] object TxParquetIO {
     * statistics exist and equal what the writer saw. Built once per
     * write and shipped to its writer tasks. */
   def writeConf(spark: org.apache.spark.sql.SparkSession,
-    schema: StructType): TxHadoopConf = {
+    schema: StructType): org.apache.spark.util.SerializableConfiguration = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
     new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, schema)
     job.getConfiguration.set("spark.sql.parquet.outputTimestampType",
       "TIMESTAMP_MICROS")
-    TxHadoopConf(job.getConfiguration)
+    shipped(job.getConfiguration)
   }
 
   /** Spark's parquet `OutputWriter` for one file at `path`, under a
@@ -256,52 +256,41 @@ private[sources] object TxParquetIO {
     new org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter(
       path, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
         conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
-}
 
-/** A Hadoop conf shipped to tasks as what it changes over the defaults
-  * a `new Configuration()` loads: the keys it sets to another value and
-  * the default keys it unsets. Hadoop's own `Configuration.write`, which
-  * `SerializableConfiguration` ships, writes every property (well over
-  * a thousand once the mapreduce defaults load) each with a
-  * gzip-compressed record of where it was set, one deflater per
-  * property, and a task's read inflates them all again; a write pays
-  * that three times (the closure check, the task binary and each
-  * task's read), milliseconds each. The delta is a few dozen strings.
-  * `value` is the conf itself on the driver and, in a task, one copy
-  * of the JVM's default conf with the delta applied. */
-final class TxHadoopConf private (
-  @transient private var conf: Configuration,
-  set: Array[(String, String)], unset: Array[String]) extends Serializable {
-  def value: Configuration = synchronized {
-    if (conf == null) {
-      val c = new Configuration(TxHadoopConf.defaults)
-      set.foreach { case (k, v) => c.set(k, v) }
-      unset.foreach(c.unset)
-      conf = c
+  /** `conf` as it ships to tasks: Spark's `SerializableConfiguration`
+    * over a copy that writes every property without its source record
+    * ([[lean]]). Hadoop's own `Configuration.write` gzips, one deflater
+    * per property, a record of where each of the well over a thousand
+    * properties was set, and a task's read inflates them all again; a
+    * write pays that three times (the closure check, the task binary
+    * and each task's read), milliseconds each. A task rebuilds exactly
+    * the shipped properties, whatever defaults its own JVM loads. */
+  def shipped(conf: Configuration): org.apache.spark.util.SerializableConfiguration =
+    new org.apache.spark.util.SerializableConfiguration(lean(conf))
+
+  /** A copy of `conf` whose `write` records no property's source;
+    * `Configuration.readFields` reads it back as every property of
+    * `conf`, each set programmatically. */
+  def lean(conf: Configuration): Configuration = new Configuration(conf) {
+    override def write(out: java.io.DataOutput): Unit = {
+      import org.apache.hadoop.io.{Text, WritableUtils}
+      val props = getProps
+      WritableUtils.writeVInt(out, props.size)
+      props.forEach { (k, v) =>
+        Text.writeString(out, k.toString)
+        Text.writeString(out, v.toString)
+        WritableUtils.writeCompressedStringArray(out, null)
+      }
     }
-    conf
-  }
-}
-
-object TxHadoopConf {
-  private lazy val defaults = new Configuration()
-
-  def apply(conf: Configuration): TxHadoopConf = {
-    import scala.jdk.CollectionConverters._
-    val set = conf.iterator.asScala.map(e => e.getKey -> e.getValue)
-      .filter { case (k, v) => defaults.getRaw(k) != v }.toArray
-    val unset = defaults.iterator.asScala.map(_.getKey)
-      .filter(conf.getRaw(_) == null).toArray
-    new TxHadoopConf(conf, set, unset)
   }
 }
 
 /** Spark's own parquet format, with a lean conf behind each scan:
   * `buildReaderWithPartitionValues` broadcasts the Hadoop conf it is
   * handed, once per scan, and `Configuration.write` gzips each
-  * property's record of where it was set (see [[TxHadoopConf]]); the
-  * conf handed on here ([[TxParquetFormat.lean]]) writes the same
-  * properties without those records. Every relation graft plans over
+  * property's record of where it was set; the conf handed on here
+  * ([[TxParquetIO.lean]]) writes the same properties without those
+  * records. Every relation graft plans over
   * parquet files uses it. */
 private[graft] class TxParquetFormat extends
   org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
@@ -313,7 +302,7 @@ private[graft] class TxParquetFormat extends
     : org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[InternalRow] =
     super.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema,
-      requiredSchema, filters, options, TxParquetFormat.lean(hadoopConf))
+      requiredSchema, filters, options, TxParquetIO.lean(hadoopConf))
   // equal to every ParquetFileFormat, as Spark's own is
   override def hashCode(): Int =
     classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]
@@ -329,19 +318,5 @@ private[graft] object TxParquetFormat {
     case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
       r.copy(fileFormat = new TxParquetFormat)(r.sparkSession)
     case r => r
-  }
-
-  /** A copy of `conf` whose `write` records no property's source. */
-  def lean(conf: Configuration): Configuration = new Configuration(conf) {
-    override def write(out: java.io.DataOutput): Unit = {
-      import org.apache.hadoop.io.{Text, WritableUtils}
-      val props = getProps
-      WritableUtils.writeVInt(out, props.size)
-      props.forEach { (k, v) =>
-        Text.writeString(out, k.toString)
-        Text.writeString(out, v.toString)
-        WritableUtils.writeCompressedStringArray(out, null)
-      }
-    }
   }
 }

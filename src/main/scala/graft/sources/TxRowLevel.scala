@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** SQL row-level DML (`DELETE FROM` / `UPDATE` / `MERGE INTO`) for
   * catalog `graft-tx` tables, the group-based copy-on-write shape of
@@ -236,7 +237,7 @@ class TxCowScan(spark: SparkSession, plan: TxTable.CowPlan,
     val fileSchema = StructType(dataFields.map(f =>
       f.copy(name = TxTable.physNameOf(plan.colMap, f.name))))
     TxCowReaderFactory(fileSchema, metaNames.toSeq,
-      TxHadoopConf(spark.sessionState.newHadoopConf()),
+      TxParquetIO.shipped(spark.sessionState.newHadoopConf()),
       plan.addedCols, plan.addedDefaults)
   }
 }
@@ -245,7 +246,7 @@ case class TxCowInputPartition(file: String, dir: String,
   pdelFiles: Seq[String]) extends InputPartition
 
 case class TxCowReaderFactory(fileSchema: StructType, metaCols: Seq[String],
-  conf: TxHadoopConf, addedCols: Set[String] = Set.empty,
+  conf: SerializableConfiguration, addedCols: Set[String] = Set.empty,
   addedDefaults: Map[String, Any] = Map.empty)
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -265,7 +266,7 @@ case class TxCowReaderFactory(fileSchema: StructType, metaCols: Seq[String],
   * position is the RAW file index including sidecar-dead rows — the
   * exact coordinate the `pd:` grammar speaks). */
 class TxCowPartitionReader(file: String, pdelFiles: Seq[String],
-  schema: StructType, conf: TxHadoopConf,
+  schema: StructType, conf: SerializableConfiguration,
   metaCols: Seq[String] = Seq.empty, dir: String = "",
   addedCols: Set[String] = Set.empty,
   addedDefaults: Map[String, Any] = Map.empty)

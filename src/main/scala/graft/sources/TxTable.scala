@@ -4030,12 +4030,15 @@ object TxTable {
   private val filesCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[org.apache.hadoop.fs.FileStatus]]()
 
-  /** The data files of each of `dirs`: every file under the dir but
-    * hidden (`_`/`.`) ones and the positional-delete sidecar subtrees
-    * (`_pdel-*`, metadata, never data), listed once per JVM per dir
-    * ([[filesCache]]) on the metadata pool. Order within a dir follows
-    * the listing; callers keep entry order by iterating their own dir
-    * sequence. */
+  /** The data files of each of committed entry `dirs`: every file
+    * under the dir that Spark's own file index keeps — no hidden
+    * (`_`/`.`) file, and no hidden subdir but a `_k=v` one (a z-order
+    * block), so the positional-delete sidecar subtrees (`_pdel-*`,
+    * metadata, never data) and a stager's `.tmp-*` leftovers stay out —
+    * listed once per JVM per dir ([[filesCache]]) on the metadata pool.
+    * Only for dirs whose path is minted once (UUID-named entry dirs).
+    * Order within a dir follows the listing; callers keep entry order
+    * by iterating their own dir sequence. */
   private[sources] def dataFiles(fs: FileSystem, rp: Path,
     dirs: Seq[String]): Map[String, Seq[org.apache.hadoop.fs.FileStatus]] = {
     def qual(d: String): String = new Path(rp, d)
@@ -4048,8 +4051,8 @@ object TxTable {
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { s =>
         val n = s.getPath.getName
-        if (s.isDirectory) { if (n.startsWith("_pdel-")) Nil else walk(s.getPath) }
-        else if (n.startsWith("_") || n.startsWith(".")) Nil
+        if (s.isDirectory) { if (hiddenDir(n)) Nil else walk(s.getPath) }
+        else if (hidden(n)) Nil
         else Seq(s)
       }
     val listed = fanOut(dirs.distinct.filterNot(hits.contains)) { d =>
@@ -4059,6 +4062,11 @@ object TxTable {
     listed.foreach { case (d, fl) => filesCache.put(qual(d), fl) }
     hits ++ listed
   }
+
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+  private def hiddenDir(name: String): Boolean =
+    hidden(name) && !(name.startsWith("_") && name.contains("="))
 
   /** [[dataFiles]] as path strings. */
   private def listDataFiles(fs: FileSystem, rp: Path,
@@ -4214,7 +4222,7 @@ object TxTable {
       acc.iterator
     }.reduceByKey((a, b) => { a._1.mergeInPlace(b._1); (a._1, a._2 + b._2) },
       math.max(1, eligible.size))
-    val conf = TxHadoopConf(spark.sessionState.newHadoopConf())
+    val conf = TxParquetIO.shipped(spark.sessionState.newHadoopConf())
     val rootStr = rp.toString
     val colL = colName
     val written = merged.mapPartitions { it =>
@@ -5215,10 +5223,15 @@ object TxTable {
         s"txtable: v$v of $root was vacuumed; change replay must start " +
           "at or after the oldest retained snapshot")
     }
-    def filesOf(dirs: Seq[String]): Seq[String] = {
-      val m = listDataFiles(fs, rp, dirs)
-      dirs.flatMap(d => m.getOrElse(d, Seq.empty))
-    }
+    // the files directly in each dir, listed afresh: `_changes/v<N>` is
+    // a fixed path a recreated root mints again, and a losing stager's
+    // `.tmp-*` dir may sit nested inside it (see below)
+    def filesOf(dirs: Seq[String]): Seq[String] =
+      fanOut(dirs) { d =>
+        fs.listStatus(new Path(rp, d)).toSeq
+          .filter(s => s.isFile && !hidden(s.getPath.getName))
+          .map(_.getPath.toString)
+      }.flatten
     ((fromV + 1) to toV).flatMap { v =>
       val op = commitLines(fs, rp, v)
         .find(_.startsWith("op:")).map(_.drop(3)).getOrElse("?")
@@ -5553,7 +5566,7 @@ object TxTable {
   private def analyzeHistograms(df: DataFrame, targets: Seq[String],
     phys: Seq[String], nullsOf: Int => Long, prevV: Int,
     bins: Int, total: Long): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, NumericType, TimestampType}
+    import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
     require(bins >= 2 && bins <= 1024,
       s"txtable: histogramBins must be in [2, 1024], got $bins")
     val hIdx = targets.zipWithIndex.filter { case (c, _) =>

@@ -19,6 +19,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** The standard read/write face of [[TxTable]] — `graft-tx` as a
   * registered data source (ref analog: the reference warehouse's
@@ -39,19 +40,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("path", root).option("keys", "k").start()   //   load
   * }}}
   *
-  * Architecture: a plain snapshot reads as Spark's own parquet relation
-  * over its [[TxFileIndex]], so `FileSourceStrategy` plans one native
-  * scan in the reader's plan and the index's dir triage prunes by the
-  * scan's data filters. Any other snapshot is a relation wrapping the
-  * snapshot-resolved plan — the shape Delta Lake's own batch
-  * DataSource uses — because a merge-on-read snapshot IS a
+  * Architecture: a relation wrapping the snapshot-resolved plan — the
+  * shape Delta Lake's own batch DataSource uses — rather than a
+  * DataSourceV2 record reader, because a merge-on-read snapshot IS a
   * multi-operator Spark plan (window resolution + broadcast anti-join
-  * over native scans), not a per-partition record stream: options pin
-  * the snapshot ([[TxTableSource.ReaderOptions]]), and the option
-  * ranges plus Catalyst's pushed filters form ONE filter list that
-  * prunes dirs and restricts the resolved rows (Spark re-checks every
-  * filter above). `Dataset.inputFiles` reports the surviving data
-  * files on both, so dir skipping is observable from the standard API.
+  * over native scans, each over a [[TxFileIndex]]), not a
+  * per-partition record stream: options pin the snapshot
+  * ([[TxTableSource.ReaderOptions]]), and the option ranges plus
+  * Catalyst's pushed filters form ONE filter list that prunes dirs and
+  * restricts the resolved rows (Spark re-checks every filter above).
+  * `Dataset.inputFiles` reports the surviving data files (the relation
+  * implements FileRelation), so dir skipping is observable from the
+  * standard API.
   */
 class TxTableSource extends RelationProvider
   with CreatableRelationProvider with DataSourceRegister
@@ -163,8 +163,7 @@ class TxTableSource extends RelationProvider
         "spark.sql.streaming.disabledV2MicroBatchReaders for graft-tx")
 
   /** A batch read: the change feed, or the snapshot the reader
-    * options pin ([[TxRelation.of]] — Spark's own parquet relation when
-    * the snapshot is plain). */
+    * options pin ([[TxRelation.of]]). */
   override def createRelation(sqlContext: SQLContext,
     parameters: Map[String, String]): BaseRelation = {
     val root = TxTableSource.rootOf(parameters)
@@ -870,16 +869,17 @@ case class TxChangesRelation(spark: SparkSession, root: String,
     df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }
 
-/** One `graft-tx` read of a snapshot that is not plain, or of one the
-  * reader options restrict to row ranges: the snapshot its options pin,
-  * and ONE filter list — the option ranges plus Catalyst's pushed
-  * filters — from which [[TxTable]]'s dir triage prunes and which
-  * restricts the resolved rows. Its scan is the snapshot's operators
-  * over native scans ([[TxTable.readWhere]]), run as an inner query. A
-  * pinned relation keeps the head it was created on; an un-pinned one
-  * follows the table, probing forward from the head it last saw, so a
-  * catalog table over a continuously-loaded root follows the table —
-  * Spark's own per-query plan gives each query snapshot isolation. */
+/** One `graft-tx` read: the snapshot its reader options pin, and ONE
+  * filter list — the option ranges plus Catalyst's pushed filters —
+  * from which [[TxTable]]'s dir triage prunes and which restricts the
+  * resolved rows. Its scan is the snapshot's operators over native
+  * scans ([[TxTable.readWhere]]), handed over as the inner plan's own
+  * rows. A pinned relation keeps the head it was created on; an
+  * un-pinned one follows the table, probing forward from the head it
+  * last saw, across every commit kind (a delta, a positional delete, a
+  * widening append), so a kept DataFrame, a path view or a catalog
+  * table over a continuously-loaded root follows the table — Spark's
+  * own per-query plan gives each query snapshot isolation. */
 case class TxRelation private[sources] (spark: SparkSession, root: String,
   parameters: Map[String, String])(h0: TxTable.Head)
   extends BaseRelation with PrunedFilteredScan with FileRelation
@@ -921,6 +921,10 @@ case class TxRelation private[sources] (spark: SparkSession, root: String,
   // The inner snapshot plan already produces InternalRows (Spark's
   // vectorized parquet scans + whole-stage codegen); declaring
   // needConversion = false hands them to the V1 scan exec AS-IS.
+  // The default (true) routes every row through an InternalRow →
+  // Row → InternalRow round trip — measured 3x slower than the raw
+  // reader on a 6M-row sf1 scan, a per-row tax every query on this
+  // face was paying.
   override def needConversion: Boolean = false
 
   override def buildScan(requiredColumns: Array[String],
@@ -936,23 +940,12 @@ case class TxRelation private[sources] (spark: SparkSession, root: String,
 }
 
 object TxRelation {
-  /** The batch relation of `parameters`' snapshot of `root`: Spark's
-    * own parquet relation over the snapshot's [[TxFileIndex]] when the
-    * snapshot is plain ([[TxTable.plainSchema]]) and the options
-    * restrict no rows — `FileSourceStrategy` then plans one native
-    * scan inside the reader's plan — else a [[TxRelation]]. The head
-    * is resolved once, here, for both. */
+  /** The batch relation of `parameters`' snapshot of `root`, its head
+    * resolved once, here: the schema and the first scan share it. */
   private[sources] def of(spark: SparkSession, root: String,
-    parameters: Map[String, String]): BaseRelation = {
-    val opts = TxTableSource.readerOptions(parameters)
-    val h = opts.head(spark, root)
-    TxTable.plainSchema(h) match {
-      case Some(sc) if !opts.restricted =>
-        TxFileIndex.relation(spark,
-          TxFileIndex.face(h, opts, opts.pinned, sc), sc)
-      case _ => TxRelation(spark, root, parameters)(h)
-    }
-  }
+    parameters: Map[String, String]): TxRelation =
+    TxRelation(spark, root, parameters)(
+      TxTableSource.readerOptions(parameters).head(spark, root))
 
   /** The rows of head `h` that pass `filters` (and `keyRange`),
     * projected to `cols` — the plan's own InternalRows. */
@@ -973,7 +966,8 @@ object TxRelation {
         "schema?) - re-load or REFRESH TABLE")
     // empty cols (SELECT count(*)) legitimately project to zero-field
     // rows — never ship full-width rows Spark will discard. toRdd (not
-    // .rdd): the plan's own UnsafeRows, zero conversion
+    // .rdd): the plan's own UnsafeRows, zero conversion (see
+    // TxRelation.needConversion)
     df.select(cols.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
@@ -1817,7 +1811,7 @@ class TxSpjScan(spark: SparkSession, root: String, version: Int,
       c => TxTable.physNameOf(colMap, c),
       c => outSchema.fields.find(_.name == c).map(_.dataType),
       partCols.contains)
-    TxSpjReaderFactory(fileSchema, TxHadoopConf(
+    TxSpjReaderFactory(fileSchema, TxParquetIO.shipped(
       spark.sessionState.newHadoopConf()), pq)
   }
 }
@@ -1919,13 +1913,13 @@ class TxBucketSpjScan(spark: SparkSession, root: String, version: Int,
       c => TxTable.physNameOf(colMap, c),
       c => outSchema.fields.find(_.name == c).map(_.dataType),
       _ => false)
-    TxSpjReaderFactory(fileSchema, TxHadoopConf(
+    TxSpjReaderFactory(fileSchema, TxParquetIO.shipped(
       spark.sessionState.newHadoopConf()), pq)
   }
 }
 
 case class TxSpjReaderFactory(fileSchema: StructType,
-  conf: TxHadoopConf,
+  conf: SerializableConfiguration,
   filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]
     = None) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -1935,7 +1929,7 @@ case class TxSpjReaderFactory(fileSchema: StructType,
 
 /** Chains one value's parquet files through [[TxParquetIO]]. */
 class TxSpjPartitionReader(files: Seq[String], schema: StructType,
-  conf: TxHadoopConf,
+  conf: SerializableConfiguration,
   filter: Option[org.apache.parquet.filter2.predicate.FilterPredicate]
     = None) extends PartitionReader[InternalRow] {
 
@@ -2086,7 +2080,7 @@ class TxMicroBatchStream(root: String, schema: StructType,
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    TxReaderFactory(schema, TxHadoopConf(
+    TxReaderFactory(schema, TxParquetIO.shipped(
       spark.sessionState.newHadoopConf()))
 
   override def commit(end: V2Offset): Unit = ()
@@ -2100,7 +2094,7 @@ case class TxInputPartition(file: String, constOp: Option[String],
   version: Int) extends InputPartition
 
 case class TxReaderFactory(schema: StructType,
-  conf: TxHadoopConf) extends PartitionReaderFactory {
+  conf: SerializableConfiguration) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new TxPartitionReader(p.asInstanceOf[TxInputPartition], schema, conf)
 }
@@ -2110,7 +2104,7 @@ case class TxReaderFactory(schema: StructType,
   * constant where the file has none, `commit_version` always constant.
   * No Spark plan, no driver involvement — pure executor record IO. */
 class TxPartitionReader(part: TxInputPartition, schema: StructType,
-  conf: TxHadoopConf) extends PartitionReader[InternalRow] {
+  conf: SerializableConfiguration) extends PartitionReader[InternalRow] {
 
   // feed fields that must come FROM the file, in feed order
   private val fileFields = StructType(schema.fields.filterNot(f =>
@@ -2449,7 +2443,7 @@ object TxStagedMessage {
   * stored (the bucket id of a bucketed write, the z block of a z-order
   * rewrite), projected out of each row before the write. */
 case class TxStagedWriterFactory(dir: String, schema: StructType,
-  partCols: Seq[String], conf: TxHadoopConf,
+  partCols: Seq[String], conf: SerializableConfiguration,
   sketchCols: Seq[String], tupleCol: Option[String] = None)
   extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
@@ -2492,7 +2486,7 @@ object TxStagedWriterFactory {
   * `update` call per value), so a dir's merged sketch estimates what
   * the aggregate over its rows estimates. */
 class TxStagedWriter(prefix: String, schema: StructType,
-  partCols: Seq[String], conf: TxHadoopConf,
+  partCols: Seq[String], conf: SerializableConfiguration,
   sketchCols: Seq[String] = Seq.empty, tupleCol: Option[String] = None)
   extends DataWriter[InternalRow] {
   import org.apache.spark.sql.types._

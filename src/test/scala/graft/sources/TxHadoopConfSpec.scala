@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.util.SerializableConfiguration
 
 /** The Hadoop confs graft ships to tasks carry every property of the
-  * conf they were built from, at a fraction of Hadoop's own encoding. */
+  * conf they were built from, and only those, without Hadoop's
+  * per-property source records. */
 class TxHadoopConfSpec extends graft.SparkSpec {
   private val ser = new JavaSerializer(new SparkConf).newInstance()
   private def bytes(o: AnyRef): Int = ser.serialize(o).limit()
@@ -27,32 +28,28 @@ class TxHadoopConfSpec extends graft.SparkSpec {
     c
   }
 
-  test("TxHadoopConf ships a conf's changes and rebuilds all of it") {
+  test("a shipped conf rebuilds exactly its own properties, no sources") {
     val c = sessionConf()
-    val shipped = TxHadoopConf(c)
-    val back = ser.deserialize[TxHadoopConf](ser.serialize(shipped))
-    assert(props(back.value) === props(c))
-    val full = bytes(new SerializableConfiguration(c))
-    info(s"TxHadoopConf ${bytes(shipped)} B, SerializableConfiguration $full B")
-    assert(bytes(shipped) * 10 < full)
-  }
-
-  test("TxParquetFormat's scan conf writes every property, no sources") {
-    val c = sessionConf()
-    val lean = new SerializableConfiguration(TxParquetFormat.lean(c))
-    val back = ser.deserialize[SerializableConfiguration](ser.serialize(lean))
+    val shipped = TxParquetIO.shipped(c)
+    val back = ser.deserialize[SerializableConfiguration](ser.serialize(shipped))
     assert(props(back.value) === props(c))
     // no gzip-framed source record per property
     val full = bytes(new SerializableConfiguration(c))
-    info(s"lean ${bytes(lean)} B, SerializableConfiguration $full B")
-    assert(bytes(lean) < full)
+    info(s"shipped ${bytes(shipped)} B, SerializableConfiguration $full B")
+    assert(bytes(shipped) < full)
+    // the receiving side adds none of its own JVM's defaults
+    val bare = new Configuration(false)
+    bare.set("graft.test.only", "1")
+    val one = ser.deserialize[SerializableConfiguration](
+      ser.serialize(TxParquetIO.shipped(bare)))
+    assert(props(one.value) === Map("graft.test.only" -> "1"))
   }
 
   test("gate inputs and graft-tx snapshots scan through TxParquetFormat") {
     val root = tmpDir() + "/fmt"
     TxTable.append(graft.Tables.orders(spark, sfDir), root)
     for (df <- Seq(graft.Tables.orders(spark, sfDir),
-      spark.read.format("graft-tx").load(root))) {
+      TxTable.read(spark, root))) {
       df.collect()
       val scans = df.queryExecution.executedPlan.collect {
         case s: FileSourceScanExec => s
